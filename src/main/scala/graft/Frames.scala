@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import scala.concurrent.duration._
 
 /** Storage hygiene for iterative operators.
   *
@@ -18,27 +19,6 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Frames {
 
-  /** Actually free the storage behind a frame: unpersists the
-    * [[LogicalRDD]]'s underlying RDD for localCheckpointed frames,
-    * falling back to `Dataset.unpersist` for cached ones.
-    *
-    * Only call on frames that are SUPERSEDED — a local checkpoint
-    * truncates lineage, so once its blocks are dropped the frame
-    * cannot be recomputed. The caller must guarantee the successor
-    * frame is already materialized (an eager checkpoint, or a
-    * completed action over it).
-    *
-    * SHARED-LEAF HAZARD: this frees EVERY persisted [[LogicalRDD]]
-    * leaf anywhere in the plan, not just the root. The caller must
-    * own every persisted leaf of the plan it frees — passing a frame
-    * whose plan shares a localCheckpoint leaf with a still-live
-    * sibling would drop that sibling's blocks too, and (lineage being
-    * truncated) a later action on the sibling fails with a missing-
-    * checkpoint-block error rather than recomputing. Every current
-    * caller passes either a checkpoint-root frame or a plan whose
-    * checkpoints are exclusively its own (the per-iteration frames of
-    * connectedComponents / linkRank / BPE).
-    */
   /** Spread an UNDER-partitioned source across the session's cores
     * before an expensive map phase (tokenize / minhash / simhash /
     * feature-hash): a small parquet file is one row group and
@@ -109,22 +89,31 @@ object Frames {
     * exactly what it computed sequentially). `b` runs on the calling
     * thread (keeping its thread-locals — job description/group);
     * `a` runs on a scratch thread. Failures in either rethrow here.
+    * After a failure of `b`, chain `a` gets `abandonAfter` to finish
+    * before b's failure is rethrown without it.
     */
-  def overlap[A, B](a: => A)(b: => B): (A, B) = {
+  def overlap[A, B](a: => A)(b: => B,
+                             abandonAfter: FiniteDuration = 5.minutes): (A, B) = {
     if (overlapDisabled) { val ra = a; (ra, b) }
     else {
       import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
       val fa = Future(a)(scala.concurrent.ExecutionContext.global)
       // If `b` throws, chain `a` must still be awaited before the
       // failure propagates (r18 verdict): rethrowing immediately would
       // leave a's jobs running orphaned against scratch dirs — and a's
       // own failure would never be observed. `b`'s failure stays the
-      // primary one; a's (if any) is attached as suppressed.
+      // primary one; a's (if any) is attached as suppressed. The wait
+      // is bounded: a wedged `a` must not turn b's failure into a hang.
       val rb = try b catch {
         case eb: Throwable =>
-          try Await.result(fa, Duration.Inf) catch {
-            case ea: Throwable if ea ne eb => eb.addSuppressed(ea)
+          try Await.result(fa, abandonAfter) catch {
+            case _: java.util.concurrent.TimeoutException =>
+              eb.addSuppressed(new IllegalStateException(
+                s"overlap: chain a abandoned, still running $abandonAfter after b failed"))
+            case ea: Throwable if ea ne eb =>
+              eb.addSuppressed(ea)
+              // the wait itself was interrupted: keep the flag for the caller
+              if (ea.isInstanceOf[InterruptedException]) Thread.currentThread().interrupt()
           }
           throw eb
       }
@@ -139,6 +128,27 @@ object Frames {
   private val overlapDisabled: Boolean =
     sys.env.get("SPARK_GRAFT_NOOVERLAP").contains("1")
 
+  /** Actually free the storage behind a frame: unpersists the
+    * [[LogicalRDD]]'s underlying RDD for localCheckpointed frames,
+    * falling back to `Dataset.unpersist` for cached ones.
+    *
+    * Only call on frames that are SUPERSEDED — a local checkpoint
+    * truncates lineage, so once its blocks are dropped the frame
+    * cannot be recomputed. The caller must guarantee the successor
+    * frame is already materialized (an eager checkpoint, or a
+    * completed action over it).
+    *
+    * SHARED-LEAF HAZARD: this frees EVERY persisted [[LogicalRDD]]
+    * leaf anywhere in the plan, not just the root. The caller must
+    * own every persisted leaf of the plan it frees — passing a frame
+    * whose plan shares a localCheckpoint leaf with a still-live
+    * sibling would drop that sibling's blocks too, and (lineage being
+    * truncated) a later action on the sibling fails with a missing-
+    * checkpoint-block error rather than recomputing. Every current
+    * caller passes either a checkpoint-root frame or a plan whose
+    * checkpoints are exclusively its own (the per-iteration frames of
+    * connectedComponents / linkRank / BPE).
+    */
   def free(df: DataFrame): Unit = {
     // Walk the whole analyzed plan, not just its root: a frame that
     // wraps a localCheckpoint in even a trivial projection would

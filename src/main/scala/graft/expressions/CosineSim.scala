@@ -108,5 +108,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => CosineSim(children.head, children(1))))
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     ext.injectOptimizerRule(_ => graft.plans.RowNumberTopKRule)
+    ext.injectOptimizerRule(_ => graft.plans.SortBelowProjectRule)
   }
 }

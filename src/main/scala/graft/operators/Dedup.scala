@@ -90,10 +90,6 @@ object Dedup {
     try {
       val stage = graft.Scratch.dir("graft_d4_pairs")
       pairs.write.mode("overwrite").parquet(stage)
-      // releases the SPARK_GRAFT_CKPT_CANDS checkpoint blocks if the
-      // experiment is on (no-op otherwise): the pair set is staged, so
-      // the candidate blocks are superseded
-      graft.Frames.free(pairs)
       spark.read.parquet(stage)
     } finally staged.foreach(_.unpersist(blocking = false))
   }
@@ -146,25 +142,6 @@ object Dedup {
     (docs, Seq(dict, docs))
   }
 
-  /** EXPERIMENT knob (r19, r18 verdict next-round 1b): eagerly
-    * localCheckpoint the distinct candidate set of the prefix-filter
-    * joins (d4/d22), splitting their one long multi-stage job into
-    * candidate job + verify job — the hypothesis was that shorter
-    * dependent chains amplify machine heat less. MEASURED AND LOST
-    * (r19 paired ABBA+BAAB, 4 runs/arm, min-of-2, same window):
-    * d4 med 5.35 s ckpt vs 4.84 s off; d22 med 6.04 vs 4.74 —
-    * the eager barrier + block-manager traffic costs more than the
-    * chain split saves, consistently. Default stays OFF; the knob and
-    * numbers remain so the 100 TB profile can re-ask the question
-    * (there, the verify stage's re-fetch economics differ). Blocks are
-    * released by the callers' staged-release discipline (Frames.free —
-    * Dataset.unpersist misses LogicalRDD-backed frames).
-    */
-  private def ckptCands(cands: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_CKPT_CANDS").contains("1"))
-      cands.localCheckpoint(eager = true)
-    else cands
-
   private[graft] def jaccardPairsPlan(df: DataFrame, id: Column, text: Column,
                                       threshold: Double): (DataFrame, Seq[DataFrame]) = {
     val (docsBase, staged) = rarityDictDocs(df, id, text)
@@ -180,14 +157,14 @@ object Dedup {
     // (1 + min(...))·(10⁶ + tNum) ≥ tNum·(nA + nB).
     val bestOverlap = lit(1) +
       least(col("a.n") - col("a.pos") - 1, col("b.n") - col("b.pos") - 1)
-    val cands = ckptCands(prefix.as("a")
+    val cands = prefix.as("a")
       .join(prefix.as("b"),
         col("a.tid") === col("b.tid") && col("a.id") < col("b.id") &&
           col("a.n") * 1000000 >= col("b.n") * tNum &&
           col("b.n") * 1000000 >= col("a.n") * tNum &&
           bestOverlap * (1000000L + tNum) >= (col("a.n") + col("b.n")) * tNum)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct())
+      .distinct()
     val pairs = cands
       .join(docs.select(col("id").as("id_a"), col("tids").as("ta"),
         col("n").as("size_a")), "id_a")
@@ -245,14 +222,14 @@ object Dedup {
         posexplode(col("tids")).as(Seq("pos", "tid")))
       val bestOverlap = lit(1) +
         least(col("a.n") - col("a.pos") - 1, col("b.n") - col("b.pos") - 1)
-      val cands = ckptCands(prefix.as("a")
+      val cands = prefix.as("a")
         .join(full.as("b"),
           col("a.tid") === col("b.tid") &&
             (col("b.n") > col("a.n") ||
               (col("b.n") === col("a.n") && col("a.id") < col("b.id"))) &&
             bestOverlap * 1000000L >= col("a.n") * tNum)
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct())
+        .distinct()
       val pairs = cands
         .join(docs.select(col("id").as("id_a"), col("tids").as("ta"),
           col("n").as("size_a")), "id_a")
@@ -270,7 +247,6 @@ object Dedup {
       // release them (the d4 discipline: library calls leave no cache)
       val stage = graft.Scratch.dir("graft_d22_pairs")
       pairs.write.mode("overwrite").parquet(stage)
-      graft.Frames.free(pairs) // CKPT_CANDS blocks, if any
       spark.read.parquet(stage)
     } finally staged.foreach(_.unpersist(blocking = false))
   }
@@ -297,7 +273,6 @@ object Dedup {
     try {
       val stage = graft.Scratch.dir("graft_d22_probe")
       pairs.write.mode("overwrite").parquet(stage)
-      graft.Frames.free(pairs) // CKPT_CANDS blocks, if any
       spark.read.parquet(stage)
     } finally staged.foreach(_.unpersist(blocking = false))
   }
@@ -330,7 +305,6 @@ object Dedup {
           col("_b.containment").as("containment"))
       val stage = graft.Scratch.dir("graft_d22_best")
       best.write.mode("overwrite").parquet(stage)
-      graft.Frames.free(pairs) // CKPT_CANDS blocks, if any
       spark.read.parquet(stage)
     } finally staged.foreach(_.unpersist(blocking = false))
   }
@@ -370,13 +344,13 @@ object Dedup {
         .join(prefTids, Seq("tid"), "left_semi")
       val bestOverlap = lit(1) +
         least(col("a.n") - col("a.pos") - 1, col("b.n") - col("b.pos") - 1)
-      val cands = ckptCands(prefix.as("a")
+      val cands = prefix.as("a")
         .join(full.as("b"),
           col("a.tid") === col("b.tid") &&
             col("b.n") * 1000000L >= col("a.n") * tNum &&
             bestOverlap * 1000000L >= col("a.n") * tNum)
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct())
+        .distinct()
       val pairs = cands
         .join(docs.select(col("id").as("id_a"), col("tids").as("ta"),
           col("n").as("size_a")), "id_a")

@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.CountDownLatch
+import scala.concurrent.duration._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Frames.overlap failure-path contract (r18 verdict #4): if chain `b`
@@ -49,6 +50,36 @@ class FramesSpec extends AnyFunSuite {
       Frames.overlap[Int, Int] { throw new IllegalStateException("a failed") } { 7 }
     }
     assert(ex.getMessage == "a failed")
+  }
+
+  test("overlap: a wedged chain a is abandoned after the bound, b rethrown") {
+    val release = new CountDownLatch(1)
+    try {
+      val t0 = System.nanoTime()
+      val ex = intercept[RuntimeException] {
+        Frames.overlap { release.await(); 1 } (
+          throw new RuntimeException("b failed"), abandonAfter = 200.millis)
+      }
+      assert(ex.getMessage == "b failed")
+      assert(ex.getSuppressed.exists(_.getMessage.contains("chain a abandoned")),
+        ex.getSuppressed.map(_.getMessage).mkString(","))
+      assert((System.nanoTime() - t0) / 1000000 < 30000)
+    } finally release.countDown()
+  }
+
+  test("overlap: an interrupted wait keeps the thread's interrupt flag") {
+    val release = new CountDownLatch(1)
+    try {
+      val ex = intercept[RuntimeException] {
+        Frames.overlap { release.await(); 1 } {
+          Thread.currentThread().interrupt()
+          throw new RuntimeException("b failed")
+        }
+      }
+      assert(ex.getSuppressed.exists(_.isInstanceOf[InterruptedException]),
+        ex.getSuppressed.mkString(","))
+      assert(Thread.interrupted(), "interrupt flag must be re-set")
+    } finally release.countDown()
   }
 
   test("overlap: success path returns both results") {
