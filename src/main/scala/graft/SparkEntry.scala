@@ -2837,8 +2837,8 @@ object SparkEntry {
       // absorbed — the file-level watermark that keeps a daily tick
       // O(new data) against an ever-growing landing history. The query
       // runs three ticks: day 1 lands two drops (tick 1 absorbs both);
-      // day 2 lands one committed drop AND one TORN drop (its
-      // _SUCCESS marker deleted — a crashed writer) which must stay
+      // day 2 lands one committed drop AND one TORN drop (its commit
+      // marker deleted — a crashed writer) which must stay
       // invisible (tick 2 absorbs exactly one — if the gate broke,
       // n_drops and the row counts double and the oracle goes red);
       // tick 3 finds nothing and reports an explicit empty row. The

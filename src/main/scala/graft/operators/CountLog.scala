@@ -24,8 +24,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * the segment count whenever read amplification matters.
   *
   * File discipline is [[SegmentFs]]'s: `base/v=N` + `delta/d=K` dirs
-  * discovered by listing, `_SUCCESS`-gated commitment, per-batch-id
-  * idempotent appends (safe streaming replay), torn-write reclaim,
+  * discovered by listing, commit-gated, per-batch-id idempotent
+  * appends (safe streaming replay), torn-write reclaim,
   * crash-safe compaction.
   */
 object CountLog {

@@ -565,8 +565,9 @@ object Dedup {
                        numHashes: Int = 16, rowsPerBand: Int = 4,
                        buckets: Int = 64, targetRows: Long = 1L << 20,
                        spread: Int = 8): Unit =
-    writeBandSegment(df, id, text, path, shingleSize, numHashes,
-      rowsPerBand, buckets, targetRows, spread, seg = -1L)
+    bandSegments(df.sparkSession, path).commit(-1L)(
+      writeBandData(df, id, text, path, shingleSize, numHashes,
+        rowsPerBand, buckets, targetRows, spread, -1L))
 
   /** O(batch) growth of a saved band index as a commit-gated segment:
     * `srcBatch` ≥ 0 names the segment (a COMMITTED id is a replay —
@@ -580,45 +581,28 @@ object Dedup {
                          path: String, shingleSize: Int = 3,
                          numHashes: Int = 16, rowsPerBand: Int = 4,
                          buckets: Int = 64, targetRows: Long = 1L << 20,
-                         spread: Int = 8, srcBatch: Long = -1L): Long = {
-    val spark = df.sparkSession
-    val committed = lshCommittedSegs(spark, path)
-    // auto ids are monotone past compaction via the hwm water line;
-    // ids at-or-below it are replays of committed-then-folded batches
-    val (k, done) = graft.operators.SegmentFs.resolveAppendId(spark, path,
-      committed, if (srcBatch >= 0) Some(srcBatch) else None, minId = 0L)
-    if (done) k // idempotent replay of a committed (possibly folded) batch
-    else {
-      writeBandSegment(df, id, text, path, shingleSize, numHashes,
-        rowsPerBand, buckets, targetRows, spread, seg = k)
-      graft.operators.SegmentFs.recordHighWater(spark, path, k)
-      k
-    }
-  }
+                         spread: Int = 8, srcBatch: Long = -1L): Long =
+    bandSegments(df.sparkSession, path).append(
+        Option.when(srcBatch >= 0)(srcBatch), minId = 0L)(
+      writeBandData(df, id, text, path, shingleSize, numHashes,
+        rowsPerBand, buckets, targetRows, spread, _))
 
-  /** Land one batch's band rows as `bands/sb=<seg>/bp=N` and commit it
-    * (marker written LAST — readers gate on it). A pre-existing
-    * uncommitted dir is a torn prior attempt: reclaimed by rewrite.
-    */
-  private def writeBandSegment(df: DataFrame, id: Column, text: Column,
-                               path: String, shingleSize: Int,
-                               numHashes: Int, rowsPerBand: Int,
-                               buckets: Int, targetRows: Long,
-                               spread: Int, seg: Long): Unit = {
-    val spark = df.sparkSession
-    val f = graft.operators.SegmentFs.fs(spark, path)
-    val segDir = new org.apache.hadoop.fs.Path(s"$path/bands/sb=$seg")
-    if (f.exists(segDir)) f.delete(segDir, true): Unit
+  /** Land one batch's band rows as `bands/sb=<seg>/bp=N`. */
+  private def writeBandData(df: DataFrame, id: Column, text: Column,
+                            path: String, shingleSize: Int,
+                            numHashes: Int, rowsPerBand: Int,
+                            buckets: Int, targetRows: Long,
+                            spread: Int, seg: Long): Unit =
     graft.sources.Compaction.writeSized(
       bandRows(df, id, text, shingleSize, numHashes, rowsPerBand, buckets)
         .drop("sb"), // sb is the segment DIRECTORY, not a data column
       s"$path/bands/sb=$seg", Seq("bp"), col("id"), targetRows, spread)
-    graft.operators.SegmentFs.writeMarker(spark, s"$path/commits/k=$seg")
-  }
 
-  private def lshCommittedSegs(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Seq[Long] =
-    graft.operators.SegmentFs.listVersions(spark, s"$path/commits", "k")
+  /** The band segment index at `path` (see [[SegmentFs.Segments]]). */
+  private def bandSegments(spark: org.apache.spark.sql.SparkSession,
+                           path: String) =
+    new SegmentFs.Segments(spark, path,
+      k => Seq(s"$path/bands/sb=$k"))
 
   /** Fold every committed band segment ≤ `upTo` into ONE merged
     * segment — the CountLog/MergeLog compaction discipline for the
@@ -633,13 +617,9 @@ object Dedup {
     * `appendLshBandIndex(srcBatch = b)` is never silently no-opped by
     * a compaction artifact.
     *
-    * Crash safety, window by window: before the merged commit marker —
-    * the merged dir is torn and invisible, the folded segments intact;
-    * between the marker and the retirements — rows exist twice, which
-    * probes tolerate (candidate pairs are distinct-ed, the estimate is
-    * a pure signature function) and the next compaction folds away;
-    * mid-retirement — same. Retirement deletes each folded segment's
-    * MARKER first (rows turn invisible atomically), dir second.
+    * Crash safety is [[SegmentFs]]'s protocol; in its window where
+    * folded rows are visible twice, probes are unaffected (candidate
+    * pairs are distinct-ed, the estimate is a pure signature function).
     *
     * `upTo` is the replay watermark: fold ONLY batches the appending
     * stream's checkpoint has passed, because a replay of a folded
@@ -649,35 +629,14 @@ object Dedup {
   def compactLshBandIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String, upTo: Long,
                           targetRows: Long = 1L << 20,
-                          spread: Int = 8): Option[Long] = {
-    val committed = lshCommittedSegs(spark, path)
-    val fold = committed.filter(_ <= upTo)
-    if (fold.size < 2) None
-    else {
-      val gen = math.min(committed.min, -1L) - 1L
+                          spread: Int = 8): Option[Long] =
+    bandSegments(spark, path).compact(upTo, baseSeg = -1L) { (fold, gen) =>
       val rows = spark.read.schema(bandIndexSchema).parquet(s"$path/bands")
         .where(col("sb").isin(fold: _*))
         .select(col("id"), col("sig"), col("bk"), col("bp"))
-      val f = graft.operators.SegmentFs.fs(spark, path)
-      val segDir = new org.apache.hadoop.fs.Path(s"$path/bands/sb=$gen")
-      if (f.exists(segDir)) f.delete(segDir, true): Unit
       graft.sources.Compaction.writeSized(rows, s"$path/bands/sb=$gen",
         Seq("bp"), col("id"), targetRows, spread)
-      graft.operators.SegmentFs.writeMarker(spark, s"$path/commits/k=$gen")
-      // raise the water line past every folded batch id BEFORE retiring
-      // its commit marker — the folded ids must never be reused or
-      // re-appended once their markers are gone
-      fold.filter(_ >= 0).reduceOption(_ max _)
-        .foreach(graft.operators.SegmentFs.recordHighWater(spark, path, _))
-      fold.foreach { k =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$path/commits/k=$k"),
-          true): Unit
-        f.delete(new org.apache.hadoop.fs.Path(s"$path/bands/sb=$k"),
-          true): Unit
-      }
-      Some(gen)
     }
-  }
 
   // `sb` tags each band row with the micro-batch that appended it
   // (−1 for batch builds): [[probeLshBandIndex]] can then exclude a
@@ -736,7 +695,7 @@ object Dedup {
     // COMMITTED segments only (minus the replaying batch's own): a
     // torn append never had its marker written, so its partial rows
     // are invisible here — both filters are partition-directory prunes
-    val visible = lshCommittedSegs(spark, path)
+    val visible = bandSegments(spark, path).committed
       .filterNot(s => excludeBatch.contains(s))
     val idx = spark.read.schema(bandIndexSchema).parquet(s"$path/bands")
       .where(col("bp").isin(bps: _*))

@@ -28,180 +28,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *
   * Directory versions are discovered by listing — no driver-side
   * manifest state to corrupt; `d=K` names come from the writer's
-  * batch id (streaming) or max+1 (batch), both monotone.
+  * batch id (streaming) or max+1 (batch), both monotone. Commitment
+  * and torn-write reclaim are [[SegmentFs]]'s.
   */
-/** Shared segment-directory discipline for the merge-on-read logs
-  * ([[MergeLog]] last-wins-by-version, [[CountLog]] additive): Hadoop-FS
-  * listing-discovered `base/v=N` + `delta/d=K` dirs, `_SUCCESS`-gated
-  * commitment, idempotent per-batch appends, torn-write reclaim.
-  */
-private[operators] object SegmentFs {
-
-  // Hadoop FS, not java.io.File: the log must live on whatever
-  // filesystem the cluster writes (HDFS/S3A/local alike).
-  def fs(spark: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sessionState.newHadoopConf())
-
-  /** COMMITTED versions only: a segment counts once its `_SUCCESS`
-    * marker exists (written last by Spark's file committer). A dir
-    * without one is a torn write from a crashed job — readers must not
-    * merge its partial part-files, compact must not retire it as
-    * absorbed, and a replaying writer must rewrite it rather than
-    * skip it as already-done.
-    */
-  def listVersions(spark: SparkSession, dir: String,
-                   prefix: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix + "=")
-        && f.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.drop(prefix.length + 1).toLong)
-      .sorted
-  }
-
-  def baseDir(dir: String, v: Long) = s"$dir/base/v=$v"
-  def deltaDir(dir: String, k: Long) = s"$dir/delta/d=$k"
-
-  /** High-water mark of batch ids ever committed at an index root — a
-    * `hwm/k=<id>` marker that compaction NEVER retires. Compactions
-    * fold positive commit markers into negative merged generations;
-    * without the water line, a post-compaction auto id would restart
-    * at 1 and reuse folded batch ids, and an out-of-contract replay of
-    * a folded id would double-append instead of no-op. Markers below
-    * the max prune opportunistically; the max alone carries the line.
-    *
-    * Write ordering: appenders record the line AFTER their commit
-    * marker lands (a torn append must stay retryable — recording
-    * first would make the retry of that very id a data-losing no-op);
-    * compactions record the max folded id BEFORE retiring its commit
-    * marker, which closes the crash window between an append's commit
-    * and its own hwm record.
-    */
-  def highWater(spark: SparkSession, dir: String): Option[Long] =
-    listVersions(spark, s"$dir/hwm", "k").lastOption
-
-  /** Advance the water line to at least `k` (no-op if already ≥ k). */
-  def recordHighWater(spark: SparkSession, dir: String, k: Long): Unit = {
-    val existing = listVersions(spark, s"$dir/hwm", "k")
-    if (!existing.lastOption.exists(_ >= k)) {
-      writeMarker(spark, s"$dir/hwm/k=$k")
-      val f = fs(spark, dir)
-      existing.filter(_ < k).foreach { o =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$dir/hwm/k=$o"),
-          true): Unit
-      }
-    }
-  }
-
-  /** Write a `_SUCCESS`-gated EMPTY marker directory — for the commit/
-    * hwm markers whose only information is their NAME ([[listVersions]]
-    * reads directory names + marker presence, never file content).
-    * Each marker was previously a one-row `spark.range(1)` parquet
-    * write: a whole Spark job plus a file-committer round trip of pure
-    * driver latency PER MARKER, multiplied across every lifecycle tick
-    * (r19 optimization, guide §1.2 — a job that computes nothing a
-    * reader ever loads). Crash contract unchanged from the parquet
-    * committer's: the directory may exist torn (readers skip it,
-    * writers reclaim it); the `_SUCCESS` file's atomic create is the
-    * commit point, written last.
-    */
-  def writeMarker(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (f.exists(p)) f.delete(p, true): Unit
-    f.mkdirs(p): Unit
-    f.create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
-  }
-
-  /** The append-side id resolution shared by every commit-gated index
-    * ([[graft.operators.Rag.appendBm25Index]], the IVF/IVF-PQ appends,
-    * the LSH band index): explicit `id` or the successor of the water
-    * line / max committed id, floored at `minId`. Returns (k, done) —
-    * `done` means the id is already committed (visible now) or below
-    * the water line (committed once and since folded; under the
-    * monotone-batch-id contract a replay, never a first append), so
-    * the caller must no-op.
-    */
-  def resolveAppendId(spark: SparkSession, dir: String,
-                      committed: Seq[Long], id: Option[Long],
-                      minId: Long): (Long, Boolean) = {
-    val hw = highWater(spark, dir)
-    val k = id.getOrElse(math.max(
-      math.max(hw.getOrElse(minId - 1L),
-        committed.lastOption.getOrElse(minId - 1L)) + 1L, minId))
-    (k, committed.contains(k) || hw.exists(k <= _))
-  }
-
-  /** Append `delta` as segment `d=K` (K = `id` or max+1), idempotent on
-    * COMMITTED batch ids, rewriting torn dirs. Returns K.
-    */
-  def appendSegment(delta: DataFrame, dir: String,
-                    id: Option[Long]): Long = {
-    val spark = delta.sparkSession
-    val committed = listVersions(spark, s"$dir/delta", "d")
-    val k = id.getOrElse(committed.lastOption.map(_ + 1).getOrElse(0L))
-    if (committed.contains(k)) k
-    else {
-      val p = new org.apache.hadoop.fs.Path(deltaDir(dir, k))
-      val f = fs(spark, dir)
-      if (f.exists(p)) f.delete(p, true): Unit // torn write — rewrite it
-      delta.write.mode("errorifexists").parquet(deltaDir(dir, k))
-      k
-    }
-  }
-
-  /** Latest committed base version, or throw if the log is not
-    * initialized. */
-  def latestBase(spark: SparkSession, dir: String): Long =
-    listVersions(spark, s"$dir/base", "v").lastOption.getOrElse(
-      throw new IllegalStateException(s"no base under $dir — init() first"))
-
-  /** Fold `resolved` (the current read) into base v=N+1 and retire the
-    * absorbed delta segments. Crash-safe write order: the new base
-    * lands complete before any delta is removed, and readers take the
-    * highest COMMITTED base, so a torn compact leaves the log readable
-    * and the next compact deletes the torn dir before writing.
-    * Returns the new base version.
-    */
-  def compactInto(spark: SparkSession, dir: String,
-                  resolved: DataFrame): Long = {
-    val bv = latestBase(spark, dir)
-    val absorbed = listVersions(spark, s"$dir/delta", "d")
-    val next = bv + 1
-    val nextPath = new org.apache.hadoop.fs.Path(baseDir(dir, next))
-    val f = fs(spark, dir)
-    if (f.exists(nextPath)) f.delete(nextPath, true): Unit // torn prior compact
-    resolved.write.mode("errorifexists").parquet(baseDir(dir, next))
-    absorbed.foreach { k =>
-      val p = new org.apache.hadoop.fs.Path(deltaDir(dir, k))
-      f.delete(p, true): Unit
-    }
-    next
-  }
-
-  /** Delete every base older than the latest COMMITTED one — the
-    * storage-reclaim step compaction deliberately leaves behind
-    * (the old base must survive until the new one is committed, and a
-    * reader mid-plan may still hold it; vacuum runs later, on the
-    * operator's cadence). Reads are unaffected: [[latestBase]] already
-    * serves only the newest committed base, and as-of reads reach back
-    * only to it. Returns the number of bases removed.
-    */
-  def vacuumBases(spark: SparkSession, dir: String): Int = {
-    val keep = listVersions(spark, s"$dir/base", "v").lastOption
-      .getOrElse(return 0)
-    val f = fs(spark, dir)
-    val all = f.listStatus(new org.apache.hadoop.fs.Path(s"$dir/base")).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .filter(_.getPath.getName.drop(2).toLong != keep)
-    all.foreach(s => f.delete(s.getPath, true): Unit)
-    all.size
-  }
-}
-
 object MergeLog {
   import SegmentFs.{baseDir, deltaDir, listVersions}
 
@@ -212,7 +41,7 @@ object MergeLog {
   /** Append one change batch (data + version + deleted columns) as the
     * next delta segment. O(batch) — base is never read or written. An
     * explicit `id` (streaming batch id) makes the write idempotent:
-    * re-delivery of a COMMITTED batch (its `_SUCCESS` marker exists) is
+    * re-delivery of a COMMITTED batch (see [[SegmentFs]]) is
     * a no-op instead of a dup, while a torn dir from a crashed attempt
     * is deleted and rewritten — existence of the directory alone is NOT
     * commitment, or a replay after a mid-write crash would silently
@@ -271,8 +100,7 @@ object MergeLog {
   /** Fold the current delta log into base v=N+1 and retire the absorbed
     * segments. Write order is crash-safe: the new base lands complete
     * before any delta is removed, and a reader always takes the highest
-    * COMMITTED base — [[listVersions]] skips a torn `v=N+1` missing its
-    * `_SUCCESS` marker (a torn compact at worst leaves deltas whose
+    * COMMITTED base — [[listVersions]] skips a torn `v=N+1` (a torn compact at worst leaves deltas whose
     * final values the new base already holds, so re-merging them reads
     * identically; the next compact deletes the torn dir before writing).
     * Returns the new base version.

@@ -170,7 +170,7 @@ object Packing {
   //                   a tot without committed data is a torn attempt,
   //                   invisible to readers and rewritten by the retry
   //   dir/delta/d=K   packed rows (seg, doc_id, n_tok, start_tok);
-  //                   the parquet _SUCCESS marker is the commit gate
+  //                   its committed dir (SegmentFs) is the commit gate
   //
   // Replay of a committed batch id is a complete no-op; the append
   // stability law (PackingSpec) pins that one-shot packing of the

@@ -167,11 +167,11 @@ object Rag {
   /** Persist a BM25 inverted index — the lexical seat of the engine's
     * build-once/probe-many lifecycle family (d9 bloom, v11 IVF, d15 LSH
     * bands). Layout under `path`:
-    *   `meta/`                 — the bucket count, one `_SUCCESS`-gated
-    *     text file: the index is SELF-DESCRIBING, probes read the
-    *     bucket count here (a probe guessing a different count would
-    *     silently prune to the wrong partitions — the saveIvfIndex
-    *     centroid precedent);
+    *   `meta/`                 — the bucket count, one committed text
+    *     file ([[SegmentFs.writeSmallFile]]): the index is
+    *     SELF-DESCRIBING, probes read the bucket count here (a probe
+    *     guessing a different count would silently prune to the wrong
+    *     partitions — the saveIvfIndex centroid precedent);
     *   `postings/seg=K/tp=N/`  — (doc_id, term, tf, dl) via the sized
     *     sink (hot term buckets still write in parallel, no small-file
     *     spray; dl is denormalized per posting, the Lucene "norms"
@@ -179,12 +179,9 @@ object Rag {
     *   `df/seg=K/tp=N/`        — (term, df), bucketed the same way so a
     *     probe prunes BOTH reads to the touched buckets;
     *   `stats/seg=K/`          — one (n_docs, sum_dl) row per segment;
-    *   `commits/k=K/`          — the segment's commit marker, written
-    *     LAST: a segment exists for readers only once its marker is
-    *     `_SUCCESS`-committed, so a crash between the three data writes
-    *     leaves an invisible torn segment (reclaimed on the next append
-    *     with the same batch id), never an inconsistent index — the
-    *     SegmentFs discipline the CountLog/MergeLog siblings use.
+    *   `commits/k=K/`, `hwm/`  — commit markers and the water line of
+    *     [[SegmentFs.Segments]]: a crash between the three data writes
+    *     leaves an invisible torn segment, never an inconsistent index.
     * Probe IO is therefore ∝ touched-buckets/buckets of the index and
     * the corpus text is never re-scanned.
     *
@@ -203,63 +200,41 @@ object Rag {
                     buckets: Int = 64, targetRows: Long = 1L << 20,
                     spread: Int = 8): Unit = {
     val spark = docs.sparkSession
-    // meta is ONE driver-known integer: write/read it as a tiny
-    // `_SUCCESS`-gated text file via the FS API instead of a one-row
-    // parquet (whose write was a Spark job and whose read was a head()
-    // job on EVERY append/probe/compact — pure driver round-trip
-    // latency, r19 guide §1.2). errorifexists contract preserved.
-    val f = SegmentFs.fs(spark, path)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    if (f.exists(dir))
-      throw new org.apache.hadoop.fs.FileAlreadyExistsException(dir.toString)
-    val out = f.create(new org.apache.hadoop.fs.Path(dir, "buckets"), false)
-    out.write(buckets.toString.getBytes("UTF-8")); out.close()
-    f.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
-    writeBm25Segment(docs, id, text, path, buckets, targetRows, spread,
-      seg = 0L)
+    // meta is ONE integer: a small committed text file,
+    // written and read through the FS API with no Spark job
+    if (!SegmentFs.writeSmallFile(spark, s"$path/meta", "buckets",
+        buckets.toString))
+      throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"$path/meta")
+    segments(spark, path).commit(0L)(
+      writeBm25Data(docs, id, text, path, buckets, targetRows, spread, 0L))
   }
 
   /** O(batch) growth of a saved BM25 index: the batch's postings/df/
-    * stats rows land as segment `seg=K` (K = `batchId` or max+1) and
-    * become visible atomically via the commit marker; the probe's
-    * segment fold (sum df per term, sum the stats pair) makes the
-    * result identical to a from-scratch rebuild over the union.
-    *
-    * Replay contract: an append whose batch id is already COMMITTED —
-    * or at-or-below the persisted hwm water line, i.e. committed once
-    * and since folded by a compaction — is a no-op (returns K
-    * untouched), and a torn prior attempt at the same id is deleted
-    * and rewritten — so at-least-once ingest pipelines can retry
-    * blindly, unconditionally. Batch ids must be MONOTONE per index
-    * (the foreachBatch contract; an id below the line can only be a
-    * replay, never a first append). Batches must carry doc ids DISJOINT
-    * from other BATCHES (a doc resent under a different batch id
-    * double-counts its tf/df/Σdl — spec-pinned); the bucket count
-    * comes from the index's own meta, never the caller.
+    * stats rows land as segment `seg=K` (K = `batchId` or the next id);
+    * the probe's segment fold (sum df per term, sum the stats pair)
+    * makes the result identical to a from-scratch rebuild over the
+    * union. Replays follow [[SegmentFs.Segments.append]]: a committed
+    * or folded batch id is a no-op and a torn attempt is rewritten, so
+    * at-least-once pipelines can retry blindly. Batch ids must be
+    * MONOTONE per index (the foreachBatch contract). Batches must carry
+    * doc ids DISJOINT from other BATCHES (a doc resent under a different
+    * batch id double-counts its tf/df/Σdl — spec-pinned); the bucket
+    * count comes from the index's own meta, never the caller.
     */
   def appendBm25Index(docs: DataFrame, id: Column, text: Column,
                       path: String, targetRows: Long = 1L << 20,
                       spread: Int = 8, batchId: Option[Long] = None): Long = {
     val spark = docs.sparkSession
     val buckets = readMetaBuckets(spark, path)
-    val committed = committedSegs(spark, path)
-    // auto ids are monotone past compaction via the hwm water line;
-    // ids at-or-below it are replays of committed-then-folded batches
-    val (k, done) = SegmentFs.resolveAppendId(spark, path, committed,
-      batchId, minId = 1L)
-    if (done) k // idempotent replay of a committed (possibly folded) batch
-    else {
-      writeBm25Segment(docs, id, text, path, buckets, targetRows, spread,
-        seg = k)
-      SegmentFs.recordHighWater(spark, path, k)
-      k
-    }
+    segments(spark, path).append(batchId, minId = 1L)(
+      writeBm25Data(docs, id, text, path, buckets, targetRows, spread, _))
   }
 
-  /** Committed segment ids — the only segments a reader may see. */
-  private def committedSegs(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Seq[Long] =
-    SegmentFs.listVersions(spark, s"$path/commits", "k")
+  /** The BM25 segment index at `path`: segment K spans three dirs. */
+  private def segments(spark: org.apache.spark.sql.SparkSession,
+                       path: String) =
+    new SegmentFs.Segments(spark, path,
+      k => Seq("postings", "df", "stats").map(d => s"$path/$d/seg=$k"))
 
   /** Fold every committed BM25 segment ≤ `upTo` into ONE merged
     * segment — the IVF/band-index compaction for the lexical index.
@@ -270,29 +245,17 @@ object Rag {
     * would double-count those), and stats rows dedup by their `src`
     * provenance tag and carry through unchanged (n_docs/Σdl cover
     * zero-token docs postings can't see). Merged generations take
-    * NEGATIVE ids (−1, −2, …; the base build is 0, appends ≥ 1);
-    * marker-first retirement as everywhere. A crash mid-retirement
-    * leaves a window where a reader folds a doc's rows twice — rerun
-    * the compaction to heal (each of the three folds is
-    * provenance-exact, so the rerun converges); fold only batches the
-    * appending stream's checkpoint has passed.
+    * NEGATIVE ids (−1, −2, …; the base build is 0, appends ≥ 1). In the
+    * protocol's window where folded rows are visible twice, rerunning
+    * the compaction heals (each of the three folds is provenance-exact);
+    * fold only batches the appending stream's checkpoint has passed.
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
                        path: String, upTo: Long,
                        targetRows: Long = 1L << 20,
-                       spread: Int = 8): Option[Long] = {
-    val committed = committedSegs(spark, path)
-    val fold = committed.filter(_ <= upTo)
-    if (fold.size < 2) None
-    else {
+                       spread: Int = 8): Option[Long] =
+    segments(spark, path).compact(upTo, baseSeg = 0L) { (fold, gen) =>
       val buckets = readMetaBuckets(spark, path)
-      val gen = math.min(committed.min, 0L) - 1L
-      val f = SegmentFs.fs(spark, path)
-      Seq(s"$path/postings/seg=$gen", s"$path/df/seg=$gen",
-          s"$path/stats/seg=$gen").foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        if (f.exists(p)) f.delete(p, true): Unit
-      }
       val postings = spark.read.schema(postingsSchema)
         .option("basePath", s"$path/postings")
         .parquet(fold.map(k => s"$path/postings/seg=$k"): _*)
@@ -320,43 +283,15 @@ object Rag {
           col("sum_dl"))
         .coalesce(1).write.mode("errorifexists")
         .parquet(s"$path/stats/seg=$gen")
-      SegmentFs.writeMarker(spark, s"$path/commits/k=$gen")
-      // raise the water line past every folded batch id BEFORE retiring
-      // its commit marker — the folded ids must never be reused or
-      // re-appended once their markers are gone
-      fold.filter(_ >= 0).reduceOption(_ max _)
-        .foreach(SegmentFs.recordHighWater(spark, path, _))
-      fold.foreach { k =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$path/commits/k=$k"),
-          true): Unit
-        Seq("postings", "df", "stats").foreach { d =>
-          f.delete(new org.apache.hadoop.fs.Path(s"$path/$d/seg=$k"),
-            true): Unit
-        }
-      }
-      Some(gen)
     }
-  }
 
   private def readMetaBuckets(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Int = {
-    val f = SegmentFs.fs(spark, path)
-    val in = f.open(new org.apache.hadoop.fs.Path(s"$path/meta/buckets"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-    finally in.close()
-  }
+                              path: String): Int =
+    SegmentFs.readSmallFile(spark, s"$path/meta", "buckets").trim.toInt
 
-  private def writeBm25Segment(docs: DataFrame, id: Column, text: Column,
-                               path: String, buckets: Int, targetRows: Long,
-                               spread: Int, seg: Long): Unit = {
-    val spark = docs.sparkSession
-    // reclaim torn partials from a crashed prior attempt at this id
-    val f = SegmentFs.fs(spark, path)
-    Seq(s"$path/postings/seg=$seg", s"$path/df/seg=$seg",
-        s"$path/stats/seg=$seg").foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      if (f.exists(p)) f.delete(p, true): Unit
-    }
+  private def writeBm25Data(docs: DataFrame, id: Column, text: Column,
+                            path: String, buckets: Int, targetRows: Long,
+                            spread: Int, seg: Long): Unit = {
     val base = docs.select(id.cast("long").as("doc_id"),
         TA.tokens(text).as("toks"))
       .select(col("doc_id"), size(col("toks")).as("dl"), col("toks"))
@@ -382,9 +317,6 @@ object Rag {
       .select(lit(seg).as("src"), col("n_docs"), col("sum_dl"))
       .coalesce(1).write.mode("errorifexists")
       .parquet(s"$path/stats/seg=$seg")
-    // the commit point — everything above is invisible until this lands
-    // ("overwrite": a torn marker dir without _SUCCESS must not block)
-    SegmentFs.writeMarker(spark, s"$path/commits/k=$seg")
   }
 
   /** Probe a saved BM25 index: the query vocabulary's term buckets
@@ -401,7 +333,7 @@ object Rag {
                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     import spark.implicits._
     val buckets = readMetaBuckets(spark, path)
-    val segs = committedSegs(spark, path)
+    val segs = segments(spark, path).committed
     require(segs.nonEmpty, s"no committed BM25 segments under $path")
     val vocab = queries.flatMap(_._2).distinct
     // Reconstruct the touched buckets engine-side (tiny local job — the

@@ -626,24 +626,24 @@ object Similarity {
       .coalesce(1).write.mode("errorifexists").parquet(s"$path/centroids")
     // the build segment is -1: appended batches (streaming batch ids
     // start at 0) can never collide with it
-    writeIvfSegment(spark, docs, docId, docVec, cents, path, targetRows,
-      spread, seg = -1L)
+    listSegments(spark, path).commit(-1L)(writeIvfData(docs, docId, docVec,
+      cents, path, targetRows, spread, -1L))
   }
 
-  /** Assign + land one batch as `lists/seg=<seg>/cid=N` and commit it.
+  /** The IVF / IVF-PQ segment index at `path`: segment K's list rows
+    * live in `lists/seg=K` (see [[SegmentFs.Segments]]). */
+  private def listSegments(spark: org.apache.spark.sql.SparkSession,
+                           path: String) =
+    new SegmentFs.Segments(spark, path, k => Seq(s"$path/lists/seg=$k"))
+
+  /** Assign + land one batch as `lists/seg=<seg>/cid=N`.
     * dv stores as array<float> (CosineSim's native input; embeddings
     * are float32 anyway) — assignment math still runs in double
     * (VF.cosine upcasts elementwise), matching the SQL oracle.
     */
-  private def writeIvfSegment(spark: org.apache.spark.sql.SparkSession,
-                              docs: DataFrame, docId: Column,
-                              docVec: Column,
-                              cents: Seq[(Long, Seq[Double])],
-                              path: String, targetRows: Long, spread: Int,
-                              seg: Long): Unit = {
-    val f = SegmentFs.fs(spark, path)
-    val segDir = new org.apache.hadoop.fs.Path(s"$path/lists/seg=$seg")
-    if (f.exists(segDir)) f.delete(segDir, true): Unit
+  private def writeIvfData(docs: DataFrame, docId: Column, docVec: Column,
+                           cents: Seq[(Long, Seq[Double])], path: String,
+                           targetRows: Long, spread: Int, seg: Long): Unit = {
     val assigned = docs
       .select(docId.cast("long").as("doc_id"),
         docVec.cast("array<float>").as("dv"))
@@ -651,7 +651,6 @@ object Similarity {
         (-centroidArgmax(col("dv"), cents).getField("ncid")).cast("long"))
     graft.sources.Compaction.writeSized(assigned, s"$path/lists/seg=$seg",
       Seq("cid"), col("doc_id"), targetRows, spread)
-    SegmentFs.writeMarker(spark, s"$path/commits/k=$seg")
   }
 
   /** The committed rows of a persisted IVF index exactly as a reader
@@ -663,19 +662,31 @@ object Similarity {
   def ivfIndexedRows(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame = ivfLists(spark, path)
 
-  /** The committed IVF list rows (doc_id, dv, cid) — one read of the
-    * seg/cid tree pruned to committed segments; torn or in-flight
-    * appends never load.
-    */
-  private def ivfLists(spark: org.apache.spark.sql.SparkSession,
-                       path: String): DataFrame = {
-    val segs = SegmentFs.listVersions(spark, s"$path/commits", "k")
-    require(segs.nonEmpty, s"no committed IVF segments under $path")
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id LONG, dv ARRAY<FLOAT>, cid LONG, seg LONG")
-    spark.read.schema(schema).parquet(s"$path/lists")
-      .filter(col("seg").isin(segs: _*)).drop("seg")
+  // list-row layouts of the IVF (raw vectors) and IVF-PQ (codes + norms)
+  // indexes; `seg` is the segment directory
+  private val ivfListDDL = "doc_id LONG, dv ARRAY<FLOAT>, cid LONG, seg LONG"
+  private val ivfPqListDDL =
+    "doc_id LONG, code ARRAY<LONG>, rnorm DOUBLE, cid LONG, seg LONG"
+
+  /** List rows of segments `segs` — one read of the seg/cid tree pruned
+    * to those segments, so torn or in-flight appends never load. */
+  private def listRows(spark: org.apache.spark.sql.SparkSession,
+                       path: String, ddl: String,
+                       segs: Seq[Long]): DataFrame =
+    spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      .parquet(s"$path/lists").where(col("seg").isin(segs: _*)).drop("seg")
+
+  /** The committed list rows of an IVF / IVF-PQ index. */
+  private def committedLists(spark: org.apache.spark.sql.SparkSession,
+                             path: String, ddl: String): DataFrame = {
+    val segs = listSegments(spark, path).committed
+    require(segs.nonEmpty, s"no committed list segments under $path")
+    listRows(spark, path, ddl, segs)
   }
+
+  private def ivfLists(spark: org.apache.spark.sql.SparkSession,
+                       path: String): DataFrame =
+    committedLists(spark, path, ivfListDDL)
 
   /** Append a new batch to a saved IVF index WITHOUT touching existing
     * list segments: assign against the saved (frozen) centroids, then
@@ -692,21 +703,10 @@ object Similarity {
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                      docs: DataFrame, docId: Column, docVec: Column,
                      targetRows: Long = 1L << 20, spread: Int = 8,
-                     batchId: Option[Long] = None): Long = {
-    val committed = SegmentFs.listVersions(spark, s"$path/commits", "k")
-    // auto ids are monotone past compaction via the hwm water line;
-    // ids at-or-below it are replays of committed-then-folded batches
-    val (k, done) = SegmentFs.resolveAppendId(spark, path, committed,
-      batchId, minId = 1L)
-    if (done) k // idempotent replay of a committed (possibly folded) batch
-    else {
-      val cents = loadIvfCentroids(spark, path)
-      writeIvfSegment(spark, docs, docId, docVec, cents, path, targetRows,
-        spread, seg = k)
-      SegmentFs.recordHighWater(spark, path, k)
-      k
-    }
-  }
+                     batchId: Option[Long] = None): Long =
+    listSegments(spark, path).append(batchId, minId = 1L)(
+      writeIvfData(docs, docId, docVec, loadIvfCentroids(spark, path), path,
+        targetRows, spread, _))
 
   /** Fold every committed list segment ≤ `upTo` of an IVF index into
     * ONE merged segment — the band-index compaction
@@ -715,64 +715,32 @@ object Similarity {
     * micro-batch while the data stays corpus-bounded. Merged
     * generations take NEGATIVE ids below the base build (−2, −3, …),
     * never colliding with streaming batch ids; the fold de-duplicates
-    * by doc_id so a crash-window rerun self-heals; retirement deletes
-    * markers first (atomic invisibility), dirs second. `upTo` is the
-    * stream's replay watermark; since r12 the hwm water line
-    * ([[SegmentFs.recordHighWater]]) makes even an out-of-contract
-    * replay of a folded batch id a no-op, and keeps auto ids monotone
-    * after a full compaction.
+    * by doc_id so a crash-window rerun self-heals (commit, water line
+    * and retirement order are [[SegmentFs]]'s). `upTo` is the stream's
+    * replay watermark.
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String, upTo: Long,
                       targetRows: Long = 1L << 20,
                       spread: Int = 8): Option[Long] =
-    compactListSegments(spark, path, upTo,
-      "doc_id LONG, dv ARRAY<FLOAT>, cid LONG, seg LONG",
-      targetRows, spread)
+    compactListSegments(spark, path, upTo, ivfListDDL, targetRows, spread)
 
   /** [[compactIvfIndex]] for the IVF-PQ layout (codes + norms). */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String, upTo: Long,
                         targetRows: Long = 1L << 20,
                         spread: Int = 8): Option[Long] =
-    compactListSegments(spark, path, upTo,
-      "doc_id LONG, code ARRAY<LONG>, rnorm DOUBLE, cid LONG, seg LONG",
-      targetRows, spread)
+    compactListSegments(spark, path, upTo, ivfPqListDDL, targetRows, spread)
 
   private def compactListSegments(spark: org.apache.spark.sql.SparkSession,
                                   path: String, upTo: Long,
                                   schemaDDL: String, targetRows: Long,
-                                  spread: Int): Option[Long] = {
-    val committed = SegmentFs.listVersions(spark, s"$path/commits", "k")
-    val fold = committed.filter(_ <= upTo)
-    if (fold.size < 2) None
-    else {
-      val gen = math.min(committed.min, -1L) - 1L
-      val rows = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(schemaDDL))
-        .parquet(s"$path/lists")
-        .where(col("seg").isin(fold: _*)).drop("seg")
-        .dropDuplicates("doc_id")
-      val f = SegmentFs.fs(spark, path)
-      val segDir = new org.apache.hadoop.fs.Path(s"$path/lists/seg=$gen")
-      if (f.exists(segDir)) f.delete(segDir, true): Unit
-      graft.sources.Compaction.writeSized(rows, s"$path/lists/seg=$gen",
-        Seq("cid"), col("doc_id"), targetRows, spread)
-      SegmentFs.writeMarker(spark, s"$path/commits/k=$gen")
-      // raise the water line past every folded batch id BEFORE retiring
-      // its commit marker — the folded ids must never be reused or
-      // re-appended once their markers are gone
-      fold.filter(_ >= 0).reduceOption(_ max _)
-        .foreach(SegmentFs.recordHighWater(spark, path, _))
-      fold.foreach { k =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$path/commits/k=$k"),
-          true): Unit
-        f.delete(new org.apache.hadoop.fs.Path(s"$path/lists/seg=$k"),
-          true): Unit
-      }
-      Some(gen)
+                                  spread: Int): Option[Long] =
+    listSegments(spark, path).compact(upTo, baseSeg = -1L) { (fold, gen) =>
+      graft.sources.Compaction.writeSized(
+        listRows(spark, path, schemaDDL, fold).dropDuplicates("doc_id"),
+        s"$path/lists/seg=$gen", Seq("cid"), col("doc_id"), targetRows, spread)
     }
-  }
 
   /** Recall@k of an approximate top-k result against the exact one —
     * the number that drives the IVF RE-CENTER decision:
@@ -874,8 +842,7 @@ object Similarity {
       queries, queryId, queryVec, k)
     meanRecallOf(approx, exact, k) match {
       case Some(mean) if mean < recallFloor =>
-        if (SegmentFs.listVersions(spark, s"$outPath/commits", "k")
-            .nonEmpty) {
+        if (listSegments(spark, outPath).committed.nonEmpty) {
           // a prior triggered tick COMPLETED this rebuild (some segment
           // committed — the base build lands as -1, but a later
           // compaction can retire it into a negative merged generation,
@@ -886,10 +853,7 @@ object Similarity {
           IvfMaintenance(mean, recentered = true, outPath,
             Some(loadIvfCentroids(spark, outPath)))
         } else {
-          // reclaim a torn (uncommitted) prior attempt, then rebuild
-          val f = SegmentFs.fs(spark, outPath)
-          val op = new org.apache.hadoop.fs.Path(outPath)
-          if (f.exists(op)) f.delete(op, true): Unit
+          SegmentFs.reclaim(spark, outPath) // a torn prior attempt
           val cents = recenterIvfIndex(spark, path, outPath, kCentroids,
             iters, sampleRate, targetRows, spread)
           IvfMaintenance(mean, recentered = true, outPath, Some(cents))
@@ -1006,27 +970,18 @@ object Similarity {
       .coalesce(1).write.mode("errorifexists").parquet(s"$path/books")
     // build segment -1 (the saveIvfIndex convention): streaming batch
     // ids start at 0 and must never collide with the base build
-    writeIvfPqSegment(docs, docId, docVec, cents, books, subDim, path,
-      targetRows, spread, seg = -1L)
+    listSegments(spark, path).commit(-1L)(writeIvfPqData(docs, docId,
+      docVec, cents, books, subDim, path, targetRows, spread, -1L))
   }
 
-  /** Encode + route one batch into `lists/seg=<seg>/cid=N` and commit
-    * it (the BM25-index discipline): the segment is invisible to
-    * readers until its commit marker lands, so a torn write can never
-    * serve, and reclaiming a crashed prior attempt at the same seg id
-    * makes the write replayable.
-    */
-  private def writeIvfPqSegment(docs: DataFrame, docId: Column,
-                                docVec: Column,
-                                cents: Seq[(Long, Seq[Double])],
-                                books: Seq[Seq[(Long, Seq[Double])]],
-                                subDim: Int, path: String,
-                                targetRows: Long, spread: Int,
-                                seg: Long): Unit = {
-    val spark = docs.sparkSession
-    val f = SegmentFs.fs(spark, path)
-    val segDir = new org.apache.hadoop.fs.Path(s"$path/lists/seg=$seg")
-    if (f.exists(segDir)) f.delete(segDir, true): Unit
+  /** Encode + route one batch into `lists/seg=<seg>/cid=N`. */
+  private def writeIvfPqData(docs: DataFrame, docId: Column,
+                             docVec: Column,
+                             cents: Seq[(Long, Seq[Double])],
+                             books: Seq[Seq[(Long, Seq[Double])]],
+                             subDim: Int, path: String,
+                             targetRows: Long, spread: Int,
+                             seg: Long): Unit = {
     val enc = pqEncode(docs,
         docId.cast("long"), docVec.cast("array<float>"), books, subDim)
       .withColumn("cid",
@@ -1035,27 +990,6 @@ object Similarity {
         col("__rnorm").as("rnorm"), col("cid"))
     graft.sources.Compaction.writeSized(enc, s"$path/lists/seg=$seg",
       Seq("cid"), col("doc_id"), targetRows, spread)
-    // the commit point — everything above is invisible until this lands
-    SegmentFs.writeMarker(spark, s"$path/commits/k=$seg")
-  }
-
-  /** Committed list segments — the only segments a reader may see. */
-  private def ivfPqCommittedSegs(
-      spark: org.apache.spark.sql.SparkSession, path: String): Seq[Long] =
-    SegmentFs.listVersions(spark, s"$path/commits", "k")
-
-  /** The committed list rows (doc_id, code, rnorm, cid): one read of
-    * the seg/cid partition tree, pruned to committed segments — torn
-    * or in-flight segments never load.
-    */
-  private def ivfPqLists(spark: org.apache.spark.sql.SparkSession,
-                         path: String): DataFrame = {
-    val segs = ivfPqCommittedSegs(spark, path)
-    require(segs.nonEmpty, s"no committed IVF-PQ segments under $path")
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id LONG, code ARRAY<LONG>, rnorm DOUBLE, cid LONG, seg LONG")
-    spark.read.schema(schema).parquet(s"$path/lists")
-      .filter(col("seg").isin(segs: _*)).drop("seg")
   }
 
   /** Codebooks back from an IVF-PQ index, in subspace order with each
@@ -1084,23 +1018,13 @@ object Similarity {
                        path: String, docs: DataFrame, docId: Column,
                        docVec: Column, targetRows: Long = 1L << 20,
                        spread: Int = 8,
-                       batchId: Option[Long] = None): Long = {
-    val committed = ivfPqCommittedSegs(spark, path)
-    // auto ids are monotone past compaction via the hwm water line;
-    // ids at-or-below it are replays of committed-then-folded batches
-    val (k, done) = SegmentFs.resolveAppendId(spark, path, committed,
-      batchId, minId = 1L)
-    if (done) k // idempotent replay of a committed (possibly folded) batch
-    else {
+                       batchId: Option[Long] = None): Long =
+    listSegments(spark, path).append(batchId, minId = 1L) { k =>
       val cents = loadIvfCentroids(spark, path)
       val books = loadPqBooks(spark, path)
-      val subDim = books.head.head._2.size
-      writeIvfPqSegment(docs, docId, docVec, cents, books, subDim, path,
-        targetRows, spread, seg = k)
-      SegmentFs.recordHighWater(spark, path, k)
-      k
+      writeIvfPqData(docs, docId, docVec, cents, books,
+        books.head.head._2.size, path, targetRows, spread, k)
     }
-  }
 
   /** Outcome of one [[maintainIvfPqIndex]] tick. */
   final case class IvfPqMaintenance(meanRecall: Double, rebuilt: Boolean,
@@ -1136,7 +1060,7 @@ object Similarity {
       col("doc_id"), col("dv"), queries, queryId, queryVec, k)
     meanRecallOf(approx, exact, k) match {
       case Some(mean) if mean < recallFloor =>
-        if (ivfPqCommittedSegs(spark, outPath).nonEmpty) {
+        if (listSegments(spark, outPath).committed.nonEmpty) {
           // a prior triggered tick COMPLETED this rebuild (some
           // segment committed — the base build lands as -1, but a
           // later compaction can retire it into a negative merged
@@ -1151,10 +1075,7 @@ object Similarity {
           val cents = loadIvfCentroids(spark, path)
           val books = pqCodebooks(corpus, corpusId, corpusVec,
             m, subDim, kCodes, iters)
-          // reclaim a torn (uncommitted) prior attempt, then rebuild
-          val f = SegmentFs.fs(spark, outPath)
-          val op = new org.apache.hadoop.fs.Path(outPath)
-          if (f.exists(op)) f.delete(op, true): Unit
+          SegmentFs.reclaim(spark, outPath) // a torn prior attempt
           saveIvfPqIndex(corpus, corpusId, corpusVec, cents, books,
             subDim, outPath, targetRows, spread)
           IvfPqMaintenance(mean, rebuilt = true, outPath)
@@ -1194,7 +1115,7 @@ object Similarity {
         col("pc.cid").as("cid"))
     val probedCids = probes.select(col("cid")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val lists = ivfPqLists(spark, path)
+    val lists = committedLists(spark, path, ivfPqListDDL)
       .filter(col("cid").isin(probedCids.toIndexedSeq: _*))
       .withColumnRenamed("code", "__code")
     val denom = col("rnorm") * col("__qnorm")

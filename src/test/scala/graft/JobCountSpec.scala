@@ -2,6 +2,9 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Pins the r19 lifecycle round-trip cuts (VERDICT r18 next-round #2):
   * commit/hwm markers became FS-direct (no spark.range(1) write job),
@@ -19,28 +22,46 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * The bounds below carry headroom (+4..5) for SF/core/AQE variance
   * while still failing if a marker/manifest job class returns (each
   * class re-adds 3-11 jobs). sf0.001 keeps the spec cheap.
+  *
+  * Each query's file-write commands are also recorded: commit markers,
+  * water lines and the BM25 meta are FS-API writes, so no Spark
+  * write may target a `commits/`, `hwm/` or `meta/` dir.
   */
 class JobCountSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def jobsOf(name: String): Long = {
+  /** (jobs, output paths of the file-write commands) of one query. */
+  private def jobsOf(name: String): (Long, Seq[String]) = {
     val ctr = new AtomicLong(0L)
     val l = new SparkListener {
       override def onJobStart(ev: SparkListenerJobStart): Unit = {
         ctr.incrementAndGet(): Unit
       }
     }
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val w = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.foreach {
+          case c: InsertIntoHadoopFsRelationCommand =>
+            writes.add(c.outputPath.toString): Unit
+          case _ =>
+        }
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
     spark.sparkContext.addSparkListener(l)
+    spark.listenerManager.register(w)
     try {
       SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd
         .foreachPartition(
           (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
             it.foreach(_ => ()))
       org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
-      ctr.get()
+      (ctr.get(), writes.toArray(Array.empty[String]).toSeq)
     } finally {
       spark.sparkContext.removeSparkListener(l)
+      spark.listenerManager.unregister(w)
       Frames.scrubSession(spark)
     }
   }
@@ -52,11 +73,16 @@ class JobCountSpec extends SparkSpec {
       "v14_ivf_recenter" -> 44L,
       "g12_vector_tick" -> 40L)) {
     test(s"$name runs within its post-r19 job budget (<= $bound)") {
-      val n = jobsOf(name)
+      val (n, writes) = jobsOf(name)
       assert(n <= bound,
-        s"$name ran $n jobs (> $bound) — a lifecycle round-trip class " +
-          "(marker write job / manifest parquet job / tick stage write) " +
-          "has returned")
+        s"$name ran $n jobs (> $bound) — either a lifecycle round-trip " +
+          "class (marker write job / manifest parquet job / tick stage " +
+          "write) has returned, or the query legitimately grew: then " +
+          "re-measure with JobCountProbe and raise the budget")
+      assert(writes.nonEmpty, s"$name: no file-write command was recorded")
+      val marker = writes.filter(_.matches(".*/(commits|hwm|meta)(/.*)?"))
+      assert(marker.isEmpty,
+        s"$name wrote through Spark into a marker dir: ${marker.mkString(", ")}")
     }
   }
 }

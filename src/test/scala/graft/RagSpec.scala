@@ -226,6 +226,22 @@ class RagSpec extends SparkSpec {
       .exists(_.getAs[Long]("doc_id") == 9L))
   }
 
+  test("bm25 save reclaims a torn meta dir; probes refuse it by name") {
+    val docs = Seq((1L, "a b a c"), (2L, "a d g"), (3L, "b b c")).toDF("doc_id", "text")
+    val queries = Seq(0 -> Seq("a", "c"))
+    val idx = Scratch.dir("bm25_torn_meta") + "/bm25"
+    // a crashed save: the bucket count landed, its commit marker did not
+    new java.io.File(s"$idx/meta").mkdirs(): Unit
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$idx/meta/buckets"), "3"): Unit
+    val err = intercept[IllegalStateException](Rag.bm25Indexed(spark, idx, queries))
+    assert(err.getMessage.contains(s"$idx/meta"), err.getMessage)
+    Rag.saveBm25Index(docs, $"doc_id", $"text", idx, buckets = 8, targetRows = 1000L, spread = 2)
+    assert(rows(Rag.bm25Indexed(spark, idx, queries)).toSet ==
+      rows(Rag.bm25(docs, $"doc_id", $"text", queries)).toSet)
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](
+      Rag.saveBm25Index(docs, $"doc_id", $"text", idx))
+  }
+
   test("rrfFuse sums reciprocal ranks across legs; absent legs contribute nothing") {
     val lex = Seq((0, 10L, 1), (0, 20L, 2)).toDF("query_id", "doc_id", "rank")
     val dense = Seq((0, 20L, 1), (0, 30L, 2)).toDF("query_id", "doc_id", "rank")
