@@ -19,6 +19,12 @@ import scala.concurrent.duration._
   */
 object Frames {
 
+  /** Measurement escape (fan A/Bs, COVERAGE.md fan bullet): with
+    * SPARK_GRAFT_NOFAN=1 every fan is the identity, so fan-vs-nofan
+    * runs need no recompile. Never set by any driver surface. */
+  private val disabled: Boolean =
+    sys.env.get("SPARK_GRAFT_NOFAN").contains("1")
+
   /** Spread an UNDER-partitioned source across the session's cores
     * before an expensive map phase (tokenize / minhash / simhash /
     * feature-hash): a small parquet file is one row group and
@@ -32,13 +38,12 @@ object Frames {
     * map-phase speedup, and it moves bare pre-projection rows once.
     * Callers apply it at build-once staging fronts (the sig/feature
     * tables), never on serving paths.
+    *
+    * A site whose heavy projection feeds a global sort on pass-through
+    * keys needs no fan: SortBelowProjectRule runs that projection after
+    * a range exchange pinned at `spark.sql.shuffle.partitions`, which
+    * spreads it with one exchange fewer.
     */
-  /** Measurement escape (fan A/Bs, COVERAGE.md fan bullet): with
-    * SPARK_GRAFT_NOFAN=1 every fan is the identity, so fan-vs-nofan
-    * runs need no recompile. Never set by any driver surface. */
-  private val disabled: Boolean =
-    sys.env.get("SPARK_GRAFT_NOFAN").contains("1")
-
   def fan(df: DataFrame): DataFrame = if (disabled) df else {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     // partition count via the frame's OWN QueryExecution: `df.rdd`

@@ -4415,7 +4415,7 @@ object SparkEntry {
       // bigram share) — the boilerplate/keyword-stuffing signals a
       // training-data pipeline gates on. Tokens materialize once at a
       // select boundary; both signals read the attribute.
-      graft.Frames.fan(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"), TA.tokens(col("text")).as("toks"))
         .select(col("doc_id"),
           fround(TA.topTokenFraction(col("toks")), 6).as("top_token_frac"),
@@ -4765,7 +4765,7 @@ object SparkEntry {
       // load-bearing. All output cells exact integers. Scale shape:
       // scan-fused projection; thumbnails by contract.
       val hexes = array((0 until 16).map(v => lit(m6BmpHex(v))): _*)
-      graft.Frames.fan(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"), pmod(col("doc_id"), lit(16L)).as("v"))
         .withColumn("px", Multimodal.bmpPixelStats(
           unhex(element_at(hexes, (col("v") + 1).cast("int")))))
@@ -4784,7 +4784,7 @@ object SparkEntry {
       // count — while the oracle computes the stats from the FORMULA
       // alone. All output cells exact integers.
       val hexes = array((0 until 16).map(v => lit(m7WavHex(v))): _*)
-      graft.Frames.fan(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"), pmod(col("doc_id"), lit(16L)).as("v"))
         .withColumn("sm", Multimodal.wavSampleStats(
           unhex(element_at(hexes, (col("v") + 1).cast("int")))))
@@ -5076,7 +5076,7 @@ object SparkEntry {
       // position-weighted red sum are all checked against independent
       // ground truth. All output cells exact integers.
       val hexes = array((0 until 16).map(v => lit(m11PngHex(v))): _*)
-      graft.Frames.fan(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"), pmod(col("doc_id"), lit(16L)).as("v"))
         .withColumn("px", graft.expressions.PngPixelStats(
           unhex(element_at(hexes, (col("v") + 1).cast("int")))))
@@ -5099,7 +5099,7 @@ object SparkEntry {
       // alone, so the entropy decode is checked against independent
       // ground truth. All output cells exact integers.
       val hexes = array((0 until 16).map(v => lit(m12GifHex(v))): _*)
-      graft.Frames.fan(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .select(col("doc_id"), pmod(col("doc_id"), lit(16L)).as("v"))
         .withColumn("px", graft.expressions.GifPixelStats(
           unhex(element_at(hexes, (col("v") + 1).cast("int")))))

@@ -14,9 +14,13 @@ import org.apache.spark.sql.types.StructType
   *
   * `writeSized` gives both bounds at once:
   *  - an explicit bucket column `pmod(xxhash64(fileKey), spread)` fans
-  *    each partition value across `spread` writer tasks, so a hot
+  *    each partition value across up to `spread` writer tasks, so a hot
   *    partition (one language dominating a corpus) still writes in
-  *    parallel;
+  *    parallel. The shuffle is `repartition(cols)` (REPARTITION_BY_COL),
+  *    which AQE coalesces: a write whose shuffle is under AQE's minimum
+  *    partition size (1 MB) runs as ONE writer task whatever `spread`
+  *    says. The fan-out applies once the data is large enough to keep
+  *    its partitions;
   *  - `maxRecordsPerFile` is the hard per-file cap, enforced by the
   *    writer itself — no file exceeds it regardless of bucket skew.
   * Files per partition value ≈ min(spread, ceil(rows / targetRows)),
@@ -32,7 +36,8 @@ object Compaction {
     * @param fileKey        deterministic fan-out key (e.g. the record id);
     *                       rows with equal keys land in the same file
     * @param targetRows     hard cap on rows per file (maxRecordsPerFile)
-    * @param spread         max writer tasks per partition value
+    * @param spread         max writer tasks per partition value (AQE
+    *                       may coalesce a small write to fewer)
     */
   def writeSized(df: DataFrame, path: String, partitionCols: Seq[String],
                  fileKey: Column, targetRows: Long, spread: Int = 8,

@@ -3,7 +3,8 @@ package graft
 import graft.plans.SortBelowProjectRule
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.NamedExpression
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, RepartitionByExpression, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, RoundRobinPartitioning}
 import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -12,15 +13,17 @@ import org.apache.spark.sql.functions._
 
 class SortBelowProjectRuleSpec extends SparkSpec {
 
-  /** A three-file parquet table (doc_id, text), ids out of order. */
-  private lazy val src: DataFrame = {
+  /** A parquet table (doc_id, text) of `files` files, ids out of order. */
+  private def table(files: Int): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft-sortsink").toString + "/t"
-    spark.range(0, 240, 1, 3)
+    spark.range(0, 240, 1, files)
       .select((col("id") * 97 % 240).as("doc_id"),
         concat(lit("doc "), col("id"), lit(" has aeiou and bcdfg")).as("text"))
       .write.parquet(dir)
     spark.read.parquet(dir)
   }
+
+  private lazy val src: DataFrame = table(3)
 
   /** Two select boundaries: `r` feeds two outputs, so CollapseProject
     * keeps the chain. */
@@ -81,10 +84,51 @@ class SortBelowProjectRuleSpec extends SparkSpec {
 
   test("the optimizer reaches its fixed point: the rule is effective once") {
     val qe = scored(src).orderBy(col("doc_id")).queryExecution
-    qe.optimizedPlan
+    val plan = qe.optimizedPlan
     val summary = qe.tracker.rules(SortBelowProjectRule.ruleName)
     assert(summary.numEffectiveInvocations == 1, summary)
     assert(summary.numInvocations < spark.sessionState.conf.optimizerMaxIterations, summary)
+    // the sunk Sort keeps its pinned-width range repartition
+    val sort = plan.collectFirst { case s: Sort => s }.get
+    assert(sort.child match {
+      case r: RepartitionByExpression =>
+        r.partitionExpressions == sort.order &&
+          r.optNumPartitions.contains(spark.sessionState.conf.numShufflePartitions)
+      case _ => false
+    }, plan.treeString)
+  }
+
+  test("the sunk projection runs on shuffle.partitions tasks over a one-file source") {
+    val one = table(1)
+    assert(one.rdd.getNumPartitions == 1)
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    val lastJobStages = new java.util.concurrent.atomic.AtomicReference[Seq[Int]](Nil)
+    val l = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        lastJobStages.set(ev.stageIds)
+      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
+        stages.put(ev.stageInfo.stageId, ev.stageInfo.numTasks): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = scored(one).orderBy(col("doc_id")).collect()
+      org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
+      assert(out.map(_.getLong(0)).toSeq == (0L until 240L))
+    } finally spark.sparkContext.removeSparkListener(l)
+    val finalStage = lastJobStages.get.max
+    assert(stages.get(finalStage) == spark.sessionState.conf.numShufflePartitions,
+      s"final stage $finalStage ran ${stages.get(finalStage)} tasks")
+  }
+
+  test("over a single-partition child the sunk Sort adds no exchange") {
+    // an un-partitioned window plans one SinglePartition exchange, which
+    // already satisfies the sort: a pinned range exchange would be a second
+    val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
+    val df = src.withColumn("rn", row_number().over(w))
+      .select(col("rn"), upper(col("text")).as("u")).orderBy(col("rn"))
+    assert(fired(df))
+    val plan = df.queryExecution.executedPlan.toString
+    assert("Exchange ".r.findAllIn(plan).size == 1, plan)
   }
 
   test("a limit over the sunk Sort still plans TakeOrderedAndProject") {
@@ -92,7 +136,7 @@ class SortBelowProjectRuleSpec extends SparkSpec {
       .orderBy(col("doc_id")).limit(7)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan)
-    assert(!plan.contains("Exchange rangepartitioning"), plan)
+    assert(!plan.contains("Exchange"), plan)
     // the limit over an unsunk two-Project chain keeps it too
     val chained = scored(src).orderBy(col("doc_id")).limit(7).queryExecution.executedPlan
     assert(chained.toString.contains("TakeOrderedAndProject"), chained.toString)
@@ -124,14 +168,20 @@ class SortBelowProjectRuleSpec extends SparkSpec {
   }
 
   test("fan sites keep the decode between their round-robin and range exchanges") {
-    for (name <- Seq("m10_audio_energy", "m11_png_pixel_decode")) {
-      val plan = query(name)
-      val range = exchange(plan, range = true).getOrElse(fail(s"$name: no range exchange\n$plan"))
-      val rr = exchange(range.child, range = false)
-        .getOrElse(fail(s"$name: no round-robin exchange below the sort\n$plan"))
-      // the clip decode reads unhex(...) of the doc's variant
-      assert(range.child.toString.contains("unhex") && !rr.child.toString.contains("unhex"),
-        s"$name: decode must run between the two exchanges\n$plan")
-    }
+    // m10's decode sits under an explode (a Generate): the rule cannot
+    // fire there, so its fan still spreads the decode
+    val m10 = query("m10_audio_energy")
+    val range = exchange(m10, range = true).getOrElse(fail(s"m10: no range exchange\n$m10"))
+    val rr = exchange(range.child, range = false)
+      .getOrElse(fail(s"m10: no round-robin exchange below the sort\n$m10"))
+    // the clip decode reads unhex(...) of the doc's variant
+    assert(range.child.toString.contains("unhex") && !rr.child.toString.contains("unhex"),
+      s"m10: decode must run between the two exchanges\n$m10")
+    // m11 has no fan: the pinned sort spreads its decode, after the range exchange
+    val m11 = query("m11_png_pixel_decode")
+    val pinned = exchange(m11, range = true).getOrElse(fail(s"m11: no range exchange\n$m11"))
+    assert(exchange(m11, range = false).isEmpty, s"m11: round-robin exchange\n$m11")
+    assert(!pinned.child.toString.contains("unhex") && m11.toString.contains("unhex"),
+      s"m11: decode must run after the range exchange\n$m11")
   }
 }
