@@ -1,13 +1,15 @@
 package graft
 
-import graft.functions.{TextAnalysis => TA, TextFunctions => TF, VectorFunctions => VF}
-import graft.operators.{Align, Classify, Compliance, CountLog, Decontam, Dedup, Embed, Enrich, Health, MergeLog, Multimodal, Packing, Rag, Ruler, Sampling, Similarity, Sketches}
-import org.apache.spark.sql.expressions.Window
+import graft.functions.{TextFunctions => TF}
+import graft.operators.Dedup
+import graft.queries._
+import graft.queries.Common.{fround, t}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — one `queries` entry (+ DuckDB `oracleSql`) per
-  * implemented operator from SURVEY.md §2. Query bodies are thin: the
+/** Driver contract — one [[graft.queries.Query]] (Spark builder + DuckDB
+  * twin) per implemented operator from SURVEY.md §2, declared in the
+  * per-family files under `graft.queries`. Query bodies are thin: the
   * operator logic lives in `graft.operators` / `graft.functions`.
   *
   * Conventions shared by Spark query and oracle SQL:
@@ -16,484 +18,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *  - a deterministic ORDER BY on every result.
   */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Floor-stable k-decimal rounding — identical IEEE ops on both engines
-    * (CLAUDE.md contract; `round` differs between Spark and DuckDB at
-    * half-boundaries of derived doubles).
-    */
-  private def fround(c: Column, k: Int): Column = {
-    val p = math.pow(10.0, k)
-    floor(c * p + 0.5) / p
-  }
-
-  /** DuckDB twin of [[fround]]. */
-  private def sqlFround(e: String, k: Int): String = {
-    val p = s"1e$k"
-    s"floor(($e) * $p + 0.5) / $p"
-  }
-
-  /** Temp staging dir for round-trip queries (s1/s8/s9), reclaimed at
-    * JVM exit — repeated Verify/Bench runs must not accumulate garbage
-    * in the system temp dir.
-    */
-  private def scratchDir(prefix: String): String = Scratch.dir(prefix)
-
-  /** 6dp micro-unit quantization ⌊x·10⁶ + 0.5⌋ as BIGINT (the
-    * [[fround]] contract without the divide-back) — the ONE expression
-    * the whole x5/tq5 ranked chain's cross-engine determinism rests
-    * on. [[sqlMicroFloor]] is its DuckDB twin; NEVER inline a copy of
-    * either (a drifted copy re-creates the locally-green/driver-red
-    * signature that burned rounds 9–12).
-    */
-  private def microFloor(c: Column): Column = floor(c * 1000000.0 + 0.5)
-
-  /** DuckDB twin of [[microFloor]] (1e6 and 1000000.0 are the same
-    * binary64; DuckDB floor returns DOUBLE, hence the BIGINT cast). */
-  private def sqlMicroFloor(e: String): String =
-    s"floor(($e) * 1e6 + 0.5)::BIGINT"
-
-  /** Shared head of the x5 DSIR chain (r13): the fitted weights with
-    * the 6dp logratio as an exact BIGINT (micro units) — the only form
-    * the ranked chain consumes now, so no red query carries any float
-    * cell.
-    */
-  private def dsirMicroFrame(s: SparkSession, dir: String): DataFrame =
-    Classify.dsirWeights(t(s, dir, "documents"), col("doc_id"),
-        col("text"), col("lang") <=> "en", 4096)
-      .select(col("doc_id"), col("n_tok"),
-        microFloor(col("avg_logratio")).as("logratio_micro"))
-
-  /** The tq12/tq13 staged LR feature table: ONE tokenize over
-    * documents into scratch `(doc_id, y, tr, f, c)` — same split,
-    * label and bucket constants as tq1, so the NB and LR fits stay
-    * directly comparable on one contract.
-    */
-  private def lrStagedFeatures(s: SparkSession, dir: String,
-                               prefix: String): DataFrame = {
-    val staged = scratchDir(prefix)
-    t(s, dir, "documents")
-      .select(col("doc_id"), (col("lang") <=> "en").as("y"),
-        (Sampling.keyHash(col("doc_id"), "nbt") <
-          Sampling.threshold(0.6)).as("tr"),
-        explode(TA.tokens(col("text"))).as("_tok"))
-      .select(col("doc_id"), col("y"), col("tr"),
-        Classify.featHash(col("_tok"), nbBuckets).as("f"))
-      .groupBy(col("doc_id"), col("y"), col("tr"), col("f"))
-      .agg(count(lit(1)).as("c"))
-      .write.mode("overwrite").parquet(staged)
-    s.read.parquet(staged)
-  }
-
-  /** Integer FLOOR division matching DuckDB's `//` for ANY dividend
-    * sign (positive divisor): Spark's `div` truncates toward zero, so
-    * a bare `a div b` silently disagrees with the oracle's `a // b` on
-    * negative dividends — green today only because the current feed is
-    * non-negative, and the testdata generator HAS changed contracts
-    * between rounds. `(a − pmod(a, b))` is exactly divisible by `b`
-    * and pmod is non-negative, so the div below is exact and equals
-    * the floor on both engines.
-    *
-    * CONTRACT EXCLUSION: the intermediate `a − pmod(a, b)` underflows
-    * (and, ANSI mode, THROWS — a crash, never a silent mismatch) when
-    * `a` is within `b − 1` of Long.MinValue; PropertySpec deliberately
-    * samples only ±Long.MaxValue/4. Fine for every current feed
-    * (micro-unit means, day counters); do not reach for this helper on
-    * full-range raw longs without a sign-split CASE instead.
-    */
-  private def floorDiv(a: String, b: String): String =
-    s"((($a) - pmod(($a), ($b))) div ($b))"
-
-  /** The x17/g16 CUSUM chain over a `(event_type, day_us, mean_micro)`
-    * daily table: baseline μ0 = first-7-day mean, slack μ0/20, both
-    * one-sided statistics via the prefix-sum identity
-    * S_t = P_t − min(0, min_{j≤t} P_j), alarm at S ≥ μ0 — all BIGINT
-    * with [[floorDiv]] divisions, so the chain matches the oracle's
-    * `//` even on a negative-valued feed. Shared so the batch query
-    * and the incremental tick cannot drift; [[sqlCusumAlarm]] is the
-    * DuckDB twin of the whole chain.
-    */
-  private def cusumFromDaily(daily: DataFrame): DataFrame = {
-    val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day_us"))
-    val mu0 = daily
-      .withColumn("_rk", row_number().over(wOrd))
-      .filter(col("_rk") <= 7)
-      .groupBy(col("event_type"))
-      .agg(expr(floorDiv("sum(mean_micro)", "count(*)")).as("mu0"))
-    val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    daily.join(mu0, "event_type")
-      .withColumn("dhi",
-        col("mean_micro") - col("mu0") - expr(floorDiv("mu0", "20")))
-      .withColumn("dlo",
-        col("mu0") - expr(floorDiv("mu0", "20")) - col("mean_micro"))
-      .withColumn("phi", sum(col("dhi")).over(wCum))
-      .withColumn("plo", sum(col("dlo")).over(wCum))
-      .select(col("event_type"), col("day_us"), col("mean_micro"),
-        (col("phi") - least(lit(0L), min(col("phi")).over(wCum)))
-          .as("s_hi"),
-        (col("plo") - least(lit(0L), min(col("plo")).over(wCum)))
-          .as("s_lo"),
-        col("mu0"))
-      .select(col("event_type"), col("day_us"), col("mean_micro"),
-        col("s_hi"), col("s_lo"),
-        (col("s_hi") >= col("mu0")).as("alarm_hi"),
-        (col("s_lo") >= col("mu0")).as("alarm_lo"))
-      .orderBy(col("event_type"), col("day_us"))
-  }
-
-  /** DuckDB twin of the whole [[cusumFromDaily]] chain computed from
-    * raw events — shared verbatim by the x17 batch oracle and the g16
-    * lifecycle oracle (the tick must equal the from-scratch chain).
-    */
-  private val sqlCusumAlarm: String =
-    """WITH daily AS (
-           SELECT event_type,
-             epoch_us(date_trunc('day', ts::TIMESTAMP)) AS day_us,
-             sum(floor(value * 1e6 + 0.5)::BIGINT)::BIGINT // count(*)
-               AS mean_micro
-           FROM events GROUP BY 1, 2),
-         mu AS (
-           SELECT event_type,
-             (sum(mean_micro)::BIGINT // count(*))::BIGINT AS mu0
-           FROM (SELECT *, row_number() OVER (PARTITION BY event_type
-               ORDER BY day_us) AS rk FROM daily)
-           WHERE rk <= 7 GROUP BY event_type),
-         dev AS (
-           SELECT d.event_type, d.day_us, d.mean_micro, m.mu0,
-             d.mean_micro - m.mu0 - (m.mu0 // 20) AS dhi,
-             m.mu0 - (m.mu0 // 20) - d.mean_micro AS dlo
-           FROM daily d JOIN mu m USING (event_type)),
-         pre AS (
-           SELECT *, sum(dhi) OVER w AS phi, sum(dlo) OVER w AS plo
-           FROM dev WINDOW w AS (PARTITION BY event_type ORDER BY day_us
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         cus AS (
-           SELECT *, (phi - least(0, min(phi) OVER w))::BIGINT AS s_hi,
-             (plo - least(0, min(plo) OVER w))::BIGINT AS s_lo
-           FROM pre WINDOW w AS (PARTITION BY event_type ORDER BY day_us
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         SELECT event_type, day_us, mean_micro, s_hi, s_lo,
-           s_hi >= mu0 AS alarm_hi, s_lo >= mu0 AS alarm_lo
-         FROM cus ORDER BY event_type, day_us"""
-
-  /** v15/v16 shared lexical-retrieval constants: fixed keyword queries
-    * over the synthetic vocabulary, standard Okapi k1/b, RRF k=60
-    * (Cormack et al.). Both the Spark queries and their DuckDB oracles
-    * are generated from THESE values (CLAUDE.md shared-constant rule).
-    */
-  private val bm25K1 = 1.2
-  private val bm25B = 0.75
-  private val rrfK = 60
-
-  /** v21's nDCG@10 discounts 1/log2(i+1), i = 1..10, QUANTIZED to the
-    * dyadic 2⁻²⁰ grid so the per-query rel·disc sums are IEEE-exact in
-    * any order (the s17/DSIR trick). The one libm log2 runs here,
-    * driver-side, once — both engines consume identical literals.
-    */
-  private val ndcgDiscounts: Seq[Double] = (1 to 10).map { i =>
-    math.floor(1.0 / (math.log(i + 1.0) / math.log(2.0)) * 1048576.0 +
-      0.5) / 1048576.0
-  }
-
-  /** Ideal DCG of v21's gold list (graded rel 5..1 at ranks 1..5) —
-    * an exact dyadic sum, one shared literal. */
-  private val ndcgIdcg5: Double =
-    (1 to 5).map(i => (6 - i) * ndcgDiscounts(i - 1)).sum
-
-  /** v18 PQ constants shared by the query and its oracle: m subspaces
-    * × subDim dims (m·subDim = the 64-dim embedding), k centroids per
-    * codebook, Lloyd iterations, ADC rerank depth.
-    */
-  private val pqM = 4
-  private val pqSubDim = 16
-  private val pqK = 8
-  private val pqIters = 2
-  private val pqRerank = 20
-
-  /** tq7 Platt-calibration Newton tick count, shared by the query and
-    * its unrolled oracle CTE chain.
-    */
-  private val plattIters = 8
-
-  /** tq9's trusted seed slice — the fixed source set whose documents
-    * train the per-language CCNet seed LM (the "Wikipedia" seat in
-    * Wenzek et al. 2020). Shared by the query and its oracle.
-    */
-  private val ccnetSeedSources = Seq("src0", "src1", "src2", "src3")
-
-  /** n3's trusted seed nations: customers of these nations are the
-    * hand-trusted whitelist whose teleport mass ranks the rest of the
-    * interaction graph (the TrustRank seed set). Shared by the query
-    * and its oracle.
-    */
-  private val trustedNations = Seq("NATION_3", "NATION_7", "NATION_11")
-
-  /** a7x's verification ceiling: with lineitem at or under this many
-    * rows the sketch query ALSO computes the exact quartiles it is
-    * checked against (the driver's sf0.01 gate, ~60k rows); above it
-    * (bench sf0.1, ~600k) only the sketch path runs — the form that
-    * exists at 100 TB. The oracle is evaluated only under the gate.
-    */
-  private val a7xExactMaxRows = 100000L
-
-  /** True at the driver's verification SF (small corpus). The index
-    * LIFECYCLE queries (d15/v11/v17) exercise append + compaction
-    * under their oracles when this holds; at bench SF they measure the
-    * pure build+serve path those queries' numbers advertise — the a7x
-    * scale-gate precedent: maintenance cost is real, but re-paying a
-    * full index fold inside every serve benchmark distorts what the
-    * number means (measured +8 s across the three at sf0.1). The
-    * compaction operators' own costs are intrinsic (one index rewrite,
-    * the floor for merging segments).
-    */
-  private def verifyScale(df: DataFrame, key: String): Boolean =
-    scaleCache.computeIfAbsent(key, _ => df.count() <= 1000L)
-
-  // one count per (sfdir, table) per process — the gate re-evaluates
-  // per bench rep otherwise, and the answer cannot change under a run
-  private val scaleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** x8 DoReMi-style reweighting constants: hashed-unigram model width,
-    * multiplicative-update temperature η, iteration count — shared by
-    * the query and its unrolled oracle chain.
-    */
-  private val x8Buckets = 4096
-  private val x8Eta = 4.0
-  private val x8Iters = 5
-
-  /** a21 drift→re-mix shared constants: monitor sensitivity α and the
-    * mix token budget; the Smirnov coefficient c(α) is computed HERE
-    * (driver-side libm) and enters both engines as the same literal.
-    */
-  private val remixAlpha = 0.2
-  private val remixBudgetPct = 25
-  private val bm25Queries: Seq[(Int, Seq[String])] = Seq(
-    0 -> Seq("hash", "join", "table"),
-    1 -> Seq("window", "agg", "filter"),
-    2 -> Seq("scan", "query", "fast", "slow"))
-
-  /** The g2/g3 shared build: decontaminate → quality gate → token-
-    * budget mix → bucketed packed starts, one lazy plan per caller
-    * (g2 rolls bins up; g3 lands the per-doc layout via the sized
-    * sink). See the g2 query for the plan-shape commentary.
-    */
-  private def g2PackedStarts(s: SparkSession, dir: String,
-                             dedup: Boolean = false,
-                             tokenGate: Option[Column => Column] = None)
-      : DataFrame = {
-    val docs = t(s, dir, "documents")
-    val train0 = docs.filter(col("doc_id") >= 50)
-    // g4 variant: near-dup KEEP-ONE dedup of the train corpus before
-    // everything else (the closure is pair-graph-sized work; the eval
-    // split is never deduped).
-    // NOT staged (r19 §5 A/Bs — the r18 verdict 1a hypothesis, measured
-    // and REJECTED): the final plan re-derives the dedup joins once per
-    // consumer (decontam report + anti-join + mix/pack re-consumers —
-    // 36 SMJs in the fingerprint), but at bench scale that recompute is
-    // PARALLEL SLACK on a scheduler-bound chain (~1 busy core over 32
-    // slots) while any staging hop adds SEQUENTIAL write+read latency.
-    // Both variants lost their paired ABBA A/Bs (4 runs/arm each,
-    // min-of-2, quiet AND 16-spinner):
-    //   full post-dedup corpus staged (text):  quiet med 7.76 vs 7.31
-    //     unstaged; loaded 8.72 vs 7.73;
-    //   kept-ids staged + semi-join re-attach:  quiet med 7.16 vs 6.23;
-    //     loaded 8.86 vs 7.36.
-    // At 100 TB the trade flips (the re-derived subtree is real work,
-    // not slack) — g8/g10 already land the staged form of this pipeline
-    // as their product, so the staged shape stays covered there.
-    val train = if (!dedup) train0
-      else Dedup.dupClusters(train0, col("doc_id"), col("text"),
-          threshold = 0.5)
-        .where(col("kept")).drop("cluster_id", "cluster_size", "kept")
-    val clean = Decontam.decontaminate(
-      train, docs.filter(col("doc_id") < 50),
-      "doc_id", col("text"), n = 5, maxFraction = 0.0)
-    // g6 variant: an extra token-derived gate (the trained-classifier
-    // evidence filter) rides the SAME select boundary as the heuristic
-    // quality score — one tokenization feeds both, and the gate stays
-    // a scan-fused predicate (zero new exchanges vs g2)
-    val scored = clean
-      .select(col("doc_id"), col("lang"), col("text"),
-        TA.tokens(col("text")).as("toks"))
-      .filter(tokenGate.map(g => g(col("toks"))).getOrElse(lit(true)))
-      .select(col("doc_id"), col("lang"),
-        size(col("toks")).cast("long").as("n_tok"),
-        TA.qualityScoreFromTokens(col("toks"), col("text")).as("q"))
-      .filter(col("q") >= 0.55)
-    val mixed = Sampling.tokenBudgetMix(scored, col("lang"), col("doc_id"),
-      col("n_tok"), budgetPct = 50, salt = "g2m")
-    Packing.packedStartsBucketed(mixed, col("lang"), col("doc_id"),
-      col("n_tok"), bucketWidth = 4096L)
-  }
-
-  /** The g9 layout + its RECURRING join (private[graft] so
-    * PlanAuditSpec can guard the join subplan alone, pre-rollup): the
-    * g2 packed per-doc output and the separately-maintained per-doc
-    * metadata table BOTH land as doc_id-bucketed+sorted external
-    * tables ([[sources.Buckets]], the s13 layout), so every job that
-    * re-joins them — epoch serves, provenance audits, compliance
-    * re-checks, the jobs that run per day against a layout written
-    * once — plans with ZERO shuffle exchanges on either side. At
-    * 100 TB that is the whole point of landing the corpus bucketed:
-    * the build pays the doc_id partitioning one time and every
-    * recurring enrich join rides it for free.
-    */
-  private[graft] def g9EnrichJoin(s: SparkSession, dir: String): DataFrame = {
-    val base = scratchDir("graft_g9")
-    // NOT overlapped (r18 §2.6 A/B): the two bucketed lands are
-    // independent, but the paired ABBA A/B read a wash (pooled mins
-    // 3.79 vs 3.70 s) — kept sequential, which also keeps the two
-    // saveAsTable catalog registrations serial.
-    sources.Buckets.writeBucketed(
-      g2PackedStarts(s, dir)
-        .withColumn("bin", expr("start_tok div 2048"))
-        .select(col("doc_id"), col("lang"), col("bin"), col("n_tok")),
-      "g9_packed", s"$base/packed", "doc_id", 8)
-    sources.Buckets.writeBucketed(
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars")),
-      "g9_meta", s"$base/meta", "doc_id", 8)
-    sources.Buckets.table(s, "g9_packed")
-      .join(sources.Buckets.table(s, "g9_meta").hint("merge"), Seq("doc_id"))
-  }
-
-  /** The s14 pruned join (private[graft] so PlanAuditSpec can pin the
-    * `dynamicpruning` partition filter on the fact scan): the fact
-    * table lands hive-partitioned on its dim key, the dim carries a
-    * selective NON-key filter, and Spark's dynamic partition pruning
-    * turns the broadcast build side into a runtime partition filter on
-    * the fact scan — only the partitions whose keys survive the dim
-    * filter are read AT ALL. At 100 TB a date/tenant-partitioned fact
-    * joined to a filtered dim reads 1/Nth of its files with zero code:
-    * the layout (partitionBy at land time) is the entire contract.
-    */
-  private[graft] def s14PrunedJoin(s: SparkSession, dir: String,
-                                   base: String): DataFrame = {
-    val fact = s.read.parquet(s"$base/customer")
-    val dim = t(s, dir, "nation")
-      .filter(col("n_regionkey") === 2)
-      // partition-directory read-back infers INT; cast the dim key to
-      // match so the join condition stays ON the partition attribute
-      // (a cast around it would block DPP insertion)
-      .select(col("n_nationkey").cast("int").as("nk"), col("n_name"))
-    fact.join(broadcast(dim), col("c_nationkey") === col("nk"))
-  }
-
-  /** The g11 day-partitioned production store: land the feed + FREEZE
-    * the drift reference distribution (private[graft] so the specs can
-    * pin DPP pruning and untouched-file identity on a controlled
-    * store). `ev` must carry (day DATE, event_type, value, user_id).
-    * The reference — the whole initial feed's a20-style (stratum, v, c)
-    * value distribution under stratum `__ref` — is pinned at land time
-    * ON PURPOSE: restating a day re-scores THAT day against the same
-    * yardstick instead of moving the yardstick under every other day,
-    * which is exactly what keeps the re-derive single-partition.
-    */
-  private[graft] def g11Land(ev: DataFrame, base: String): Unit = {
-    // NOT overlapped (r18 §2.6 A/B): the store land and the ref build
-    // are independent, but both are full `events` scans — run
-    // concurrently they contend for the same scan IO/CPU and the
-    // paired ABBA A/B read overlap CONSISTENTLY slower (mins 5.43 vs
-    // 4.60 s, 4/4 noover runs at or under the best overlap run).
-    ev.write.mode("overwrite").partitionBy("day").parquet(s"$base/store")
-    operators.Sketches.distributionCounts(ev, lit("__ref"), col("value"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/ref")
-  }
-
-  /** One g11 dashboard slice over `days` (None = every day): per
-    * (day, event_type) row counts + value sums, per-day KS drift vs
-    * the frozen `__ref` distribution and its Smirnov breach verdict
-    * (the a21 discipline — raw ks against the bound, c(α) a shared
-    * driver-side literal; ks rounds for display only). The day
-    * restriction is a BROADCAST join ON the partition column, so the
-    * store scan carries a `dynamicpruning` partition filter — a
-    * single-day re-derive reads exactly one partition's files however
-    * many days the store holds.
-    */
-  private[graft] def g11Summary(s: SparkSession, base: String,
-                                days: Option[DataFrame]): DataFrame = {
-    val store = s.read.parquet(s"$base/store")
-    val slice = days.map(dd => store.join(broadcast(dd), "day"))
-      .getOrElse(store)
-    val roll = slice.groupBy(col("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), fround(sum(col("value")), 2).as("sum_v"))
-    val ref = s.read.parquet(s"$base/ref")
-    val counts = operators.Sketches.distributionCounts(slice,
-        col("day").cast("string"), col("value"))
-      .unionByName(ref)
-    val smir = operators.Sketches.smirnovC(remixAlpha)
-    val drift = operators.Sketches.ksFromDistribution(counts, "__ref")
-      .crossJoin(broadcast(ref.agg(sum(col("c")).as("_nr"))))
-      .select(col("stratum"), fround(col("ks"), 6).as("ks"),
-        (col("ks") > lit(smir) *
-          sqrt((col("n") + col("_nr")).cast("double") /
-            (col("n").cast("double") * col("_nr").cast("double"))))
-          .as("breached"))
-    roll.join(broadcast(drift),
-        roll("day").cast("string") === drift("stratum"))
-      .select(col("day"), col("event_type"), col("n"), col("sum_v"),
-        col("ks"), col("breached"))
-  }
-
-  /** 16 common CJK ideographs (all inside TA.cjkRange) for deterministic
-    * Chinese-text injection: the corpus is pure ASCII, so ta7 and its
-    * oracle synthesize CJK text from doc_id IDENTICALLY on both sides
-    * (the sqlDirtyPii precedent).
-    */
-  private val cjkAlpha: String =
-    "的一是不了人我在" +
-    "有他这中大来上国"
-
-  /** Deterministic PII injection over `documents.text` (corpus is clean;
-    * c1/c5 and their oracles must dirty it IDENTICALLY — [[sqlDirtyPii]]
-    * is the DuckDB twin).
-    */
-  private def dirtyPii: Column = concat(col("text"),
-    when(col("doc_id") % 7 === 0,
-      concat(lit(" reach me at user"), col("doc_id").cast("string"),
-        lit("@example.com"))).otherwise(lit("")),
-    when(col("doc_id") % 13 === 0, lit(" call +1 555 123 4567"))
-      .otherwise(lit("")),
-    when(col("doc_id") % 97 === 0, lit(" ssn 123-45-6789"))
-      .otherwise(lit("")))
-
-  /** DuckDB twin of [[dirtyPii]] as a one-CTE body over `documents`. */
-  private val sqlDirtyPii: String =
-    """SELECT doc_id, text ||
-         (CASE WHEN doc_id % 7 = 0
-           THEN ' reach me at user' || doc_id::VARCHAR || '@example.com'
-           ELSE '' END) ||
-         (CASE WHEN doc_id % 13 = 0 THEN ' call +1 555 123 4567' ELSE '' END) ||
-         (CASE WHEN doc_id % 97 = 0 THEN ' ssn 123-45-6789' ELSE '' END)
-         AS dirty
-       FROM documents"""
-
-  /** Dirty-text prefix for g1's cleaning stage (the corpus is clean, so
-    * LaTeX/entity/non-ASCII input is constructed identically on both
-    * sides — the t1 precedent). Contains no single quotes, so it embeds
-    * verbatim in a DuckDB string literal.
-    */
-  private val g1DirtyPrefix = "\\textbf{Note} on $x^2$ &amp; caf\u00e9 "
-
-  /** ta15 chunk window: sized so the sf documents (10-99 tokens) really
-    * split 1-4 ways; shared by the query and its oracle SQL.
-    */
-  private val ChunkMax = 32
-  private val ChunkStride = 24
-
-  /** DuckDB twin of [[graft.functions.TextFunctions.cleanText]] — the
-    * T2→T3→T4→T1 regexp_replace chain over expression `e` (same patterns,
-    * same order; Java regex and RE2 agree on all five).
-    */
-  private def sqlClean(e: String): String =
-    "trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
-      "regexp_replace(regexp_replace(" + e +
-      """, '\$.*?\$', ' ', 'g'), '\\[a-zA-Z]+\{[^}]*\}', ' ', 'g'), """ +
-      """'\\[a-zA-Z]+\s*', ' ', 'g'), '&[a-zA-Z]+;', ' ', 'g'), """ +
-      """'[^\x00-\x7F]+', ' ', 'g'), '\s+', ' ', 'g'))"""
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Runs the document-pipeline spine: clean → dedup → per-language stats.
@@ -511,11951 +35,26 @@ object SparkEntry {
       .orderBy(col("lang"))
   }
 
-  // =====================================================================
-  // Queries
-  // =====================================================================
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- A: aggregations --------------------------------------------
-    "q1_pricing_summary" -> ((s, dir) => {
-      // TPC-H Q1 shape: the reference's per-stage stats rollup (A1/A2)
-      // over the biggest fact table. Partial agg map-side, 6 output rows.
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-01").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          fround(sum(col("l_quantity")), 2).as("sum_qty"),
-          fround(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          fround(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          fround(avg(col("l_quantity")), 6).as("avg_qty"),
-          fround(avg(col("l_discount")), 6).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    "q2_doc_quality_stats" -> ((s, dir) => {
-      // A1 per-stage quality stats re-expressed over `documents`: counts,
-      // %-long-docs, avg char/word lengths (avg over qualifying rows only,
-      // mirroring data_quality_comparison.py:67's non-empty-only average).
-      t(s, dir, "documents")
-        .groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          fround(avg(when(col("n_chars") >= 200, 1.0).otherwise(0.0)) * 100, 4).as("pct_long"),
-          fround(avg(when(col("n_chars") > 0, col("n_chars"))), 4).as("avg_chars"),
-          fround(avg(TF.wordCount(col("text"))), 4).as("avg_words"),
-          countDistinct(col("source")).as("n_sources"))
-        .orderBy(col("lang"))
-    }),
-
-    "q3_enrich_5way_join" -> ((s, dir) => {
-      // J1 — the reference's 5-way left-outer enrich merge
-      // (bulid_final_dataset.py:145-333) as a star join; small dims are
-      // broadcast (auto under the 64 MB threshold), fact never re-shuffles.
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
-      li.join(o, col("l_orderkey") === col("o_orderkey"), "left")
-        .join(c, col("o_custkey") === col("c_custkey"), "left")
-        .join(n, col("c_nationkey") === col("n_nationkey"), "left")
-        .join(r, col("n_regionkey") === col("r_regionkey"), "left")
-        .groupBy(coalesce(col("r_name"), lit("UNKNOWN")).as("region"),
-          coalesce(col("n_name"), lit("UNKNOWN")).as("nation"))
-        .agg(
-          fround(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-          countDistinct(col("o_orderkey")).as("n_orders"),
-          count(lit(1)).as("n_lines"))
-        .orderBy(col("region"), col("nation"))
-    }),
-
-    "q4_anti_join" -> ((s, dir) => {
-      // P5/J2 — checkpoint anti-join (enhance_fields_of_study.py:347-356):
-      // rows not yet present in the processed set.
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").filter(col("o_totalprice") > 150000)
-      c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_customers"),
-          fround(sum(col("c_acctbal")), 2).as("sum_acctbal"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    "q5_topk" -> ((s, dir) => {
-      // R11 — global top-k by score (quality_scoring.py:571-581); Catalyst
-      // plans TakeOrderedAndProject: no full sort, no single-node shuffle.
-      t(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    "j1_coverage_join" -> ((s, dir) => {
-      // J1 — enrich-merge shape: left joins with coalesce defaults plus
-      // per-side coverage counters in the same aggregate
-      // (build_simple_dataset.py:149-250).
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val bigLines = t(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 40)
-        .groupBy(col("l_orderkey")).agg(sum(col("l_quantity")).as("big_qty"))
-      o.join(c, col("o_custkey") === col("c_custkey"), "left")
-        .join(bigLines, col("o_orderkey") === col("l_orderkey"), "left")
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          fround(avg(when(col("c_custkey").isNotNull, 1.0).otherwise(0.0)) * 100, 4)
-            .as("pct_with_customer"),
-          fround(avg(when(col("big_qty").isNotNull, 1.0).otherwise(0.0)) * 100, 4)
-            .as("pct_with_big_lines"),
-          fround(sum(coalesce(col("big_qty"), lit(0.0))), 2).as("sum_big_qty"))
-        .orderBy(col("o_orderstatus"))
-    }),
-
-    "j2_asof_join" -> ((s, dir) => {
-      // As-of (backward, inclusive) join: every click picks the user's
-      // latest purchase at-or-before it. Joins.asofJoin's union + ONE
-      // hash-shuffle running-last plan vs DuckDB's native ASOF LEFT
-      // JOIN. The right side pre-aggregates per (user, ts) to honor the
-      // unique-(key, time) contract at any SF; 141 clicks precede their
-      // user's first purchase at sf0.01, exercising the NULL path.
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"))
-      val rates = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), unix_micros(col("ts")).as("rts"))
-        .agg(max(col("value")).as("rate"))
-      graft.operators.Joins.asofJoin(clicks, rates, "user_id", "tus", "rts")
-        .orderBy(col("user_id"), col("tus"), col("event_id"))
-    }),
-
-    "j4_asof_join_bucketed" -> ((s, dir) => {
-      // Same as-of contract as j2 through the HOT-KEY path: per-bucket
-      // running last + summary carry, so no task ever sorts a whole
-      // user's timeline. Checked against the identical DuckDB ASOF
-      // oracle — the two operator shapes must agree exactly.
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"))
-      val rates = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), unix_micros(col("ts")).as("rts"))
-        .agg(max(col("value")).as("rate"))
-      graft.operators.Joins.asofJoinBucketed(clicks, rates, "user_id",
-          "tus", "rts", bucketWidth = 6L * 3600L * 1000000L)
-        .orderBy(col("user_id"), col("tus"), col("event_id"))
-    }),
-
-    "j3_range_join" -> ((s, dir) => {
-      // Interval-containment join: clicks within ±4 h of a purchase by
-      // the same user. Joins.rangeJoin buckets the time axis into 1 h
-      // cells so the pairing is a plain equi-join on (user, cell) with
-      // an exact bounds re-check — no theta-join, and each ±4 h window
-      // explodes into ~9 cells.
-      val ev = t(s, dir, "events")
-      val halfSpan = 4L * 3600L * 1000000L
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          unix_micros(col("ts")).as("tus"))
-      val wins = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("win_id"),
-          (unix_micros(col("ts")) - halfSpan).as("start_us"),
-          (unix_micros(col("ts")) + halfSpan).as("end_us"))
-      graft.operators.Joins.rangeJoin(clicks, "tus", wins,
-          "start_us", "end_us", "user_id", cellWidth = 3600L * 1000000L)
-        .orderBy(col("user_id"), col("click_id"), col("win_id"))
-    }),
-
-    "j5_salted_join" -> ((s, dir) => {
-      // J5 — hot-key salted join, oracle-exercised (JoinsSpec pins
-      // equality with the plain join; this runs the REAL operator over
-      // the parquet tables): every third event collapses onto key 1 —
-      // the one-customer-dominates skew that strands a plain shuffle
-      // join's hot partition on a single task. saltedJoin spreads the
-      // hot key across 8 (key, salt) buckets; the dim side replicates
-      // 8×. The rollup checksum is an integer sum — order-exact.
-      val ev = t(s, dir, "events").select(
-        when(col("event_id") % 3 === 0, lit(1L))
-          .otherwise(col("user_id")).as("key"),
-        col("event_id"))
-      val dim = t(s, dir, "customer").select(
-        col("c_custkey").as("key"), col("c_mktsegment"))
-      graft.operators.Joins.saltedJoin(ev, dim, "key", salts = 8,
-          col("event_id"))
-        .groupBy(col("c_mktsegment")).agg(
-          count(lit(1)).as("n"),
-          sum(col("event_id") % 97).as("chk"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    "n1_pagerank" -> ((s, dir) => {
-      // Weighted link rank (beyond the reference): damped random walk
-      // (PageRank, d = 17/20) over the customer↔supplier interaction
-      // graph, 3 fixed iterations. Graph.linkRank keeps every rank a
-      // BIGINT in micro-units — floor-divided per-edge contributions
-      // summed as integers — so the iteration chain is order-exact
-      // on both engines (no float cell anywhere). One iteration = one
-      // hash join + one hash agg on the edge list: the standard
-      // distributed PageRank step, linear in |E| at any scale.
-      // Supplier nodes are NEGATED suppkeys (customers keep their
-      // positive custkeys): sign-disjoint key spaces at any scale
-      // factor, unlike an additive offset a big-enough custkey could
-      // collide with (the n-family convention; oracles replay it).
-      val raw = t(s, dir, "orders").select(
-          col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "lineitem").select(
-          col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (-col("l_suppkey")).as("p"))
-      val edges = raw.select(col("c").as("src"), col("p").as("dst"))
-        .unionAll(raw.select(col("p").as("src"), col("c").as("dst")))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt"))
-      graft.operators.Graph.linkRank(edges, iters = 3)
-        .filter(col("node") < 0L)
-        .select((-col("node")).as("s_suppkey"),
-          col("rank_micro"))
-        .orderBy(col("rank_micro").desc, col("s_suppkey"))
-        .limit(25)
-    }),
-
-    "n2_pagerank_tick" -> ((s, dir) => {
-      // N2 — the INCREMENTAL graph-rank tick (the index-lifecycle
-      // discipline applied to n1): ranks are served from the history
-      // graph; a delta day of orders lands; the refresh WARM-STARTS
-      // from the served table (new nodes at the uniform 10⁶) and runs
-      // only the couple of iterations the new mass needs to propagate
-      // — O(iters·|E|) per tick, never a cold-start over history. All
-      // arithmetic stays on the n1 integer grid, so served, refreshed
-      // and their delta are engine-exact BIGINTs.
-      // both edge sets from ONE orders⋈lineitem pass + ONE (src,dst)
-      // aggregation: the full count and the history-only count ride the
-      // same grouped row, so the tick pays the join exactly once
-      val raw = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "lineitem").select(
-          col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (-col("l_suppkey")).as("p"),
-          (col("o_orderkey") % 17 =!= 0).as("hist"))
-      val both = raw.select(col("c").as("src"), col("p").as("dst"),
-          col("hist"))
-        .unionAll(raw.select(col("p").as("src"), col("c").as("dst"),
-          col("hist")))
-        .groupBy(col("src"), col("dst")).agg(
-          count(lit(1)).as("cnt"),
-          sum(when(col("hist"), 1L).otherwise(0L)).as("cnt_h"))
-        .localCheckpoint(eager = false)
-      val bedges = both.filter(col("cnt_h") > 0)
-        .select(col("src"), col("dst"), col("cnt_h").as("cnt"))
-      val fedges = both.select(col("src"), col("dst"), col("cnt"))
-      val served = graft.operators.Graph.linkRank(bedges, iters = 2)
-        .localCheckpoint(eager = false)
-      graft.operators.Graph.linkRankFrom(fedges, Some(served), iters = 2)
-        .join(served.select(col("node"),
-          col("rank_micro").as("prev_micro")), Seq("node"), "left")
-        .filter(col("node") < 0L)
-        .select((-col("node")).as("s_suppkey"),
-          col("rank_micro"), col("prev_micro"))
-        .orderBy(col("rank_micro").desc, col("s_suppkey"))
-        .limit(25)
-    }),
-
-    "n3_trustrank" -> ((s, dir) => {
-      // N3 — SEEDED trust propagation (TrustRank; beyond the
-      // reference): the n1 damped walk with ALL teleport mass
-      // concentrated on a hand-trusted seed set — customers of the
-      // pinned trustedNations — so a supplier's score measures how
-      // reachable it is FROM trust, not raw link popularity. This is
-      // the whitelist-extension move of source curation: a small
-      // trusted-domain list ranks the whole source graph. Same
-      // integer micro-unit contract as n1 (Graph.trustRank: seed
-      // teleport (150000·|V|) div |S|, floor-divided per-edge shares,
-      // BIGINT sums ⇒ order-exact on both engines); one iteration is
-      // one edge-list join + one hash agg, linear in |E| at any scale.
-      val raw = t(s, dir, "orders").select(
-          col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "lineitem").select(
-          col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (-col("l_suppkey")).as("p"))
-      val edges = raw.select(col("c").as("src"), col("p").as("dst"))
-        .unionAll(raw.select(col("p").as("src"), col("c").as("dst")))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt"))
-      val seeds = t(s, dir, "customer")
-        .join(t(s, dir, "nation"),
-          col("c_nationkey") === col("n_nationkey"))
-        .filter(col("n_name").isin(trustedNations: _*))
-        .select(col("c_custkey").as("node"))
-      graft.operators.Graph.trustRank(edges, seeds, iters = 3)
-        .filter(col("node") < 0L)
-        .select((-col("node")).as("s_suppkey"),
-          col("rank_micro").as("trust_micro"))
-        .orderBy(col("trust_micro").desc, col("s_suppkey"))
-        .limit(25)
-    }),
-
-    "n4_hits" -> ((s, dir) => {
-      // N4 — HITS hubs & authorities (Kleinberg 1999; beyond the
-      // reference): on the DIRECTED customer→supplier interaction
-      // graph, hub score ranks customers by "buys from good
-      // suppliers" and authority ranks suppliers by "bought by good
-      // customers" — the two sides n1's single PageRank score
-      // conflates, and exactly the source-vs-content split a corpus
-      // curator wants on a crawler→domain graph. Graph.hits keeps
-      // every score a BIGINT micro-unit: exact integer half-step
-      // sums, then the integer power-of-sum rescale (a single
-      // engine-exact scalar divisor riding a 1-row broadcast) —
-      // order-exact on both engines, magnitudes bounded at any
-      // iteration count. Two iterations; both top-25s in one output.
-      val raw = t(s, dir, "orders").select(
-          col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "lineitem").select(
-          col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (-col("l_suppkey")).as("p"))
-      val edges = raw.groupBy(col("c").as("src"), col("p").as("dst"))
-        .agg(count(lit(1)).as("cnt"))
-      val hs = graft.operators.Graph.hits(edges, iters = 2)
-        .localCheckpoint(eager = false)
-      val authTop = hs.filter(col("node") < 0L)
-        .select(lit("auth").as("side"),
-          (-col("node")).as("node_key"),
-          col("auth_micro").as("score_micro"))
-        .orderBy(col("score_micro").desc, col("node_key")).limit(25)
-      val hubTop = hs.filter(col("node") > 0L)
-        .select(lit("hub").as("side"), col("node").as("node_key"),
-          col("hub_micro").as("score_micro"))
-        .orderBy(col("score_micro").desc, col("node_key")).limit(25)
-      authTop.unionByName(hubTop)
-        .orderBy(col("side"), col("score_micro").desc, col("node_key"))
-    }),
-
-    "s1_jsonl_roundtrip" -> ((s, dir) => {
-      // S1/S2/S3 — canonical JSONL sink → strict schema-on-read scan →
-      // keyed last-wins merge (the reference's dict-overwrite ingest,
-      // build_simple_dataset.py): two "ingest files" staged with an
-      // explicit order column, revision wins. The oracle computes the
-      // surviving revision directly from documents, so equality proves
-      // the JSONL hop and the last-wins rule end-to-end.
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val rev = d.withColumn("n_chars", col("n_chars") + 1000)
-      val staged = d.withColumn("ord", lit(0L))
-        .unionByName(rev.withColumn("ord", lit(1L)))
-      val out = scratchDir("graft_s1")
-      sources.Jsonl.writeCanonical(staged, out,
-        Seq("doc_id", "lang", "n_chars", "ord"))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id LONG, lang STRING, n_chars LONG, ord LONG")
-      sources.Jsonl.readKeyedLastWins(
-          sources.Jsonl.read(s, out, schema), col("ord"), col("doc_id"))
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "s8_csv_stats_roundtrip" -> ((s, dir) => {
-      // S8/S10 — stage-stats CSV sink + scan round-trip with the T19
-      // score-string parse (data_quality_comparison.py:130-135 →
-      // visualize_improvement.py:21-32): stats table → single headered
-      // CSV → schema-on-read scan → "x/10" parse. The oracle computes
-      // the stats straight from documents, so equality proves the CSV
-      // hop is lossless (Java shortest-round-trip double formatting).
-      val stats = t(s, dir, "documents")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          fround(avg(col("n_chars")) / 100.0, 2).as("score"))
-        .select(col("lang"), col("n_docs"),
-          concat(col("score").cast("string"), lit("/10")).as("score_str"))
-      val out = scratchDir("graft_s8")
-      sources.Reports.writeCsv(stats, out, Seq("lang", "n_docs", "score_str"))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "lang STRING, n_docs LONG, score_str STRING")
-      sources.Reports.readCsv(s, out, schema)
-        .select(col("lang"), col("n_docs"),
-          TF.scoreOfString(col("score_str")).as("score"))
-        .orderBy(col("lang"))
-    }),
-
-    "s9_json_report_roundtrip" -> ((s, dir) => {
-      // S9 — JSON report sink → schema-pinned multiline scan round-trip
-      // (enhance_scoring.py:603-609 pretty-JSON stats dump +
-      // provenance_compliance.py:443-446): per-lang stats → pretty JSON
-      // array on the driver → read back. The oracle computes the stats
-      // directly from documents, so equality proves the JSON hop is
-      // lossless (shortest-round-trip doubles).
-      val stats = t(s, dir, "documents")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          fround(avg(col("n_chars")), 4).as("avg_chars"))
-        .orderBy(col("lang"))
-      val out = scratchDir("graft_s9") + "/report.json"
-      sources.Reports.writeJsonReport(stats, out)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "lang STRING, n_docs LONG, avg_chars DOUBLE")
-      sources.Reports.readJsonReport(s, out, schema)
-        .orderBy(col("lang"))
-    }),
-
-    "v9_store_build" -> ((s, dir) => {
-      // T20/V2 — embedding_text template + vector-store build + parquet
-      // round-trip (rag.ipynb:134-154, 446-486): deterministic
-      // title/authors/abstract derive from the text (same recipe family
-      // as s6/c4), buildStore projects the store row, the store writes
-      // to parquet (the store IS a columnar table here) and reads back.
-      // The oracle recomputes doc_text from scratch, so equality proves
-      // the template and the store hop.
-      val d = t(s, dir, "documents")
-      val e = t(s, dir, "embeddings")
-      val toks = TA.tokens(col("text"))
-      val authors = transform(slice(toks, 1, 3),
-        tk => concat(lit("dr. "), tk))
-      val store = Rag.buildStore(
-        d.join(e, col("doc_id") === col("vec_id")),
-        col("doc_id"), trim(substring(col("text"), 1, 40)), authors,
-        col("text"), col("embedding"))
-      val out = scratchDir("graft_v9")
-      store.write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
-        .select(col("paper_id"),
-          length(col("doc_text")).cast("long").as("doc_chars"),
-          md5(col("doc_text")).as("doc_md5"),
-          col("title"),
-          size(col("embedding")).cast("long").as("dim"))
-        .orderBy(col("paper_id"))
-    }),
-
-    "s7_inverted_index_roundtrip" -> ((s, dir) => {
-      // S7 — abstract reconstruction from an inverted index
-      // (paper_collection.ipynb cell 10): build map<token, positions>
-      // from the first 12 tokens, then invert it back to text with the
-      // one-expression flatten/sort/join pipeline. Round-trip identity =
-      // the oracle just computes the expected prefix directly.
-      // Each stage materializes at a select boundary: lambda-spliced
-      // subexpressions re-evaluate per element, so feeding the raw
-      // tokenizer into the position lambdas would re-tokenize the text
-      // ~|toks|² times per row (this was 18% of the sf0.1 bench).
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), slice(TA.tokens(col("text")), 1, 12).as("t12"))
-      val idx = toks.select(col("doc_id"), map_from_entries(transform(
-        array_distinct(col("t12")),
-        tk => struct(tk, filter(sequence(lit(1), size(col("t12"))),
-          i => element_at(col("t12"), i) === tk)))).as("idx"))
-      val reconstructed = array_join(
-        transform(
-          array_sort(flatten(transform(
-            map_entries(col("idx")),
-            e => transform(e.getField("value"),
-              p => struct(p.as("pos"), e.getField("key").as("w")))))),
-          st => st.getField("w")),
-        " ")
-      idx.select(col("doc_id"), reconstructed.as("prefix_text"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "s6_nested_projection" -> ((s, dir) => {
-      // S6 — OpenAlex-style nested-ingestion projection
-      // (openalex_scraper.py:42-55): authors from array<struct> rows
-      // that HAVE an author sub-struct; fields_of_study from concepts
-      // with level <= 1. The array-of-struct columns are built
-      // deterministically from tokens (every 3rd-length author null,
-      // level = len % 4) so both engines construct identical nests.
-      val toks = TA.tokens(col("text"))
-      val authorships = transform(slice(toks, 1, 4), tk =>
-        struct(
-          when(length(tk) % 3 =!= 0,
-            struct(concat(lit("dr. "), tk).as("display_name"))).as("author"),
-          length(tk).as("len")))
-      val concepts = transform(slice(toks, 5, 6), tk =>
-        struct(tk.as("display_name"), (length(tk) % 4).as("level")))
-      val authors = transform(
-        filter(authorships, a => a.getField("author").isNotNull),
-        a => a.getField("author").getField("display_name"))
-      val fields = transform(
-        filter(concepts, c => c.getField("level") <= 1),
-        c => c.getField("display_name"))
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          array_join(authors, ",").as("authors"),
-          size(authors).cast("long").as("n_authors"),
-          array_join(fields, ",").as("fields"),
-          size(fields).cast("long").as("n_fields"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "v4_tf_embedding" -> ((s, dir) => {
-      // V1 — deterministic TF (bag-of-words) embedding over the global
-      // top-16 vocabulary, L2-normalized (RAG/rag.ipynb:413-436
-      // fallback embedding path). Vocabulary ranking is frequency-desc
-      // with token tie-break; the vector assembles via map lookup so
-      // zero-count dimensions materialize.
-      val d = t(s, dir, "documents")
-      // ONE tokenize: the (doc_id, tok, n) aggregate — far smaller than
-      // the raw exploded tokens — lazily checkpoints, and both the
-      // vocab build and the vectorize read the stored blocks (the d23
-      // discipline; exchange reuse can't do it because column pruning
-      // gives the two consumers different schemas). r16 A/B at sf0.1
-      // vs the two-scan form: median tied (2.18/2.19 s), min 2.08→1.99,
-      // cold first-run 6.0→3.1 s — adopted for the halved tokenize
-      // under driver CPU contention (the r15 v4 regression class).
-      val dtok = d.select(col("doc_id"), explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("n"))
-        .localCheckpoint(false)
-      // Global top-16 via orderBy+limit (TakeOrderedAndProject: partial
-      // per-partition top-k, tiny driver merge) — the rank window then
-      // only ever sees 16 rows, never the whole vocabulary.
-      val vocab = dtok.groupBy(col("tok")).agg(sum(col("n")).as("cnt"))
-        .orderBy(col("cnt").desc, col("tok"))
-        .limit(16)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("cnt").desc, col("tok"))))
-        .select(col("tok"), col("rank"))
-      val counts = dtok.join(broadcast(vocab), "tok")
-        .select(col("doc_id"), col("rank"), col("n"))
-      val vecs = counts.groupBy(col("doc_id"))
-        .agg(map_from_entries(collect_list(struct(col("rank"), col("n")))).as("m"))
-      val tf = transform(sequence(lit(1), lit(16)),
-        r => coalesce(element_at(col("m"), r), lit(0L)))
-      d.join(vecs, Seq("doc_id"), "left")
-        .select(col("doc_id"), VF.normalize(tf).as("v"))
-        .select(col("doc_id"),
-          fround(element_at(col("v"), 1), 6).as("c1"),
-          fround(element_at(col("v"), 2), 6).as("c2"),
-          fround(element_at(col("v"), 3), 6).as("c3"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "a3_histogram" -> ((s, dir) => {
-      // A3 — score histogram: decile buckets of the composite quality
-      // score (enhance_scoring.py:531-535's integer-score distribution).
-      t(s, dir, "documents")
-        .groupBy(floor(TA.qualityScore(col("text")) * 10).cast("long").as("decile"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("decile"))
-    }),
-
-    // ---- D: deduplication -------------------------------------------
-    "d2_exact_dedup_nullkey" -> ((s, dir) => {
-      // D2 — exact-key dedup where NULL keys pass through untouched
-      // (strict_deduplication.py:21-32). Key: lang with 'en' nulled out.
-      val docs = t(s, dir, "documents")
-      Dedup.dedupFirstWins(docs, nullif(col("lang"), lit("en")), col("doc_id"))
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "d3_content_hash_dedup" -> ((s, dir) => {
-      // D3 — md5 content-hash dedup, first-wins by ingest order
-      // (strict_deduplication.py:35-45); keyed on a 20-char prefix so the
-      // synthetic corpus actually collides.
-      val docs = t(s, dir, "documents")
-      Dedup.dedupFirstWins(docs,
-          md5(lower(trim(substring(col("text"), 1, 20)))), col("doc_id"))
-        .select(col("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "d4_jaccard_pairs" -> ((s, dir) => {
-      // D4 — fuzzy near-duplicate pairs by token-set Jaccard ≥ 0.9
-      // (strict_deduplication.py:48-76) via token-blocking join, not O(n²).
-      Dedup.jaccardPairs(t(s, dir, "documents"), col("doc_id"), col("text"), 0.9)
-        .select(col("id_a"), col("id_b"), fround(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "d1_union_dedup" -> ((s, dir) => {
-      // D1 — merge-union dedup across two "files": union preserving an
-      // explicit ingest order, keep first per content key
-      // (merge_jsonl.py:4-25; first-wins needs the order column, SURVEY
-      // §4.2 — dropDuplicates alone is arbitrary-wins).
-      val d = t(s, dir, "documents")
-      val fileA = d.filter(col("doc_id") % 2 === 0).withColumn("file_idx", lit(0L))
-      val fileB = d.withColumn("file_idx", lit(1L))
-      val key = md5(lower(trim(substring(col("text"), 1, 20))))
-      Dedup.dedupFirstWins(
-          fileA.unionByName(fileB),
-          key, col("file_idx") * 1000000L + col("doc_id"))
-        .select(col("doc_id"), col("file_idx"))
-        .orderBy(col("doc_id"), col("file_idx"))
-    }),
-
-    "d6_minhash_lsh" -> ((s, dir) => {
-      // MinHash+LSH near-dup candidates (shingle→minhash→band→bucket
-      // join) with signature-agreement Jaccard estimate — the 100 TB
-      // dedup path (candidates only form inside buckets).
-      Dedup.minhashPairs(t(s, dir, "documents"), col("doc_id"), col("text"))
-        .select(col("id_a"), col("id_b"),
-          fround(col("est_jaccard"), 6).as("est_jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "d7_simhash" -> ((s, dir) => {
-      // SimHash 16-bit fingerprints (md5-derived bit votes) — near-dup
-      // texts land at small Hamming distance; deterministic across
-      // engines. Native expression: one md5 per token (the declarative
-      // twin pays 16; parity pinned in SimHash16Spec).
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.expressions.SimHash16(col("text")).cast("long").as("sh"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- T: text functions ------------------------------------------
-    "d8_stratified_sample" -> ((s, dir) => {
-      // Deterministic per-language corpus rebalancing (beyond the
-      // reference; standard curation need): md5-hash sampling keeps the
-      // same rows regardless of run, partitioning, or cluster size —
-      // en downsamples to 50%, zh to 25%, the tail languages keep 80%.
-      // The filter is a pure scan-fused predicate; the oracle replays
-      // the identical hash arithmetic.
-      Sampling.stratifiedSample(
-          t(s, dir, "documents"),
-          col("lang"), col("doc_id"),
-          Map("en" -> 0.5, "zh" -> 0.25), defaultRate = 0.8, salt = "s42")
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "tc1_decontamination" -> ((s, dir) => {
-      // Benchmark decontamination (beyond the reference): train docs
-      // (id >= 50, grows with SF) probed for 5-token-gram containment
-      // against the eval split (id < 50 — FIXED size at every SF, the
-      // real shape: benchmarks are MBs while the corpus is TBs, so the
-      // eval gram set always broadcasts). The corpus side is one
-      // tokenize→gram→explode_outer scan with a partial-aggregated
-      // per-doc count — corpus text never shuffles.
-      val docs = t(s, dir, "documents")
-      Decontam.contaminationReport(
-          docs.filter(col("doc_id") >= 50),
-          docs.filter(col("doc_id") < 50),
-          col("doc_id"), col("text"), n = 5)
-        .select(col("id").as("doc_id"), col("n_grams"),
-          col("n_matched"), fround(col("contamination"), 6).as("contamination"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "x1_corpus_mix" -> ((s, dir) => {
-      // Temperature-weighted corpus mixing to a 50% token budget
-      // (beyond the reference): per-language keep rates ∝ √tokens,
-      // capped at 1, then the usual deterministic hash cut. Exact
-      // BIGINT sums + one IEEE divide per language = the oracle
-      // replays the rate arithmetic bit-for-bit.
-      Sampling.tokenBudgetMix(
-          t(s, dir, "documents"),
-          col("lang"), col("doc_id"), TA.tokenCount(col("text")),
-          budgetPct = 50, salt = "mix7")
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "x2_epoch_shuffle" -> ((s, dir) => {
-      // Deterministic per-epoch global shuffle (beyond the reference):
-      // the training-order permutation as an epoch-salted hash sort —
-      // reproducible across runs/partitionings, shards uniformly sized
-      // by contiguous hash ranges, per-shard dense positions via a
-      // shard-parallel window (never a global sort).
-      Sampling.epochShuffle(
-          t(s, dir, "documents").select(col("doc_id")),
-          col("doc_id"), epoch = 1, numShards = 8)
-        .select(col("doc_id"), col("shard"), col("pos"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "x3_curriculum" -> ((s, dir) => {
-      // Curriculum serve schedule (beyond the reference; Bengio et al.
-      // 2009): exact score-quantile phases served easy→hard, the
-      // epoch-shuffle permutation within each phase. Easiness here is
-      // doc brevity — score = -(n_tok div 10), the length-curriculum
-      // convention, bucketed to tens so the distinct-score census
-      // stays bounded. The corpus never shuffles for the phase
-      // assignment: the census aggregates distinct scores and the
-      // phase table broadcast-joins back.
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"),
-          TA.tokenCount(col("text")).cast("long").as("n_tok"))
-        .select(col("doc_id"), expr("-(n_tok div 10)").as("sc"))
-      Sampling.curriculumSchedule(d, col("doc_id"), col("sc"),
-          phases = 4, epoch = 1, numShards = 8)
-        .orderBy(col("id"))
-    }),
-
-    "x6_curriculum_sketch" -> ((s, dir) => {
-      // x3's curriculum re-phased from MERGEABLE state (beyond the
-      // reference): phase boundaries from the a15 log-linear sketch of
-      // the easiness score instead of the exact distinct-score census
-      // — the ingest pipeline's sketch rows re-phase the curriculum
-      // after every batch with no history rescan. Deterministic
-      // integer arithmetic end to end ⇒ full DuckDB oracle (bucketing,
-      // bucket census, hash shard, dense rank). Easiness = brevity,
-      // kept non-negative for the sketch domain.
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"),
-          TA.tokenCount(col("text")).cast("long").as("n_tok"))
-        .select(col("doc_id").as("id"),
-          expr("greatest(0L, 200L - (n_tok div 10))").as("sc"))
-      val sketch = Sketches.quantileSketch(d, lit("all"), lit(0L),
-        col("sc"))
-      Sampling.curriculumScheduleFromSketch(d, col("id"), col("sc"),
-          sketch, phases = 4, epoch = 1, numShards = 8)
-        .orderBy(col("id"))
-    }),
-
-    "x7_hard_negatives" -> ((s, dir) => {
-      // Hard-negative mining for retriever training (the DPR/ANCE
-      // recipe, beyond the reference): per query the BM25 rank-1 doc is
-      // the positive and ranks 2-5 are LEXICAL hard negatives — near
-      // the decision boundary, which is what contrastive training
-      // needs; random negatives are too easy. Emits (query, pos, neg,
-      // margin) triples; the margin (score gap to the positive) orders
-      // a curriculum from hardest (smallest gap) up. Post-rank state is
-      // queries×5 rows, so the mine costs one bm25 pass regardless of
-      // corpus size; scores round BEFORE ranking and the margin
-      // subtracts bit-identical doubles on both engines.
-      val d = t(s, dir, "documents")
-      val ranked = Rag.bm25(d, col("doc_id"), col("text"), bm25Queries,
-          bm25K1, bm25B)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("score"), 6).as("score"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("score").desc, col("doc_id"))))
-        .filter(col("rank") <= 5)
-      val pos = ranked.filter(col("rank") === 1)
-        .select(col("query_id"), col("doc_id").as("pos_doc"),
-          col("score").as("pos_score"))
-      ranked.filter(col("rank") > 1)
-        .join(broadcast(pos), "query_id")
-        .select(col("query_id"), col("pos_doc"),
-          col("doc_id").as("neg_doc"), col("rank").as("neg_rank"),
-          fround(col("pos_score") - col("score"), 6).as("margin"))
-        .orderBy(col("query_id"), col("neg_rank"))
-    }),
-
-    "x9_mixture_build" -> ((s, dir) => {
-      // The DoReMi loop CLOSED into the corpus product (the a21
-      // alert→action discipline, for x8): the optimized mixture α
-      // becomes the weight table of the token-budget mix — the budget
-      // allocates ∝ α instead of the √T temperature default — and the
-      // output is the α-built corpus's per-language doc/token tally
-      // alongside the α that drove it. The whole chain (count model →
-      // multiplicative ticks → thr → keyHash keep) is exact integers,
-      // detexp, and one divide, so the oracle replays the BUILD, not
-      // just the weights.
-      val d = t(s, dir, "documents")
-      val alpha = Sampling.domainReweight(d, col("lang"), col("text"),
-          buckets = x8Buckets, eta = x8Eta, iters = x8Iters)
-        .select(col("d").as("stratum"), col("alpha"))
-      val toks = d.select(col("doc_id"), col("lang"),
-        TA.tokenCount(col("text")).cast("long").as("n_tok"))
-      Sampling.mixByWeights(toks, col("lang"), col("doc_id"),
-          col("n_tok"), alpha, remixBudgetPct, "x9")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_toks"))
-        .join(broadcast(alpha.select(col("stratum").as("lang"),
-          col("alpha"))), Seq("lang"))
-        .orderBy(col("lang"))
-    }),
-
-    "x8_domain_reweight" -> ((s, dir) => {
-      // DoReMi-style mixture optimization (Xie et al. 2023; beyond the
-      // reference): multiplicative-weights updates on the per-language
-      // mixture, α ← normalize(α·detexp(η·TV_d)), where TV_d is the
-      // domain's total-variation distance from the CURRENT α-mixture
-      // over hashed-unigram distributions — worst-case-domain emphasis
-      // with a proxy-free deterministic signal. One corpus token pass
-      // builds the (domain, bucket) model table; all 5 iterations are
-      // arithmetic over it (corpus never rescanned). TV/α round 6dp
-      // per tick and the exponential is detexp, so the unrolled oracle
-      // replays the fit bit-for-bit.
-      Sampling.domainReweight(t(s, dir, "documents"), col("lang"),
-          col("text"), buckets = x8Buckets, eta = x8Eta, iters = x8Iters)
-        .select(col("d").as("lang"), col("n_tok"), col("tv"), col("alpha"))
-        .orderBy(col("lang"))
-    }),
-
-    "x5_dsir_token_resample" -> ((s, dir) => {
-      // The published DSIR recipe end-to-end (Xie et al. 2023): fit the
-      // importance weights (tq2), resample by Efraimidis–Spirakis key
-      // (tq5) — but stop at a TOKEN budget (25% of corpus tokens), the
-      // paper's actual target, not a row count. The cut decomposes
-      // into a census over the bounded rounded-key spine plus a
-      // within-key prefix sum (never a global corpus sort); output
-      // rows carry start_tok, so the selection IS the serve schedule.
-      // The KEYED weights stage to scratch first (the g10/tq7
-      // discipline): the budget cut consumes the keyed frame three
-      // times (census, total, prefix), and staging runs the tokenize-
-      // heavy fit AND the md5+sqrt-chain key projection once — at
-      // 100 TB both are tq2-style landed artifacts anyway.
-      // r13: the whole ranked chain is BIGINT — logratio rides as
-      // micro units and the key computes via the SelKeyFixed integer
-      // kernels, so no float cell (or engine float behavior) is left
-      // anywhere in this query's lineage past the 6dp quantization.
-      val staged = scratchDir("graft_x5")
-      Sampling.withSelectionKeyLogW(dsirMicroFrame(s, dir),
-          col("doc_id"), lit(2L) * col("logratio_micro"), "dsir")
-        .write.mode("overwrite").parquet(staged)
-      Sampling.tokenBudgetCut(s.read.parquet(staged), col("doc_id"),
-          col("n_tok"), budgetPct = 25)
-        .select(col("doc_id"), col("n_tok"), col("logratio_micro"),
-          col("sel_key"), col("start_tok"))
-        .orderBy(col("sel_key"), col("doc_id"))
-    }),
-
-    "x10_temperature_mix" -> ((s, dir) => {
-      // Temperature-resampled multilingual mix (XLM-R/mT5, α = 0.3;
-      // beyond the reference): per-language share ∝ n^α via
-      // detexp(α·detln(n)), quantized to BIGINT micro-weights so the
-      // normalizer is an exact integer sum; each language contributes
-      // EXACTLY (250·wq) div Σwq docs in salted-hash order — the
-      // exact-count complement of x1's rate-based √tokens mix. Every
-      // selection comparison is integer; the oracle replays detln,
-      // detexp, the dyadic quantize, and the integer allocation.
-      Sampling.temperatureMix(t(s, dir, "documents"), col("lang"),
-          col("doc_id"), alpha = 0.3, target = 250, salt = "tm12")
-        .select(col("id").as("doc_id"), col("stratum").as("lang"),
-          col("lrank"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "x11_softdedup_resample" -> ((s, dir) => {
-      // SoftDeDup-style frequency-downweighted resample (beyond the
-      // reference; the "don't delete duplicates, downweight them"
-      // alternative to d14's keep-one): every doc weighs 1/|its
-      // near-dup cluster|, so each cluster's TOTAL selection mass is
-      // one doc's worth regardless of how many crawls re-captured it —
-      // repeated pages stop dominating the training mix without the
-      // information loss of hard deletion. The weight is exact on the
-      // integer key grid: m = ⌊2²⁰/(1/c)+½⌋ = c·2²⁰ exactly for every
-      // cluster size c ≤ 64 (SamplingSpec pins this), so sel_key
-      // stays pure BIGINT arithmetic end to end. Scale shape: d14's
-      // banded clustering + one broadcast-joined size table + the
-      // scan-fused key projection; top-k plans as
-      // TakeOrderedAndProject, never a global sort.
-      Sampling.weightedSample(
-          Dedup.dupClusters(
-            t(s, dir, "documents").select(col("doc_id"), col("text")),
-            col("doc_id"), col("text"), threshold = 0.5),
-          col("doc_id"),
-          lit(1.0) / col("cluster_size").cast("double"),
-          k = 200, salt = "sd12")
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-          col("sel_key"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "x13_span_corruption" -> ((s, dir) => {
-      // X13 — T5/UL2-style denoising-span corruption (Raffel et al.
-      // 2020 §3.1.4; beyond the reference): each doc's token stream is
-      // rewritten into the (corrupted, targets) sentinel pair a
-      // span-corruption pretraining objective consumes — 2-token spans
-      // at a deterministic stride-13 phase keyed by doc_id (≈15% mask
-      // rate), sentinels <extra_id_k> in span order. Pure positional
-      // integer arithmetic (span starts = positions with
-      // (i+doc_id) % 13 == 0), so BOTH membership and the sentinel
-      // index k are O(1) stride arithmetic per position — k(i) =
-      // (i − f0)/13 with f0 = pmod(−doc_id, 13) the first start (the
-      // quotient is an exact non-negative integer ≪ 2⁵³, so the
-      // double divide is bit-exact) — never an array_contains /
-      // array_position scan of the span list, which would cost
-      // O(n·|spans|) ≈ O(n²/13) per doc and let a few long docs
-      // dominate. No hash, no float cell, both strings byte-identical
-      // on any engine. Scale shape: one tokenize + one scan-fused
-      // projection per row; nothing shuffles but the final sort.
-      t(s, dir, "documents")
-        .select(col("doc_id"), TA.tokens(col("text")).as("toks"))
-        .withColumn("n", size(col("toks")).cast("long"))
-        .filter(col("n") >= 1L)
-        .withColumn("f0", pmod(lit(0L) - col("doc_id"), lit(13L)))
-        .withColumn("ss", filter(sequence(lit(0L), col("n") - 1),
-          i => pmod(i + col("doc_id"), lit(13L)) === 0L))
-        .select(col("doc_id"), col("n").as("n_tokens"),
-          size(col("ss")).cast("long").as("n_spans"),
-          size(filter(sequence(lit(0L), col("n") - 1), i =>
-            (pmod(i + col("doc_id"), lit(13L)) === 0L) ||
-              (i > 0L && pmod(i - 1 + col("doc_id"), lit(13L)) === 0L)))
-            .cast("long").as("n_masked"),
-          array_join(filter(transform(sequence(lit(0L), col("n") - 1),
-            i => when(pmod(i + col("doc_id"), lit(13L)) === 0L,
-                concat(lit("<extra_id_"),
-                  ((i - col("f0")) / lit(13.0)).cast("long")
-                    .cast("string"),
-                  lit(">")))
-              .when(i > 0L &&
-                  pmod(i - 1 + col("doc_id"), lit(13L)) === 0L,
-                lit(null).cast("string"))
-              .otherwise(element_at(col("toks"), (i + 1).cast("int")))),
-            x => x.isNotNull), " ").as("corrupted"),
-          array_join(transform(col("ss"), i =>
-            concat_ws(" ",
-              concat(lit("<extra_id_"),
-                ((i - col("f0")) / lit(13.0)).cast("long")
-                  .cast("string"),
-                lit(">")),
-              element_at(col("toks"), (i + 1).cast("int")),
-              when(i + 1 < col("n"),
-                element_at(col("toks"), (i + 2).cast("int"))))),
-            " ").as("targets"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "x14_fim_split" -> ((s, dir) => {
-      // X14 — fill-in-the-middle transform (Bavarian et al. 2022;
-      // beyond the reference; x13's sibling for the code-pretraining
-      // objective): each doc's token stream splits into
-      // prefix/middle/suffix at deterministic doc-keyed positions and
-      // re-emits in PSM order with sentinels — the rearrangement that
-      // teaches infilling without architecture changes. Pure integer
-      // positional arithmetic (`div`/pmod on BIGINTs); docs under 4
-      // tokens pass through unchanged with is_fim = false. One
-      // tokenize + one scan-fused projection; nothing shuffles but
-      // the final sort.
-      t(s, dir, "documents")
-        .select(col("doc_id"), TA.tokens(col("text")).as("toks"))
-        .withColumn("n", size(col("toks")).cast("long"))
-        .withColumn("is_fim", col("n") >= 4L)
-        .withColumn("ms",
-          when(col("is_fim"), expr("(n div 4) + pmod(doc_id, 3)"))
-            .otherwise(lit(0L)))
-        .withColumn("ml",
-          when(col("is_fim"), expr("greatest(1L, n div 5)"))
-            .otherwise(lit(0L)))
-        .select(col("doc_id"), col("n").as("n_tokens"), col("is_fim"),
-          col("ms").as("m_start"), col("ml").as("m_len"),
-          when(col("is_fim"), concat(
-              lit("<PRE> "),
-              array_join(slice(col("toks"), lit(1),
-                col("ms").cast("int")), " "),
-              lit(" <SUF> "),
-              array_join(slice(col("toks"),
-                (col("ms") + col("ml") + 1L).cast("int"),
-                (col("n") - col("ms") - col("ml")).cast("int")), " "),
-              lit(" <MID> "),
-              array_join(slice(col("toks"), (col("ms") + 1L).cast("int"),
-                col("ml").cast("int")), " ")))
-            .otherwise(array_join(col("toks"), " ")).as("psm"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "x15_sequence_pack" -> ((s, dir) => {
-      // X15 — GPT-style concat-and-chunk sequence packing (Brown et
-      // al. 2020 §2.1; beyond the reference): the corpus concatenates
-      // in doc_id order into ONE token stream chunked into 512-token
-      // training sequences; each doc's placement — global start_tok,
-      // the sequences it intersects (a doc may CROSS a boundary,
-      // unlike g2/x1's starts-in-bin rollup), in-sequence offset —
-      // is exactly what a causal-LM loader consumes. All cells
-      // BIGINT/boolean. Zero-token docs place nothing and are
-      // filtered (both engines). Scale shape: packedStartsBucketed's
-      // two-pass summary-carry prefix sum (never a corpus-wide
-      // single-partition window) + the packedSpans pure projection.
-      Packing.packedSpans(
-          Packing.packedStartsBucketed(
-            t(s, dir, "documents")
-              .select(col("doc_id"),
-                TA.tokenCount(col("text")).as("n_tok"))
-              .filter(col("n_tok") >= 1),
-            lit("all"), col("doc_id"), col("n_tok"),
-            bucketWidth = 4096L),
-          seqLen = 512L)
-        .select(col("doc_id"), col("n_tok"), col("start_tok"),
-          col("seq_first"), col("seq_last"), col("off_in_seq"),
-          col("crosses"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "x16_pack_fragmentation" -> ((s, dir) => {
-      // X16 — attention-fragmentation census over x15's packing: how
-      // many documents each 512-token training sequence mixes (every
-      // boundary crossing puts unrelated text in one attention window
-      // — the stat behind boundary-aware attention masking). Bounded
-      // (n_docs, n_seqs) histogram; the per-doc explode is linear in
-      // corpus_tokens/512.
-      Packing.packFragmentation(Packing.packedSpans(
-          Packing.packedStartsBucketed(
-            t(s, dir, "documents")
-              .select(col("doc_id"),
-                TA.tokenCount(col("text")).as("n_tok"))
-              .filter(col("n_tok") >= 1),
-            lit("all"), col("doc_id"), col("n_tok"),
-            bucketWidth = 4096L),
-          seqLen = 512L))
-        .orderBy(col("n_docs"))
-    }),
-
-    "x17_cusum_alarm" -> ((s, dir) => {
-      // X17 — CUSUM sequential drift alarm (Page 1954; beyond the
-      // reference): the classical minimal-detection-delay companion to
-      // a20's per-snapshot KS test — KS asks "is today's distribution
-      // different?", CUSUM accumulates SMALL sustained shifts across
-      // days until the evidence crosses a threshold, catching slow
-      // feed rot a daily snapshot test never flags. Per event type:
-      // daily mean value in micro units, baseline μ0 = first-7-day
-      // mean, slack k = μ0/20, two one-sided statistics via the
-      // prefix-sum identity S_t = P_t − min(0, min_{j≤t} P_j) (the
-      // max(0, S+d) recursion without recursion) — two stacked window
-      // passes over a BOUNDED (type × day) table, everything BIGINT
-      // so every cell is order-exact on both engines. Alarm when
-      // S ≥ μ0. Scale shape: the corpus-sized work is one map-side-
-      // combined daily aggregate; the CUSUM itself runs on days ×
-      // types rows.
-      cusumFromDaily(t(s, dir, "events")
-        .groupBy(col("event_type"),
-          unix_micros(date_trunc("day", col("ts"))).as("day_us"))
-        .agg(expr(floorDiv(
-          "sum(cast(floor(value * 1e6 + 0.5) as bigint))", "count(*)"))
-          .as("mean_micro")))
-    }),
-
-    // The r13 x5 bisect diagnostics (x5da–x5de) lived here until x5
-    // was driver-green a full round (CORRECTNESS_r14); removed per
-    // their own retirement clause. tq2/tq5 remain x5's standing
-    // upstream controls.
-
-    "tc2_split_leakage" -> ((s, dir) => {
-      // TC2 — split-leakage census (beyond the reference; the
-      // DIAGNOSTIC x4's cluster-keyed split exists to prevent): under
-      // a naive doc-keyed 90/10 train/val cut, how many val docs share
-      // a near-dup cluster with at least one train doc — eval content
-      // a model effectively trains on, the contamination that survives
-      // dedup-aware pipelines when the SPLIT ignores the clusters they
-      // paid to find. Per-language: val docs, leaky val docs, leaky
-      // clusters. Scale shape: d14's banded clustering + one
-      // cluster-spine aggregate + one equi-join back — no new
-      // corpus-scale shuffles beyond the labeling's own.
-      val labeled = Dedup.dupClusters(
-          t(s, dir, "documents")
-            .select(col("doc_id"), col("lang"), col("text")),
-          col("doc_id"), col("text"), threshold = 0.5)
-        .withColumn("split",
-          when(Sampling.keyHash(col("doc_id"), "sl13") <
-            Sampling.threshold(0.9), "train").otherwise("val"))
-      val trainPerCluster = labeled.groupBy(col("cluster_id")).agg(
-        sum(when(col("split") === "train", 1L).otherwise(0L))
-          .as("n_train"))
-      labeled.filter(col("split") === "val")
-        .join(trainPerCluster, "cluster_id")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_val"),
-          sum(when(col("n_train") > 0, 1L).otherwise(0L))
-            .as("n_val_leaky"),
-          countDistinct(when(col("n_train") > 0, col("cluster_id")))
-            .as("n_leaky_clusters"))
-        .orderBy(col("lang"))
-    }),
-
-    "tc3_memorization_probe" -> ((s, dir) => {
-      // TC3 — verbatim-memorization risk census (Carlini et al. 2021's
-      // extraction surface, measured at the DATA level; tc2's
-      // complement): under the same naive doc-keyed 90/10 cut, how
-      // many val docs contain a token n-gram that appears verbatim in
-      // ANY train doc, at n ∈ {4, 8, 16} — a val doc matching a
-      // 16-gram is effectively evaluated on memorized training text
-      // even when no whole-doc near-dup exists. On this corpus the 4
-      // de val docs tc2 flags as cluster-leaky also match full
-      // 16-grams (near-verbatim), while most other langs stop at the
-      // 4-gram level — the two censuses tell one story. Scale shape:
-      // the tokenized split STAGES once to scratch (seven consumers);
-      // per n, train grams dedup into a gram spine and val grams
-      // LEFT SEMI probe it — a hash join banded by n (at 100 TB the
-      // gram spine is the landed n-gram index tc1's decontamination
-      // already maintains; no pairwise scan anywhere). Grams travel
-      // as xxhash64 LONGS, never strings (the d12/d16 precedent,
-      // Decontam.tokenNgramHashesFromTokens): a string 16-gram spine
-      // is ~16× corpus token bytes on the wire, the hashed spine is
-      // 8 bytes/key. Hash-membership equals string-membership up to
-      // the documented 2⁻⁶⁴ collision bound; the oracle joins the
-      // gram STRINGS, so the bound is independently checked end to
-      // end, exactly as d16 does.
-      val staged = scratchDir("graft_tc3")
-      // NO Frames.fan on this staging front (r17 A/B revert): the r16
-      // fan tokenized in parallel and landed a multi-file stage, but
-      // the loaded-window A/B measured it at 3.3-3.6 s vs 2.8-3.1 s
-      // without, with executor runMs inflated ~15× (53-82 s vs 4-6 s)
-      // — at this corpus size the seven gram consumers' own shuffles
-      // parallelize the n-gram work regardless, so the fan only
-      // multiplied task-scheduling constants (the exact g4 signature
-      // the r16 COVERAGE fan bullet recorded). A 100 TB documents
-      // source is multi-file and parallel from the scan.
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          TA.tokens(col("text")).as("_tk"),
-          when(Sampling.keyHash(col("doc_id"), "sl13") <
-            Sampling.threshold(0.9), "train").otherwise("val").as("split"))
-        .write.mode("overwrite").parquet(staged)
-      val dd = s.read.parquet(staged)
-      def grams(n: Int) = dd.select(col("doc_id"), col("split"),
-        explode(operators.Decontam.tokenNgramHashesFromTokens(
-          col("_tk"), n)).as("g"))
-      def hits(n: Int) = grams(n).filter(col("split") === "val")
-        .join(grams(n).filter(col("split") === "train")
-          .select(col("g")).distinct(), Seq("g"), "left_semi")
-        .select(col("doc_id")).distinct()
-        .withColumn(s"hit$n", lit(1L))
-      dd.filter(col("split") === "val").select(col("doc_id"), col("lang"))
-        .join(hits(4), Seq("doc_id"), "left")
-        .join(hits(8), Seq("doc_id"), "left")
-        .join(hits(16), Seq("doc_id"), "left")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_val"),
-          sum(coalesce(col("hit4"), lit(0L))).as("n_hit4"),
-          sum(coalesce(col("hit8"), lit(0L))).as("n_hit8"),
-          sum(coalesce(col("hit16"), lit(0L))).as("n_hit16"))
-        .orderBy(col("lang"))
-    }),
-
-    "x4_cluster_split" -> ((s, dir) => {
-      // Leakage-safe train/val/test split (beyond the reference): the
-      // cut is keyed by the d14 NEAR-DUP CLUSTER label, not the doc id,
-      // so a near-duplicate pair can never straddle the split — the
-      // train/eval contamination that doc-keyed splits silently
-      // reintroduce after dedup-aware pipelines paid to find the pairs.
-      // The split itself is a scan-fused when-chain over the labeled
-      // frame: zero exchanges beyond the labeling's own.
-      Sampling.clusterSplit(
-          Dedup.dupClusters(
-            t(s, dir, "documents").select(col("doc_id"), col("text")),
-            col("doc_id"), col("text"), threshold = 0.5),
-          col("cluster_id"), x4Cuts, x4Salt)
-        .select(col("doc_id"), col("cluster_id"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "d9_incremental_dedup" -> ((s, dir) => {
-      // Incremental new-batch-vs-corpus dedup (beyond the reference):
-      // the corpus key set folds ONCE into a Bloom filter (treeAggregate,
-      // no shuffle), the batch scan probes it per row inside codegen, and
-      // only the "maybe seen" sliver takes the exact anti-join — the
-      // daily-crawl-vs-100 TB-corpus shape. Result is exactly
-      // batch ANTI JOIN corpus for any fpp (bloom has no false
-      // negatives; positives re-check exactly), which is what the
-      // oracle replays.
-      val docs = t(s, dir, "documents")
-      val corpus = Sampling.hashSample(docs, col("doc_id"), 0.6, "corp")
-      val batch = Sampling.hashSample(docs, col("doc_id"), 0.5, "newb")
-        .select(col("doc_id"), col("lang"))
-      Dedup.incrementalDedup(batch, corpus, "doc_id",
-          expectedItems = 100000, fpp = 0.01)
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta8_unigram_logprob" -> ((s, dir) => {
-      // Corpus-unigram LM score (beyond the reference): frequency-
-      // weighted mean ln P(token) under the corpus's own unigram
-      // distribution — the cheap KenLM-seat fluency signal of
-      // CCNet/Gopher quality stacks. Tokens collapse to per-doc
-      // (token, count) before the vocabulary join, so the shuffle
-      // moves the distinct footprint, not every occurrence; the
-      // corpus total rides along as a broadcast scalar.
-      val d = t(s, dir, "documents")
-      TA.unigramLogProb(d, col("doc_id"), col("text"))
-        .select(col("doc_id"), col("n_tok"),
-          fround(col("avg_logprob"), 6).as("logprob"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta11_bigram_logprob" -> ((s, dir) => {
-      // Interpolated corpus-bigram LM fluency (beyond the reference;
-      // the order-2 upgrade of ta8): one tokenization, one bigram
-      // count table, both marginals derived from it, λ=0.75 backoff to
-      // the continuation marginal.
-      TA.bigramLogProb(t(s, dir, "documents"), col("doc_id"), col("text"))
-        .select(col("doc_id"), col("n_big"),
-          fround(col("avg_logprob"), 6).as("logprob"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "a19_token_overlap" -> ((s, dir) => {
-      // Cross-strata vocabulary overlap by HLL SET ALGEBRA (beyond the
-      // reference): |A∩B| ≈ est(A) + est(B) − est(A∪B) over the same
-      // mergeable sketches a14 maintains — the "how much vocabulary do
-      // two languages/sources share" matrix WITHOUT a vocab-level
-      // join: raw tokens are touched once (one map-side-combined
-      // sketch per stratum), the pair matrix is sketch-bytes algebra
-      // over #strata² tiny rows. Driver-checkable core (r9 verdict):
-      // the exact overlap runs alongside at test SF and the output is
-      // (exact_overlap, within_tol) — the sketch estimate still drives
-      // within_tol, so the gate fails if sketch accuracy regresses
-      // (tolerance = 10% of the exact union, the SketchesSpec
-      // compounded-error bound); at 100 TB only the sketch path runs.
-      val docs = t(s, dir, "documents")
-      val sk = docs
-        .select(col("lang"), explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy(col("lang"))
-        .agg(expr("hll_sketch_agg(tok, 12)").as("sk"))
-      val a = sk.select(col("lang").as("lang_a"), col("sk").as("ska"))
-      val b = sk.select(col("lang").as("lang_b"), col("sk").as("skb"))
-      val est = a.join(b, col("lang_a") < col("lang_b"))
-        .select(col("lang_a"), col("lang_b"),
-          expr("hll_sketch_estimate(ska)").as("est_a"),
-          expr("hll_sketch_estimate(skb)").as("est_b"),
-          expr("hll_sketch_estimate(hll_union(ska, skb))").as("est_union"))
-        .withColumn("est_overlap",
-          greatest(lit(0L), col("est_a") + col("est_b") - col("est_union")))
-      val vocab = docs
-        .select(col("lang"), explode(TA.tokens(col("text"))).as("tok"))
-        .distinct()
-      val nv = vocab.groupBy(col("lang")).agg(count(lit(1)).as("nv"))
-      val exact = vocab.as("x")
-        .join(vocab.as("y"),
-          col("x.tok") === col("y.tok") && col("x.lang") < col("y.lang"))
-        .groupBy(col("x.lang").as("lang_a"), col("y.lang").as("lang_b"))
-        .agg(count(lit(1)).as("exact_overlap"))
-      est
-        .join(broadcast(exact), Seq("lang_a", "lang_b"), "left")
-        .join(broadcast(nv.select(col("lang").as("lang_a"),
-          col("nv").as("_na"))), Seq("lang_a"))
-        .join(broadcast(nv.select(col("lang").as("lang_b"),
-          col("nv").as("_nb"))), Seq("lang_b"))
-        .withColumn("exact_overlap", coalesce(col("exact_overlap"), lit(0L)))
-        .select(col("lang_a"), col("lang_b"), col("exact_overlap"),
-          (abs(col("est_overlap") - col("exact_overlap")) <=
-            (col("_na") + col("_nb") - col("exact_overlap")) * lit(0.10))
-            .as("within_tol"))
-        .orderBy(col("lang_a"), col("lang_b"))
-    }),
-
-    "a20_ks_drift" -> ((s, dir) => {
-      // Two-sample Kolmogorov–Smirnov length-drift per lang vs the 'en'
-      // reference (Sketches.ksDistance): sup |F_lang − F_en| over the
-      // per-doc token-count distribution — the shape test ta14's JS
-      // divergence can't give (JS sees vocabulary, KS sees any scalar's
-      // whole CDF). Token count is integer ⇒ the merged value axis is
-      // bounded and the statistic is exact in both engines.
-      val d = t(s, dir, "documents")
-      Sketches.ksDistance(d, col("lang"), TA.tokenCount(col("text")), "en")
-        .select(col("stratum").as("lang"), col("n"),
-          fround(col("ks"), 6).as("ks"))
-        .orderBy(col("lang"))
-    }),
-
-    "a21_drift_remix" -> ((s, dir) => {
-      // The a20 alert CLOSED into an action (r9 verdict task 3): the
-      // same persisted (stratum, v, c) distribution state both raises
-      // the Smirnov alarm and re-derives the breached stratum's
-      // token-budget mix rate (T = Σ v·c feeds the x1 rate formula);
-      // undrifted strata keep their currently-served rate. Served
-      // rates are simulated from an earlier ingest prefix
-      // (doc_id % 4 ≠ 3) of the same corpus; at this corpus/α one
-      // stratum breaches and the rest hold — both branches land in the
-      // oracle-checked output. Everything runs on the bounded
-      // distribution axis: no corpus rescan, no corpus shuffle.
-      val d = t(s, dir, "documents").filter(col("text").isNotNull)
-      val cur = Sketches.distributionCounts(d, col("lang"),
-        TA.tokenCount(col("text")))
-      val prev = Sampling.ratesFromDistribution(
-        Sketches.distributionCounts(
-          d.filter(pmod(col("doc_id"), lit(4)) =!= 3), col("lang"),
-          TA.tokenCount(col("text"))), remixBudgetPct)
-      Sampling.driftGatedRates(cur, prev, "en", remixBudgetPct, remixAlpha)
-        .select(col("stratum").as("lang"), col("n"),
-          fround(col("ks"), 6).as("ks"), col("breached"), col("thr"))
-        .orderBy(col("lang"))
-    }),
-
-    "a22_psi_drift" -> ((s, dir) => {
-      // A22 — Population Stability Index per language vs 'en' (the
-      // model-monitoring industry standard next to a20's KS and ta14's
-      // JS): Σ (p−q)·ln(p/q) over integer log₂ length buckets, add-1
-      // smoothed on the corpus-wide axis, PSI ≥ 0.2 = the conventional
-      // "significant shift" flag. Order-exact by the ta14 discipline
-      // (DetLnD terms on the 2⁻⁴⁰ grid); everything past one
-      // map-side-combined bucket count runs on strata × ~60 rows.
-      Sketches.psiDrift(t(s, dir, "documents"), col("lang"),
-          TA.tokenCount(col("text")), "en")
-        .select(col("stratum").as("lang"), col("n_rows").as("n_docs"),
-          fround(col("psi"), 6).as("psi"))
-        .withColumn("drifted", col("psi") > lit(0.2))
-        .orderBy(col("lang"))
-    }),
-
-    "ta18_boilerplate_scrub" -> ((s, dir) => {
-      // C4/jusText-style line-level boilerplate removal (Raffel et al.
-      // 2020 §2.2; beyond the reference): keep lines with ≥3 tokens
-      // AND ≥10% stopword share — prose survives, navigation/footer/
-      // menu junk drops. The corpus has no newlines, so lined text
-      // synthesizes from (text, doc_id) identically on both sides
-      // (the d13/c1 injection precedent): a real-prose head slice
-      // (data-dependent verdict), a stopword-free boilerplate line
-      // (always dropped), a stopword-rich summary line (always kept),
-      // and a short crumb (dropped by min-words/density). Output: the
-      // per-lang keep census + mean kept-character share; the share
-      // quantizes onto the 2^-40 grid (the ta14 pattern) so the
-      // cross-doc mean is an exact integer sum + one divide — no
-      // order-dependent float accumulation.
-      val lined = t(s, dir, "documents").select(col("lang"),
-        concat_ws("\n",
-          substring(coalesce(col("text"), lit("")), 1, 120),
-          lit("copyright footer navigation menu links contact"),
-          concat(lit("the summary of the row "),
-            col("doc_id").cast("string")),
-          lit("nav | nav")).as("lt"))
-      val scrubbed = lined.select(col("lang"), col("lt"),
-        TA.keptLines(col("lt"), 3, 0.1).as("kl"))
-      scrubbed.select(col("lang"),
-          size(split(col("lt"), "\n")).as("nin"),
-          size(col("kl")).as("nkept"),
-          floor(when(length(col("lt")) > 0,
-            length(array_join(col("kl"), "\n")).cast("double") /
-              length(col("lt")).cast("double")) *
-            lit(graft.expressions.DetLn.TermGrid) + lit(0.5))
-            .cast("long").as("rq"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("nin")).as("n_lines_in"),
-          sum(col("nkept")).as("n_lines_kept"),
-          fround(sum(col("rq")).cast("double") /
-            (lit(graft.expressions.DetLn.TermGrid) *
-              count(col("rq")).cast("double")), 6).as("avg_kept_chars"))
-        .orderBy(col("lang"))
-    }),
-
-    "ta20_readability" -> ((s, dir) => {
-      // Flesch reading ease + Flesch-Kincaid grade (Flesch 1948;
-      // Kincaid et al. 1975; beyond the reference): the classic
-      // shallow readability pair over W (\w+ words), S (sentence
-      // chunks), Y ([aeiouy]+ vowel-group syllable proxy). The three
-      // counts are integers; the scores are PER-ROW IEEE arithmetic
-      // over identical literal trees (nothing aggregates, so no
-      // summation order exists), 6dp-floored; missing denominators
-      // propagate NULL into an 'unscored' bucket, and the difficulty
-      // label compares the ROUNDED score so it is grid-stable.
-      val c = t(s, dir, "documents").select(col("doc_id"),
-        TF.wordCount(col("text")).cast("long").as("n_words"),
-        TF.sentenceCount(col("text")).cast("long").as("n_sents"),
-        TA.syllableCount(col("text")).cast("long").as("n_syll"))
-      val wps = when(col("n_sents") > 0,
-        col("n_words").cast("double") / col("n_sents").cast("double"))
-      val spw = when(col("n_words") > 0,
-        col("n_syll").cast("double") / col("n_words").cast("double"))
-      c.select(col("doc_id"), col("n_words"), col("n_sents"),
-          col("n_syll"),
-          fround(lit(206.835) - lit(1.015) * wps - lit(84.6) * spw, 6)
-            .as("fre"),
-          fround(lit(0.39) * wps + lit(11.8) * spw - lit(15.59), 6)
-            .as("fk_grade"))
-        .withColumn("difficulty",
-          when(col("fre").isNull, lit("unscored"))
-            .when(col("fre") >= 90.0, lit("very_easy"))
-            .when(col("fre") >= 60.0, lit("standard"))
-            .when(col("fre") >= 30.0, lit("difficult"))
-            .otherwise(lit("very_difficult")))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta21_code_detect" -> ((s, dir) => {
-      // Code-vs-prose detection (beyond the reference): the standard
-      // pretraining-mix router — code that leaks into a prose corpus
-      // (or vice versa) distorts both distributions, so pipelines gate
-      // on cheap symbol/keyword densities before any model-based
-      // classifier. The corpus is prose, so every doc_id % 4 == 0 doc
-      // gets a literal code block appended on BOTH engines (the d13
-      // injection precedent). Signals: one character-class count of
-      // code-dense symbols {}();=, whole-token keyword hits, and an
-      // INTEGER density sym_micro = (n_sym·10⁶) div n_chars — every
-      // cell integer or boolean, nothing to flake. Scale shape: pure
-      // scan-fused per-row projection; zero exchanges before the
-      // verify sort.
-      val codeBlk = lit(" def main ( ) { return 0 ; } import sys ; " +
-        "class foo { var x = 1 ; if ( x ) { x = x + 1 ; } }")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(4)) === 0,
-            concat(col("text"), codeBlk)).otherwise(col("text")).as("text"))
-        .select(col("doc_id"),
-          length(col("text")).cast("long").as("n_chars"),
-          TA.codeSymbolCount(col("text")).cast("long").as("n_sym"),
-          TA.markerHits(col("text"), TA.codeKeywords).cast("long")
-            .as("kw_hits"))
-        .withColumn("sym_micro",
-          expr("case when n_chars > 0 then (n_sym * 1000000) div n_chars" +
-            " else 0 end"))
-        .withColumn("is_code",
-          col("sym_micro") >= 20000 || col("kw_hits") >= 5)
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta22_gopher_rules" -> ((s, dir) => {
-      // TA22 — the Gopher quality-rule bundle (Rae et al. 2021,
-      // Appendix A1.1; beyond the reference): word-count bounds, mean
-      // word length, symbol-to-word ratio, alpha-word share, required
-      // stopwords, bullet-start and ellipsis-end line shares — the
-      // canonical heuristic pre-filter every LLM corpus runs before
-      // model-based gates. Every flag is a multiplication-form INTEGER
-      // compare over TA.gopherCounts/gopherLineCounts (no division, no
-      // float — order-exact on both engines). Docs are synthesized
-      // into lined text so every rule has live positives: doc_id % 11
-      // docs become all-bullet stubs (bullet/ellipsis/word-count rules
-      // fire), the rest carry prose plus doc-varied bullet/ellipsis/
-      // symbol lines.
-      val raw = t(s, dir, "documents")
-      val lined = when(col("doc_id") % 11 === 0,
-          lit("- only\n- bullets...\n- here"))
-        .otherwise(concat_ws("\n",
-          substring(coalesce(col("text"), lit("")), 1, 200),
-          when(col("doc_id") % 4 === 0, lit("- a bullet item"))
-            .otherwise(lit("a plain prose line")),
-          when(col("doc_id") % 5 === 0, lit("to be continued..."))
-            .otherwise(concat(lit("line "), col("doc_id").cast("string"))),
-          when(col("doc_id") % 7 === 0, lit("# header ###"))
-            .otherwise(lit("the closing line"))))
-      raw.select(col("doc_id"), lined.as("lt"))
-        // bind the tokenizer BEFORE gopherCounts: its required-stop
-        // filter references the token array inside a lambda, which
-        // would otherwise re-run the regex once per stopword
-        .select(col("doc_id"), col("lt"), TA.tokens(col("lt")).as("toks"))
-        .select(col("doc_id"), col("lt"),
-          TA.gopherCounts(col("lt"), col("toks")).as("g"),
-          TA.gopherLineCounts(col("lt")).as("l"))
-        .select(col("doc_id"),
-          col("g.n_words").as("n_words"),
-          col("g.sum_word_len").as("sum_word_len"),
-          col("g.n_alpha").as("n_alpha"),
-          col("g.n_req_stops").as("n_req_stops"),
-          col("g.n_symbols").as("n_symbols"),
-          col("l.n_lines").as("n_lines"),
-          col("l.n_bullet").as("n_bullet"),
-          col("l.n_ellipsis_end").as("n_ellipsis_end"))
-        .withColumn("bad_word_count",
-          col("n_words") < 30L || col("n_words") > 100000L)
-        .withColumn("bad_mean_word_len",
-          col("n_words") === 0L ||
-            col("sum_word_len") < lit(3L) * col("n_words") ||
-            col("sum_word_len") > lit(10L) * col("n_words"))
-        .withColumn("high_symbol_ratio",
-          lit(10L) * col("n_symbols") > col("n_words"))
-        .withColumn("low_alpha_ratio",
-          lit(5L) * col("n_alpha") < lit(4L) * col("n_words"))
-        .withColumn("few_required_stops", col("n_req_stops") < 2L)
-        .withColumn("bullet_heavy",
-          lit(10L) * col("n_bullet") > lit(9L) * col("n_lines"))
-        .withColumn("ellipsis_heavy",
-          lit(10L) * col("n_ellipsis_end") > lit(3L) * col("n_lines"))
-        .withColumn("keep",
-          !col("bad_word_count") && !col("bad_mean_word_len") &&
-          !col("high_symbol_ratio") && !col("low_alpha_ratio") &&
-          !col("few_required_stops") && !col("bullet_heavy") &&
-          !col("ellipsis_heavy"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta24_collocations" -> ((s, dir) => {
-      // TA24 — PMI collocation mining (Church & Hanks 1990; beyond the
-      // reference): the corpus-level top-k of adjacent-token pairs by
-      // pointwise mutual information — the phrase-mining pass that
-      // feeds tokenizer merge candidates, stopphrase lists and entity
-      // lexicons. pmi = ln(c_ab·N/(c_a·c_b)) computed as
-      // detln(c_ab)+detln(N)−detln(c_a)−detln(c_b): every log is the
-      // bit-reproducible DetLn (no libm), the combination is a
-      // per-row fixed-order chain, and the output/rank key quantizes
-      // to the 2⁻²⁰ integer grid — order-exact on both engines.
-      // Scale shape: the corpus tokenizes ONCE; bigrams and unigrams
-      // each collapse map-side; the c_ab ≥ 5 support filter shrinks
-      // the pair table before the two vocab-keyed joins; the 1-row N
-      // and the final top-50 (TakeOrderedAndProject) are the only
-      // global pieces.
-      val toks = t(s, dir, "documents")
-        .select(TA.tokens(col("text")).as("toks"))
-        .localCheckpoint(eager = false) // tokenize once, two consumers
-      val big = toks.filter(size(col("toks")) >= 2)
-        .select(explode(arrays_zip(
-          slice(col("toks"), lit(1), size(col("toks")) - 1).as("a"),
-          slice(col("toks"), lit(2), size(col("toks")) - 1).as("b")))
-          .as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-      val uni = toks.select(explode(col("toks")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("cw"))
-        .localCheckpoint(eager = false) // one vocab agg, two join sides
-      val bc = big.groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("cab"))
-        .filter(col("cab") >= 5L)
-      val nb = big.agg(count(lit(1)).as("nb"))
-      import graft.expressions.DetLn
-      bc.join(uni.select(col("w").as("a"), col("cw").as("ca")), Seq("a"))
-        .join(uni.select(col("w").as("b"), col("cw").as("cb")), Seq("b"))
-        .crossJoin(broadcast(nb))
-        .withColumn("pmi_q20", floor(
-          (DetLn(col("cab")) + DetLn(col("nb")) -
-            DetLn(col("ca")) - DetLn(col("cb"))) *
-            lit((1L << 20).toDouble) + lit(0.5)).cast("long"))
-        .select(col("a"), col("b"), col("cab"), col("ca"), col("cb"),
-          col("pmi_q20"))
-        .orderBy(col("pmi_q20").desc, col("a"), col("b"))
-        .limit(50)
-    }),
-
-    "ta17_zipf_slope" -> ((s, dir) => {
-      // Token-distribution health per lang (beyond the reference):
-      // the Zipf log-log slope estimated from a log2-FREQUENCY
-      // HISTOGRAM — count of distinct tokens per floor-log2(freq)
-      // bucket — instead of a rank-frequency regression, because rank
-      // needs a window over the full vocabulary (≥10⁸ rows at corpus
-      // scale) while the histogram is a map-side-combined aggregate
-      // into ≤64 buckets. Natural text slopes ≈ −1; a collapse toward
-      // 0 or a cliff flags boilerplate/generated corpora. Closed-form
-      // least squares over the bucket rows; log2 buckets by bin()
-      // string length (integer-exact both engines), slope at 6dp.
-      val cnts = t(s, dir, "documents")
-        .select(col("lang"), explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy(col("lang"), col("tok"))
-        .agg(count(lit(1)).as("cnt"))
-      val hist = cnts
-        .select(col("lang"), (length(bin(col("cnt"))) - 1).cast("long").as("b"))
-        .groupBy(col("lang"), col("b"))
-        .agg(count(lit(1)).as("n_types"))
-      // ORDER-EXACT least squares (r11): y = detln(n_types) quantized
-      // to the integer 2^-20 grid, x = the integer bucket index — all
-      // five sums are exact BIGINTs in any order, the slope is one
-      // integer-ratio divide scaled back by the grid
-      val pts = hist.select(col("lang"), col("b").as("x"),
-        floor(graft.expressions.DetLn(col("n_types")) *
-          lit(Classify.WeightGrid) + lit(0.5)).as("yi"), col("n_types"))
-      pts.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_buckets"),
-          sum(col("n_types")).as("n_distinct"),
-          count(lit(1)).as("_n"),
-          sum(col("x")).as("_sx"), sum(col("yi")).as("_sy"),
-          sum(col("x") * col("yi")).as("_sxy"),
-          sum(col("x") * col("x")).as("_sxx"))
-        .select(col("lang"), col("n_buckets"), col("n_distinct"),
-          when(col("_n") * col("_sxx") - col("_sx") * col("_sx") =!= 0L,
-            fround(((col("_n") * col("_sxy") - col("_sx") * col("_sy"))
-                .cast("double") /
-              (col("_n") * col("_sxx") - col("_sx") * col("_sx"))
-                .cast("double")) / lit(Classify.WeightGrid), 6))
-            .as("zipf_slope"))
-        .orderBy(col("lang"))
-    }),
-
-    "ta14_corpus_divergence" -> ((s, dir) => {
-      // Per-language JS divergence vs the corpus mixture (beyond the
-      // reference): the drift statistic that validates a mix or flags
-      // a bad ingest source. One tokenize pass; both distributions
-      // derive from one vocab-sized count table; strata totals and
-      // the scalar grand total broadcast.
-      TA.corpusDivergence(
-          t(s, dir, "documents"), col("lang"), col("text"))
-        .select(col("stratum").as("lang"), col("n_tok"),
-          fround(col("js_bits"), 6).as("js_bits"))
-        .orderBy(col("lang"))
-    }),
-
-    "a14_hll_rollup" -> ((s, dir) => {
-      // Mergeable-sketch lifecycle (beyond the reference): per-day HLL
-      // sketches of the token stream fold once per ingest batch (day
-      // synthesizes from doc_id, the w4 precedent), then ANY slice
-      // answers distinct-token questions by unioning sketch bytes —
-      // history never rescans. Driver-checkable core (r9 verdict): the
-      // exact distinct runs alongside at test SF, output =
-      // (exact, within_tol) with within_tol driven by the sketch union
-      // (lgK = 12 → rsd ≈ 1.6%, 3σ ⇒ 5%), so the gate sees a real hash
-      // verdict AND a sketch-accuracy regression flips it; at 100 TB
-      // only the sketch path runs.
-      val toks = t(s, dir, "documents")
-        .select(col("lang"), pmod(col("doc_id"), lit(7)).as("day"),
-          TA.tokens(col("text")).as("_toks"))
-        .select(col("lang"), col("day"), explode(col("_toks")).as("tok"))
-      val est = Sketches.unionEstimates(
-          Sketches.dailySketches(toks, col("lang"), col("day"), col("tok")))
-        .select(col("stratum").as("lang"), col("est_distinct"))
-      toks.groupBy(col("lang"))
-        .agg(countDistinct(col("tok")).as("n_distinct_tokens"))
-        .join(broadcast(est), Seq("lang"))
-        .select(col("lang"), col("n_distinct_tokens"),
-          (abs(col("est_distinct") - col("n_distinct_tokens")) <=
-            col("n_distinct_tokens") * lit(0.05)).as("within_tol"))
-        .orderBy(col("lang"))
-    }),
-    "a15_quantile_sketch" -> ((s, dir) => {
-      // Mergeable QUANTILE sketch lifecycle — the deterministic
-      // HDR-style companion to a14's HLL: per-(event_type, day)
-      // log-linear bucket counts fold once per ingest batch, then any
-      // slice answers p50/p90/p99 by summing sketch rows and walking
-      // the cumulative counts. Unlike KLL/t-digest (randomized
-      // compaction) the bucketing is pure integer arithmetic, so this
-      // one gets a FULL DuckDB oracle. Values quantize to integer
-      // milli-units with the shared floor(x·1e3+0.5) rounding.
-      val ev = t(s, dir, "events")
-        .select(col("event_type"), to_date(col("ts")).as("day"),
-          floor(col("value") * lit(1000d) + lit(0.5d)).cast("long").as("v"))
-      Sketches.mergeQuantiles(
-          Sketches.quantileSketch(ev, col("event_type"), col("day"), col("v")),
-          Seq(50, 90, 99))
-        .select(col("stratum").as("event_type"), col("p"),
-          col("q_lo"), col("q_hi"))
-        .orderBy(col("event_type"), col("p"))
-    }),
-    "a16_heavy_hitters" -> ((s, dir) => {
-      // Mergeable FREQUENCY sketch — the third sketch-family member
-      // (a14 distinct, a15 quantiles): per-(lang, day) token counts
-      // pruned at support 1/200 fold per ingest batch; merge-at-read
-      // bounds each heavy token's true corpus count in [lo, hi] with
-      // no false negatives (the stopword/boilerplate-detection signal
-      // at corpus scale). Deterministic integer arithmetic throughout
-      // ⇒ full DuckDB oracle.
-      val toks = t(s, dir, "documents")
-        .select(col("lang"), pmod(col("doc_id"), lit(7)).as("day"),
-          TA.tokens(col("text")).as("_toks"))
-        .select(col("lang"), col("day"), explode(col("_toks")).as("tok"))
-      Sketches.mergeHeavyHitters(
-          Sketches.freqSketch(toks, col("lang"), col("day"), col("tok"),
-            num = 1L, den = 200L),
-          num = 1L, den = 200L)
-        .select(col("stratum").as("lang"), col("key").as("tok"),
-          col("lo_cnt"), col("hi_cnt"))
-        .orderBy(col("lang"), col("tok"))
-    }),
-
-    "a17_pivot" -> ((s, dir) => {
-      // Wide reshaping: per-source counts and char mass pivoted over
-      // the closed lang domain (explicit value list ⇒ one pass, no
-      // distinct-probe job; absent cells coalesce to 0 so the frame is
-      // dense). The report-matrix shape every corpus summary ends in.
-      val langs = Seq("de", "en", "es", "fr", "zh")
-      val p = t(s, dir, "documents")
-        .groupBy(col("source"))
-        .pivot("lang", langs)
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-      p.select(col("source") +:
-          langs.flatMap(l => Seq(
-            coalesce(col(s"${l}_n"), lit(0L)).as(s"n_$l"),
-            coalesce(col(s"${l}_chars"), lit(0L)).as(s"chars_$l"))): _*)
-        .orderBy(col("source"))
-    }),
-    "a18_grouping_sets" -> ((s, dir) => {
-      // CUBE over (lang, source) with explicit grouping flags — the
-      // subtotal lattice (per cell, per lang, per source, grand total)
-      // in ONE aggregation pass; NULL group keys coalesce to 'ALL' so
-      // the row identity is engine-independent.
-      t(s, dir, "documents")
-        .cube(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"),
-          grouping(col("lang")).cast("long").as("g_lang"),
-          grouping(col("source")).cast("long").as("g_source"))
-        .select(coalesce(col("lang"), lit("ALL")).as("lang_k"),
-          coalesce(col("source"), lit("ALL")).as("source_k"),
-          col("g_lang"), col("g_source"), col("n"), col("chars"))
-        .orderBy(col("lang_k"), col("source_k"))
-    }),
-
-    "d20_editdist_pairs" -> ((s, dir) => {
-      // Edit-distance near-dup pairs over the title field (the
-      // metadata-typo dedup flavor beside Jaccard/MinHash/SimHash body
-      // dedup): prefix-blocked, length-prefiltered, exact levenshtein
-      // verify. Titles synthesize from doc_id with zero-padded bases
-      // (so a block is one base) and three suffix variants at edit
-      // distance 0/2/2-from-each-other and 3 from base-to-qz — the
-      // dist ≤ 2 cut excludes exactly the ''↔' qz' pairs, which the
-      // oracle replays.
-      val title = concat(lit("title "),
-        lpad(pmod(col("doc_id"), lit(40)).cast("string"), 2, "0"),
-        when(expr("(doc_id div 40) % 3") === 1, lit(" x"))
-          .when(expr("(doc_id div 40) % 3") === 2, lit(" qz"))
-          .otherwise(lit("")))
-      Dedup.editDistancePairs(
-          t(s, dir, "documents").select(col("doc_id"), title.as("title")),
-          col("doc_id"), col("title"), maxDist = 2)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "d21_url_dedup" -> ((s, dir) => {
-      // URL-canonicalization dedup (beyond the reference; the literal
-      // FIRST dedup pass of RefinedWeb/CCNet crawl curation): crawls
-      // re-reach the same page through tracking params, fragments,
-      // case-variant hosts and trailing slashes — canonicalize
-      // (TF.urlNormalize, the ta12 chain) and keep the first ingest
-      // per canonical URL. The corpus has no URL column, so URLs
-      // synthesize from doc_id identically on both engines (the ta12
-      // precedent): doc_id-div-3 cohorts collide onto ONE canonical
-      // form through three different raw variants. Audit-shaped
-      // output (the d3 family, plus accounting): every doc keeps its
-      // canonical URL, first-wins kept flag, and cohort size.
-      // Scale shape: normalization is scan-fused regex; both windows
-      // partition by the fine-grained canonical key — group sizes are
-      // bounded by crawl duplication, never corpus size.
-      val v = pmod(col("doc_id"), lit(3))
-      val url = concat(
-        when(v === 0, lit("HTTPS://Example.org/a/"))
-          .when(v === 1, lit("https://EXAMPLE.ORG/a/"))
-          .otherwise(lit("https://example.org/a/")),
-        expr("doc_id div 3").cast("string"),
-        when(v === 0, lit("?utm_source=feed"))
-          .when(v === 1, lit("/"))
-          .otherwise(lit("#frag")))
-      val byUrl = Window.partitionBy(col("norm_url"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), TF.urlNormalize(url).as("norm_url"))
-        .withColumn("kept",
-          row_number().over(byUrl.orderBy(col("doc_id"))) === 1)
-        .withColumn("n_group", count(lit(1)).over(byUrl))
-        .orderBy(col("doc_id"))
-    }),
-
-    "d22_containment_pairs" -> ((s, dir) => {
-      // Asymmetric containment dedup (beyond the reference): partial
-      // copies — an excerpt quoted inside a much larger page — score
-      // J ≈ |A|/|B| ≈ 0 under d4's symmetric Jaccard but containment
-      // |A∩B|/|A| = 1; RefinedWeb-style curation runs this check
-      // beside the symmetric one. The corpus has no verbatim excerpts,
-      // so every doc_id % 5 == 0 doc contributes one (first 30 tokens,
-      // id + 10⁶) — built from the SAME token chain on both engines.
-      // Scale shape (Dedup.containmentPairs): prefix × full-index
-      // candidates — join keys are only the contained side's globally
-      // RAREST tokens, so common tokens never form blocks and the
-      // container side streams linearly; exact integer position filter;
-      // one merge-walk intersect per surviving candidate.
-      // Run as the BATCH-vs-corpus probe (Dedup.containmentProbe, the
-      // d15/d9 production shape): the day's suspect batch — here one
-      // 30-token excerpt per doc_id % 5 doc — asks which standing
-      // documents substantially contain it. The symmetric corpus-wide
-      // form (Dedup.containmentPairs) is the spec'd generic; on THIS
-      // synthetic corpus its pair set is adversarially dense (one
-      // shared vocabulary ⇒ ~84k pairs at sf0.01) where real crawl
-      // text is Zipf-sparse, so the probe is both the realistic and
-      // the scale-priced query. Output is the bounded audit: each
-      // batch doc's best container (max shared tokens — the integer
-      // twin of max containment — then largest, then smallest-id).
-      // On this one-vocabulary corpus the qualifying pair set is dense
-      // (1.7M pairs at sf0.1 for ~600 best rows), so the query runs the
-      // BEST-container reduction (Dedup.containmentBest): the same
-      // probe front, one map-side-combinable struct-max per id_a in
-      // place of materializing every pair and windowing it — staged
-      // output is O(batch), not O(batch × corpus).
-      val d = t(s, dir, "documents")
-      val exc = d.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"),
-          array_join(slice(TA.tokens(col("text")), 1, 30), " ").as("text"))
-      Dedup.containmentBest(exc, d.select(col("doc_id"), col("text")),
-          col("doc_id"), col("text"), threshold = 0.9)
-        .select(col("id_a"), col("id_b"), col("inter").cast("long").as("inter"),
-          col("size_a"), col("size_b"),
-          fround(col("containment"), 6).as("containment"))
-        .orderBy(col("id_a"))
-    }),
-
-    "d23_containment_est" -> ((s, dir) => {
-      // MinHash containment ESTIMATE — the sketch/scale twin of d22
-      // (the d6-to-d4 relationship, done for the asymmetric signal):
-      // banded candidates only, then pure algebra converts the
-      // signature-agreement Jaccard estimate to containment of the
-      // smaller shingle set, |A∩B| = J·(|A|+|B|)/(1+J) ⇒
-      // C = J·(na+nb)/((1+J)·min(na,nb)), clamped at 1. No token
-      // arrays ride any shuffle: the only non-integer inputs are the
-      // dyadic est_jaccard (k/16) and two exact BIGINT sizes, and both
-      // engines run the identical fixed-order IEEE chain. Scale shape:
-      // d6's banded candidate generation + one (doc_id, count) side
-      // table joined twice — LAZILY CHECKPOINTED so the shingle pass
-      // over the corpus runs once, not once per join side.
-      val d = t(s, dir, "documents")
-      val sz = d.select(col("doc_id"), TA.tokens(col("text")).as("_toks"))
-        .select(col("doc_id"),
-          size(Dedup.shinglesFromTokens(col("_toks"), 3)).cast("long")
-            .as("nsh"))
-        .localCheckpoint(eager = false)
-      Dedup.minhashPairs(d, col("doc_id"), col("text"))
-        .join(sz.select(col("doc_id").as("id_a"), col("nsh").as("n_a")),
-          "id_a")
-        .join(sz.select(col("doc_id").as("id_b"), col("nsh").as("n_b")),
-          "id_b")
-        .filter(col("n_a") > 0 && col("n_b") > 0)
-        .withColumn("est_containment", least(lit(1.0),
-          col("est_jaccard") * (col("n_a") + col("n_b")).cast("double") /
-            ((lit(1.0) + col("est_jaccard")) *
-              least(col("n_a"), col("n_b")).cast("double"))))
-        .filter(col("est_containment") >= 0.8)
-        .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"),
-          fround(col("est_jaccard"), 6).as("est_jaccard"),
-          fround(col("est_containment"), 6).as("est_containment"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "ta13_char_diversity" -> ((s, dir) => {
-      // Character-diversity quality signals (beyond the reference;
-      // Gopher-family heuristic — generated/boilerplate text
-      // concentrates on few symbols): Shannon bits/char + exact
-      // Simpson concentration. Native one-pass kernel (the
-      // declarative sorted-run fold is an interpreted per-char HOF —
-      // it benched 13 s at sf0.1 vs ~1 s native; bit-parity pinned in
-      // TextAnalysisSpec), scan-fused, zero shuffles. Simpson is
-      // rational → bit-exact across engines; entropy rounds at 6dp.
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.expressions.CharDiversity(col("text")).as("_d"))
-        .select(col("doc_id"),
-          col("_d.n_chars").as("n_chars"),
-          fround(col("_d.entropy"), 6).as("entropy"),
-          fround(col("_d.simpson"), 6).as("simpson"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta12_url_filter" -> ((s, dir) => {
-      // URL-level source curation (beyond the reference; the
-      // RefinedWeb front gate): host extraction, canonical URL
-      // normalization (lowercase scheme/host, tracking-param/fragment/
-      // trailing-slash strip), and a suffix-match domain blocklist —
-      // all pure per-row regex expressions fused into the scan, zero
-      // shuffles. The corpus has no URL column, so URLs synthesize
-      // from doc_id identically on both sides (the c1/ta7 precedent):
-      // mixed-case scheme+host, rotating domains, tracking params on
-      // some, fragments on some, trailing slashes on the rest.
-      val domains = array(lit("ads.tracker.com"), lit("Example.org"),
-        lit("blog.example.org"), lit("spam.example.net"), lit("News.Site.io"))
-      val url = concat(lit("HTTPS://"),
-        element_at(domains, (pmod(col("doc_id"), lit(5)) + 1).cast("int")),
-        lit("/p/"), col("doc_id").cast("string"),
-        when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(lit("?utm_source=feed&id="), col("doc_id").cast("string")))
-          .when(pmod(col("doc_id"), lit(3)) === 1,
-            concat(lit("?id="), col("doc_id").cast("string"),
-              lit("&utm_campaign=x")))
-          .otherwise(lit("/")),
-        when(pmod(col("doc_id"), lit(4)) === 0, lit("#frag"))
-          .otherwise(lit("")))
-      t(s, dir, "documents")
-        .select(col("doc_id"), url.as("_url"))
-        .select(col("doc_id"),
-          TF.urlHost(col("_url")).as("host"),
-          TF.urlNormalize(col("_url")).as("norm_url"),
-          TF.hostBlocked(TF.urlHost(col("_url")),
-            Seq("tracker.com", "spam.example.net")).as("blocked"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta9_bpe_merges" -> ((s, dir) => {
-      // Distributed BPE tokenizer training (beyond the reference): the
-      // corpus is read ONCE (wordFreqs); each merge step then costs one
-      // partial-aggregated pair count over the vocab-sized (word, freq)
-      // table plus a projection — never a text rescan. Deterministic
-      // (count desc, lexicographic tiebreak); the DuckDB oracle replays
-      // the bounded loop UNROLLED (Bpe.sqlTrainChain), so the full
-      // training output is hash-gated.
-      import s.implicits._
-      val merges = operators.Bpe.trainMergesBatched(
-        operators.Bpe.wordFreqs(t(s, dir, "documents"), col("text")),
-        numMerges = 8)
-      merges.zipWithIndex
-        .map { case ((a, b), i) => (i.toLong, a, b, a + b) }
-        .toDF("step", "left", "right", "merged")
-    }),
-
-    "w4_quality_drift" -> ((s, dir) => {
-      // Batch twin of the streaming corpus-quality drift monitor
-      // (streaming.Streams.qualityDrift — same function, batch frame):
-      // per event-time hour, doc volume, mean ta2 quality, mean
-      // tokens, sub-floor share. Timestamps synthesize as
-      // doc_id minutes past a fixed origin so the oracle replays them.
-      val docs = t(s, dir, "documents").withColumn("ts",
-        expr("timestampadd(MINUTE, doc_id, TIMESTAMP '2024-01-01 00:00:00')"))
-      graft.streaming.Streams.qualityDrift(
-          docs, col("ts"), col("text"),
-          windowLen = "1 hour", qualityFloor = 0.5)
-        .orderBy(col("window_start"))
-    }),
-
-    "w5_gated_drift" -> ((s, dir) => {
-      // Batch twin of the streaming g2 front half (Streams
-      // .gatedCorpusDrift): benchmark decontamination + quality gate +
-      // drift monitor — the pipeline a corpus ingest runs continuously.
-      // Same function, batch frame; StreamFileSpec pins stream == batch
-      // over the same closed input.
-      val docs = t(s, dir, "documents")
-      val evalGrams = Decontam.evalGramHashes(
-        docs.filter(col("doc_id") < 50), col("text"), 5)
-      val train = docs.filter(col("doc_id") >= 50).withColumn("ts",
-        expr("timestampadd(MINUTE, doc_id, TIMESTAMP '2024-01-01 00:00:00')"))
-      graft.streaming.Streams.gatedCorpusDrift(
-          train, col("ts"), col("text"), evalGrams, ngram = 5,
-          maxContamination = 0.0, qualityGate = 0.55,
-          windowLen = "1 hour", qualityFloor = 0.5)
-        .orderBy(col("window_start"))
-    }),
-
-    "d12_repeated_grams" -> ((s, dir) => {
-      // Cross-doc repeated 8-gram stats (beyond the reference): the
-      // exact-substring-dedup signal over hashed grams — one map-side-
-      // combined gram count, only the repeated sliver rejoins, bare
-      // (id, hash) pairs on the wire.
-      Dedup.repeatedGramStats(
-          t(s, dir, "documents"), col("doc_id"), col("text"), n = 8)
-        .select(col("id").as("doc_id"), col("n_grams"), col("n_shared"),
-          fround(col("shared_frac"), 6).as("shared_frac"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "d13_line_dedup" -> ((s, dir) => {
-      // C4/RefinedWeb-style boilerplate line removal (beyond the
-      // reference; line-level is the dedup granularity doc-level D1-D4
-      // misses): lines recurring across ≥50 docs are detected from a
-      // hash-only count (strings never shuffle), capped + collected
-      // (the tc1 eval-gram contract), and stripped by a scan-fused
-      // per-row filter. The corpus has no newlines, so lined text
-      // synthesizes from doc_id identically on both sides (the c1/ta7
-      // injection precedent): a unique head, universal + modular
-      // boilerplate, a per-parity tail, and a trailing empty line that
-      // must survive verbatim.
-      val lined = t(s, dir, "documents").select(col("doc_id"),
-        concat_ws("\n",
-          substring(col("text"), 1, 40),
-          lit("all rights reserved"),
-          concat(lit("footer "), pmod(col("doc_id"), lit(3)).cast("string")),
-          when(pmod(col("doc_id"), lit(2)) === 0,
-            lit("subscribe to our newsletter"))
-            .otherwise(concat(lit("unique tail "), col("doc_id").cast("string"))),
-          lit("")).as("text"))
-      val bp = Dedup.boilerplateLineHashes(
-        lined, col("text"), minDocs = 50L, maxLines = 100)
-      lined
-        .select(col("doc_id"),
-          size(split(col("text"), "\n")).as("n_lines"),
-          Dedup.stripLines(col("text"), bp).as("_clean"))
-        .select(col("doc_id"), col("n_lines"),
-          (col("n_lines") - size(split(col("_clean"), "\n"))).as("n_removed"),
-          md5(col("_clean")).as("clean_md5"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "d14_dup_clusters" -> ((s, dir) => {
-      // Pairs → CLUSTERS (beyond the reference): near-dup similarity is
-      // not transitive, so keep-one survivorship needs the connected-
-      // components closure over the d6 pair graph — alternating
-      // large-star/small-star rounds (O(log²) worst case, never
-      // O(chain-length)), edges-only iteration, corpus text never
-      // shuffles. Every doc gets a cluster label (singletons label
-      // themselves); `kept` marks the one canonical row per cluster —
-      // the SlimPajama/RefinedWeb keep-one-per-cluster dedup step.
-      Dedup.dupClusters(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          col("doc_id"), col("text"), threshold = 0.5)
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-          col("kept"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "d17_simhash_pairs" -> ((s, dir) => {
-      // SimHash pair generation (beyond the reference; completes d7's
-      // fingerprint path): pigeonhole 4-band blocking — distance ≤ 3
-      // implies one whole nibble band agrees — then exact
-      // bit_count(xor) verify. At 16 bits (the d7 contract size) the
-      // space is small, so bucket collisions are common; the operator
-      // shape is band-count-generic and a production 64-bit fingerprint
-      // makes the same plan selective.
-      Dedup.simhashPairs(
-          t(s, dir, "documents"), col("doc_id"), col("text"), maxDist = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "s12_zorder" -> ((s, dir) => {
-      // Morton/Z-order value (beyond the reference): the write-time
-      // clustering key behind 2D data skipping — each output file
-      // covers a square-ish tile of the key space, so range predicates
-      // on EITHER column prune on parquet min/max stats. The query
-      // oracle-gates the bit interleave; CompactionSpec pins the
-      // layout property (z-tiles vs 1D stripes).
-      t(s, dir, "lineitem")
-        .filter(col("l_orderkey") <= 1000)
-        .select(col("l_orderkey"), col("l_partkey"),
-          sources.Compaction.zValue(
-            pmod(col("l_orderkey").cast("long"), lit(1L << 20)),
-            pmod(col("l_partkey").cast("long"), lit(1L << 20))).as("z"))
-        .orderBy(col("l_orderkey"), col("l_partkey"), col("z"))
-    }),
-
-    "d18_neardup_ingest" -> ((s, dir) => {
-      // The one-batch near-dup ingest decision, oracle-gated end to
-      // end (the streaming nearDupSink runs exactly this per micro-
-      // batch): probe the persisted band index for corpus near-dups,
-      // drop them, then collapse intra-batch near-dups to the
-      // canonical (min-id) survivor via the component closure.
-      val docs = t(s, dir, "documents")
-      val idx = scratchDir("graft_d18") + "/lsh"
-      Dedup.saveLshBandIndex(
-        Sampling.hashSample(docs, col("doc_id"), 0.6, "corp"),
-        col("doc_id"), col("text"), idx,
-        targetRows = 100000L, spread = 2)
-      Dedup.nearDupIngest(s, idx,
-          Sampling.hashSample(docs, col("doc_id"), 0.5, "newb")
-            .select(col("doc_id"), col("lang"), col("text")),
-          col("doc_id"), col("text"), threshold = 0.5)
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "d16_substring_scrub" -> ((s, dir) => {
-      // Exact-substring span REMOVAL (beyond the reference; Lee et al.
-      // dedup — d12 is the detection signal, this is the rewrite):
-      // cross-doc repeated 8-grams keep one canonical copy (smallest
-      // doc id), every other covering span is cut from the text.
-      // Hashed grams with positions, keeper resolved in the same
-      // partial-aggregated pass as the doc frequency, hot/cold rejoin,
-      // scan-fused HOF span mask.
-      Dedup.scrubRepeatedSpans(
-          t(s, dir, "documents"), col("doc_id"), col("text"), n = 8)
-        .select(col("id").as("doc_id"), col("n_tok"), col("n_removed"),
-          md5(col("scrubbed")).as("scrub_md5"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "d15_lsh_index_probe" -> ((s, dir) => {
-      // Persisted LSH band index + incremental probe (beyond the
-      // reference): the batch-vs-corpus NEAR-dup production shape — d9's
-      // bloom lifecycle for exact keys, done for near-duplicates. The
-      // corpus's band rows persist once (hive-partitioned by an
-      // md5-derived bucket of the band key); each incoming batch
-      // broadcasts its own band rows, prunes the index read to the
-      // buckets it touches, and the TB-sized index streams map-side
-      // through the join — no corpus shuffle, no corpus text re-scan.
-      // The full lifecycle runs under ONE oracle: base build over the
-      // even half, a committed streaming append of the odd half, a
-      // COMPACTION folding both into one merged generation, then the
-      // probe — the oracle replays index MEMBERSHIP over the union, so
-      // it verifies that append and compaction are layout-only.
-      val docs = t(s, dir, "documents")
-      val corp = Sampling.hashSample(docs, col("doc_id"), 0.6, "corp")
-      val idx = scratchDir("graft_d15") + "/lsh"
-      if (verifyScale(docs, s"$dir#documents")) {
-        Dedup.saveLshBandIndex(
-          corp.filter(col("doc_id") % 2 === 0),
-          col("doc_id"), col("text"), idx,
-          targetRows = 100000L, spread = 2)
-        Dedup.appendLshBandIndex(
-          corp.filter(col("doc_id") % 2 =!= 0),
-          col("doc_id"), col("text"), idx,
-          targetRows = 100000L, spread = 2, srcBatch = 0L): Unit
-        Dedup.compactLshBandIndex(s, idx, upTo = 0L,
-          targetRows = 100000L, spread = 2): Unit
-      } else
-        Dedup.saveLshBandIndex(corp, col("doc_id"), col("text"), idx,
-          targetRows = 100000L, spread = 2)
-      Dedup.probeLshBandIndex(s, idx,
-          Sampling.hashSample(docs, col("doc_id"), 0.5, "newb"),
-          col("doc_id"), col("text"))
-        .select(col("id_batch"), col("id_corpus"),
-          fround(col("est_jaccard"), 6).as("est_jaccard"))
-        .orderBy(col("id_batch"), col("id_corpus"))
-    }),
-
-    "ta10_bpe_encode" -> ((s, dir) => {
-      // Serving-path BPE encode over the corpus with the native
-      // codegen kernel (expressions.BpeEncode): train 8 merges (ta9),
-      // then one flat JVM pass per document — the shape that holds at
-      // 10⁴-merge production vocabularies, where the declarative
-      // per-merge fold is unplannable. Oracle: the unrolled training
-      // chain's final vocab table doubles as the per-word encoding
-      // (pieces = len(s8.syms)), joined back onto doc tokens.
-      val docs = t(s, dir, "documents")
-      val merges = operators.Bpe.trainMergesBatched(
-        operators.Bpe.wordFreqs(docs, col("text")), numMerges = 8)
-      docs.select(col("doc_id"),
-          TA.tokenCount(col("text")).as("n_tokens"),
-          size(graft.expressions.BpeEncode(col("text"), merges))
-            .as("n_pieces"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta19_tokenizer_fertility" -> ((s, dir) => {
-      // Tokenizer fertility / compression per language (beyond the
-      // reference): mean BPE pieces per word (fertility) and characters
-      // per piece (compression rate) — the standard multilingual
-      // tokenizer-health metrics (a fertility spike on one language
-      // says the vocabulary underserves it; the SentencePiece/BPE eval
-      // practice). Same trained merges as ta9/ta10, corpus encoded with
-      // the native BpeEncode kernel. Cross-engine determinism by
-      // construction: every accumulated quantity (words, pieces,
-      // token characters) is an exact BIGINT sum per lang and each
-      // metric is ONE final IEEE divide. Scale shape: the tokenize
-      // binds once at a select boundary; the BPE pass is the flat
-      // ta10 kernel; the aggregate is map-side combinable into
-      // lang-count rows.
-      val docs = t(s, dir, "documents")
-      val merges = operators.Bpe.trainMergesBatched(
-        operators.Bpe.wordFreqs(docs, col("text")), numMerges = 8)
-      docs.filter(col("text").isNotNull)
-        .select(col("lang"),
-          TF.letBound(TA.tokens(col("text")))(toks =>
-            struct(size(toks).cast("long").as("nw"),
-              length(array_join(toks, "")).cast("long").as("nc"))).as("t"),
-          size(graft.expressions.BpeEncode(col("text"), merges))
-            .cast("long").as("np"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("t.nw")).as("n_words"),
-          sum(col("np")).as("n_pieces"),
-          sum(col("t.nc")).as("n_chars"))
-        .select(col("lang"), col("n_docs"), col("n_words"),
-          col("n_pieces"), col("n_chars"),
-          fround(when(col("n_words") > 0,
-            col("n_pieces").cast("double") / col("n_words").cast("double")),
-            6).as("fertility"),
-          fround(when(col("n_pieces") > 0,
-            col("n_chars").cast("double") / col("n_pieces").cast("double")),
-            6).as("chars_per_piece"))
-        .orderBy(col("lang"))
-    }),
-
-    "d19_snapshot_diff" -> ((s, dir) => {
-      // Row-level diff between two corpus versions (beyond the
-      // reference; the "what changed since yesterday" audit over the
-      // merge-on-read log): init = documents; d=0 updates every %7 row
-      // (+1000 n_chars) and REWRITES every %13∧¬%7 row to its same
-      // value (must not appear); d=1 tombstones every %11 row and
-      // inserts fresh %17 ids. diff(-1, 1) answers from the delta
-      // segments alone — the touched-key set broadcasts as a semi-join
-      // prune, the snapshot never shuffles (MergeLog.diff). Deletes
-      // carry the old row, inserts/updates the new one.
-      val snap = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val log = scratchDir("graft_d19") + "/log"
-      MergeLog.init(snap, log)
-      def d(rows: DataFrame, v: Long, dead: Boolean) =
-        rows.select(col("doc_id"), col("lang"), col("n_chars"),
-          lit(v).as("version"), lit(dead).as("deleted"))
-      val upd = snap.filter(col("doc_id") % 7 === 0)
-        .withColumn("n_chars", col("n_chars") + 1000L)
-      val rew = snap.filter(col("doc_id") % 13 === 0 && col("doc_id") % 7 =!= 0)
-      MergeLog.appendDelta(
-        d(upd, 1L, dead = false).unionByName(d(rew, 1L, dead = false)),
-        log, Some(0L))
-      val del = snap.filter(col("doc_id") % 11 === 0)
-      val ins = snap.filter(col("doc_id") % 17 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-      MergeLog.appendDelta(
-        d(del, 2L, dead = true).unionByName(d(ins, 2L, dead = false)),
-        log, Some(1L))
-      MergeLog.diff(s, log, "doc_id", from = -1L, to = 1L)
-        .orderBy(col("doc_id"))
-    }),
-
-    "d11_merge_upsert" -> ((s, dir) => {
-      // CDC merge (beyond the reference; the corpus-maintenance twin of
-      // d9): snapshot = documents; the change batch carries two upsert
-      // versions of every doc_id % 7 row (the later wins) and
-      // tombstones every doc_id % 11 row — rows hit by both (% 77)
-      // resolve to the tombstone. The snapshot's only touch is an
-      // anti-join against the delta's key set (broadcast under AQE at
-      // real delta/corpus ratios); competing delta versions window-
-      // resolve over the DELTA alone. See Dedup.mergeUpsert.
-      val snap = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      def ver(rows: org.apache.spark.sql.DataFrame, bump: Long, v: Long,
-              dead: Boolean) =
-        rows.select(col("doc_id"), col("lang"),
-          (col("n_chars") + bump).as("n_chars"),
-          lit(v).as("version"), lit(dead).as("deleted"))
-      val touched = snap.filter(col("doc_id") % 7 === 0)
-      val delta = ver(touched, 1000L, 1L, dead = false)
-        .unionByName(ver(touched, 2000L, 2L, dead = false))
-        .unionByName(ver(snap.filter(col("doc_id") % 11 === 0), 0L, 3L,
-          dead = true))
-      Dedup.mergeUpsert(snap, delta, "doc_id")
-        .orderBy(col("doc_id"))
-    }),
-
-    "s13_bucketed_join" -> ((s, dir) => {
-      // S13 — bucketed co-located join (sources.Buckets): orders and
-      // customer land pre-hash-partitioned on the customer key into the
-      // same bucket count, then the recurring fact-to-dim join plans
-      // WITHOUT shuffling either side (PlanAuditSpec pins zero
-      // exchanges on the merge path). The oracle replays the join from
-      // the raw tables — the bucketed round trip must be lossless.
-      val base = scratchDir("graft_s13")
-      sources.Buckets.writeBucketed(
-        t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        "s13_orders", s"$base/orders", "o_custkey", 8)
-      sources.Buckets.writeBucketed(
-        t(s, dir, "customer")
-          .select(col("c_custkey"), col("c_mktsegment")),
-        "s13_customer", s"$base/customer", "c_custkey", 8)
-      sources.Buckets.table(s, "s13_orders")
-        .join(sources.Buckets.table(s, "s13_customer").hint("merge"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"),
-          fround(sum(col("o_totalprice")), 2).as("sum_price"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    "s14_dpp_prune" -> ((s, dir) => {
-      // S14 — dynamic partition pruning over a hive-partitioned landing
-      // (beyond the reference): customer lands partitioned by its dim
-      // key, nation arrives filtered on a NON-key attribute, and the
-      // recurring fact-to-dim join reads ONLY the partitions the dim
-      // filter admits — the broadcast build side doubles as a runtime
-      // partition filter (PlanAuditSpec pins `dynamicpruning` in the
-      // fact scan's PartitionFilters). The oracle replays the join from
-      // the raw tables: the pruned read must be lossless.
-      val base = scratchDir("graft_s14")
-      t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_acctbal"), col("c_nationkey"))
-        .write.mode("overwrite").partitionBy("c_nationkey")
-        .parquet(s"$base/customer")
-      s14PrunedJoin(s, dir, base)
-        .groupBy(col("n_name"))
-        .agg(count(lit(1)).as("n_cust"),
-          fround(sum(col("c_acctbal")), 2).as("sum_bal"))
-        .orderBy(col("n_name"))
-    }),
-
-    "s15_footer_stats" -> ((s, dir) => {
-      // S15 — metadata-only table stats (beyond the reference): with the
-      // DSv2 parquet reader + aggregate pushdown, COUNT/MIN/MAX compile
-      // to a footer read — zero data pages touched (the spec pins
-      // `PushedAggregation` in the scan). The 100 TB use: row-count /
-      // value-range sanity gates over a landed corpus at metadata cost.
-      // min/max surface RAW stored values (no derived floats), so no
-      // rounding is needed for oracle parity.
-      sources.FooterStats.aggregate(s, s"$dir/lineitem.parquet", Seq(
-        count(lit(1)).as("n_rows"),
-        min(col("l_quantity")).as("min_qty"),
-        max(col("l_quantity")).as("max_qty"),
-        min(col("l_extendedprice")).as("min_price"),
-        max(col("l_extendedprice")).as("max_price")))
-    }),
-
-    "s16_dynamic_overwrite" -> ((s, dir) => {
-      // S16 — idempotent partition restatement (beyond the reference):
-      // the daily rollup lands partitioned by day; when one day's input
-      // is corrected, ONLY that day is recomputed and re-landed with
-      // partitionOverwriteMode=dynamic — the write replaces exactly the
-      // partitions present in the restated frame and leaves every other
-      // day's files untouched. At 100 TB this is the late-data /
-      // backfill contract: restating one day never rewrites (or even
-      // reads) the other 364. The oracle composes base-minus-day plus
-      // the restated day relationally.
-      val store = s"${scratchDir("graft_s16")}/daily"
-      val ev = t(s, dir, "events").select(
-        date_format(col("ts"), "yyyy-MM-dd").as("day"),
-        col("event_type"), col("value"), col("user_id"))
-      def rollup(df: DataFrame): DataFrame =
-        df.groupBy(col("day"), col("event_type"))
-          .agg(count(lit(1)).as("n"), fround(sum(col("value")), 2).as("sum_v"))
-      rollup(ev).write.mode("overwrite").partitionBy("day").parquet(store)
-      // the restatement: the earliest day's feed was bad — recompute it
-      // from the corrected subset (even-user events only). The day never
-      // touches the driver: the restated frame carries exactly one day
-      // and dynamic overwrite replaces exactly that partition.
-      val d0 = ev.groupBy().agg(min(col("day")).as("day"))
-      rollup(ev.join(broadcast(d0), "day")
-          .filter(col("user_id") % 2 === 0))
-        .write.mode("overwrite").partitionBy("day")
-        .option("partitionOverwriteMode", "dynamic").parquet(store)
-      s.read.parquet(store)
-        .select(col("day").cast("string").as("day"), col("event_type"),
-          col("n"), col("sum_v"))
-        .orderBy(col("day"), col("event_type"))
-    }),
-
-    "s17_schema_evolution" -> ((s, dir) => {
-      // S17 — schema evolution on read (beyond the reference): an early
-      // batch lands WITHOUT the quality column, a later batch adds it;
-      // mergeSchema unifies the footer schemas at read time and the old
-      // files surface NULLs — no rewrite of landed data, ever. The q
-      // values are dyadic (k/128) so sums stay IEEE-exact and the
-      // cross-engine avg rounds identically. At 100 TB, adding a column
-      // to a corpus must cost zero IO on the history; this pins that
-      // contract end-to-end through an aggregate.
-      val store = s"${scratchDir("graft_s17")}/docs"
-      val d = t(s, dir, "documents")
-      d.filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("lang"))
-        .write.mode("overwrite").parquet(store)
-      d.filter(col("doc_id") % 3 =!= 0)
-        .select(col("doc_id"), col("lang"),
-          ((col("doc_id") % 128).cast("double") / lit(128.0)).as("q"))
-        .write.mode("append").parquet(store)
-      s.read.option("mergeSchema", "true").parquet(store)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), count(col("q")).as("n_scored"),
-          fround(avg(col("q")), 6).as("avg_q"))
-        .orderBy(col("lang"))
-    }),
-
-    "s18_paged_api_ingest" -> ((s, dir) => {
-      // S18 — the S4/S5 paged-API source driven END TO END into the
-      // oracle gate: the reference's scraper loop (fetch page →
-      // extract the record array → advance the offset → stop on a dry
-      // page, with bounded retries) runs for real through
-      // HttpJson.readPaged — pagination, JSON-pointer extraction,
-      // retry, explicit-schema parse — against a fetcher serving page
-      // bodies from LOCAL FILES the query derives from the documents
-      // table (the l1-l5 mock precedent: the record shape flows
-      // through the real code path; only the socket is stubbed, since
-      // the sandbox has no network). One page's first fetch throws an
-      // injected transient failure, so the retry path is exercised in
-      // the oracle-checked run too. The oracle replays the same
-      // records relationally — a lost page, a dropped record, or a
-      // mis-bound column is a hash red, which closes the "S4/S5 are
-      // spec-only" gap. API ingestion is driver-bound by nature
-      // (rate-limited endpoints, sequential pagination — the scraper
-      // seat); the distributed pipeline starts at the returned frame.
-      val pageSize = 50
-      val src = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("lang"),
-          TA.tokenCount(col("text")).cast("long").as("n_tok"))
-        .orderBy(col("doc_id"))
-        .collect()
-      val base = scratchDir("graft_s18")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-      def writePage(offset: Int, recs: Seq[String]): Unit =
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$base/page_at_$offset.json"),
-          recs.mkString("""{"data":[""", ",", "]}")): Unit
-      src.grouped(pageSize).zipWithIndex.foreach { case (recs, p) =>
-        writePage(p * pageSize, recs.toSeq.map(r =>
-          s"""{"id":${r.getLong(0)},"lang":"${r.getString(1)}",""" +
-            s""""n_tok":${r.getLong(2)}}"""))
-      }
-      writePage(src.length, Seq.empty) // the dry terminal page
-      val failedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val fileFetcher = new sources.HttpJson.Fetcher {
-        def fetch(url: String): String = {
-          if (url.endsWith(s"page_at_$pageSize.json") &&
-              failedOnce.compareAndSet(false, true))
-            throw new java.io.IOException("injected transient failure")
-          java.nio.file.Files.readString(java.nio.file.Paths.get(url))
-        }
-      }
-      sources.HttpJson.readPaged(s,
-          off => s"$base/page_at_$off.json",
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "id LONG, lang STRING, n_tok LONG"),
-          fetcher = fileFetcher, sleep = _ => ())
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
-          min(col("id")).as("min_id"), max(col("id")).as("max_id"))
-        .orderBy(col("lang"))
-    }),
-
-    "s19_incremental_listing" -> ((s, dir) => {
-      // S19 — manifest-driven incremental ingest (sources.FileManifest;
-      // beyond the reference): a landing root accrues committed drops,
-      // and each tick reads ONLY the drops the manifest hasn't
-      // absorbed — the file-level watermark that keeps a daily tick
-      // O(new data) against an ever-growing landing history. The query
-      // runs three ticks: day 1 lands two drops (tick 1 absorbs both);
-      // day 2 lands one committed drop AND one TORN drop (its commit
-      // marker deleted — a crashed writer) which must stay
-      // invisible (tick 2 absorbs exactly one — if the gate broke,
-      // n_drops and the row counts double and the oracle goes red);
-      // tick 3 finds nothing and reports an explicit empty row. The
-      // oracle replays each tick's stats from the same hash split.
-      val d = t(s, dir, "documents")
-      val base = scratchDir("graft_s19")
-      val landing = s"$base/landing"
-      val man = s"$base/manifest"
-      val inB1 = Sampling.keyHash(col("doc_id"), "s19") <
-        Sampling.threshold(0.5)
-      val b1 = d.filter(inB1).select(col("doc_id"), col("n_chars"))
-      val b2 = d.filter(!inB1).select(col("doc_id"), col("n_chars"))
-      def land(b: DataFrame, name: String): Unit =
-        b.coalesce(1).write.mode("overwrite").parquet(s"$landing/$name")
-      def tick(id: Long): DataFrame = {
-        val nd = sources.FileManifest.newDrops(s, landing, man)
-        val row =
-          if (nd.isEmpty)
-            s.range(1).select(lit(id).as("tick"), lit(0L).as("n_drops"),
-              lit(0L).as("n_rows"), lit(0L).as("sum_chars"))
-          else
-            sources.FileManifest.readDrops(s, landing, nd)
-              .agg(count(lit(1)).as("n_rows"),
-                sum(col("n_chars")).as("sum_chars"))
-              .select(lit(id).as("tick"),
-                lit(nd.size.toLong).as("n_drops"), col("n_rows"),
-                col("sum_chars"))
-        // materialize BEFORE recording: the returned plan must not
-        // re-list the landing after later ticks move the manifest.
-        // The tick's report is ONE row of four longs — collect it and
-        // return a literal frame (the empty branch's exact shape)
-        // instead of staging it to parquet: the stage write + read-back
-        // were two extra driver job round-trips per tick for a row that
-        // lives on the driver anyway (r19, guide §1.2; the manifest
-        // lifecycle — landing reads, manifest complement, record — is
-        // unchanged).
-        val v = row.collect()(0)
-        def l(i: Int) = (if (v.isNullAt(i)) lit(null) else lit(v.getLong(i)))
-          .cast("long")
-        sources.FileManifest.record(s, man, nd, id)
-        s.range(1).select(l(0).as("tick"), l(1).as("n_drops"),
-          l(2).as("n_rows"), l(3).as("sum_chars"))
-      }
-      land(b1.filter(col("doc_id") % 2 === 0), "d1_a")
-      land(b1.filter(col("doc_id") % 2 =!= 0), "d1_b")
-      val t1 = tick(1L)
-      land(b2, "d2_a")
-      land(b2, "d2_torn")
-      val hf = new org.apache.hadoop.fs.Path(landing)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      hf.delete(
-        new org.apache.hadoop.fs.Path(s"$landing/d2_torn/_SUCCESS"),
-        false): Unit
-      val t2 = tick(2L)
-      val t3 = tick(3L)
-      t1.unionByName(t2).unionByName(t3).orderBy(col("tick"))
-    }),
-
-    "s20_gzip_roundtrip" -> ((s, dir) => {
-      // S20 — compressed-payload ingest (beyond the reference; the
-      // WARC/WET shape — Common Crawl text ships as gzip members):
-      // every doc's text compresses through the REAL JDK zlib
-      // (expressions.GzipBytes) and decodes back
-      // (expressions.GunzipText), and all downstream stats derive
-      // from the DECODED text — so the oracle, which computes the
-      // same stats from the raw column, proves the full
-      // deflate→inflate→UTF-8 hop byte-exactly for every row. The
-      // compressed size itself is never shipped to the oracle (zlib
-      // output bytes are a JVM implementation detail; what decodes
-      // from them is not). Scale shape: one scan-fused projection per
-      // row, executor-local bytes, codegen'd static calls.
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.expressions.GunzipText(
-            graft.expressions.GzipBytes(col("text"))).as("dt"))
-        .select(col("doc_id"),
-          length(col("dt")).cast("long").as("n_chars"),
-          TA.tokenCount(col("dt")).cast("long").as("n_tokens"),
-          md5(col("dt")).as("h"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "s11_sized_sink" -> ((s, dir) => {
-      // Size-targeted partitioned sink round-trip (beyond the
-      // reference): documents land as lang=<v>/ parquet, each language
-      // fanned across 4 writer buckets with a 1000-row hard cap per
-      // file, then read back with schema-on-read — identity on the
-      // data columns proves the layout machinery is lossless. File
-      // counts and per-file caps are pinned in CompactionSpec.
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("n_chars"), col("lang"))
-      val out = scratchDir("graft_s11")
-      sources.Compaction.writeSized(d, out, Seq("lang"), col("doc_id"),
-        targetRows = 1000L, spread = 4)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id LONG, n_chars LONG, lang STRING")
-      sources.Compaction.readSized(s, out, schema)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta6_seq_packing" -> ((s, dir) => {
-      // Sequence packing for training (beyond the reference): concat-
-      // and-chunk semantics — per language, documents concatenate in
-      // doc_id order and cut every 2048 tokens; a doc belongs to the
-      // bin where it STARTS. Bucketed two-pass path (Packing.scala):
-      // in-bucket running sums + summary-carry across buckets, so a
-      // skewed language distribution never serializes one language's
-      // whole corpus through a single task's sort (the j4 pattern;
-      // PackingSpec pins equality with the single-window formulation).
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          TA.tokenCount(col("text")).cast("long").as("n_tok"))
-      Packing.packBins(
-          Packing.packedStartsBucketed(d, col("lang"), col("doc_id"),
-            col("n_tok"), bucketWidth = 4096L),
-          binTokens = 2048L)
-        .orderBy(col("lang"), col("bin"))
-    }),
-
-    "ta15_chunk_windows" -> ((s, dir) => {
-      // Sliding-window chunking (beyond the reference; the tokenizer
-      // return_overflowing_tokens shape): over-length documents split
-      // into ≤32-token windows every 24 tokens (8-token overlap)
-      // before packing/serving — docs here run 10-99 tokens, so the
-      // corpus really splits 1-4 ways. Zero exchanges: one narrow
-      // tokenize-once projection + generator per row (Packing.scala);
-      // the final sort exists only for the oracle compare.
-      Packing.chunkWindows(t(s, dir, "documents"), col("doc_id"),
-          col("text"), maxTokens = ChunkMax, stride = ChunkStride)
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    "ta7_cjk_text" -> ((s, dir) => {
-      // CJK tokenization end-to-end (the reference's Chinese RAG corpus
-      // path, RAG/rag_chinese_test.ipynb): whitespace-free ideograph
-      // runs tokenize per-character and ASCII runs glued to them stay
-      // their own tokens, so token counts, language-ID, the rolling
-      // fingerprint, and simhash all stay meaningful on Chinese text
-      // instead of collapsing to one giant pseudo-token per document.
-      val txt = concat(
-        lit(cjkAlpha).substr((col("doc_id") % 8 + 1).cast("int"), lit(6)),
-        lit("mix"),
-        lit(cjkAlpha).substr((col("doc_id") % 4 + 1).cast("int"), lit(3)),
-        lit(" "), substring(col("text"), 1, 40))
-      t(s, dir, "documents")
-        .select(col("doc_id"), txt.as("ztext"))
-        .select(col("doc_id"),
-          TA.tokenCount(col("ztext")).as("n_tok"),
-          TA.cjkCount(col("ztext")).as("n_cjk"),
-          TA.languageId(col("ztext")).as("lang_pred"),
-          graft.expressions.TokenFingerprint(col("ztext")).as("fp"),
-          graft.expressions.SimHash16(col("ztext")).cast("long").as("sh"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "t2_unicode_normalize" -> ((s, dir) => {
-      // NFC canonicalization (beyond the reference, which strips
-      // non-ASCII outright): decomposed sequences (e + U+0301 etc.)
-      // compose to single code points so visually-identical strings
-      // hash identically in every downstream dedup. Native codegen
-      // expression (UnicodeNormalize) with an isNormalized fast path;
-      // the oracle is DuckDB's nfc_normalize. norm binds at a select
-      // boundary so the normalization runs once per row.
-      val dirty = concat(lit("cafe\u0301 nai\u0308ve "),
-        substring(col("text"), 1, 40))
-      t(s, dir, "documents")
-        .select(col("doc_id"), dirty.as("orig"))
-        .select(col("doc_id"), col("orig"),
-          TF.nfcNormalize(col("orig")).as("norm"))
-        .select(col("doc_id"), col("norm"),
-          (col("norm") =!= col("orig")).as("changed"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "t1_text_clean" -> ((s, dir) => {
-      // T1-T4 — LaTeX/HTML-entity/non-ASCII strip + whitespace collapse
-      // (text_cleaning.py:20-50). The corpus is clean, so dirty input is
-      // constructed identically on both sides from the same column.
-      val dirty = concat(
-        lit("\\textbf{Attention} is $O(n^2)$ &amp; caf\u00e9 "), col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), TF.cleanText(dirty).as("clean_text"),
-          TF.wordCount(col("text")).as("n_words"),
-          TF.sentenceCount(col("text")).as("n_sentences"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "g1_fused_pipeline" -> ((s, dir) => {
-      // G1 — the reference's end-to-end product (README.md:70-106
-      // dataflow) composed as ONE lazy plan: merge-union dedup (D1) →
-      // title-hash dedup (D3) → LaTeX/entity/non-ASCII clean + whitespace
-      // collapse (T1-T4) → schema align with defaults (P1) → mock keyword
-      // enrichment + validation (L2) → quality gate (P3) → per-language
-      // stats (A1). Nothing materializes mid-pipeline: every stage is
-      // declarative (the enrich step is a lazy mapPartitions over the
-      // same iterator), so Catalyst fuses the chain end to end and the
-      // only exchanges are the two dedup windows and the final aggregate.
-      val d = t(s, dir, "documents")
-      val fileA = d.filter(col("doc_id") % 2 === 0)
-        .withColumn("file_idx", lit(0L))
-      val fileB = d.withColumn("file_idx", lit(1L))
-      val ord = col("file_idx") * 1000000L + col("doc_id")
-      val merged = Dedup.dedupFirstWins(
-        fileA.unionByName(fileB),
-        md5(lower(trim(substring(col("text"), 1, 20)))), ord)
-      // D3 keys on an OFFSET slice so it is not subsumed by the D1 key
-      // (equal 1..20 prefixes already collapsed; 8..31 still can collide).
-      val deduped = Dedup.titleHashDedup(merged,
-        substring(col("text"), 8, 24), ord)
-      val cleaned = deduped.withColumn("clean_text",
-        TF.cleanText(concat(lit(g1DirtyPrefix), col("text"))))
-      val aligned = Align.alignTo(cleaned, Seq(
-        "doc_id" -> lit(-1L),
-        "lang" -> lit("und"),
-        "license" -> lit("unknown"),
-        "n_chars" -> lit(0L),
-        "clean_text" -> lit("")))
-      val enriched = Enrich.enrichColumn(aligned,
-          concat(lit("Extract keywords: "), col("clean_text")), "raw_kw",
-          new Enrich.MockKeywordClient(12))
-        .withColumn("keywords", Enrich.validateKeywords(col("raw_kw")))
-      val kept = Align.gate(enriched, Seq(
-        "too_short" -> (col("n_chars") >= 120),
-        "few_keywords" -> (size(col("keywords")) >= 3)))
-      kept.groupBy(col("lang")).agg(
-          count(lit(1)).as("n_docs"),
-          fround(avg(length(col("clean_text"))), 4).as("avg_clean_chars"),
-          fround(avg(size(col("keywords"))), 4).as("avg_keywords"),
-          sum(size(col("keywords")).cast("long")).as("total_keywords"))
-        .orderBy(col("lang"))
-    }),
-
-    "g2_training_corpus" -> ((s, dir) => {
-      // G2 — the NORTH-STAR end-to-end product (the 100 TB
-      // training-data build, BASELINE.json): benchmark decontamination
-      // (tc1) → quality gate (ta2's composite ≥ 0.55) → temperature-
-      // weighted token-budget mix (x1) → sequence packing (ta6), as ONE
-      // lazy plan. The eval gram set and the per-language rate table
-      // both broadcast; the corpus sides never shuffle their text —
-      // the only exchanges are the decontamination report's per-doc
-      // count, the mix stats aggregate, and the packing windows. The
-      // corpus tokenizes twice (once in the probe branch, once shared
-      // by gate+mix+packing via a select boundary) — the probe branch
-      // is structurally separate, so a single pass would need a cache
-      // that costs more than the narrow re-scan.
-      Packing.packBins(g2PackedStarts(s, dir), binTokens = 2048L)
-        .orderBy(col("lang"), col("bin"))
-    }),
-
-    "g5_training_batches" -> ((s, dir) => {
-      // G5 — the serve schedule: g2's packed bins put into the epoch-1
-      // training order. Bins (not docs) shuffle — the unit a loader
-      // fetches — via the x2 epoch-salted hash sort into 4 uniform
-      // shards with dense per-shard positions. Still one lazy plan on
-      // top of the g2 chain; the only additions are the bin rollup and
-      // the shard window.
-      val bins = g2PackedStarts(s, dir)
-        .withColumn("bin", expr("start_tok div 2048"))
-        .groupBy(col("lang"), col("bin"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-      Sampling.epochShuffle(bins,
-          concat_ws(":", col("lang"), col("bin")), epoch = 1, numShards = 4)
-        .select(col("lang"), col("bin"), col("n_docs"), col("n_tokens"),
-          col("shard"), col("pos"))
-        .orderBy(col("lang"), col("bin"))
-    }),
-
-    "g4_dedup_corpus" -> ((s, dir) => {
-      // G4 — g2 with its missing first stage fused in: near-dup
-      // KEEP-ONE dedup (the d14 closure) → decontaminate → quality
-      // gate → token-budget mix → pack, raw documents to training
-      // bins as one product. The dedup prunes the train corpus BEFORE
-      // any tokenization-heavy stage runs, so every downstream pass
-      // (decontam probe, gate, mix stats, packing windows) works on
-      // the deduped sliver — at 100 TB that ordering is the difference
-      // between paying the pipeline on the corpus or on its unique
-      // fraction. Only the pair graph iterates; corpus text still
-      // never shuffles.
-      Packing.packBins(g2PackedStarts(s, dir, dedup = true),
-          binTokens = 2048L)
-        .orderBy(col("lang"), col("bin"))
-    }),
-
-    "g6_steered_corpus" -> ((s, dir) => {
-      // G6 — g2 with a TRAINED steering gate on top of the heuristic
-      // one (the GPT-3-style upgrade: rule gates first, a learned
-      // filter above them): the DSIR target/raw LMs collapse to
-      // serving weights (contract-tiny collect, like tc1's grams and
-      // v11's centroids), and docs must show ABOVE-CORPUS-AVERAGE
-      // target affinity — mean per-token log ratio past the corpus
-      // mean, both rounded (scale-free: at sf-size corpora the
-      // Laplace term biases every raw ratio negative, so an absolute
-      // 0 threshold is meaningless; the relative gate is the honest
-      // contract at any scale). The gate rides the SAME select
-      // boundary as the heuristic score: one tokenization feeds both,
-      // and the classifier adds ZERO exchanges to the g2 plan — the
-      // weights and the threshold are literals.
-      val docs = t(s, dir, "documents")
-      val w = Classify.collectDsirWeights(docs, col("text"),
-        col("lang") <=> "en", 4096)
-      val thr = fround(
-        avg(fround(Classify.dsirColumn(col("text"), w, 4096), 6)), 6)
-      val thrVal = docs.agg(thr).head().getDouble(0)
-      Packing.packBins(
-          g2PackedStarts(s, dir, tokenGate = Some(toks =>
-            fround(Classify.dsirColumnFromTokens(toks, w, 4096), 6)
-              > lit(thrVal))),
-          binTokens = 2048L)
-        .orderBy(col("lang"), col("bin"))
-    }),
-
-    "g3_corpus_store" -> ((s, dir) => {
-      // G3 — close the north-star loop: build → STORE → serve. The g2
-      // per-doc packed layout LANDS via the size-targeted sink, hive-
-      // partitioned by (lang, bin_range-of-8-bins) with doc_id-keyed
-      // writer fan-out and a hard per-file row cap, then reads back
-      // with schema-on-read. A training job then scans exactly the
-      // (lang, bin range) directories of its shard — partition pruning
-      // makes reader IO ∝ its slice of the corpus, and the round trip
-      // is the identity on the layout columns (the oracle replays the
-      // whole build; CompactionSpec pins the file layout).
-      val laid = g2PackedStarts(s, dir)
-        .withColumn("bin", expr("start_tok div 2048"))
-        .withColumn("bin_range", expr("bin div 8"))
-      val out = scratchDir("graft_g3")
-      sources.Compaction.writeSized(laid, out, Seq("lang", "bin_range"),
-        col("doc_id"), targetRows = 1000L, spread = 4)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id LONG, n_tok LONG, start_tok LONG, bin LONG, " +
-          "lang STRING, bin_range LONG")
-      sources.Compaction.readSized(s, out, schema)
-        .select(col("doc_id"), col("lang"), col("bin"), col("bin_range"),
-          col("n_tok"), col("start_tok"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "g9_bucketed_enrich" -> ((s, dir) => {
-      // G9 — the s13 layout put to work in the fused product (r9
-      // verdict task 6): g2's packed per-doc output and the per-doc
-      // provenance metadata table land ONCE as doc_id-bucketed
-      // external tables, then the recurring enrich join (the shape an
-      // epoch serve or compliance audit replays daily against the
-      // stored corpus) merges them with ZERO shuffle exchanges on
-      // either side — PlanAuditSpec pins the exchange-free SMJ — and
-      // rolls up the served corpus's provenance mix: docs, token
-      // mass, and mean length per (lang, source). The oracle replays
-      // the whole build from raw tables, so the bucketed round trip
-      // is proven lossless THROUGH the join.
-      g9EnrichJoin(s, dir)
-        .groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).as("n_tokens"),
-          fround(avg(col("n_chars")), 2).as("avg_chars"))
-        .orderBy(col("lang"), col("source"))
-    }),
-
-    "g7_corpus_health" -> ((s, dir) => {
-      // G7 — the round-8 sketch families composed into the dashboard
-      // row a corpus operator actually reads: per (lang, day) volume/
-      // quality drift (the w4 signals), log-linear token-count
-      // quantiles (the a15 lifecycle), the support-pruned top token
-      // (a16), and exact distinct tokens. Every column is
-      // deterministic integer / floored arithmetic ⇒ full DuckDB
-      // oracle replaying all four blocks AND the broadcast sketch-join
-      // assembly. g7x is the same frame on the 100 TB distinct path.
-      Health.corpusHealth(t(s, dir, "documents"),
-          col("lang"), pmod(col("doc_id"), lit(7)), col("text"))
-        .withColumnRenamed("stratum", "lang")
-        .orderBy(col("lang"), col("day"))
-    }),
-    "g10_daily_tick" -> ((s, dir) => {
-      // G10 — the production DAY TICK as one oracled product: the
-      // day's batch flows through g8's pipeline (near-dup keep-one →
-      // trained above-mean gate → land) and the SAME landed set feeds
-      // the operator dashboard — per-language in/dedup-dropped/
-      // gate-dropped/landed counts, the Smirnov KS drift verdict vs
-      // the reference stratum, and the drift-GATED remix rate (a21's
-      // action running on what actually landed, with the full-corpus
-      // rates as "yesterday's served" baseline). This is the one table
-      // an operator reads every morning; every number in it is
-      // DuckDB-replayed. Scale shape: the pipeline is g8's (pair-graph
-      // dedup, literal-weight gate, no corpus-wide windows); the
-      // dashboard tail runs entirely on stratum-count and bounded
-      // distribution tables.
-      val d = t(s, dir, "documents")
-      val isTrain = Sampling.keyHash(col("doc_id"), "nbt") <
-        Sampling.threshold(0.6)
-      // dedup and land STAGE to scratch (the tq7 discipline): the
-      // dashboard has four consumers of the kept set and two of the
-      // landed set — at 100 TB the post-dedup and landed corpora are
-      // tables you land anyway, and re-deriving the pair-graph closure
-      // per consumer would multiply the most expensive stage.
-      // r15: the labeling stage carries a TokenCount column computed
-      // in the SAME corpus scan and lands ALL rows (kept flag +
-      // n_tok_in, text alongside) — so the per-lang input counts and
-      // prev's full-corpus token census below read the staged table
-      // instead of rescanning + re-tokenizing the source corpus. That
-      // was the last full-corpus rescan in any lifecycle query (r14
-      // verdict #4); the labeled table is the dedup audit artifact a
-      // production tick lands anyway.
-      // r18: the gate TRAIN has no dependency on the dedup/label land —
-      // overlapped so the train's jobs back-fill the pair-graph
-      // closure's idle slots (guide §2.6)
-      val base = scratchDir("graft_g10")
-      val (gate, _) = Frames.overlap {
-        Classify.collectWeights(Classify.trainModel(
-          d.filter(isTrain), col("lang") <=> "en", col("text"), nbBuckets))
-      } {
-        Dedup.dupClusters(
-            d.select(col("doc_id"), col("lang"), col("text"),
-              TA.tokenCount(col("text")).cast("long").as("n_tok_in")),
-            col("doc_id"), col("text"), threshold = 0.5)
-          .select(col("doc_id"), col("lang"), col("text"),
-            col("n_tok_in"), col("kept"))
-          .write.mode("overwrite").parquet(s"$base/labeled")
-      }
-      val labeled = s.read.parquet(s"$base/labeled")
-      val kept = labeled.where(col("kept"))
-        .select(col("doc_id"), col("lang"), col("text"))
-      // ONE bound tokenize per kept row feeds BOTH the gate score and
-      // n_tok (CollapseProject keeps the multi-use alias materialized);
-      // n_tok rides the landed write, so the drift stage below never
-      // re-tokenizes the landed corpus (r13; r15 folded prev's
-      // baseline census into the labeled stage above, so NO stage
-      // tokenizes the corpus more than once).
-      kept
-        .select(col("doc_id"), col("lang"),
-          TA.tokens(col("text")).as("_toks"))
-        .select(col("doc_id"), col("lang"),
-          fround(Classify.scoreColumnFromTokens(col("_toks"), gate,
-            nbBuckets), 6).as("_lo6"),
-          size(col("_toks")).cast("long").as("n_tok"))
-        // STAGE the scored frame (r14): the gate consumes it twice —
-        // the broadcast mean AND the filter — and each consumer would
-        // re-run the tokenize+NB-score pipeline over the kept corpus
-        // from parquet; one columnar write is cheaper than a second
-        // full scoring pass, and at 100 TB the scored table is the
-        // audit artifact you land anyway (why did this doc gate out?).
-        // Both the scored and landed stages are NARROW (ids + scores +
-        // n_tok, no text): every dashboard consumer below reads counts
-        // and n_tok only, and the kept store already holds the text —
-        // the landed corpus at 100 TB is kept ⋈ landed ids, a
-        // re-write-free projection.
-        .write.mode("overwrite").parquet(s"$base/scored")
-      val scored = s.read.parquet(s"$base/scored")
-      scored
-        .crossJoin(broadcast(
-          scored.agg(fround(avg(col("_lo6")), 6).as("_m6"))))
-        .filter(col("_lo6") > col("_m6"))
-        .select(col("doc_id"), col("lang"), col("n_tok"))
-        .write.mode("overwrite").parquet(s"$base/landed")
-      val landed = s.read.parquet(s"$base/landed")
-      // every full-corpus dashboard input reads the staged labeled
-      // table (labels cover EVERY input row, so per-lang counts over
-      // it equal counts over the source)
-      val nIn = labeled.groupBy(col("lang")).agg(count(lit(1)).as("n_in"))
-      val nKept = kept.groupBy(col("lang")).agg(count(lit(1)).as("n_kept"))
-      val nLand = landed.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_landed"))
-      val prev = Sampling.ratesFromDistribution(
-        Sketches.distributionCounts(labeled, col("lang"),
-          col("n_tok_in")), remixBudgetPct)
-      val drift = Sampling.driftGatedRates(
-        Sketches.distributionCounts(landed, col("lang"), col("n_tok")),
-        prev, "en", remixBudgetPct, remixAlpha)
-      nIn
-        .join(nKept, Seq("lang"), "left")
-        .join(nLand, Seq("lang"), "left")
-        .withColumn("n_kept", coalesce(col("n_kept"), lit(0L)))
-        .withColumn("n_landed", coalesce(col("n_landed"), lit(0L)))
-        .select(col("lang"), col("n_in"),
-          (col("n_in") - col("n_kept")).as("n_dedup_dropped"),
-          (col("n_kept") - col("n_landed")).as("n_gate_dropped"),
-          col("n_landed"))
-        .join(broadcast(drift.select(col("stratum").as("lang"),
-          fround(col("ks"), 6).as("ks"), col("breached"), col("thr"))),
-          Seq("lang"), "left")
-        .orderBy(col("lang"))
-    }),
-
-    "g11_restated_day" -> ((s, dir) => {
-      // G11 — the BACKFILL product, fusing s16's dynamic restatement,
-      // s14's DPP-pruned reads and the a20/a21 drift state into the
-      // operation a 100 TB operator actually runs: one day's feed was
-      // bad, so restate THAT day and re-derive the dashboard/drift
-      // rows for THAT day — reading and rewriting exactly one
-      // partition of each store while every other day's files stay
-      // byte-identical (spec-pinned, with the `dynamicpruning` scan
-      // guard). Flow: land the feed day-partitioned + freeze the
-      // drift reference → build the full dashboard (per-day counts /
-      // sums / KS-vs-ref / Smirnov breach) → the corrected feed
-      // (even-user rows of the earliest day, the s16 convention; the
-      // day never touches the driver) dynamic-overwrites its store
-      // partition → the summary re-derive joins the store against the
-      // broadcast day frame (DPP prunes the scan to day=d0) and
-      // dynamic-overwrites only that summary partition. Output is the
-      // read-back dashboard; the oracle replays land+restate+KS
-      // relationally.
-      val base = scratchDir("graft_g11")
-      val ev = t(s, dir, "events").select(
-        to_date(col("ts")).as("day"), col("event_type"), col("value"),
-        col("user_id"))
-      g11Land(ev, base)
-      // the summary table is BOUNDED (days × types rows): land it one
-      // file per day, not one per (day × shuffle partition) — a
-      // partitionBy write straight off the roll/drift join would spray
-      // ~32 tiny files into every day directory, and the read-back plus
-      // the dynamic-overwrite re-derive pay the opens (r15; paired A/B
-      // measured parity locally at sf0.1, the file count is the 100 TB
-      // argument). The raw STORE keeps its parallel fan-out — at scale
-      // a day is bigger than one writer.
-      g11Summary(s, base, None).repartition(col("day"))
-        .write.mode("overwrite").partitionBy("day").parquet(s"$base/summary")
-      val d0 = ev.groupBy().agg(min(col("day")).as("day"))
-      ev.join(broadcast(d0), "day").filter(col("user_id") % 2 === 0)
-        .write.mode("overwrite").partitionBy("day")
-        .option("partitionOverwriteMode", "dynamic").parquet(s"$base/store")
-      g11Summary(s, base, Some(d0)).repartition(col("day"))
-        .write.mode("overwrite").partitionBy("day")
-        .option("partitionOverwriteMode", "dynamic").parquet(s"$base/summary")
-      s.read.parquet(s"$base/summary")
-        .select(col("day").cast("string").as("day"), col("event_type"),
-          col("n"), col("sum_v"), col("ks"), col("breached"))
-        .orderBy(col("day"), col("event_type"))
-    }),
-
-    "g12_vector_tick" -> ((s, dir) => {
-      // G12 — the combined DOCUMENT + VECTOR day tick: the one batch
-      // that g10 lands and annIngestSink indexes, as a single oracled
-      // product (the r11 verdict's missing lifecycle). Flow: the day's
-      // batch dedups against the standing corpus (d9's bloom-prefilter
-      // shape — exactly batch ANTI JOIN corpus for any fpp), survives
-      // a minimum-substance gate, LANDS to the corpus store, EMBEDS
-      // (the v12 engine-side batch-encode path), APPENDS into the
-      // persisted IVF index as one commit-gated segment — and the
-      // append is immediately REPLAYED with the same batch id inside
-      // the query: the gate makes it a no-op, and the dashboard's
-      // n_indexed (counted from the index AS A READER SEES IT,
-      // commit-pruned) would break its oracle if replay ever
-      // double-landed. The tick then probes the index with the
-      // batch's own vectors (frozen centroids decay against the
-      // newest data first), scores recall@5 vs exact brute cosine
-      // over the full corpus, and emits the operator dashboard:
-      // per-lang in/dedup-dropped/gate-dropped/landed counts plus the
-      // index row count and mean recall. mean_recall divides exact
-      // integer sums (Σhit/Σexact) — no order-dependent float
-      // accumulation. Scale shape: bloom probe is scan-fused, the
-      // index append is O(batch), probes touch nprobe/C of the lists,
-      // and the exact-recall pass is query-batch × corpus — the v1
-      // broadcast brute shape, priced per tick, not per doc.
-      val d = t(s, dir, "documents")
-      val inCorpus = Sampling.keyHash(col("doc_id"), "g12c") <
-        Sampling.threshold(0.6)
-      val ckey = md5(lower(trim(substring(col("text"), 1, 20))))
-      val base = scratchDir("graft_g12")
-      val corpus = d.filter(inCorpus)
-        .select(col("doc_id"), col("lang"), col("text"), ckey.as("ck"))
-      val batch = d.filter(!inCorpus)
-        .select(col("doc_id"), col("lang"), col("text"), ckey.as("ck"))
-      def embed(df: DataFrame) = Embed.embedColumn(df, col("text"), "emb",
-        new Embed.MockHashEmbeddingClient(dim = 8), batchSize = 32)
-      val corpusEmb = embed(corpus.select(col("doc_id"), col("text")))
-      val idx = s"$base/ivf"
-      // STAGE dedup survivors and the landed set (the g10 discipline:
-      // both have multiple dashboard consumers). The corpus-side IVF
-      // build (centroid seed + index land) touches neither staged dir —
-      // overlapped with the batch-side staging chain (guide §2.6); the
-      // two meet again only at the append below.
-      Frames.overlap {
-        val cents = corpusEmb.orderBy(col("doc_id")).limit(4)
-          .select(col("doc_id"), col("emb").cast("array<double>"))
-          .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-          .toSeq
-        Similarity.saveIvfIndex(corpusEmb, col("doc_id"), col("emb"), cents,
-          idx, targetRows = 10000L, spread = 2)
-      } {
-        Dedup.incrementalDedup(batch, corpus, "ck",
-            expectedItems = 100000, fpp = 0.01)
-          .write.mode("overwrite").parquet(s"$base/deduped")
-        s.read.parquet(s"$base/deduped")
-          .filter(TA.tokenCount(col("text")) >= 10)
-          .select(col("doc_id"), col("lang"), col("text"))
-          .write.mode("overwrite").parquet(s"$base/landed")
-      }: Unit
-      val deduped = s.read.parquet(s"$base/deduped")
-      val landed = s.read.parquet(s"$base/landed")
-      val landedEmb = embed(landed.select(col("doc_id"), col("text")))
-      Similarity.appendIvfIndex(s, idx, landedEmb, col("doc_id"),
-        col("emb"), targetRows = 10000L, spread = 2,
-        batchId = Some(1L)): Unit
-      // crash-replay of the same batch id: MUST no-op (commit-gated)
-      Similarity.appendIvfIndex(s, idx, landedEmb, col("doc_id"),
-        col("emb"), targetRows = 10000L, spread = 2,
-        batchId = Some(1L)): Unit
-      val queries = landedEmb.orderBy(col("doc_id")).limit(5)
-        .select(col("doc_id").as("query_id"), col("emb").as("qv"))
-      val approx = Similarity.ivfTopKIndexed(s, idx, queries,
-        col("query_id"), col("qv"), k = 5, nprobe = 2)
-      val exact = Similarity.topKPerQuery(
-        corpusEmb.unionByName(landedEmb), col("doc_id"), col("emb"),
-        queries, col("query_id"), col("qv"), k = 5)
-      val tick = Similarity.recallAtK(approx, exact, k = 5)
-        .agg(sum(col("n_hit")).as("_h"), sum(col("n_exact")).as("_e"))
-        .crossJoin(broadcast(Similarity.ivfIndexedRows(s, idx)
-          .agg(count(lit(1)).as("n_indexed"))))
-        .select(col("n_indexed"),
-          fround(when(col("_e") > 0,
-            col("_h").cast("double") / col("_e").cast("double"))
-            .otherwise(lit(1.0)), 6).as("mean_recall"))
-      val nIn = batch.groupBy(col("lang")).agg(count(lit(1)).as("n_in"))
-      val nDd = deduped.groupBy(col("lang")).agg(count(lit(1)).as("n_dd"))
-      val nLand = landed.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_landed"))
-      nIn
-        .join(nDd, Seq("lang"), "left")
-        .join(nLand, Seq("lang"), "left")
-        .withColumn("n_dd", coalesce(col("n_dd"), lit(0L)))
-        .withColumn("n_landed", coalesce(col("n_landed"), lit(0L)))
-        .select(col("lang"), col("n_in"),
-          (col("n_in") - col("n_dd")).as("n_dedup_dropped"),
-          (col("n_dd") - col("n_landed")).as("n_gate_dropped"),
-          col("n_landed"))
-        .crossJoin(broadcast(tick))
-        .orderBy(col("lang"))
-    }),
-
-    "g13_decontam_tick" -> ((s, dir) => {
-      // G13 — eval-set protection as a LIFECYCLE (beyond the
-      // reference): tc1 answers "is this corpus contaminated against
-      // today's benchmarks"; g13 answers the production question —
-      // a NEW benchmark arrives, only ITS grams probe the corpus, and
-      // the verdicts land in a versioned quarantine MANIFEST
-      // (MergeLog) instead of a report that goes stale. Tick 1: the
-      // standing eval split (id < 50) flags its overlap set → the log
-      // base. Tick 2: a new benchmark — verbatim 20-token excerpts of
-      // corpus docs (% 61), the realistic worst case — probes and
-      // lands as delta batch 1; a doc flagged by both attributes to
-      // the NEWEST benchmark (last-wins upsert). The tick-2 append is
-      // then REPLAYED with the same batch id but POISONED content
-      // (version-99 tombstones for every flagged doc): the commit
-      // gate must no-op it — if a replayed committed batch ever
-      // landed, the tombstones would erase every v2 row from the
-      // dashboard and break the oracle. Dashboard: per (eval_v, lang)
-      // quarantined docs + matched-gram mass. Scale shape: benchmarks
-      // are MBs vs a TB corpus, so each probe is one corpus scan with
-      // a broadcast gram set (the tc1 shape), the manifest append is
-      // O(flagged), and the corpus text never shuffles.
-      val d = t(s, dir, "documents")
-      val corpus = d.filter(col("doc_id") >= 100)
-        .select(col("doc_id"), col("lang"), col("text"))
-      val eval1 = d.filter(col("doc_id") < 50).select(col("text"))
-      val eval2 = d
-        .filter(col("doc_id") >= 100 && pmod(col("doc_id"), lit(61)) === 0)
-        .select(array_join(slice(TA.tokens(col("text")), 1, 20), " ")
-          .as("text"))
-      def flagged(ev: DataFrame, v: Long) =
-        Decontam.contaminationReport(corpus, ev, col("doc_id"),
-            col("text"), n = 5)
-          .filter(col("n_matched") > 0)
-          .select(col("id").as("doc_id"), col("n_matched"),
-            lit(v).as("eval_v"))
-      val log = scratchDir("graft_g13") + "/qlog"
-      MergeLog.init(flagged(eval1, 1L), log)
-      val d2 = flagged(eval2, 2L)
-        .withColumn("version", lit(2L)).withColumn("deleted", lit(false))
-      MergeLog.appendDelta(d2, log, Some(1L)): Unit
-      // crash-replay of batch 1 with poisoned tombstones: MUST no-op
-      MergeLog.appendDelta(
-        d2.withColumn("version", lit(99L)).withColumn("deleted", lit(true)),
-        log, Some(1L)): Unit
-      MergeLog.read(s, log, "doc_id")
-        .join(corpus.select(col("doc_id"), col("lang")), "doc_id")
-        .groupBy(col("eval_v"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_matched")).as("sum_matched"))
-        .orderBy(col("eval_v"), col("lang"))
-    }),
-
-    "g15_pack_tick" -> ((s, dir) => {
-      // G15 — the PACKED-STREAM day tick (beyond the reference; the
-      // index-lifecycle discipline applied to x15's packing): the
-      // packed corpus is a SERVED artifact — training shards address
-      // tokens by global offset — so the day's batch must APPEND at
-      // the stream's high-water token offset and never restate an
-      // earlier placement. History (doc_id % 17 != 0) lands as
-      // segment 0; the delta day appends as segment 1 from the stored
-      // per-segment token totals (one bounded 1-row read per segment,
-      // never a store rescan); a crash-replay of the delta batch id
-      // must no-op at the commit gate — if it double-appended, every
-      // delta row would appear twice and the oracle's row count would
-      // break. Output = the read-back store with x15's span columns;
-      // the oracle replays the two-phase prefix sum relationally, so
-      // equality proves land → high-water append → replay gate →
-      // read-back end to end.
-      val store = scratchDir("graft_g15") + "/packed"
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        TA.tokenCount(col("text")).cast("long").as("n_tok"))
-      Packing.appendPacked(s, store,
-        d.filter(pmod(col("doc_id"), lit(17)) =!= 0),
-        col("doc_id"), col("n_tok"), batchId = 0L)
-      Packing.appendPacked(s, store,
-        d.filter(pmod(col("doc_id"), lit(17)) === 0),
-        col("doc_id"), col("n_tok"), batchId = 1L)
-      // replay of the committed delta: complete no-op
-      Packing.appendPacked(s, store,
-        d.filter(pmod(col("doc_id"), lit(17)) === 0),
-        col("doc_id"), col("n_tok"), batchId = 1L)
-      Packing.packedSpans(Packing.packedStore(s, store), seqLen = 512L)
-        .select(col("seg"), col("doc_id"), col("n_tok"),
-          col("start_tok"), col("seq_first"), col("off_in_seq"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "g16_cusum_tick" -> ((s, dir) => {
-      // G16 — the CUSUM monitor as a LIFECYCLE (x17's g-discipline
-      // twin): the per-(type, day) value census lives in a CountLog —
-      // history is the base, each day's tick appends ONE O(batch)
-      // partial-count delta, one day arrives SPLIT across two partial
-      // appends (integer sums are associative, so split batches fold
-      // exactly), and a crash-replay of a committed day with POISONED
-      // ×1000 counts must no-op at the commit gate or the means break
-      // the oracle. The alarm re-derives from the folded daily table —
-      // bounded at types × days rows — so monitoring absorbs a day
-      // without ever rescanning raw event history. The oracle is the
-      // SAME from-scratch x17 SQL over raw events: incremental ==
-      // batch, checked end to end.
-      val log = scratchDir("graft_g16") + "/log"
-      // one materialized scan feeds the base build + six day appends
-      // (seven consumers otherwise re-read and re-project the events
-      // parquet per append); freed before returning — the result
-      // reads only the CountLog.
-      val ev = t(s, dir, "events").select(col("event_type"),
-        unix_micros(date_trunc("day", col("ts"))).as("day_us"),
-        col("user_id"),
-        expr("cast(floor(value * 1e6 + 0.5) as bigint)").as("vm"))
-        .localCheckpoint(eager = true)
-      def counts(df: DataFrame) = df
-        .groupBy(col("event_type"), col("day_us"))
-        .agg(sum(col("vm")).as("vsum"), count(lit(1)).as("n"))
-      // bounded driver read (the fixpoint-probe discipline): one max.
-      // The five tick days synthesize arithmetically as cut + i·86400s,
-      // which assumes every civil day is exactly 86400 s — true ONLY
-      // under GraftSession's UTC session-TZ pin (date_trunc in a DST
-      // zone yields 23/25 h days and the synthesized ticks would miss
-      // them). The oracle's date_trunc chain shares the same pin.
-      val lastDay = ev.agg(max(col("day_us"))).head().getLong(0)
-      val cut = lastDay - 4L * 86400000000L
-      CountLog.init(counts(ev.filter(col("day_us") < cut)), log)
-      for (i <- 0 until 5) {
-        val day = ev.filter(col("day_us") === cut + i * 86400000000L)
-        if (i == 2) { // split-day: two disjoint partial-count appends
-          CountLog.append(counts(day.filter(pmod(col("user_id"),
-            lit(2L)) === 0L)), log, Some(20L + i))
-          CountLog.append(counts(day.filter(pmod(col("user_id"),
-            lit(2L)) === 1L)), log, Some(100L + i))
-        } else CountLog.append(counts(day), log, Some(20L + i))
-      }
-      // poisoned replay of committed day 0 — the gate must no-op
-      CountLog.append(
-        counts(ev.filter(col("day_us") === cut))
-          .withColumn("vsum", col("vsum") * 1000L), log, Some(20L))
-      graft.Frames.free(ev)
-      cusumFromDaily(
-        CountLog.read(s, log, Seq("event_type", "day_us"))
-          .select(col("event_type"), col("day_us"),
-            expr(floorDiv("vsum", "n")).as("mean_micro")))
-    }),
-
-    "g14_takedown_tick" -> ((s, dir) => {
-      // G14 — the TAKEDOWN day tick as one replay-idempotent product
-      // (beyond the reference; the compliance-lifecycle sibling of
-      // g10-g13, composing c9 + MergeLog): the corpus serves from a
-      // CDC store; a notice batch names individual doc_ids; the c9
-      // closure widens each notice to its whole near-dup cluster
-      // (removing one copy leaves its near-copies serving the same
-      // content); the removals land as ONE batch-keyed tombstone
-      // delta (O(batch)); a crash-replay of the same batch id with
-      // POISONED all-docs tombstones must no-op at the commit gate —
-      // if it ever landed, n_after would collapse to 0 and break the
-      // oracle. The dashboard row re-reads the STORE, so the oracle
-      // checks land → closure → CDC apply → replay gate → read-back
-      // end to end. Scale shape: the closure is banded (d6 pairs +
-      // star rounds), the tombstone delta is notice-sized, the store
-      // read is base ⊕ delta with the snapshot never shuffling.
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-      val store = scratchDir("graft_g14") + "/store"
-      MergeLog.init(docs, store)
-      val removed = Dedup.dupClusters(
-          docs.select(col("doc_id"), col("text")),
-          col("doc_id"), col("text"), threshold = 0.5)
-        .withColumn("direct",
-          Sampling.keyHash(col("doc_id"), "g14") <
-            Sampling.threshold(0.08))
-        .withColumn("hit", max(when(col("direct"), 1L).otherwise(0L))
-          .over(Window.partitionBy(col("cluster_id"))))
-        .filter(col("hit") === 1L)
-        .select(col("doc_id"), col("direct"))
-        .localCheckpoint(eager = false)
-      val tomb = removed.join(docs, Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("text"),
-          lit(1L).as("version"), lit(true).as("deleted"))
-      MergeLog.appendDelta(tomb, store, Some(1L)): Unit
-      // crash-replay of batch 1, poisoned: the commit gate must no-op
-      MergeLog.appendDelta(
-        docs.select(col("doc_id"), col("lang"), col("text"),
-          lit(9L).as("version"), lit(true).as("deleted")),
-        store, Some(1L)): Unit
-      val after = MergeLog.read(s, store, "doc_id")
-      val byLang = removed
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(col("lang")).agg(
-          sum(when(col("direct"), 1L).otherwise(0L)).as("n_direct"),
-          sum(when(!col("direct"), 1L).otherwise(0L)).as("n_closure"))
-      docs.groupBy(col("lang")).agg(count(lit(1)).as("n_before"))
-        .join(byLang, Seq("lang"), "left")
-        .join(after.groupBy(col("lang")).agg(count(lit(1)).as("n_after")),
-          Seq("lang"), "left")
-        .select(col("lang"), col("n_before"),
-          coalesce(col("n_direct"), lit(0L)).as("n_direct"),
-          coalesce(col("n_closure"), lit(0L)).as("n_closure"),
-          coalesce(col("n_after"), lit(0L)).as("n_after"))
-        .orderBy(col("lang"))
-    }),
-
-    "g8_ingest_corpus" -> ((s, dir) => {
-      // G8 — the BATCH TWIN of the streaming production ingest path
-      // (Streams.productionIngestSink), giving that pipeline a full
-      // oracle anchor: near-dup keep-one over the corpus (the empty-
-      // index bootstrap case of the d18 probe = d14 closure), then the
-      // TRAINED NB gate as the stateless serving column (literal
-      // weights from the tq1 keyed-split model; gate on the ROUNDED
-      // log-odds so the cut is engine-independent), then the w4 drift
-      // account over survivors. Same build order as the sink: dedup
-      // before scoring, drift on what lands.
-      val d = t(s, dir, "documents")
-      val isTrain = Sampling.keyHash(col("doc_id"), "nbt") <
-        Sampling.threshold(0.6)
-      val gate = Classify.collectWeights(Classify.trainModel(
-        d.filter(isTrain), col("lang") <=> "en", col("text"), nbBuckets))
-      // the g6 gate convention: keep docs with ABOVE-CORPUS-MEAN target
-      // affinity (rounded on both sides) — scale-free where a fixed
-      // log-odds cut is not (the Laplace term shifts raw scores with
-      // document length and corpus size). Dedup + scoring STAGE once
-      // (the g10/tq7 discipline, r14): the mean and the filter each
-      // consume the scored frame, and the drift account consumes the
-      // gated frame again — unstaged, every consumer re-ran the
-      // pair-graph closure AND the tokenize+NB score.
-      val staged = scratchDir("graft_g8")
-      Dedup.dupClusters(d.select(col("doc_id"), col("text")),
-          col("doc_id"), col("text"), threshold = 0.5)
-        .where(col("kept"))
-        .select(col("doc_id"), col("text"),
-          fround(TF.letBound(TA.tokens(col("text")))(toks =>
-            Classify.scoreColumnFromTokens(toks, gate, nbBuckets)), 6)
-            .as("_lo6"))
-        .write.mode("overwrite").parquet(staged)
-      val scored = s.read.parquet(staged)
-      val gated = scored
-        .crossJoin(broadcast(
-          scored.agg(fround(avg(col("_lo6")), 6).as("_m6"))))
-        .filter(col("_lo6") > col("_m6"))
-        .withColumn("ts",
-          expr("timestampadd(MINUTE, doc_id, TIMESTAMP '2024-01-01 00:00:00')"))
-      graft.streaming.Streams.qualityDrift(gated, col("ts"), col("text"),
-          windowLen = "1 hour", qualityFloor = 0.5)
-        .orderBy(col("window_start"))
-    }),
-
-    "g7x_corpus_health_hll" -> ((s, dir) => {
-      // G7x — g7 with the distinct-token column computed on the a14
-      // HLL union path: the 100 TB form (history never rescans; the
-      // sketch is the mergeable unit). Driver-checkable core (r9
-      // verdict): the exact per-(lang, day) distinct runs alongside at
-      // test SF; the output carries g7's exact columns plus within_tol
-      // driven by the HLL estimate (the HealthSpec 5% bound), so
-      // check.py hash-verifies the whole dashboard AND a sketch
-      // regression flips the boolean; at 100 TB only the HLL path runs.
-      val docs = t(s, dir, "documents")
-      val exact = docs
-        .select(col("lang"), pmod(col("doc_id"), lit(7)).as("day"),
-          explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy(col("lang"), col("day"))
-        .agg(countDistinct(col("tok")).as("_exact"))
-      Health.corpusHealth(docs,
-          col("lang"), pmod(col("doc_id"), lit(7)), col("text"),
-          distinctViaHll = true)
-        .withColumnRenamed("stratum", "lang")
-        .join(broadcast(exact), Seq("lang", "day"))
-        .withColumn("within_tol",
-          abs(col("distinct_toks") - col("_exact")) <=
-            col("_exact") * lit(0.05))
-        .withColumn("distinct_toks", col("_exact"))
-        .drop("_exact")
-        .orderBy(col("lang"), col("day"))
-    }),
-
-    // ---- A4/A5: statistics ------------------------------------------
-    "a4_dist_stats" -> ((s, dir) => {
-      // A4/A5/A7 — mean/median/σ_pop/min/max + Pearson corr
-      // (quality_scoring.py:408-479); exact percentile for oracle parity,
-      // percentile_approx is the 100 TB swap-in.
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          fround(avg(col("l_quantity")), 6).as("avg_qty"),
-          fround(expr("percentile(l_quantity, 0.5)"), 6).as("median_qty"),
-          fround(stddev_pop(col("l_quantity")), 6).as("std_qty"),
-          fround(min(col("l_quantity")), 2).as("min_qty"),
-          fround(max(col("l_quantity")), 2).as("max_qty"),
-          fround(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qty_price"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // ---- W: windows --------------------------------------------------
-    "w1_running_window" -> ((s, dir) => {
-      // Window suite (the engine's survivor-selection primitive, §2.11):
-      // row_number + lag + running sum per user over event time.
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .filter(col("user_id") < 20)
-        .select(
-          col("user_id"), col("event_id"),
-          row_number().over(w).as("rn"),
-          fround(coalesce(lag(col("value"), 1).over(w), lit(0.0)), 2).as("prev_value"),
-          fround(sum(col("value")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2).as("running_value"))
-        .orderBy(col("user_id"), col("rn"))
-    }),
-
-    // ---- R: ruler scoring (paper-shaped inputs derived
-    //         deterministically from `documents` on BOTH sides) --------
-    "r1_ruler_scores" -> ((s, dir) => {
-      // R1-R10 — heuristic quality scoring with injected as-of date.
-      val d = t(s, dir, "documents")
-      val title = trim(substring(col("text"), 1, 40))
-      val abstractC = col("text")
-      val authorCount = col("doc_id") % 5
-      val optionals = col("doc_id") % 3
-      val techTerms = col("doc_id") % 10
-      val asOf = lit("2026-08-12").cast("date")
-      val pubDate = date_sub(asOf, (col("doc_id") % 1000).cast("int"))
-      val isDup = col("doc_id") % 50 === 0
-      // categories derived deterministically so the cs.* branch fires on
-      // a strict subset of rows (doc_id % 3 or % 7).
-      val categories = array(
-        when(col("doc_id") % 3 === 0, lit("cs.DB")).otherwise(lit("stat.ME")),
-        when(col("doc_id") % 7 === 0, lit("cs.LG")).otherwise(lit("math.ST")))
-      // sub-scores materialize at a select boundary: comp feeds three
-      // outputs and every keyword-scan score feeds two (its own column
-      // + the weighted total) — attribute reads instead of re-splicing
-      // each scan tree.
-      val scored = d.select(col("doc_id"), col("text"),
-        Ruler.completenessScore(title, abstractC, authorCount, optionals)
-          .as("comp"),
-        Ruler.recencyScore(pubDate, asOf).as("rec"),
-        Ruler.substanceScore(abstractC, techTerms).as("subst"),
-        Ruler.rigorScore(abstractC).as("rigor"),
-        Ruler.impactScore(abstractC).as("impact"),
-        Ruler.relevanceScore(title, abstractC, categories).as("rel"),
-        Ruler.penalty(title, abstractC, isDup).as("pen"))
-      val total = Ruler.totalScore(col("comp"), col("rec"), col("subst"),
-        col("rigor"), col("impact"), col("rel"), col("pen"))
-      scored.select(
-        col("doc_id"),
-        fround(col("comp"), 6).as("completeness"),
-        fround(col("rec"), 6).as("recency"),
-        fround(col("subst"), 6).as("substance"),
-        fround(col("rigor"), 6).as("rigor"),
-        fround(col("impact"), 6).as("impact"),
-        fround(col("rel"), 6).as("relevance"),
-        fround(col("pen"), 6).as("penalty"),
-        total.as("total_score"),
-        Ruler.tierOf(total).as("tier"),
-        Ruler.confidence(col("comp"), col("text"), techTerms).as("confidence"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- C: compliance / PII ----------------------------------------
-    "c1_pii_scan" -> ((s, dir) => {
-      // C3 — PII detectors + risk rollup over deterministically-dirtied
-      // text (corpus is clean; both sides inject identical PII).
-      val d = t(s, dir, "documents")
-      val dirty = dirtyPii
-      // two select boundaries: each regex detector runs ONCE (risk and
-      // density then read the materialized counts, instead of splicing
-      // every detector tree into themselves a second and third time)
-      d.select(col("doc_id"), dirty.as("dirty"))
-        .select(col("doc_id"),
-          Compliance.piiCount(col("dirty"), "email").as("n_email"),
-          Compliance.piiCount(col("dirty"), "phone").as("n_phone"),
-          Compliance.piiCount(col("dirty"), "ip").as("n_ip"),
-          Compliance.piiCount(col("dirty"), "ssn").as("n_ssn"),
-          Compliance.piiCount(col("dirty"), "credential_url").as("n_cred"),
-          TF.wordCount(col("dirty")).as("n_words"))
-        .select(
-          col("doc_id"), col("n_email"), col("n_phone"), col("n_ssn"),
-          Compliance.riskLevel(col("n_email"), col("n_phone"), col("n_ip"),
-            col("n_ssn"), col("n_cred")).as("risk"),
-          fround(Compliance.piiDensity(
-            col("n_email") + col("n_phone") + col("n_ip") + col("n_ssn") +
-              col("n_cred"),
-            col("n_words")), 6).as("pii_density"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "c3_record_fingerprint" -> ((s, dir) => {
-      // C1 — md5 record fingerprint over a fixed field order
-      // (provenance_compliance.py:91-102), plus the dup-detection rollup
-      // it exists for: fingerprints shared by >1 part.
-      val p = t(s, dir, "part")
-      p.select(col("p_partkey"),
-          Compliance.fingerprint(col("p_name"), col("p_brand"), col("p_type"))
-            .as("fp"))
-        .groupBy(col("fp")).agg(count(lit(1)).as("n"),
-          min(col("p_partkey")).as("first_key"))
-        .filter(col("n") > 1)
-        .orderBy(col("fp"))
-    }),
-
-    "c4_provenance" -> ((s, dir) => {
-      // C2 — provenance + licensing struct append with the reference's
-      // sort_keys-JSON md5 fingerprint; dynamic nested fields flattened
-      // for the oracle. Timestamps injected for determinism.
-      val d = t(s, dir, "documents")
-      val toks = TA.tokens(col("text"))
-      val paperId = concat(lit("arxiv:"), col("doc_id").cast("string"))
-      val title = trim(substring(col("text"), 1, 40))
-      // try_element_at: an empty/whitespace-only text tokenizes to an
-      // empty array — ANSI element_at would throw, DuckDB tk[1] yields
-      // NULL; NULL then propagates through concat/md5 on both engines.
-      val firstAuthor = concat(lit("dr. "), try_element_at(toks, lit(1)))
-      val pubDate = concat(lit("2026-01-"),
-        lpad((col("doc_id") % 28 + 1).cast("string"), 2, "0"))
-      val fp = Compliance.paperFingerprint(title, firstAuthor, pubDate, paperId)
-      val prov = Compliance.provenance(paperId,
-        concat(lit("https://arxiv.org/abs/"), col("doc_id").cast("string")),
-        fp, lit("2026-08-12T00:00:00"))
-      val lic = Compliance.licensing(paperId)
-      d.select(col("doc_id"),
-        prov.getField("processing").getField("fingerprint").as("fingerprint"),
-        prov.getField("source").getField("platform").as("platform"),
-        prov.getField("source").getField("identifier").as("identifier"),
-        array_join(prov.getField("processing").getField("processing_steps"),
-          ",").as("steps"),
-        prov.getField("history").getField("version").cast("long").as("version"),
-        size(lic.getField("allowed_uses")).cast("long").as("n_allowed"),
-        lic.getField("attribution_requirements").getField("suggested_format")
-          .as("attribution"),
-        lic.getField("compliance_status").getField("attribution_satisfied")
-          .as("attribution_satisfied"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "c5_pii_findings" -> ((s, dir) => {
-      // T14/C3 — the reference's PII findings map with MASKED samples
-      // (provenance_compliance.py:219-243: map<pii_type, struct(count,
-      // sample_matches)>), flattened to (doc, type) rows — map values
-      // hash unstably across engines. Only types that fired emit a row;
-      // the first match masks via maskPii (first 2 + "***" + last 2).
-      val d = t(s, dir, "documents")
-      val types = TF.piiPatterns.keys.toSeq.sorted
-      d.select(col("doc_id"), dirtyPii.as("dirty"))
-        // one select boundary: every detector regex runs exactly once,
-        // then the explode fans the materialized matches into rows.
-        .select(col("doc_id"), explode(array(types.map(k =>
-          struct(lit(k).as("pii_type"),
-            TF.piiMatches(col("dirty"), k).as("ms"))): _*)).as("f"))
-        .select(col("doc_id"),
-          col("f").getField("pii_type").as("pii_type"),
-          size(col("f").getField("ms")).cast("long").as("n_matches"),
-          // try_element_at: rows with zero matches are filtered AFTER
-          // this projection evaluates — ANSI element_at would throw.
-          TF.maskPii(try_element_at(col("f").getField("ms"), lit(1)))
-            .as("sample_masked"))
-        .filter(col("n_matches") > 0)
-        .orderBy(col("doc_id"), col("pii_type"))
-    }),
-
-    "c6_copyright" -> ((s, dir) => {
-      // C4 — copyright heuristics (provenance_compliance.py:267-293):
-      // platform flag from the url, journal_reference found/not_found
-      // from the comments. Inputs derive deterministically: every third
-      // doc a non-arXiv url, every fifth a journal mention appended to
-      // the text prefix (the prefix itself may also mention one — fine,
-      // both engines see identical strings).
-      val d = t(s, dir, "documents")
-      val url = when(col("doc_id") % 3 === 0,
-        concat(lit("https://example.com/"), col("doc_id").cast("string")))
-        .otherwise(concat(lit("https://arxiv.org/abs/"), col("doc_id").cast("string")))
-      val comments = concat(substring(col("text"), 1, 60),
-        when(col("doc_id") % 5 === 0, lit(" Accepted, Journal of Data."))
-          .otherwise(lit("")))
-      d.select(col("doc_id"),
-        Compliance.isArxivUrl(url).as("is_arxiv"),
-        when(Compliance.mentionsJournal(comments), "found")
-          .otherwise("not_found").as("journal_reference"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "c7_k_anonymity" -> ((s, dir) => {
-      // C7 — k-anonymity census + one generalization step (beyond the
-      // reference; the privacy gate a training corpus passes before
-      // release): customers whose quasi-identifier class
-      // (nation, segment, 1000-unit balance band) has fewer than k=5
-      // members are re-identifiable; generalizing the band to NULL for
-      // exactly those rows coarsens them onto (nation, segment) and the
-      // census re-measures. Both stages are plain groupBy counts —
-      // linear, shuffle-on-QI, no row blowup at any scale. Determinism:
-      // the band comes from exact integer cents (floor(x·100+½), then a
-      // +100000 shift so `div` and DuckDB `//` agree — both args
-      // non-negative).
-      val c = t(s, dir, "customer").select(
-        col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
-        expr("(cast(floor(c_acctbal * 100 + 0.5) as bigint) + 100000)" +
-          " div 100000").as("band"))
-      val cls = c.groupBy(col("c_nationkey"), col("c_mktsegment"),
-          col("band"))
-        .agg(count(lit(1)).as("class_n"))
-      def census(classes: DataFrame, stage: String) =
-        classes.agg(
-          lit(stage).as("stage"),
-          count(lit(1)).as("n_classes"),
-          sum(when(col("class_n") < 5, 1L).otherwise(0L))
-            .as("n_small_classes"),
-          sum(when(col("class_n") < 5, col("class_n")).otherwise(0L))
-            .as("n_rows_at_risk"),
-          min(col("class_n")).as("min_class"))
-      val gen = c.join(cls, Seq("c_nationkey", "c_mktsegment", "band"))
-        .select(col("c_nationkey"), col("c_mktsegment"),
-          when(col("class_n") < 5, lit(null).cast("long"))
-            .otherwise(col("band")).as("band"))
-        .groupBy(col("c_nationkey"), col("c_mktsegment"), col("band"))
-        .agg(count(lit(1)).as("class_n"))
-      census(cls, "raw").unionAll(census(gen, "generalized"))
-        .select(col("stage"), col("n_classes"), col("n_small_classes"),
-          col("n_rows_at_risk"), col("min_class"))
-        .orderBy(col("stage"))
-    }),
-
-    "c8_license_rollup" -> ((s, dir) => {
-      // C8 — license propagation through sequence packing (beyond the
-      // reference): a packed training sequence inherits the MOST
-      // RESTRICTIVE license among the documents that start in it
-      // (max over the shared Compliance.licenseLadder ranks), and
-      // bins touching cc-by-nc or proprietary get flagged — the
-      // release gate between g2's packed corpus and a commercial
-      // training run. Same bucketed two-pass packing as ta6 (no
-      // per-language whole-corpus sorts); per-doc licenses derive
-      // from doc_id so the oracle replays ground truth.
-      val ladder = Compliance.licenseLadder
-      val d = t(s, dir, "documents").select(col("doc_id"), col("lang"),
-        TA.tokenCount(col("text")).cast("long").as("n_tok"))
-      Packing.packedStartsBucketed(d, col("lang"), col("doc_id"),
-          col("n_tok"), bucketWidth = 4096L)
-        .withColumn("bin", expr("start_tok div 2048"))
-        .withColumn("lrank", (col("doc_id") % ladder.size).cast("int"))
-        .groupBy(col("lang"), col("bin")).agg(
-          count(lit(1)).as("n_docs"),
-          max(col("lrank")).as("_eff"))
-        .select(col("lang"), col("bin"), col("n_docs"),
-          col("_eff").cast("long").as("eff_rank"),
-          element_at(array(ladder.map(lit): _*), col("_eff") + 1)
-            .as("effective_license"),
-          (col("_eff") >= 5).as("restricted"))
-        .orderBy(col("lang"), col("bin"))
-    }),
-
-    "c9_takedown_closure" -> ((s, dir) => {
-      // C9 — takedown propagation through near-dup clusters (beyond
-      // the reference): a DMCA/opt-out notice names ONE copy, but
-      // removing only that row leaves its near-duplicates serving the
-      // same content — so the removal unit is the d14 CLUSTER, not the
-      // doc. Every cluster containing ≥1 noticed doc is removed whole:
-      // status 'direct' (named in a notice), 'closure' (removed as a
-      // near-copy of a noticed doc), 'kept'. Notices sample
-      // deterministically by keyHash (the salt-split discipline) so
-      // both engines see the identical notice list. Scale shape: the
-      // closure is the banded d6 pair graph + large-star/small-star
-      // rounds (no all-pairs, no chain-length iteration); the hit
-      // bit is one max over cluster_id — a fine-grained key whose
-      // group size is cluster size, never corpus size.
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val labeled = Dedup.dupClusters(docs, col("doc_id"), col("text"),
-          threshold = 0.5)
-        .withColumn("direct",
-          Sampling.keyHash(col("doc_id"), "dmca") <
-            Sampling.threshold(0.1))
-      labeled
-        .withColumn("hit", max(when(col("direct"), 1L).otherwise(0L))
-          .over(Window.partitionBy(col("cluster_id"))))
-        .select(col("doc_id"), col("cluster_id"),
-          when(col("direct"), "direct")
-            .when(col("hit") === 1L, "closure")
-            .otherwise("kept").as("status"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "c10_k_anonymity" -> ((s, dir) => {
-      // C10 — k-anonymity equivalence-class audit (Sweeney 2002;
-      // beyond the reference): before releasing a per-user activity
-      // extract, census the quasi-identifier classes — here the
-      // generalized tuple (first-active day, most-frequent event type)
-      // — and flag every class smaller than k = 5, whose members a
-      // linker could re-identify. The dominant type breaks ties by
-      // (count desc, type asc NULLS LAST — pinned explicitly on both
-      // engines: Spark's asc default is nulls-first, DuckDB's is
-      // nulls-last, so a null event_type tied on count would silently
-      // diverge under engine defaults). Scale shape: two user-keyed
-      // aggregates + one
-      // per-user top-1 window (partition = one user's ≤5 type rows),
-      // then a bounded (days × types) class census — user rows never
-      // shuffle more than twice, output bounded regardless of corpus.
-      val ev = t(s, dir, "events").select(col("user_id"),
-        unix_micros(date_trunc("day", col("ts"))).as("day_us"),
-        col("event_type"))
-      val first = ev.groupBy(col("user_id"))
-        .agg(min(col("day_us")).as("cohort_us"))
-      val top = ev.groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("_rk", row_number().over(
-          Window.partitionBy(col("user_id"))
-            .orderBy(col("c").desc, col("event_type").asc_nulls_last)))
-        .filter(col("_rk") === 1)
-        .select(col("user_id"), col("event_type").as("top_type"))
-      first.join(top, "user_id")
-        .groupBy(col("cohort_us"), col("top_type"))
-        .agg(count(lit(1)).as("n_users"))
-        .withColumn("at_risk", col("n_users") < lit(5L))
-        .orderBy(col("cohort_us"), col("top_type").asc_nulls_last)
-    }),
-
-    "d25_keep_best" -> ((s, dir) => {
-      // D25 — QUALITY-AWARE survivorship over the near-dup closure
-      // (beyond the reference; the SlimPajama longest-wins rule): d14
-      // keeps the min-id member per cluster — arbitrary; production
-      // dedup keeps the BEST copy. Survivor = argmax by
-      // (n_chars desc, doc_id asc) inside each cluster — one
-      // row_number window partitioned by cluster_id (group size =
-      // cluster size, never corpus size), pure integer ordering, both
-      // tie levels pinned. This closes the survivorship-policy seam
-      // the streaming cluster-label registry deliberately leaves to
-      // downstream.
-      val d = t(s, dir, "documents")
-      Dedup.dupClusters(d.select(col("doc_id"), col("text")),
-          col("doc_id"), col("text"), threshold = 0.5)
-        .select(col("doc_id"), col("cluster_id"))
-        .join(d.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
-        .withColumn("kept", row_number().over(
-          Window.partitionBy(col("cluster_id"))
-            .orderBy(col("n_chars").desc, col("doc_id"))) === 1)
-        .select(col("doc_id"), col("cluster_id"), col("n_chars"),
-          col("kept"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "w7_late_census" -> ((s, dir) => {
-      // W7 — watermark sizing census (beyond the reference): before
-      // picking a streaming watermark delay δ, measure what δ WOULD
-      // drop — per hourly window and event type, how many events
-      // arrive after window_end + δ and how late the stragglers run.
-      // Arrival lag synthesizes deterministically from md5(event_id)
-      // (0..1799 s), so both engines score identical arrivals. All
-      // output cells are BIGINT sums/maxes — order-exact — and the
-      // census is one groupBy over the raw stream: embarrassingly
-      // parallel at any scale, the batch probe you run over yesterday's
-      // data before committing δ to `withWatermark`.
-      val deltaUs = 600L * 1000000L
-      val ev = t(s, dir, "events").select(
-        col("event_type"),
-        unix_micros(col("ts")).as("tus"),
-        unix_micros(date_trunc("hour", col("ts"))).as("win_us"),
-        (pmod(conv(substring(md5(concat(lit("arr:"),
-            col("event_id").cast("string"))), 1, 7), 16, 10)
-          .cast("long"), lit(1800L)) * 1000000L).as("lag_us"))
-      ev.groupBy(col("win_us"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n_total"),
-          sum(when(col("tus") + col("lag_us") >
-              col("win_us") + 3600000000L + deltaUs, 1L).otherwise(0L))
-            .as("n_late"),
-          max(col("lag_us")).as("max_lag_us"),
-          sum(col("lag_us")).as("sum_lag_us"))
-        .orderBy(col("win_us"), col("event_type"))
-    }),
-
-    "a13_rag_report" -> ((s, dir) => {
-      // A13/V6 — RAG-vs-baseline evaluation report rollup
-      // (rag.ipynb generate_report): mean scores, improvement rates
-      // (share of questions improved), auto-vs-api Pearson correlation,
-      // token totals. Per-question scores derive from md5 so both
-      // engines evaluate identical inputs.
-      def hx(tag: String) = conv(
-        substring(md5(concat(lit(tag), col("text"))), 1, 2), 16, 10)
-        .cast("int")
-      val scored = t(s, dir, "documents").select(
-        (hx("ar").cast("double") / 255.0).as("ar"),
-        (hx("ab").cast("double") / 255.0).as("ab"),
-        ((hx("pr") % 101).cast("double") / 10.0).as("pr"),
-        ((hx("pb") % 101).cast("double") / 10.0).as("pb"),
-        (expr("length(text) div 4") + lit(150)).as("tok"))
-      scored.agg(
-        count(lit(1)).as("total_questions"),
-        fround(avg(col("ar")), 6).as("avg_auto_score_rag"),
-        fround(avg(col("ab")), 6).as("avg_auto_score_baseline"),
-        fround(avg(col("pr")), 6).as("avg_api_score_rag"),
-        fround(avg(col("pb")), 6).as("avg_api_score_baseline"),
-        fround(avg(col("ar") - col("ab")), 6).as("avg_auto_improvement"),
-        fround(avg(col("pr") - col("pb")), 6).as("avg_api_improvement"),
-        fround(sum(when(col("ar") - col("ab") > 0, 1).otherwise(0))
-          .cast("double") / count(lit(1)), 6).as("auto_improvement_rate"),
-        fround(sum(when(col("pr") - col("pb") > 0, 1).otherwise(0))
-          .cast("double") / count(lit(1)), 6).as("api_improvement_rate"),
-        fround(corr(col("ar"), col("pr")), 6).as("correlation_auto_vs_api"),
-        sum(col("tok")).as("total_tokens_used"))
-    }),
-
-    "c2_quality_issues" -> ((s, dir) => {
-      // C5 — per-row issue arrays + severity, aggregated to issue
-      // frequencies (A12 explode-count) and severity rollup (A10).
-      val d = t(s, dir, "documents")
-      val title = trim(substring(col("text"), 1, 10))
-      val dateStr = when(col("doc_id") % 11 === 0, lit("not-a-date"))
-        .otherwise(concat(lit("2026-0"), (col("doc_id") % 9 + 1).cast("string"),
-          lit("-15")))
-      val issues = Compliance.qualityIssues(title, col("text"), dateStr)
-      d.select(col("doc_id"), explode(issues).as("issue"))
-        .groupBy(col("issue")).agg(count(lit(1)).as("n"))
-        .orderBy(col("issue"))
-    }),
-
-    // ---- P: alignment / gates ---------------------------------------
-    "p1_align_defaults" -> ((s, dir) => {
-      // P1 — fixed-schema projection with defaults: missing column
-      // materializes, nulls coalesce, extras drop.
-      val d = t(s, dir, "documents")
-        .withColumn("lang", nullif(col("lang"), lit("en")))
-      Align.alignTo(d, Seq(
-        "doc_id" -> lit(-1L),
-        "lang" -> lit("und"),
-        "license" -> lit("unknown"),
-        "n_chars" -> lit(0L)))
-        .orderBy(col("doc_id"))
-    }),
-
-    "p3_quality_gate" -> ((s, dir) => {
-      // P3 — quality gate with independent drop-reason accounting in one
-      // aggregate pass (no row ever leaves the executor).
-      val d = t(s, dir, "documents")
-      Align.gateReasons(d, Seq(
-        "too_short" -> (col("n_chars") >= 120),
-        "few_tokens" -> (TA.tokenCount(col("text")) >= 20),
-        "bad_source" -> (col("source") =!= "src0")))
-    }),
-
-    // ---- D5/D6: array dedup -----------------------------------------
-    "d5_array_dedup" -> ((s, dir) => {
-      // D5 — order-preserving in-array dedup + cap; D6 — set-style
-      // title-cased distinct (sorted for determinism).
-      val toks = TA.tokens(col("text"))
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        array_join(slice(array_distinct(toks), 1, 5), ",").as("top5_tokens"),
-        array_join(
-          array_sort(array_distinct(transform(toks, x => initcap(x)))),
-          ",").as("fields_clean"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- A: aggregation suite ---------------------------------------
-    "a6_distinct_tokens" -> ((s, dir) => {
-      // A6 — distinct count over a flattened array column (exact for the
-      // oracle; approx_count_distinct is the 100 TB swap-in).
-      t(s, dir, "documents")
-        .select(col("lang"), explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy(col("lang"))
-        .agg(countDistinct(col("tok")).as("n_distinct_tokens"))
-        .orderBy(col("lang"))
-    }),
-
-    "a6x_distinct_approx" -> ((s, dir) => {
-      // A6 approx twin — approx_count_distinct (HLL++) as the measured
-      // 100 TB substitute for a6's exact countDistinct. Exact distinct
-      // = one extra shuffle of every (lang, tok) pair for dedup; the
-      // sketch merges per partition, so at corpus scale this is the
-      // only viable form. Driver-checkable core (r9 verdict): the same
-      // agg computes the exact count alongside at test SF; output =
-      // (exact, within_tol), within_tol from the sketch at the default
-      // rsd 0.05 → 3σ ⇒ 15%.
-      t(s, dir, "documents")
-        .select(col("lang"), explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy(col("lang"))
-        .agg(countDistinct(col("tok")).as("n_distinct_tokens"),
-          approx_count_distinct(col("tok")).as("_est"))
-        .select(col("lang"), col("n_distinct_tokens"),
-          (abs(col("_est") - col("n_distinct_tokens")) <=
-            col("n_distinct_tokens") * lit(0.15)).as("within_tol"))
-        .orderBy(col("lang"))
-    }),
-
-    "a7_iqr_outliers" -> ((s, dir) => {
-      // A7 — IQR outlier detection: exact quartiles per group, then one
-      // pass counting rows outside [Q1-1.5·IQR, Q3+1.5·IQR].
-      val li = t(s, dir, "lineitem")
-      val q = li.groupBy(col("l_returnflag")).agg(
-        expr("percentile(l_extendedprice, 0.25)").as("q1"),
-        expr("percentile(l_extendedprice, 0.75)").as("q3"),
-        count(lit(1)).as("n_total"))
-      val iqr = col("q3") - col("q1")
-      val lo = col("q1") - iqr * 1.5
-      val hi = col("q3") + iqr * 1.5
-      // broadcast the 3-row quartile side explicitly: size estimates on a
-      // narrow parquet scan otherwise let Catalyst build the hashed
-      // relation from the FACT side (BuildLeft over all of lineitem).
-      li.join(broadcast(q), "l_returnflag")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          fround(first(col("q1")), 6).as("q1"),
-          fround(first(col("q3")), 6).as("q3"),
-          sum(when(col("l_extendedprice") < lo || col("l_extendedprice") > hi,
-            1L).otherwise(0L)).as("n_outliers"),
-          fround(sum(when(col("l_extendedprice") < lo || col("l_extendedprice") > hi,
-            1.0).otherwise(0.0)) * 100.0 / first(col("n_total")), 6).as("pct_outliers"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "a7x_iqr_approx" -> ((s, dir) => {
-      // A7 approx twin — approx_percentile as the documented 100 TB
-      // substitute for exact quartiles: a single-pass mergeable sketch
-      // (partial agg per partition + merge), no per-group sorted
-      // materialization, so it scales to corpus-sized groups where
-      // exact percentile cannot.
-      //
-      // SCALE GATE (r10 verdict): the exact-quartile twin that makes
-      // this query driver-checkable runs ONLY at/below the
-      // verification SF (lineitem ≤ a7xExactMaxRows — sf0.01's ~60k
-      // sits under, sf0.1's ~600k above). Above it the query measures
-      // the pure sketch path it advertises — computing the exact
-      // quartiles alongside had made a7x COST MORE than the exact a7
-      // it exists to undercut. The oracle mirrors by contract: the
-      // driver evaluates it only at the verification SF, where the
-      // exact branch is what runs; the sketch branch's outputs keep
-      // the same schema (sketch quartiles drive the bounds;
-      // within_tol, verified at verification SF, reports true).
-      val li = t(s, dir, "lineitem")
-      val verify = li.count() <= a7xExactMaxRows
-      val q =
-        if (verify)
-          li.groupBy(col("l_returnflag")).agg(
-            expr("percentile(l_extendedprice, 0.25)").as("q1"),
-            expr("percentile(l_extendedprice, 0.75)").as("q3"),
-            expr("approx_percentile(l_extendedprice, 0.25, 10000)").as("aq1"),
-            expr("approx_percentile(l_extendedprice, 0.75, 10000)").as("aq3"),
-            count(lit(1)).as("n_total"))
-        else
-          li.groupBy(col("l_returnflag")).agg(
-            expr("approx_percentile(l_extendedprice, 0.25, 10000)").as("q1"),
-            expr("approx_percentile(l_extendedprice, 0.75, 10000)").as("q3"),
-            count(lit(1)).as("n_total"))
-      val iqr = col("q3") - col("q1")
-      val lo = col("q1") - iqr * 1.5
-      val hi = col("q3") + iqr * 1.5
-      val withinTol =
-        if (verify)
-          (max(abs(col("aq1") - col("q1"))) <= first(col("q1")) * lit(0.01) &&
-            max(abs(col("aq3") - col("q3"))) <= first(col("q3")) * lit(0.01))
-        else lit(true)
-      li.join(broadcast(q), "l_returnflag")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          fround(first(col("q1")), 6).as("q1"),
-          fround(first(col("q3")), 6).as("q3"),
-          sum(when(col("l_extendedprice") < lo || col("l_extendedprice") > hi,
-            1L).otherwise(0L)).as("n_outliers"),
-          fround(sum(when(col("l_extendedprice") < lo || col("l_extendedprice") > hi,
-            1.0).otherwise(0.0)) * 100.0 / first(col("n_total")), 6).as("pct_outliers"),
-          withinTol.as("within_tol"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "a8_completeness" -> ((s, dir) => {
-      // A8 — per-field completeness stats (enhance_fields_of_study.py
-      // analyze step: share of rows with each field populated). Sparse
-      // fields are derived deterministically so completeness is
-      // non-trivial on the dense test corpus; stack() unpivots to one
-      // row per field, aggregated in a single pass.
-      val d = t(s, dir, "documents").select(
-        when(col("doc_id") % 7 =!= 0, trim(substring(col("text"), 1, 30)))
-          .as("title"),
-        when(col("doc_id") % 5 =!= 0, col("lang")).as("lang"),
-        when(col("doc_id") % 3 =!= 0, col("source")).as("source"),
-        when(col("n_chars") > 400, col("text")).as("abstract"))
-      d.selectExpr(
-        """stack(4,
-             'abstract', abstract IS NOT NULL,
-             'lang', lang IS NOT NULL,
-             'source', source IS NOT NULL,
-             'title', title IS NOT NULL) AS (field, present)""")
-        .groupBy(col("field"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("present"), 1L).otherwise(0L)).as("n_present"),
-          fround(avg(when(col("present"), 1.0).otherwise(0.0)) * 100, 4)
-            .as("pct_complete"))
-        .orderBy(col("field"))
-    }),
-
-    "a10_rollup_argmax" -> ((s, dir) => {
-      // A10 — per-group rollup with a deterministic argmax (max_by over a
-      // tie-proof padded key) and an all-rows predicate (bool_and).
-      val d = t(s, dir, "documents")
-      val counts = d.groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("cnt"))
-      counts.groupBy(col("lang"))
-        .agg(
-          sum(col("cnt")).as("n_docs"),
-          max_by(col("source"),
-            concat(format_string("%08d", col("cnt")), col("source")))
-            .as("top_source"))
-        .join(
-          d.groupBy(col("lang"))
-            .agg(bool_and(col("n_chars") > 50).as("all_nontrivial")),
-          "lang")
-        .select(col("lang"), col("n_docs"), col("top_source"),
-          col("all_nontrivial"))
-        .orderBy(col("lang"))
-    }),
-
-    "a12_top_tokens" -> ((s, dir) => {
-      // A12 — explode + frequency count + deterministic global top-k
-      // (TakeOrderedAndProject over the partial-agg output).
-      t(s, dir, "documents")
-        .select(explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("tok"))
-        .limit(20)
-    }),
-
-    // ---- TA: text analysis ------------------------------------------
-    "ta1_language_id" -> ((s, dir) => {
-      // Language-ID heuristic (marker-stopword argmax + CJK check) over
-      // every document; zero shuffles. Tokens materialize at a select
-      // boundary so the four marker counts share one tokenization.
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("text"),
-          TA.tokens(col("text")).as("toks"))
-        .select(col("doc_id"),
-          TA.languageIdFromTokens(col("toks"), col("text")).as("lang_pred"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta2_text_stats" -> ((s, dir) => {
-      // Token counting (whitespace + BPE-ish regex) and quality scoring
-      // (length/stopword/diversity/punct) — the per-doc text-stat pass a
-      // training-data pipeline runs before filtering.
-      // One tokenization per row, shared by every token-based stat via a
-      // select boundary (splicing tokens(text) into each stat would
-      // re-tokenize per stat).
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("text"),
-          TA.tokens(col("text")).as("toks"))
-        .select(
-          col("doc_id"),
-          size(col("toks")).as("n_tokens"),
-          TA.bpeTokenCount(col("text")).as("n_bpe_tokens"),
-          fround(TA.stopwordRatioFromTokens(col("toks")), 6).as("stop_ratio"),
-          fround(TA.punctRatio(col("text")), 6).as("punct_ratio"),
-          fround(TA.typeTokenRatioFromTokens(col("toks")), 6).as("ttr"),
-          TA.qualityScoreFromTokens(col("toks"), col("text")).as("quality"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta5_repetition" -> ((s, dir) => {
-      // Gopher-style repetition filters (top-token share, repeated-
-      // bigram share) — the boilerplate/keyword-stuffing signals a
-      // training-data pipeline gates on. Tokens materialize once at a
-      // select boundary; both signals read the attribute.
-      t(s, dir, "documents")
-        .select(col("doc_id"), TA.tokens(col("text")).as("toks"))
-        .select(col("doc_id"),
-          fround(TA.topTokenFraction(col("toks")), 6).as("top_token_frac"),
-          fround(TA.dupBigramFraction(col("toks")), 6).as("dup_bigram_frac"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta16_dup_lines" -> ((s, dir) => {
-      // Gopher A1.1 duplicate-line repetition signals (beyond the
-      // reference): occurrence fraction + character fraction of
-      // beyond-first duplicate lines, per doc — the listicle/template
-      // detector the token-level ta5 signals miss. The corpus has no
-      // newlines, so lined text synthesizes from doc_id identically on
-      // both sides (the d13 precedent): a 40-char head, one universal
-      // line, an every-3rd-doc duplicate of it, an every-5th-doc
-      // duplicate of the HEAD (long line — spikes the char fraction
-      // where the short-line dup barely moves it), and a trailing blank
-      // that must not count as a unit. Whole signal is an array
-      // expression fused into the scan: no explode, no shuffle.
-      val lined = t(s, dir, "documents").select(col("doc_id"),
-        concat_ws("\n",
-          substring(col("text"), 1, 40),
-          lit("all rights reserved"),
-          when(pmod(col("doc_id"), lit(3)) === 0, lit("all rights reserved"))
-            .otherwise(concat(lit("unique "), col("doc_id").cast("string"))),
-          when(pmod(col("doc_id"), lit(5)) === 0,
-            substring(col("text"), 1, 40))
-            .otherwise(concat(lit("tail "), col("doc_id").cast("string"))),
-          lit("")).as("text"))
-      lined
-        .select(col("doc_id"), TA.textUnits(col("text"), "\n").as("us"))
-        .select(col("doc_id"),
-          size(col("us")).as("n_lines"),
-          fround(TA.dupUnitFraction(col("us")), 6).as("dup_line_frac"),
-          fround(TA.dupUnitCharFraction(col("us")), 6).as("dup_char_frac"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta3_fingerprint" -> ((s, dir) => {
-      // Order-sensitive rolling-hash document fingerprint (md5-derived,
-      // mod 1e9+7) — exact-dup detection key that any engine can
-      // recompute. Runs the native single-pass expression; the
-      // declarative twin (TA.fingerprint) is pinned bit-identical in
-      // ExpressionsSpec.
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.expressions.TokenFingerprint(col("text")).as("fp"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ta4_ngram_jaccard" -> ((s, dir) => {
-      // Character-3-gram Jaccard between consecutive docs — the n-gram
-      // near-dup signal as a join-side expression.
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val a = d.as("a"); val b = d.as("b")
-      a.filter(col("a.doc_id") < 200)
-        .join(b, col("b.doc_id") === col("a.doc_id") + 1)
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-          fround(TA.ngramJaccard(col("a.text"), col("b.text"), 3), 6).as("sim"))
-        .orderBy(col("id_a"))
-    }),
-
-    // ---- L: enrichment harness (deterministic mock client) ----------
-    "l7_rag_pipeline" -> ((s, dir) => {
-      // L7 — end-to-end RAG orchestration (rag.ipynb answer_question):
-      // store build → top-3 cosine retrieval per question → DISTRIBUTED
-      // context assembly (collect_list per query, never a driver loop) →
-      // mock answer through the enrichment harness → V5 auto metrics.
-      // Similarity is embedded in the context as integer per-mille
-      // (floor(cos·1000 + 0.5)) because float→string formatting is
-      // engine-specific; the information content matches rag.ipynb:725.
-      val emb = t(s, dir, "embeddings")
-      val docs = t(s, dir, "documents")
-      val store = docs.join(emb, col("doc_id") === col("vec_id"))
-        .select(col("doc_id"), trim(substring(col("text"), 1, 40)).as("title"),
-          col("text").as("doc_text"), col("embedding"))
-      val queries = emb.filter(col("vec_id") < 5)
-        .join(docs, col("vec_id") === col("doc_id"))
-        .select(col("vec_id").as("query_id"),
-          concat(lit("What does the corpus say about: "),
-            array_join(slice(TA.tokens(col("text")), 1, 6), " "))
-            .as("question"),
-          col("embedding").as("qv"))
-      val top = Similarity.topKPerQuery(
-        store, col("doc_id"), col("embedding"),
-        queries, col("query_id"), col("qv"), 3)
-      val ctx = top.join(store.drop("embedding"), "doc_id")
-        .join(queries.select(col("query_id"), col("question")), "query_id")
-        .groupBy(col("query_id"), col("question"))
-        .agg(array_join(transform(
-          array_sort(collect_list(struct(col("rank"), col("title"),
-            col("doc_text"), col("cosine")))),
-          e => concat(lit("["), e.getField("rank"), lit("] (sim "),
-            floor(e.getField("cosine") * 1000 + 0.5).cast("int"), lit("m) "),
-            e.getField("title"), lit("\n"), e.getField("doc_text"))),
-          "\n\n").as("context"))
-      val answered = Enrich.enrichColumn(ctx,
-        concat(lit("Answer: "), col("question"), lit(" | Context: "),
-          col("context")),
-        "answer", new Enrich.MockKeywordClient(12))
-      answered
-        .select(col("query_id"), col("question"), col("answer"),
-          length(col("context")).as("context_chars"),
-          Rag.autoMetrics(col("question"), col("answer")).as("m"))
-        .select(col("query_id"), col("question"), col("answer"),
-          col("context_chars"),
-          col("m.answer_words").as("answer_words"),
-          col("m.keyword_overlap").as("keyword_overlap"),
-          col("m.n_citations").as("n_citations"),
-          col("m.auto_score").as("auto_score"))
-        .orderBy(col("query_id"))
-    }),
-
-    "l2_mock_keywords" -> ((s, dir) => {
-      // L2 — the full enrichment shape: prompt-build → mapPartitions call
-      // through the (mock) LlmClient → declarative post-validation
-      // (stop-list, length bounds, order-preserving dedup, cap 8).
-      val enriched = Enrich.enrichColumn(
-        t(s, dir, "documents"),
-        concat(lit("Extract keywords: "), col("text")), "raw_kw",
-        new Enrich.MockKeywordClient(12))
-      enriched.select(col("doc_id"),
-        array_join(Enrich.validateKeywords(col("raw_kw")), ",").as("keywords"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "l3_mock_scores" -> ((s, dir) => {
-      // L3 — score enrichment: mock client returns md5(prompt); hex
-      // digits become pseudo-scores, then the reference's validation
-      // (clamp 0-10, derived half-up overall, default confidence).
-      val enriched = Enrich.enrichColumn(
-        t(s, dir, "documents"),
-        concat(lit("Score: "), col("text")), "resp",
-        new Enrich.MockScoreClient)
-      def hv(i: Int) =
-        conv(substring(col("resp"), i, 1), 16, 10).cast("int")
-      enriched
-        .withColumn("s", Enrich.validatedScores(hv(1), hv(2), hv(3), hv(4)))
-        .select(col("doc_id"), col("s.novelty").as("novelty"),
-          col("s.technical_depth").as("technical_depth"),
-          col("s.clarity").as("clarity"),
-          col("s.impact_potential").as("impact_potential"),
-          col("s.overall_score").as("overall_score"),
-          col("s.confidence").as("confidence"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "l1_mock_fields" -> ((s, dir) => {
-      // L1 — fields-of-study enrichment: the mock client answers in
-      // three shapes (strict JSON array / chatty quoted reply / bare
-      // comma text), so the validator's parse-vs-rescue dispatch and
-      // both rescue tiers are oracle-covered.
-      val enriched = Enrich.enrichColumn(
-        t(s, dir, "documents"),
-        concat(lit("Extract fields: "), col("text")), "raw_fields",
-        new Enrich.MockFieldsClient)
-      val fields = Enrich.validateFields(col("raw_fields"))
-      enriched.select(col("doc_id"),
-        array_join(fields, ",").as("fields"),
-        size(fields).cast("long").as("n_fields"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "l5_judge_normalize" -> ((s, dir) => {
-      // L5 — judge-score normalization over three response classes
-      // (clean JSON / JSON buried in chatter with missing keys / no
-      // JSON): missing keys default 0, normalized = round(ov/30*10, 2).
-      val enriched = Enrich.enrichColumn(
-        t(s, dir, "documents"),
-        concat(lit("Judge: "), col("text")), "resp",
-        new Enrich.MockJudgeClient)
-      val v = Enrich.normalizedJudgeScores(col("resp"))
-      enriched.select(
-        col("doc_id") +:
-          Enrich.judgeDimensions.map(n => v.getField(n).as(n)) :+
-          v.getField("overall_score").as("overall_score") :+
-          v.getField("overall_score_normalized")
-            .as("overall_score_normalized"): _*)
-        .orderBy(col("doc_id"))
-    }),
-
-    "l4_summary_validate" -> ((s, dir) => {
-      // L4 — contribution-summary validation: long problem text
-      // truncates at 500 chars with ellipsis, list items trim/compact
-      // (padded + empty entries injected to exercise both), cap 10.
-      // tokens materialize at a select boundary: splicing the tokenizer
-      // into the two lambda chains below re-tokenizes per element.
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("text"), TA.tokens(col("text")).as("toks"))
-      val contributions = concat(
-        array(lit(""), lit("  ")),
-        transform(slice(col("toks"), 1, 12),
-          x => concat(lit("  "), x, lit(" "))))
-      val scenarios = slice(col("toks"), 5, 4)
-      val v = Enrich.validatedSummary(
-        col("text"), trim(substring(col("text"), 1, 80)),
-        contributions, scenarios)
-      d.select(col("doc_id"),
-        v.getField("problem").as("problem"),
-        v.getField("method").as("method"),
-        array_join(v.getField("key_contributions"), ",").as("contributions"),
-        size(v.getField("key_contributions")).cast("long").as("n_contrib"),
-        array_join(v.getField("application_scenarios"), ",").as("scenarios"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "l8_summary_fast" -> ((s, dir) => {
-      // L4 fast profile (enhance_summary.py:209-242): 300-char plain
-      // string truncation (no ellipsis), 200-char item truncation, list
-      // cap 8. Items are padded past 200 chars (rpad) so the item-level
-      // cap actually fires; 2 empty + 10 padded entries exercise
-      // compaction and the cap together.
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("text"), TA.tokens(col("text")).as("toks"))
-      val contributions = concat(
-        array(lit(""), lit(" ")),
-        transform(slice(col("toks"), 1, 10),
-          x => rpad(concat(lit("  "), x), 210, "y")))
-      val scenarios = slice(col("toks"), 5, 4)
-      val v = Enrich.validatedSummaryFast(
-        col("text"), trim(substring(col("text"), 1, 80)),
-        contributions, scenarios)
-      d.select(col("doc_id"),
-        v.getField("problem").as("problem"),
-        v.getField("method").as("method"),
-        array_join(v.getField("key_contributions"), ",").as("contributions"),
-        size(v.getField("key_contributions")).cast("long").as("n_contrib"),
-        array_join(v.getField("application_scenarios"), ",").as("scenarios"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "l6t_rate_trace" -> ((s, dir) => {
-      // L6 driven into the ORACLE GATE (closing the last spec-only §2
-      // cell): the AdaptiveRateLimiter's full decision trace —
-      // ×1.5-on-failure capped, ×0.9-on-success floored when the
-      // last-10 window clears 90% — over a deterministic 200-step
-      // outcome sequence (keyed hash, ~80% success), jitter pinned to
-      // 0. The oracle replays the scalar delay recurrence as a
-      // recursive CTE over the same outcome table: the windowed
-      // success check is the integer succ10 > 9 (count == 10), and
-      // the delay chain is fixed-order IEEE ×1.5/×0.9 from 100.0 —
-      // bit-identical on both engines, 6dp-floored only at the
-      // output. Rate limiting is driver-side by nature (it paces the
-      // API client); 200 steps is the l1-l5 mock scale.
-      val outcomes = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          (Sampling.keyHash(col("doc_id"), "l6") <
-            Sampling.threshold(0.8)).as("ok"))
-        .orderBy(col("doc_id"))
-        .collect().map(r => (r.getLong(0), r.getBoolean(1)))
-      val limiter = new Enrich.AdaptiveRateLimiter(100.0, 2000.0, () => 0.0)
-      val trace = outcomes.map { case (step, ok) =>
-        val d = limiter.delayMs
-        if (ok) limiter.success() else limiter.failure()
-        (step, ok, d)
-      }
-      import s.implicits._
-      trace.toSeq.toDF("step", "ok", "_d")
-        .select(col("step"), col("ok"), fround(col("_d"), 6).as("delay_ms"))
-        .orderBy(col("step"))
-    }),
-
-    "v5_auto_metrics" -> ((s, dir) => {
-      // V5 — automatic answer metrics (rag.ipynb:770-880): the
-      // "question" is the doc's 8-token prefix, the "answer" its full
-      // text; metrics + weighted auto score as one codegen'd projection.
-      val d = t(s, dir, "documents")
-      val question = array_join(slice(TA.tokens(col("text")), 1, 8), " ")
-      d.select(col("doc_id"), Rag.autoMetrics(question, col("text")).as("m"))
-        .select(col("doc_id"),
-          col("m.answer_chars").as("answer_chars"),
-          col("m.answer_words").as("answer_words"),
-          col("m.keyword_overlap").as("keyword_overlap"),
-          col("m.n_citations").as("n_citations"),
-          col("m.auto_score").as("auto_score"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "a2_score_summary" -> ((s, dir) => {
-      // A2 — per-key score summary stats (enhance_scoring.py:501-537)
-      // over the deterministic mock scores, grouped by language.
-      val enriched = Enrich.enrichColumn(
-        t(s, dir, "documents"),
-        concat(lit("Score: "), col("text")), "resp",
-        new Enrich.MockScoreClient)
-      val novelty = least(
-        conv(substring(col("resp"), 1, 1), 16, 10).cast("int"), lit(10))
-      enriched.groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n"),
-          fround(avg(novelty), 6).as("avg_novelty"),
-          min(novelty).as("min_novelty"),
-          max(novelty).as("max_novelty"))
-        .orderBy(col("lang"))
-    }),
-
-    "a11_stage_deltas" -> ((s, dir) => {
-      // A11 — ablation stage deltas (ablation_error_analysis.py:88-136):
-      // union stage-tagged snapshots, aggregate per stage, report the
-      // removal delta against the previous stage via lag.
-      val d = t(s, dir, "documents")
-      val raw = d.withColumn("stage", lit(0))
-      val gated = Align.gate(d, Seq("len" -> (col("n_chars") >= 120)))
-        .withColumn("stage", lit(1))
-      val staged = raw.unionByName(gated)
-        .groupBy(col("stage"))
-        .agg(count(lit(1)).as("n_docs"),
-          fround(avg(col("n_chars")), 4).as("avg_chars"))
-      val w = Window.orderBy(col("stage"))
-      staged.select(col("stage"), col("n_docs"), col("avg_chars"),
-          coalesce(lag(col("n_docs"), 1).over(w) - col("n_docs"), lit(0L))
-            .as("removed"))
-        .orderBy(col("stage"))
-    }),
-
-    // ---- M: multimodal binary columns -------------------------------
-    "m5_resize_plumbing" -> ((s, dir) => {
-      // Resize plumbing (beyond the reference; completes the decode /
-      // feature / resize / frame-sample quartet): batched injectable
-      // resizer over the binary column. No codec libs exist in this
-      // container, so StrideResizer (every k-th byte, k = len div
-      // target) is the clearly-marked stand-in — the plumbing (schema,
-      // batching, null path) is real, and the output pins the md5 of
-      // the resized PAYLOAD, so the oracle checks bytes, not shapes.
-      val media = Multimodal.withFakeMedia(
-        t(s, dir, "documents").select(col("doc_id"), col("text")),
-        col("text"))
-      Multimodal.resizeMedia(media, "media", targetBytes = 64,
-          new Multimodal.StrideResizer, batchSize = 64)
-        .select(col("doc_id"),
-          length(col("media")).as("orig_bytes"),
-          length(col("resized")).as("out_bytes"),
-          md5(col("resized")).as("digest"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "m6_bmp_pixel_decode" -> ((s, dir) => {
-      // REAL pixel decode (beyond the reference; upgrades the m-family
-      // from header-parse + stubbed-codec plumbing to one genuinely
-      // decoded image path): 24bpp BMP needs no codec — raw BGR rows,
-      // bottom-up, 4-byte-padded. Each doc carries one of 16 encoder-
-      // built BMPs (w,h ∈ 1..4, pixel channels a fixed formula of
-      // (variant, x, y)); Multimodal.bmpPixelStats walks the REAL
-      // bytes while the oracle computes the sums from the FORMULA
-      // alone — encoder and decoder never share code with the oracle,
-      // and the position-weighted red sum makes row order and padding
-      // load-bearing. All output cells exact integers. Scale shape:
-      // scan-fused projection; thumbnails by contract.
-      val hexes = array((0 until 16).map(v => lit(m6BmpHex(v))): _*)
-      t(s, dir, "documents")
-        .select(col("doc_id"), pmod(col("doc_id"), lit(16L)).as("v"))
-        .withColumn("px", Multimodal.bmpPixelStats(
-          unhex(element_at(hexes, (col("v") + 1).cast("int")))))
-        .select(col("doc_id"), col("v"), col("px.n_px"), col("px.b_sum"),
-          col("px.g_sum"), col("px.r_sum"), col("px.rw_sum"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "m7_wav_sample_decode" -> ((s, dir) => {
-      // REAL audio decode (the m6 move for the audio leg): 16-bit PCM
-      // needs no codec — raw s16le samples after the canonical 44-byte
-      // WAV layout. Each doc carries one of 16 encoder-built clips
-      // (8..23 samples, amplitudes a fixed formula of (variant, i));
-      // Multimodal.wavSampleStats walks the REAL bytes — sign decode,
-      // endianness, adjacency all load-bearing via the zero-crossing
-      // count — while the oracle computes the stats from the FORMULA
-      // alone. All output cells exact integers.
-      val hexes = array((0 until 16).map(v => lit(m7WavHex(v))): _*)
-      t(s, dir, "documents")
-        .select(col("doc_id"), pmod(col("doc_id"), lit(16L)).as("v"))
-        .withColumn("sm", Multimodal.wavSampleStats(
-          unhex(element_at(hexes, (col("v") + 1).cast("int")))))
-        .select(col("doc_id"), col("v"), col("sm.n_samples"),
-          col("sm.sum_abs"), col("sm.max_abs"), col("sm.n_zero_cross"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "m8_bmp_dhash_pairs" -> ((s, dir) => {
-      // Perceptual near-dup IMAGE dedup over REAL decoded pixels: dHash
-      // (9×8 nearest-neighbor luma lattice → 64 adjacent-comparison
-      // bits, packed 32/word) per distinct variant, then all-pairs
-      // Hamming over the 16-row broadcast table (the v1 bounded-batch
-      // cross pattern — at corpus scale the pair generation rides the
-      // d17 band discipline; this query pins the HASH semantics).
-      // Same-base pairs differ only by a uniform brightness shift the
-      // dHash comparisons cancel up to channel wraps (small Hamming);
-      // cross-base pairs are ~random. The oracle recomputes bits and
-      // words from the pixel FORMULA alone — packing, byte walk, and
-      // popcount all checked against unpacked ground truth.
-      val hexes = array((0 until 16).map(v => lit(m8BmpHex(v))): _*)
-      val vs = t(s, dir, "documents")
-        .select(pmod(col("doc_id"), lit(16L)).as("v")).distinct()
-        .withColumn("hash", Multimodal.bmpDHash(
-          unhex(element_at(hexes, (col("v") + 1).cast("int")))))
-      val a = vs.select(col("v").as("va"), col("hash").as("ha"))
-      val b = vs.select(col("v").as("vb"), col("hash").as("hb"))
-      a.join(broadcast(b), col("va") < col("vb"))
-        .withColumn("hamming",
-          VF.hammingDistance(col("ha"), col("hb")))
-        .select(col("va"), col("vb"),
-          element_at(col("ha"), 1).as("wa0"),
-          element_at(col("ha"), 2).as("wa1"),
-          col("hamming"), (col("hamming") <= 8).as("near_dup"))
-        .orderBy(col("va"), col("vb"))
-    }),
-
-    "m1_media_features" -> ((s, dir) => {
-      // Binary media payload + typed metadata + batched mapPartitions
-      // feature extraction through the (stub) decoder. Payload bytes stay
-      // executor-local; output is an array<double> feature column.
-      val media = Multimodal.withFakeMedia(
-        t(s, dir, "documents").select(col("doc_id"), col("text")), col("text"))
-      Multimodal.decodeFeatures(media, "media", 8, new Multimodal.StubDecoder)
-        .select(col("doc_id"),
-          length(col("media")).as("n_bytes"),
-          fround(element_at(col("features"), 1), 6).as("f0"),
-          fround(element_at(col("features"), 2), 6).as("f1"),
-          fround(element_at(col("features"), 8), 6).as("f7"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "m2_media_headers" -> ((s, dir) => {
-      // M2 — real media header decode: synthesize well-formed PNG and
-      // JPEG payloads (dims derived from doc_id; every 11th payload
-      // truncated to 10 bytes), then parse width/height BACK out of the
-      // binary with the pure-expression PNG IHDR / JPEG SOF readers.
-      // The oracle is ground truth recomputed from doc_id alone — any
-      // parser defect (offset, endianness, segment-walk, truncation
-      // handling) surfaces as a mismatch.
-      val w = col("doc_id") % 640 + 16
-      val hgt = col("doc_id") % 480 + 16
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"))
-        .withColumn("com_len", (col("doc_id") % 5 + 4).cast("int"))
-        .withColumn("png_hex", concat(
-          lit(Multimodal.pngSigIhdrHex),
-          lpad(hex(w), 8, "0"), lpad(hex(hgt), 8, "0"),
-          // bit depth 8, color type 6, compression/filter/interlace 0 + CRC
-          lit("0806000000DEADBEEF")))
-        .withColumn("jpg_hex", concat(
-          // SOI + 16-byte JFIF APP0
-          lit("FFD8" + "FFE00010" + "4A46494600010100000100010000"),
-          // COM segment of doc_id-dependent length: the SOF offset is
-          // NOT constant, so a fixed-offset peek would fail the oracle
-          lit("FFFE"), lpad(hex(col("com_len")), 4, "0"),
-          expr("repeat('41', com_len - 2)"),
-          // SOF0: len 17, precision 8, height, width, 3 components
-          lit("FFC00011" + "08"), lpad(hex(hgt), 4, "0"), lpad(hex(w), 4, "0"),
-          lit("03" + "011100" + "021101" + "031101"), lit("FFD9")))
-        .withColumn("full_hex",
-          when(col("doc_id") % 2 === 0, col("png_hex")).otherwise(col("jpg_hex")))
-        .withColumn("media",
-          unhex(when(col("doc_id") % 11 === 0, substring(col("full_hex"), 1, 20))
-            .otherwise(col("full_hex"))))
-      // the parsed structs project ONCE into named columns: each is
-      // referenced 2-3 times below, and re-evaluating the segment walk
-      // per reference would triple the parse cost (CollapseProject keeps
-      // the two Projects apart — the producers are not cheap)
-      d.withColumn("png", Multimodal.pngDims(col("media")))
-        .withColumn("jpg", Multimodal.jpegDims(col("media")))
-        .select(col("doc_id"),
-          when(col("png").isNotNull, lit("png"))
-            .when(col("jpg").isNotNull, lit("jpeg")).as("fmt"),
-          coalesce(col("png.width"), col("jpg.width")).as("width"),
-          coalesce(col("png.height"), col("jpg.height")).as("height"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "m3_audio_headers" -> ((s, dir) => {
-      // M3 — the audio/animation legs of the multimodal header suite:
-      // synthesize well-formed WAV (even doc_id) and GIF (odd) payloads
-      // with fields derived from doc_id (every 13th truncated to 6
-      // bytes), then parse them BACK out with the pure-expression
-      // RIFF chunk walk / GIF screen-descriptor readers. A JUNK chunk
-      // of doc_id-dependent length sits before `fmt `, so a
-      // fixed-offset peek would fail the oracle, which recomputes
-      // ground truth from doc_id alone.
-      def leHexC(v: Column, nBytes: Int): Column =
-        concat((0 until nBytes).map(k =>
-          lpad(hex(pmod(shiftright(v.cast("long"), 8 * k), lit(256))), 2, "0")): _*)
-      val ch = when(col("doc_id") % 4 === 0, 1L).otherwise(2L)
-      val rate = (col("doc_id") % 3 + 1) * 8000
-      val brate = rate * ch * 2 // 16-bit PCM
-      val dlen = brate * (col("doc_id") % 7 + 1) // whole seconds
-      val w = col("doc_id") % 320 + 8
-      val hgt = col("doc_id") % 200 + 8
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"))
-        .withColumn("jlen", ((col("doc_id") % 5) * 2 + 2).cast("int"))
-        .withColumn("wav_hex", concat(
-          lit("52494646"), leHexC(lit(36L) + dlen, 4), lit("57415645"),
-          // JUNK chunk of varying even length: the fmt offset is NOT
-          // constant, so only a real chunk walk parses every row
-          lit("4A554E4B"), leHexC(col("jlen"), 4), expr("repeat('00', jlen)"),
-          lit("666D7420" + "10000000" + "0100"), leHexC(ch, 2),
-          leHexC(rate, 4), leHexC(brate, 4), leHexC(ch * 2, 2), lit("1000"),
-          // data chunk: declared length only (header-level parse)
-          lit("64617461"), leHexC(dlen, 4)))
-        .withColumn("gif_hex", concat(
-          lit("474946383961"), leHexC(w, 2), leHexC(hgt, 2),
-          lit("F70000" + "3B")))
-        .withColumn("full_hex",
-          when(col("doc_id") % 2 === 0, col("wav_hex")).otherwise(col("gif_hex")))
-        .withColumn("media",
-          unhex(when(col("doc_id") % 13 === 0, substring(col("full_hex"), 1, 12))
-            .otherwise(col("full_hex"))))
-      // single projection of each parsed struct (see m2's note)
-      d.withColumn("wav", Multimodal.wavInfo(col("media")))
-        .withColumn("gif", Multimodal.gifDims(col("media")))
-        .select(col("doc_id"),
-          when(col("wav").isNotNull, lit("wav"))
-            .when(col("gif").isNotNull, lit("gif")).as("fmt"),
-          col("wav.channels").as("channels"),
-          col("wav.sample_rate").as("sample_rate"),
-          col("wav.duration_ms").as("duration_ms"),
-          col("gif.width").as("width"),
-          col("gif.height").as("height"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "m4_container_headers" -> ((s, dir) => {
-      // M4 — the still-image/video container legs beside m2/m3: BMP
-      // (BITMAPINFOHEADER, signed LE dims — every 5th row top-down
-      // negative height) and MP4/ISO-BMFF (big-endian ftyp box with a
-      // variable compatible-brand list, so the box SIZE field must be
-      // parsed, not assumed). Payloads synthesize from doc_id (every
-      // 13th truncated), the oracle recomputes ground truth from
-      // doc_id alone — only a real header parse matches every row.
-      def leHexC(v: Column, nBytes: Int): Column =
-        concat((0 until nBytes).map(k =>
-          lpad(hex(pmod(shiftright(v.cast("long"), 8 * k), lit(256))), 2, "0")): _*)
-      def beHexC(v: Column, nBytes: Int): Column =
-        concat((0 until nBytes).reverse.map(k =>
-          lpad(hex(pmod(shiftright(v.cast("long"), 8 * k), lit(256))), 2, "0")): _*)
-      val w = col("doc_id") % 640 + 16
-      val hgt = (col("doc_id") % 480 + 16) *
-        when(col("doc_id") % 5 === 0, -1L).otherwise(1L)
-      val bpp = when(col("doc_id") % 3 === 0, 8L)
-        .when(col("doc_id") % 3 === 1, 24L).otherwise(32L)
-      val brand = when(col("doc_id") % 3 === 0, "isom")
-        .when(col("doc_id") % 3 === 1, "mp42").otherwise("avc1")
-      val minor = col("doc_id") % 512
-      val nb = col("doc_id") % 3 + 1
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"))
-        .withColumn("bmp_hex", concat(
-          lit("424D"), leHexC(lit(54L), 4), lit("00000000"),
-          leHexC(lit(54L), 4), leHexC(lit(40L), 4),
-          leHexC(w, 4), leHexC(hgt, 4), lit("0100"), leHexC(bpp, 2),
-          lit("00" * 24)))
-        .withColumn("mp4_hex", concat(
-          beHexC(lit(16L) + nb * 4, 4), lit("66747970"), hex(brand),
-          beHexC(minor, 4),
-          expr("repeat('6D703431', cast(doc_id % 3 + 1 as int))")))
-        .withColumn("full_hex",
-          when(col("doc_id") % 2 === 0, col("bmp_hex"))
-            .otherwise(col("mp4_hex")))
-        .withColumn("media",
-          unhex(when(col("doc_id") % 13 === 0, substring(col("full_hex"), 1, 12))
-            .otherwise(col("full_hex"))))
-      d.withColumn("bmp", Multimodal.bmpInfo(col("media")))
-        .withColumn("mp4", Multimodal.mp4Info(col("media")))
-        .select(col("doc_id"),
-          when(col("bmp").isNotNull, lit("bmp"))
-            .when(col("mp4").isNotNull, lit("mp4")).as("fmt"),
-          col("bmp.width").as("width"),
-          col("bmp.height").as("height"),
-          col("bmp.bits_per_pixel").as("bits_per_pixel"),
-          col("mp4.major_brand").as("major_brand"),
-          col("mp4.minor_version").as("minor_version"),
-          col("mp4.n_brands").as("n_brands"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "m9_frame_schedule" -> ((s, dir) => {
-      // M9 — video frame-sample scheduling (beyond the reference; the
-      // frame-sample member of the decode/extract/resize/frame-sample
-      // quartet): parse moov/mvhd timescale + duration ticks from the
-      // container bytes (Multimodal.mvhdInfo — a real ISO-BMFF box
-      // walk), derive duration and a capped stride schedule of ≤8
-      // frame indices per video, explode to one row per planned frame.
-      // The actual pixel decode stays behind the MediaDecoder trait
-      // (no codecs in this container); THIS is the Spark-side plumbing
-      // that feeds it — pure integer arithmetic end to end (`div`
-      // everywhere), payloads synthesized from doc_id so the oracle
-      // recomputes ground truth independently (every 13th truncated →
-      // parse must return NULL, not garbage).
-      def beHexC(v: Column, nBytes: Int): Column =
-        concat((0 until nBytes).reverse.map(k =>
-          lpad(hex(pmod(shiftright(v.cast("long"), 8 * k), lit(256))), 2, "0")): _*)
-      val timescale = when(col("doc_id") % 2 === 0, 600L).otherwise(1000L)
-      val ticks = col("doc_id") % 100000 + 600
-      val fps = when(col("doc_id") % 3 === 0, 24L)
-        .when(col("doc_id") % 3 === 1, 25L).otherwise(30L)
-      val mvhdHex = concat(
-        beHexC(lit(108L), 4), lit("6D766864"), lit("00000000"),
-        lit("00000000"), lit("00000000"),
-        beHexC(timescale, 4), beHexC(ticks, 4), lit("00" * 80))
-      val fullHex = concat(
-        beHexC(lit(16L), 4), lit("66747970"), lit("69736F6D"),
-        lit("00000000"),
-        beHexC(lit(116L), 4), lit("6D6F6F76"), mvhdHex)
-      t(s, dir, "documents").select(col("doc_id"), fps.as("fps"))
-        .withColumn("media", unhex(
-          when(col("doc_id") % 13 === 0, substring(fullHex, 1, 24))
-            .otherwise(fullHex)))
-        .withColumn("mv", Multimodal.mvhdInfo(col("media")))
-        .filter(col("mv").isNotNull)
-        .select(col("doc_id"), col("fps"),
-          col("mv.timescale").as("timescale"),
-          col("mv.duration_ticks").as("ticks"))
-        .withColumn("duration_ms", expr("(ticks * 1000) div timescale"))
-        .withColumn("n_frames", expr("(duration_ms * fps) div 1000"))
-        .filter(col("n_frames") > 0)
-        .withColumn("frame_idx", explode(slice(sequence(lit(0L),
-          col("n_frames") - 1,
-          greatest(lit(1L), expr("n_frames div 8"))), 1, 8)))
-        .select(col("doc_id"), col("timescale"), col("duration_ms"),
-          col("fps"), col("n_frames"), col("frame_idx"),
-          expr("(frame_idx * 1000) div fps").as("t_ms"))
-        .orderBy(col("doc_id"), col("frame_idx"))
-    }),
-
-    "m10_audio_energy" -> ((s, dir) => {
-      // M10 — frame-level audio energy over the REAL m7 PCM decode
-      // (beyond the reference; the voice-activity-detection work list):
-      // each clip's s16le samples frame into 6-sample windows, per
-      // frame energy = Σ s² and peak = max |s| as exact BIGINTs, and a
-      // frame is 'active' when its mean square clears 100² — the pure
-      // integer compare energy ≥ n·10000. This is the Spark seat of
-      // VAD-gated audio curation: the census of active frames decides
-      // which clips (and which spans) a codec-backed pipeline keeps.
-      // The oracle replays energies from the amplitude FORMULA alone,
-      // so framing, byte walk, and the partial last frame are all
-      // checked against independent ground truth.
-      val hexes = array((0 until 16).map(v => lit(m7WavHex(v))): _*)
-      graft.Frames.fan(t(s, dir, "documents"))
-        .select(col("doc_id"), pmod(col("doc_id"), lit(16L)).as("v"))
-        .withColumn("fr", explode(Multimodal.wavFrameEnergies(
-          unhex(element_at(hexes, (col("v") + 1).cast("int"))), 6)))
-        .select(col("doc_id"), col("v"),
-          col("fr.frame").as("frame"), col("fr.n").as("n"),
-          col("fr.energy").as("energy"), col("fr.peak").as("peak"),
-          (col("fr.energy") >= col("fr.n").cast("long") * lit(10000L))
-            .as("active"))
-        .orderBy(col("doc_id"), col("frame"))
-    }),
-
-    "m11_png_pixel_decode" -> ((s, dir) => {
-      // REAL PNG decode (beyond the reference; refutes "no codec
-      // libraries in this container" — DEFLATE ships in the JDK):
-      // expressions.PngPixelStats walks the chunk stream, validates
-      // every CRC32, inflates the scanline bytes, and reverses all
-      // FIVE PNG scanline filters (row y of variant v uses filter
-      // (y+v) mod 5, so None/Sub/Up/Average/Paeth are all
-      // load-bearing). The oracle computes the channel sums from the
-      // pixel FORMULA alone — entropy coding, defiltering, and the
-      // position-weighted red sum are all checked against independent
-      // ground truth. All output cells exact integers.
-      val hexes = array((0 until 16).map(v => lit(m11PngHex(v))): _*)
-      t(s, dir, "documents")
-        .select(col("doc_id"), pmod(col("doc_id"), lit(16L)).as("v"))
-        .withColumn("px", graft.expressions.PngPixelStats(
-          unhex(element_at(hexes, (col("v") + 1).cast("int")))))
-        .select(col("doc_id"), col("v"), col("px.w"), col("px.h"),
-          col("px.n_px"), col("px.r_sum"), col("px.g_sum"),
-          col("px.b_sum"), col("px.rw_sum"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "m12_gif_pixel_decode" -> ((s, dir) => {
-      // REAL GIF decode (beyond the reference; m11's LZW companion —
-      // GIF-LZW is pure integer bookkeeping, zero dependencies):
-      // expressions.GifPixelStats walks header/LSD/global color
-      // table, skips a graphic-control extension by its sub-block
-      // chain, reassembles the image sub-blocks, and runs the full
-      // variable-width LZW decode (LSB-first bit reader, clear/end
-      // codes, prefix-linked dictionary, width bumps at 2^width,
-      // KwKwK) before mapping indices through the palette. The oracle
-      // computes the channel sums from the palette+index FORMULA
-      // alone, so the entropy decode is checked against independent
-      // ground truth. All output cells exact integers.
-      val hexes = array((0 until 16).map(v => lit(m12GifHex(v))): _*)
-      t(s, dir, "documents")
-        .select(col("doc_id"), pmod(col("doc_id"), lit(16L)).as("v"))
-        .withColumn("px", graft.expressions.GifPixelStats(
-          unhex(element_at(hexes, (col("v") + 1).cast("int")))))
-        .select(col("doc_id"), col("v"), col("px.w"), col("px.h"),
-          col("px.n_px"), col("px.r_sum"), col("px.g_sum"),
-          col("px.b_sum"), col("px.rw_sum"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "w6_interval_join" -> ((s, dir) => {
-      // Batch twin of the watermarked stream-stream interval join
-      // (Streams.intervalJoin; StreamFileSpec pins stream == batch
-      // over the same closed input): even events pair with the same
-      // user's odd events landing within the next 10 minutes, rolled
-      // up per user with exact integer gap stats.
-      val e = t(s, dir, "events")
-      val a = e.filter(pmod(col("event_id"), lit(2)) === 0)
-        .select(col("user_id").as("a_user"), col("ts").as("a_ts"))
-      val b = e.filter(pmod(col("event_id"), lit(2)) === 1)
-        .select(col("user_id").as("b_user"), col("ts").as("b_ts"))
-      graft.streaming.Streams.intervalJoin(a, b,
-          "a_user = b_user", "a_ts", "b_ts", "10 MINUTES")
-        .select(col("a_user").as("user_id"),
-          (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("gap"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_pairs"), sum(col("gap")).as("sum_gap_us"),
-          min(col("gap")).as("min_gap_us"), max(col("gap")).as("max_gap_us"))
-        .orderBy(col("user_id"))
-    }),
-
-    // ---- W2: sessionization (batch twin of the streaming path) ------
-    "w2_sessionization" -> ((s, dir) => {
-      // Gap-based sessionization via lag + running session-break sum —
-      // the oracle-checkable batch twin of streaming.Streams
-      // sessionWindowAgg / sessionizeStateful (30 min gap).
-      graft.streaming.Streams.sessionizeBatch(t(s, dir, "events"), 1800)
-        .orderBy(col("user_id"), col("session_id"))
-    }),
-
-    "e1_json_props" -> ((s, dir) => {
-      // Semi-structured column parsing: events.props is a JSON string;
-      // from_json with an EXPLICIT schema (never schema_of_json in a
-      // production path) extracts typed fields that aggregate like any
-      // column — parse happens inside the scan projection.
-      t(s, dir, "events")
-        .withColumn("k",
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT"))
-            .getField("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          fround(avg(col("k")), 6).as("avg_k"),
-          max(col("k")).as("max_k"),
-          sum(when(col("k") > 50, 1L).otherwise(0L)).as("n_high"))
-        .orderBy(col("event_type"))
-    }),
-
-    "v8_kmeans_ivf" -> ((s, dir) => {
-      // V3'/IVF training path — deterministic Lloyd k-means (cosine
-      // argmax assignment, per-dim means, floor-stable 6-decimal
-      // centroid rounding each step so the oracle replicates bit-for-
-      // bit) followed by the cluster rollup: list sizes + mean cosine
-      // to the owning centroid (cohesion).
-      val emb = t(s, dir, "embeddings")
-      val cents = Similarity.kmeansCentroids(
-        emb, col("vec_id"), col("embedding"), 4, 2)
-      val best = Similarity.centroidArgmax(col("embedding"), cents)
-      emb.select(col("vec_id"),
-          (-best.getField("ncid")).cast("long").as("cid"),
-          best.getField("cos").as("cos"))
-        .groupBy(col("cid"))
-        .agg(count(lit(1)).as("n_vecs"),
-          fround(avg(col("cos")), 6).as("cohesion"))
-        .orderBy(col("cid"))
-    }),
-
-    "e2_variant_props" -> ((s, dir) => {
-      // Semi-structured, Spark-4-native: parse the JSON string ONCE into
-      // a Variant (binary, lazily navigable) and extract typed fields
-      // with variant_get — the production path when the schema is
-      // open-ended (from_json in e1 needs it closed). try_* variants
-      // keep ANSI mode from failing the scan on a malformed row or a
-      // missing path.
-      t(s, dir, "events")
-        .withColumn("v", try_parse_json(col("props")))
-        .select(col("event_type"),
-          try_variant_get(col("v"), "$.k", "int").as("k"),
-          try_variant_get(col("v"), "$.missing", "int").as("miss"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          fround(avg(col("k")), 6).as("avg_k"),
-          min(col("k")).as("min_k"),
-          sum(when(col("miss").isNull, 1L).otherwise(0L)).as("n_missing"))
-        .orderBy(col("event_type"))
-    }),
-
-    "w3_session_window_batch" -> ((s, dir) => {
-      // Built-in session_window run in BATCH mode — cross-validates
-      // Spark's gap-based session assignment against the relational
-      // lag+cumsum oracle (same sessions, session end = last event +
-      // gap by session_window's definition).
-      graft.streaming.Streams.sessionWindowAgg(
-          t(s, dir, "events"), "30 minutes")
-        .select(col("user_id"),
-          unix_micros(col("start")).as("start_us"),
-          unix_micros(col("end")).as("end_us"),
-          col("n_events"), col("sum_value"))
-        .orderBy(col("user_id"), col("start_us"))
-    }),
-
-    // ---- V: vector search -------------------------------------------
-    "v1_cosine_topk" -> ((s, dir) => {
-      // V3 — brute-force cosine top-k against a query vector
-      // (RAG/rag.ipynb:488-530). Query vec broadcast; one scan, global
-      // TakeOrderedAndProject for the k survivors.
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-      e.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          fround(VF.cosine(col("embedding"), col("qv")), 6).as("sim"))
-        .orderBy(col("sim").desc, col("vec_id"))
-        .limit(10)
-    }),
-
-    "v2_ann_topk_batch" -> ((s, dir) => {
-      // Batch ANN baseline: 5 query vectors broadcast against the corpus,
-      // brute-force cosine, ranked top-5 per query in one corpus scan.
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 5)
-      val docs = e.filter(col("vec_id") >= 5)
-      Similarity.topKPerQuery(
-          docs, col("vec_id"), col("embedding"),
-          queries, col("vec_id"), col("embedding"), k = 5)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("cosine"), 6).as("cosine"), col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v15_bm25_topk" -> ((s, dir) => {
-      // Okapi BM25 lexical top-10 per keyword query — the sparse
-      // retrieval leg (Rag.bm25; only postings matching the literal
-      // query vocabulary ever shuffle). Scores round to 6 before
-      // ranking so rank ties are cross-engine deterministic.
-      val d = t(s, dir, "documents")
-      Rag.bm25(d, col("doc_id"), col("text"), bm25Queries, bm25K1, bm25B)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("score"), 6).as("score"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("score").desc, col("doc_id"))))
-        .filter(col("rank") <= 10)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v21_retrieval_eval" -> ((s, dir) => {
-      // V21 — the retrieval EVALUATION harness (beyond the reference):
-      // judge the engine's three retrieval legs — BM25 lexical, dense
-      // cosine, RRF hybrid — with the standard IR metrics recall@10,
-      // MRR@10, nDCG@10 against a gold ranking. Gold = the exact
-      // brute-cosine top-5 per query with graded relevance 5..1, so
-      // the dense row scores 1.0 BY CONSTRUCTION (the harness sanity
-      // row) and the bm25/rrf rows measure lexical/hybrid agreement
-      // with the semantic gold — the eval loop a retrieval stack runs
-      // after every index/codebook/weight change. Determinism: ranks
-      // come from 6dp-rounded scores with doc_id tiebreaks, the nDCG
-      // discounts are shared dyadic-grid literals (per-query DCG sums
-      // exactly in any order), and the cross-query rollup is ORDER-
-      // EXACT: hit counts and reciprocal ranks accumulate as integers
-      // (rr scales by 2520 = lcm(1..10), so 2520/rank is exact),
-      // per-query DCGs are exact dyadics summing exactly in any
-      // order, and each metric is ONE final IEEE divide.
-      val d = t(s, dir, "documents")
-      val e = t(s, dir, "embeddings")
-      val nq = bm25Queries.size
-      val lex20 = Rag.bm25(d.filter(col("doc_id") >= nq), col("doc_id"),
-          col("text"), bm25Queries, bm25K1, bm25B)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("score"), 6).as("s"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("s").desc, col("doc_id"))))
-        .filter(col("rank") <= 20).drop("s")
-      val dense20 = Similarity.topKPerQuery(
-          e.filter(col("vec_id") >= nq), col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < nq), col("vec_id"), col("embedding"),
-          k = 20)
-        .select(col("query_id"), col("doc_id"), col("rank"))
-      val hyb10 = Rag.rrfFuse(Seq(lex20, dense20), rrfK)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("rrf"), 6).as("r"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("r").desc, col("doc_id"))))
-        .filter(col("rank") <= 10).drop("r")
-      val gold = dense20.filter(col("rank") <= 5)
-        .select(col("query_id"), col("doc_id"),
-          (lit(6) - col("rank")).cast("long").as("rel"))
-      def sys(name: String, df: DataFrame) =
-        df.filter(col("rank") <= 10).select(lit(name).as("method"),
-          col("query_id"), col("doc_id"), col("rank"))
-      val runs = sys("bm25", lex20)
-        .unionByName(sys("dense", dense20))
-        .unionByName(sys("rrf", hyb10))
-      runs.join(broadcast(gold), Seq("query_id", "doc_id"), "left")
-        .withColumn("rel", coalesce(col("rel"), lit(0L)))
-        .withColumn("disc", element_at(typedLit(ndcgDiscounts), col("rank")))
-        .groupBy(col("method"), col("query_id"))
-        .agg(sum(col("rel").cast("double") * col("disc")).as("dcg"),
-          sum(when(col("rel") > 0, 1L).otherwise(0L)).as("hits"),
-          max(when(col("rel") > 0, expr("2520 div rank"))
-            .otherwise(lit(0L))).as("rr2520"))
-        .groupBy(col("method"))
-        .agg(
-          fround(sum(col("hits")).cast("double") /
-            (lit(5L) * count(lit(1))).cast("double"), 6).as("recall_at_10"),
-          fround(sum(col("rr2520")).cast("double") /
-            (lit(2520L) * count(lit(1))).cast("double"), 6).as("mrr_at_10"),
-          fround(sum(col("dcg")) /
-            (lit(ndcgIdcg5) * count(lit(1)).cast("double")), 6)
-            .as("ndcg_at_10"))
-        .orderBy(col("method"))
-    }),
-
-    "v16_hybrid_rrf" -> ((s, dir) => {
-      // Hybrid retrieval: the BM25 lexical leg fused with the dense
-      // cosine leg by reciprocal-rank fusion (Rag.rrfFuse, k=60).
-      // Corpus pairing is doc_id = vec_id (the synthetic store); query
-      // q's dense vector is embeddings row q, and rows 0..2 are
-      // excluded from BOTH candidate sets so neither leg retrieves a
-      // query's own vector. Each leg contributes its top-20; fusion
-      // cost is (queries × 40) rows regardless of corpus size.
-      val d = t(s, dir, "documents")
-      val e = t(s, dir, "embeddings")
-      val nq = bm25Queries.size
-      val lex = Rag.bm25(
-          d.filter(col("doc_id") >= nq), col("doc_id"), col("text"),
-          bm25Queries, bm25K1, bm25B)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("score"), 6).as("s"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("s").desc, col("doc_id"))))
-        .filter(col("rank") <= 20)
-      val dense = Similarity.topKPerQuery(
-        e.filter(col("vec_id") >= nq), col("vec_id"), col("embedding"),
-        e.filter(col("vec_id") < nq),
-        col("vec_id"), col("embedding"), k = 20)
-      Rag.rrfFuse(Seq(lex, dense), rrfK)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("rrf"), 6).as("rrf"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("rrf").desc, col("doc_id"))))
-        .filter(col("rank") <= 10)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v19_rerank" -> ((s, dir) => {
-      // Two-stage serving stack (beyond the reference): BM25 retrieves
-      // top-10 candidates per query, an injectable cross-encoder
-      // reranks them, top-5 survive on (ce, bm25, doc_id). The scorer
-      // runs on queries×10 rows through a batched mapPartitions client
-      // — at 100 TB the cross-encoder cost is independent of corpus
-      // size, which is the entire bi-encoder→cross-encoder economics.
-      // The deterministic overlap mock stands in for the model (the
-      // Embed harness precedent); the oracle replays it from the
-      // shared tokenizer constant.
-      val d = t(s, dir, "documents")
-      val ranked = Rag.bm25(d, col("doc_id"), col("text"), bm25Queries,
-          bm25K1, bm25B)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("score"), 6).as("score"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("score").desc, col("doc_id"))))
-        .filter(col("rank") <= 10)
-      val qtext = s.createDataFrame(
-          bm25Queries.map { case (q, ts) => (q, ts.mkString(" ")) })
-        .toDF("query_id", "qtext")
-      // candidate hydration: the bounded candidate list broadcasts onto
-      // the corpus scan — text is fetched for 30 rows, never shuffled
-      val cands = d.select(col("doc_id"), col("text"))
-        .join(broadcast(ranked.join(broadcast(qtext), "query_id")),
-          "doc_id")
-      Rag.rerank(cands, col("qtext"), col("text"),
-          new Rag.OverlapRerankClient, batchSize = 16)
-        .select(col("query_id"), col("doc_id"), col("score"),
-          fround(col("ce_score"), 6).as("ce"))
-        .withColumn("rr", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("ce").desc, col("score").desc, col("doc_id"))))
-        .filter(col("rr") <= 5)
-        .orderBy(col("query_id"), col("rr"))
-    }),
-
-    "v17_bm25_indexed" -> ((s, dir) => {
-      // The persisted-inverted-index lifecycle for lexical retrieval:
-      // build once (postings + df hive-bucketed by term, 1-row stats),
-      // then the probe prunes BOTH reads to the query vocabulary's
-      // buckets — corpus text is never re-scanned at serve time. The
-      // scoring tail is the exact v15 expression tree, so the oracle is
-      // v15's SQL chain verbatim (the index round trip is lossless).
-      // full lifecycle under the ONE v15 oracle (the d15/v11 pattern):
-      // base build over the even half, committed append of the odd
-      // half, compaction folding both (postings deduped, df recomputed,
-      // stats provenance-deduped), then the pruned probe
-      val d = t(s, dir, "documents")
-      val idx = scratchDir("graft_v17") + "/bm25"
-      if (verifyScale(d, s"$dir#documents")) {
-        Rag.saveBm25Index(d.filter(col("doc_id") % 2 === 0),
-          col("doc_id"), col("text"), idx,
-          buckets = 16, targetRows = 100000L, spread = 2)
-        Rag.appendBm25Index(d.filter(col("doc_id") % 2 =!= 0),
-          col("doc_id"), col("text"), idx,
-          targetRows = 100000L, spread = 2, batchId = Some(1L)): Unit
-        Rag.compactBm25Index(s, idx, upTo = 1L,
-          targetRows = 100000L, spread = 2): Unit
-      } else
-        Rag.saveBm25Index(d, col("doc_id"), col("text"), idx,
-          buckets = 16, targetRows = 100000L, spread = 2)
-      Rag.bm25Indexed(s, idx, bm25Queries, bm25K1, bm25B)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("score"), 6).as("score"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("score").desc, col("doc_id"))))
-        .filter(col("rank") <= 10)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v7_ivf_topk" -> ((s, dir) => {
-      // IVF-partitioned ANN: 8 centroid vectors, nprobe=2 — each query
-      // scans ~1/4 of the corpus instead of all of it. Deterministic
-      // (argmax ties by centroid id), so exactly oracle-checkable even
-      // though recall < 1 by design.
-      val e = t(s, dir, "embeddings")
-      Similarity.ivfTopK(
-          e.filter(col("vec_id") >= 13), col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") >= 8 && col("vec_id") < 13),
-          col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 8), col("vec_id"), col("embedding"),
-          k = 5, nprobe = 2)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("cosine"), 6).as("cosine"), col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v22_filtered_ann" -> ((s, dir) => {
-      // V22 — FILTERED ANN over the persisted IVF index (beyond the
-      // reference; the vector-store filtered-query shape): a metadata
-      // predicate on the doc table (lang = 'en', doc_id = vec_id
-      // pairing) becomes a doc_id allow-set that PRE-filters the
-      // pruned inverted lists via semi-join before ranking — candidate
-      // volume shrinks with predicate selectivity, where post-
-      // filtering a top-k under-fills and re-probes. Same persisted
-      // geometry as v11 (centroids = rows 0-7, corpus = rows ≥ 13,
-      // queries = rows 8-12, nprobe 3); the oracle replays assignment,
-      // probe, filter, and rank relationally.
-      val e = t(s, dir, "embeddings")
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("long"),
-          col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-      val idx = scratchDir("graft_v22") + "/ivf"
-      Similarity.saveIvfIndex(
-        e.filter(col("vec_id") >= 13), col("vec_id"), col("embedding"),
-        cents, idx, targetRows = 10000L, spread = 2)
-      val allowed = t(s, dir, "documents").filter(col("lang") === "en")
-        .select(col("doc_id"))
-      Similarity.ivfTopKIndexed(s, idx,
-          e.filter(col("vec_id") >= 8 && col("vec_id") < 13),
-          col("vec_id").as("query_id"), col("embedding"),
-          k = 4, nprobe = 3, allowed = Some(allowed))
-        .select(col("query_id"), col("doc_id"),
-          fround(col("cosine"), 6).as("cosine"), col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v23_mmr_rerank" -> ((s, dir) => {
-      // V23 — maximal-marginal-relevance diversified serving re-rank
-      // (Carbonell & Goldstein 1998; beyond the reference): from each
-      // query's brute-cosine top-10, greedily pick 5 maximizing
-      // 7·sim(q,d) − 3·max_{s∈picked} sim(d,s) (λ=0.7 as integer
-      // weights) — the standard redundancy-penalized final stage of a
-      // retrieval stack (RAG context assembly that doesn't quote the
-      // same near-duplicate three times). All sims quantize to 1e-6
-      // micro-units BEFORE the greedy, so every pick is an integer
-      // argmax with doc_id tie-breaks; the oracle unrolls the same 4
-      // selection steps relationally. Candidate and pair tables STAGE
-      // to scratch (the x5 discipline — the unrolled steps consume
-      // each multiple times; at 100 TB they're bounded serve-side
-      // artifacts, kCand/kCand² rows per query).
-      val e = t(s, dir, "embeddings")
-      val docs = e.filter(col("vec_id") >= 5)
-      val base = scratchDir("graft_v23")
-      Similarity.mmrCandidateSims(docs, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 5), col("vec_id"), col("embedding"),
-          kCand = 10)
-        .write.mode("overwrite").parquet(s"$base/cands")
-      val cands = s.read.parquet(s"$base/cands")
-      Similarity.mmrPairSims(cands, docs, col("vec_id"),
-          col("embedding"))
-        .write.mode("overwrite").parquet(s"$base/pairs")
-      Similarity.mmrTopK(cands, s.read.parquet(s"$base/pairs"),
-          kOut = 5, wRel = 7L, wDiv = 3L, stageDir = s"$base/sel")
-        .orderBy(col("query_id"), col("mmr_rank"))
-    }),
-
-    "v24_context_assembly" -> ((s, dir) => {
-      // V4's distributed twin — the RAG context string assembled as a
-      // grouped COLUMN (rag.ipynb:720-733 builds it driver-side over
-      // one query's k rows; at serving scale you assemble millions of
-      // contexts in one query_id shuffle): the v9 store (title + T20
-      // doc_text) supplies candidates, the first five embeddings are
-      // the query batch, brute top-4 cosine ranks per query, and each
-      // query's context is the rank-sorted
-      // "[rank] (sim s.mmm) title\ndoc_text" block join. Sim digits
-      // render from integer milli-units so the string is
-      // byte-identical cross-engine; the oracle rebuilds the full
-      // context with string_agg ORDER BY rank and compares md5 +
-      // length. The store stages to scratch — top-k scan and the
-      // title/text hydration join both consume it (v9 precedent).
-      val d = t(s, dir, "documents")
-      val e = t(s, dir, "embeddings")
-      val toks = TA.tokens(col("text"))
-      val authors = transform(slice(toks, 1, 3),
-        tk => concat(lit("dr. "), tk))
-      val out = scratchDir("graft_v24")
-      Rag.buildStore(
-          d.join(e, col("doc_id") === col("vec_id"))
-            .filter(col("doc_id") >= 5),
-          col("doc_id"), trim(substring(col("text"), 1, 40)), authors,
-          col("text"), col("embedding"))
-        .write.mode("overwrite").parquet(out)
-      val store = s.read.parquet(out)
-      val topk = Similarity.topKPerQuery(store, col("paper_id"),
-          col("embedding"), e.filter(col("vec_id") < 5),
-          col("vec_id"), col("embedding"), k = 4)
-        .join(store.select(col("paper_id").as("doc_id"), col("title"),
-          col("doc_text")), "doc_id")
-      Rag.assembleContexts(topk)
-        .select(col("query_id"), col("n_ctx"),
-          length(col("context")).cast("long").as("ctx_chars"),
-          md5(col("context")).as("ctx_md5"))
-        .orderBy(col("query_id"))
-    }),
-
-    "v11_ivf_persisted" -> ((s, dir) => {
-      // The IVF build-once/probe-many lifecycle (the bloom save/load
-      // pattern, for ANN): index persists as centroids + hive-
-      // partitioned inverted lists (via the size-targeted sink), then
-      // the probe reads ONLY its nprobe list directories — partition
-      // pruning makes query IO ∝ nprobe/C of the corpus, with zero
-      // assignment work at serve time.
-      val e = t(s, dir, "embeddings")
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("long"),
-          col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-      // full lifecycle under ONE membership oracle (the d15 pattern):
-      // base build over the even half, committed append of the odd
-      // half, compaction folding both into one merged generation, probe
-      val idx = scratchDir("graft_v11") + "/ivf"
-      if (verifyScale(e, s"$dir#embeddings")) {
-        Similarity.saveIvfIndex(
-          e.filter(col("vec_id") >= 13 && col("vec_id") % 2 === 0),
-          col("vec_id"), col("embedding"),
-          cents, idx, targetRows = 10000L, spread = 2)
-        Similarity.appendIvfIndex(s, idx,
-          e.filter(col("vec_id") >= 13 && col("vec_id") % 2 =!= 0),
-          col("vec_id"), col("embedding"),
-          targetRows = 10000L, spread = 2, batchId = Some(0L)): Unit
-        Similarity.compactIvfIndex(s, idx, upTo = 0L,
-          targetRows = 10000L, spread = 2): Unit
-      } else
-        Similarity.saveIvfIndex(
-          e.filter(col("vec_id") >= 13), col("vec_id"), col("embedding"),
-          cents, idx, targetRows = 10000L, spread = 2)
-      Similarity.ivfTopKIndexed(s, idx,
-          e.filter(col("vec_id") >= 8 && col("vec_id") < 13),
-          col("vec_id").as("query_id"), col("embedding"),
-          k = 4, nprobe = 3)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("cosine"), 6).as("cosine"), col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v12_embed_topk" -> ((s, dir) => {
-      // Engine-side embedding inference (the reference's batch-32
-      // sentence-transformer encode, rag.ipynb:359-374): documents
-      // embed through Embed.embedColumn — ONE client call per
-      // mapPartitions batch behind the EmbeddingClient trait (the
-      // deterministic mock here; HttpEmbeddingClient is the live
-      // drop-in) — and the fresh array<float> column feeds the
-      // existing brute top-k path unchanged.
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val emb = Embed.embedColumn(docs, col("text"), "emb",
-        new Embed.MockHashEmbeddingClient(dim = 8), batchSize = 32)
-      val queries = emb.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("qid"), col("emb").as("qv"))
-      Similarity.topKPerQuery(
-          emb.filter(col("doc_id") >= 5), col("doc_id"), col("emb"),
-          queries, col("qid"), col("qv"), k = 5)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("cosine"), 6).as("cosine"), col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v13_ivf_recall" -> ((s, dir) => {
-      // Recall drift of the frozen-centroid append path (v11's
-      // maintenance cousin): base corpus indexes against the v11
-      // centroids, a second batch APPENDS with centroids frozen, and
-      // recall@5 of the probe vs exact brute cosine over the full
-      // corpus is the re-center signal — the number that says when
-      // appendIvfIndex's freeze has drifted too far. Deterministic
-      // end to end (same argmax/tie rules as v7/v11), so the whole
-      // measurement is oracle-checked, not just the exact side.
-      val e = t(s, dir, "embeddings")
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("long"),
-          col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-      val idx = scratchDir("graft_v13") + "/ivf"
-      Similarity.saveIvfIndex(
-        e.filter(col("vec_id") >= 13 && col("vec_id") < 40),
-        col("vec_id"), col("embedding"), cents, idx,
-        targetRows = 10000L, spread = 2)
-      Similarity.appendIvfIndex(s, idx,
-        e.filter(col("vec_id") >= 40), col("vec_id"), col("embedding"),
-        targetRows = 10000L, spread = 2)
-      val queries = e.filter(col("vec_id") >= 8 && col("vec_id") < 13)
-      val approx = Similarity.ivfTopKIndexed(s, idx,
-        queries, col("vec_id").as("query_id"), col("embedding"),
-        k = 5, nprobe = 2)
-      val exact = Similarity.topKPerQuery(
-        e.filter(col("vec_id") >= 13), col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"), k = 5)
-      Similarity.recallAtK(approx, exact, k = 5)
-        .select(col("query_id"), col("n_exact"), col("n_hit"),
-          fround(col("recall"), 6).as("recall"))
-        .orderBy(col("query_id"))
-    }),
-
-    "v14_ivf_recenter" -> ((s, dir) => {
-      // The complete IVF maintenance loop, measured end to end: build
-      // (v11) → frozen-centroid append (v13) → RE-CENTER
-      // (Similarity.recenterIvfIndex: re-train k-means over the
-      // indexed vectors, rebuild once) → probe both indexes and score
-      // recall@5 against exact brute cosine. One row per query with
-      // frozen vs re-centered recall side by side — the before/after
-      // of the re-center decision v13's number triggers. Deterministic
-      // k-means (v8's rules) keeps the WHOLE lifecycle oracle-checked.
-      val e = t(s, dir, "embeddings")
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("long"),
-          col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-      val idx = scratchDir("graft_v14") + "/ivf"
-      Similarity.saveIvfIndex(
-        e.filter(col("vec_id") >= 13 && col("vec_id") < 40),
-        col("vec_id"), col("embedding"), cents, idx,
-        targetRows = 10000L, spread = 2)
-      Similarity.appendIvfIndex(s, idx,
-        e.filter(col("vec_id") >= 40), col("vec_id"), col("embedding"),
-        targetRows = 10000L, spread = 2)
-      val out = scratchDir("graft_v14r") + "/ivf"
-      Similarity.recenterIvfIndex(s, idx, out, k = 4, iters = 2,
-        targetRows = 10000L, spread = 2)
-      val queries = e.filter(col("vec_id") >= 8 && col("vec_id") < 13)
-      val exact = Similarity.topKPerQuery(
-        e.filter(col("vec_id") >= 13), col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"), k = 5)
-      def rec(path: String) = Similarity.recallAtK(
-        Similarity.ivfTopKIndexed(s, path,
-          queries, col("vec_id").as("query_id"), col("embedding"),
-          k = 5, nprobe = 2),
-        exact, k = 5)
-      rec(idx)
-        .select(col("query_id"), col("n_exact"),
-          col("n_hit").as("n_hit_frozen"),
-          fround(col("recall"), 6).as("recall_frozen"))
-        .join(rec(out)
-          .select(col("query_id"), col("n_hit").as("n_hit_recentered"),
-            fround(col("recall"), 6).as("recall_recentered")),
-          Seq("query_id"))
-        .orderBy(col("query_id"))
-    }),
-
-    "v6_ann_topk_planned" -> ((s, dir) => {
-      // The custom whole-operator tier: grouped top-k planned through
-      // the TopKPerKey logical node → TopKPerKeyStrategy → two-phase
-      // TopKPerKeyExec (partial bounded heaps, one hash exchange, final
-      // exact) — map-side trimming the window formulation can't do.
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val sims = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id").as("doc_id"), col("embedding").as("dv"))
-        .crossJoin(broadcast(queries))
-        .select(col("query_id"), col("doc_id"),
-          graft.expressions.CosineSim(col("dv"), col("qv")).as("cosine"))
-      graft.plans.TopKPerKey(sims, col("query_id"), col("cosine"), 5)
-        .select(col("query_id"), col("doc_id"), fround(col("cosine"), 6).as("cosine"))
-        .orderBy(col("query_id"), col("cosine").desc, col("doc_id"))
-    }),
-
-    "v10_quantized_ann" -> ((s, dir) => {
-      // Int8 scalar-quantized ANN + exact rerank (beyond the reference;
-      // the memory-bandwidth scale path): 3-query batch broadcast,
-      // candidate scoring over int8 codes (scales cancel in cosine),
-      // top-20 per query rerank with exact float cosine, final top-5.
-      val e = t(s, dir, "embeddings")
-      Similarity.quantizedTopK(
-          e.filter(col("vec_id") >= 3), col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 3), col("vec_id"), col("embedding"),
-          k = 5, rerank = 20)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("cosine"), 6).as("cosine"),
-          fround(col("approx_cosine"), 6).as("approx_cosine"),
-          col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v25_binary_ann" -> ((s, dir) => {
-      // Binary (1-bit sign) quantized ANN + exact rerank (beyond the
-      // reference; the 32×-compression memory path): candidates rank by
-      // Hamming distance over packed sign-bit words (xor + popcount),
-      // top-20 per query rerank with exact float cosine, final top-5.
-      // The oracle recomputes Hamming per-DIMENSION from the raw floats
-      // ((a>0) <> (b>0) counts), so the word packing and popcount walk
-      // are checked against an unpacked independent ground truth.
-      val e = t(s, dir, "embeddings")
-      Similarity.binaryTopK(
-          e.filter(col("vec_id") >= 3), col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 3), col("vec_id"), col("embedding"),
-          k = 5, rerank = 20)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("cosine"), 6).as("cosine"),
-          col("hamming"), col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v26_matryoshka_ann" -> ((s, dir) => {
-      // Matryoshka two-stage ANN (beyond the reference; Kusupati et
-      // al. 2022): candidate generation scores cosine over only the
-      // FIRST 16 of 64 dimensions (MRL embeddings front-load meaning),
-      // top-20 per query rerank with the full vector, final top-5 —
-      // the dimension-sliced member of the v10/v25 quantized-candidate
-      // family. At 100 TB the prefix is its own stored column, so
-      // candidate scoring streams a quarter of the bytes.
-      val e = t(s, dir, "embeddings")
-      Similarity.matryoshkaTopK(
-          e.filter(col("vec_id") >= 3), col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 3), col("vec_id"), col("embedding"),
-          k = 5, rerank = 20, prefixDim = 16)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("cosine"), 6).as("cosine"),
-          fround(col("approx_cosine"), 6).as("approx_cosine"),
-          col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v18_pq_topk" -> ((s, dir) => {
-      // Product-quantization ANN + exact rerank (beyond the reference;
-      // the cache-resident memory path past v10's int8 codes): 4×16-dim
-      // codebooks trained per subspace with the shared deterministic
-      // k-means, docs carry 4 codes + a reconstruction norm, each
-      // broadcast query precomputes its 32-entry ADC lookup table at a
-      // select boundary, candidates score with 4 array lookups per
-      // pair, top-20 rerank with exact cosine, final top-5. The oracle
-      // replays all four codebooks, the codes, the LUTs, and both
-      // rank windows.
-      val e = t(s, dir, "embeddings")
-      val docs = e.filter(col("vec_id") >= 3)
-      val books = Similarity.pqCodebooks(docs, col("vec_id"),
-        col("embedding"), pqM, pqSubDim, pqK, pqIters)
-      Similarity.pqTopK(docs, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 3), col("vec_id"), col("embedding"),
-          books, pqSubDim, k = 5, rerank = pqRerank)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("cosine"), 6).as("cosine"),
-          fround(col("approx_cosine"), 6).as("approx_cosine"),
-          col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v20_ivfpq_indexed" -> ((s, dir) => {
-      // IVF-PQ persisted index (beyond the reference; the FAISS IVFPQ
-      // composition): coarse centroids route docs into hive-partitioned
-      // inverted lists that store the 4-code + reconstruction norm
-      // INSTEAD of the raw vector — a probe reads nprobe/C of the
-      // corpus (partition pruning) and each row it reads is 4 longs,
-      // not 64 floats. ADC scores the pruned candidates, the top-20
-      // hydrate raw vectors via a broadcast onto the corpus scan, and
-      // the final 5 rank on exact cosine. Oracle = the v18 PQ chain
-      // with the v11 coarse-router CTEs restricting the scored pairs.
-      val e = t(s, dir, "embeddings")
-      val docs = e.filter(col("vec_id") >= 13)
-      // NOT overlapped (r19 §2.6 A/B — the r18 deferred item, measured
-      // and REVERTED): the centroid collect and the codebook train are
-      // independent (vec_id < 8 vs >= 13), but the paired ABBA read
-      // overlap a wash quiet (med 6.53 vs 6.45 sequential) and a
-      // CONSISTENT loss under 16-spinner load (med 8.02 vs 7.27,
-      // 4 runs/arm) — both chains are embeddings-scan CPU, so
-      // concurrency only adds contention (the g11 precedent).
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("long"),
-          col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-      val books = Similarity.pqCodebooks(docs, col("vec_id"),
-        col("embedding"), pqM, pqSubDim, pqK, pqIters)
-      val idx = scratchDir("graft_v20") + "/ivfpq"
-      Similarity.saveIvfPqIndex(docs, col("vec_id"), col("embedding"),
-        cents, books, pqSubDim, idx, targetRows = 10000L, spread = 2)
-      Similarity.ivfPqTopK(s, idx, docs, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") >= 8 && col("vec_id") < 13),
-          col("vec_id"), col("embedding"),
-          k = 5, nprobe = 2, rerank = pqRerank)
-        .select(col("query_id"), col("doc_id"),
-          fround(col("cosine"), 6).as("cosine"),
-          fround(col("approx_cosine"), 6).as("approx_cosine"),
-          col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "v3_neardup_lsh" -> ((s, dir) => {
-      // Embedding-cosine near-dup pairs via hyperplane LSH banding +
-      // exact cosine confirm — the scale path for pairwise similarity
-      // (bucket-local candidates instead of n² pairs).
-      Similarity.nearDupPairsLsh(
-          t(s, dir, "embeddings"), col("vec_id"), col("embedding"),
-          threshold = 0.3, dim = 64)
-        .select(col("id_a"), col("id_b"), fround(col("cosine"), 6).as("cosine"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "d10_semantic_dedup" -> ((s, dir) => {
-      // Embedding-space near-dup pairs, SemDeDup shape: deterministic
-      // k-means clusters the corpus, exact cosine pairs form ONLY
-      // within a cluster (Σ|cluster|² work instead of n²; cross-cluster
-      // near-dups are the accepted recall trade). Same k-means as v8,
-      // so the oracle replays clustering + pairing bit-for-bit.
-      val emb = t(s, dir, "embeddings")
-      val cents = Similarity.kmeansCentroids(
-        emb, col("vec_id"), col("embedding"), 4, 2)
-      Similarity.semanticDupPairs(emb, col("vec_id"), col("embedding"),
-          cents, threshold = 0.3)
-        .select(col("cid"), col("id_a"), col("id_b"),
-          fround(col("cosine"), 6).as("cosine"))
-        .orderBy(col("cid"), col("id_a"), col("id_b"))
-    }),
-
-    "tq1_nb_classifier" -> ((s, dir) => {
-      // Trained quality classifier (beyond the reference; the
-      // GPT-3/CCNet-style corpus filter): multinomial Naive Bayes over
-      // hashed token features, fit on a deterministic 60% keyed split
-      // with "is the target stratum" labels, scoring the held-out 40%.
-      // Counting IS the fit — no SGD order-dependence — so the oracle
-      // replays training AND scoring from the same integer counts. The
-      // model is ≤ 4096 rows whatever the vocabulary (feature hashing)
-      // and broadcasts; raw text never shuffles.
-      val d = t(s, dir, "documents")
-      val isTrain = Sampling.keyHash(col("doc_id"), "nbt") <
-        Sampling.threshold(0.6)
-      val model = Classify.trainModel(d.filter(isTrain),
-        col("lang") <=> "en", col("text"), 4096)
-      Classify.score(model, d.filter(!isTrain), col("doc_id"), col("text"))
-        .select(col("doc_id"), col("n_tok"),
-          fround(col("log_odds"), 6).as("log_odds"))
-        .withColumn("pred_target", col("log_odds") > 0)
-        .orderBy(col("doc_id"))
-    }),
-
-    "tq12_logreg_gate" -> ((s, dir) => {
-      // TQ12 — logistic-regression quality filter TRAINED IN THE
-      // ENGINE (beyond the reference; the fastText-style seat next to
-      // tq1's counting fit): two full-batch GD ticks from w₀ = 0 over
-      // the SAME 60% keyed split, labels and hashed features as tq1,
-      // scoring the same held-out 40% — NB's closed-form fit and the
-      // gradient fit become directly comparable on one contract.
-      // Determinism (the x8 DoReMi discipline applied to a model fit):
-      // weights/residuals live on the integer 2⁻²⁰ grid, logits and
-      // gradients are ORDER-EXACT BIGINT sums, σ runs through the
-      // libm-free DetExp chain, and the weight update divides
-      // truncating-toward-zero on both engines — the DuckDB oracle
-      // replays the entire descent tick by tick, bit for bit. Scale
-      // shape: text tokenizes ONCE into the staged (doc, y, tr, f, c)
-      // table; each tick is one broadcast-weights aggregate + one
-      // doc-keyed residual join + one ≤4096-row gradient collect (the
-      // weights contract); holdout scoring is one more pass of the
-      // same staged table.
-      val fc = lrStagedFeatures(s, dir, "graft_tq12")
-      val w = Classify.trainLogReg(
-        fc.filter(col("tr")).select("doc_id", "y", "f", "c"),
-        ticks = 2, etaDen = 1L)
-      Classify.logRegZ(
-          fc.filter(!col("tr")).select("doc_id", "y", "f", "c"), w)
-        .select(col("doc_id"), col("n_tok"), col("z_num"),
-          (col("z_num") > 0).as("pred_en"), col("y").as("is_en"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "tq3_incremental_model" -> ((s, dir) => {
-      // Persisted-model lifecycle under the oracle gate: the tq1
-      // training split arrives as THREE ingest batches, each trained
-      // alone and folded into a CountLog as partial counts (O(batch),
-      // no corpus rescan). Integer sums are associative, so the loaded
-      // model is bit-identical to full retraining — the oracle IS the
-      // from-scratch tq1 SQL, proving the incremental path exact, not
-      // approximately fresh.
-      val d = t(s, dir, "documents")
-      val isTrain = Sampling.keyHash(col("doc_id"), "nbt") <
-        Sampling.threshold(0.6)
-      val train = d.filter(isTrain)
-      val label = col("lang") <=> "en"
-      val logDir = scratchDir("nbmodel")
-      val b0 = Classify.trainModel(
-        train.filter(pmod(col("doc_id"), lit(3)) === 0), label,
-        col("text"), 4096)
-      Classify.initModelLog(b0, logDir)
-      Classify.appendModelBatch(
-        train.filter(pmod(col("doc_id"), lit(3)) === 1), label,
-        col("text"), 4096, logDir, Some(1L))
-      Classify.appendModelBatch(
-        train.filter(pmod(col("doc_id"), lit(3)) === 2), label,
-        col("text"), 4096, logDir, Some(2L))
-      val model = Classify.loadModel(s, logDir, 4096)
-      Classify.score(model, d.filter(!isTrain), col("doc_id"), col("text"))
-        .select(col("doc_id"), col("n_tok"),
-          fround(col("log_odds"), 6).as("log_odds"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "tq5_dsir_resample" -> ((s, dir) => {
-      // DSIR's actual selection: weighted sampling WITHOUT replacement
-      // over the importance weights (Efraimidis–Spirakis keyed top-k,
-      // w = exp(2·logratio)). Deterministic like every sampler here —
-      // same corpus in, same sample out, on any cluster. Top-k plans
-      // as TakeOrderedAndProject, never a global sort.
-      // r13: same pure-integer key chain as x5 (tq5 is x5's driver-side
-      // CONTROL — it must rank by the identical key to keep bounding
-      // any divergence); the float logratio column itself stays, as the
-      // proven-green 6dp canary.
-      val w = Classify.dsirWeights(t(s, dir, "documents"), col("doc_id"),
-          col("text"), col("lang") <=> "en", 4096)
-        .select(col("doc_id"), col("n_tok"),
-          fround(col("avg_logratio"), 6).as("logratio"),
-          microFloor(col("avg_logratio")).as("logratio_micro"))
-      Sampling.withSelectionKeyLogW(w, col("doc_id"),
-          lit(2L) * col("logratio_micro"), "dsir")
-        .orderBy(col("sel_key"), col("doc_id"))
-        .limit(100)
-        .select(col("doc_id"), col("n_tok"), col("logratio"),
-          col("sel_key"))
-        .orderBy(col("sel_key"), col("doc_id"))
-    }),
-
-    "tq8_label_noise" -> ((s, dir) => {
-      // Label-noise estimation via confident learning (Northcutt et
-      // al. 2021; beyond the reference): from calibrated P(en | score)
-      // (the tq7 Platt machinery over the stopword-ratio signal), each
-      // class's confidence threshold is the mean self-confidence of
-      // rows LABELED that class; a row is confidently class-j when
-      // p_j clears t_j (argmax on double-passes, ties to the positive
-      // class), and confident rows whose class differs from their
-      // given label are the suspected mislabels — the confident-joint
-      // census you run before trusting any weakly-labeled corpus
-      // (crawl heuristics, distant supervision). Determinism: p lands
-      // on the 1e-6 grid as INTEGER MICRO-UNITS, thresholds are
-      // rounded means of exact BIGINT sums (one IEEE divide — the r12
-      // order-exact bar: a summation-order ulp in a float avg could
-      // shift a threshold one grid cell and flip the integer census),
-      // and every comparison below is integer-vs-integer.
-      val staged = scratchDir("graft_tq8") + "/scored"
-      t(s, dir, "documents")
-        .select(TA.stopwordRatio(col("text")).as("sc"),
-          (col("lang") <=> "en").as("y"))
-        .write.mode("overwrite").parquet(staged)
-      val sd = s.read.parquet(staged)
-      val (aF, bF) = Classify.plattFit(sd, col("sc"), col("y"),
-        iters = plattIters)
-      val scored = sd.select(col("y"),
-        floor(Classify.plattProb(col("sc"), aF, bF) * 1e6 + lit(0.5))
-          .cast("long").as("pi"))
-      val thr = scored.agg(
-          sum(when(col("y"), col("pi"))).as("_s1"),
-          sum(when(col("y"), 1L)).as("_n1"),
-          sum(when(!col("y"), lit(1000000L) - col("pi"))).as("_s0"),
-          sum(when(!col("y"), 1L)).as("_n0"))
-        .select(
-          when(col("_n1") > 0,
-            floor(col("_s1").cast("double") / col("_n1").cast("double")
-              + lit(0.5)).cast("long")).as("t1i"),
-          when(col("_n0") > 0,
-            floor(col("_s0").cast("double") / col("_n0").cast("double")
-              + lit(0.5)).cast("long")).as("t0i"))
-      scored.crossJoin(broadcast(thr))
-        .withColumn("p0i", lit(1000000L) - col("pi"))
-        .withColumn("pred",
-          when(col("pi") >= col("t1i") &&
-            (col("p0i") < col("t0i") || col("pi") >= col("p0i")), lit(1L))
-          .when(col("p0i") >= col("t0i"), lit(0L))
-          .otherwise(lit(null).cast("long")))
-        .groupBy(col("y"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("pred").isNotNull, 1L).otherwise(0L))
-            .as("n_confident"),
-          sum(when(col("pred").isNotNull &&
-              col("pred") =!= when(col("y"), 1L).otherwise(0L), 1L)
-            .otherwise(0L)).as("n_flagged"))
-        .select(col("y").as("given_en"), col("n"), col("n_confident"),
-          col("n_flagged"),
-          when(col("n_confident") > 0,
-            fround(col("n_flagged").cast("double") /
-              col("n_confident").cast("double"), 6)).as("noise_rate"))
-        .orderBy(col("given_en"))
-    }),
-
-    "tq9_ccnet_ppl_buckets" -> ((s, dir) => {
-      // CCNet-style perplexity bucketing (Wenzek et al. 2020; beyond
-      // the reference): a unigram LM trains PER LANGUAGE on a fixed
-      // trusted seed slice (the Wikipedia seat — here the pinned
-      // source set ccnetSeedSources), every document scores its
-      // per-token negative log-likelihood under its language's seed
-      // model (out-of-vocabulary tokens back off to the count-1
-      // weight), and each language's corpus splits into
-      // head/middle/tail perplexity tertiles — the standard
-      // "keep head+middle, drop tail" curation gate. Determinism (the
-      // r12 order-exact bar): seed weights are detln integers on the
-      // 2^-20 grid, the per-doc sum is exact BIGINT arithmetic in any
-      // order, the per-token average is ONE integer divide (monotone
-      // in perplexity, so no exp needed anywhere), and tertile ranks
-      // break ties by doc_id.
-      // Scale shape: the corpus tokenizes ONCE — per-doc
-      // (lang, tok, c) collapses map-side, the seed model derives
-      // from the same table (filter, not a second scan); the
-      // per-lang totals/OOV floors broadcast; bucketing is one
-      // window over per-doc rows, not tokens.
-      val grid = operators.Classify.WeightGrid
-      val perDoc = t(s, dir, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), col("lang"),
-          col("source").isin(ccnetSeedSources: _*).as("is_seed"),
-          explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy(col("doc_id"), col("lang"), col("is_seed"), col("tok"))
-        .agg(count(lit(1)).as("c"))
-      val seed = perDoc.filter(col("is_seed"))
-        .groupBy(col("lang"), col("tok")).agg(sum(col("c")).as("cf"))
-      val tots = seed.groupBy(col("lang")).agg(sum(col("cf")).as("tot"))
-        .select(col("lang"),
-          graft.expressions.DetLn(col("tot")).as("ttln"))
-      val wtab = seed.join(tots, "lang")
-        .select(col("lang"), col("tok"),
-          floor((graft.expressions.DetLn(col("cf")) - col("ttln")) *
-            lit(grid) + lit(0.5)).as("wi"))
-      val oov = tots.select(col("lang"),
-        floor((lit(0.0) - col("ttln")) * lit(grid) + lit(0.5))
-          .as("w_oov"))
-      val scored = perDoc
-        .join(wtab, Seq("lang", "tok"), "left")
-        .join(broadcast(oov), Seq("lang"))
-        .groupBy(col("doc_id"), col("lang"))
-        .agg(sum(col("c")).as("n_tok"),
-          (-sum(col("c") * coalesce(col("wi"), col("w_oov"))))
-            .as("nll_q"))
-      // Tertile assignment at scale (the x5 census discipline): the
-      // per-language rank decomposes into a census over the BOUNDED
-      // avg_q spine (grid cells, not docs — cardinality independent
-      // of corpus size) plus a within-cell doc_id prefix, so no
-      // window ever partitions by lang alone over per-doc rows (that
-      // would drag a whole language onto one task at 100 TB).
-      val scoredQ = scored.withColumn("avg_q", expr("nll_q div n_tok"))
-      val census = scoredQ.groupBy(col("lang"), col("avg_q"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("rk0", sum(col("cnt")).over(
-          Window.partitionBy(col("lang")).orderBy(col("avg_q"))) -
-          col("cnt"))
-      val nl = scoredQ.groupBy(col("lang")).agg(count(lit(1)).as("nl"))
-      scoredQ
-        .withColumn("rn0", row_number().over(
-          Window.partitionBy(col("lang"), col("avg_q"))
-            .orderBy(col("doc_id"))))
-        .join(census.select(col("lang"), col("avg_q"), col("rk0")),
-          Seq("lang", "avg_q"))
-        .join(broadcast(nl), Seq("lang"))
-        .select(col("doc_id"), col("lang"), col("n_tok"), col("avg_q"),
-          when(expr("((rk0 + rn0 - 1) * 3) div nl") === 0, "head")
-            .when(expr("((rk0 + rn0 - 1) * 3) div nl") === 1, "middle")
-            .otherwise("tail").as("bucket"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "tq7_platt_calibration" -> ((s, dir) => {
-      // Classifier-score calibration (Platt 1999; beyond the
-      // reference): a raw quality signal — stopword ratio, a genuine
-      // en-vs-rest discriminator on this corpus — calibrates into
-      // P(en | s) = σ(A·s + B). The fit is bounded Newton ticks, each
-      // ONE five-sum distributed aggregate (the kmeans shape: scalar
-      // state on the driver, corpus never sorts); σ runs on detexp so
-      // the whole fit is libm-free, and sums + params round 6dp per
-      // tick, so the oracle replays it bit-for-bit. Output is the
-      // reliability diagram (score-decile bins: empirical positive
-      // rate vs mean calibrated probability) + the fitted params. The
-      // scored projection stages to scratch parquet so the 8 fit
-      // passes re-scan 2 doubles, not the tokenizer.
-      val staged = scratchDir("graft_tq7") + "/scored"
-      t(s, dir, "documents")
-        .select(TA.stopwordRatio(col("text")).as("sc"),
-          (col("lang") <=> "en").as("y"))
-        .write.mode("overwrite").parquet(staged)
-      val sd = s.read.parquet(staged)
-      val (aF, bF) = Classify.plattFit(sd, col("sc"), col("y"),
-        iters = plattIters)
-      sd.select(col("sc"), col("y"),
-          Classify.plattProb(col("sc"), aF, bF).as("p"))
-        .groupBy(floor(col("sc") * 10).cast("long").as("bin"))
-        .agg(count(lit(1)).as("n"),
-          fround(avg(when(col("y"), 1.0).otherwise(0.0)), 6).as("frac_pos"),
-          fround(avg(col("p")), 6).as("mean_cal_p"))
-        .withColumn("a", lit(aF))
-        .withColumn("b", lit(bF))
-        .orderBy(col("bin"))
-    }),
-
-    "tq6_score_threshold" -> ((s, dir) => {
-      // The deployment knob for the trained filter: the most inclusive
-      // threshold keeping ≤ 30% of the tq1 held-out docs by rounded
-      // log-odds — exact integer census over the distinct-score table
-      // (the tq4 shape; eval-set-sized, no corpus sort).
-      val d = t(s, dir, "documents")
-      val isTrain = Sampling.keyHash(col("doc_id"), "nbt") <
-        Sampling.threshold(0.6)
-      val model = Classify.trainModel(d.filter(isTrain),
-        col("lang") <=> "en", col("text"), 4096)
-      val scored = Classify.score(model, d.filter(!isTrain),
-          col("doc_id"), col("text"))
-        .select(fround(col("log_odds"), 6).as("lo6"))
-      Classify.thresholdForKeepRate(scored, col("lo6"), keepPct = 30)
-    }),
-
-    "tq4_classifier_eval" -> ((s, dir) => {
-      // Evaluation closes the classifier loop: ROC-AUC (exact
-      // Mann-Whitney — integer u2 fold over the distinct-score table,
-      // ONE IEEE divide, no float accumulation) + confusion/accuracy
-      // at threshold 0 on the tq1 held-out split. AUC ranks the
-      // ROUNDED score so tie groups agree across engines.
-      val d = t(s, dir, "documents")
-      val isTrain = Sampling.keyHash(col("doc_id"), "nbt") <
-        Sampling.threshold(0.6)
-      val label = col("lang") <=> "en"
-      val model = Classify.trainModel(d.filter(isTrain), label,
-        col("text"), 4096)
-      val scored = Classify.score(model, d.filter(!isTrain),
-          col("doc_id"), col("text"))
-        .select(col("doc_id"), fround(col("log_odds"), 6).as("lo6"))
-        .join(d.select(col("doc_id"), label.as("y")), "doc_id")
-      Classify.evalBinary(scored, col("lo6"), col("y"))
-        .select(col("n_pos"), col("n_neg"), col("tp"), col("fp"),
-          col("tn"), col("fn"), fround(col("auc"), 6).as("auc"),
-          fround(col("accuracy"), 6).as("accuracy"))
-    }),
-
-    "tq14_lr_model_log" -> ((s, dir) => {
-      // TQ14 — the LR fit as a PERSISTED MODEL LIFECYCLE (tq3's
-      // discipline for the gradient path): the corpus arrives as three
-      // ingest "days" (doc_id mod 3); day 0 initializes the log (cold
-      // 1-tick fit, weight segment d=−1), each later day appends its
-      // features to the CountLog (O(batch); no raw-text rescan ever)
-      // and warm-ticks the weights over the grown folded table,
-      // landing them as a commit-gated segment keyed by the batch id.
-      // A POISONED replay of committed day 1 (wrong docs, flipped
-      // labels) runs inside the query and must no-op at BOTH stores —
-      // if it ever landed, the served weights would break the oracle.
-      // The oracle replays the whole TRAJECTORY from scratch: the
-      // shared tick generator with cumulative per-tick filters
-      // (b = 0, b ≤ 1, b ≤ 2) — each warm tick proven equal to the
-      // corresponding tick of the from-scratch descent, end to end.
-      // Scale shape: per day one batch tokenize + `ticks` passes over
-      // the compact folded feature store; serving reads the latest
-      // committed ≤4096-row segment.
-      val d = t(s, dir, "documents")
-      val label = col("lang") <=> "en"
-      val logDir = scratchDir("graft_tq14")
-      def day(k: Int) = d.filter(pmod(col("doc_id"), lit(3)) === k)
-      Classify.initLrLog(
-        Classify.docFeaturesLabeled(day(0), col("doc_id"), label,
-          col("text"), nbBuckets),
-        logDir, ticks = 1, etaDen = 1L)
-      Classify.appendLrBatch(day(1), col("doc_id"), label, col("text"),
-        nbBuckets, ticks = 1, etaDen = 1L, logDir, Some(1L))
-      Classify.appendLrBatch(day(2), col("doc_id"), label, col("text"),
-        nbBuckets, ticks = 1, etaDen = 1L, logDir, Some(2L))
-      // poisoned replay of committed day 1: wrong docs, inverted labels
-      Classify.appendLrBatch(day(0), col("doc_id"), !label, col("text"),
-        nbBuckets, ticks = 1, etaDen = 1L, logDir, Some(1L))
-      s.createDataFrame(Classify.loadLrWeights(s, logDir)).toDF("f", "w")
-        .orderBy(col("f"))
-    }),
-
-    "tq13_model_compare" -> ((s, dir) => {
-      // TQ13 — model selection closes the trained-filter loop: the NB
-      // counting fit (tq1) and the LR gradient fit (tq12) score the
-      // SAME held-out 40% and one exact-AUC harness ranks them — the
-      // "which filter do I deploy" row. Both models train in-engine;
-      // the Mann-Whitney fold is an integer u2 over each model's
-      // distinct-score table (NB: 6dp-rounded log-odds; LR: the exact
-      // BIGINT logit — tie groups align across engines by
-      // construction), one IEEE divide per metric. Scale shape: two
-      // bounded model fits + two holdout passes; the eval fold runs on
-      // distinct scores, never a doc-level global sort.
-      val d = t(s, dir, "documents")
-      val isTrain = Sampling.keyHash(col("doc_id"), "nbt") <
-        Sampling.threshold(0.6)
-      val label = col("lang") <=> "en"
-      // NB leg (the tq4 chain)
-      val model = Classify.trainModel(d.filter(isTrain), label,
-        col("text"), nbBuckets)
-      val nbScored = Classify.score(model, d.filter(!isTrain),
-          col("doc_id"), col("text"))
-        .select(col("doc_id"), fround(col("log_odds"), 6).as("sc"))
-        .join(d.select(col("doc_id"), label.as("y")), "doc_id")
-      // LR leg (the tq12 chain, staged once)
-      val fc = lrStagedFeatures(s, dir, "graft_tq13")
-      val w = Classify.trainLogReg(
-        fc.filter(col("tr")).select("doc_id", "y", "f", "c"),
-        ticks = 2, etaDen = 1L)
-      val lrScored = Classify.logRegZ(
-        fc.filter(!col("tr")).select("doc_id", "y", "f", "c"), w)
-      def shape(ev: DataFrame, name: String) = ev
-        .select(lit(name).as("model"), col("n_pos"), col("n_neg"),
-          col("tp"), col("fp"), col("tn"), col("fn"),
-          fround(col("auc"), 6).as("auc"),
-          fround(col("accuracy"), 6).as("accuracy"))
-      shape(Classify.evalBinary(lrScored, col("z_num"), col("y")), "lr")
-        .unionByName(
-          shape(Classify.evalBinary(nbScored, col("sc"), col("y")), "nb"))
-        .orderBy(col("model"))
-    }),
-
-    "tq2_dsir_weights" -> ((s, dir) => {
-      // DSIR importance weights (beyond the reference; Xie et al.
-      // 2023): per-doc mean log likelihood ratio of a hashed-unigram
-      // LM fit on the target stratum vs one fit on the whole corpus —
-      // the data-selection signal that reweights raw data toward a
-      // target distribution; a keyed sampler over the weights
-      // completes the resampling. Both LMs derive from ONE tokenized
-      // pass and broadcast back onto the per-doc feature counts.
-      Classify.dsirWeights(t(s, dir, "documents"), col("doc_id"),
-          col("text"), col("lang") <=> "en", 4096)
-        .select(col("doc_id"), col("n_tok"),
-          fround(col("avg_logratio"), 6).as("logratio"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "tq10_uncertainty_sample" -> ((s, dir) => {
-      // TQ10 — active-learning batch selection (beyond the reference):
-      // the 15 held-out docs per language whose trained-filter score
-      // sits closest to the decision boundary — the rows a labeling
-      // budget buys the most from (uncertainty sampling). Ranks compare
-      // INTEGER micro-units of the 6dp-pinned log-odds (the tq1 chain
-      // is already order-exact), tiebroken on doc_id, so the per-lang
-      // row_number is engine-independent; the window partitions by
-      // lang — bounded groups, no global sort.
-      val d = t(s, dir, "documents")
-      val isTrain = Sampling.keyHash(col("doc_id"), "nbt") <
-        Sampling.threshold(0.6)
-      val model = Classify.trainModel(d.filter(isTrain),
-        col("lang") <=> "en", col("text"), 4096)
-      val scored = Classify.score(model, d.filter(!isTrain),
-          col("doc_id"), col("text"))
-        .select(col("doc_id"),
-          floor(fround(col("log_odds"), 6) * 1e6 + 0.5).cast("long")
-            .as("lo_micro"))
-        .join(d.select(col("doc_id"), col("lang")), "doc_id")
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(abs(col("lo_micro")), col("doc_id"))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 15)
-        .select(col("lang"), col("doc_id"), col("lo_micro"), col("rank"))
-        .orderBy(col("lang"), col("rank"))
-    }),
-
-
-    "tq11_decile_lift" -> ((s, dir) => {
-      // TQ11 — decile gains/lift table for the trained NB gate (beyond
-      // the reference; the eval sibling of tq4's AUC): held-out docs
-      // bucket into 10 score deciles and each reports positives,
-      // cumulative capture and lift as integer micro-ratios — the
-      // curation question "how much of the good stuff do the top k%
-      // keep" answered before committing a gate threshold. Scale
-      // shape + determinism: deciles assign on the DISTINCT-rounded-
-      // score table (bounded by the 6dp grid — the tq4 cumulative
-      // trick; tie groups land whole in the decile where they start,
-      // so no doc-level global sort exists anywhere), every count is
-      // BIGINT, every ratio one integer div.
-      val d = t(s, dir, "documents")
-      val isTrain = Sampling.keyHash(col("doc_id"), "nbt") <
-        Sampling.threshold(0.6)
-      val model = Classify.trainModel(d.filter(isTrain),
-        col("lang") <=> "en", col("text"), 4096)
-      val scored = Classify.score(model, d.filter(!isTrain),
-          col("doc_id"), col("text"))
-        .join(d.select(col("doc_id"), (col("lang") <=> "en").as("y")),
-          Seq("doc_id"))
-        .select(fround(col("log_odds"), 6).as("lo6"), col("y"))
-      val g = scored.groupBy(col("lo6")).agg(
-        count(lit(1)).as("ng"),
-        sum(when(col("y"), 1L).otherwise(0L)).as("pg"))
-      val tot = g.agg(sum(col("ng")).as("nt"), sum(col("pg")).as("pt"))
-      val wcum = Window.orderBy(col("lo6").desc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      g.withColumn("cumb", coalesce(sum(col("ng")).over(wcum), lit(0L)))
-        .crossJoin(broadcast(tot))
-        .withColumn("decile", expr("(cumb * 10) div nt"))
-        .groupBy(col("decile")).agg(
-          sum(col("ng")).as("n_docs"), sum(col("pg")).as("n_pos"),
-          max(col("nt")).as("nt"), max(col("pt")).as("pt"))
-        .withColumn("cum_pos", sum(col("n_pos")).over(
-          Window.orderBy(col("decile"))
-            .rowsBetween(Window.unboundedPreceding, 0)))
-        .select(col("decile"), col("n_docs"), col("n_pos"),
-          expr("case when pt > 0 then (cum_pos * 1000000) div pt end")
-            .as("capture_micro"),
-          expr("case when pt > 0 then (n_pos * nt * 1000000)" +
-            " div (n_docs * pt) end").as("lift_micro"))
-        .orderBy(col("decile"))
-    }),
-    "w8_session_funnel" -> ((s, dir) => {
-      // W8 — ordered conversion funnel (beyond the reference): per day,
-      // how many users complete view → click → purchase IN ORDER —
-      // step k's timestamp must strictly follow step k−1's first
-      // completion. Three conditional min-aggregations stitched by
-      // user-keyed joins (each shuffles (user, µs-timestamp) pairs
-      // only); counts are BIGINT. The standard product-analytics
-      // funnel, linear at any scale — no per-user event sorting, no
-      // window over the whole stream.
-      val ev = t(s, dir, "events").select(col("user_id"),
-        col("event_type"), unix_micros(col("ts")).as("tus"),
-        unix_micros(date_trunc("day", col("ts"))).as("day_us"))
-      // day_us is monotone in tus, so min(day_us) IS the first view's day
-      val s1 = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("tus")).as("t1"),
-          min(col("day_us")).as("day_us"))
-      val s2 = ev.filter(col("event_type") === "click")
-        .join(s1, "user_id").filter(col("tus") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("tus")).as("t2"))
-      val s3 = ev.filter(col("event_type") === "purchase")
-        .join(s2, "user_id").filter(col("tus") > col("t2"))
-        .groupBy(col("user_id")).agg(min(col("tus")).as("t3"))
-      s1.join(s2, Seq("user_id"), "left").join(s3, Seq("user_id"), "left")
-        .groupBy(col("day_us")).agg(
-          count(lit(1)).as("n_view"),
-          sum(when(col("t2").isNotNull, 1L).otherwise(0L)).as("n_click"),
-          sum(when(col("t3").isNotNull, 1L).otherwise(0L))
-            .as("n_purchase"))
-        .orderBy(col("day_us"))
-    }),
-
-    "w10_trailing_range" -> ((s, dir) => {
-      // W10 — event-time RANGE frame (beyond the reference): per
-      // event, the trailing-1-hour count and integer payload sum for
-      // the same user — `rangeBetween` on the µs axis, the
-      // time-decayed feature shape behind rate limits and per-user
-      // rolling quotas. Frames are defined by VALUE (peer rows get
-      // identical frames on both engines), every aggregate is an
-      // order-free integer, and the window partitions by user — group
-      // size is one user's events, never the stream.
-      val ev = t(s, dir, "events").select(
-        col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("tus"),
-        pmod(col("event_id"), lit(97L)).as("pay"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("tus"))
-        .rangeBetween(-3600000000L, 0L)
-      ev.select(col("user_id"), col("event_id"), col("tus"),
-          count(lit(1)).over(w).as("n_trail"),
-          sum(col("pay")).over(w).as("sum_trail"))
-        .orderBy(col("user_id"), col("tus"), col("event_id"))
-    }),
-
-    "w11_retention_cohorts" -> ((s, dir) => {
-      // W11 — retention cohort matrix (beyond the reference; the
-      // product-analytics table next to w8's funnel): users cohort by
-      // their FIRST active day; cell (c, k) counts cohort-c users
-      // active k days later, with the integer retention rate in micro
-      // units. Two user-keyed aggregates + one join — the (user, day)
-      // activity spine dedups first so heavy users don't inflate
-      // cells, day arithmetic stays on the µs axis (the w8
-      // convention), and the output is bounded by days² regardless of
-      // corpus size. Scale shape: both shuffles key on user_id /
-      // cohort day; nothing corpus-sized survives the first distinct.
-      val act = t(s, dir, "events")
-        .select(col("user_id"),
-          unix_micros(date_trunc("day", col("ts"))).as("day_us"))
-        .distinct()
-      val first = act.groupBy(col("user_id"))
-        .agg(min(col("day_us")).as("cohort_us"))
-      val sizes = first.groupBy(col("cohort_us"))
-        .agg(count(lit(1)).as("n_cohort"))
-      act.join(first, "user_id")
-        .select(col("cohort_us"),
-          expr("(day_us - cohort_us) div 86400000000").as("k"))
-        .groupBy(col("cohort_us"), col("k"))
-        .agg(count(lit(1)).as("n_active"))
-        .join(sizes, "cohort_us")
-        .select(col("cohort_us"), col("k"), col("n_active"),
-          col("n_cohort"),
-          expr("n_active * 1000000 div n_cohort").as("rate_micro"))
-        .orderBy(col("cohort_us"), col("k"))
-    }),
-
-    "d24_est_calibration" -> ((s, dir) => {
-      // D24 — MinHash estimator CALIBRATION harness (the v21 eval move
-      // applied to dedup; beyond the reference): every banded
-      // candidate pair gets the EXACT shingle-set Jaccard next to its
-      // k/16 signature estimate, and the census buckets pairs by the
-      // estimate's integer grid value — the measured
-      // false-positive/false-negative account you run before
-      // committing band parameters at 100 TB. Determinism: exact
-      // Jaccard is an integer rational ((ni·10⁶) div nu), the bucket
-      // key est16 = k exactly (est_jaccard is dyadic k/16), and the
-      // per-bucket mean is one integer divide of exact BIGINT sums.
-      // Scale shape: shingle hashes explode ONCE (staged), pairs are
-      // banded candidates only, intersections count as bare
-      // (id, id, hash) longs — no arrays on any shuffle (2⁻²⁸ hash
-      // collisions are the d16-documented bound, identical on both
-      // engines by construction).
-      val d = t(s, dir, "documents")
-      val exa = d.select(col("doc_id"), TA.tokens(col("text")).as("_tk"))
-        .select(col("doc_id"),
-          Dedup.shinglesFromTokens(col("_tk"), 3).as("_sh"))
-        .select(col("doc_id"),
-          explode(Dedup.shingleValues(col("_sh"))).as("h"))
-        .distinct()
-        .localCheckpoint(eager = false)
-      val sz = exa.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
-      val cand = Dedup.minhashPairs(d, col("doc_id"), col("text"))
-        .select(col("id_a"), col("id_b"), col("est_jaccard"))
-        .localCheckpoint(eager = false)
-      val ni = cand.select(col("id_a"), col("id_b"))
-        .join(exa.select(col("doc_id").as("id_a"), col("h")), Seq("id_a"))
-        .join(exa.select(col("doc_id").as("id_b"), col("h")),
-          Seq("id_b", "h"))
-        .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("ni"))
-      cand.join(ni, Seq("id_a", "id_b"), "left")
-        .join(sz.select(col("doc_id").as("id_a"), col("nsh").as("n_a")),
-          Seq("id_a"))
-        .join(sz.select(col("doc_id").as("id_b"), col("nsh").as("n_b")),
-          Seq("id_b"))
-        .withColumn("ni", coalesce(col("ni"), lit(0L)))
-        .withColumn("jac_micro",
-          expr("(ni * 1000000) div (n_a + n_b - ni)"))
-        .withColumn("est16",
-          floor(col("est_jaccard") * lit(16.0) + lit(0.5)).cast("long"))
-        .groupBy(col("est16"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("jac_micro")).as("_sj"),
-          sum(when(col("jac_micro") >= 500000L, 1L).otherwise(0L))
-            .as("n_exact_pass"))
-        .select(col("est16"), col("n_pairs"),
-          expr("_sj div n_pairs").as("mean_exact_micro"),
-          col("n_exact_pass"), (col("est16") >= 8L).as("est_pass"))
-        .orderBy(col("est16"))
-    })
-  )
-
-  // =====================================================================
-  // DuckDB oracle SQL — same tables, same column names, same rounding.
-  // Text-analysis oracles are BUILT FROM THE SAME CONSTANTS as the Spark
-  // expressions (TextAnalysis.langMarkers etc.) so the two sides cannot
-  // drift.
-  // =====================================================================
-
-  /** DuckDB CTE chain replaying [[graft.operators.Graph.linkRank]] over
-    * a caller-provided `<p>edges`(src, dst, cnt BIGINT) CTE: emits
-    * `<p>deg/<p>ew/<p>nodes/<p>r0..<p>r{iters}` with `<p>r0` uniform
-    * (10⁶) or warm-started from `start` (SQL selecting (node, r)).
-    * MATERIALIZED throughout — the iterative chain references each
-    * stage more than once and plain CTEs inline exponentially.
-    */
-  private def sqlLinkRankCtes(p: String, iters: Int,
-                              start: Option[String] = None): String = {
-    val r0 = start match {
-      case None => s"SELECT node, 1000000::BIGINT AS r FROM ${p}nodes"
-      case Some(sel) =>
-        s"""SELECT n.node, coalesce(s.r, 1000000)::BIGINT AS r
-           FROM ${p}nodes n LEFT JOIN ($sel) s USING (node)"""
-    }
-    val iterCtes = (1 to iters).map { t =>
-      s"""${p}c$t AS MATERIALIZED (SELECT ew.dst AS node,
-             sum(ew.cnt * ((17 * pr.r) // (20 * ew.outdeg)))::BIGINT AS m
-           FROM ${p}ew ew JOIN ${p}r${t - 1} pr ON pr.node = ew.src
-           GROUP BY ew.dst),
-         ${p}r$t AS MATERIALIZED (SELECT n.node,
-             (150000 + coalesce(c.m, 0))::BIGINT AS r
-           FROM ${p}nodes n LEFT JOIN ${p}c$t c USING (node))"""
-    }.mkString(",\n")
-    s"""${p}deg AS MATERIALIZED (SELECT src, sum(cnt)::BIGINT AS outdeg
-           FROM ${p}edges GROUP BY src),
-       ${p}ew AS MATERIALIZED (SELECT e.src, e.dst, e.cnt, d.outdeg
-           FROM ${p}edges e JOIN ${p}deg d USING (src)),
-       ${p}nodes AS MATERIALIZED (SELECT src AS node FROM ${p}edges
-           UNION SELECT dst AS node FROM ${p}edges),
-       ${p}r0 AS MATERIALIZED ($r0),
-       $iterCtes"""
+  /** Every query, family by family. */
+  private[graft] val registry: Seq[Query] = Seq(
+    CoreQueries.all, AggregateQueries.all, ComplianceQueries.all,
+    DedupQueries.all, CorpusQueries.all, EnrichQueries.all,
+    MediaQueries.all, GraphQueries.all, SourceQueries.all,
+    TextQueries.all, QualityQueries.all, VectorQueries.all,
+    WindowQueries.all, MixQueries.all).flatten
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  /** Lazy: some twins encode their fixtures when evaluated. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.sql).toMap
+
+  /** The named queries (all when none are named); an unknown name
+    * throws, so a typo cannot shrink a run to nothing unnoticed. */
+  def select(names: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (names.isEmpty) queries else queries.view.filterKeys(names.toSet).toMap
   }
-
-  /** n3's DuckDB twin of [[graft.operators.Graph.trustRank]]: the
-    * [[sqlLinkRankCtes]] walk with the teleport mass concentrated on a
-    * `seeds(node)` CTE. |V| and |S| fold in as scalar-subquery BIGINTs
-    * (the literals Spark computes driver-side), and `//` on
-    * non-negative BIGINTs floors exactly like Spark's `div`, so every
-    * rank cell is the identical integer on both engines.
-    */
-  private def sqlTrustRankCtes(iters: Int): String = {
-    val iterCtes = (1 to iters).map { t =>
-      s"""c$t AS MATERIALIZED (SELECT ew.dst AS node,
-             sum(ew.cnt * ((17 * pr.r) // (20 * ew.outdeg)))::BIGINT AS m
-           FROM ew JOIN r${t - 1} pr ON pr.node = ew.src
-           GROUP BY ew.dst),
-         r$t AS MATERIALIZED (SELECT n.node,
-             (CASE WHEN n.seed THEN (150000 * k.nn) // k.ns ELSE 0 END
-              + coalesce(c.m, 0))::BIGINT AS r
-           FROM nodes n CROSS JOIN k LEFT JOIN c$t c USING (node))"""
-    }.mkString(",\n")
-    s"""deg AS MATERIALIZED (SELECT src, sum(cnt)::BIGINT AS outdeg
-           FROM edges GROUP BY src),
-       ew AS MATERIALIZED (SELECT e.src, e.dst, e.cnt, d.outdeg
-           FROM edges e JOIN deg d USING (src)),
-       nodes AS MATERIALIZED (SELECT node,
-             node IN (SELECT node FROM seeds) AS seed
-           FROM (SELECT src AS node FROM edges
-                 UNION SELECT dst AS node FROM edges)),
-       k AS MATERIALIZED (SELECT (SELECT count(*) FROM nodes) AS nn,
-           (SELECT count(*) FROM nodes WHERE seed) AS ns),
-       r0 AS MATERIALIZED (SELECT n.node,
-           (CASE WHEN n.seed THEN (1000000 * k.nn) // k.ns
-            ELSE 0 END)::BIGINT AS r
-           FROM nodes n CROSS JOIN k),
-       $iterCtes"""
-  }
-
-  /** n4's DuckDB twin of [[graft.operators.Graph.hits]] over a
-    * caller-provided `edges(src, dst, cnt)` CTE: per iteration the two
-    * integer half-steps plus the power-of-sum rescale, ending in
-    * `a{iters}(node, a)` / `h{iters}(node, h)`. `//` on non-negative
-    * BIGINTs floors exactly like Spark's `div`.
-    */
-  private def sqlHitsCtes(iters: Int): String = {
-    def half(outCte: String, outCol: String, joinSide: String,
-             groupSide: String, prevCte: String, prevCol: String) =
-      s"""${outCte}r AS MATERIALIZED (SELECT e.$groupSide AS node,
-             sum(e.cnt * p.$prevCol)::BIGINT AS raw
-           FROM edges e JOIN $prevCte p ON p.node = e.$joinSide
-           GROUP BY e.$groupSide),
-         ${outCte}s AS MATERIALIZED (SELECT
-             coalesce(sum(raw), 1)::BIGINT AS sr FROM ${outCte}r),
-         $outCte AS MATERIALIZED (SELECT n.node,
-             (coalesce(r.raw, 0) //
-               greatest(1, s.sr // (k.nv * 1000000)))::BIGINT AS $outCol
-           FROM nodes n CROSS JOIN ${outCte}s s CROSS JOIN k
-           LEFT JOIN ${outCte}r r USING (node))"""
-    val iterCtes = (1 to iters).map { t =>
-      val prevH = if (t == 1) "h0" else s"h${t - 1}"
-      half(s"a$t", "a", "src", "dst", prevH, "h") + ",\n" +
-        half(s"h$t", "h", "dst", "src", s"a$t", "a")
-    }.mkString(",\n")
-    s"""nodes AS MATERIALIZED (SELECT src AS node FROM edges
-           UNION SELECT dst AS node FROM edges),
-       k AS MATERIALIZED (SELECT count(*)::BIGINT AS nv FROM nodes),
-       h0 AS MATERIALIZED (SELECT node, 1000000::BIGINT AS h FROM nodes),
-       $iterCtes"""
-  }
-
-  /** DuckDB packed-starts prefix sum over `documents` (the
-    * Packing.packedStartsBucketed twin on one global doc_id-ordered
-    * stream): emits CTEs `${p}src` and `$p(doc_id, n_tok, start_tok)`,
-    * zero-token docs dropped. Shared by the x15/x16/g15 oracles so the
-    * packing semantics (doc_id order, n_tok >= 1) live in ONE place.
-    */
-  private def sqlPackedStarts(p: String,
-                              extraWhere: String = "TRUE"): String = {
-    val toks = sqlTokens("text")
-    s"""${p}src AS (
-         SELECT doc_id, len($toks)::BIGINT AS n_tok FROM documents),
-       $p AS (
-         SELECT doc_id, n_tok,
-           (sum(n_tok) OVER (ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT
-             - n_tok AS start_tok
-         FROM ${p}src WHERE n_tok >= 1 AND ($extraWhere))"""
-  }
-
-  /** DuckDB list literal from a Scala string list. */
-  private def sqlList(xs: Seq[String]): String =
-    xs.map(s => s"'$s'").mkString("[", ", ", "]")
-
-  /** DuckDB: non-empty lowercase tokens of `e` — TA.tokens' twin, built
-    * from the SAME pattern constant (`\x{…}` hex classes parse
-    * identically under Java regex and RE2; regex matches are never
-    * empty, so no filter needed).
-    */
-  private def sqlTokens(e: String): String =
-    s"regexp_extract_all(lower($e), '${TA.tokenPattern}')"
-
-  /** DuckDB twin of [[TF.urlNormalize]]'s replace chain over a
-    * `rebuilt` (lower(scheme) ++ lower(host) ++ rest) expression:
-    * fragment, tracking params, empty-query leftovers, trailing
-    * slashes — shared by the ta12 and d21 oracles so the two can't
-    * drift. DuckDB replacement backrefs are \\1 and need the 'g'
-    * flag — Spark's are $1 and global by default.
-    */
-  private def sqlUrlNorm(rebuilt: String): String =
-    s"""regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-       regexp_replace(regexp_replace($rebuilt, '#.*$$', '', 'g'),
-       '([?&])(utm_[a-zA-Z]+|fbclid|gclid)=[^&#]*', '\\1', 'g'),
-       '\\?&+', '?', 'g'), '&&+', '&', 'g'), '[?&]+$$', '', 'g'),
-       '/+$$', '', 'g')"""
-
-  /** Shared g2/g3 oracle body: decontaminate → quality gate → token-
-    * budget mix → per-doc packed layout, ending in a
-    * `packed(doc_id, lang, n_tok, start_tok)` CTE — g2 rolls it up per
-    * bin, g3 reads it back per doc after the sized-sink round trip.
-    */
-  /** Decontamination CTEs over the quality CTEs' `t` table: per-doc
-    * distinct 5-gram sets, the eval (doc_id < 50) gram union, and the
-    * flagged train-doc set `bad`. Shared by g2/g3/w5.
-    */
-  private def sqlDecontamCtes: String =
-    s"""g AS (
-         SELECT doc_id, list_distinct(list_transform(
-           generate_series(1, len(toks) - 4),
-           i -> array_to_string(list_slice(toks, i, i + 4), ' '))) AS grams
-         FROM t),
-       ev AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id < 50),
-       tr AS (SELECT doc_id, unnest(grams) AS gram FROM g WHERE doc_id >= 50),
-       bad AS (SELECT DISTINCT tr.doc_id FROM tr JOIN ev ON tr.gram = ev.gram)"""
-
-  /** `prelude` splices extra CTEs (and the RECURSIVE keyword) right
-    * after WITH; `extraKept` adds a predicate to the corpus gate —
-    * both used by g4 to fuse the dedup closure upstream of the chain.
-    */
-  private def sqlG2PackedCtes(prelude: String = "",
-                              extraKept: String = ""): String =
-    s"""${sqlQualityCtes(prelude)},
-       $sqlDecontamCtes,
-       kept0 AS (
-         SELECT s.doc_id, d.lang, s.n_tokens::BIGINT AS n_tok
-         FROM s JOIN documents d ON d.doc_id = s.doc_id
-         WHERE s.doc_id >= 50
-           AND s.doc_id NOT IN (SELECT doc_id FROM bad)
-           $extraKept
-           AND $sqlQualityExpr >= 0.55),
-       st AS (SELECT lang, sum(n_tok)::BIGINT AS t FROM kept0 GROUP BY lang),
-       w AS (SELECT lang, t, floor(sqrt(t) * 1e6)::BIGINT AS wgt FROM st),
-       tot AS (SELECT sum(t)::BIGINT AS tot_t, sum(wgt)::BIGINT AS s2 FROM w),
-       r AS (SELECT lang,
-         ${Sampling.sqlMixThr("t", "wgt", "tot_t", "s2", 50)} AS thr
-         FROM w, tot),
-       mixed AS (
-         SELECT k.doc_id, k.lang, k.n_tok FROM kept0 k JOIN r USING (lang)
-         WHERE ('0x' || substr(md5('g2m:' || k.doc_id::VARCHAR), 1, 7))::BIGINT < r.thr),
-       packed AS (
-         SELECT doc_id, lang, n_tok,
-           (sum(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT
-             - n_tok AS start_tok
-         FROM mixed)"""
-
-  /** Shared (word, freq) base for the ta9/ta10 BPE oracles. */
-  private def sqlBpeBase: String =
-    s"""tok AS (SELECT unnest(${sqlTokens("text")}) AS word FROM documents),
-       wf AS (SELECT word, count(*)::BIGINT AS freq FROM tok GROUP BY word)"""
-
-  /** DuckDB twin of TokenFingerprint / TA.fingerprint over `e`. */
-  private def sqlFingerprint(e: String): String =
-    s"""list_reduce(
-       list_prepend(7::BIGINT, list_transform(${sqlTokens(e)},
-         t -> ('0x' || substr(md5(t), 1, 7))::BIGINT)),
-       (h, v) -> (h * 31 + v) % 1000000007)"""
-
-  /** CTE chain replaying [[Dedup.minhashPairs]] over `documents`
-    * (shingle→affine-minhash→band→bucket self-join), ending in
-    * `mh_pairs(id_a, id_b, est_jaccard)` with the RAW (unrounded)
-    * signature-agreement estimate. Shared by the d6 pair listing and
-    * the d14 cluster closure so both gates replay one definition.
-    */
-  /** Band chain of [[Dedup.minhashPairs]]/[[Dedup.saveLshBandIndex]]
-    * over source CTE/table `src`, names prefixed `p` so two sides of a
-    * batch-vs-corpus probe can coexist: ends in
-    * `${p}bucketed(doc_id, sig, bk)` with bk = `"band|md5hex"`.
-    */
-  private def sqlMinhashBandCtes(src: String, p: String): String = {
-    val toks = sqlTokens("text")
-    s"""${p}t AS (SELECT doc_id, $toks AS toks FROM $src),
-       ${p}sh AS (
-         SELECT doc_id,
-           CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-             ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
-               i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
-           END AS shingles
-         FROM ${p}t),
-       ${p}vs AS (
-         SELECT doc_id, list_transform(shingles,
-           x -> ('0x' || substr(md5(x), 1, 7))::BIGINT) AS vs
-         FROM ${p}sh),
-       ${p}sig AS (
-         SELECT doc_id, [${
-           Dedup.minhashCoeffs(16).map { case (a, b) =>
-             s"list_min(list_transform(vs, v -> (v * $a + $b) % 1000000007))"
-           }.mkString(",\n           ")}] AS sig
-         FROM ${p}vs),
-       ${p}bucketed AS (
-         SELECT doc_id, sig, unnest(list_transform(generate_series(0, 3), b ->
-           b::VARCHAR || '|' || md5(array_to_string(
-             list_slice(sig, b * 4 + 1, b * 4 + 4), ',')))) AS bk
-         FROM ${p}sig)"""
-  }
-
-  /** m6 fixture ENCODER: a spec-layout 24bpp BMP for variant v —
-    * w = 1+(v%4), h = 1+(v/4), pixel (x, y in logical top-down coords)
-    * channels B/G/R = (v·7+x·3+y·5, v·11+x+y·2, v·13+x·2+y) mod 256 —
-    * written bottom-up with 4-byte row padding per the BMP spec. The
-    * oracle replays only the FORMULA; the decoder reads only the
-    * BYTES; neither sees this builder's row loop, so a decode bug
-    * (row order, padding, channel order) cannot cancel out.
-    */
-  private def m6BmpHex(v: Int): String = {
-    val w = 1 + (v % 4)
-    val h = 1 + (v / 4)
-    val rowSize = (w * 3 + 3) / 4 * 4
-    val imgSize = rowSize * h
-    val bb = java.nio.ByteBuffer.allocate(54 + imgSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put('B'.toByte).put('M'.toByte).putInt(54 + imgSize).putInt(0)
-      .putInt(54)
-    bb.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24).putInt(0)
-      .putInt(imgSize).putInt(2835).putInt(2835).putInt(0).putInt(0)
-    for (yPhys <- 0 until h) {
-      val y = h - 1 - yPhys // bottom-up: first stored row is the last logical one
-      for (x <- 0 until w) {
-        bb.put(((v * 7 + x * 3 + y * 5) % 256).toByte)
-        bb.put(((v * 11 + x + y * 2) % 256).toByte)
-        bb.put(((v * 13 + x * 2 + y) % 256).toByte)
-      }
-      for (_ <- 0 until rowSize - w * 3) bb.put(0.toByte)
-    }
-    bb.array().map("%02X".format(_)).mkString
-  }
-
-  /** m11 fixture ENCODER: an 8-bit truecolor PNG for variant v —
-    * w = 1+(v%4), h = 1+(v/4), pixel (x, y) channels
-    * R/G/B = (v·7+x·3+y·5, v·11+x+y·2, v·13+x·2+y) mod 256; row y
-    * filters with PNG filter type (y+v) mod 5, so ALL FIVE defilter
-    * paths are load-bearing across the 16 variants, at varying row
-    * positions. The IDAT stream deflates with the JDK Deflater and
-    * splits into two chunks whenever it can (the chunk-concatenation
-    * path), every chunk CRC32-stamped. The oracle replays only the
-    * FORMULA (see [[m6BmpHex]]'s independence argument).
-    */
-  private def m11PngHex(v: Int): String = {
-    val w = 1 + (v % 4); val h = 1 + (v / 4)
-    def px(x: Int, y: Int): Array[Int] = Array(
-      (v * 7 + x * 3 + y * 5) % 256,
-      (v * 11 + x + y * 2) % 256,
-      (v * 13 + x * 2 + y) % 256)
-    def paeth(a: Int, b: Int, c: Int): Int = {
-      val p = a + b - c
-      val pa = math.abs(p - a); val pb = math.abs(p - b)
-      val pc = math.abs(p - c)
-      if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-    }
-    val stride = 3 * w
-    val rows = Array.tabulate(h, stride)((y, i) => px(i / 3, y)(i % 3))
-    val filtered = new java.io.ByteArrayOutputStream()
-    for (y <- 0 until h) {
-      val f = (y + v) % 5
-      filtered.write(f)
-      for (i <- 0 until stride) {
-        val left = if (i >= 3) rows(y)(i - 3) else 0
-        val up = if (y > 0) rows(y - 1)(i) else 0
-        val ul = if (y > 0 && i >= 3) rows(y - 1)(i - 3) else 0
-        val pred = f match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) / 2
-          case 4 => paeth(left, up, ul)
-        }
-        filtered.write((rows(y)(i) - pred) & 0xff)
-      }
-    }
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(filtered.toByteArray); defl.finish()
-    val comp = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](256)
-    while (!defl.finished()) comp.write(buf, 0, defl.deflate(buf))
-    defl.end()
-    def chunk(tag: String, data: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(12 + data.length)
-      bb.putInt(data.length).put(tag.getBytes("US-ASCII")).put(data)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tag.getBytes("US-ASCII")); crc.update(data)
-      bb.putInt(crc.getValue.toInt)
-      bb.array()
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(w).putInt(h).put(8.toByte).put(2.toByte)
-      .put(0.toByte).put(0.toByte).put(0.toByte).array()
-    val cb = comp.toByteArray
-    val (c1, c2) = cb.splitAt(cb.length / 2)
-    val idat =
-      if (c1.nonEmpty && c2.nonEmpty) chunk("IDAT", c1) ++ chunk("IDAT", c2)
-      else chunk("IDAT", cb)
-    val all = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte) ++ chunk("IHDR", ihdr) ++ idat ++
-      chunk("IEND", Array.emptyByteArray)
-    all.map("%02X".format(_)).mkString
-  }
-
-  /** m12 fixture ENCODER: a single-frame GIF89a for variant v —
-    * w = 1+(v%4), h = 1+(v/4), a 4-color global color table with
-    * entry j = (R,G,B) = ((v·7+j·31)%256, (v·11+j·17)%256,
-    * (v·13+j·23)%256) and pixel index(x,y) = (x + 2y + v) % 4 —
-    * compressed by a REAL greedy GIF-LZW encoder ([[m12LzwEncode]])
-    * and preceded by a graphic-control extension so the decoder's
-    * sub-block skip path is load-bearing. The oracle replays only the
-    * FORMULA; the decoder reads only the BYTES (see [[m6BmpHex]]'s
-    * independence argument).
-    */
-  private def m12GifHex(v: Int): String = {
-    val w = 1 + (v % 4); val h = 1 + (v / 4)
-    val idx = Array.tabulate(w * h)(i => ((i % w) + 2 * (i / w) + v) % 4)
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(x: Int): Unit = { out.write(x & 0xff); out.write((x >> 8) & 0xff) }
-    out.write("GIF89a".getBytes("US-ASCII"))
-    le16(w); le16(h)
-    out.write(0x80 | 0x01) // GCT present, size bits 1 => 4 entries
-    out.write(0); out.write(0) // background index, aspect
-    for (j <- 0 until 4) {
-      out.write((v * 7 + j * 31) % 256)
-      out.write((v * 11 + j * 17) % 256)
-      out.write((v * 13 + j * 23) % 256)
-    }
-    // graphic-control extension — skipped by sub-block walking
-    out.write(0x21); out.write(0xf9); out.write(4)
-    out.write(0); le16(0); out.write(0); out.write(0)
-    // image descriptor: full frame, no local table, no interlace
-    out.write(0x2c); le16(0); le16(0); le16(w); le16(h); out.write(0)
-    val minCode = 2
-    out.write(minCode)
-    val packed = m12LzwEncode(idx, minCode)
-    var off = 0
-    while (off < packed.length) {
-      val n = math.min(255, packed.length - off)
-      out.write(n); out.write(packed, off, n); off += n
-    }
-    out.write(0) // block terminator
-    out.write(0x3b) // trailer
-    out.toByteArray.map("%02X".format(_)).mkString
-  }
-
-  /** Greedy GIF-LZW compress with the DECODER-aligned width cadence:
-    * codes pack LSB-first; the write width bumps exactly when the
-    * decoder's dictionary (which adds one entry per data code from the
-    * second on) reaches 2^width — the one-step encoder/decoder count
-    * skew that buries most LZW bugs.
-    */
-  private[graft] def m12LzwEncode(idx: Array[Int], minCode: Int): Array[Byte] = {
-    val clear = 1 << minCode; val end = clear + 1
-    val bits = new java.io.ByteArrayOutputStream()
-    var acc = 0; var nbits = 0
-    var width = minCode + 1
-    var decNext = end + 1; var dataCodes = 0
-    def put(code: Int, isData: Boolean): Unit = {
-      acc |= code << nbits; nbits += width
-      while (nbits >= 8) { bits.write(acc & 0xff); acc >>= 8; nbits -= 8 }
-      if (isData) {
-        dataCodes += 1
-        if (dataCodes >= 2) {
-          decNext += 1
-          if (decNext == (1 << width) && width < 12) width += 1
-        }
-      }
-    }
-    put(clear, isData = false)
-    val dict = scala.collection.mutable.HashMap[Seq[Int], Int]()
-    (0 until clear).foreach(j => dict(Seq(j)) = j)
-    var encNext = end + 1
-    var run = Seq(idx(0)) // every frame has >= 1 pixel
-    idx.iterator.drop(1).foreach { s =>
-      if (dict.contains(run :+ s)) run = run :+ s
-      else {
-        put(dict(run), isData = true)
-        dict(run :+ s) = encNext; encNext += 1
-        run = Seq(s)
-      }
-    }
-    put(dict(run), isData = true)
-    put(end, isData = false)
-    if (nbits > 0) bits.write(acc & 0xff)
-    bits.toByteArray
-  }
-
-  /** m7 fixture ENCODER: a canonical-layout 16-bit PCM mono WAV for
-    * variant v — n = 8+v samples, s_i = ((v·37 + i·29) mod 401) − 200.
-    * The oracle replays only the FORMULA; the decoder reads only the
-    * BYTES (see [[m6BmpHex]]'s independence argument).
-    */
-  private def m7WavHex(v: Int): String = {
-    val n = 8 + v
-    val dlen = 2 * n
-    val bb = java.nio.ByteBuffer.allocate(44 + dlen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes).putInt(36 + dlen).put("WAVE".getBytes)
-    bb.put("fmt ".getBytes).putInt(16).putShort(1).putShort(1)
-      .putInt(8000).putInt(16000).putShort(2).putShort(16)
-    bb.put("data".getBytes).putInt(dlen)
-    for (i <- 0 until n)
-      bb.putShort((((v * 37 + i * 29) % 401) - 200).toShort)
-    bb.array().map("%02X".format(_)).mkString
-  }
-
-  /** m8 fixture ENCODER: an 8×8 24bpp BMP for variant v — base pattern
-    * b = v mod 4 picks the image, d = (v div 4)·9 is a UNIFORM
-    * brightness shift on every channel (logical top-down x, y):
-    * B/G/R = (b·37+x·13+y·29+d, b·53+x·17+y·7+d, b·71+x·5+y·23+d)
-    * mod 256. Same-base variants differ only by the shift, which the
-    * dHash comparisons cancel except where a channel WRAPS past 255 —
-    * so same-base Hamming stays small and cross-base is ~random. The
-    * oracle replays only the FORMULA (see [[m6BmpHex]]'s independence
-    * argument).
-    */
-  private def m8BmpHex(v: Int): String = {
-    val b = v % 4
-    val d = (v / 4) * 9
-    val bb = java.nio.ByteBuffer.allocate(54 + 192)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put('B'.toByte).put('M'.toByte).putInt(54 + 192).putInt(0)
-      .putInt(54)
-    bb.putInt(40).putInt(8).putInt(8).putShort(1).putShort(24).putInt(0)
-      .putInt(192).putInt(2835).putInt(2835).putInt(0).putInt(0)
-    for (yPhys <- 0 until 8) {
-      val y = 7 - yPhys // bottom-up storage
-      for (x <- 0 until 8) {
-        bb.put(((b * 37 + x * 13 + y * 29 + d) % 256).toByte)
-        bb.put(((b * 53 + x * 17 + y * 7 + d) % 256).toByte)
-        bb.put(((b * 71 + x * 5 + y * 23 + d) % 256).toByte)
-      }
-    }
-    bb.array().map("%02X".format(_)).mkString
-  }
-
-  /** x4 split fractions + salt — shared by the Spark query and its
-    * oracle so the cumulative thresholds are generated from one place.
-    */
-  private val x4Cuts = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-  private val x4Salt = "spl"
-
-  private def sqlMinhashPairCtes: String =
-    s"""${sqlMinhashBandCtes("documents", "")},
-       mh_cand AS (
-         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-           a.sig AS sa, b.sig AS sb
-         FROM bucketed a JOIN bucketed b
-           ON a.bk = b.bk AND a.doc_id < b.doc_id),
-       mh_pairs AS (
-         SELECT id_a, id_b,
-           list_sum(list_transform(generate_series(1, 16),
-             i -> CASE WHEN sa[i] = sb[i] THEN 1 ELSE 0 END)) / 16.0
-             AS est_jaccard
-         FROM mh_cand)"""
-
-  /** DuckDB twin of SimHash16 over `e` (per-bit md5-nibble majority vote
-    * across the distinct token set).
-    */
-  private def sqlSimhash(e: String): String = {
-    val dtoks = s"list_distinct(${sqlTokens(e)})"
-    s"""list_sum(list_transform(generate_series(0, 15), b ->
-       CASE WHEN list_sum(list_transform($dtoks, tk ->
-         (((('0x' || substr(md5(tk), (b // 4)::INT + 1, 1))::INT
-            // (2 ** (3 - b % 4))::INT) % 2) * 2 - 1))) > 0
-       THEN (2 ** b)::INT ELSE 0 END))::BIGINT"""
-  }
-
-  /** DuckDB twin of SimHash64 over `e` — the 64-bit sibling of
-    * [[sqlSimhash]]: bit b votes with bit (3 − b%4) of hex char
-    * (b/4 + 1) of each token's md5; the fingerprint assembles as a
-    * signed-64 sum (bit 63 contributes Long.MIN_VALUE; every other
-    * power of two is double-exact).
-    */
-  private def sqlSimhash64(e: String): String = {
-    val dtoks = s"list_distinct(${sqlTokens(e)})"
-    s"""(list_sum(list_transform(generate_series(0, 63), b ->
-       CASE WHEN list_sum(list_transform($dtoks, tk ->
-         (((('0x' || substr(md5(tk), (b // 4)::INT + 1, 1))::INT
-            // (2 ** (3 - b % 4))::INT) % 2) * 2 - 1))) > 0
-       THEN (CASE WHEN b = 63 THEN -9223372036854775807 - 1
-             ELSE (2 ** b)::BIGINT END)
-       ELSE 0 END)))::BIGINT"""
-  }
-
-  /** DuckDB: occurrences of `markers` tokens in `e` (TA.markerHits). */
-  private def sqlHits(e: String, markers: Seq[String]): String =
-    s"len(list_filter(${sqlTokens(e)}, x -> list_contains(${sqlList(markers)}, x)))"
-
-  /** DuckDB twin of TA.languageId: CJK → zh, no hits → und, else the
-    * first language (in priority order) holding the max hit count.
-    */
-  private def sqlLanguageId(e: String): String = {
-    val hs = TA.langMarkers.map { case (l, ms) => l -> sqlHits(e, ms) }
-    val total = hs.map(_._2).mkString(" + ")
-    // branch k: lang k beats every later lang (earlier ones already failed
-    // = had strictly fewer hits), i.e. first-max.
-    val branches = hs.zipWithIndex.map { case ((l, h), i) =>
-      val laters = hs.drop(i + 1).map(_._2)
-      if (laters.isEmpty) s"ELSE '$l'"
-      else s"WHEN ${laters.map(o => s"$h >= $o").mkString(" AND ")} THEN '$l'"
-    }
-    s"""CASE WHEN regexp_matches($e, '[${TA.cjkRange}]') THEN 'zh'
-        WHEN $total = 0 THEN 'und'
-        ${branches.init.mkString("\n        ")}
-        ${branches.last} END"""
-  }
-
-  /** DuckDB: left-fold dot product of two 64-dim vector expressions,
-    * cast to double exactly like VectorFunctions.dot (left-to-right
-    * summation ⇒ bit-identical accumulation order).
-    */
-  private def sqlDot(a: String, b: String, dim: Int): String =
-    s"""list_reduce(list_transform(generate_series(1, $dim),
-        i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (acc, x) -> acc + x)"""
-
-  private def sqlDot64(a: String, b: String): String = sqlDot(a, b, 64)
-
-  private def sqlCosine(a: String, b: String, dim: Int): String =
-    s"${sqlDot(a, b, dim)} / (sqrt(${sqlDot(a, a, dim)}) * sqrt(${sqlDot(b, b, dim)}))"
-
-  private def sqlCosine64(a: String, b: String): String = sqlCosine(a, b, 64)
-
-  /** DuckDB twin of Rag.bm25 over `documents` rows matching `docFilter`
-    * — CTE chain ending in `lexsc(query_id, doc_id, score)` with the
-    * score 6-rounded (same pre-rank rounding as the Spark side). All
-    * constants (query terms, k1, b) come from the bm25Queries/bm25K1/
-    * bm25B vals; arithmetic mirrors the Scala expression tree
-    * operation-for-operation (left-assoc products, double literals that
-    * round-trip through toString).
-    */
-  private def sqlBm25(docFilter: String): String = {
-    val vocab = sqlList(bm25Queries.flatMap(_._2).distinct)
-    val qvals = bm25Queries
-      .flatMap { case (q, ts) => ts.map(t => s"($q, '$t')") }.mkString(", ")
-    val g = operators.Classify.WeightGrid
-    // the r11 order-exact form: idf = detln(2N+2) − detln(2df+1)
-    // (integer args — ln(1 + (N−df+½)/(df+½)) ≡ ln((N+1)/(df+½))),
-    // per-term weights on the integer 2⁻²⁰ grid, exact BIGINT sums
-    s"""bmb AS (SELECT doc_id, len(${sqlTokens("text")}) AS dl,
-           ${sqlTokens("text")} AS toks
-         FROM documents WHERE $docFilter),
-       bmstats AS (SELECT n_docs, avgdl, nnln FROM (SELECT n_docs, avgdl,
-           ${operators.Classify.sqlDetLnCols("nn", "2 * n_docs + 2")}
-         FROM (SELECT count(*)::BIGINT AS n_docs, avg(dl)::DOUBLE AS avgdl
-           FROM bmb))),
-       bmtf AS (SELECT doc_id, term, count(*)::BIGINT AS tf,
-           max(dl)::BIGINT AS dl
-         FROM (SELECT doc_id, dl, unnest(toks) AS term FROM bmb)
-         WHERE list_contains($vocab, term) GROUP BY 1, 2),
-       bmdf AS (SELECT term, df, dfln FROM (SELECT term, df,
-           ${operators.Classify.sqlDetLnCols("df", "2 * df + 1")}
-         FROM (SELECT term, count(DISTINCT doc_id)::BIGINT AS df
-           FROM bmtf GROUP BY 1))),
-       bmq(query_id, term) AS (VALUES $qvals),
-       bmw AS (SELECT bmq.query_id, t.doc_id,
-           floor(((s.nnln - d.dfln)
-             * t.tf * ${bm25K1 + 1.0}
-             / (t.tf + $bm25K1 * (${1.0 - bm25B}
-                 + $bm25B * t.dl / s.avgdl))) * $g + 0.5)::BIGINT AS wi
-         FROM bmtf t JOIN bmdf d USING (term)
-           JOIN bmq ON bmq.term = t.term, bmstats s),
-       lexsc AS (SELECT query_id, doc_id,
-           ${sqlFround(s"sum(wi)::DOUBLE / $g", 6)} AS score
-         FROM bmw GROUP BY 1, 2)"""
-  }
-
-  /** DuckDB twin of Embed.MockHashEmbeddingClient: per dimension the
-    * 28-bit md5 hash of "i:text" scaled to [0,1) as double, rounded
-    * once to float — identical IEEE ops to the JVM mock.
-    */
-  private def sqlMockEmbedding(text: String, dim: Int): String =
-    s"""list_transform(generate_series(0, ${dim - 1}),
-        i -> (('0x' || substr(md5(i::VARCHAR || ':' || $text), 1, 7))::BIGINT
-          / 268435456.0)::FLOAT)"""
-
-  /** DuckDB twin of Similarity.kmeansCentroids as a reusable WITH-body:
-    * same smallest-id init, same cosine-argmax tie-break (ties → lowest
-    * cid), same per-dimension means with floor-stable 6-decimal
-    * centroid rounding after every step — the rounding is what makes
-    * the two engines' distributed-summation noise collapse to
-    * identical centroids. Ends in a `final_assign(vec_id, embedding,
-    * cid, cos)` CTE consumed by the v8 rollup and the d10 pair query.
-    * Generated per (k, iters, source-CTE) so every consumer shares one
-    * definition — v14 trains over an index subset instead of the full
-    * `embeddings` table.
-    */
-  private def sqlKmeansCtes(k: Int, iters: Int,
-                            src: String = "embeddings",
-                            p: String = "", dim: Int = 64): String = {
-    def r6(e: String) = s"floor(($e) * 1e6 + 0.5) / 1e6"
-    val init =
-      s"""${p}cents0 AS (
-           SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cid,
-             list_transform(embedding, x -> ${r6("CAST(x AS DOUBLE)")}) AS cv
-           FROM (SELECT * FROM $src ORDER BY vec_id LIMIT $k))"""
-    val steps = (1 to iters).map { it =>
-      s"""${p}assign$it AS (
-           SELECT vec_id, embedding, cid FROM (
-             SELECT e.vec_id, e.embedding, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY ${sqlCosine("e.embedding", "c.cv", dim)} DESC, c.cid)
-                 AS rn
-             FROM $src e CROSS JOIN ${p}cents${it - 1} c)
-           WHERE rn = 1),
-         ${p}cents$it AS (
-           SELECT p.cid, coalesce(n.cv, p.cv) AS cv
-           FROM ${p}cents${it - 1} p LEFT JOIN (
-             SELECT cid, list(m ORDER BY i) AS cv FROM (
-               SELECT a.cid, t.i,
-                 ${r6("avg(CAST(a.embedding[t.i] AS DOUBLE))")} AS m
-               FROM ${p}assign$it a CROSS JOIN generate_series(1, $dim) t(i)
-               GROUP BY a.cid, t.i)
-             GROUP BY cid) n USING (cid))"""
-    }
-    s"""$init,
-       ${steps.mkString(",\n")},
-       ${p}final_assign AS (
-         SELECT vec_id, embedding, cid, cos FROM (
-           SELECT e.vec_id, e.embedding, c.cid,
-             ${sqlCosine("e.embedding", "c.cv", dim)} AS cos,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY ${sqlCosine("e.embedding", "c.cv", dim)} DESC, c.cid)
-               AS rn
-           FROM $src e CROSS JOIN ${p}cents$iters c)
-         WHERE rn = 1)"""
-  }
-
-  /** Shared v18/v20 PQ-ANN oracle chain: four per-subspace k-means
-    * chains (sliced sources, prefixed CTEs), codes via the final
-    * assignments, centroid-norm tables, per-query ADC LUTs, the
-    * fixed-order 4-lookup score, then the approx and exact rank
-    * windows — every fold written in the Spark expression's operation
-    * order. `extraCtes` (v20) prepends the coarse-router CTEs and
-    * `candRestrict` (v20) narrows the scored pairs to the probed
-    * inverted lists.
-    */
-  private def sqlPqTopK(docFilter: String, queryFilter: String, k: Int,
-                        extraCtes: String = "",
-                        candRestrict: String = ""): String = {
-    val sd = pqSubDim
-    val srcs = (0 until pqM).map { s =>
-      s"""pqsrc$s AS (SELECT vec_id,
-           list_slice(embedding, ${s * sd + 1}, ${(s + 1) * sd})
-             AS embedding
-         FROM embeddings WHERE $docFilter)"""
-    }.mkString(",\n")
-    val kms = (0 until pqM).map { s =>
-      sqlKmeansCtes(pqK, pqIters, s"pqsrc$s", s"pq${s}_", sd)
-    }.mkString(",\n")
-    val norms = (0 until pqM).map { s =>
-      s"""pqn$s AS (SELECT cid,
-           list_reduce(list_transform(cv, x -> x * x),
-             (acc, x) -> acc + x) AS nn
-         FROM pq${s}_cents$pqIters)"""
-    }.mkString(",\n")
-    val luts = (0 until pqM).map { s =>
-      s"""pql$s AS (SELECT q.query_id, c.cid,
-           list_reduce(list_transform(generate_series(1, $sd),
-             i -> CAST(q.qe[${s * sd} + i] AS DOUBLE) * c.cv[i]),
-             (acc, x) -> acc + x) AS d
-         FROM pqq q CROSS JOIN pq${s}_cents$pqIters c)"""
-    }.mkString(",\n")
-    val extra = if (extraCtes.isEmpty) "" else s"$extraCtes,\n"
-    s"""WITH $extra$srcs,
-       $kms,
-       pqcodes AS (
-         SELECT a0.vec_id, a0.cid AS c0, a1.cid AS c1,
-           a2.cid AS c2, a3.cid AS c3
-         FROM pq0_final_assign a0
-         JOIN pq1_final_assign a1 USING (vec_id)
-         JOIN pq2_final_assign a2 USING (vec_id)
-         JOIN pq3_final_assign a3 USING (vec_id)),
-       $norms,
-       pqrn AS (
-         SELECT c.vec_id, c.c0, c.c1, c.c2, c.c3,
-           sqrt(((n0.nn + n1.nn) + n2.nn) + n3.nn) AS rnorm
-         FROM pqcodes c
-         JOIN pqn0 n0 ON n0.cid = c.c0
-         JOIN pqn1 n1 ON n1.cid = c.c1
-         JOIN pqn2 n2 ON n2.cid = c.c2
-         JOIN pqn3 n3 ON n3.cid = c.c3),
-       pqq AS (SELECT vec_id AS query_id, embedding AS qe,
-           sqrt(${sqlDot64("embedding", "embedding")}) AS qnorm
-         FROM embeddings WHERE $queryFilter),
-       $luts,
-       pqsc AS (
-         SELECT q.query_id, r.vec_id AS doc_id,
-           CASE WHEN r.rnorm * q.qnorm > 0
-             THEN (((l0.d + l1.d) + l2.d) + l3.d) / (r.rnorm * q.qnorm)
-           END AS approx_cosine
-         FROM pqrn r CROSS JOIN pqq q
-         JOIN pql0 l0 ON l0.query_id = q.query_id AND l0.cid = r.c0
-         JOIN pql1 l1 ON l1.query_id = q.query_id AND l1.cid = r.c1
-         JOIN pql2 l2 ON l2.query_id = q.query_id AND l2.cid = r.c2
-         JOIN pql3 l3 ON l3.query_id = q.query_id AND l3.cid = r.c3
-         $candRestrict),
-       pqa AS (SELECT query_id, doc_id, approx_cosine,
-           row_number() OVER (PARTITION BY query_id
-             ORDER BY approx_cosine DESC, doc_id) AS arank
-         FROM pqsc),
-       pqex AS (SELECT c.query_id, c.doc_id, c.approx_cosine,
-           ${sqlCosine64("de.embedding", "qe.embedding")} AS cosine
-         FROM pqa c
-         JOIN embeddings de ON de.vec_id = c.doc_id
-         JOIN embeddings qe ON qe.vec_id = c.query_id
-         WHERE c.arank <= $pqRerank),
-       pqrk AS (SELECT query_id, doc_id, cosine, approx_cosine,
-           row_number() OVER (PARTITION BY query_id
-             ORDER BY cosine DESC, doc_id) AS rank
-         FROM pqex)
-       SELECT query_id, doc_id, ${sqlFround("cosine", 6)} AS cosine,
-         ${sqlFround("approx_cosine", 6)} AS approx_cosine, rank
-       FROM pqrk WHERE rank <= $k ORDER BY query_id, rank"""
-  }
-
-  /** v8: [[sqlKmeansCtes]] + the cluster-size/cohesion rollup. */
-  private def sqlKmeansRollup(k: Int, iters: Int): String =
-    s"""WITH ${sqlKmeansCtes(k, iters)}
-       SELECT cid, count(*) AS n_vecs, ${sqlFround("avg(cos)", 6)} AS cohesion
-       FROM final_assign GROUP BY cid ORDER BY cid"""
-
-  /** DuckDB: `words` members occurring as substrings of lower(e)
-    * (Ruler.keywordHits).
-    */
-  private def sqlKwHits(e: String, words: Seq[String]): String =
-    s"len(list_filter(${sqlList(words)}, w -> contains(lower($e), w)))"
-
-  /** Shared CTEs computing the TextAnalysis quality-score inputs over
-    * `documents` (twin of TA.tokenCount/stopwordRatio/punctRatio/
-    * typeTokenRatio/qualityScore). Used by ta2 and a3.
-    */
-  private def sqlQualityCtes(prelude: String = ""): String = {
-    val toks = sqlTokens("text")
-    val stopHits = sqlHits("text", TA.enStopwords)
-    s"""WITH ${prelude}t AS (
-           SELECT doc_id, text, $toks AS toks,
-             len(regexp_extract_all(text, '${TA.bpePattern.replace("'", "''")}')) AS n_bpe,
-             len(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
-             $stopHits AS stop_hits
-           FROM documents),
-         s AS (
-           SELECT doc_id,
-             len(toks) AS n_tokens, n_bpe AS n_bpe_tokens,
-             CASE WHEN len(toks) > 0 THEN stop_hits * 1.0 / len(toks) ELSE 0.0 END AS sr,
-             CASE WHEN len(text) > 0 THEN n_punct * 1.0 / len(text) ELSE 0.0 END AS pr,
-             CASE WHEN len(toks) > 0 THEN len(list_distinct(toks)) * 1.0 / len(toks) ELSE 0.0 END AS tt,
-             CASE WHEN len(text) > 0 THEN least(1.0, len(text) / 400.0) ELSE 0.0 END AS ls
-           FROM t)"""
-  }
-
-  /** The quality composite over the `s` CTE columns (floor-stable 4dp). */
-  private val sqlQualityExpr: String =
-    """floor((ls * 0.3 + least(1.0, sr * 4.0) * 0.3 + tt * 0.2
-       + (1.0 - least(1.0, pr * 8.0)) * 0.2) * 10000.0 + 0.5) / 10000.0"""
-
-  /** Shared NB classifier oracle body (tq1 from-scratch / tq3
-    * incremental — the CountLog fold must hit identical numbers):
-    * per-class feature-slot counts over the 60% keyed split,
-    * Laplace-smoothed log-odds over the held-out docs. Split
-    * predicate, feature hash and bucket count are the SAME Scala
-    * constants as the Spark queries. Ends mid-SELECT so callers
-    * append extra output columns + the FROM/ORDER BY tail.
-    */
-  /** The NB model-fit CTEs with names prefixed `p` (so the chain can
-    * splice into the g2 prelude without colliding with its CTE names):
-    * `${p}tk` tokenized+labeled rows with the train flag, `${p}f`
-    * hashed features, `${p}cls` per-class slot counts over the train
-    * split, `${p}st` the doc/token class totals. Same Scala constants
-    * (bucket count, split threshold, feature hash) as the Spark
-    * queries.
-    */
-  private def sqlNbModelCtes(p: String): String = {
-    val b = nbBuckets
-    val thr = operators.Sampling.threshold(0.6)
-    val toks = sqlTokens("text")
-    s"""${p}tk AS (SELECT doc_id,
-             coalesce(lang = 'en', false) AS pos,
-             ('0x' || substr(md5('nbt:' || doc_id::VARCHAR), 1, 7))::BIGINT
-               < $thr AS tr,
-             unnest($toks) AS tok
-           FROM documents),
-         ${p}f AS (SELECT doc_id, pos, tr,
-             ${operators.Classify.sqlFeatHash("tok", b)} AS f FROM ${p}tk),
-         ${p}cls AS (SELECT f,
-             sum(CASE WHEN pos THEN 1 ELSE 0 END)::BIGINT AS npos,
-             sum(CASE WHEN pos THEN 0 ELSE 1 END)::BIGINT AS nneg
-           FROM ${p}f WHERE tr GROUP BY f),
-         ${p}st AS (SELECT
-             sum(CASE WHEN coalesce(lang = 'en', false) THEN 1 ELSE 0
-               END)::BIGINT AS dpos,
-             sum(CASE WHEN coalesce(lang = 'en', false) THEN 0 ELSE 1
-               END)::BIGINT AS dneg,
-             sum(CASE WHEN coalesce(lang = 'en', false) THEN len($toks)
-               ELSE 0 END)::BIGINT AS tpos,
-             sum(CASE WHEN coalesce(lang = 'en', false) THEN 0
-               ELSE len($toks) END)::BIGINT AS tneg
-           FROM documents
-           WHERE ('0x' || substr(md5('nbt:' || doc_id::VARCHAR), 1, 7))::BIGINT
-             < $thr)"""
-  }
-
-  /** Bucket count shared by every NB/DSIR query and oracle. */
-  private val nbBuckets = 4096
-
-  /** detLn weight-table CTEs against `${p}cls`/`${p}st` (the r11
-    * order-exact NB form, mirroring Classify.score): per-slot integer
-    * grid weights `${p}nw(f, wi)` plus the absent-slot default and the
-    * quantized prior `${p}nd(wi0, pq)`. Consumers fold
-    * `(any_value(pq) + sum(c * coalesce(wi, wi0)))::DOUBLE / grid`.
-    */
-  private def sqlNbWiCtes(p: String): String = {
-    val g = operators.Classify.WeightGrid
-    s"""${p}nlw AS (SELECT ltln, lrln, dpln, dnln FROM (SELECT
-           ${operators.Classify.sqlDetLnCols("lt", s"tpos + $nbBuckets")},
-           ${operators.Classify.sqlDetLnCols("lr", s"tneg + $nbBuckets")},
-           ${operators.Classify.sqlDetLnCols("dp", "dpos")},
-           ${operators.Classify.sqlDetLnCols("dn", "dneg")}
-         FROM ${p}st)),
-       ${p}nw AS (SELECT f, wi FROM (SELECT f,
-           ${operators.Classify.sqlDetLnCols("a", "npos + 1")},
-           ${operators.Classify.sqlDetLnCols("b", "nneg + 1")},
-           floor(((aln - ltln) - (bln - lrln)) * $g + 0.5)::BIGINT AS wi
-         FROM ${p}cls CROSS JOIN ${p}nlw)),
-       ${p}nd AS (SELECT
-           floor(((0.0 - ltln) - (0.0 - lrln)) * $g + 0.5)::BIGINT AS wi0,
-           floor((dpln - dnln) * $g + 0.5)::BIGINT AS pq
-         FROM ${p}nlw)"""
-  }
-
-  /** The shared NB score fold over `${p}docf` ⋈ the weight tables. */
-  private def sqlNbLo(p: String): String =
-    s"""(any_value(${p}nd.pq) + sum(c * coalesce(wi, wi0)))::DOUBLE
-       / ${operators.Classify.WeightGrid}"""
-
-  private lazy val sqlNbScore: String =
-    s"""WITH ${sqlNbModelCtes("")},
-         ${sqlNbWiCtes("")},
-         docf AS (SELECT doc_id, f, count(*)::BIGINT AS c
-           FROM f WHERE NOT tr GROUP BY 1, 2),
-         sc AS (SELECT doc_id, sum(c)::BIGINT AS n_tok,
-             ${sqlNbLo("")} AS lo
-           FROM docf LEFT JOIN nw USING (f) CROSS JOIN nd
-           GROUP BY doc_id)
-         SELECT doc_id, n_tok, ${sqlFround("lo", 6)} AS log_odds"""
-
-  def oracleSql: Map[String, String] = Map(
-    "r1_ruler_scores" -> {
-      val innov = sqlKwHits("text", Ruler.innovationWords)
-      val ev = sqlKwHits("text", Ruler.evaluationWords)
-      val theory = sqlKwHits("text", Ruler.theoryWords)
-      val meth = sqlKwHits("text", Ruler.methodWords)
-      val metr = sqlKwHits("text", Ruler.metricWords)
-      val app = sqlKwHits("text", Ruler.applicationWords)
-      val titleSql = "trim(substring(text, 1, 40))"
-      val tmatch = sqlKwHits(s"$titleSql || ' ' || text", Ruler.topicTerms)
-      val ttitle = sqlKwHits(titleSql, Ruler.topicTerms)
-      val nTopic = Ruler.topicTerms.size
-      s"""WITH base AS (
-           SELECT doc_id, text,
-             $titleSql AS title,
-             doc_id % 5 AS n_auth, doc_id % 3 AS n_opt,
-             doc_id % 10 AS n_terms, doc_id % 1000 AS days,
-             doc_id % 50 = 0 AS is_dup,
-             $innov AS innov, $ev AS ev, $theory AS theory,
-             $meth AS meth, $metr AS metr, $app AS app,
-             $tmatch AS tmatch, $ttitle AS ttitle,
-             len(list_filter(
-               [CASE WHEN doc_id % 3 = 0 THEN 'cs.DB' ELSE 'stat.ME' END,
-                CASE WHEN doc_id % 7 = 0 THEN 'cs.LG' ELSE 'math.ST' END],
-               c -> contains(lower(c), 'cs.'))) > 0 AS has_cs
-           FROM documents),
-         scores AS (
-           SELECT doc_id, text, title, n_terms,
-             CASE WHEN title = '' OR text = '' OR n_auth <= 0 THEN 0.0
-               ELSE least(1.0,
-                 (CASE WHEN len(text) > 100 THEN 0.3 ELSE 0.0 END) +
-                 (CASE WHEN len(title) > 10 THEN 0.25 ELSE 0.0 END) +
-                 0.25 + n_opt * 0.05) END AS comp,
-             CASE WHEN days <= 7 THEN 1.0 WHEN days <= 30 THEN 0.9
-               WHEN days <= 90 THEN 0.8 WHEN days <= 180 THEN 0.7
-               WHEN days <= 365 THEN 0.5
-               ELSE greatest(0.1, 1.0 - days / 3650.0) END AS rec,
-             least(1.0,
-               (CASE WHEN n_terms >= 8 THEN 0.4 WHEN n_terms >= 5 THEN 0.3
-                 WHEN n_terms >= 3 THEN 0.2 WHEN n_terms >= 1 THEN 0.1
-                 ELSE 0.0 END) +
-               (CASE WHEN innov >= 3 THEN 0.3 WHEN innov >= 2 THEN 0.2
-                 WHEN innov >= 1 THEN 0.1 ELSE 0.0 END) +
-               (CASE WHEN ev >= 2 THEN 0.2 WHEN ev >= 1 THEN 0.1 ELSE 0.0 END) +
-               (CASE WHEN theory >= 1 THEN 0.1 ELSE 0.0 END)) AS subst,
-             least(1.0,
-               (CASE WHEN meth >= 3 THEN 0.5 WHEN meth >= 2 THEN 0.35
-                 WHEN meth >= 1 THEN 0.2 ELSE 0.0 END) +
-               (CASE WHEN metr >= 3 THEN 0.5 WHEN metr >= 2 THEN 0.35
-                 WHEN metr >= 1 THEN 0.2 ELSE 0.0 END)) AS rigor,
-             least(1.0,
-               (CASE WHEN app >= 3 THEN 0.6 WHEN app >= 2 THEN 0.4
-                 WHEN app >= 1 THEN 0.2 ELSE 0.0 END) +
-               (CASE WHEN len(text) > 500 THEN 0.2 ELSE 0.1 END)) AS impact,
-             least(1.0,
-               (CAST(tmatch AS DOUBLE) / $nTopic) * 0.5 +
-               (CASE WHEN has_cs THEN 0.3 ELSE 0.1 END) +
-               least(0.2, CAST(ttitle AS DOUBLE) * 0.1)) AS rel,
-             least(0.5,
-               (CASE WHEN len(text) < 100 THEN 0.2 ELSE 0.0 END) +
-               (CASE WHEN len(title) < 10 THEN 0.1 ELSE 0.0 END) +
-               (CASE WHEN regexp_matches(text, '(?i)(lorem ipsum|xxx+|\\btodo\\b)')
-                 THEN 0.15 ELSE 0.0 END) +
-               (CASE WHEN is_dup THEN 0.3 ELSE 0.0 END)) AS pen
-           FROM base),
-         tot AS (
-           SELECT *,
-             floor(greatest(0.0,
-               comp * 0.15 + rec * 0.20 + subst * 0.30 + rigor * 0.25 +
-               impact * 0.10 + rel * 0.15 - pen) * 1000.0 + 0.5) / 1000.0
-               AS total_score
-           FROM scores)
-         SELECT doc_id,
-           floor((comp) * 1e6 + 0.5) / 1e6 AS completeness, floor((rec) * 1e6 + 0.5) / 1e6 AS recency,
-           floor((subst) * 1e6 + 0.5) / 1e6 AS substance, floor((rigor) * 1e6 + 0.5) / 1e6 AS rigor,
-           floor((impact) * 1e6 + 0.5) / 1e6 AS impact, floor((rel) * 1e6 + 0.5) / 1e6 AS relevance,
-           floor((pen) * 1e6 + 0.5) / 1e6 AS penalty,
-           total_score,
-           CASE WHEN total_score >= 0.8 THEN 'Excellent'
-             WHEN total_score >= 0.6 THEN 'Good'
-             WHEN total_score >= 0.4 THEN 'Moderate'
-             ELSE 'Low' END AS tier,
-           floor(((least(1.0, comp / 0.15) +
-             (CASE WHEN len(text) > 300 THEN 1.0 WHEN len(text) > 100 THEN 0.7
-               ELSE 0.3 END) +
-             (CASE WHEN n_terms >= 5 THEN 1.0 WHEN n_terms >= 2 THEN 0.7
-               ELSE 0.3 END)) / 3.0) * 1000.0 + 0.5) / 1000.0 AS confidence
-         FROM tot ORDER BY doc_id"""
-    },
-
-    "c1_pii_scan" -> {
-      val pats = TF.piiPatterns
-      def cnt(kind: String) =
-        s"len(regexp_extract_all(dirty, '${pats(kind).replace("'", "''")}'))"
-      s"""WITH d AS ($sqlDirtyPii),
-         c AS (
-           SELECT doc_id, dirty,
-             ${cnt("email")} AS n_email, ${cnt("phone")} AS n_phone,
-             ${cnt("ip")} AS n_ip, ${cnt("ssn")} AS n_ssn,
-             ${cnt("credential_url")} AS n_cred
-           FROM d)
-         SELECT doc_id, n_email, n_phone, n_ssn,
-           CASE WHEN n_ssn > 0 OR n_cred > 0 THEN 'critical'
-             WHEN n_email + n_phone > 2 THEN 'high'
-             WHEN n_email + n_phone > 0 OR n_ip > 0 THEN 'medium'
-             ELSE 'low' END AS risk,
-           floor((CASE WHEN len(regexp_extract_all(dirty, '\\w+')) > 0
-             THEN (n_email + n_phone + n_ip + n_ssn + n_cred) * 1.0
-               / len(regexp_extract_all(dirty, '\\w+'))
-             ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS pii_density
-         FROM c ORDER BY doc_id"""
-    },
-
-    "c5_pii_findings" -> {
-      val pats = TF.piiPatterns
-      val vals = pats.keys.toSeq.sorted
-        .map(k => s"('$k', '${pats(k).replace("'", "''")}')").mkString(", ")
-      s"""WITH d AS ($sqlDirtyPii),
-         f AS (
-           SELECT doc_id, t.pii_type,
-             regexp_extract_all(dirty, t.pattern) AS ms
-           FROM d, (VALUES $vals) t(pii_type, pattern))
-         SELECT doc_id, pii_type, len(ms)::BIGINT AS n_matches,
-           CASE WHEN length(ms[1]) > 4
-             THEN substr(ms[1], 1, 2) || '***' ||
-               substr(ms[1], length(ms[1]) - 1, 2)
-             ELSE '***' END AS sample_masked
-         FROM f WHERE len(ms) > 0
-         ORDER BY doc_id, pii_type"""
-    },
-
-    "c6_copyright" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 3 = 0
-               THEN 'https://example.com/' || doc_id::VARCHAR
-               ELSE 'https://arxiv.org/abs/' || doc_id::VARCHAR END AS url,
-             substring(text, 1, 60) ||
-               (CASE WHEN doc_id % 5 = 0
-                 THEN ' Accepted, Journal of Data.' ELSE '' END) AS comments
-           FROM documents)
-         SELECT doc_id, contains(url, 'arxiv.org') AS is_arxiv,
-           CASE WHEN contains(lower(comments), 'journal')
-             THEN 'found' ELSE 'not_found' END AS journal_reference
-         FROM t ORDER BY doc_id""",
-
-    "c7_k_anonymity" ->
-      """WITH c AS (
-           SELECT c_custkey, c_nationkey, c_mktsegment,
-             (floor(c_acctbal * 100 + 0.5)::BIGINT + 100000) // 100000
-               AS band
-           FROM customer),
-         cls AS (
-           SELECT c_nationkey, c_mktsegment, band,
-             count(*)::BIGINT AS class_n
-           FROM c GROUP BY 1, 2, 3),
-         gen AS (
-           SELECT x.c_nationkey, x.c_mktsegment,
-             CASE WHEN l.class_n < 5 THEN NULL ELSE x.band END AS band
-           FROM c x JOIN cls l
-             ON x.c_nationkey = l.c_nationkey
-             AND x.c_mktsegment = l.c_mktsegment AND x.band = l.band),
-         gcls AS (
-           SELECT c_nationkey, c_mktsegment, band,
-             count(*)::BIGINT AS class_n
-           FROM gen GROUP BY 1, 2, 3),
-         cen AS (
-           SELECT 'raw' AS stage, count(*)::BIGINT AS n_classes,
-             sum(CASE WHEN class_n < 5 THEN 1 ELSE 0 END)::BIGINT
-               AS n_small_classes,
-             sum(CASE WHEN class_n < 5 THEN class_n ELSE 0 END)::BIGINT
-               AS n_rows_at_risk,
-             min(class_n)::BIGINT AS min_class
-           FROM cls
-           UNION ALL
-           SELECT 'generalized' AS stage, count(*)::BIGINT,
-             sum(CASE WHEN class_n < 5 THEN 1 ELSE 0 END)::BIGINT,
-             sum(CASE WHEN class_n < 5 THEN class_n ELSE 0 END)::BIGINT,
-             min(class_n)::BIGINT
-           FROM gcls)
-         SELECT stage, n_classes, n_small_classes, n_rows_at_risk,
-           min_class
-         FROM cen ORDER BY stage""",
-
-    "c8_license_rollup" -> {
-      val toks = sqlTokens("text")
-      val lad = operators.Compliance.licenseLadder
-      s"""WITH t AS (
-           SELECT doc_id, lang, len($toks)::BIGINT AS n_tok FROM documents),
-         s AS (
-           SELECT doc_id, lang, n_tok,
-             (sum(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT
-               - n_tok AS start_tok
-           FROM t),
-         b AS (SELECT lang, start_tok // 2048 AS bin,
-             doc_id % ${lad.size} AS lrank FROM s)
-         SELECT lang, bin, count(*)::BIGINT AS n_docs,
-           max(lrank)::BIGINT AS eff_rank,
-           ${sqlList(lad)}[max(lrank)::INT + 1] AS effective_license,
-           max(lrank) >= 5 AS restricted
-         FROM b GROUP BY lang, bin ORDER BY lang, bin"""
-    },
-
-    "c9_takedown_closure" ->
-      // the d14 closure chain + the deterministic notice sample; a
-      // cluster with any noticed member is removed whole
-      s"""WITH RECURSIVE $sqlMinhashPairCtes,
-         edges AS (SELECT id_a AS ea, id_b AS eb FROM mh_pairs
-           WHERE est_jaccard >= 0.5),
-         sym AS (SELECT ea, eb FROM edges
-           UNION SELECT eb AS ea, ea AS eb FROM edges),
-         reach(id, r) AS (
-           SELECT ea, eb FROM sym
-           UNION
-           SELECT t.id, s.eb FROM reach t JOIN sym s ON t.r = s.ea),
-         comp AS (SELECT id, min(r) AS mr FROM reach GROUP BY id),
-         lab AS (SELECT d.doc_id,
-             least(coalesce(c.mr, d.doc_id), d.doc_id) AS cluster_id,
-             ${Sampling.sqlKeyHash("d.doc_id::VARCHAR", "dmca")} <
-               ${Sampling.threshold(0.1)} AS direct
-           FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-         hit AS (SELECT cluster_id,
-             max(CASE WHEN direct THEN 1 ELSE 0 END) AS h
-           FROM lab GROUP BY cluster_id)
-         SELECT l.doc_id, l.cluster_id,
-           CASE WHEN l.direct THEN 'direct'
-                WHEN h.h = 1 THEN 'closure'
-                ELSE 'kept' END AS status
-         FROM lab l JOIN hit h USING (cluster_id)
-         ORDER BY doc_id""",
-
-    "c10_k_anonymity" ->
-      // same deterministic top-1 tie rule (NULLS LAST pinned — DuckDB's
-      // asc default, Spark's is not); bounded class census
-      """WITH ev AS (SELECT user_id,
-             epoch_us(date_trunc('day', ts::TIMESTAMP)) AS day_us,
-             event_type
-           FROM events),
-         fi AS (SELECT user_id, min(day_us) AS cohort_us
-           FROM ev GROUP BY 1),
-         ct AS (SELECT user_id, event_type, count(*)::BIGINT AS c
-           FROM ev GROUP BY 1, 2),
-         tp AS (SELECT user_id, event_type AS top_type FROM (
-             SELECT *, row_number() OVER (PARTITION BY user_id
-               ORDER BY c DESC, event_type NULLS LAST) AS rk FROM ct)
-           WHERE rk = 1)
-         SELECT f.cohort_us, t.top_type, count(*)::BIGINT AS n_users,
-           count(*) < 5 AS at_risk
-         FROM fi f JOIN tp t USING (user_id)
-         GROUP BY 1, 2 ORDER BY 1, 2 NULLS LAST""",
-
-    "d25_keep_best" ->
-      // the d14 closure + the longest-wins survivor window, both tie
-      // levels (n_chars desc, doc_id asc) replayed
-      s"""WITH RECURSIVE $sqlMinhashPairCtes,
-         edges AS (SELECT id_a AS ea, id_b AS eb FROM mh_pairs
-           WHERE est_jaccard >= 0.5),
-         sym AS (SELECT ea, eb FROM edges
-           UNION SELECT eb AS ea, ea AS eb FROM edges),
-         reach(id, r) AS (
-           SELECT ea, eb FROM sym
-           UNION
-           SELECT t.id, s.eb FROM reach t JOIN sym s ON t.r = s.ea),
-         comp AS (SELECT id, min(r) AS mr FROM reach GROUP BY id),
-         lab AS (SELECT d.doc_id,
-             least(coalesce(c.mr, d.doc_id), d.doc_id) AS cluster_id,
-             d.n_chars
-           FROM documents d LEFT JOIN comp c ON d.doc_id = c.id)
-         SELECT doc_id, cluster_id, n_chars,
-           row_number() OVER (PARTITION BY cluster_id
-             ORDER BY n_chars DESC, doc_id) = 1 AS kept
-         FROM lab ORDER BY doc_id""",
-
-    "w7_late_census" ->
-      """WITH e AS (
-           SELECT event_type,
-             epoch_us(ts::TIMESTAMP) AS tus,
-             epoch_us(date_trunc('hour', ts::TIMESTAMP)) AS win_us,
-             (('0x' || substr(md5('arr:' || event_id::VARCHAR), 1, 7))
-               ::BIGINT % 1800) * 1000000 AS lag_us
-           FROM events)
-         SELECT win_us, event_type, count(*)::BIGINT AS n_total,
-           sum(CASE WHEN tus + lag_us > win_us + 3600000000 + 600000000
-             THEN 1 ELSE 0 END)::BIGINT AS n_late,
-           max(lag_us)::BIGINT AS max_lag_us,
-           sum(lag_us)::BIGINT AS sum_lag_us
-         FROM e GROUP BY win_us, event_type
-         ORDER BY win_us, event_type""",
-
-    "s9_json_report_roundtrip" ->
-      s"""SELECT lang, count(*) AS n_docs,
-         ${sqlFround("avg(n_chars)", 4)} AS avg_chars
-         FROM documents GROUP BY lang ORDER BY lang""",
-
-    "v9_store_build" -> {
-      val toks = sqlTokens("text")
-      s"""WITH t AS (SELECT doc_id, text, $toks AS tk FROM documents),
-         s AS (
-           SELECT doc_id AS paper_id,
-             'Paper Title: ' || trim(substring(text, 1, 40)) || chr(10) ||
-             'Authors: ' || array_to_string(
-               list_transform(list_slice(tk, 1, 3), x -> 'dr. ' || x), ', ')
-               || chr(10) ||
-             'Abstract: ' || substring(text, 1, 500) AS doc_text,
-             trim(substring(text, 1, 40)) AS title
-           FROM t)
-         SELECT s.paper_id, length(doc_text)::BIGINT AS doc_chars,
-           md5(doc_text) AS doc_md5, s.title,
-           len(e.embedding)::BIGINT AS dim
-         FROM s JOIN embeddings e ON e.vec_id = s.paper_id
-         ORDER BY s.paper_id"""
-    },
-
-    "c3_record_fingerprint" ->
-      """SELECT md5(concat_ws('|', p_name, p_brand, p_type)) AS fp,
-         count(*) AS n, min(p_partkey) AS first_key
-         FROM part GROUP BY 1 HAVING count(*) > 1 ORDER BY fp""",
-
-    "c4_provenance" -> {
-      val toks = sqlTokens("text")
-      s"""WITH t AS (SELECT doc_id, text, $toks AS tk FROM documents),
-         f AS (
-           SELECT doc_id,
-             'arxiv:' || doc_id AS paper_id,
-             trim(substring(text, 1, 40)) AS title,
-             'dr. ' || tk[1] AS first_author,
-             '2026-01-' || lpad((doc_id % 28 + 1)::VARCHAR, 2, '0') AS pub_date
-           FROM t)
-         SELECT doc_id,
-           md5('{"arxiv_id": "' || paper_id ||
-             '", "first_author": "' || first_author ||
-             '", "publish_date": "' || pub_date ||
-             '", "title": "' || title || '"}') AS fingerprint,
-           'arXiv' AS platform, paper_id AS identifier,
-           'arxiv_crawling,text_cleaning,quality_scoring,provenance_tracking'
-             AS steps,
-           1::BIGINT AS version, 4::BIGINT AS n_allowed,
-           'Data sourced from arXiv paper ' || paper_id ||
-             ', processed via AI Research Pipeline' AS attribution,
-           false AS attribution_satisfied
-         FROM f ORDER BY doc_id"""
-    },
-
-    "a13_rag_report" -> {
-      def hx(tag: String) = s"('0x' || substr(md5('$tag' || text), 1, 2))::INT"
-      s"""WITH s AS (
-           SELECT
-             ${hx("ar")} / 255.0 AS ar,
-             ${hx("ab")} / 255.0 AS ab,
-             (${hx("pr")} % 101) / 10.0 AS pr,
-             (${hx("pb")} % 101) / 10.0 AS pb,
-             len(text) // 4 + 150 AS tok
-           FROM documents)
-         SELECT count(*)::BIGINT AS total_questions,
-           ${sqlFround("avg(ar)", 6)} AS avg_auto_score_rag,
-           ${sqlFround("avg(ab)", 6)} AS avg_auto_score_baseline,
-           ${sqlFround("avg(pr)", 6)} AS avg_api_score_rag,
-           ${sqlFround("avg(pb)", 6)} AS avg_api_score_baseline,
-           ${sqlFround("avg(ar - ab)", 6)} AS avg_auto_improvement,
-           ${sqlFround("avg(pr - pb)", 6)} AS avg_api_improvement,
-           ${sqlFround("sum(CASE WHEN ar - ab > 0 THEN 1 ELSE 0 END) / count(*)", 6)}
-             AS auto_improvement_rate,
-           ${sqlFround("sum(CASE WHEN pr - pb > 0 THEN 1 ELSE 0 END) / count(*)", 6)}
-             AS api_improvement_rate,
-           ${sqlFround("corr(ar, pr)", 6)} AS correlation_auto_vs_api,
-           sum(tok)::BIGINT AS total_tokens_used
-         FROM s"""
-    },
-
-    "a15_quantile_sketch" ->
-      // Replays the log-linear bucketing exactly: bit length via
-      // bin() string length (never floating log2), shifts, the
-      // BIGINT cum·100 ≥ p·total walk. subBits = 5 mirrors
-      // Sketches.logLinearLo's default.
-      """WITH ev AS (
-           SELECT event_type AS stratum, CAST(ts AS DATE) AS day,
-             CAST(floor(value * 1000 + 0.5) AS BIGINT) AS v
-           FROM events),
-         b AS (
-           SELECT stratum, day,
-             (v >> greatest(length(bin(v)) - 6, 0))
-               << greatest(length(bin(v)) - 6, 0) AS lo,
-             count(*) AS cnt
-           FROM ev GROUP BY 1, 2, 3),
-         m AS (SELECT stratum, lo, sum(cnt) AS cnt FROM b GROUP BY 1, 2),
-         c AS (
-           SELECT stratum, lo,
-             sum(cnt) OVER (PARTITION BY stratum ORDER BY lo) AS cum,
-             sum(cnt) OVER (PARTITION BY stratum) AS total
-           FROM m),
-         q AS (
-           SELECT c.stratum, p.p, min(c.lo) AS q_lo
-           FROM c CROSS JOIN (VALUES (50), (90), (99)) AS p(p)
-           WHERE c.cum * 100 >= p.p * c.total
-           GROUP BY 1, 2)
-         SELECT stratum AS event_type, p, q_lo,
-           q_lo + (CAST(1 AS BIGINT) << greatest(length(bin(q_lo)) - 6, 0)) AS q_hi
-         FROM q ORDER BY event_type, p""",
-
-    "a16_heavy_hitters" ->
-      // Replays the pruned-count lifecycle exactly: per-(lang, day)
-      // counts kept at cnt·200 ≥ rows_d, slack = ceil(rows_d/200) − 1,
-      // hi = lo + slack of the absent days. All BIGINT.
-      s"""WITH tok AS (
-           SELECT lang AS stratum, doc_id % 7 AS day,
-             unnest(${sqlTokens("text")}) AS k
-           FROM documents),
-         counts AS (
-           SELECT stratum, day, k, count(*) AS cnt FROM tok GROUP BY 1, 2, 3),
-         mass AS (
-           SELECT stratum, day, sum(cnt) AS rows_d FROM counts GROUP BY 1, 2),
-         slack AS (
-           SELECT stratum, day, rows_d,
-             (rows_d * 1 + 199) // 200 - 1 AS slack
-           FROM mass),
-         tot AS (
-           SELECT stratum, sum(rows_d) AS total, sum(slack) AS total_slack
-           FROM slack GROUP BY 1),
-         kept AS (
-           SELECT c.stratum, c.day, c.k, c.cnt
-           FROM counts c JOIN mass m USING (stratum, day)
-           WHERE c.cnt * 200 >= m.rows_d * 1),
-         agg AS (
-           SELECT k.stratum, k.k, sum(k.cnt) AS lo_cnt,
-             sum(s.slack) AS present_slack
-           FROM kept k JOIN slack s USING (stratum, day) GROUP BY 1, 2)
-         SELECT a.stratum AS lang, a.k AS tok,
-           CAST(a.lo_cnt AS BIGINT) AS lo_cnt,
-           CAST(a.lo_cnt + t.total_slack - a.present_slack AS BIGINT) AS hi_cnt
-         FROM agg a JOIN tot t USING (stratum)
-         WHERE (a.lo_cnt + t.total_slack - a.present_slack) * 200 >= t.total * 1
-         ORDER BY lang, tok""",
-
-    "c2_quality_issues" ->
-      """WITH d AS (
-           SELECT doc_id, text, trim(substring(text, 1, 10)) AS title,
-             CASE WHEN doc_id % 11 = 0 THEN 'not-a-date'
-               ELSE '2026-0' || (doc_id % 9 + 1)::VARCHAR || '-15' END AS ds
-           FROM documents),
-         iss AS (
-           SELECT doc_id, unnest(list_filter([
-             CASE WHEN title IS NULL OR title = '' THEN 'missing_title' END,
-             CASE WHEN len(title) < 8 THEN 'title_too_short' END,
-             CASE WHEN text IS NULL OR trim(text) = '' THEN 'missing_abstract' END,
-             CASE WHEN len(text) < 120 THEN 'abstract_too_short' END,
-             CASE WHEN ds IS NOT NULL AND try_strptime(ds, '%Y-%m-%d') IS NULL
-               THEN 'invalid_date' END], x -> x IS NOT NULL)) AS issue
-           FROM d)
-         SELECT issue, count(*) AS n FROM iss GROUP BY issue ORDER BY issue""",
-
-    "p1_align_defaults" ->
-      """SELECT doc_id,
-         coalesce(nullif(lang, 'en'), 'und') AS lang,
-         'unknown' AS license, n_chars
-         FROM documents ORDER BY doc_id""",
-
-    "p3_quality_gate" -> {
-      val ntok = s"len(${sqlTokens("text")})"
-      // ::BIGINT — DuckDB integer sum() yields HUGEINT, Spark BIGINT;
-      // the driver hash is type-sensitive.
-      s"""SELECT count(*) AS n_total,
-         sum(CASE WHEN n_chars >= 120 AND $ntok >= 20 AND source <> 'src0'
-           THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-         sum(CASE WHEN NOT (n_chars >= 120) THEN 1 ELSE 0 END)::BIGINT AS drop_too_short,
-         sum(CASE WHEN NOT ($ntok >= 20) THEN 1 ELSE 0 END)::BIGINT AS drop_few_tokens,
-         sum(CASE WHEN NOT (source <> 'src0') THEN 1 ELSE 0 END)::BIGINT AS drop_bad_source
-         FROM documents"""
-    },
-
-    "d5_array_dedup" -> {
-      val toks = sqlTokens("text")
-      s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents)
-         SELECT doc_id,
-           array_to_string(list_slice(
-             list_filter(toks, (x, i) -> list_position(toks, x) = i), 1, 5),
-             ',') AS top5_tokens,
-           array_to_string(list_sort(list_distinct(list_transform(toks,
-             x -> upper(x[1]) || substring(x, 2)))), ',') AS fields_clean
-         FROM t ORDER BY doc_id"""
-    },
-
-    "a6_distinct_tokens" ->
-      s"""SELECT lang, count(DISTINCT tok) AS n_distinct_tokens
-         FROM (SELECT lang, unnest(${sqlTokens("text")}) AS tok FROM documents)
-         GROUP BY lang ORDER BY lang""",
-
-    "a6x_distinct_approx" ->
-      // exact core + constant within_tol: the Spark side derives the
-      // boolean from its HLL++ estimate vs the same exact count, so a
-      // sketch regression fails the hash compare (r9 verdict task 2)
-      s"""SELECT lang, count(DISTINCT tok) AS n_distinct_tokens,
-           true AS within_tol
-         FROM (SELECT lang, unnest(${sqlTokens("text")}) AS tok FROM documents)
-         GROUP BY lang ORDER BY lang""",
-
-    "a14_hll_rollup" ->
-      // same driver-checkable-core pattern: the day-sketch union path
-      // runs Spark-side and feeds within_tol; the hashed columns are
-      // the exact per-lang distinct both engines compute
-      s"""SELECT lang, count(DISTINCT tok) AS n_distinct_tokens,
-           true AS within_tol
-         FROM (SELECT lang, unnest(${sqlTokens("text")}) AS tok FROM documents)
-         GROUP BY lang ORDER BY lang""",
-
-    "a19_token_overlap" ->
-      // exact pairwise vocabulary overlap via the (lang, tok) vocab
-      // self-join; the Spark side checks its HLL inclusion–exclusion
-      // estimate against the same exact numbers (10%-of-union bound)
-      s"""WITH v AS (
-           SELECT DISTINCT lang, tok FROM
-             (SELECT lang, unnest(${sqlTokens("text")}) AS tok FROM documents)),
-         ov AS (
-           SELECT x.lang AS lang_a, y.lang AS lang_b,
-             count(*)::BIGINT AS exact_overlap
-           FROM v x JOIN v y ON x.tok = y.tok AND x.lang < y.lang
-           GROUP BY 1, 2),
-         langs AS (SELECT DISTINCT lang FROM documents)
-         SELECT a.lang AS lang_a, b.lang AS lang_b,
-           coalesce(ov.exact_overlap, 0)::BIGINT AS exact_overlap,
-           true AS within_tol
-         FROM langs a JOIN langs b ON a.lang < b.lang
-         LEFT JOIN ov ON ov.lang_a = a.lang AND ov.lang_b = b.lang
-         ORDER BY lang_a, lang_b""",
-
-    "s1_jsonl_roundtrip" ->
-      """SELECT doc_id, lang, n_chars + 1000 AS n_chars
-         FROM documents ORDER BY doc_id""",
-
-    "ta8_unigram_logprob" ->
-      // detln + 2^-20 grid (the r11 order-exact form): wi per vocab
-      // entry, exact BIGINT per-doc sums, two divides restore scale
-      s"""WITH toks AS (
-           SELECT doc_id, unnest(${sqlTokens("text")}) AS tok FROM documents),
-         perdoc AS (
-           SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2),
-         vocab AS (SELECT tok, sum(c)::BIGINT AS cf FROM perdoc GROUP BY 1),
-         tot AS (SELECT ttln FROM (SELECT
-             ${operators.Classify.sqlDetLnCols("tt", "sum(cf)")}
-           FROM vocab)),
-         wtab AS (SELECT tok, wi FROM (SELECT tok,
-             ${operators.Classify.sqlDetLnCols("cl", "cf")},
-             floor((clln - ttln) * ${operators.Classify.WeightGrid}
-               + 0.5)::BIGINT AS wi
-           FROM vocab CROSS JOIN tot))
-         SELECT doc_id, sum(c)::BIGINT AS n_tok,
-           floor(((sum(c * wi)::DOUBLE / sum(c)::DOUBLE)
-             / ${operators.Classify.WeightGrid}) * 1e6 + 0.5) / 1e6
-             AS logprob
-         FROM perdoc JOIN wtab USING (tok)
-         GROUP BY doc_id ORDER BY doc_id""",
-
-    "ta9_bpe_merges" -> {
-      // the bounded training loop UNROLLED into a CTE chain
-      // (Bpe.sqlTrainChain) — a real independent replay of the 8 merge
-      // steps, not a literal pin
-      s"""WITH $sqlBpeBase,
-         ${operators.Bpe.sqlTrainChain(8, "wf")}
-         ${operators.Bpe.sqlMergesSelect(8)}"""
-    },
-
-    "ta10_bpe_encode" -> {
-      // the final rewritten vocab table s8 IS the per-word encoding:
-      // len(syms) = pieces per distinct word; docs join against it
-      s"""WITH $sqlBpeBase,
-         ${operators.Bpe.sqlTrainChain(8, "wf")},
-         wp AS (SELECT word, len(syms) AS pieces FROM s8),
-         dt AS (SELECT doc_id, unnest(${sqlTokens("text")}) AS word
-                FROM documents),
-         dp AS (SELECT doc_id, sum(pieces)::BIGINT AS n_pieces
-                FROM dt JOIN wp USING (word) GROUP BY doc_id)
-         SELECT d.doc_id, len(${sqlTokens("d.text")})::INT AS n_tokens,
-           (CASE WHEN d.text IS NULL THEN NULL
-             ELSE coalesce(dp.n_pieces, 0) END)::INT AS n_pieces
-         FROM documents d LEFT JOIN dp USING (doc_id) ORDER BY d.doc_id"""
-    },
-
-    "ta19_tokenizer_fertility" -> {
-      // the ta10 vocab-join replay aggregated per lang: the final
-      // rewritten vocab table s8 gives pieces per word; words/pieces/
-      // token-chars sum as exact BIGINTs, one divide per metric
-      s"""WITH $sqlBpeBase,
-         ${operators.Bpe.sqlTrainChain(8, "wf")},
-         wp AS (SELECT word, len(syms) AS pieces FROM s8),
-         dt AS (SELECT lang, unnest(${sqlTokens("text")}) AS word
-                FROM documents WHERE text IS NOT NULL),
-         j AS (SELECT lang, pieces, len(word) AS wc
-               FROM dt JOIN wp USING (word)),
-         d0 AS (SELECT lang, count(*)::BIGINT AS n_docs FROM documents
-                WHERE text IS NOT NULL GROUP BY lang),
-         ag AS (SELECT lang, count(*)::BIGINT AS n_words,
-                  sum(pieces)::BIGINT AS n_pieces,
-                  sum(wc)::BIGINT AS n_chars
-                FROM j GROUP BY lang)
-         SELECT d0.lang, d0.n_docs,
-           coalesce(ag.n_words, 0) AS n_words,
-           coalesce(ag.n_pieces, 0) AS n_pieces,
-           coalesce(ag.n_chars, 0) AS n_chars,
-           CASE WHEN coalesce(ag.n_words, 0) > 0 THEN
-             ${sqlFround("ag.n_pieces::DOUBLE / ag.n_words::DOUBLE", 6)}
-           END AS fertility,
-           CASE WHEN coalesce(ag.n_pieces, 0) > 0 THEN
-             ${sqlFround("ag.n_chars::DOUBLE / ag.n_pieces::DOUBLE", 6)}
-           END AS chars_per_piece
-         FROM d0 LEFT JOIN ag USING (lang) ORDER BY d0.lang"""
-    },
-
-    "ta14_corpus_divergence" -> {
-      val toks = sqlTokens("text")
-      s"""WITH tk AS (SELECT lang AS stratum, unnest($toks) AS tok
-           FROM documents),
-         sc AS (SELECT stratum, tok, count(*)::BIGINT AS c
-           FROM tk GROUP BY stratum, tok),
-         st AS (SELECT stratum, sum(c)::BIGINT AS ts FROM sc GROUP BY stratum),
-         tot AS (SELECT tok, sum(c)::BIGINT AS ct FROM sc GROUP BY tok),
-         g AS (SELECT sum(ct)::BIGINT AS t FROM tot),
-         pairs AS (
-           SELECT s.stratum, s.ts,
-             coalesce(x.c, 0)::DOUBLE / s.ts::DOUBLE AS p,
-             tot.ct::DOUBLE / g.t::DOUBLE AS q
-           FROM tot CROSS JOIN st s CROSS JOIN g
-           LEFT JOIN sc x ON x.stratum = s.stratum AND x.tok = tot.tok),
-         terms AS (SELECT stratum, ts, tq FROM (SELECT stratum, ts,
-             2 * p / (p + q) AS r1, 2 * q / (p + q) AS r2, p, q,
-             ${operators.Classify.sqlDetLnDCols("u", "r1")},
-             ${operators.Classify.sqlDetLnDCols("v", "r2")},
-             floor(((CASE WHEN p > 0
-                 THEN 0.5 * p * (uln * ${graft.expressions.DetLn.InvLn2Literal})
-                 ELSE 0.0 END) +
-               0.5 * q * (vln * ${graft.expressions.DetLn.InvLn2Literal}))
-               * ${graft.expressions.DetLn.TermGrid} + 0.5)::BIGINT AS tq
-           FROM pairs))
-         SELECT stratum AS lang, max(ts) AS n_tok,
-           floor((sum(tq)::DOUBLE / ${graft.expressions.DetLn.TermGrid})
-             * 1e6 + 0.5) / 1e6 AS js_bits
-         FROM terms GROUP BY stratum ORDER BY lang"""
-    },
-
-    "ta13_char_diversity" ->
-      // counts enumerate in ascending-char order (list_distinct of the
-      // sorted list), matching the Spark fold's run-closing order, so
-      // the double accumulation sequences identically
-      s"""WITH ch AS (SELECT doc_id,
-             CASE WHEN len(text) = 0 THEN CAST([] AS VARCHAR[])
-               ELSE string_split(text, '') END AS chars
-           FROM documents),
-         cc AS (SELECT doc_id, len(chars)::BIGINT AS n,
-             list_transform(list_distinct(list_sort(chars)),
-               q -> len(list_filter(chars, x -> x = q))::BIGINT) AS counts
-           FROM ch)
-         SELECT doc_id, n AS n_chars,
-           floor((CASE WHEN n > 0
-             THEN (${operators.Classify.sqlDetLnInline("n")}
-               * ${graft.expressions.DetLn.InvLn2Literal})
-               - list_sum(list_transform(counts,
-               q -> q * (${operators.Classify.sqlDetLnInline("q")}
-                 * ${graft.expressions.DetLn.InvLn2Literal}))) / n
-             ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS entropy,
-           floor((CASE WHEN n > 1
-             THEN list_sum(list_transform(counts, q -> q * (q - 1)))::DOUBLE
-               / (n * (n - 1))
-             ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS simpson
-         FROM cc ORDER BY doc_id""",
-
-    "ta12_url_filter" -> {
-      // same synthesized URLs; the normalization chain mirrors
-      // TF.urlNormalize step for step (DuckDB replacement
-      // backrefs are \\1 and need the 'g' flag — Spark's are $1 and
-      // global by default)
-      val parts = "^([a-zA-Z][a-zA-Z0-9+.-]*://)([^/?#]+)(.*)$"
-      s"""WITH u AS (SELECT doc_id,
-           'HTTPS://' ||
-           (['ads.tracker.com','Example.org','blog.example.org',
-             'spam.example.net','News.Site.io'])[(doc_id % 5 + 1)::INT] ||
-           '/p/' || doc_id::VARCHAR ||
-           (CASE WHEN doc_id % 3 = 0
-               THEN '?utm_source=feed&id=' || doc_id::VARCHAR
-             WHEN doc_id % 3 = 1
-               THEN '?id=' || doc_id::VARCHAR || '&utm_campaign=x'
-             ELSE '/' END) ||
-           (CASE WHEN doc_id % 4 = 0 THEN '#frag' ELSE '' END) AS url
-         FROM documents),
-         p AS (SELECT doc_id,
-           nullif(lower(regexp_extract(url, '$parts', 2)), '') AS host,
-           lower(regexp_extract(url, '$parts', 1)) ||
-             lower(regexp_extract(url, '$parts', 2)) ||
-             regexp_extract(url, '$parts', 3) AS rebuilt
-         FROM u),
-         n AS (SELECT doc_id, host,
-           ${sqlUrlNorm("rebuilt")} AS nt
-         FROM p)
-         SELECT doc_id, host,
-           nt AS norm_url,
-           coalesce(host = 'tracker.com' OR host LIKE '%.tracker.com'
-             OR host = 'spam.example.net' OR host LIKE '%.spam.example.net',
-             false) AS blocked
-         FROM n ORDER BY doc_id"""
-    },
-
-    "ta11_bigram_logprob" -> {
-      val toks = sqlTokens("text")
-      s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         pairs AS (
-           SELECT doc_id, unnest(list_zip(
-             list_slice(tk, 1, len(tk) - 1),
-             list_slice(tk, 2, len(tk)))) AS p
-           FROM t WHERE len(tk) >= 2),
-         perdoc AS (
-           SELECT doc_id, p[1] AS a, p[2] AS b, count(*) AS c
-           FROM pairs GROUP BY 1, 2, 3),
-         big AS (SELECT a, b, sum(c) AS cab FROM perdoc GROUP BY 1, 2),
-         ctx AS (SELECT a, sum(cab) AS ca FROM big GROUP BY 1),
-         cont AS (SELECT b, sum(cab) AS cb FROM big GROUP BY 1),
-         tot AS (SELECT sum(cab) AS tot FROM big),
-         wtab AS (SELECT a, b, wi FROM (SELECT a, b,
-             0.75 * (cab / ca) + 0.25 * (cb / tot) AS mix,
-             ${operators.Classify.sqlDetLnDCols("mx", "mix")},
-             floor(mxln * ${operators.Classify.WeightGrid}
-               + 0.5)::BIGINT AS wi
-           FROM big JOIN ctx USING (a) JOIN cont USING (b) CROSS JOIN tot))
-         SELECT doc_id, sum(c)::BIGINT AS n_big,
-           floor(((sum(c * wi)::DOUBLE / sum(c)::DOUBLE)
-             / ${operators.Classify.WeightGrid}) * 1e6 + 0.5) / 1e6
-             AS logprob
-         FROM perdoc JOIN wtab USING (a, b)
-         GROUP BY doc_id ORDER BY doc_id"""
-    },
-
-    "d19_snapshot_diff" ->
-      """WITH snap AS (SELECT doc_id, lang, n_chars FROM documents),
-         delta AS (
-           SELECT doc_id, lang, n_chars + 1000 AS n_chars,
-                  1 AS version, false AS deleted FROM snap WHERE doc_id % 7 = 0
-           UNION ALL
-           SELECT doc_id, lang, n_chars, 1, false
-           FROM snap WHERE doc_id % 13 = 0 AND doc_id % 7 <> 0
-           UNION ALL
-           SELECT doc_id, lang, n_chars, 2, true
-           FROM snap WHERE doc_id % 11 = 0
-           UNION ALL
-           SELECT doc_id + 1000000, lang, n_chars, 2, false
-           FROM snap WHERE doc_id % 17 = 0),
-         latest AS (
-           SELECT doc_id, lang, n_chars, deleted FROM (
-             SELECT *, row_number() OVER
-               (PARTITION BY doc_id ORDER BY version DESC) AS rn
-             FROM delta) WHERE rn = 1),
-         newstate AS (
-           SELECT doc_id, lang, n_chars FROM snap s
-           WHERE NOT EXISTS (SELECT 1 FROM latest l WHERE l.doc_id = s.doc_id)
-           UNION ALL
-           SELECT doc_id, lang, n_chars FROM latest WHERE NOT deleted)
-         SELECT * FROM (
-           SELECT coalesce(n.doc_id, o.doc_id) AS doc_id,
-             CASE WHEN n.doc_id IS NULL THEN o.lang ELSE n.lang END AS lang,
-             CASE WHEN n.doc_id IS NULL THEN o.n_chars ELSE n.n_chars END
-               AS n_chars,
-             CASE WHEN o.doc_id IS NULL THEN 'insert'
-                  WHEN n.doc_id IS NULL THEN 'delete'
-                  WHEN o.lang <> n.lang OR o.n_chars <> n.n_chars
-                    THEN 'update' END AS change
-           FROM snap o FULL OUTER JOIN newstate n ON o.doc_id = n.doc_id)
-         WHERE change IS NOT NULL ORDER BY doc_id""",
-
-    "d11_merge_upsert" ->
-      """WITH snap AS (SELECT doc_id, lang, n_chars FROM documents),
-         delta AS (
-           SELECT doc_id, lang, n_chars + 1000 AS n_chars,
-                  1 AS version, false AS deleted FROM snap WHERE doc_id % 7 = 0
-           UNION ALL
-           SELECT doc_id, lang, n_chars + 2000, 2, false
-           FROM snap WHERE doc_id % 7 = 0
-           UNION ALL
-           SELECT doc_id, lang, n_chars, 3, true
-           FROM snap WHERE doc_id % 11 = 0),
-         latest AS (
-           SELECT doc_id, lang, n_chars, deleted FROM (
-             SELECT *, row_number() OVER
-               (PARTITION BY doc_id ORDER BY version DESC) AS rn
-             FROM delta) WHERE rn = 1)
-         SELECT doc_id, lang, n_chars FROM snap s
-         WHERE NOT EXISTS (SELECT 1 FROM latest l WHERE l.doc_id = s.doc_id)
-         UNION ALL
-         SELECT doc_id, lang, n_chars FROM latest WHERE NOT deleted
-         ORDER BY doc_id""",
-
-    "s11_sized_sink" ->
-      """SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id""",
-
-    "s8_csv_stats_roundtrip" ->
-      """SELECT lang, count(*) AS n_docs,
-           floor((avg(n_chars) / 100.0) * 1e2 + 0.5) / 1e2 AS score
-         FROM documents GROUP BY lang ORDER BY lang""",
-
-    "a8_completeness" ->
-      """WITH d AS (
-           SELECT
-             CASE WHEN doc_id % 7 <> 0 THEN trim(substr(text, 1, 30)) END AS title,
-             CASE WHEN doc_id % 5 <> 0 THEN lang END AS lang,
-             CASE WHEN doc_id % 3 <> 0 THEN source END AS source,
-             CASE WHEN n_chars > 400 THEN text END AS abstract
-           FROM documents),
-         u AS (
-           SELECT 'abstract' AS field, abstract IS NOT NULL AS present FROM d
-           UNION ALL SELECT 'lang', lang IS NOT NULL FROM d
-           UNION ALL SELECT 'source', source IS NOT NULL FROM d
-           UNION ALL SELECT 'title', title IS NOT NULL FROM d)
-         SELECT field, count(*) AS n_rows,
-           sum(CASE WHEN present THEN 1 ELSE 0 END)::BIGINT AS n_present,
-           floor((avg(CASE WHEN present THEN 1.0 ELSE 0.0 END) * 100) * 1e4 + 0.5) / 1e4
-             AS pct_complete
-         FROM u GROUP BY field ORDER BY field""",
-
-    "a7_iqr_outliers" ->
-      s"""WITH q AS (
-           SELECT l_returnflag,
-             quantile_cont(l_extendedprice, 0.25) AS q1,
-             quantile_cont(l_extendedprice, 0.75) AS q3,
-             count(*) AS n_total
-           FROM lineitem GROUP BY l_returnflag)
-         SELECT l.l_returnflag,
-           ${sqlFround("max(q.q1)", 6)} AS q1, ${sqlFround("max(q.q3)", 6)} AS q3,
-           sum(CASE WHEN l.l_extendedprice < q.q1 - (q.q3 - q.q1) * 1.5
-             OR l.l_extendedprice > q.q3 + (q.q3 - q.q1) * 1.5
-             THEN 1 ELSE 0 END)::BIGINT AS n_outliers,
-           ${sqlFround(
-             """sum(CASE WHEN l.l_extendedprice < q.q1 - (q.q3 - q.q1) * 1.5
-             OR l.l_extendedprice > q.q3 + (q.q3 - q.q1) * 1.5
-             THEN 1.0 ELSE 0.0 END) * 100.0 / max(q.n_total)""", 6)} AS pct_outliers
-         FROM lineitem l JOIN q USING (l_returnflag)
-         GROUP BY l.l_returnflag ORDER BY l.l_returnflag""",
-
-    "a7x_iqr_approx" ->
-      // a7's exact replay + constant within_tol: the Spark side drives
-      // the boolean from approx_percentile vs the same exact quartiles
-      // (1% relative), so a sketch regression fails the hash compare
-      s"""WITH q AS (
-           SELECT l_returnflag,
-             quantile_cont(l_extendedprice, 0.25) AS q1,
-             quantile_cont(l_extendedprice, 0.75) AS q3,
-             count(*) AS n_total
-           FROM lineitem GROUP BY l_returnflag)
-         SELECT l.l_returnflag,
-           ${sqlFround("max(q.q1)", 6)} AS q1, ${sqlFround("max(q.q3)", 6)} AS q3,
-           sum(CASE WHEN l.l_extendedprice < q.q1 - (q.q3 - q.q1) * 1.5
-             OR l.l_extendedprice > q.q3 + (q.q3 - q.q1) * 1.5
-             THEN 1 ELSE 0 END)::BIGINT AS n_outliers,
-           ${sqlFround(
-             """sum(CASE WHEN l.l_extendedprice < q.q1 - (q.q3 - q.q1) * 1.5
-             OR l.l_extendedprice > q.q3 + (q.q3 - q.q1) * 1.5
-             THEN 1.0 ELSE 0.0 END) * 100.0 / max(q.n_total)""", 6)} AS pct_outliers,
-           true AS within_tol
-         FROM lineitem l JOIN q USING (l_returnflag)
-         GROUP BY l.l_returnflag ORDER BY l.l_returnflag""",
-
-    "a10_rollup_argmax" ->
-      """WITH c AS (
-           SELECT lang, source, count(*) AS cnt FROM documents GROUP BY 1, 2),
-         t AS (
-           SELECT lang, sum(cnt)::BIGINT AS n_docs,
-             max_by(source, lpad(cnt::VARCHAR, 8, '0') || source) AS top_source
-           FROM c GROUP BY lang),
-         b AS (
-           SELECT lang, bool_and(n_chars > 50) AS all_nontrivial
-           FROM documents GROUP BY lang)
-         SELECT t.lang, n_docs, top_source, all_nontrivial
-         FROM t JOIN b USING (lang) ORDER BY lang""",
-
-    "a12_top_tokens" ->
-      s"""SELECT tok, count(*) AS n
-         FROM (SELECT unnest(${sqlTokens("text")}) AS tok FROM documents)
-         GROUP BY tok ORDER BY n DESC, tok LIMIT 20""",
-
-    "l7_rag_pipeline" -> {
-      val cos = sqlCosine64("s.embedding", "q.qv")
-      s"""WITH store AS (
-           SELECT d.doc_id, trim(substr(d.text, 1, 40)) AS title,
-             d.text AS doc_text, e.embedding
-           FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id),
-         q AS (
-           SELECT e.vec_id AS query_id,
-             'What does the corpus say about: ' ||
-               array_to_string(list_slice(${sqlTokens("d.text")}, 1, 6), ' ')
-               AS question,
-             e.embedding AS qv
-           FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id
-           WHERE e.vec_id < 5),
-         sims AS (
-           SELECT q.query_id, q.question, s.doc_id, s.title, s.doc_text,
-             $cos AS cosine
-           FROM q CROSS JOIN store s),
-         ranked AS (
-           SELECT *, row_number() OVER
-             (PARTITION BY query_id ORDER BY cosine DESC, doc_id) AS rank
-           FROM sims),
-         ctx AS (
-           SELECT query_id, question,
-             string_agg('[' || rank || '] (sim ' ||
-               floor(cosine * 1000 + 0.5)::INT || 'm) ' || title ||
-               chr(10) || doc_text, chr(10) || chr(10) ORDER BY rank)
-               AS context
-           FROM ranked WHERE rank <= 3 GROUP BY query_id, question),
-         ans AS (
-           SELECT query_id, question, len(context)::INT AS context_chars,
-             array_to_string(list_slice(list_filter(
-               string_split_regex(
-                 lower(question || ' | Context: ' || context), '\\s+'),
-               x -> len(x) > 3), 1, 12), ',') AS answer
-           FROM ctx),
-         m AS (
-           SELECT query_id, question, answer, context_chars,
-             len(regexp_extract_all(answer, '\\w+')) AS answer_words,
-             len(list_filter(list_distinct(${sqlTokens("question")}),
-               x -> list_contains(list_distinct(${sqlTokens("answer")}), x)))
-               AS keyword_overlap,
-             len(regexp_extract_all(answer, '\\[[^\\]]*\\d+[^\\]]*\\]'))
-               AS n_citations
-           FROM ans)
-         SELECT query_id, question, answer, context_chars,
-           answer_words, keyword_overlap, n_citations,
-           floor((least(1.0, answer_words / 50.0) * 0.3
-             + least(1.0, keyword_overlap / 5.0) * 0.4
-             + (CASE WHEN n_citations > 0 THEN 1.0 ELSE 0.5 END) * 0.3)
-             * 10000.0 + 0.5) / 10000.0 AS auto_score
-         FROM m ORDER BY query_id"""
-    },
-
-    "l2_mock_keywords" -> {
-      // mock: lowercase whitespace tokens with len>3, first 12, ','-joined;
-      // then the L2 validation chain on the SAME reconstructed raw string.
-      val stop = sqlList(Enrich.keywordStopList)
-      s"""WITH raw AS (
-           SELECT doc_id, array_to_string(list_slice(
-             list_filter(string_split_regex(lower(text), '\\s+'),
-               x -> len(x) > 3), 1, 12), ',') AS raw_kw
-           FROM documents),
-         v AS (
-           SELECT doc_id,
-             list_filter(
-               list_transform(string_split(raw_kw, ','), x -> trim(x)),
-               x -> x <> '' AND len(x) >= 3 AND len(x) <= 50
-                 AND NOT list_contains($stop, x)) AS ks
-           FROM raw)
-         SELECT doc_id, array_to_string(list_slice(
-           list_filter(ks, (x, i) -> list_position(ks, x) = i), 1, 8), ',')
-           AS keywords
-         FROM v ORDER BY doc_id"""
-    },
-
-    "g1_fused_pipeline" -> {
-      val stop = sqlList(Enrich.keywordStopList)
-      val clean = sqlClean(s"'$g1DirtyPrefix' || text")
-      s"""WITH u AS (
-           SELECT doc_id, 0 AS file_idx, text, lang, n_chars
-           FROM documents WHERE doc_id % 2 = 0
-           UNION ALL
-           SELECT doc_id, 1 AS file_idx, text, lang, n_chars FROM documents),
-         m AS (
-           SELECT * FROM (
-             SELECT u.*, row_number() OVER (
-               PARTITION BY md5(lower(trim(substring(text, 1, 20))))
-               ORDER BY file_idx * 1000000 + doc_id) AS rn
-             FROM u) WHERE rn = 1),
-         dd AS (
-           SELECT * FROM (
-             SELECT m.*, row_number() OVER (
-               PARTITION BY md5(lower(trim(substring(text, 8, 24))))
-               ORDER BY file_idx * 1000000 + doc_id) AS rn2
-             FROM m) WHERE rn2 = 1),
-         c AS (
-           SELECT doc_id, coalesce(lang, 'und') AS lang, n_chars,
-             $clean AS clean_text
-           FROM dd),
-         raw AS (
-           SELECT c.*, array_to_string(list_slice(
-             list_filter(string_split_regex(lower(clean_text), '\\s+'),
-               x -> len(x) > 3), 1, 12), ',') AS raw_kw
-           FROM c),
-         v AS (
-           SELECT raw.*,
-             list_filter(
-               list_transform(string_split(raw_kw, ','), x -> trim(x)),
-               x -> x <> '' AND len(x) >= 3 AND len(x) <= 50
-                 AND NOT list_contains($stop, x)) AS ks
-           FROM raw),
-         kw AS (
-           SELECT v.*, list_slice(
-             list_filter(ks, (x, i) -> list_position(ks, x) = i), 1, 8)
-             AS keywords
-           FROM v),
-         kept AS (
-           SELECT * FROM kw WHERE n_chars >= 120 AND len(keywords) >= 3)
-         SELECT lang, count(*) AS n_docs,
-           ${sqlFround("avg(len(clean_text))", 4)} AS avg_clean_chars,
-           ${sqlFround("avg(len(keywords))", 4)} AS avg_keywords,
-           sum(len(keywords))::BIGINT AS total_keywords
-         FROM kept GROUP BY lang ORDER BY lang"""
-    },
-
-    "g2_training_corpus" -> {
-      // decontaminate (tc1 CTEs) → quality gate (ta2 CTEs) → token-
-      // budget mix (x1 CTEs) → packing (ta6 window), composed over the
-      // same shared Scala constants each stage's standalone oracle uses.
-      s"""${sqlG2PackedCtes()}
-         SELECT lang, start_tok // 2048 AS bin, count(*) AS n_docs,
-           sum(n_tok)::BIGINT AS n_tokens
-         FROM packed GROUP BY lang, bin ORDER BY lang, bin"""
-    },
-
-    "g3_corpus_store" -> {
-      // same build as g2 through `packed`; the round trip through the
-      // sized sink is the identity on the layout columns
-      s"""${sqlG2PackedCtes()}
-         SELECT doc_id, lang, start_tok // 2048 AS bin,
-           (start_tok // 2048) // 8 AS bin_range, n_tok, start_tok
-         FROM packed ORDER BY doc_id"""
-    },
-
-    "g9_bucketed_enrich" ->
-      // same build as g2 through `packed`; the bucketed store + merge
-      // join must reproduce a plain join against the raw tables
-      s"""${sqlG2PackedCtes()}
-         SELECT p.lang, d.source, count(*) AS n_docs,
-           sum(p.n_tok)::BIGINT AS n_tokens,
-           ${sqlFround("avg(d.n_chars)", 2)} AS avg_chars
-         FROM packed p JOIN documents d ON p.doc_id = d.doc_id
-         GROUP BY p.lang, d.source
-         ORDER BY p.lang, d.source""",
-
-    "g5_training_batches" ->
-      s"""${sqlG2PackedCtes()},
-         bins AS (
-           SELECT lang, start_tok // 2048 AS bin, count(*) AS n_docs,
-             sum(n_tok)::BIGINT AS n_tokens
-           FROM packed GROUP BY lang, bin),
-         hs AS (SELECT lang, bin, n_docs, n_tokens,
-             ('0x' || substr(md5('ep:1:' || lang || ':' || bin::VARCHAR),
-               1, 7))::BIGINT AS hh
-           FROM bins),
-         sx AS (SELECT lang, bin, n_docs, n_tokens, hh,
-             (hh * 4) // ${1L << 28} AS shard FROM hs)
-         SELECT lang, bin, n_docs, n_tokens, shard,
-           (row_number() OVER (PARTITION BY shard
-             ORDER BY hh, lang || ':' || bin::VARCHAR) - 1)::BIGINT AS pos
-         FROM sx ORDER BY lang, bin""",
-
-    "g4_dedup_corpus" -> {
-      // the d14 closure (band CTEs + recursive reachability) computed
-      // over the train split only, spliced as a prelude into the g2
-      // chain; kept0 additionally requires cluster-canonical doc_ids
-      val prelude =
-        s"""RECURSIVE traindocs AS (
-             SELECT doc_id, text FROM documents WHERE doc_id >= 50),
-           ${sqlMinhashBandCtes("traindocs", "g4_")},
-           g4cand AS (
-             SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.sig AS sa, b.sig AS sb
-             FROM g4_bucketed a JOIN g4_bucketed b
-               ON a.bk = b.bk AND a.doc_id < b.doc_id),
-           g4edges AS (
-             SELECT id_a AS ea, id_b AS eb FROM g4cand
-             WHERE list_sum(list_transform(generate_series(1, 16),
-               i -> CASE WHEN sa[i] = sb[i] THEN 1 ELSE 0 END)) / 16.0
-               >= 0.5),
-           g4sym AS (SELECT ea, eb FROM g4edges
-             UNION SELECT eb AS ea, ea AS eb FROM g4edges),
-           g4reach(id, r) AS (
-             SELECT ea, eb FROM g4sym
-             UNION
-             SELECT t.id, s2.eb FROM g4reach t
-               JOIN g4sym s2 ON t.r = s2.ea),
-           g4comp AS (SELECT id, min(r) AS mr FROM g4reach GROUP BY id),
-           g4kept AS (
-             SELECT d.doc_id FROM traindocs d
-             LEFT JOIN g4comp c ON d.doc_id = c.id
-             WHERE least(coalesce(c.mr, d.doc_id), d.doc_id) = d.doc_id),
-           """
-      s"""${sqlG2PackedCtes(prelude,
-             "AND s.doc_id IN (SELECT doc_id FROM g4kept)")}
-         SELECT lang, start_tok // 2048 AS bin, count(*) AS n_docs,
-           sum(n_tok)::BIGINT AS n_tokens
-         FROM packed GROUP BY lang, bin ORDER BY lang, bin"""
-    },
-
-    "l3_mock_scores" ->
-      """WITH h AS (
-           SELECT doc_id, md5('Score: ' || text) AS resp FROM documents),
-         sc AS (
-           SELECT doc_id,
-             least(greatest(('0x' || substr(resp, 1, 1))::INT, 0), 10) AS novelty,
-             least(greatest(('0x' || substr(resp, 2, 1))::INT, 0), 10) AS technical_depth,
-             least(greatest(('0x' || substr(resp, 3, 1))::INT, 0), 10) AS clarity,
-             least(greatest(('0x' || substr(resp, 4, 1))::INT, 0), 10) AS impact_potential
-           FROM h)
-         SELECT doc_id, novelty, technical_depth, clarity, impact_potential,
-           floor((novelty + technical_depth + clarity + impact_potential)
-             / 4.0 * 10.0 + 0.5) / 10.0 AS overall_score,
-           0.5::DOUBLE AS confidence
-         FROM sc ORDER BY doc_id""",
-
-    "s6_nested_projection" -> {
-      // identical nested construction via struct_pack, then the same
-      // list-of-struct filter/projection the Spark side runs.
-      val toks = sqlTokens("text")
-      s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         n AS (
-           SELECT doc_id,
-             list_transform(list_slice(tk, 1, 4), x -> struct_pack(
-               author := CASE WHEN len(x) % 3 <> 0
-                 THEN struct_pack(display_name := 'dr. ' || x) END,
-               len := len(x))) AS authorships,
-             list_transform(list_slice(tk, 5, 10), x -> struct_pack(
-               display_name := x, level := len(x) % 4)) AS concepts
-           FROM t)
-         SELECT doc_id,
-           -- DuckDB array_to_string of an empty list is NULL, Spark
-           -- array_join is '' — coalesce to match.
-           coalesce(array_to_string(list_transform(
-             list_filter(authorships, a -> a.author IS NOT NULL),
-             a -> a.author.display_name), ','), '') AS authors,
-           len(list_filter(authorships, a -> a.author IS NOT NULL))::BIGINT
-             AS n_authors,
-           coalesce(array_to_string(list_transform(
-             list_filter(concepts, c -> c.level <= 1),
-             c -> c.display_name), ','), '') AS fields,
-           len(list_filter(concepts, c -> c.level <= 1))::BIGINT AS n_fields
-         FROM n ORDER BY doc_id"""
-    },
-
-    "l1_mock_fields" -> {
-      // raw responses reconstructed from the same md5-keyed three-shape
-      // rule as MockFieldsClient, then the same validation chain.
-      s"""WITH toks AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\\s+'),
-               x -> len(x) > 3) AS tk,
-             ('0x' || substr(md5(text), 1, 1))::INT % 3 AS h
-           FROM documents),
-         raw AS (
-           SELECT doc_id,
-             CASE WHEN h = 0 THEN '[' || array_to_string(list_transform(
-                 list_slice(tk, 1, 8), x -> '"' || x || '"'), ', ') || ']'
-               WHEN h = 1 THEN 'Sure! The fields are: ' ||
-                 array_to_string(list_transform(list_slice(tk, 1, 5),
-                   x -> '"' || x || '"'), ', ') || '. Hope this helps.'
-               ELSE array_to_string(list_slice(tk, 1, 5), ', ') || '.'
-             END AS r
-           FROM toks),
-         v AS (
-           SELECT doc_id,
-             regexp_extract_all(r, '"([^"]+)"', 1) AS quoted,
-             regexp_extract_all(r, '([\\w\\s]+)(?:,|\\.|$$)', 1) AS runs,
-             CASE WHEN len(quoted) > 0 THEN quoted ELSE runs END AS cand,
-             list_filter(list_transform(cand, x -> trim(x)),
-               x -> len(x) > 3 AND len(x) < 50) AS cleaned,
-             CASE WHEN json_valid(r) THEN
-               list_slice(list_filter(list_transform(
-                 from_json(r, '["VARCHAR"]'), x -> trim(x)),
-                 x -> x IS NOT NULL AND x <> '' AND len(x) < 100), 1, 6)
-             ELSE
-               list_slice(list_filter(cleaned,
-                 (x, i) -> list_position(cleaned, x) = i), 1, 6)
-             END AS fields
-           FROM raw)
-         SELECT doc_id, array_to_string(fields, ',') AS fields,
-           len(fields)::BIGINT AS n_fields
-         FROM v ORDER BY doc_id"""
-    },
-
-    "l5_judge_normalize" -> {
-      // same md5-digit scores + three-shape variant rule as
-      // MockJudgeClient; missing keys contribute 0.
-      def dg(i: Int) = s"('0x' || substr(md5(text), $i, 1))::INT % 6"
-      val dims = Enrich.judgeDimensions
-      val dimSql = dims.zipWithIndex.map { case (n, i) =>
-        val v = dg(i + 1)
-        s"""CASE WHEN h = 0 THEN $v
-            WHEN h = 1 AND '$n' IN ('metadata_completeness', 'semantic_clarity')
-              THEN $v
-            ELSE 0 END::DOUBLE AS $n"""
-      }.mkString(",\n             ")
-      s"""WITH v AS (
-           SELECT doc_id, ('0x' || substr(md5(text), 7, 1))::INT % 3 AS h,
-             $dimSql
-           FROM documents),
-         o AS (
-           SELECT doc_id,
-             ${dims.mkString(", ")},
-             (${dims.mkString(" + ")}) AS overall_score
-           FROM v)
-         SELECT doc_id, ${dims.mkString(", ")}, overall_score,
-           floor(overall_score / 30.0 * 10.0 * 100.0 + 0.5) / 100.0
-             AS overall_score_normalized
-         FROM o ORDER BY doc_id"""
-    },
-
-    "l4_summary_validate" -> {
-      val toks = sqlTokens("text")
-      s"""WITH t AS (
-           SELECT doc_id, text, trim(text) AS problem0,
-             trim(substring(text, 1, 80)) AS method0,
-             $toks AS tk
-           FROM documents),
-         c AS (
-           SELECT doc_id, problem0, method0,
-             list_concat(['', '  '], list_transform(list_slice(tk, 1, 12),
-               x -> '  ' || x || ' ')) AS contrib0,
-             list_slice(tk, 5, 8) AS scen0
-           FROM t),
-         v AS (
-           SELECT doc_id,
-             CASE WHEN len(problem0) > 500
-               THEN substring(problem0, 1, 500) || '...' ELSE problem0
-             END AS problem,
-             CASE WHEN len(method0) > 500
-               THEN substring(method0, 1, 500) || '...' ELSE method0
-             END AS method,
-             list_slice(list_filter(list_transform(contrib0, x -> trim(x)),
-               x -> x <> ''), 1, 10) AS contrib,
-             list_slice(list_filter(list_transform(scen0, x -> trim(x)),
-               x -> x <> ''), 1, 10) AS scen
-           FROM c)
-         SELECT doc_id, problem, method,
-           array_to_string(contrib, ',') AS contributions,
-           len(contrib)::BIGINT AS n_contrib,
-           array_to_string(scen, ',') AS scenarios
-         FROM v ORDER BY doc_id"""
-    },
-
-    "l8_summary_fast" -> {
-      val toks = sqlTokens("text")
-      s"""WITH t AS (
-           SELECT doc_id, text, trim(text) AS problem0,
-             trim(substring(text, 1, 80)) AS method0,
-             $toks AS tk
-           FROM documents),
-         c AS (
-           SELECT doc_id, problem0, method0,
-             list_concat(['', ' '], list_transform(list_slice(tk, 1, 10),
-               x -> rpad('  ' || x, 210, 'y'))) AS contrib0,
-             list_slice(tk, 5, 8) AS scen0
-           FROM t),
-         v AS (
-           SELECT doc_id,
-             substring(problem0, 1, 300) AS problem,
-             substring(method0, 1, 300) AS method,
-             list_slice(list_filter(list_transform(contrib0,
-               x -> substring(trim(x), 1, 200)), x -> x <> ''), 1, 8) AS contrib,
-             list_slice(list_filter(list_transform(scen0,
-               x -> substring(trim(x), 1, 200)), x -> x <> ''), 1, 8) AS scen
-           FROM c)
-         SELECT doc_id, problem, method,
-           array_to_string(contrib, ',') AS contributions,
-           len(contrib)::BIGINT AS n_contrib,
-           array_to_string(scen, ',') AS scenarios
-         FROM v ORDER BY doc_id"""
-    },
-
-    "l6t_rate_trace" -> {
-      // the limiter's delay recurrence as a recursive CTE over the
-      // precomputed outcome sequence: succ10 is an integer window
-      // count (> 9 ⇔ the 90% check), the delay chain is fixed-order
-      // IEEE ×1.5::DOUBLE / ×0.9::DOUBLE from 100.0, and only the
-      // emitted delay rounds
-      val ok = s"('0x' || substr(md5('l6:' || doc_id::VARCHAR), 1, 7))" +
-        s"::BIGINT < ${Sampling.threshold(0.8)}"
-      s"""WITH RECURSIVE o AS (
-           SELECT doc_id AS step, $ok AS ok FROM documents
-           WHERE doc_id < 200),
-         s10 AS MATERIALIZED (SELECT step, ok,
-             sum(CASE WHEN ok THEN 1 ELSE 0 END) OVER (ORDER BY step
-               ROWS BETWEEN 9 PRECEDING AND CURRENT ROW) AS succ10
-           FROM o),
-         rec(step, d) AS (
-           SELECT 0::BIGINT, 100.0::DOUBLE
-           UNION ALL
-           SELECT r.step + 1,
-             CASE WHEN NOT s.ok
-                 THEN least(2000.0::DOUBLE, r.d * 1.5::DOUBLE)
-               WHEN s.step >= 9 AND s.succ10 > 9 AND r.d > 100.0::DOUBLE
-                 THEN greatest(100.0::DOUBLE, r.d * 0.9::DOUBLE)
-               ELSE r.d END
-           FROM rec r JOIN s10 s ON s.step = r.step
-           WHERE r.step < 199)
-         SELECT r.step, s.ok,
-           floor(greatest(100.0::DOUBLE, r.d) * 1e6 + 0.5) / 1e6
-             AS delay_ms
-         FROM rec r JOIN s10 s USING (step) ORDER BY step"""
-    },
-
-    "v5_auto_metrics" -> {
-      val toks = sqlTokens("text")
-      s"""WITH q AS (
-           SELECT doc_id, text,
-             array_to_string(list_slice($toks, 1, 8), ' ') AS question
-           FROM documents),
-         m AS (
-           SELECT doc_id,
-             len(text) AS answer_chars,
-             len(regexp_extract_all(text, '\\w+')) AS answer_words,
-             len(list_filter(list_distinct(${sqlTokens("question")}),
-               x -> list_contains(list_distinct(${sqlTokens("text")}), x)))
-               AS keyword_overlap,
-             len(regexp_extract_all(text, '\\[[^\\]]*\\d+[^\\]]*\\]'))
-               AS n_citations
-           FROM q)
-         SELECT doc_id, answer_chars, answer_words, keyword_overlap, n_citations,
-           floor((least(1.0, answer_words / 50.0) * 0.3
-             + least(1.0, keyword_overlap / 5.0) * 0.4
-             + (CASE WHEN n_citations > 0 THEN 1.0 ELSE 0.5 END) * 0.3)
-             * 10000.0 + 0.5) / 10000.0 AS auto_score
-         FROM m ORDER BY doc_id"""
-    },
-
-    "a2_score_summary" ->
-      """WITH sc AS (
-           SELECT lang,
-             least(('0x' || substr(md5('Score: ' || text), 1, 1))::INT, 10)
-               AS novelty
-           FROM documents)
-         SELECT lang, count(*) AS n,
-           floor((avg(novelty)) * 1e6 + 0.5) / 1e6 AS avg_novelty,
-           min(novelty) AS min_novelty, max(novelty) AS max_novelty
-         FROM sc GROUP BY lang ORDER BY lang""",
-
-    "a11_stage_deltas" ->
-      """WITH staged AS (
-           SELECT 0 AS stage, count(*) AS n_docs,
-             floor((avg(n_chars)) * 1e4 + 0.5) / 1e4 AS avg_chars FROM documents
-           UNION ALL
-           SELECT 1 AS stage, count(*) AS n_docs,
-             floor((avg(n_chars)) * 1e4 + 0.5) / 1e4 AS avg_chars
-           FROM documents WHERE n_chars >= 120)
-         SELECT stage, n_docs, avg_chars,
-           coalesce(lag(n_docs) OVER (ORDER BY stage) - n_docs, 0) AS removed
-         FROM staged ORDER BY stage""",
-
-    "m5_resize_plumbing" ->
-      // the payload is the UTF-8 of `text` (pure ASCII), so the strided
-      // byte sample is a strided character sample — digest the SAME
-      // bytes the Spark side resized
-      """SELECT doc_id, len(text) AS orig_bytes,
-         CASE WHEN len(text) <= 64 THEN len(text) ELSE 64 END AS out_bytes,
-         md5(CASE WHEN len(text) <= 64 THEN text
-           ELSE array_to_string(list_transform(generate_series(0, 63),
-             i -> substr(text, (i * (len(text) // 64) + 1)::INT, 1)), '')
-           END) AS digest
-         FROM documents ORDER BY doc_id""",
-
-    "m1_media_features" -> {
-      // feature c = (Σ ascii(byte) at positions ≡ c mod 8) % 997 / 997
-      // over the UTF-8 payload (corpus is pure ASCII ⇒ ascii = byte).
-      def feat(c: Int) =
-        s"""floor(((list_sum(list_transform(
-           list_filter(generate_series(1, len(text)), p -> (p - 1) % 8 = $c),
-           p -> ascii(substr(text, p::INT, 1)))) % 997) / 997.0) * 1e6 + 0.5) / 1e6"""
-      s"""SELECT doc_id, len(text) AS n_bytes,
-         coalesce(${feat(0)}, 0.0) AS f0,
-         coalesce(${feat(1)}, 0.0) AS f1,
-         coalesce(${feat(7)}, 0.0) AS f7
-         FROM documents ORDER BY doc_id"""
-    },
-
-    "m6_bmp_pixel_decode" ->
-      // FORMULA-only ground truth: per variant, pixel channels replay
-      // from (v, x, y) arithmetic over logical top-down coordinates;
-      // the Spark side must recover the same sums from the actual
-      // bottom-up padded bytes
-      """WITH d AS (SELECT doc_id, doc_id % 16 AS v,
-           1 + (doc_id % 16) % 4 AS w, 1 + (doc_id % 16) // 4 AS h
-         FROM documents),
-         px AS (SELECT doc_id, v, w, h,
-           flatten(list_transform(generate_series(0, h - 1), y ->
-             list_transform(generate_series(0, w - 1), x -> [
-               (v * 7 + x * 3 + y * 5) % 256,
-               (v * 11 + x + y * 2) % 256,
-               (v * 13 + x * 2 + y) % 256,
-               ((v * 13 + x * 2 + y) % 256) * (y * w + x + 1)])))
-             AS pix
-         FROM d)
-         SELECT doc_id, v, (w * h)::BIGINT AS n_px,
-           list_sum(list_transform(pix, p -> p[1]))::BIGINT AS b_sum,
-           list_sum(list_transform(pix, p -> p[2]))::BIGINT AS g_sum,
-           list_sum(list_transform(pix, p -> p[3]))::BIGINT AS r_sum,
-           list_sum(list_transform(pix, p -> p[4]))::BIGINT AS rw_sum
-         FROM px ORDER BY doc_id""",
-
-    "m7_wav_sample_decode" ->
-      // FORMULA-only ground truth: amplitudes replay from (v, i)
-      // arithmetic; the Spark side must recover sign, magnitude, and
-      // adjacency from the actual little-endian bytes
-      """WITH d AS (SELECT doc_id, doc_id % 16 AS v, 8 + doc_id % 16 AS n
-         FROM documents),
-         ss AS (SELECT doc_id, v, n,
-           list_transform(generate_series(0, n - 1),
-             i -> ((v * 37 + i * 29) % 401) - 200) AS s
-         FROM d)
-         SELECT doc_id, v, n::BIGINT AS n_samples,
-           list_sum(list_transform(s, x -> abs(x)))::BIGINT AS sum_abs,
-           list_max(list_transform(s, x -> abs(x)))::BIGINT AS max_abs,
-           coalesce(list_sum(list_transform(generate_series(2, n), i ->
-             CASE WHEN (s[i] < 0) <> (s[i - 1] < 0) THEN 1 ELSE 0 END)),
-             0)::BIGINT AS n_zero_cross
-         FROM ss ORDER BY doc_id""",
-
-    "m8_bmp_dhash_pairs" -> {
-      // FORMULA-only ground truth: the dHash lattice lumas replay from
-      // (v, gx, gy) arithmetic (w = h = 8 so y = gy and x = gx·8 // 9);
-      // words rebuild as unpacked bit·2ʲ BIGINT sums — the Spark side
-      // must reproduce them through real bytes, packing, and popcount
-      def lum(gx: String, gy: String) =
-        s"""((((v % 4) * 37 + (($gx) * 8 // 9) * 13 + ($gy) * 29
-              + (v // 4) * 9) % 256) * 114
-           + (((v % 4) * 53 + (($gx) * 8 // 9) * 17 + ($gy) * 7
-              + (v // 4) * 9) % 256) * 587
-           + (((v % 4) * 71 + (($gx) * 8 // 9) * 5 + ($gy) * 23
-              + (v // 4) * 9) % 256) * 299)"""
-      s"""WITH vs AS (SELECT DISTINCT doc_id % 16 AS v FROM documents),
-         bt AS (
-           SELECT v, list_transform(generate_series(0, 63), i ->
-             CASE WHEN ${lum("i % 8", "i // 8")}
-               > ${lum("i % 8 + 1", "i // 8")} THEN 1 ELSE 0 END) AS bits
-           FROM vs),
-         wd AS (
-           SELECT v, bits,
-             list_reduce(list_transform(generate_series(1, 32),
-               j -> (bits[j]::BIGINT * (1::BIGINT << (j - 1)))),
-               (x, y) -> x + y) AS w0,
-             list_reduce(list_transform(generate_series(33, 64),
-               j -> (bits[j]::BIGINT * (1::BIGINT << (j - 33)))),
-               (x, y) -> x + y) AS w1
-           FROM bt),
-         pr AS (
-           SELECT a.v AS va, b.v AS vb, a.w0 AS wa0, a.w1 AS wa1,
-             list_reduce(list_transform(generate_series(1, 64), i ->
-               CASE WHEN a.bits[i] <> b.bits[i] THEN 1 ELSE 0 END),
-               (x, y) -> x + y)::BIGINT AS hamming
-           FROM wd a JOIN wd b ON a.v < b.v)
-         SELECT va, vb, wa0, wa1, hamming, (hamming <= 8) AS near_dup
-         FROM pr ORDER BY va, vb"""
-    },
-
-    "m2_media_headers" ->
-      // ground truth from doc_id — the Spark side must parse the same
-      // numbers back out of the bytes it synthesized
-      """SELECT doc_id,
-         CASE WHEN doc_id % 11 = 0 THEN NULL
-              WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS fmt,
-         CASE WHEN doc_id % 11 = 0 THEN NULL
-              ELSE doc_id % 640 + 16 END AS width,
-         CASE WHEN doc_id % 11 = 0 THEN NULL
-              ELSE doc_id % 480 + 16 END AS height
-         FROM documents ORDER BY doc_id""",
-
-    "m3_audio_headers" ->
-      // ground truth from doc_id — the Spark side must walk the RIFF
-      // chunks / GIF descriptor to recover the same numbers
-      """SELECT doc_id,
-         CASE WHEN doc_id % 13 = 0 THEN NULL
-              WHEN doc_id % 2 = 0 THEN 'wav' ELSE 'gif' END AS fmt,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 <> 0 THEN NULL
-              WHEN doc_id % 4 = 0 THEN 1 ELSE 2 END AS channels,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 <> 0 THEN NULL
-              ELSE (doc_id % 3 + 1) * 8000 END AS sample_rate,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 <> 0 THEN NULL
-              ELSE (doc_id % 7 + 1) * 1000 END AS duration_ms,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 = 0 THEN NULL
-              ELSE doc_id % 320 + 8 END AS width,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 = 0 THEN NULL
-              ELSE doc_id % 200 + 8 END AS height
-         FROM documents ORDER BY doc_id""",
-
-    "m4_container_headers" ->
-      // ground truth from doc_id — the Spark side must parse the BMP
-      // DIB header / walk the ftyp box size to recover the same values
-      """SELECT doc_id,
-         CASE WHEN doc_id % 13 = 0 THEN NULL
-              WHEN doc_id % 2 = 0 THEN 'bmp' ELSE 'mp4' END AS fmt,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 <> 0 THEN NULL
-              ELSE doc_id % 640 + 16 END AS width,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 <> 0 THEN NULL
-              ELSE (doc_id % 480 + 16)
-                * (CASE WHEN doc_id % 5 = 0 THEN -1 ELSE 1 END) END AS height,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 <> 0 THEN NULL
-              WHEN doc_id % 3 = 0 THEN 8
-              WHEN doc_id % 3 = 1 THEN 24 ELSE 32 END AS bits_per_pixel,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 = 0 THEN NULL
-              WHEN doc_id % 3 = 0 THEN 'isom'
-              WHEN doc_id % 3 = 1 THEN 'mp42' ELSE 'avc1' END AS major_brand,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 = 0 THEN NULL
-              ELSE doc_id % 512 END AS minor_version,
-         CASE WHEN doc_id % 13 = 0 OR doc_id % 2 = 0 THEN NULL
-              ELSE doc_id % 3 + 1 END AS n_brands
-         FROM documents ORDER BY doc_id""",
-
-    "m9_frame_schedule" ->
-      // ground truth recomputed from doc_id; the Spark side must walk
-      // ftyp → moov → mvhd to recover timescale/ticks for every row
-      """WITH t AS (
-           SELECT doc_id,
-             (CASE WHEN doc_id % 2 = 0 THEN 600 ELSE 1000 END)::BIGINT
-               AS timescale,
-             (doc_id % 100000 + 600)::BIGINT AS ticks,
-             (CASE WHEN doc_id % 3 = 0 THEN 24
-                   WHEN doc_id % 3 = 1 THEN 25 ELSE 30 END)::BIGINT AS fps
-           FROM documents WHERE doc_id % 13 <> 0),
-         d AS (SELECT *, (ticks * 1000) // timescale AS duration_ms FROM t),
-         f AS (SELECT *, (duration_ms * fps) // 1000 AS n_frames FROM d),
-         g AS (SELECT *, greatest(1, n_frames // 8) AS stride
-           FROM f WHERE n_frames > 0),
-         x AS (SELECT doc_id, timescale, duration_ms, fps, n_frames,
-             unnest(list_slice(
-               generate_series(0, n_frames - 1, stride), 1, 8)) AS frame_idx
-           FROM g)
-         SELECT doc_id, timescale, duration_ms, fps, n_frames, frame_idx,
-           (frame_idx * 1000) // fps AS t_ms
-         FROM x ORDER BY doc_id, frame_idx""",
-
-    "m10_audio_energy" ->
-      // FORMULA-only ground truth (the m7 amplitudes): framing,
-      // energies, peaks, and the partial last frame replay from (v, i)
-      // arithmetic; the Spark side must recover them from real bytes
-      """WITH d AS (SELECT doc_id, doc_id % 16 AS v, 8 + doc_id % 16 AS n
-           FROM documents),
-         fr AS (SELECT doc_id, v, n,
-             unnest(generate_series(0, (n - 1) // 6)) AS frame
-           FROM d),
-         w AS (SELECT doc_id, v, frame,
-             (least((frame + 1) * 6, n) - frame * 6) AS fn,
-             list_transform(
-               generate_series(frame * 6, least((frame + 1) * 6, n) - 1),
-               i -> ((v * 37 + i * 29) % 401) - 200) AS s
-           FROM fr)
-         SELECT doc_id, v, frame::INT AS frame, fn::INT AS n,
-           list_sum(list_transform(s, x -> x * x))::BIGINT AS energy,
-           list_max(list_transform(s, x -> abs(x)))::BIGINT AS peak,
-           list_sum(list_transform(s, x -> x * x)) >= fn * 10000 AS active
-         FROM w ORDER BY doc_id, frame""",
-
-    "m11_png_pixel_decode" ->
-      // FORMULA-only ground truth: the Spark side must recover these
-      // sums through zlib inflation + all five defilter paths
-      """WITH d AS (SELECT doc_id, doc_id % 16 AS v,
-           1 + (doc_id % 16) % 4 AS w, 1 + (doc_id % 16) // 4 AS h
-         FROM documents),
-         px AS (SELECT doc_id, v, w, h,
-           flatten(list_transform(generate_series(0, h - 1), y ->
-             list_transform(generate_series(0, w - 1), x -> [
-               (v * 7 + x * 3 + y * 5) % 256,
-               (v * 11 + x + y * 2) % 256,
-               (v * 13 + x * 2 + y) % 256,
-               ((v * 7 + x * 3 + y * 5) % 256) * (y * w + x + 1)])))
-             AS pix
-         FROM d)
-         SELECT doc_id, v, w::BIGINT AS w, h::BIGINT AS h,
-           (w * h)::BIGINT AS n_px,
-           list_sum(list_transform(pix, p -> p[1]))::BIGINT AS r_sum,
-           list_sum(list_transform(pix, p -> p[2]))::BIGINT AS g_sum,
-           list_sum(list_transform(pix, p -> p[3]))::BIGINT AS b_sum,
-           list_sum(list_transform(pix, p -> p[4]))::BIGINT AS rw_sum
-         FROM px ORDER BY doc_id""",
-
-    "m12_gif_pixel_decode" ->
-      // FORMULA-only ground truth: the Spark side must recover these
-      // sums through the full variable-width LZW decode + palette map
-      """WITH d AS (SELECT doc_id, doc_id % 16 AS v,
-           1 + (doc_id % 16) % 4 AS w, 1 + (doc_id % 16) // 4 AS h
-         FROM documents),
-         px AS (SELECT doc_id, v, w, h,
-           flatten(list_transform(generate_series(0, h - 1), y ->
-             list_transform(generate_series(0, w - 1), x -> [
-               (v * 7 + ((x + 2 * y + v) % 4) * 31) % 256,
-               (v * 11 + ((x + 2 * y + v) % 4) * 17) % 256,
-               (v * 13 + ((x + 2 * y + v) % 4) * 23) % 256,
-               ((v * 7 + ((x + 2 * y + v) % 4) * 31) % 256)
-                 * (y * w + x + 1)])))
-             AS pix
-         FROM d)
-         SELECT doc_id, v, w::BIGINT AS w, h::BIGINT AS h,
-           (w * h)::BIGINT AS n_px,
-           list_sum(list_transform(pix, p -> p[1]))::BIGINT AS r_sum,
-           list_sum(list_transform(pix, p -> p[2]))::BIGINT AS g_sum,
-           list_sum(list_transform(pix, p -> p[3]))::BIGINT AS b_sum,
-           list_sum(list_transform(pix, p -> p[4]))::BIGINT AS rw_sum
-         FROM px ORDER BY doc_id""",
-
-    "w6_interval_join" ->
-      """WITH a AS (
-           SELECT user_id, ts AS a_ts FROM events WHERE event_id % 2 = 0),
-         b AS (
-           SELECT user_id, ts AS b_ts FROM events WHERE event_id % 2 = 1),
-         j AS (
-           SELECT a.user_id,
-             epoch_us(b.b_ts::TIMESTAMP) - epoch_us(a.a_ts::TIMESTAMP) AS gap
-           FROM a JOIN b ON a.user_id = b.user_id
-             AND b.b_ts >= a.a_ts
-             AND b.b_ts <= a.a_ts + INTERVAL 10 MINUTE)
-         SELECT user_id, count(*) AS n_pairs,
-           sum(gap)::BIGINT AS sum_gap_us,
-           min(gap)::BIGINT AS min_gap_us,
-           max(gap)::BIGINT AS max_gap_us
-         FROM j GROUP BY user_id ORDER BY user_id""",
-
-    "w2_sessionization" ->
-      s"""WITH m AS (
-           SELECT user_id, event_id, value, epoch_us(ts::TIMESTAMP) AS m
-           FROM events),
-         f AS (
-           SELECT user_id, event_id, value, m,
-             CASE WHEN lag(m) OVER w IS NULL THEN 1
-               WHEN m - lag(m) OVER w > 1800 * 1000000 THEN 1
-               ELSE 0 END AS new_sess
-           FROM m
-           WINDOW w AS (PARTITION BY user_id ORDER BY m, event_id)),
-         s AS (
-           SELECT user_id, event_id, value, m,
-             sum(new_sess) OVER (PARTITION BY user_id ORDER BY m, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
-           FROM f)
-         SELECT user_id, session_id, count(*) AS n_events,
-           min(m) AS start_us, max(m) AS end_us,
-           ${sqlFround("sum(value)", 2)} AS sum_value
-         FROM s GROUP BY user_id, session_id
-         ORDER BY user_id, session_id""",
-
-    "e1_json_props" -> {
-      // NB: the JSON path lives in a plain literal (the $$-escape only
-      // applies to the s-string's own literal parts) — write it once.
-      val jk = "json_extract(props, '$.k')::INT"
-      s"""SELECT event_type, count(*) AS n,
-         ${sqlFround(s"avg($jk)", 6)} AS avg_k,
-         max($jk) AS max_k,
-         sum(CASE WHEN $jk > 50 THEN 1 ELSE 0 END)::BIGINT
-           AS n_high
-         FROM events GROUP BY event_type ORDER BY event_type"""
-    },
-
-    "v8_kmeans_ivf" -> sqlKmeansRollup(4, 2),
-
-    "v18_pq_topk" ->
-      // the full PQ replay lives in sqlPqTopK (shared with v20, which
-      // adds the coarse IVF router on top)
-      sqlPqTopK("vec_id >= 3", "vec_id < 3", k = 5),
-
-    "v20_ivfpq_indexed" -> {
-      // v18's PQ chain + the v11 coarse-router shape: fixed coarse
-      // centroids route docs (rn = 1) and queries (rn <= 2 = nprobe);
-      // scored pairs restrict to candidates whose list one of the
-      // query's probes reads — everything downstream is the shared
-      // PQ chain verbatim (the persisted index round trip is lossless)
-      val coarse =
-        s"""coarse AS (SELECT vec_id AS cid, embedding AS cv
-             FROM embeddings WHERE vec_id < 8),
-           cassign AS (SELECT doc_id, cid FROM (
-               SELECT d.vec_id AS doc_id, c.cid, row_number() OVER (
-                 PARTITION BY d.vec_id
-                 ORDER BY ${sqlCosine64("d.embedding", "c.cv")} DESC, c.cid)
-                 AS rn
-               FROM embeddings d CROSS JOIN coarse c
-               WHERE d.vec_id >= 13) WHERE rn = 1),
-           cprobes AS (SELECT query_id, cid FROM (
-               SELECT q.vec_id AS query_id, c.cid, row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ${sqlCosine64("q.embedding", "c.cv")} DESC, c.cid)
-                 AS rn
-               FROM embeddings q CROSS JOIN coarse c
-               WHERE q.vec_id >= 8 AND q.vec_id < 13) WHERE rn <= 2)"""
-      sqlPqTopK("vec_id >= 13", "vec_id >= 8 AND vec_id < 13", k = 5,
-        extraCtes = coarse,
-        candRestrict =
-          """JOIN cassign ca ON ca.doc_id = r.vec_id
-             JOIN cprobes pb ON pb.query_id = q.query_id
-               AND pb.cid = ca.cid""")
-    },
-
-    "d10_semantic_dedup" ->
-      s"""WITH ${sqlKmeansCtes(4, 2)},
-         pairs AS (
-           SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b,
-             ${sqlCosine64("a.embedding", "b.embedding")} AS cos
-           FROM final_assign a JOIN final_assign b
-             ON a.cid = b.cid AND a.vec_id < b.vec_id)
-         SELECT cid, id_a, id_b, ${sqlFround("cos", 6)} AS cosine
-         FROM pairs WHERE cos >= 0.3
-         ORDER BY cid, id_a, id_b""",
-
-    "e2_variant_props" -> {
-      val jk = "json_extract(props, '$.k')::INT"
-      s"""SELECT event_type, count(*) AS n,
-         ${sqlFround(s"avg($jk)", 6)} AS avg_k,
-         min($jk) AS min_k,
-         sum(CASE WHEN json_extract(props, '$$.missing') IS NULL
-           THEN 1 ELSE 0 END)::BIGINT AS n_missing
-         FROM events GROUP BY event_type ORDER BY event_type"""
-    },
-
-    "w3_session_window_batch" ->
-      s"""WITH m AS (
-           SELECT user_id, event_id, value, epoch_us(ts::TIMESTAMP) AS m
-           FROM events),
-         f AS (
-           SELECT user_id, event_id, value, m,
-             -- session_window merges only OVERLAPPING [t, t+gap) windows:
-             -- a gap of exactly `gap` starts a new session (>=, not >)
-             CASE WHEN lag(m) OVER w IS NULL THEN 1
-               WHEN m - lag(m) OVER w >= 1800 * 1000000 THEN 1
-               ELSE 0 END AS new_sess
-           FROM m
-           WINDOW w AS (PARTITION BY user_id ORDER BY m, event_id)),
-         s AS (
-           SELECT user_id, event_id, value, m,
-             sum(new_sess) OVER (PARTITION BY user_id ORDER BY m, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM f)
-         SELECT user_id, min(m) AS start_us,
-           max(m) + 1800 * 1000000 AS end_us,
-           count(*) AS n_events, ${sqlFround("sum(value)", 2)} AS sum_value
-         FROM s GROUP BY user_id, sid
-         ORDER BY user_id, start_us""",
-
-    "d1_union_dedup" ->
-      """WITH u AS (
-           SELECT doc_id, 0 AS file_idx, text FROM documents WHERE doc_id % 2 = 0
-           UNION ALL
-           SELECT doc_id, 1 AS file_idx, text FROM documents),
-         r AS (
-           SELECT doc_id, file_idx, row_number() OVER (
-             PARTITION BY md5(lower(trim(substring(text, 1, 20))))
-             ORDER BY file_idx * 1000000 + doc_id) AS rn
-           FROM u)
-         SELECT doc_id, file_idx FROM r WHERE rn = 1
-         ORDER BY doc_id, file_idx""",
-
-    "d6_minhash_lsh" ->
-      s"""WITH $sqlMinhashPairCtes
-         SELECT id_a, id_b,
-           floor((est_jaccard) * 1e6 + 0.5) / 1e6 AS est_jaccard
-         FROM mh_pairs ORDER BY id_a, id_b""",
-
-    "tc2_split_leakage" ->
-      // the d14 closure + the doc-keyed 90/10 cut + the per-cluster
-      // train census, rolled per language over the val side
-      s"""WITH RECURSIVE $sqlMinhashPairCtes,
-         edges AS (SELECT id_a AS ea, id_b AS eb FROM mh_pairs
-           WHERE est_jaccard >= 0.5),
-         sym AS (SELECT ea, eb FROM edges
-           UNION SELECT eb AS ea, ea AS eb FROM edges),
-         reach(id, r) AS (
-           SELECT ea, eb FROM sym
-           UNION
-           SELECT t.id, s.eb FROM reach t JOIN sym s ON t.r = s.ea),
-         comp AS (SELECT id, min(r) AS mr FROM reach GROUP BY id),
-         lab AS (SELECT d.doc_id, d.lang,
-             least(coalesce(c.mr, d.doc_id), d.doc_id) AS cluster_id
-           FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-         sp AS (SELECT doc_id, lang, cluster_id,
-             CASE WHEN ${operators.Sampling.sqlKeyHash("doc_id::VARCHAR",
-               "sl13")} < ${operators.Sampling.threshold(0.9)}
-               THEN 'train' ELSE 'val' END AS split
-           FROM lab),
-         fl AS (SELECT cluster_id,
-             sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END)::BIGINT
-               AS n_train
-           FROM sp GROUP BY cluster_id)
-         SELECT s.lang, count(*)::BIGINT AS n_val,
-           sum(CASE WHEN f.n_train > 0 THEN 1 ELSE 0 END)::BIGINT
-             AS n_val_leaky,
-           count(DISTINCT CASE WHEN f.n_train > 0 THEN s.cluster_id
-             END)::BIGINT AS n_leaky_clusters
-         FROM sp s JOIN fl f USING (cluster_id) WHERE s.split = 'val'
-         GROUP BY s.lang ORDER BY s.lang""",
-
-    "tc3_memorization_probe" -> {
-      // same tokenizer + same doc-keyed cut as tc2; per n, train grams
-      // dedup and val grams probe with IN — the semi-join replay.
-      // Joins the gram STRINGS where Spark joins xxhash64 longs: equal
-      // up to the 2⁻⁶⁴ collision bound (the d16 contract), so this
-      // oracle independently checks the hashed spine's membership.
-      def gcte(n: Int) =
-        s"""g$n AS (
-             SELECT doc_id, split, array_to_string(t[i:i+${n - 1}], ' ') AS g
-             FROM tk, unnest(generate_series(1, len(t) - ${n - 1})) AS u(i)),
-           t$n AS (SELECT DISTINCT g FROM g$n WHERE split = 'train'),
-           h$n AS (SELECT DISTINCT doc_id FROM g$n
-             WHERE split = 'val' AND g IN (SELECT g FROM t$n))"""
-      s"""WITH tk AS (SELECT doc_id, lang, ${sqlTokens("text")} AS t,
-             CASE WHEN ${operators.Sampling.sqlKeyHash("doc_id::VARCHAR",
-               "sl13")} < ${operators.Sampling.threshold(0.9)}
-               THEN 'train' ELSE 'val' END AS split
-           FROM documents),
-         ${gcte(4)},
-         ${gcte(8)},
-         ${gcte(16)}
-         SELECT lang, count(*)::BIGINT AS n_val,
-           sum(CASE WHEN doc_id IN (SELECT doc_id FROM h4)
-             THEN 1 ELSE 0 END)::BIGINT AS n_hit4,
-           sum(CASE WHEN doc_id IN (SELECT doc_id FROM h8)
-             THEN 1 ELSE 0 END)::BIGINT AS n_hit8,
-           sum(CASE WHEN doc_id IN (SELECT doc_id FROM h16)
-             THEN 1 ELSE 0 END)::BIGINT AS n_hit16
-         FROM tk WHERE split = 'val' GROUP BY lang ORDER BY lang"""
-    },
-
-    "d14_dup_clusters" ->
-      // closure of the d6 pair graph: transitive reachability via a
-      // recursive CTE (the oracle-side stand-in for large-star/small-
-      // star), component label = min reachable id, singletons label
-      // themselves
-      s"""WITH RECURSIVE $sqlMinhashPairCtes,
-         edges AS (SELECT id_a AS ea, id_b AS eb FROM mh_pairs
-           WHERE est_jaccard >= 0.5),
-         sym AS (SELECT ea, eb FROM edges
-           UNION SELECT eb AS ea, ea AS eb FROM edges),
-         reach(id, r) AS (
-           SELECT ea, eb FROM sym
-           UNION
-           SELECT t.id, s.eb FROM reach t JOIN sym s ON t.r = s.ea),
-         comp AS (SELECT id, min(r) AS mr FROM reach GROUP BY id),
-         lab AS (SELECT d.doc_id,
-             least(coalesce(c.mr, d.doc_id), d.doc_id) AS cluster_id
-           FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-         sz AS (SELECT cluster_id, count(*)::BIGINT AS cluster_size
-           FROM lab GROUP BY cluster_id)
-         SELECT l.doc_id, l.cluster_id, s.cluster_size,
-           (l.doc_id = l.cluster_id) AS kept
-         FROM lab l JOIN sz s USING (cluster_id)
-         ORDER BY doc_id""",
-
-    "d17_simhash_pairs" ->
-      s"""WITH sh AS (SELECT doc_id, ${sqlSimhash64("text")} AS sh
-             FROM documents),
-         bx AS (SELECT doc_id, sh, unnest(generate_series(0, 3)) AS band
-             FROM sh),
-         bb AS (SELECT doc_id, sh, band,
-             (sh >> (band * 16)::INT) & 65535 AS v FROM bx),
-         cand AS (
-           SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b,
-             x.sh AS sa, y.sh AS sb
-           FROM bb x JOIN bb y
-             ON x.band = y.band AND x.v = y.v AND x.doc_id < y.doc_id)
-         SELECT id_a, id_b, bit_count(xor(sa, sb))::INT AS dist
-         FROM cand WHERE bit_count(xor(sa, sb)) <= 3
-         ORDER BY id_a, id_b""",
-
-    "s12_zorder" ->
-      s"""SELECT l_orderkey, l_partkey,
-           list_sum(list_transform(generate_series(0, 19), b ->
-             (((l_orderkey % 1048576) // (2 ** b)::BIGINT) % 2)
-               * (2 ** (2 * b))::BIGINT +
-             (((l_partkey % 1048576) // (2 ** b)::BIGINT) % 2)
-               * (2 ** (2 * b + 1))::BIGINT))::BIGINT AS z
-         FROM lineitem WHERE l_orderkey <= 1000
-         ORDER BY l_orderkey, l_partkey, z""",
-
-    "d18_neardup_ingest" -> {
-      // corpus-vs-batch pairs from the d15 band chains; intra-batch
-      // pairs restricted to fresh survivors (band keys are per-doc, so
-      // subset pairs == full pairs with both endpoints fresh); closure
-      // via the d14 recursive CTE; kept = component-canonical fresh
-      def keep(salt: String, rate: Double) =
-        s"('0x' || substr(md5('$salt:' || doc_id::VARCHAR), 1, 7))::BIGINT" +
-          s" < ${Sampling.threshold(rate)}"
-      def est(sa: String, sb: String) =
-        s"""list_sum(list_transform(generate_series(1, 16),
-           i -> CASE WHEN $sa[i] = $sb[i] THEN 1 ELSE 0 END)) / 16.0"""
-      s"""WITH RECURSIVE
-         corp AS (SELECT doc_id, text FROM documents WHERE ${keep("corp", 0.6)}),
-         newb AS (SELECT doc_id, lang, text FROM documents
-           WHERE ${keep("newb", 0.5)}),
-         ${sqlMinhashBandCtes("corp", "c_")},
-         ${sqlMinhashBandCtes("newb", "b_")},
-         dupb AS (
-           SELECT DISTINCT b.doc_id FROM b_bucketed b
-           JOIN c_bucketed c ON b.bk = c.bk AND b.doc_id <> c.doc_id
-           WHERE ${est("b.sig", "c.sig")} >= 0.5),
-         fresh AS (SELECT doc_id, lang FROM newb
-           WHERE doc_id NOT IN (SELECT doc_id FROM dupb)),
-         fedges AS (
-           SELECT DISTINCT x.doc_id AS ea, y.doc_id AS eb
-           FROM b_bucketed x JOIN b_bucketed y
-             ON x.bk = y.bk AND x.doc_id < y.doc_id
-           JOIN fresh fx ON fx.doc_id = x.doc_id
-           JOIN fresh fy ON fy.doc_id = y.doc_id
-           WHERE ${est("x.sig", "y.sig")} >= 0.5),
-         fsym AS (SELECT ea, eb FROM fedges
-           UNION SELECT eb AS ea, ea AS eb FROM fedges),
-         freach(id, r) AS (
-           SELECT ea, eb FROM fsym
-           UNION
-           SELECT t.id, s2.eb FROM freach t JOIN fsym s2 ON t.r = s2.ea),
-         fcomp AS (SELECT id, min(r) AS mr FROM freach GROUP BY id)
-         SELECT f.doc_id, f.lang FROM fresh f
-         LEFT JOIN fcomp c ON f.doc_id = c.id
-         WHERE least(coalesce(c.mr, f.doc_id), f.doc_id) = f.doc_id
-         ORDER BY f.doc_id"""
-    },
-
-    "d16_substring_scrub" -> {
-      val toks = sqlTokens("text")
-      // pos is 0-based on both sides; Spark joins xxhash64 gram hashes,
-      // the oracle joins gram strings — equal up to the documented
-      // 2⁻⁶⁴ collision bound
-      s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
-         gi AS (SELECT doc_id, toks,
-             unnest(generate_series(1, len(toks) - 7)) AS i
-           FROM t),
-         gp AS (SELECT doc_id, i - 1 AS pos,
-             array_to_string(list_slice(toks, i, i + 7), ' ') AS gram
-           FROM gi),
-         df AS (SELECT gram, count(DISTINCT doc_id) AS ndocs,
-             min(doc_id) AS keeper
-           FROM gp GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-         hit AS (SELECT gp.doc_id, gp.pos FROM gp JOIN df USING (gram)
-           WHERE gp.doc_id <> df.keeper),
-         h AS (SELECT doc_id, list_sort(list(pos)) AS hits
-           FROM hit GROUP BY doc_id),
-         o AS (SELECT t.doc_id, t.toks,
-             coalesce(h.hits, CAST([] AS BIGINT[])) AS hits
-           FROM t LEFT JOIN h USING (doc_id)),
-         sc AS (SELECT doc_id, len(toks) AS n_tok,
-             list_filter(list_transform(generate_series(1, len(toks)),
-               j -> CASE WHEN len(list_filter(hits,
-                 p -> p <= j - 1 AND j - 1 < p + 8)) = 0
-                 THEN toks[j] END), x -> x IS NOT NULL) AS kept
-           FROM o)
-         SELECT doc_id, n_tok::BIGINT AS n_tok,
-           (n_tok - len(kept))::BIGINT AS n_removed,
-           md5(coalesce(array_to_string(kept, ' '), '')) AS scrub_md5
-         FROM sc ORDER BY doc_id"""
-    },
-
-    "d15_lsh_index_probe" -> {
-      def keep(salt: String, rate: Double) =
-        s"('0x' || substr(md5('$salt:' || doc_id::VARCHAR), 1, 7))::BIGINT" +
-          s" < ${Sampling.threshold(rate)}"
-      s"""WITH corp AS (SELECT doc_id, text FROM documents WHERE ${keep("corp", 0.6)}),
-         newb AS (SELECT doc_id, text FROM documents WHERE ${keep("newb", 0.5)}),
-         ${sqlMinhashBandCtes("corp", "c_")},
-         ${sqlMinhashBandCtes("newb", "b_")},
-         cand AS (
-           SELECT DISTINCT b.doc_id AS id_batch, c.doc_id AS id_corpus,
-             b.sig AS bs, c.sig AS cs
-           FROM b_bucketed b JOIN c_bucketed c
-             ON b.bk = c.bk AND b.doc_id != c.doc_id)
-         SELECT id_batch, id_corpus,
-           floor((list_sum(list_transform(generate_series(1, 16),
-             i -> CASE WHEN bs[i] = cs[i] THEN 1 ELSE 0 END)) / 16.0) * 1e6 + 0.5) / 1e6
-             AS est_jaccard
-         FROM cand ORDER BY id_batch, id_corpus"""
-    },
-
-    "d7_simhash" ->
-      s"""SELECT doc_id, ${sqlSimhash("text")} AS sh
-         FROM documents ORDER BY doc_id""",
-
-    "v15_bm25_topk" ->
-      s"""WITH ${sqlBm25("true")}
-         SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-         FROM lexsc QUALIFY rank <= 10 ORDER BY query_id, rank""",
-
-    "v19_rerank" -> {
-      val qvals = bm25Queries.map { case (q, ts) =>
-        s"($q, [${ts.map(t => s"'$t'").mkString(", ")}])"
-      }.mkString(", ")
-      s"""WITH ${sqlBm25("true")},
-         rk AS (SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM lexsc),
-         cand AS (SELECT query_id, doc_id, score FROM rk WHERE rank <= 10),
-         qt(query_id, qterms) AS (VALUES $qvals),
-         dt AS (SELECT doc_id, ${sqlTokens("text")} AS toks
-           FROM documents),
-         ce AS (SELECT c.query_id, c.doc_id, c.score,
-             ${sqlFround(
-               "len(list_filter(qterms, t -> list_contains(toks, t)))::DOUBLE" +
-                 " / len(qterms)", 6)} AS ce
-           FROM cand c JOIN qt ON c.query_id = qt.query_id
-           JOIN dt ON c.doc_id = dt.doc_id)
-         SELECT query_id, doc_id, score, ce, row_number() OVER (
-             PARTITION BY query_id ORDER BY ce DESC, score DESC, doc_id) AS rr
-         FROM ce QUALIFY rr <= 5 ORDER BY query_id, rr"""
-    },
-
-    "x8_domain_reweight" ->
-      s"""WITH $sqlDomainReweightCtes
-         SELECT nd.d AS lang, nd.n AS n_tok, a.tv AS tv, a.a AS alpha
-         FROM a$x8Iters a JOIN nd ON a.d = nd.d ORDER BY lang""",
-
-    "x10_temperature_mix" -> {
-      // detln of the per-lang count, one α multiply, the detexp Horner
-      // twin, dyadic quantize to BIGINT, exact-integer allocation, then
-      // the salted 28-bit hash rank — every cell integer past the two
-      // deterministic kernels. α renders ::DOUBLE (bare 0.3 is DECIMAL
-      // in DuckDB; the cast lands on the identical double).
-      val lnCols = operators.Classify.sqlDetLnCols("tm", "nl")
-      s"""WITH n AS (SELECT lang, count(*)::BIGINT AS nl
-             FROM documents GROUP BY lang),
-         l AS (SELECT lang, tmln FROM (SELECT lang, nl, $lnCols FROM n)),
-         w AS (SELECT lang,
-             floor(${Sampling.sqlDetExp("0.3::DOUBLE * tmln")}
-               * 1048576.0 + 0.5)::BIGINT AS wq
-           FROM l),
-         tot AS (SELECT sum(wq)::BIGINT AS s FROM w),
-         c AS (SELECT lang, (250 * wq) // s AS cl FROM w, tot),
-         h AS (SELECT doc_id, lang,
-             ${Sampling.sqlKeyHash("doc_id::VARCHAR", "tm12")} AS hh
-           FROM documents),
-         r AS (SELECT doc_id, lang, row_number() OVER (
-             PARTITION BY lang ORDER BY hh, doc_id) AS lrank FROM h)
-         SELECT r.doc_id, r.lang, r.lrank::BIGINT AS lrank
-         FROM r JOIN c USING (lang)
-         WHERE lrank <= cl ORDER BY doc_id"""
-    },
-
-    "x9_mixture_build" -> {
-      // the x8 chain feeding the build: alpha -> integer weight ->
-      // sqlMixThr rate -> keyHash keep -> per-lang tally of what the
-      // optimized mixture actually selected
-      val toks = sqlTokens("text")
-      s"""WITH $sqlDomainReweightCtes,
-         x9tok AS (SELECT doc_id, lang, len($toks)::BIGINT AS ntok
-           FROM documents),
-         x9st AS (SELECT lang, sum(ntok)::BIGINT AS t
-           FROM x9tok GROUP BY lang),
-         x9w AS (SELECT st.lang, st.t,
-             floor(a.a * 1e6 + 0.5)::BIGINT AS wgt
-           FROM x9st st JOIN a$x8Iters a ON a.d = st.lang),
-         x9tot AS (SELECT sum(t)::BIGINT AS tot_t, sum(wgt)::BIGINT AS s
-           FROM x9w),
-         x9r AS (SELECT lang,
-             ${operators.Sampling.sqlMixThr("t", "wgt", "tot_t", "s",
-               remixBudgetPct)} AS thr
-           FROM x9w, x9tot),
-         x9keep AS (SELECT d.lang, d.ntok FROM x9tok d JOIN x9r r USING (lang)
-           WHERE ('0x' || substr(md5('x9:' || d.doc_id::VARCHAR), 1, 7))::BIGINT
-             < r.thr)
-         SELECT k.lang, count(*)::BIGINT AS n_docs,
-           sum(k.ntok)::BIGINT AS n_toks, a.a AS alpha
-         FROM x9keep k JOIN a$x8Iters a ON a.d = k.lang
-         GROUP BY k.lang, a.a ORDER BY k.lang"""
-    },
-
-    "x7_hard_negatives" ->
-      s"""WITH ${sqlBm25("true")},
-         rk AS (SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM lexsc),
-         pos AS (SELECT query_id, doc_id AS pos_doc, score AS pos_score
-           FROM rk WHERE rank = 1)
-         SELECT n.query_id, pos_doc, n.doc_id AS neg_doc,
-           n.rank AS neg_rank,
-           ${sqlFround("pos_score - n.score", 6)} AS margin
-         FROM rk n JOIN pos p ON n.query_id = p.query_id
-         WHERE n.rank BETWEEN 2 AND 5
-         ORDER BY n.query_id, neg_rank""",
-
-    "v17_bm25_indexed" ->
-      // identical to v15 by design: the persisted index must reproduce
-      // the direct scan-path scores bit-for-bit
-      s"""WITH ${sqlBm25("true")}
-         SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-         FROM lexsc QUALIFY rank <= 10 ORDER BY query_id, rank""",
-
-    "v21_retrieval_eval" -> {
-      // the v16 two-leg replay + RRF, then gold (dense top-5, graded),
-      // run unions, metric rollup; nDCG discounts / IDCG are the SAME
-      // driver-side dyadic literals as the Spark side
-      val discVals = (1 to 10)
-        .map(i => s"($i, ${ndcgDiscounts(i - 1)})").mkString(", ")
-      s"""WITH ${sqlBm25(s"doc_id >= ${bm25Queries.size}")},
-         lex AS (SELECT query_id, doc_id, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM lexsc QUALIFY rank <= 20),
-         dq AS (SELECT vec_id AS query_id, embedding AS qv
-           FROM embeddings WHERE vec_id < ${bm25Queries.size}),
-         dd AS (SELECT vec_id AS doc_id, embedding AS dv
-           FROM embeddings WHERE vec_id >= ${bm25Queries.size}),
-         dsim AS (SELECT query_id, doc_id,
-             ${sqlCosine64("dv", "qv")} AS cosine FROM dd, dq),
-         dense AS (SELECT query_id, doc_id, row_number() OVER (
-             PARTITION BY query_id ORDER BY cosine DESC, doc_id) AS rank
-           FROM dsim QUALIFY rank <= 20),
-         fused AS (SELECT query_id, doc_id,
-             ${sqlFround(s"sum(1.0 / ($rrfK + rank))", 6)} AS rrf
-           FROM (SELECT * FROM lex UNION ALL SELECT * FROM dense)
-           GROUP BY 1, 2),
-         hyb AS (SELECT query_id, doc_id, row_number() OVER (
-             PARTITION BY query_id ORDER BY rrf DESC, doc_id) AS rank
-           FROM fused QUALIFY rank <= 10),
-         gold AS (SELECT query_id, doc_id, (6 - rank)::BIGINT AS rel
-           FROM dense WHERE rank <= 5),
-         runs AS (
-           SELECT 'bm25' AS method, query_id, doc_id, rank
-           FROM lex WHERE rank <= 10
-           UNION ALL SELECT 'dense', query_id, doc_id, rank
-           FROM dense WHERE rank <= 10
-           UNION ALL SELECT 'rrf', query_id, doc_id, rank FROM hyb),
-         disc(rank, disc) AS (VALUES $discVals),
-         perq AS (SELECT method, r.query_id,
-             sum(coalesce(g.rel, 0)::DOUBLE * d.disc) AS dcg,
-             sum(CASE WHEN g.rel IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-               AS hits,
-             max(CASE WHEN g.rel IS NOT NULL THEN 2520 // r.rank
-               ELSE 0 END)::BIGINT AS rr2520
-           FROM runs r JOIN disc d USING (rank)
-           LEFT JOIN gold g
-             ON g.query_id = r.query_id AND g.doc_id = r.doc_id
-           GROUP BY 1, 2)
-         SELECT method,
-           ${sqlFround("sum(hits)::DOUBLE / (5 * count(*))::DOUBLE", 6)}
-             AS recall_at_10,
-           ${sqlFround("sum(rr2520)::DOUBLE / (2520 * count(*))::DOUBLE", 6)}
-             AS mrr_at_10,
-           ${sqlFround(s"sum(dcg) / ($ndcgIdcg5::DOUBLE * count(*)::DOUBLE)",
-             6)} AS ndcg_at_10
-         FROM perq GROUP BY method ORDER BY method"""
-    },
-
-    "v16_hybrid_rrf" ->
-      // Both legs replayed end to end: the BM25 chain over doc_id >= nq,
-      // the dense cosine ranked on the RAW cosine (topKPerQuery ranks
-      // unrounded), then the RRF union-sum, 6-rounded before the final
-      // deterministic rank.
-      s"""WITH ${sqlBm25(s"doc_id >= ${bm25Queries.size}")},
-         lex AS (SELECT query_id, doc_id, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM lexsc QUALIFY rank <= 20),
-         dq AS (SELECT vec_id AS query_id, embedding AS qv
-           FROM embeddings WHERE vec_id < ${bm25Queries.size}),
-         dd AS (SELECT vec_id AS doc_id, embedding AS dv
-           FROM embeddings WHERE vec_id >= ${bm25Queries.size}),
-         dsim AS (SELECT query_id, doc_id,
-             ${sqlCosine64("dv", "qv")} AS cosine FROM dd, dq),
-         dense AS (SELECT query_id, doc_id, row_number() OVER (
-             PARTITION BY query_id ORDER BY cosine DESC, doc_id) AS rank
-           FROM dsim QUALIFY rank <= 20),
-         fused AS (SELECT query_id, doc_id,
-             ${sqlFround(s"sum(1.0 / ($rrfK + rank))", 6)} AS rrf
-           FROM (SELECT * FROM lex UNION ALL SELECT * FROM dense)
-           GROUP BY 1, 2)
-         SELECT query_id, doc_id, rrf, row_number() OVER (
-             PARTITION BY query_id ORDER BY rrf DESC, doc_id) AS rank
-         FROM fused QUALIFY rank <= 10 ORDER BY query_id, rank""",
-
-    "v2_ann_topk_batch" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-             FROM embeddings WHERE vec_id < 5),
-         d AS (SELECT vec_id AS doc_id, embedding AS dv
-             FROM embeddings WHERE vec_id >= 5),
-         s AS (SELECT query_id, doc_id,
-             ${sqlCosine64("dv", "qv")} AS cosine FROM d, q),
-         r AS (SELECT query_id, doc_id, cosine, row_number() OVER (
-             PARTITION BY query_id ORDER BY cosine DESC, doc_id) AS rank FROM s)
-         SELECT query_id, doc_id, floor((cosine) * 1e6 + 0.5) / 1e6 AS cosine, rank
-         FROM r WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    "v12_embed_topk" ->
-      s"""WITH emb AS (SELECT doc_id,
-             ${sqlMockEmbedding("text", 8)} AS v FROM documents),
-         q AS (SELECT doc_id AS query_id, v AS qv FROM emb WHERE doc_id < 5),
-         d AS (SELECT doc_id, v AS dv FROM emb WHERE doc_id >= 5),
-         s AS (SELECT query_id, doc_id,
-             ${sqlCosine("dv", "qv", 8)} AS cosine FROM d, q),
-         r AS (SELECT query_id, doc_id, cosine, row_number() OVER (
-             PARTITION BY query_id ORDER BY cosine DESC, doc_id) AS rank FROM s)
-         SELECT query_id, doc_id, floor((cosine) * 1e6 + 0.5) / 1e6 AS cosine, rank
-         FROM r WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    "v7_ivf_topk" ->
-      s"""WITH c AS (SELECT vec_id AS cid, embedding AS cv
-             FROM embeddings WHERE vec_id < 8),
-         d AS (SELECT vec_id AS doc_id, embedding AS dv
-             FROM embeddings WHERE vec_id >= 13),
-         q AS (SELECT vec_id AS query_id, embedding AS qv
-             FROM embeddings WHERE vec_id >= 8 AND vec_id < 13),
-         assign AS (
-           SELECT doc_id, dv, cid FROM (
-             SELECT doc_id, dv, cid, row_number() OVER (
-               PARTITION BY doc_id
-               ORDER BY ${sqlCosine64("dv", "cv")} DESC, cid) AS rn
-             FROM d, c) WHERE rn = 1),
-         probes AS (
-           SELECT query_id, qv, cid FROM (
-             SELECT query_id, qv, cid, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine64("qv", "cv")} DESC, cid) AS rn
-             FROM q, c) WHERE rn <= 2),
-         ranked AS (
-           SELECT query_id, doc_id,
-             ${sqlCosine64("dv", "qv")} AS cosine,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-           FROM probes JOIN assign USING (cid))
-         SELECT query_id, doc_id, floor((cosine) * 1e6 + 0.5) / 1e6 AS cosine, rank
-         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    "v22_filtered_ann" ->
-      // v11's assignment/probe replay + the allow-set filter composed
-      // BEFORE the rank (pre-filter semantics)
-      s"""WITH c AS (SELECT vec_id AS cid, embedding AS cv
-             FROM embeddings WHERE vec_id < 8),
-         d AS (SELECT vec_id AS doc_id, embedding AS dv
-             FROM embeddings WHERE vec_id >= 13),
-         q AS (SELECT vec_id AS query_id, embedding AS qv
-             FROM embeddings WHERE vec_id >= 8 AND vec_id < 13),
-         allowed AS (SELECT doc_id FROM documents WHERE lang = 'en'),
-         assign AS (
-           SELECT doc_id, dv, cid FROM (
-             SELECT doc_id, dv, cid, row_number() OVER (
-               PARTITION BY doc_id
-               ORDER BY ${sqlCosine64("dv", "cv")} DESC, cid) AS rn
-             FROM d, c) WHERE rn = 1),
-         probes AS (
-           SELECT query_id, qv, cid FROM (
-             SELECT query_id, qv, cid, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine64("qv", "cv")} DESC, cid) AS rn
-             FROM q, c) WHERE rn <= 3),
-         ranked AS (
-           SELECT query_id, doc_id,
-             ${sqlCosine64("dv", "qv")} AS cosine,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-           FROM probes JOIN assign USING (cid) JOIN allowed USING (doc_id))
-         SELECT query_id, doc_id, floor((cosine) * 1e6 + 0.5) / 1e6 AS cosine,
-           rank
-         FROM ranked WHERE rank <= 4 ORDER BY query_id, rank""",
-
-    "v23_mmr_rerank" -> {
-      // the same unrolled greedy, relationally: candidates and pair
-      // sims via the v2 cosine replay (then 1e-6 micro-unit floors),
-      // then 4 argmax steps — each an anti-filter vs the selected set,
-      // a max-over-selected pair join, and one row_number pick, every
-      // comparison integer. MATERIALIZED is load-bearing on the
-      // chained CTEs (plain CTEs inline exponentially down the chain).
-      val steps = (2 to 5).map { i =>
-        val prev = s"selu${i - 1}"
-        s"""sel$i AS MATERIALIZED (
-           SELECT query_id, doc_id, squ, $i AS mmr_rank, mmr_score
-           FROM (
-             SELECT g.query_id, g.doc_id, g.squ,
-               (7 * g.squ - 3 * g.mp)::BIGINT AS mmr_score,
-               row_number() OVER (PARTITION BY g.query_id
-                 ORDER BY (7 * g.squ - 3 * g.mp) DESC, g.doc_id) AS rn
-             FROM (
-               SELECT c.query_id, c.doc_id, c.squ, max(p.pu) AS mp
-               FROM cands c
-               JOIN pairs p ON p.query_id = c.query_id
-                 AND p.ia = c.doc_id
-               JOIN $prev sp ON sp.query_id = p.query_id
-                 AND sp.doc_id = p.ib
-               WHERE NOT EXISTS (SELECT 1 FROM $prev x
-                 WHERE x.query_id = c.query_id
-                   AND x.doc_id = c.doc_id)
-               GROUP BY 1, 2, 3) g)
-           WHERE rn = 1),
-           selu$i AS MATERIALIZED (
-             SELECT query_id, doc_id FROM selu${i - 1}
-             UNION ALL SELECT query_id, doc_id FROM sel$i)"""
-      }.mkString(",\n")
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-             FROM embeddings WHERE vec_id < 5),
-         d AS (SELECT vec_id AS doc_id, embedding AS dv
-             FROM embeddings WHERE vec_id >= 5),
-         r0 AS (SELECT query_id, doc_id,
-             ${sqlCosine64("dv", "qv")} AS cosine,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-           FROM d, q),
-         cands AS MATERIALIZED (SELECT query_id, doc_id,
-             floor(cosine * 1e6 + 0.5)::BIGINT AS squ
-           FROM r0 WHERE rank <= 10),
-         ce AS (SELECT c.query_id, c.doc_id, d.dv
-           FROM cands c JOIN d USING (doc_id)),
-         pairs AS MATERIALIZED (SELECT a.query_id, a.doc_id AS ia,
-             b.doc_id AS ib,
-             floor(${sqlCosine64("a.dv", "b.dv")} * 1e6 + 0.5)::BIGINT
-               AS pu
-           FROM ce a JOIN ce b ON a.query_id = b.query_id
-             AND a.doc_id <> b.doc_id),
-         sel1 AS MATERIALIZED (SELECT query_id, doc_id, squ,
-             1 AS mmr_rank, (7 * squ)::BIGINT AS mmr_score
-           FROM (SELECT query_id, doc_id, squ, row_number() OVER (
-               PARTITION BY query_id ORDER BY squ DESC, doc_id) AS rn
-             FROM cands)
-           WHERE rn = 1),
-         selu1 AS MATERIALIZED (SELECT query_id, doc_id FROM sel1),
-         $steps
-         SELECT query_id, doc_id, squ, mmr_rank, mmr_score FROM (
-           SELECT * FROM sel1 UNION ALL SELECT * FROM sel2
-           UNION ALL SELECT * FROM sel3 UNION ALL SELECT * FROM sel4
-           UNION ALL SELECT * FROM sel5)
-         ORDER BY query_id, mmr_rank"""
-    },
-
-    "v24_context_assembly" -> {
-      // rebuilds the v9 store text, replays the top-4 cosine rank, and
-      // re-assembles the exact context string: sim digits from integer
-      // milli-units (sign + intpart + lpad millis — Spark renders the
-      // same from the same BIGINT), entries joined by blank lines in
-      // rank order via string_agg ORDER BY.
-      val toks = sqlTokens("text")
-      s"""WITH t AS (SELECT doc_id, text, $toks AS tk FROM documents
-             WHERE doc_id >= 5),
-         st AS (SELECT doc_id AS paper_id,
-             'Paper Title: ' || trim(substring(text, 1, 40)) || chr(10) ||
-             'Authors: ' || array_to_string(
-               list_transform(list_slice(tk, 1, 3), x -> 'dr. ' || x), ', ')
-               || chr(10) ||
-             'Abstract: ' || substring(text, 1, 500) AS doc_text,
-             trim(substring(text, 1, 40)) AS title
-           FROM t),
-         d AS (SELECT s.paper_id AS doc_id, s.title, s.doc_text,
-             e.embedding AS dv
-           FROM st s JOIN embeddings e ON e.vec_id = s.paper_id),
-         q AS (SELECT vec_id AS query_id, embedding AS qv
-           FROM embeddings WHERE vec_id < 5),
-         r AS (SELECT query_id, doc_id, title, doc_text,
-             ${sqlCosine64("dv", "qv")} AS cosine,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-           FROM d, q),
-         k AS (SELECT query_id, rank, title, doc_text,
-             floor(cosine * 1e3 + 0.5)::BIGINT AS smu
-           FROM r WHERE rank <= 4),
-         f AS (SELECT query_id, rank,
-             '[' || rank::VARCHAR || '] (sim ' ||
-             (CASE WHEN smu < 0 THEN '-' ELSE '' END) ||
-             (abs(smu) // 1000)::VARCHAR || '.' ||
-             lpad((abs(smu) % 1000)::VARCHAR, 3, '0') || ') ' ||
-             title || chr(10) || doc_text AS entry
-           FROM k),
-         c AS (SELECT query_id, count(*)::BIGINT AS n_ctx,
-             string_agg(entry, chr(10) || chr(10) ORDER BY rank) AS ctx
-           FROM f GROUP BY query_id)
-         SELECT query_id, n_ctx, length(ctx)::BIGINT AS ctx_chars,
-           md5(ctx) AS ctx_md5
-         FROM c ORDER BY query_id"""
-    },
-
-    "v11_ivf_persisted" ->
-      s"""WITH c AS (SELECT vec_id AS cid, embedding AS cv
-             FROM embeddings WHERE vec_id < 8),
-         d AS (SELECT vec_id AS doc_id, embedding AS dv
-             FROM embeddings WHERE vec_id >= 13),
-         q AS (SELECT vec_id AS query_id, embedding AS qv
-             FROM embeddings WHERE vec_id >= 8 AND vec_id < 13),
-         assign AS (
-           SELECT doc_id, dv, cid FROM (
-             SELECT doc_id, dv, cid, row_number() OVER (
-               PARTITION BY doc_id
-               ORDER BY ${sqlCosine64("dv", "cv")} DESC, cid) AS rn
-             FROM d, c) WHERE rn = 1),
-         probes AS (
-           SELECT query_id, qv, cid FROM (
-             SELECT query_id, qv, cid, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine64("qv", "cv")} DESC, cid) AS rn
-             FROM q, c) WHERE rn <= 3),
-         ranked AS (
-           SELECT query_id, doc_id,
-             ${sqlCosine64("dv", "qv")} AS cosine,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-           FROM probes JOIN assign USING (cid))
-         SELECT query_id, doc_id, floor((cosine) * 1e6 + 0.5) / 1e6 AS cosine, rank
-         FROM ranked WHERE rank <= 4 ORDER BY query_id, rank""",
-
-    "v13_ivf_recall" ->
-      // append freezes the saved centroids, so assigning the full
-      // corpus (base ∪ appended) against them in one pass replays the
-      // save-then-append index state exactly
-      s"""WITH c AS (SELECT vec_id AS cid, embedding AS cv
-             FROM embeddings WHERE vec_id < 8),
-         d AS (SELECT vec_id AS doc_id, embedding AS dv
-             FROM embeddings WHERE vec_id >= 13),
-         q AS (SELECT vec_id AS query_id, embedding AS qv
-             FROM embeddings WHERE vec_id >= 8 AND vec_id < 13),
-         assign AS (
-           SELECT doc_id, dv, cid FROM (
-             SELECT doc_id, dv, cid, row_number() OVER (
-               PARTITION BY doc_id
-               ORDER BY ${sqlCosine64("dv", "cv")} DESC, cid) AS rn
-             FROM d, c) WHERE rn = 1),
-         probes AS (
-           SELECT query_id, qv, cid FROM (
-             SELECT query_id, qv, cid, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine64("qv", "cv")} DESC, cid) AS rn
-             FROM q, c) WHERE rn <= 2),
-         approx AS (
-           SELECT query_id, doc_id FROM (
-             SELECT query_id, doc_id, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-             FROM probes JOIN assign USING (cid)) WHERE rank <= 5),
-         exact AS (
-           SELECT query_id, doc_id FROM (
-             SELECT query_id, doc_id, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-             FROM d, q) WHERE rank <= 5)
-         SELECT e.query_id, count(*)::BIGINT AS n_exact,
-           count(a.doc_id)::BIGINT AS n_hit,
-           ${sqlFround("count(a.doc_id)::DOUBLE / count(*)", 6)} AS recall
-         FROM exact e LEFT JOIN approx a USING (query_id, doc_id)
-         GROUP BY e.query_id ORDER BY e.query_id""",
-
-    "v14_ivf_recenter" -> {
-      // frozen branch = the v13 CTEs; re-centered branch = k-means
-      // retrained over the SAME index subset (srcidx), then assignment
-      // + probe + rank against the new centroids
-      s"""WITH c AS (SELECT vec_id AS cid, embedding AS cv
-             FROM embeddings WHERE vec_id < 8),
-         d AS (SELECT vec_id AS doc_id, embedding AS dv
-             FROM embeddings WHERE vec_id >= 13),
-         q AS (SELECT vec_id AS query_id, embedding AS qv
-             FROM embeddings WHERE vec_id >= 8 AND vec_id < 13),
-         srcidx AS (SELECT vec_id, embedding FROM embeddings
-             WHERE vec_id >= 13),
-         ${sqlKmeansCtes(4, 2, "srcidx")},
-         assignF AS (
-           SELECT doc_id, dv, cid FROM (
-             SELECT doc_id, dv, cid, row_number() OVER (
-               PARTITION BY doc_id
-               ORDER BY ${sqlCosine64("dv", "cv")} DESC, cid) AS rn
-             FROM d, c) WHERE rn = 1),
-         probesF AS (
-           SELECT query_id, qv, cid FROM (
-             SELECT query_id, qv, cid, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine64("qv", "cv")} DESC, cid) AS rn
-             FROM q, c) WHERE rn <= 2),
-         approxF AS (
-           SELECT query_id, doc_id FROM (
-             SELECT query_id, doc_id, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-             FROM probesF JOIN assignF USING (cid)) WHERE rank <= 5),
-         probesR AS (
-           SELECT query_id, qv, cid FROM (
-             SELECT query_id, qv, cid, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine64("qv", "cv")} DESC, cid) AS rn
-             FROM q, cents2) WHERE rn <= 2),
-         approxR AS (
-           SELECT query_id, vec_id AS doc_id FROM (
-             SELECT p.query_id, fa.vec_id, row_number() OVER (
-               PARTITION BY p.query_id
-               ORDER BY ${sqlCosine64("fa.embedding", "p.qv")} DESC,
-                 fa.vec_id) AS rank
-             FROM probesR p JOIN final_assign fa USING (cid))
-           WHERE rank <= 5),
-         exact AS (
-           SELECT query_id, doc_id FROM (
-             SELECT query_id, doc_id, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-             FROM d, q) WHERE rank <= 5)
-         SELECT e.query_id, count(*)::BIGINT AS n_exact,
-           count(f.doc_id)::BIGINT AS n_hit_frozen,
-           ${sqlFround("count(f.doc_id)::DOUBLE / count(*)", 6)}
-             AS recall_frozen,
-           count(r.doc_id)::BIGINT AS n_hit_recentered,
-           ${sqlFround("count(r.doc_id)::DOUBLE / count(*)", 6)}
-             AS recall_recentered
-         FROM exact e
-         LEFT JOIN approxF f USING (query_id, doc_id)
-         LEFT JOIN approxR r USING (query_id, doc_id)
-         GROUP BY e.query_id ORDER BY e.query_id"""
-    },
-
-    "v6_ann_topk_planned" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-             FROM embeddings WHERE vec_id < 5),
-         d AS (SELECT vec_id AS doc_id, embedding AS dv
-             FROM embeddings WHERE vec_id >= 5),
-         s AS (SELECT query_id, doc_id,
-             ${sqlCosine64("dv", "qv")} AS cosine FROM d, q),
-         r AS (SELECT query_id, doc_id, cosine, row_number() OVER (
-             PARTITION BY query_id ORDER BY cosine DESC, doc_id) AS rank FROM s)
-         SELECT query_id, doc_id, floor((cosine) * 1e6 + 0.5) / 1e6 AS cosine
-         FROM r WHERE rank <= 5 ORDER BY query_id, cosine DESC, doc_id""",
-
-    "v3_neardup_lsh" -> {
-      val planes = Similarity.hyperplanes(16, 64)
-      val planesLit = planes.map(_.mkString("[", ", ", "]"))
-        .mkString("[", ", ", "]")
-      // band code = band·16 + Σ sign-bit·2^j over the band's 4 planes;
-      // identical to Similarity.lshBandKeys(struct(band, key)) pair-wise.
-      s"""WITH pl AS (SELECT $planesLit AS p),
-         keyed AS (
-           SELECT vec_id, unnest(list_transform(generate_series(0, 3), b ->
-             b * 16 + list_reduce(list_transform(generate_series(0, 3), j ->
-               CASE WHEN list_reduce(list_transform(generate_series(1, 64),
-                   i -> CAST(embedding[i] AS DOUBLE) * p[(b * 4 + j + 1)::INT][i::INT]),
-                   (acc, x) -> acc + x) >= 0
-               THEN (1 << j::INT) ELSE 0 END), (acc, x) -> acc + x))) AS bk
-           FROM embeddings, pl),
-         cands AS (
-           SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-           FROM keyed a JOIN keyed b ON a.bk = b.bk AND a.vec_id < b.vec_id),
-         sim AS (
-           SELECT c.id_a, c.id_b,
-             ${sqlCosine64("ea.embedding", "eb.embedding")} AS cosine
-           FROM cands c
-           JOIN embeddings ea ON c.id_a = ea.vec_id
-           JOIN embeddings eb ON c.id_b = eb.vec_id)
-         SELECT id_a, id_b, floor((cosine) * 1e6 + 0.5) / 1e6 AS cosine
-         FROM sim WHERE cosine >= 0.3 ORDER BY id_a, id_b"""
-    },
-
-    "ta1_language_id" ->
-      s"""SELECT doc_id, ${sqlLanguageId("text")} AS lang_pred
-         FROM documents ORDER BY doc_id""",
-
-    "ta2_text_stats" ->
-      s"""${sqlQualityCtes()}
-         SELECT doc_id, n_tokens, n_bpe_tokens,
-           floor((sr) * 1e6 + 0.5) / 1e6 AS stop_ratio, floor((pr) * 1e6 + 0.5) / 1e6 AS punct_ratio,
-           floor((tt) * 1e6 + 0.5) / 1e6 AS ttr, $sqlQualityExpr AS quality
-         FROM s ORDER BY doc_id""",
-
-    "a3_histogram" ->
-      s"""${sqlQualityCtes()}
-         SELECT floor($sqlQualityExpr * 10)::BIGINT AS decile, count(*) AS n
-         FROM s GROUP BY 1 ORDER BY 1""",
-
-    "s13_bucketed_join" ->
-      s"""SELECT c_mktsegment, count(*) AS n_orders,
-           ${sqlFround("sum(o_totalprice)", 2)} AS sum_price
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-
-    "s14_dpp_prune" ->
-      s"""SELECT n_name, count(*) AS n_cust,
-           ${sqlFround("sum(c_acctbal)", 2)} AS sum_bal
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         WHERE n_regionkey = 2
-         GROUP BY n_name ORDER BY n_name""",
-
-    "s15_footer_stats" ->
-      """SELECT count(*) AS n_rows,
-           min(l_quantity) AS min_qty, max(l_quantity) AS max_qty,
-           min(l_extendedprice) AS min_price,
-           max(l_extendedprice) AS max_price
-         FROM lineitem""",
-
-    "s16_dynamic_overwrite" ->
-      s"""WITH ev AS (
-           SELECT strftime(ts::TIMESTAMP, '%Y-%m-%d') AS day,
-             event_type, value, user_id
-           FROM events),
-         d0 AS (SELECT min(day) AS day FROM ev),
-         base AS (
-           SELECT day, event_type, count(*) AS n,
-             ${sqlFround("sum(value)", 2)} AS sum_v
-           FROM ev GROUP BY day, event_type),
-         restated AS (
-           SELECT ev.day, event_type, count(*) AS n,
-             ${sqlFround("sum(value)", 2)} AS sum_v
-           FROM ev JOIN d0 ON ev.day = d0.day
-           WHERE user_id % 2 = 0
-           GROUP BY ev.day, event_type)
-         SELECT * FROM base WHERE day <> (SELECT day FROM d0)
-         UNION ALL SELECT * FROM restated
-         ORDER BY day, event_type""",
-
-    "s17_schema_evolution" ->
-      s"""WITH u AS (
-           SELECT doc_id, lang, NULL::DOUBLE AS q
-           FROM documents WHERE doc_id % 3 = 0
-           UNION ALL
-           SELECT doc_id, lang, (doc_id % 128) / 128.0 AS q
-           FROM documents WHERE doc_id % 3 <> 0)
-         SELECT lang, count(*) AS n_docs, count(q) AS n_scored,
-           ${sqlFround("avg(q)", 6)} AS avg_q
-         FROM u GROUP BY lang ORDER BY lang""",
-
-    "s18_paged_api_ingest" ->
-      // the paged-scraper records replayed relationally: same subset,
-      // same token counts — pagination/parse drift on the Spark side
-      // (lost page, dropped record, mis-bound column) breaks the hash
-      s"""WITH src AS (SELECT doc_id AS id, lang,
-             len(${sqlTokens("text")})::BIGINT AS n_tok
-           FROM documents WHERE doc_id < 200)
-         SELECT lang, count(*)::BIGINT AS n_docs,
-           sum(n_tok)::BIGINT AS n_tokens,
-           min(id) AS min_id, max(id) AS max_id
-         FROM src GROUP BY lang ORDER BY lang""",
-
-    "s19_incremental_listing" -> {
-      // each tick's stats replayed from the same hash split: tick 1 =
-      // both day-1 drops, tick 2 = the one COMMITTED day-2 drop (the
-      // torn drop would double n_drops/n_rows), tick 3 = the explicit
-      // empty row
-      val keep = s"('0x' || substr(md5('s19:' || doc_id::VARCHAR), 1, 7))" +
-        s"::BIGINT < ${Sampling.threshold(0.5)}"
-      s"""WITH b1 AS (SELECT doc_id, n_chars FROM documents WHERE $keep),
-         b2 AS (SELECT doc_id, n_chars FROM documents WHERE NOT ($keep))
-         SELECT 1::BIGINT AS tick, 2::BIGINT AS n_drops,
-           count(*)::BIGINT AS n_rows, sum(n_chars)::BIGINT AS sum_chars
-         FROM b1
-         UNION ALL
-         SELECT 2::BIGINT, 1::BIGINT, count(*)::BIGINT,
-           sum(n_chars)::BIGINT
-         FROM b2
-         UNION ALL
-         SELECT 3::BIGINT, 0::BIGINT, 0::BIGINT, 0::BIGINT
-         ORDER BY tick"""
-    },
-
-    "s20_gzip_roundtrip" ->
-      // stats straight off the raw column: equality proves the Spark
-      // side's deflate→inflate→UTF-8 hop reproduced every byte
-      s"""SELECT doc_id, length(text)::BIGINT AS n_chars,
-           len(${sqlTokens("text")})::BIGINT AS n_tokens,
-           md5(text) AS h
-         FROM documents ORDER BY doc_id""",
-
-    "d20_editdist_pairs" ->
-      """WITH t AS (
-           SELECT doc_id AS id,
-             lower(trim('title ' || lpad((doc_id % 40)::VARCHAR, 2, '0')
-               || CASE (doc_id // 40) % 3 WHEN 1 THEN ' x'
-                    WHEN 2 THEN ' qz' ELSE '' END)) AS tt
-           FROM documents),
-         b AS (SELECT id, tt, substr(tt, 1, 8) AS bk FROM t)
-         SELECT x.id AS id_a, y.id AS id_b,
-           levenshtein(x.tt, y.tt)::INT AS dist
-         FROM b x JOIN b y ON x.bk = y.bk AND x.id < y.id
-           AND abs(len(x.tt) - len(y.tt)) <= 2
-         WHERE levenshtein(x.tt, y.tt) <= 2
-         ORDER BY id_a, id_b""",
-
-    "d21_url_dedup" -> {
-      // the ta12 synthesis pattern with div-3 collision cohorts; the
-      // shared sqlUrlNorm chain; first-wins + cohort size per
-      // canonical URL
-      val parts = "^([a-zA-Z][a-zA-Z0-9+.-]*://)([^/?#]+)(.*)$"
-      s"""WITH u AS (SELECT doc_id,
-           (CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://Example.org/a/'
-             WHEN doc_id % 3 = 1 THEN 'https://EXAMPLE.ORG/a/'
-             ELSE 'https://example.org/a/' END) ||
-           (doc_id // 3)::VARCHAR ||
-           (CASE WHEN doc_id % 3 = 0 THEN '?utm_source=feed'
-             WHEN doc_id % 3 = 1 THEN '/' ELSE '#frag' END) AS url
-         FROM documents),
-         p AS (SELECT doc_id,
-           lower(regexp_extract(url, '$parts', 1)) ||
-             lower(regexp_extract(url, '$parts', 2)) ||
-             regexp_extract(url, '$parts', 3) AS rebuilt
-         FROM u),
-         n AS (SELECT doc_id, ${sqlUrlNorm("rebuilt")} AS norm_url
-         FROM p)
-         SELECT doc_id, norm_url,
-           row_number() OVER (PARTITION BY norm_url ORDER BY doc_id) = 1
-             AS kept,
-           count(*) OVER (PARTITION BY norm_url)::BIGINT AS n_group
-         FROM n ORDER BY doc_id"""
-    },
-
-    "d22_containment_pairs" -> {
-      // brute-force batch-vs-corpus containment (the d4 oracle
-      // pattern, asymmetric formula): excerpt side × document side
-      // only, the integer size prune, best container by (inter desc,
-      // size desc, id); the ratio comparison is the same
-      // exact-integer IEEE divide as the Spark side
-      val toks = sqlTokens("text")
-      s"""WITH bat AS (
-           SELECT doc_id + 1000000 AS doc_id,
-             array_to_string(list_slice($toks, 1, 30), ' ') AS text
-           FROM documents WHERE doc_id % 5 = 0),
-         btoks AS (
-           SELECT doc_id, unnest(list_distinct($toks)) AS tok FROM bat),
-         ctoks AS (
-           SELECT doc_id, unnest(list_distinct($toks)) AS tok
-           FROM documents),
-         bsizes AS (SELECT doc_id, count(*) AS n FROM btoks GROUP BY doc_id),
-         csizes AS (SELECT doc_id, count(*) AS n FROM ctoks GROUP BY doc_id),
-         pairs AS (
-           SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS inter
-           FROM btoks a JOIN ctoks b ON a.tok = b.tok
-           GROUP BY 1, 2),
-         sel AS (
-           SELECT ia, ib, inter, sa.n AS na, sb.n AS nb
-           FROM pairs
-           JOIN bsizes sa ON ia = sa.doc_id
-           JOIN csizes sb ON ib = sb.doc_id
-           WHERE inter * 1.0 / sa.n >= 0.9),
-         best AS (
-           SELECT ia, ib, inter, na, nb, row_number() OVER (
-             PARTITION BY ia ORDER BY inter DESC, nb DESC, ib) AS rk
-           FROM sel)
-         SELECT ia AS id_a, ib AS id_b, inter::BIGINT AS inter,
-           na::BIGINT AS size_a, nb::BIGINT AS size_b,
-           floor((inter * 1.0 / na) * 1e6 + 0.5) / 1e6 AS containment
-         FROM best WHERE rk = 1 ORDER BY id_a"""
-    },
-
-    "d23_containment_est" ->
-      // the d6 band chain, shingle-set sizes from the same sh CTE, and
-      // the identical fixed-order IEEE algebra J(na+nb)/((1+J)·min) —
-      // 1.0::DOUBLE dodging the decimal-literal trap
-      s"""WITH $sqlMinhashPairCtes,
-         sz AS (SELECT doc_id, len(shingles)::BIGINT AS nsh FROM sh),
-         j AS (SELECT id_a, id_b, est_jaccard,
-             sa.nsh AS n_a, sb.nsh AS n_b
-           FROM mh_pairs
-           JOIN sz sa ON id_a = sa.doc_id
-           JOIN sz sb ON id_b = sb.doc_id
-           WHERE sa.nsh > 0 AND sb.nsh > 0),
-         c AS (SELECT id_a, id_b, n_a, n_b, est_jaccard,
-             least(1.0::DOUBLE,
-               est_jaccard * (n_a + n_b)::DOUBLE /
-                 ((1.0::DOUBLE + est_jaccard) *
-                   least(n_a, n_b)::DOUBLE)) AS est_containment
-           FROM j)
-         SELECT id_a, id_b, n_a, n_b,
-           floor(est_jaccard * 1e6 + 0.5) / 1e6 AS est_jaccard,
-           floor(est_containment * 1e6 + 0.5) / 1e6 AS est_containment
-         FROM c WHERE est_containment >= 0.8
-         ORDER BY id_a, id_b""",
-
-    "a20_ks_drift" ->
-      // the KS replay: same distribution table, same merged axis (each
-      // compared stratum's counts ∪ the replicated reference counts),
-      // integer cumulative sums, two double divisions at the end — the
-      // sup is attained at identical points in both engines
-      s"""WITH kt AS (SELECT lang AS stratum,
-             len(${sqlTokens("text")})::BIGINT AS v FROM documents
-           WHERE text IS NOT NULL),
-         kcounts AS (SELECT stratum, v, count(*)::BIGINT AS c
-           FROM kt GROUP BY 1, 2),
-         ${sqlKsCtes("k", "kcounts", "en")}
-         SELECT stratum AS lang, n, ${sqlFround("ks_raw", 6)} AS ks
-         FROM kks ORDER BY lang""",
-
-    "a21_drift_remix" ->
-      // the drift→action replay: the same distribution table feeds the
-      // KS chain AND both rate tables (prefix-simulated served rates,
-      // fresh rates); breach = raw ks vs the Smirnov bound with c(α)
-      // as a shared driver-side literal; thr switches per branch
-      s"""WITH dk AS (SELECT lang AS stratum,
-             len(${sqlTokens("text")})::BIGINT AS v FROM documents
-           WHERE text IS NOT NULL),
-         dc AS (SELECT stratum, v, count(*)::BIGINT AS c
-           FROM dk GROUP BY 1, 2),
-         pk AS (SELECT lang AS stratum,
-             len(${sqlTokens("text")})::BIGINT AS v FROM documents
-           WHERE text IS NOT NULL AND doc_id % 4 <> 3),
-         pc AS (SELECT stratum, v, count(*)::BIGINT AS c
-           FROM pk GROUP BY 1, 2),
-         pstats AS (SELECT stratum, sum(v * c)::BIGINT AS t
-           FROM pc GROUP BY 1),
-         psw AS (SELECT stratum, t,
-             floor(sqrt(t::DOUBLE) * 1e6)::BIGINT AS w FROM pstats),
-         ptot AS (SELECT sum(t)::BIGINT AS tot, sum(w)::BIGINT AS s
-           FROM psw),
-         prates AS (SELECT stratum,
-             ${operators.Sampling.sqlMixThr("t", "w", "tot", "s",
-               remixBudgetPct)} AS thr
-           FROM psw CROSS JOIN ptot),
-         fstats AS (SELECT stratum, sum(v * c)::BIGINT AS t
-           FROM dc GROUP BY 1),
-         fsw AS (SELECT stratum, t,
-             floor(sqrt(t::DOUBLE) * 1e6)::BIGINT AS w FROM fstats),
-         ftot AS (SELECT sum(t)::BIGINT AS tot, sum(w)::BIGINT AS s
-           FROM fsw),
-         frates AS (SELECT stratum,
-             ${operators.Sampling.sqlMixThr("t", "w", "tot", "s",
-               remixBudgetPct)} AS thr
-           FROM fsw CROSS JOIN ftot),
-         ${sqlKsCtes("z", "dc", "en")}
-         SELECT f.stratum AS lang,
-           coalesce(k.n, nr.n_r) AS n,
-           ${sqlFround("coalesce(k.ks_raw, 0.0)", 6)} AS ks,
-           coalesce(k.ks_raw, 0.0) >
-             ${operators.Sketches.smirnovC(remixAlpha)} * sqrt(
-               (coalesce(k.n, nr.n_r) + nr.n_r)::DOUBLE /
-               (coalesce(k.n, nr.n_r)::DOUBLE * nr.n_r::DOUBLE))
-             AS breached,
-           CASE WHEN coalesce(k.ks_raw, 0.0) >
-             ${operators.Sketches.smirnovC(remixAlpha)} * sqrt(
-               (coalesce(k.n, nr.n_r) + nr.n_r)::DOUBLE /
-               (coalesce(k.n, nr.n_r)::DOUBLE * nr.n_r::DOUBLE))
-             OR p.thr IS NULL THEN f.thr ELSE p.thr END AS thr
-         FROM frates f
-         LEFT JOIN zks k USING (stratum)
-         CROSS JOIN znr nr
-         LEFT JOIN prates p USING (stratum)
-         ORDER BY lang""",
-
-    "a22_psi_drift" -> {
-      // log2 buckets via bin-string length (exact on both engines),
-      // add-1 smoothing on the shared axis, detlnd terms on the 2^-40
-      // grid — integral-double sums are exact, so psi is order-free
-      val toks = sqlTokens("text")
-      s"""WITH tk AS (SELECT lang AS stratum,
-             len($toks)::BIGINT AS v FROM documents),
-         vb AS (SELECT stratum, length(bin(v)) - 1 AS b
-           FROM tk WHERE v >= 1),
-         sc AS (SELECT stratum, b, count(*)::BIGINT AS c
-           FROM vb GROUP BY 1, 2),
-         st AS (SELECT stratum, sum(c)::BIGINT AS n FROM sc GROUP BY 1),
-         ax AS (SELECT DISTINCT b FROM sc),
-         nb AS (SELECT count(*)::BIGINT AS nb FROM ax),
-         rc AS (SELECT b, c AS cr FROM sc WHERE stratum = 'en'),
-         rn AS (SELECT n AS nr FROM st WHERE stratum = 'en'),
-         pairs AS (SELECT s.stratum, s.n,
-             (coalesce(x.c, 0) + 1)::DOUBLE / (s.n + nb.nb)::DOUBLE AS p,
-             (coalesce(r.cr, 0) + 1)::DOUBLE / (rn.nr + nb.nb)::DOUBLE AS q
-           FROM st s CROSS JOIN ax a
-           LEFT JOIN sc x ON x.stratum = s.stratum AND x.b = a.b
-           LEFT JOIN rc r ON r.b = a.b
-           CROSS JOIN nb CROSS JOIN rn),
-         terms AS (SELECT stratum, n,
-             floor((p - q) * (uln - wln)
-               * ${graft.expressions.DetLn.TermGrid} + 0.5) AS tq
-           FROM (SELECT stratum, n, p, q,
-             ${operators.Classify.sqlDetLnDCols("u", "p")},
-             ${operators.Classify.sqlDetLnDCols("w", "q")}
-           FROM pairs)),
-         psis AS (SELECT stratum, max(n) AS n_docs,
-             floor((sum(tq) / ${graft.expressions.DetLn.TermGrid})
-               * 1e6 + 0.5) / 1e6 AS psi
-           FROM terms GROUP BY stratum)
-         SELECT stratum AS lang, n_docs, psi, psi > 0.2 AS drifted
-         FROM psis ORDER BY lang"""
-    },
-
-    "ta18_boilerplate_scrub" -> {
-      // same synthesized lined text; the keep rule replays with
-      // integer token/stopword counts and the multiplication-form
-      // density test (no division, one IEEE compare per line)
-      def toks(e: String) = sqlTokens(e)
-      val stop = sqlList(TA.enStopwords)
-      val keep = s"len(${toks("l")}) >= 3 AND " +
-        s"len(list_filter(${toks("l")}, t -> list_contains($stop, t)))::DOUBLE " +
-        s">= 0.1 * len(${toks("l")})::DOUBLE"
-      s"""WITH lined AS (SELECT lang,
-             substr(coalesce(text, ''), 1, 120) || chr(10) ||
-             'copyright footer navigation menu links contact' || chr(10) ||
-             'the summary of the row ' || doc_id::VARCHAR || chr(10) ||
-             'nav | nav' AS lt
-           FROM documents),
-         scrub AS (SELECT lang, lt,
-             list_filter(string_split(lt, chr(10)), l -> $keep) AS kl
-           FROM lined),
-         rq AS (SELECT lang, lt, kl,
-             floor((CASE WHEN len(lt) > 0 THEN
-               len(array_to_string(kl, chr(10)))::DOUBLE / len(lt)::DOUBLE
-               END) * ${graft.expressions.DetLn.TermGrid} + 0.5)::BIGINT
-               AS rq
-           FROM scrub)
-         SELECT lang, count(*) AS n_docs,
-           sum(len(string_split(lt, chr(10))))::BIGINT AS n_lines_in,
-           sum(len(kl))::BIGINT AS n_lines_kept,
-           ${sqlFround(
-             s"""sum(rq)::DOUBLE / (${graft.expressions.DetLn.TermGrid}
-             * count(rq)::DOUBLE)""", 6)} AS avg_kept_chars
-         FROM rq GROUP BY lang ORDER BY lang"""
-    },
-
-    "ta20_readability" -> {
-      // the same counts, the same guarded ratios, the same literal
-      // trees (::DOUBLE on each constant — bare decimals are DECIMAL
-      // in DuckDB), the same 6dp floor, and the bucket CASE over the
-      // rounded value.
-      val fre = "floor((206.835::DOUBLE - 1.015::DOUBLE * wps" +
-        " - 84.6::DOUBLE * spw) * 1e6 + 0.5) / 1e6"
-      s"""WITH c AS (SELECT doc_id,
-           len(regexp_extract_all(text, '\\w+'))::BIGINT AS n_words,
-           len(list_filter(string_split_regex(text, '[.!?]+'),
-             x -> trim(x) <> ''))::BIGINT AS n_sents,
-           len(regexp_extract_all(lower(text), '[aeiouy]+'))::BIGINT
-             AS n_syll
-         FROM documents),
-         g AS (SELECT doc_id, n_words, n_sents, n_syll,
-           CASE WHEN n_sents > 0
-             THEN n_words::DOUBLE / n_sents::DOUBLE END AS wps,
-           CASE WHEN n_words > 0
-             THEN n_syll::DOUBLE / n_words::DOUBLE END AS spw
-         FROM c),
-         r AS (SELECT doc_id, n_words, n_sents, n_syll,
-           $fre AS fre,
-           floor((0.39::DOUBLE * wps + 11.8::DOUBLE * spw
-             - 15.59::DOUBLE) * 1e6 + 0.5) / 1e6 AS fk_grade
-         FROM g)
-         SELECT doc_id, n_words, n_sents, n_syll, fre, fk_grade,
-           CASE WHEN fre IS NULL THEN 'unscored'
-             WHEN fre >= 90.0 THEN 'very_easy'
-             WHEN fre >= 60.0 THEN 'standard'
-             WHEN fre >= 30.0 THEN 'difficult'
-             ELSE 'very_difficult' END AS difficulty
-         FROM r ORDER BY doc_id"""
-    },
-
-    "ta21_code_detect" -> {
-      // same injected block, same character-class count, same
-      // whole-token keyword hits, same integer density — `//` is
-      // DuckDB's integer division (operands nonnegative, so flooring
-      // == Spark's truncating div)
-      val blk = " def main ( ) { return 0 ; } import sys ; " +
-        "class foo { var x = 1 ; if ( x ) { x = x + 1 ; } }"
-      s"""WITH d AS (SELECT doc_id,
-           CASE WHEN doc_id % 4 = 0 THEN text || '$blk' ELSE text END
-             AS text
-         FROM documents),
-         m AS (SELECT doc_id, length(text)::BIGINT AS n_chars,
-           len(regexp_extract_all(text,
-             '${TA.codeSymbolPattern}'))::BIGINT AS n_sym,
-           ${sqlHits("text", TA.codeKeywords)}::BIGINT AS kw_hits
-         FROM d),
-         sm AS (SELECT doc_id, n_chars, n_sym, kw_hits,
-           CASE WHEN n_chars > 0 THEN (n_sym * 1000000) // n_chars
-             ELSE 0 END AS sym_micro
-         FROM m)
-         SELECT doc_id, n_chars, n_sym, kw_hits, sym_micro,
-           sym_micro >= 20000 OR kw_hits >= 5 AS is_code
-         FROM sm ORDER BY doc_id"""
-    },
-
-    "ta22_gopher_rules" -> {
-      val toks = sqlTokens("lt")
-      val req = sqlList(TA.gopherRequiredStops)
-      s"""WITH lined AS (SELECT doc_id,
-           CASE WHEN doc_id % 11 = 0
-             THEN '- only' || chr(10) || '- bullets...' || chr(10) ||
-               '- here'
-             ELSE substr(coalesce(text, ''), 1, 200) || chr(10) ||
-               CASE WHEN doc_id % 4 = 0 THEN '- a bullet item'
-                 ELSE 'a plain prose line' END || chr(10) ||
-               CASE WHEN doc_id % 5 = 0 THEN 'to be continued...'
-                 ELSE 'line ' || doc_id::VARCHAR END || chr(10) ||
-               CASE WHEN doc_id % 7 = 0 THEN '# header ###'
-                 ELSE 'the closing line' END
-           END AS lt FROM documents),
-         c AS (SELECT doc_id,
-           len($toks)::BIGINT AS n_words,
-           coalesce(list_sum(list_transform($toks,
-             t -> length(t))), 0)::BIGINT AS sum_word_len,
-           len(list_filter($toks,
-             t -> regexp_matches(t, '[a-z]')))::BIGINT AS n_alpha,
-           len(list_filter($req,
-             w -> list_contains($toks, w)))::BIGINT AS n_req_stops,
-           len(regexp_extract_all(lt,
-             '#|\\.\\.\\.|…'))::BIGINT AS n_symbols,
-           len(string_split(lt, chr(10)))::BIGINT AS n_lines,
-           len(list_filter(string_split(lt, chr(10)), l ->
-             substr(l, 1, 2) = '- ' OR substr(l, 1, 1) = '•'))::BIGINT
-             AS n_bullet,
-           len(list_filter(string_split(lt, chr(10)), l ->
-             regexp_matches(l, '(\\.\\.\\.|…)$$')))::BIGINT
-             AS n_ellipsis_end
-         FROM lined),
-         f AS (SELECT *,
-           n_words < 30 OR n_words > 100000 AS bad_word_count,
-           n_words = 0 OR sum_word_len < 3 * n_words
-             OR sum_word_len > 10 * n_words AS bad_mean_word_len,
-           10 * n_symbols > n_words AS high_symbol_ratio,
-           5 * n_alpha < 4 * n_words AS low_alpha_ratio,
-           n_req_stops < 2 AS few_required_stops,
-           10 * n_bullet > 9 * n_lines AS bullet_heavy,
-           10 * n_ellipsis_end > 3 * n_lines AS ellipsis_heavy
-         FROM c)
-         SELECT doc_id, n_words, sum_word_len, n_alpha, n_req_stops,
-           n_symbols, n_lines, n_bullet, n_ellipsis_end,
-           bad_word_count, bad_mean_word_len, high_symbol_ratio,
-           low_alpha_ratio, few_required_stops, bullet_heavy,
-           ellipsis_heavy,
-           NOT (bad_word_count OR bad_mean_word_len OR
-             high_symbol_ratio OR low_alpha_ratio OR
-             few_required_stops OR bullet_heavy OR ellipsis_heavy)
-             AS keep
-         FROM f ORDER BY doc_id"""
-    },
-
-    "ta24_collocations" -> {
-      val toks = sqlTokens("text")
-      // pmi replayed with the shared detln unroll; the combination
-      // parenthesizes exactly like Spark's left-assoc column chain
-      s"""WITH tok AS (SELECT $toks AS toks FROM documents),
-         uni AS (SELECT unnest(toks) AS w FROM tok),
-         uc AS (SELECT w, count(*)::BIGINT AS cw FROM uni GROUP BY w),
-         bigx AS (SELECT toks, unnest(generate_series(1,
-             len(toks) - 1)) AS i FROM tok WHERE len(toks) >= 2),
-         big AS (SELECT toks[i] AS a, toks[i + 1] AS b FROM bigx),
-         bc AS (SELECT a, b, count(*)::BIGINT AS cab FROM big
-           GROUP BY a, b HAVING count(*) >= 5),
-         nn AS (SELECT count(*)::BIGINT AS nb FROM big),
-         j AS (SELECT bc.a, bc.b, bc.cab, ua.cw AS ca, ub.cw AS cb,
-             nn.nb
-           FROM bc JOIN uc ua ON bc.a = ua.w
-           JOIN uc ub ON bc.b = ub.w CROSS JOIN nn),
-         p AS (SELECT a, b, cab, ca, cb,
-             floor(((paln + pnln) - pcln - pbln) * 1048576.0 + 0.5)
-               ::BIGINT AS pmi_q20
-           FROM (SELECT a, b, cab, ca, cb,
-             ${operators.Classify.sqlDetLnCols("pa", "cab")},
-             ${operators.Classify.sqlDetLnCols("pn", "nb")},
-             ${operators.Classify.sqlDetLnCols("pc", "ca")},
-             ${operators.Classify.sqlDetLnCols("pb", "cb")}
-           FROM j))
-         SELECT a, b, cab, ca, cb, pmi_q20 FROM p
-         ORDER BY pmi_q20 DESC, a, b LIMIT 50"""
-    },
-
-    "ta17_zipf_slope" ->
-      // Replays bucketing (bin-length log2), the ln-space least
-      // squares, and the zero-denominator guard.
-      s"""WITH tok AS (
-           SELECT lang, unnest(${sqlTokens("text")}) AS tok FROM documents),
-         cnts AS (
-           SELECT lang, tok, count(*) AS cnt FROM tok GROUP BY 1, 2),
-         hist AS (
-           SELECT lang, (length(bin(cnt)) - 1)::BIGINT AS b,
-             count(*) AS n_types
-           FROM cnts GROUP BY 1, 2),
-         pts AS (
-           SELECT lang, x, yi, n_types FROM (
-             SELECT lang, b AS x, n_types,
-               ${operators.Classify.sqlDetLnCols("nt", "n_types")},
-               floor(ntln * ${operators.Classify.WeightGrid}
-                 + 0.5)::BIGINT AS yi
-             FROM hist)),
-         agg AS (
-           SELECT lang, count(*) AS n_buckets,
-             sum(n_types)::BIGINT AS n_distinct,
-             count(*)::BIGINT AS n, sum(x)::BIGINT AS sx,
-             sum(yi)::BIGINT AS sy,
-             sum(x * yi)::BIGINT AS sxy, sum(x * x)::BIGINT AS sxx
-           FROM pts GROUP BY lang)
-         SELECT lang, n_buckets, n_distinct,
-           CASE WHEN n * sxx - sx * sx <> 0 THEN
-             ${sqlFround(
-               s"""((n * sxy - sx * sy)::DOUBLE
-               / (n * sxx - sx * sx)::DOUBLE)
-               / ${operators.Classify.WeightGrid}""", 6)}
-           END AS zipf_slope
-         FROM agg ORDER BY lang""",
-
-    "a17_pivot" -> {
-      val langs = Seq("de", "en", "es", "fr", "zh")
-      val cells = langs.flatMap(l => Seq(
-        s"sum(CASE WHEN lang = '$l' THEN 1 ELSE 0 END)::BIGINT AS n_$l",
-        s"sum(CASE WHEN lang = '$l' THEN n_chars ELSE 0 END)::BIGINT AS chars_$l"))
-      s"""SELECT source, ${cells.mkString(", ")}
-         FROM documents GROUP BY source ORDER BY source"""
-    },
-
-    "a18_grouping_sets" ->
-      """SELECT coalesce(lang, 'ALL') AS lang_k,
-           coalesce(source, 'ALL') AS source_k,
-           GROUPING(lang)::BIGINT AS g_lang,
-           GROUPING(source)::BIGINT AS g_source,
-           count(*) AS n, sum(n_chars)::BIGINT AS chars
-         FROM documents GROUP BY CUBE (lang, source)
-         ORDER BY lang_k, source_k""",
-
-    "g7_corpus_health" ->
-      // Replays all four dashboard blocks: the ta2 quality CTEs feed
-      // the drift aggregates; the a15 log-linear bucketing/merge/walk
-      // runs over per-doc token counts partitioned by (lang, day); the
-      // a16 support-pruned counts yield the deterministic (cnt desc,
-      // tok desc) top token; distinct is exact count(DISTINCT).
-      sqlCorpusHealth(""),
-
-    "g7x_corpus_health_hll" ->
-      // g7's exact replay plus the constant within_tol column — the
-      // Spark side computes the boolean from the HLL estimate vs the
-      // same exact distinct, so a sketch-accuracy regression fails the
-      // hash compare (r9 verdict task 2).
-      sqlCorpusHealth(", true AS within_tol"),
-
-    "j1_coverage_join" ->
-      """WITH bl AS (
-           SELECT l_orderkey, sum(l_quantity) AS big_qty
-           FROM lineitem WHERE l_quantity >= 40 GROUP BY 1)
-         SELECT o_orderstatus, count(*) AS n_orders,
-           floor((avg(CASE WHEN c_custkey IS NOT NULL THEN 1.0 ELSE 0.0 END) * 100) * 1e4 + 0.5) / 1e4
-             AS pct_with_customer,
-           floor((avg(CASE WHEN big_qty IS NOT NULL THEN 1.0 ELSE 0.0 END) * 100) * 1e4 + 0.5) / 1e4
-             AS pct_with_big_lines,
-           floor((sum(coalesce(big_qty, 0.0))) * 1e2 + 0.5) / 1e2 AS sum_big_qty
-         FROM orders
-         LEFT JOIN customer ON o_custkey = c_custkey
-         LEFT JOIN bl ON o_orderkey = bl.l_orderkey
-         GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-
-    "d8_stratified_sample" -> {
-      val rateCases = Map("en" -> 0.5, "zh" -> 0.25).toSeq.sortBy(_._1)
-        .map { case (l, r) => s"WHEN lang = '$l' THEN ${Sampling.threshold(r)}" }
-        .mkString(" ")
-      s"""SELECT doc_id, lang FROM documents
-         WHERE ('0x' || substr(md5('s42:' || doc_id::VARCHAR), 1, 7))::BIGINT <
-           (CASE $rateCases ELSE ${Sampling.threshold(0.8)} END)
-         ORDER BY doc_id"""
-    },
-
-    "w4_quality_drift" -> {
-      s"""${sqlQualityCtes()},
-         q AS (
-           SELECT TIMESTAMP '2024-01-01 00:00:00'
-               + s.doc_id * INTERVAL 1 MINUTE AS ts,
-             $sqlQualityExpr AS qv, s.n_tokens AS ntok
-           FROM s)
-         SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start,
-           count(*) AS n_docs,
-           floor(avg(qv) * 100.0 + 0.5) / 100.0 AS avg_quality,
-           floor(avg(ntok * 1.0) * 100.0 + 0.5) / 100.0 AS avg_tokens,
-           floor(avg(CASE WHEN qv < 0.5 THEN 1.0 ELSE 0.0 END) * 100.0 + 0.5)
-             / 100.0 AS low_quality_share
-         FROM q GROUP BY 1 ORDER BY window_start"""
-    },
-
-    "g10_daily_tick" -> {
-      // g8's pipeline prelude (closure + NB gate) feeding the operator
-      // dashboard: per-lang counts, the a21 KS/breach/remix tail with
-      // dc = the LANDED distribution and prates = the full-corpus
-      // "yesterday served" baseline
-      val smir = operators.Sketches.smirnovC(remixAlpha)
-      val breachExpr =
-        s"""coalesce(k.ks_raw, 0.0) > $smir * sqrt(
-           (coalesce(k.n, nr.n_r) + nr.n_r)::DOUBLE /
-           (coalesce(k.n, nr.n_r)::DOUBLE * nr.n_r::DOUBLE))"""
-      s"""WITH RECURSIVE gtdocs AS (SELECT doc_id, text FROM documents),
-         ${sqlMinhashBandCtes("gtdocs", "gt_")},
-         gtcand AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sig AS sa, b.sig AS sb
-           FROM gt_bucketed a JOIN gt_bucketed b
-             ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         gtedges AS (
-           SELECT id_a AS ea, id_b AS eb FROM gtcand
-           WHERE list_sum(list_transform(generate_series(1, 16),
-             i -> CASE WHEN sa[i] = sb[i] THEN 1 ELSE 0 END)) / 16.0
-             >= 0.5),
-         gtsym AS (SELECT ea, eb FROM gtedges
-           UNION SELECT eb AS ea, ea AS eb FROM gtedges),
-         gtreach(id, r) AS (
-           SELECT ea, eb FROM gtsym
-           UNION
-           SELECT t.id, s2.eb FROM gtreach t
-             JOIN gtsym s2 ON t.r = s2.ea),
-         gtcomp AS (SELECT id, min(r) AS mr FROM gtreach GROUP BY id),
-         gtkept AS (
-           SELECT d.doc_id FROM gtdocs d
-           LEFT JOIN gtcomp c ON d.doc_id = c.id
-           WHERE least(coalesce(c.mr, d.doc_id), d.doc_id) = d.doc_id),
-         ${sqlNbModelCtes("gtm_")},
-         ${sqlNbWiCtes("gtm_")},
-         gtdocf AS (SELECT doc_id, f, count(*)::BIGINT AS c
-           FROM gtm_f
-           WHERE doc_id IN (SELECT doc_id FROM gtkept)
-           GROUP BY 1, 2),
-         gtsc AS (SELECT doc_id, ${sqlNbLo("gtm_")} AS lo
-           FROM gtdocf LEFT JOIN gtm_nw USING (f) CROSS JOIN gtm_nd
-           GROUP BY doc_id),
-         gtsc6 AS (SELECT doc_id, ${sqlFround("lo", 6)} AS lo6 FROM gtsc),
-         gtmn AS (SELECT ${sqlFround("avg(lo6)", 6)} AS m6 FROM gtsc6),
-         gtgated AS (SELECT doc_id FROM gtsc6, gtmn WHERE lo6 > m6),
-         land AS (SELECT d.doc_id, d.lang, d.text FROM documents d
-           JOIN gtgated g ON d.doc_id = g.doc_id),
-         keptl AS (SELECT d.doc_id, d.lang FROM documents d
-           JOIN gtkept g ON d.doc_id = g.doc_id),
-         nin AS (SELECT lang, count(*)::BIGINT AS n_in
-           FROM documents GROUP BY 1),
-         nk AS (SELECT lang, count(*)::BIGINT AS n_kept
-           FROM keptl GROUP BY 1),
-         nl AS (SELECT lang, count(*)::BIGINT AS n_landed
-           FROM land GROUP BY 1),
-         pk AS (SELECT lang AS stratum,
-             len(${sqlTokens("text")})::BIGINT AS v
-           FROM documents WHERE text IS NOT NULL),
-         pc AS (SELECT stratum, v, count(*)::BIGINT AS c
-           FROM pk GROUP BY 1, 2),
-         pstats AS (SELECT stratum, sum(v * c)::BIGINT AS t
-           FROM pc GROUP BY 1),
-         psw AS (SELECT stratum, t,
-             floor(sqrt(t::DOUBLE) * 1e6)::BIGINT AS w FROM pstats),
-         ptot AS (SELECT sum(t)::BIGINT AS tot, sum(w)::BIGINT AS s
-           FROM psw),
-         prates AS (SELECT stratum,
-             ${operators.Sampling.sqlMixThr("t", "w", "tot", "s",
-               remixBudgetPct)} AS thr
-           FROM psw CROSS JOIN ptot),
-         dk AS (SELECT lang AS stratum,
-             len(${sqlTokens("text")})::BIGINT AS v
-           FROM land WHERE text IS NOT NULL),
-         dc AS (SELECT stratum, v, count(*)::BIGINT AS c
-           FROM dk GROUP BY 1, 2),
-         fstats AS (SELECT stratum, sum(v * c)::BIGINT AS t
-           FROM dc GROUP BY 1),
-         fsw AS (SELECT stratum, t,
-             floor(sqrt(t::DOUBLE) * 1e6)::BIGINT AS w FROM fstats),
-         ftot AS (SELECT sum(t)::BIGINT AS tot, sum(w)::BIGINT AS s
-           FROM fsw),
-         frates AS (SELECT stratum,
-             ${operators.Sampling.sqlMixThr("t", "w", "tot", "s",
-               remixBudgetPct)} AS thr
-           FROM fsw CROSS JOIN ftot),
-         ${sqlKsCtes("z", "dc", "en")},
-         drift AS (
-           SELECT f.stratum AS lang,
-             ${sqlFround("coalesce(k.ks_raw, 0.0)", 6)} AS ks,
-             $breachExpr AS breached,
-             CASE WHEN $breachExpr OR p.thr IS NULL
-               THEN f.thr ELSE p.thr END AS thr
-           FROM frates f
-           LEFT JOIN zks k USING (stratum)
-           CROSS JOIN znr nr
-           LEFT JOIN prates p USING (stratum))
-         SELECT n.lang, n.n_in,
-           n.n_in - coalesce(k2.n_kept, 0) AS n_dedup_dropped,
-           coalesce(k2.n_kept, 0) - coalesce(l2.n_landed, 0)
-             AS n_gate_dropped,
-           coalesce(l2.n_landed, 0) AS n_landed,
-           dr.ks, dr.breached, dr.thr
-         FROM nin n
-         LEFT JOIN nk k2 USING (lang)
-         LEFT JOIN nl l2 USING (lang)
-         LEFT JOIN drift dr USING (lang)
-         ORDER BY n.lang"""
-    },
-
-    "g11_restated_day" -> {
-      // land + single-day restatement replayed relationally (the s16
-      // shape), then the a20 KS chain per day vs the FROZEN whole-feed
-      // reference and the a21 breach rule with c(α) as a shared
-      // driver-side literal; v discretized exactly like
-      // Sketches.distributionCounts at scale 0
-      val smir = operators.Sketches.smirnovC(remixAlpha)
-      s"""WITH ev AS (
-           SELECT (ts::TIMESTAMP)::DATE AS day, event_type, value, user_id
-           FROM events),
-         d0 AS (SELECT min(day) AS day FROM ev),
-         store AS (
-           SELECT * FROM ev WHERE day <> (SELECT day FROM d0)
-           UNION ALL
-           SELECT * FROM ev
-           WHERE day = (SELECT day FROM d0) AND user_id % 2 = 0),
-         roll AS (
-           SELECT day, event_type, count(*)::BIGINT AS n,
-             ${sqlFround("sum(value)", 2)} AS sum_v
-           FROM store GROUP BY 1, 2),
-         dc AS (
-           SELECT day::VARCHAR AS stratum,
-             floor(value * 1.0 + 0.5)::BIGINT AS v, count(*)::BIGINT AS c
-           FROM store WHERE value IS NOT NULL GROUP BY 1, 2
-           UNION ALL
-           SELECT '__ref', floor(value * 1.0 + 0.5)::BIGINT AS v,
-             count(*)::BIGINT AS c
-           FROM ev WHERE value IS NOT NULL GROUP BY 2),
-         ${sqlKsCtes("g", "dc", "__ref")},
-         drift AS (
-           SELECT k.stratum, ${sqlFround("k.ks_raw", 6)} AS ks,
-             k.ks_raw > $smir * sqrt((k.n + nr.n_r)::DOUBLE /
-               (k.n::DOUBLE * nr.n_r::DOUBLE)) AS breached
-           FROM gks k CROSS JOIN gnr nr)
-         SELECT r.day::VARCHAR AS day, r.event_type, r.n, r.sum_v,
-           d.ks, d.breached
-         FROM roll r JOIN drift d ON r.day::VARCHAR = d.stratum
-         ORDER BY day, event_type"""
-    },
-
-    "g8_ingest_corpus" -> {
-      // The streaming ingest path's batch oracle: the d14/g4 closure
-      // over ALL documents (near-dup keep-one), the tq1 model counts
-      // scoring every kept doc (train split fits, everything scores —
-      // matching the literal-weight serving gate), the w4 drift tail
-      // over rounded-log-odds survivors.
-      val prelude =
-        s"""RECURSIVE g8docs AS (SELECT doc_id, text FROM documents),
-           ${sqlMinhashBandCtes("g8docs", "g8_")},
-           g8cand AS (
-             SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.sig AS sa, b.sig AS sb
-             FROM g8_bucketed a JOIN g8_bucketed b
-               ON a.bk = b.bk AND a.doc_id < b.doc_id),
-           g8edges AS (
-             SELECT id_a AS ea, id_b AS eb FROM g8cand
-             WHERE list_sum(list_transform(generate_series(1, 16),
-               i -> CASE WHEN sa[i] = sb[i] THEN 1 ELSE 0 END)) / 16.0
-               >= 0.5),
-           g8sym AS (SELECT ea, eb FROM g8edges
-             UNION SELECT eb AS ea, ea AS eb FROM g8edges),
-           g8reach(id, r) AS (
-             SELECT ea, eb FROM g8sym
-             UNION
-             SELECT t.id, s2.eb FROM g8reach t
-               JOIN g8sym s2 ON t.r = s2.ea),
-           g8comp AS (SELECT id, min(r) AS mr FROM g8reach GROUP BY id),
-           g8kept AS (
-             SELECT d.doc_id FROM g8docs d
-             LEFT JOIN g8comp c ON d.doc_id = c.id
-             WHERE least(coalesce(c.mr, d.doc_id), d.doc_id) = d.doc_id),
-           ${sqlNbModelCtes("g8m_")},
-           ${sqlNbWiCtes("g8m_")},
-           g8docf AS (SELECT doc_id, f, count(*)::BIGINT AS c
-             FROM g8m_f
-             WHERE doc_id IN (SELECT doc_id FROM g8kept)
-             GROUP BY 1, 2),
-           g8sc AS (SELECT doc_id, ${sqlNbLo("g8m_")} AS lo
-             FROM g8docf LEFT JOIN g8m_nw USING (f) CROSS JOIN g8m_nd
-             GROUP BY doc_id),
-           g8sc6 AS (SELECT doc_id, ${sqlFround("lo", 6)} AS lo6
-             FROM g8sc),
-           g8m AS (SELECT ${sqlFround("avg(lo6)", 6)} AS m6 FROM g8sc6),
-           g8gated AS (SELECT doc_id FROM g8sc6, g8m WHERE lo6 > m6),
-           """
-      s"""${sqlQualityCtes(prelude)},
-         g8q AS (
-           SELECT TIMESTAMP '2024-01-01 00:00:00'
-               + s.doc_id * INTERVAL 1 MINUTE AS ts,
-             $sqlQualityExpr AS qv, s.n_tokens AS ntok
-           FROM s WHERE s.doc_id IN (SELECT doc_id FROM g8gated))
-         SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start,
-           count(*) AS n_docs,
-           floor(avg(qv) * 100.0 + 0.5) / 100.0 AS avg_quality,
-           floor(avg(ntok * 1.0) * 100.0 + 0.5) / 100.0 AS avg_tokens,
-           floor(avg(CASE WHEN qv < 0.5 THEN 1.0 ELSE 0.0 END) * 100.0 + 0.5)
-             / 100.0 AS low_quality_share
-         FROM g8q GROUP BY 1 ORDER BY window_start"""
-    },
-
-    "d13_line_dedup" -> {
-      // same doc_id-synthesized lined text; bp detection counts
-      // per-doc-distinct non-blank lines, strips by exact line match
-      s"""WITH lined AS (
-           SELECT doc_id,
-             substr(text, 1, 40) || chr(10) || 'all rights reserved'
-             || chr(10) || 'footer ' || (doc_id % 3)::VARCHAR || chr(10)
-             || CASE WHEN doc_id % 2 = 0 THEN 'subscribe to our newsletter'
-                  ELSE 'unique tail ' || doc_id::VARCHAR END || chr(10)
-             AS text
-           FROM documents),
-         per AS (
-           SELECT doc_id, unnest(list_distinct(string_split(text, chr(10))))
-             AS line
-           FROM lined),
-         bp AS (
-           SELECT line FROM per WHERE trim(line) <> ''
-           GROUP BY line HAVING count(*) >= 50
-           ORDER BY count(*) DESC, line LIMIT 100),
-         bpl AS (SELECT coalesce(list(line), CAST([] AS VARCHAR[])) AS bls
-           FROM bp),
-         kept AS (
-           SELECT doc_id,
-             len(string_split(text, chr(10)))::INT AS n_lines,
-             list_filter(string_split(text, chr(10)),
-               l -> NOT list_contains(bls, l)) AS ks
-           FROM lined, bpl)
-         SELECT doc_id, n_lines, (n_lines - len(ks))::INT AS n_removed,
-           md5(coalesce(array_to_string(ks, chr(10)), '')) AS clean_md5
-         FROM kept ORDER BY doc_id"""
-    },
-
-    "w5_gated_drift" -> {
-      s"""${sqlQualityCtes()},
-         $sqlDecontamCtes,
-         kept AS (
-           SELECT s.doc_id, $sqlQualityExpr AS qv, s.n_tokens AS ntok
-           FROM s
-           WHERE s.doc_id >= 50
-             AND s.doc_id NOT IN (SELECT doc_id FROM bad)
-             AND $sqlQualityExpr >= 0.55),
-         q AS (
-           SELECT TIMESTAMP '2024-01-01 00:00:00'
-               + doc_id * INTERVAL 1 MINUTE AS ts, qv, ntok
-           FROM kept)
-         SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start,
-           count(*) AS n_docs,
-           floor(avg(qv) * 100.0 + 0.5) / 100.0 AS avg_quality,
-           floor(avg(ntok * 1.0) * 100.0 + 0.5) / 100.0 AS avg_tokens,
-           floor(avg(CASE WHEN qv < 0.5 THEN 1.0 ELSE 0.0 END) * 100.0 + 0.5)
-             / 100.0 AS low_quality_share
-         FROM q GROUP BY 1 ORDER BY window_start"""
-    },
-
-    "d12_repeated_grams" -> {
-      val toks = sqlTokens("text")
-      s"""WITH g AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, len($toks) - 7),
-             i -> array_to_string(list_slice($toks, i, i + 7), ' ')))) AS gram
-           FROM documents),
-         c AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-         m AS (SELECT g.doc_id, count(*) AS n_grams, count(c.gram) AS n_shared
-               FROM g LEFT JOIN c ON g.gram = c.gram GROUP BY g.doc_id)
-         SELECT d.doc_id, coalesce(m.n_grams, 0) AS n_grams,
-           coalesce(m.n_shared, 0) AS n_shared,
-           floor((CASE WHEN coalesce(m.n_grams, 0) > 0
-             THEN coalesce(m.n_shared, 0) * 1.0 / m.n_grams
-             ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS shared_frac
-         FROM documents d LEFT JOIN m ON d.doc_id = m.doc_id
-         ORDER BY d.doc_id"""
-    },
-
-    "tc1_decontamination" -> {
-      val toks = sqlTokens("text")
-      // strict n-grams: a doc with < 5 tokens has none (generate_series
-      // with stop < start is empty in DuckDB, mirroring the Spark guard)
-      s"""WITH g AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, len($toks) - 4),
-             i -> array_to_string(list_slice($toks, i, i + 4), ' '))) AS grams
-           FROM documents),
-         ev AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id < 50),
-         tr AS (SELECT doc_id, unnest(grams) AS gram FROM g WHERE doc_id >= 50),
-         m AS (SELECT tr.doc_id, count(*) AS n_grams, count(ev.gram) AS n_matched
-               FROM tr LEFT JOIN ev ON tr.gram = ev.gram GROUP BY tr.doc_id)
-         SELECT g.doc_id, coalesce(m.n_grams, 0) AS n_grams,
-           coalesce(m.n_matched, 0) AS n_matched,
-           floor((CASE WHEN coalesce(m.n_grams, 0) > 0
-             THEN coalesce(m.n_matched, 0) * 1.0 / m.n_grams
-             ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS contamination
-         FROM g LEFT JOIN m ON g.doc_id = m.doc_id
-         WHERE g.doc_id >= 50 ORDER BY g.doc_id"""
-    },
-
-    "x1_corpus_mix" -> {
-      val toks = sqlTokens("text")
-      s"""WITH tok AS (
-           SELECT doc_id, lang, len($toks)::BIGINT AS ntok FROM documents),
-         st AS (SELECT lang, sum(ntok)::BIGINT AS t FROM tok GROUP BY lang),
-         w AS (SELECT lang, t, floor(sqrt(t) * 1e6)::BIGINT AS wgt FROM st),
-         tot AS (SELECT sum(t)::BIGINT AS tot_t, sum(wgt)::BIGINT AS s FROM w),
-         r AS (SELECT lang,
-           ${Sampling.sqlMixThr("t", "wgt", "tot_t", "s", 50)} AS thr
-           FROM w, tot)
-         SELECT d.doc_id, d.lang FROM documents d JOIN r USING (lang)
-         WHERE ('0x' || substr(md5('mix7:' || d.doc_id::VARCHAR), 1, 7))::BIGINT < r.thr
-         ORDER BY d.doc_id"""
-    },
-
-    "x2_epoch_shuffle" ->
-      s"""WITH h AS (SELECT doc_id,
-           ('0x' || substr(md5('ep:1:' || doc_id::VARCHAR), 1, 7))::BIGINT AS hh
-         FROM documents),
-         s AS (SELECT doc_id, hh, (hh * 8) // ${1L << 28} AS shard FROM h)
-         SELECT doc_id, shard,
-           (row_number() OVER (PARTITION BY shard ORDER BY hh, doc_id) - 1)::BIGINT
-             AS pos
-         FROM s ORDER BY doc_id""",
-
-    "x4_cluster_split" ->
-      // d14's recursive-CTE closure for the cluster labels, then the
-      // shared cumulative-threshold CASE over the label hash
-      s"""WITH RECURSIVE $sqlMinhashPairCtes,
-         edges AS (SELECT id_a AS ea, id_b AS eb FROM mh_pairs
-           WHERE est_jaccard >= 0.5),
-         sym AS (SELECT ea, eb FROM edges
-           UNION SELECT eb AS ea, ea AS eb FROM edges),
-         reach(id, r) AS (
-           SELECT ea, eb FROM sym
-           UNION
-           SELECT t.id, s.eb FROM reach t JOIN sym s ON t.r = s.ea),
-         comp AS (SELECT id, min(r) AS mr FROM reach GROUP BY id),
-         lab AS (SELECT d.doc_id,
-             least(coalesce(c.mr, d.doc_id), d.doc_id) AS cluster_id
-           FROM documents d LEFT JOIN comp c ON d.doc_id = c.id)
-         SELECT doc_id, cluster_id,
-           ${Sampling.sqlClusterSplit("cluster_id::VARCHAR", x4Cuts, x4Salt)}
-             AS split
-         FROM lab ORDER BY doc_id""",
-
-    "x11_softdedup_resample" ->
-      // d14's closure for the cluster labels + size table, then the
-      // shared integer Efraimidis–Spirakis key with weight 1/csize —
-      // 1.0::DOUBLE dodges the DuckDB decimal-literal trap, so both
-      // engines run the identical pair of IEEE divides before the
-      // floor onto the integer grid
-      s"""WITH RECURSIVE $sqlMinhashPairCtes,
-         edges AS (SELECT id_a AS ea, id_b AS eb FROM mh_pairs
-           WHERE est_jaccard >= 0.5),
-         sym AS (SELECT ea, eb FROM edges
-           UNION SELECT eb AS ea, ea AS eb FROM edges),
-         reach(id, r) AS (
-           SELECT ea, eb FROM sym
-           UNION
-           SELECT t.id, s.eb FROM reach t JOIN sym s ON t.r = s.ea),
-         comp AS (SELECT id, min(r) AS mr FROM reach GROUP BY id),
-         lab AS (SELECT d.doc_id,
-             least(coalesce(c.mr, d.doc_id), d.doc_id) AS cluster_id
-           FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-         sz AS (SELECT cluster_id, count(*)::BIGINT AS cluster_size
-           FROM lab GROUP BY cluster_id),
-         ls AS (SELECT lab.doc_id, lab.cluster_id, sz.cluster_size
-           FROM lab JOIN sz USING (cluster_id)),
-         sel AS (SELECT doc_id, cluster_id, cluster_size,
-             ${operators.Sampling.sqlSelKeyCols("doc_id",
-               "(1.0::DOUBLE / cluster_size::DOUBLE)", "sd12")}
-           FROM ls),
-         top AS (SELECT doc_id, cluster_id, cluster_size, sel_key
-           FROM sel ORDER BY sel_key, doc_id LIMIT 200)
-         SELECT doc_id, cluster_id, cluster_size, sel_key
-         FROM top ORDER BY doc_id""",
-
-    "x14_fim_split" -> {
-      // list_slice is INCLUSIVE-end (vs Spark's slice(start, LENGTH)) —
-      // bounds mapped accordingly; `//`/% on non-negative BIGINTs
-      // match div/pmod
-      val toks = sqlTokens("text")
-      s"""WITH t AS (SELECT doc_id, $toks AS toks,
-           len($toks)::BIGINT AS n FROM documents),
-         f AS (SELECT doc_id, toks, n, n >= 4 AS is_fim,
-             CASE WHEN n >= 4 THEN (n // 4) + doc_id % 3
-               ELSE 0 END AS ms,
-             CASE WHEN n >= 4 THEN greatest(1, n // 5)
-               ELSE 0 END AS ml
-           FROM t)
-         SELECT doc_id, n AS n_tokens, is_fim,
-           ms AS m_start, ml AS m_len,
-           CASE WHEN is_fim THEN
-             '<PRE> ' ||
-             array_to_string(list_slice(toks, 1, ms), ' ') ||
-             ' <SUF> ' ||
-             array_to_string(list_slice(toks, ms + ml + 1, n), ' ') ||
-             ' <MID> ' ||
-             array_to_string(list_slice(toks, ms + 1, ms + ml), ' ')
-           ELSE array_to_string(toks, ' ') END AS psm
-         FROM f ORDER BY doc_id"""
-    },
-
-    "x15_sequence_pack" ->
-      // the shared packed-starts prefix sum over ONE global stream,
-      // plus the span columns; `//`/% on non-negative BIGINTs match
-      // div/pmod; zero-token docs place nothing (filtered both sides)
-      s"""WITH ${sqlPackedStarts("p")}
-         SELECT doc_id, n_tok, start_tok,
-           start_tok // 512 AS seq_first,
-           (start_tok + n_tok - 1) // 512 AS seq_last,
-           start_tok % 512 AS off_in_seq,
-           (start_tok + n_tok - 1) // 512 > start_tok // 512 AS crosses
-         FROM p ORDER BY doc_id""",
-
-    "x16_pack_fragmentation" ->
-      // per-sequence doc counts via generate_series over each doc's
-      // intersected sequence ids, rolled to the bounded histogram
-      s"""WITH ${sqlPackedStarts("p")},
-         e AS (
-           SELECT unnest(generate_series(start_tok // 512,
-             (start_tok + n_tok - 1) // 512))::BIGINT AS seq_id FROM p),
-         s AS (SELECT seq_id, count(*)::BIGINT AS n_docs
-           FROM e GROUP BY seq_id)
-         SELECT n_docs, count(*)::BIGINT AS n_seqs
-         FROM s GROUP BY n_docs ORDER BY n_docs""",
-
-    "x17_cusum_alarm" -> sqlCusumAlarm,
-
-    // incremental == batch: the tick's CountLog fold must reproduce
-    // the from-scratch chain over raw events bit-for-bit
-    "g16_cusum_tick" -> sqlCusumAlarm,
-
-    "g15_pack_tick" ->
-      // two shared packed-starts prefix sums: history, then the delta
-      // day offset by the history total — the relational twin of
-      // land -> high-water append -> read-back
-      s"""WITH ${sqlPackedStarts("h", "doc_id % 17 <> 0")},
-         ${sqlPackedStarts("dl0", "doc_id % 17 = 0")},
-         ht AS (SELECT coalesce(sum(n_tok), 0)::BIGINT AS tot FROM h),
-         dl AS (
-           SELECT doc_id, n_tok,
-             (SELECT tot FROM ht) + start_tok AS start_tok
-           FROM dl0),
-         u AS (
-           SELECT 0::BIGINT AS seg, * FROM h
-           UNION ALL SELECT 1::BIGINT AS seg, * FROM dl)
-         SELECT seg, doc_id, n_tok, start_tok,
-           start_tok // 512 AS seq_first,
-           start_tok % 512 AS off_in_seq
-         FROM u ORDER BY doc_id""",
-
-    "x13_span_corruption" -> {
-      // the same positional span rule, sentinel numbering via
-      // list_position, concat_ws NULL-skipping for the truncated last
-      // span — strings must match byte-for-byte
-      val toks = sqlTokens("text")
-      s"""WITH tok AS (SELECT doc_id, $toks AS toks,
-           len($toks)::BIGINT AS n FROM documents),
-         f AS (SELECT doc_id, toks, n,
-             list_filter(generate_series(0, n - 1),
-               i -> (i + doc_id) % 13 = 0) AS ss
-           FROM tok WHERE n >= 1)
-         SELECT doc_id, n AS n_tokens, len(ss)::BIGINT AS n_spans,
-           len(list_filter(generate_series(0, n - 1), i ->
-             list_contains(ss, i) OR list_contains(ss, i - 1)))::BIGINT
-             AS n_masked,
-           coalesce(array_to_string(list_filter(
-             list_transform(generate_series(0, n - 1), i ->
-               CASE WHEN list_contains(ss, i)
-                 THEN '<extra_id_' ||
-                   (list_position(ss, i) - 1)::VARCHAR || '>'
-               WHEN list_contains(ss, i - 1) THEN NULL
-               ELSE toks[i + 1] END),
-             x -> x IS NOT NULL), ' '), '') AS corrupted,
-           coalesce(array_to_string(list_transform(ss, i ->
-             concat_ws(' ',
-               '<extra_id_' || (list_position(ss, i) - 1)::VARCHAR
-                 || '>',
-               toks[i + 1],
-               CASE WHEN i + 1 < n THEN toks[i + 2] END)), ' '), '')
-             AS targets
-         FROM f ORDER BY doc_id"""
-    },
-
-    "x3_curriculum" -> {
-      // Replays the phase census (strictly-greater cumulative count ×
-      // phases div total), the cur:1-salted 28-bit hash, the contiguous
-      // shard ranges, and the per-(phase, shard) dense rank. Both `div`s
-      // see nonnegative operands, so DuckDB's flooring `//` matches
-      // Spark's truncating `div`.
-      val toks = sqlTokens("text")
-      s"""WITH d AS (SELECT doc_id AS id,
-           -(len($toks)::BIGINT // 10) AS s FROM documents),
-         cen AS (SELECT s, count(*)::BIGINT AS n FROM d GROUP BY s),
-         cum AS (SELECT s, coalesce(sum(n) OVER (ORDER BY s DESC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-             AS cum FROM cen),
-         ph AS (SELECT s, (cum * 4) // (SELECT count(*) FROM d) AS phase
-           FROM cum),
-         h AS (SELECT id, d.s, phase,
-           ('0x' || substr(md5('cur:1:' || id::VARCHAR), 1, 7))::BIGINT AS hh
-           FROM d JOIN ph ON d.s = ph.s),
-         sh AS (SELECT id, s, phase, hh, (hh * 8) // ${1L << 28} AS shard
-           FROM h)
-         SELECT id, s AS score, phase, shard,
-           (row_number() OVER (PARTITION BY phase, shard
-             ORDER BY hh, id) - 1)::BIGINT AS pos
-         FROM sh ORDER BY id"""
-    },
-
-    "x6_curriculum_sketch" -> {
-      // x3's replay with the census moved to log-linear bucket floors
-      // (the a15 bucketing): strictly-higher-BUCKET cumulative count ×
-      // phases div total; hash/shard/rank identical to x3.
-      val toks = sqlTokens("text")
-      s"""WITH d AS (SELECT doc_id AS id,
-           greatest(0, 200 - (len($toks)::BIGINT // 10)) AS s
-           FROM documents),
-         b AS (SELECT id, s,
-           (s >> greatest(length(bin(s)) - 6, 0))
-             << greatest(length(bin(s)) - 6, 0) AS lo FROM d),
-         cen AS (SELECT lo, count(*)::BIGINT AS n FROM b GROUP BY lo),
-         cum AS (SELECT lo, coalesce(sum(n) OVER (ORDER BY lo DESC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-             AS cum FROM cen),
-         ph AS (SELECT lo, (cum * 4) // (SELECT count(*) FROM d) AS phase
-           FROM cum),
-         h AS (SELECT id, b.s, phase,
-           ('0x' || substr(md5('cur:1:' || id::VARCHAR), 1, 7))::BIGINT AS hh
-           FROM b JOIN ph ON b.lo = ph.lo),
-         sh AS (SELECT id, s, phase, hh, (hh * 8) // ${1L << 28} AS shard
-           FROM h)
-         SELECT id, s AS score, phase, shard,
-           (row_number() OVER (PARTITION BY phase, shard
-             ORDER BY hh, id) - 1)::BIGINT AS pos
-         FROM sh ORDER BY id"""
-    },
-
-    "d9_incremental_dedup" -> {
-      def keep(salt: String, rate: Double) =
-        s"('0x' || substr(md5('$salt:' || doc_id::VARCHAR), 1, 7))::BIGINT" +
-          s" < ${Sampling.threshold(rate)}"
-      s"""WITH corpus AS (SELECT doc_id FROM documents WHERE ${keep("corp", 0.6)}),
-           batch AS (SELECT doc_id, lang FROM documents WHERE ${keep("newb", 0.5)})
-         SELECT doc_id, lang FROM batch b
-         WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.doc_id = b.doc_id)
-         ORDER BY doc_id"""
-    },
-
-    "g12_vector_tick" -> {
-      // the combined doc+vector tick replayed relationally: hash-split
-      // corpus/batch, content-key anti-join (the bloom path is exactly
-      // this for any fpp), substance gate, mock-hash embeds, centroid
-      // assignment = the committed index (save + exactly-one append),
-      // frozen-centroid probe vs exact brute cosine, integer-sum mean
-      // recall
-      val keep = s"('0x' || substr(md5('g12c:' || doc_id::VARCHAR), 1, 7))" +
-        s"::BIGINT < ${Sampling.threshold(0.6)}"
-      s"""WITH corpus AS (SELECT doc_id, lang, text,
-             md5(lower(trim(substr(text, 1, 20)))) AS ck
-           FROM documents WHERE $keep),
-         batch AS (SELECT doc_id, lang, text,
-             md5(lower(trim(substr(text, 1, 20)))) AS ck
-           FROM documents WHERE NOT ($keep)),
-         dd AS (SELECT doc_id, lang, text FROM batch b
-           WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.ck = b.ck)),
-         landed AS (SELECT doc_id, lang, text FROM dd
-           WHERE len(${sqlTokens("text")}) >= 10),
-         cemb AS (SELECT doc_id, ${sqlMockEmbedding("text", 8)} AS v
-           FROM corpus),
-         lemb AS (SELECT doc_id, ${sqlMockEmbedding("text", 8)} AS v
-           FROM landed),
-         cents AS (SELECT doc_id AS cid, v AS cv FROM cemb
-           ORDER BY doc_id LIMIT 4),
-         allemb AS (SELECT doc_id, v FROM cemb
-           UNION ALL SELECT doc_id, v FROM lemb),
-         assign AS (
-           SELECT doc_id, v, cid FROM (
-             SELECT a.doc_id, a.v, c.cid, row_number() OVER (
-               PARTITION BY a.doc_id
-               ORDER BY ${sqlCosine("a.v", "c.cv", 8)} DESC, c.cid) AS rn
-             FROM allemb a, cents c) WHERE rn = 1),
-         q AS (SELECT doc_id AS query_id, v AS qv FROM lemb
-           ORDER BY doc_id LIMIT 5),
-         probes AS (
-           SELECT query_id, qv, cid FROM (
-             SELECT query_id, qv, cid, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine("qv", "cv", 8)} DESC, cid) AS rn
-             FROM q, cents) WHERE rn <= 2),
-         approx AS (
-           SELECT query_id, doc_id FROM (
-             SELECT query_id, doc_id, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine("v", "qv", 8)} DESC, doc_id) AS rank
-             FROM probes JOIN assign USING (cid)) WHERE rank <= 5),
-         exact AS (
-           SELECT query_id, doc_id FROM (
-             SELECT query_id, a.doc_id, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ${sqlCosine("a.v", "q.qv", 8)} DESC, a.doc_id)
-                 AS rank
-             FROM allemb a, q) WHERE rank <= 5),
-         rec AS (
-           SELECT e.query_id, count(*)::BIGINT AS n_exact,
-             count(a.doc_id)::BIGINT AS n_hit
-           FROM exact e LEFT JOIN approx a USING (query_id, doc_id)
-           GROUP BY e.query_id),
-         tick AS (
-           SELECT (SELECT count(*) FROM allemb)::BIGINT AS n_indexed,
-             CASE WHEN sum(n_exact) > 0 THEN
-               ${sqlFround("sum(n_hit)::DOUBLE / sum(n_exact)::DOUBLE", 6)}
-             ELSE 1.0 END AS mean_recall
-           FROM rec),
-         nin AS (SELECT lang, count(*)::BIGINT AS n_in FROM batch
-           GROUP BY 1),
-         ndd AS (SELECT lang, count(*)::BIGINT AS n_dd FROM dd GROUP BY 1),
-         nld AS (SELECT lang, count(*)::BIGINT AS n_landed FROM landed
-           GROUP BY 1)
-         SELECT i.lang, i.n_in,
-           i.n_in - coalesce(d.n_dd, 0) AS n_dedup_dropped,
-           coalesce(d.n_dd, 0) - coalesce(l.n_landed, 0) AS n_gate_dropped,
-           coalesce(l.n_landed, 0) AS n_landed,
-           t.n_indexed, t.mean_recall
-         FROM nin i LEFT JOIN ndd d USING (lang)
-           LEFT JOIN nld l USING (lang) CROSS JOIN tick t
-         ORDER BY i.lang"""
-    },
-
-    "g13_decontam_tick" -> {
-      // both contamination probes replayed relationally (the tc1
-      // string-gram twin of the Spark hash-gram join), last-wins
-      // attribution (v2 overrides v1 per doc — the upsert), then the
-      // per-(eval_v, lang) rollup; if the poisoned replay batch ever
-      // landed, every v2 row would vanish and this replay would not
-      // match
-      val toks = sqlTokens("text")
-      s"""WITH g AS (SELECT doc_id, lang, list_distinct(list_transform(
-             generate_series(1, len($toks) - 4),
-             i -> array_to_string(list_slice($toks, i, i + 4), ' ')))
-             AS grams
-           FROM documents),
-         corp AS (SELECT doc_id, lang, grams FROM g WHERE doc_id >= 100),
-         ev1 AS (SELECT DISTINCT unnest(grams) AS gram FROM g
-           WHERE doc_id < 50),
-         e2x AS (SELECT array_to_string(list_slice($toks, 1, 20), ' ')
-             AS text
-           FROM documents WHERE doc_id >= 100 AND doc_id % 61 = 0),
-         g2 AS (SELECT list_distinct(list_transform(
-             generate_series(1, len($toks) - 4),
-             i -> array_to_string(list_slice($toks, i, i + 4), ' ')))
-             AS grams
-           FROM e2x),
-         ev2 AS (SELECT DISTINCT unnest(grams) AS gram FROM g2),
-         ct AS (SELECT doc_id, unnest(grams) AS gram FROM corp),
-         m1 AS (SELECT ct.doc_id, count(e.gram)::BIGINT AS n_matched
-           FROM ct LEFT JOIN ev1 e ON ct.gram = e.gram
-           GROUP BY ct.doc_id HAVING count(e.gram) > 0),
-         m2 AS (SELECT ct.doc_id, count(e.gram)::BIGINT AS n_matched
-           FROM ct LEFT JOIN ev2 e ON ct.gram = e.gram
-           GROUP BY ct.doc_id HAVING count(e.gram) > 0),
-         comb AS (
-           SELECT doc_id, n_matched, 2::BIGINT AS eval_v FROM m2
-           UNION ALL
-           SELECT doc_id, n_matched, 1::BIGINT AS eval_v FROM m1
-           WHERE doc_id NOT IN (SELECT doc_id FROM m2))
-         SELECT eval_v, c.lang, count(*)::BIGINT AS n_docs,
-           sum(n_matched)::BIGINT AS sum_matched
-         FROM comb JOIN corp c USING (doc_id)
-         GROUP BY 1, 2 ORDER BY 1, 2"""
-    },
-
-    "g14_takedown_tick" ->
-      // the c9 closure chain with the g14 notice sample; n_after is
-      // the independent relational ground truth n_before − removed —
-      // equality proves the CDC apply, the poisoned-replay no-op and
-      // the store read-back all land exactly there
-      s"""WITH RECURSIVE $sqlMinhashPairCtes,
-         edges AS (SELECT id_a AS ea, id_b AS eb FROM mh_pairs
-           WHERE est_jaccard >= 0.5),
-         sym AS (SELECT ea, eb FROM edges
-           UNION SELECT eb AS ea, ea AS eb FROM edges),
-         reach(id, r) AS (
-           SELECT ea, eb FROM sym
-           UNION
-           SELECT t.id, s.eb FROM reach t JOIN sym s ON t.r = s.ea),
-         comp AS (SELECT id, min(r) AS mr FROM reach GROUP BY id),
-         lab AS (SELECT d.doc_id,
-             least(coalesce(c.mr, d.doc_id), d.doc_id) AS cluster_id,
-             ${Sampling.sqlKeyHash("d.doc_id::VARCHAR", "g14")} <
-               ${Sampling.threshold(0.08)} AS direct
-           FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-         hit AS (SELECT cluster_id,
-             max(CASE WHEN direct THEN 1 ELSE 0 END) AS h
-           FROM lab GROUP BY cluster_id),
-         rm AS (SELECT l.doc_id, l.direct
-           FROM lab l JOIN hit h USING (cluster_id) WHERE h.h = 1),
-         bf AS (SELECT lang, count(*)::BIGINT AS n_before
-           FROM documents GROUP BY lang),
-         rl AS (SELECT d.lang,
-             sum(CASE WHEN rm.direct THEN 1 ELSE 0 END)::BIGINT
-               AS n_direct,
-             sum(CASE WHEN rm.direct THEN 0 ELSE 1 END)::BIGINT
-               AS n_closure
-           FROM rm JOIN documents d USING (doc_id) GROUP BY d.lang)
-         SELECT bf.lang, bf.n_before,
-           coalesce(rl.n_direct, 0)::BIGINT AS n_direct,
-           coalesce(rl.n_closure, 0)::BIGINT AS n_closure,
-           (bf.n_before - coalesce(rl.n_direct, 0)
-             - coalesce(rl.n_closure, 0))::BIGINT AS n_after
-         FROM bf LEFT JOIN rl USING (lang)
-         ORDER BY lang""",
-
-    "ta6_seq_packing" -> {
-      val toks = sqlTokens("text")
-      s"""WITH t AS (
-           SELECT doc_id, lang, len($toks)::BIGINT AS n_tok FROM documents),
-         s AS (
-           SELECT lang, n_tok,
-             (sum(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT
-               - n_tok AS start_tok
-           FROM t)
-         SELECT lang, start_tok // 2048 AS bin, count(*) AS n_docs,
-           sum(n_tok)::BIGINT AS n_tokens
-         FROM s GROUP BY lang, bin ORDER BY lang, bin"""
-    },
-
-    "ta15_chunk_windows" -> {
-      // Spark `sequence(0, k)` and DuckDB `generate_series(0, k)` are
-      // both inclusive; `list_slice` is 1-based inclusive and clamps at
-      // the list end exactly like Spark's `slice(arr, start, length)`.
-      val toks = sqlTokens("text")
-      s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
-         k AS (SELECT doc_id, toks,
-           CASE WHEN len(toks) <= $ChunkMax THEN 0
-                ELSE (len(toks) - $ChunkMax + $ChunkStride - 1) // $ChunkStride
-           END AS last_i FROM t),
-         c AS (SELECT doc_id, toks,
-           unnest(generate_series(0, last_i))::BIGINT AS chunk_idx FROM k)
-         SELECT doc_id, chunk_idx,
-           len(list_slice(toks, chunk_idx * $ChunkStride + 1,
-             chunk_idx * $ChunkStride + $ChunkMax))::BIGINT AS n_tok,
-           array_to_string(list_slice(toks, chunk_idx * $ChunkStride + 1,
-             chunk_idx * $ChunkStride + $ChunkMax), ' ') AS chunk_text
-         FROM c ORDER BY doc_id, chunk_idx"""
-    },
-
-    "v10_quantized_ann" -> {
-      def codes(src: String) =
-        s"""CASE WHEN sc > 0
-            THEN list_transform($src, x -> (floor(CAST(x AS DOUBLE) / sc + 0.5))::BIGINT)
-            ELSE list_transform($src, x -> 0::BIGINT) END"""
-      def isum(e: String) = s"list_reduce($e, (x, y) -> x + y)"
-      def sq(code: String) = s"sqrt(${isum(s"list_transform($code, x -> x * x)")}::DOUBLE)"
-      s"""WITH dq AS (
-           SELECT vec_id, embedding,
-             list_reduce(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))),
-               (a, b) -> greatest(a, b)) / 127.0 AS sc
-           FROM embeddings WHERE vec_id >= 3),
-         d AS (
-           SELECT vec_id AS doc_id, embedding AS dv,
-             ${codes("embedding")} AS code FROM dq),
-         qq AS (
-           SELECT vec_id, embedding,
-             list_reduce(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))),
-               (a, b) -> greatest(a, b)) / 127.0 AS sc
-           FROM embeddings WHERE vec_id < 3),
-         q AS (
-           SELECT vec_id AS query_id, embedding AS qv,
-             ${codes("embedding")} AS qcode FROM qq),
-         ap AS (
-           SELECT q.query_id, d.doc_id, d.dv, q.qv,
-             CASE WHEN ${sq("d.code")} * ${sq("q.qcode")} > 0
-               THEN ${isum("list_transform(generate_series(1, 64), i -> d.code[i] * q.qcode[i])")}::DOUBLE
-                 / (${sq("d.code")} * ${sq("q.qcode")})
-             END AS approx_cosine
-           FROM d CROSS JOIN q),
-         cand AS (
-           SELECT * FROM (
-             SELECT query_id, doc_id, dv, qv, approx_cosine,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY approx_cosine DESC, doc_id) AS arank
-             FROM ap) WHERE arank <= 20),
-         ex AS (
-           SELECT query_id, doc_id, ${sqlCosine64("dv", "qv")} AS cosine,
-             approx_cosine FROM cand),
-         rk AS (
-           SELECT query_id, doc_id, cosine, approx_cosine,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, doc_id) AS rank
-           FROM ex)
-         SELECT query_id, doc_id, ${sqlFround("cosine", 6)} AS cosine,
-           ${sqlFround("approx_cosine", 6)} AS approx_cosine, rank
-         FROM rk WHERE rank <= 5 ORDER BY query_id, rank"""
-    },
-
-    "v25_binary_ann" ->
-      // Hamming ground truth is UNPACKED: count dims whose sign class
-      // (>0 vs not) differs — the Spark side must reproduce it through
-      // the 32-bit word packing + xor + popcount walk
-      s"""WITH d AS (
-           SELECT vec_id AS doc_id, embedding AS dv
-           FROM embeddings WHERE vec_id >= 3),
-         q AS (
-           SELECT vec_id AS query_id, embedding AS qv
-           FROM embeddings WHERE vec_id < 3),
-         hp AS (
-           SELECT q.query_id, d.doc_id, d.dv, q.qv,
-             list_reduce(list_transform(generate_series(1, 64),
-               i -> CASE WHEN (d.dv[i] > 0) <> (q.qv[i] > 0)
-                 THEN 1 ELSE 0 END), (x, y) -> x + y)::BIGINT AS hamming
-           FROM d CROSS JOIN q),
-         cand AS (
-           SELECT * FROM (
-             SELECT query_id, doc_id, dv, qv, hamming,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY hamming, doc_id) AS arank
-             FROM hp) WHERE arank <= 20),
-         rk AS (
-           SELECT query_id, doc_id,
-             ${sqlCosine64("dv", "qv")} AS cosine, hamming,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-           FROM cand)
-         SELECT query_id, doc_id, ${sqlFround("cosine", 6)} AS cosine,
-           hamming, rank
-         FROM rk WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    "v26_matryoshka_ann" ->
-      // prefix cosine over dims 1..16 (sqlCosine's fixed-order fold —
-      // the same op order as CosineSim on the sliced array), full-dim
-      // rerank; both rank windows replayed
-      s"""WITH d AS (
-           SELECT vec_id AS doc_id, embedding AS dv
-           FROM embeddings WHERE vec_id >= 3),
-         q AS (
-           SELECT vec_id AS query_id, embedding AS qv
-           FROM embeddings WHERE vec_id < 3),
-         ap AS (
-           SELECT q.query_id, d.doc_id, d.dv, q.qv,
-             ${sqlCosine("d.dv", "q.qv", 16)} AS approx_cosine
-           FROM d CROSS JOIN q),
-         cand AS (
-           SELECT * FROM (
-             SELECT query_id, doc_id, dv, qv, approx_cosine,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY approx_cosine DESC, doc_id) AS arank
-             FROM ap) WHERE arank <= 20),
-         rk AS (
-           SELECT query_id, doc_id,
-             ${sqlCosine64("dv", "qv")} AS cosine, approx_cosine,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY ${sqlCosine64("dv", "qv")} DESC, doc_id) AS rank
-           FROM cand)
-         SELECT query_id, doc_id, ${sqlFround("cosine", 6)} AS cosine,
-           ${sqlFround("approx_cosine", 6)} AS approx_cosine, rank
-         FROM rk WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    "j2_asof_join" ->
-      """WITH clicks AS (
-           SELECT user_id, event_id, epoch_us(ts::TIMESTAMP) AS tus
-           FROM events WHERE event_type = 'click'),
-         rates AS (
-           SELECT user_id, epoch_us(ts::TIMESTAMP) AS rts, max(value) AS rate
-           FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-         SELECT c.user_id, c.event_id, c.tus, r.rts, r.rate
-         FROM clicks c ASOF LEFT JOIN rates r
-           ON c.user_id = r.user_id AND c.tus >= r.rts
-         ORDER BY c.user_id, c.tus, c.event_id""",
-
-    "j4_asof_join_bucketed" ->
-      """WITH clicks AS (
-           SELECT user_id, event_id, epoch_us(ts::TIMESTAMP) AS tus
-           FROM events WHERE event_type = 'click'),
-         rates AS (
-           SELECT user_id, epoch_us(ts::TIMESTAMP) AS rts, max(value) AS rate
-           FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-         SELECT c.user_id, c.event_id, c.tus, r.rts, r.rate
-         FROM clicks c ASOF LEFT JOIN rates r
-           ON c.user_id = r.user_id AND c.tus >= r.rts
-         ORDER BY c.user_id, c.tus, c.event_id""",
-
-    "j3_range_join" ->
-      """WITH clicks AS (
-           SELECT user_id, event_id AS click_id, epoch_us(ts::TIMESTAMP) AS tus
-           FROM events WHERE event_type = 'click'),
-         wins AS (
-           SELECT user_id, event_id AS win_id,
-             epoch_us(ts::TIMESTAMP) - 14400000000 AS start_us,
-             epoch_us(ts::TIMESTAMP) + 14400000000 AS end_us
-           FROM events WHERE event_type = 'purchase')
-         SELECT c.user_id, c.click_id, c.tus, w.win_id, w.start_us, w.end_us
-         FROM clicks c JOIN wins w
-           ON c.user_id = w.user_id
-           AND c.tus >= w.start_us AND c.tus <= w.end_us
-         ORDER BY c.user_id, c.click_id, w.win_id""",
-
-    "j5_salted_join" ->
-      // the salt is pure mechanics — the oracle replays the JOIN
-      """WITH e AS (
-           SELECT CASE WHEN event_id % 3 = 0 THEN 1
-                       ELSE user_id END AS key, event_id
-           FROM events),
-         d AS (SELECT c_custkey AS key, c_mktsegment FROM customer)
-         SELECT c_mktsegment, count(*)::BIGINT AS n,
-           sum(event_id % 97)::BIGINT AS chk
-         FROM e JOIN d USING (key)
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-
-    "n1_pagerank" ->
-      // the same integer-micro-unit walk, iterations unrolled; `//` on
-      // non-negative BIGINTs floors exactly like Spark's `div` (ranks
-      // stay non-negative; supplier NODES are negated custkey-disjoint
-      // keys used only as join/filter keys, never divided)
-      s"""WITH raw AS (
-           SELECT o.o_custkey AS c, -l.l_suppkey AS p
-           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-         edges AS (
-           SELECT src, dst, count(*)::BIGINT AS cnt FROM (
-             SELECT c AS src, p AS dst FROM raw
-             UNION ALL SELECT p AS src, c AS dst FROM raw)
-           GROUP BY src, dst),
-         ${sqlLinkRankCtes("", 3)}
-         SELECT (-node)::BIGINT AS s_suppkey, r AS rank_micro
-         FROM r3 WHERE node < 0
-         ORDER BY rank_micro DESC, s_suppkey LIMIT 25""",
-
-    "n2_pagerank_tick" ->
-      // serve ranks from the history graph (2 iterations), then the
-      // delta-day orders arrive: warm-start 2 refresh iterations over
-      // the full edge set from the served table (absent nodes at 10⁶)
-      s"""WITH raw AS (
-           SELECT o.o_orderkey AS ok, o.o_custkey AS c,
-             -l.l_suppkey AS p
-           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-         bedges AS (
-           SELECT src, dst, count(*)::BIGINT AS cnt FROM (
-             SELECT c AS src, p AS dst FROM raw WHERE ok % 17 <> 0
-             UNION ALL SELECT p AS src, c AS dst FROM raw
-             WHERE ok % 17 <> 0)
-           GROUP BY src, dst),
-         fedges AS (
-           SELECT src, dst, count(*)::BIGINT AS cnt FROM (
-             SELECT c AS src, p AS dst FROM raw
-             UNION ALL SELECT p AS src, c AS dst FROM raw)
-           GROUP BY src, dst),
-         ${sqlLinkRankCtes("b", 2)},
-         ${sqlLinkRankCtes("f", 2, Some("SELECT node, r FROM br2"))}
-         SELECT (-f.node)::BIGINT AS s_suppkey,
-           f.r AS rank_micro, b.r AS prev_micro
-         FROM fr2 f LEFT JOIN br2 b ON f.node = b.node
-         WHERE f.node < 0
-         ORDER BY rank_micro DESC, s_suppkey LIMIT 25""",
-
-    "n3_trustrank" ->
-      // the n1 walk with teleport concentrated on the trusted-nation
-      // customer seeds; |V|, |S| as scalar subqueries, all-BIGINT
-      s"""WITH raw AS (
-           SELECT o.o_custkey AS c, -l.l_suppkey AS p
-           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-         edges AS (
-           SELECT src, dst, count(*)::BIGINT AS cnt FROM (
-             SELECT c AS src, p AS dst FROM raw
-             UNION ALL SELECT p AS src, c AS dst FROM raw)
-           GROUP BY src, dst),
-         seeds AS (
-           SELECT c.c_custkey AS node FROM customer c
-           JOIN nation n ON c.c_nationkey = n.n_nationkey
-           WHERE n.n_name IN (${trustedNations.map(n => s"'$n'")
-             .mkString(", ")})),
-         ${sqlTrustRankCtes(3)}
-         SELECT (-node)::BIGINT AS s_suppkey, r AS trust_micro
-         FROM r3 WHERE node < 0
-         ORDER BY trust_micro DESC, s_suppkey LIMIT 25""",
-
-    "n4_hits" ->
-      // both integer half-steps + the power-of-sum rescale, iterations
-      // unrolled; tops taken per side then stitched
-      s"""WITH raw AS (
-           SELECT o.o_custkey AS c, -l.l_suppkey AS p
-           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-         edges AS (
-           SELECT c AS src, p AS dst, count(*)::BIGINT AS cnt
-           FROM raw GROUP BY 1, 2),
-         ${sqlHitsCtes(2)},
-         at AS (SELECT (-node)::BIGINT AS node_key,
-             a AS score_micro
-           FROM a2 WHERE node < 0
-           ORDER BY score_micro DESC, node_key LIMIT 25),
-         ht AS (SELECT node AS node_key, h AS score_micro
-           FROM h2 WHERE node > 0
-           ORDER BY score_micro DESC, node_key LIMIT 25)
-         SELECT 'auth' AS side, node_key, score_micro FROM at
-         UNION ALL
-         SELECT 'hub' AS side, node_key, score_micro FROM ht
-         ORDER BY side, score_micro DESC, node_key""",
-
-    "s7_inverted_index_roundtrip" ->
-      s"""SELECT doc_id,
-         array_to_string(list_slice(${sqlTokens("text")}, 1, 12), ' ')
-           AS prefix_text
-         FROM documents ORDER BY doc_id""",
-
-    "v4_tf_embedding" -> {
-      val toks = sqlTokens("text")
-      def nr(r: Int) = s"sum(CASE WHEN rank = $r THEN n ELSE 0 END)"
-      s"""WITH ex AS (
-           SELECT doc_id, unnest($toks) AS tok FROM documents),
-         vocab AS (
-           SELECT tok, row_number() OVER (ORDER BY count(*) DESC, tok) AS rank
-           FROM ex GROUP BY tok QUALIFY rank <= 16),
-         counts AS (
-           SELECT doc_id, rank, count(*) AS n
-           FROM ex JOIN vocab USING (tok) GROUP BY 1, 2),
-         agg AS (
-           SELECT doc_id, ${(1 to 16).map(r => s"${nr(r)} AS n$r").mkString(", ")},
-             sum(n * n) AS ss
-           FROM counts GROUP BY doc_id)
-         SELECT d.doc_id,
-           floor((CASE WHEN ss > 0 THEN n1 / sqrt(ss) ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS c1,
-           floor((CASE WHEN ss > 0 THEN n2 / sqrt(ss) ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS c2,
-           floor((CASE WHEN ss > 0 THEN n3 / sqrt(ss) ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS c3
-         FROM documents d LEFT JOIN agg USING (doc_id)
-         ORDER BY d.doc_id"""
-    },
-
-    "ta5_repetition" -> {
-      val toks = sqlTokens("text")
-      s"""WITH m AS (
-           SELECT doc_id, $toks AS toks, len($toks) AS n FROM documents)
-         SELECT doc_id,
-           ${sqlFround(
-             """CASE WHEN n > 0 THEN
-                list_max(list_transform(list_distinct(toks),
-                  t -> len(list_filter(toks, x -> x = t))))::DOUBLE / n
-                ELSE 0.0 END""", 6)} AS top_token_frac,
-           ${sqlFround(
-             """CASE WHEN n > 1 THEN
-                1.0 - len(list_distinct(list_transform(
-                  generate_series(1, (n - 1)::INT),
-                  i -> toks[i] || ' ' || toks[i + 1])))::DOUBLE
-                  / (n - 1)
-                ELSE 0.0 END""", 6)} AS dup_bigram_frac
-         FROM m ORDER BY doc_id"""
-    },
-
-    "ta16_dup_lines" ->
-      // same doc_id-synthesized lined text; units = trimmed non-blank
-      // lines; char sums via length() (characters — DuckDB strlen is
-      // bytes), coalesced against the empty-list-NULL quirk
-      s"""WITH lined AS (SELECT doc_id,
-           substr(text, 1, 40) || chr(10) || 'all rights reserved' ||
-           chr(10) ||
-           CASE WHEN doc_id % 3 = 0 THEN 'all rights reserved'
-             ELSE 'unique ' || doc_id::VARCHAR END || chr(10) ||
-           CASE WHEN doc_id % 5 = 0 THEN substr(text, 1, 40)
-             ELSE 'tail ' || doc_id::VARCHAR END || chr(10) || ''
-             AS text FROM documents),
-         u AS (SELECT doc_id,
-           list_filter(list_transform(string_split(text, chr(10)),
-             x -> trim(x)), x -> x != '') AS us
-           FROM lined),
-         m AS (SELECT doc_id, us, len(us) AS n,
-           len(list_distinct(us)) AS nd,
-           coalesce(list_sum(list_transform(us, x -> length(x))), 0)
-             AS tot,
-           coalesce(list_sum(list_transform(list_distinct(us),
-             x -> length(x))), 0) AS dis
-           FROM u)
-         SELECT doc_id, n AS n_lines,
-           ${sqlFround(
-             "CASE WHEN n > 0 THEN (n - nd)::DOUBLE / n ELSE 0.0 END", 6)}
-             AS dup_line_frac,
-           ${sqlFround(
-             "CASE WHEN tot > 0 THEN (tot - dis)::DOUBLE / tot ELSE 0.0 END",
-             6)} AS dup_char_frac
-         FROM m ORDER BY doc_id""",
-
-    "ta3_fingerprint" ->
-      s"""SELECT doc_id, ${sqlFingerprint("text")} AS fp
-         FROM documents ORDER BY doc_id""",
-
-    "ta7_cjk_text" ->
-      s"""WITH t AS (
-           SELECT doc_id,
-             substr('$cjkAlpha', (doc_id % 8 + 1)::INT, 6) || 'mix' ||
-             substr('$cjkAlpha', (doc_id % 4 + 1)::INT, 3) || ' ' ||
-             substr(text, 1, 40) AS ztext
-           FROM documents)
-         SELECT doc_id,
-           len(${sqlTokens("ztext")}) AS n_tok,
-           len(regexp_extract_all(ztext, '[${TA.cjkRange}]')) AS n_cjk,
-           ${sqlLanguageId("ztext")} AS lang_pred,
-           ${sqlFingerprint("ztext")} AS fp,
-           ${sqlSimhash("ztext")} AS sh
-         FROM t ORDER BY doc_id""",
-
-    "ta4_ngram_jaccard" ->
-      """WITH g AS (
-           SELECT doc_id, list_distinct(list_transform(
-             generate_series(1, len(text) - 2), i -> substr(text, i::INT, 3))) AS grams
-           FROM documents),
-         p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             len(list_filter(a.grams, x -> list_contains(b.grams, x))) AS inter,
-             len(a.grams) + len(b.grams) AS tot
-           FROM g a JOIN g b ON b.doc_id = a.doc_id + 1
-           WHERE a.doc_id < 200)
-         SELECT id_a, id_b, floor((inter * 1.0 / (tot - inter)) * 1e6 + 0.5) / 1e6 AS sim
-         FROM p ORDER BY id_a""",
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-         floor((sum(l_quantity)) * 1e2 + 0.5) / 1e2 AS sum_qty,
-         floor((sum(l_extendedprice)) * 1e2 + 0.5) / 1e2 AS sum_base_price,
-         floor((sum(l_extendedprice * (1 - l_discount))) * 1e2 + 0.5) / 1e2 AS sum_disc_price,
-         floor((avg(l_quantity)) * 1e6 + 0.5) / 1e6 AS avg_qty,
-         floor((avg(l_discount)) * 1e6 + 0.5) / 1e6 AS avg_disc,
-         count(*) AS count_order
-         FROM lineitem
-         WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-         GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-
-    "q2_doc_quality_stats" ->
-      """SELECT lang,
-         count(*) AS n_docs,
-         floor((avg(CASE WHEN n_chars >= 200 THEN 1.0 ELSE 0.0 END) * 100) * 1e4 + 0.5) / 1e4 AS pct_long,
-         floor((avg(CASE WHEN n_chars > 0 THEN n_chars END)) * 1e4 + 0.5) / 1e4 AS avg_chars,
-         floor((avg(len(regexp_extract_all(text, '\w+')))) * 1e4 + 0.5) / 1e4 AS avg_words,
-         count(DISTINCT source) AS n_sources
-         FROM documents GROUP BY lang ORDER BY lang""",
-
-    "q3_enrich_5way_join" ->
-      """SELECT coalesce(r_name, 'UNKNOWN') AS region,
-         coalesce(n_name, 'UNKNOWN') AS nation,
-         floor((sum(l_extendedprice * (1 - l_discount))) * 1e2 + 0.5) / 1e2 AS revenue,
-         count(DISTINCT o_orderkey) AS n_orders,
-         count(*) AS n_lines
-         FROM lineitem
-         LEFT JOIN orders ON l_orderkey = o_orderkey
-         LEFT JOIN customer ON o_custkey = c_custkey
-         LEFT JOIN nation ON c_nationkey = n_nationkey
-         LEFT JOIN region ON n_regionkey = r_regionkey
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q4_anti_join" ->
-      """SELECT c_mktsegment, count(*) AS n_customers,
-         floor((sum(c_acctbal)) * 1e2 + 0.5) / 1e2 AS sum_acctbal
-         FROM customer c
-         WHERE NOT EXISTS (SELECT 1 FROM orders o
-           WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 150000)
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-
-    "q5_topk" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""",
-
-    "d2_exact_dedup_nullkey" ->
-      """SELECT doc_id, lang FROM (
-           SELECT doc_id, lang,
-             CASE WHEN lang = 'en' THEN 1
-                  ELSE row_number() OVER (PARTITION BY nullif(lang, 'en') ORDER BY doc_id)
-             END AS rn
-           FROM documents) WHERE rn = 1 ORDER BY doc_id""",
-
-    "d3_content_hash_dedup" ->
-      """SELECT doc_id FROM (
-           SELECT doc_id, row_number() OVER (
-             PARTITION BY md5(lower(trim(substring(text, 1, 20))))
-             ORDER BY doc_id) AS rn
-           FROM documents) WHERE rn = 1 ORDER BY doc_id""",
-
-    "d4_jaccard_pairs" ->
-      s"""WITH toks AS (
-           SELECT doc_id, unnest(list_distinct(${sqlTokens("text")})) AS tok
-           FROM documents),
-         sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id),
-         pairs AS (
-           SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS inter
-           FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT ia AS id_a, ib AS id_b,
-           floor((inter * 1.0 / (sa.n + sb.n - inter)) * 1e6 + 0.5) / 1e6 AS jaccard
-         FROM pairs
-         JOIN sizes sa ON ia = sa.doc_id
-         JOIN sizes sb ON ib = sb.doc_id
-         WHERE inter * 1.0 / (sa.n + sb.n - inter) >= 0.9
-         ORDER BY id_a, id_b""",
-
-    "t2_unicode_normalize" ->
-      // chr(769)/chr(776) = U+0301/U+0308 combining acute/diaeresis —
-      // the same decomposed bytes the Spark literal carries
-      """WITH d AS (SELECT doc_id,
-           'cafe' || chr(769) || ' nai' || chr(776) || 've ' ||
-             substr(text, 1, 40) AS orig
-         FROM documents)
-         SELECT doc_id, nfc_normalize(orig) AS norm,
-           nfc_normalize(orig) <> orig AS changed
-         FROM d ORDER BY doc_id""",
-
-    "t1_text_clean" ->
-      """SELECT doc_id,
-         trim(regexp_replace(
-           regexp_replace(
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(
-                     '\textbf{Attention} is $O(n^2)$ &amp; café ' || text,
-                     '\$.*?\$', ' ', 'g'),
-                   '\\[a-zA-Z]+\{[^}]*\}', ' ', 'g'),
-                 '\\[a-zA-Z]+\s*', ' ', 'g'),
-               '&[a-zA-Z]+;', ' ', 'g'),
-             '[^\x00-\x7F]+', ' ', 'g'),
-           '\s+', ' ', 'g')) AS clean_text,
-         len(regexp_extract_all(text, '\w+')) AS n_words,
-         len(list_filter(string_split_regex(text, '[.!?]+'), x -> trim(x) <> '')) AS n_sentences
-         FROM documents ORDER BY doc_id""",
-
-    "a4_dist_stats" ->
-      """SELECT l_returnflag,
-         floor((avg(l_quantity)) * 1e6 + 0.5) / 1e6 AS avg_qty,
-         floor((quantile_cont(l_quantity, 0.5)) * 1e6 + 0.5) / 1e6 AS median_qty,
-         floor((stddev_pop(l_quantity)) * 1e6 + 0.5) / 1e6 AS std_qty,
-         floor((min(l_quantity)) * 1e2 + 0.5) / 1e2 AS min_qty,
-         floor((max(l_quantity)) * 1e2 + 0.5) / 1e2 AS max_qty,
-         floor((corr(l_quantity, l_extendedprice)) * 1e6 + 0.5) / 1e6 AS corr_qty_price
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "w1_running_window" ->
-      """SELECT user_id, event_id,
-         row_number() OVER w AS rn,
-         floor((coalesce(lag(value, 1) OVER w, 0.0)) * 1e2 + 0.5) / 1e2 AS prev_value,
-         floor((sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) * 1e2 + 0.5) / 1e2 AS running_value
-         FROM events WHERE user_id < 20
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         ORDER BY user_id, rn""",
-
-    "v1_cosine_topk" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-         sims AS (
-           SELECT e.vec_id,
-             list_sum(list_transform(range(1, 65),
-               i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-             AS s
-           FROM embeddings e, q WHERE e.vec_id <> 0)
-         SELECT vec_id, floor((s) * 1e6 + 0.5) / 1e6 AS sim FROM sims
-         ORDER BY sim DESC, vec_id LIMIT 10""",
-
-    "tq1_nb_classifier" ->
-      // NB training replayed from the same integer counts: per-class
-      // feature-slot counts over the 60% keyed split, Laplace-smoothed
-      // log-odds over the held-out docs. Split predicate, feature hash
-      // and bucket count are the SAME Scala constants as the query.
-      s"""$sqlNbScore,
-           ${sqlFround("lo", 6)} > 0 AS pred_target
-         FROM sc ORDER BY doc_id""",
-
-    "tq3_incremental_model" ->
-      // The incremental path's oracle IS the from-scratch retrain:
-      // integer count sums are associative, so the CountLog-folded
-      // model must reproduce tq1's numbers exactly.
-      s"""$sqlNbScore
-         FROM sc ORDER BY doc_id""",
-
-    "tq12_logreg_gate" -> {
-      // the full 2-tick gradient descent replayed: same split/label/
-      // feature constants as tq1, tick CTEs from the shared generator
-      // (z → detexp-σ → 2⁻²⁰ residual → BIGINT gradient → trunc-divide
-      // update), then the holdout logit fold over the final weights
-      val thr = operators.Sampling.threshold(0.6)
-      val toks = sqlTokens("text")
-      s"""WITH lrtk AS MATERIALIZED (SELECT doc_id,
-             coalesce(lang = 'en', false) AS y,
-             ${operators.Sampling.sqlKeyHash("doc_id::VARCHAR", "nbt")}
-               < $thr AS tr,
-             unnest($toks) AS tok
-           FROM documents),
-         lrfc AS MATERIALIZED (SELECT doc_id, any_value(y) AS y,
-             any_value(tr) AS tr, f, count(*)::BIGINT AS c
-           FROM (SELECT doc_id, y, tr,
-               ${operators.Classify.sqlFeatHash("tok", nbBuckets)} AS f
-             FROM lrtk)
-           GROUP BY doc_id, f),
-         ${operators.Classify.sqlLogRegTickCtes("lr", 2, 1L)},
-         lrsc AS (SELECT c.doc_id, any_value(c.y) AS y,
-             sum(c.c)::BIGINT AS n_tok,
-             coalesce(sum(c.c * w.w), 0)::BIGINT AS z_num
-           FROM lrfc c LEFT JOIN lrw2 w USING (f)
-           WHERE NOT c.tr GROUP BY c.doc_id)
-         SELECT doc_id, n_tok, z_num, z_num > 0 AS pred_en, y AS is_en
-         FROM lrsc ORDER BY doc_id"""
-    },
-
-    "tq4_classifier_eval" ->
-      // Exact Mann-Whitney AUC over the tq1 held-out scores: integer
-      // u2 = Σ np·(2·cum_neg_below + nn) over the distinct-ROUNDED-
-      // score table (tie groups align across engines), one IEEE
-      // divide; confusion counts at threshold 0.
-      s"""WITH scored AS ($sqlNbScore FROM sc),
-         lab AS (SELECT s.doc_id, ${sqlFround("s.log_odds", 6)} AS lo6,
-             coalesce(d.lang = 'en', false) AS y
-           FROM scored s JOIN documents d USING (doc_id)),
-         bys AS (SELECT lo6 AS s,
-             sum(CASE WHEN y THEN 1 ELSE 0 END)::BIGINT AS np,
-             sum(CASE WHEN y THEN 0 ELSE 1 END)::BIGINT AS nn
-           FROM lab GROUP BY lo6),
-         cum AS (SELECT *,
-             coalesce(sum(nn) OVER (ORDER BY s
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0)::BIGINT AS cumneg
-           FROM bys),
-         agg AS (SELECT sum(np)::BIGINT AS n_pos, sum(nn)::BIGINT AS n_neg,
-             sum(CASE WHEN s > 0 THEN np ELSE 0 END)::BIGINT AS tp,
-             sum(CASE WHEN s > 0 THEN nn ELSE 0 END)::BIGINT AS fp,
-             sum(CASE WHEN s <= 0 THEN nn ELSE 0 END)::BIGINT AS tn,
-             sum(CASE WHEN s <= 0 THEN np ELSE 0 END)::BIGINT AS fn,
-             sum(np * (2 * cumneg + nn))::BIGINT AS u2
-           FROM cum)
-         SELECT n_pos, n_neg, tp, fp, tn, fn,
-           ${sqlFround("u2::DOUBLE / (2 * n_pos * n_neg)::DOUBLE", 6)} AS auc,
-           ${sqlFround("(tp + tn)::DOUBLE / (n_pos + n_neg)::DOUBLE", 6)}
-             AS accuracy
-         FROM agg""",
-
-    "tq14_lr_model_log" -> {
-      // the from-scratch TRAJECTORY replay: the shared tick generator
-      // with cumulative per-tick doc filters (day 0, days ≤ 1,
-      // days ≤ 2) — tick t of this cold descent must equal the
-      // lifecycle's warm tick after absorbing day t−1, so the served
-      // weight segment is checked end to end (and the in-query
-      // poisoned replay would break this if the commit gate leaked)
-      val toks = sqlTokens("text")
-      s"""WITH lmtk AS MATERIALIZED (SELECT doc_id,
-             coalesce(lang = 'en', false) AS y,
-             ((doc_id % 3) + 3) % 3 AS b,
-             unnest($toks) AS tok
-           FROM documents),
-         lmfc AS MATERIALIZED (SELECT doc_id, any_value(y) AS y,
-             any_value(b) AS b, f, count(*)::BIGINT AS c
-           FROM (SELECT doc_id, y, b,
-               ${operators.Classify.sqlFeatHash("tok", nbBuckets)} AS f
-             FROM lmtk)
-           GROUP BY doc_id, f),
-         ${operators.Classify.sqlLogRegTickCtes("lm", 3, 1L,
-            t => s"b <= ${t - 1}")}
-         SELECT f, w FROM lmw3 ORDER BY f"""
-    },
-
-    "tq13_model_compare" -> {
-      // both fits replayed (NB via the tq1 CTEs, LR via the shared
-      // tick generator), then ONE Mann-Whitney chain per model over
-      // its distinct-score table — the tq4 integer fold, twice
-      def aucCtes(p: String, rel: String, sCol: String) =
-        s"""${p}bys AS (SELECT $sCol AS s,
-               sum(CASE WHEN y THEN 1 ELSE 0 END)::BIGINT AS np,
-               sum(CASE WHEN y THEN 0 ELSE 1 END)::BIGINT AS nn
-             FROM $rel GROUP BY 1),
-           ${p}cum AS (SELECT *,
-               coalesce(sum(nn) OVER (ORDER BY s
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                 0)::BIGINT AS cumneg
-             FROM ${p}bys),
-           ${p}agg AS (SELECT sum(np)::BIGINT AS n_pos,
-               sum(nn)::BIGINT AS n_neg,
-               sum(CASE WHEN s > 0 THEN np ELSE 0 END)::BIGINT AS tp,
-               sum(CASE WHEN s > 0 THEN nn ELSE 0 END)::BIGINT AS fp,
-               sum(CASE WHEN s <= 0 THEN nn ELSE 0 END)::BIGINT AS tn,
-               sum(CASE WHEN s <= 0 THEN np ELSE 0 END)::BIGINT AS fn,
-               sum(np * (2 * cumneg + nn))::BIGINT AS u2
-             FROM ${p}cum)"""
-      def aucRow(p: String, name: String) =
-        s"""SELECT '$name' AS model, n_pos, n_neg, tp, fp, tn, fn,
-             ${sqlFround("u2::DOUBLE / (2 * n_pos * n_neg)::DOUBLE", 6)}
-               AS auc,
-             ${sqlFround(
-               "(tp + tn)::DOUBLE / (n_pos + n_neg)::DOUBLE", 6)}
-               AS accuracy
-           FROM ${p}agg"""
-      val thr = operators.Sampling.threshold(0.6)
-      val toks = sqlTokens("text")
-      s"""WITH nbsc AS ($sqlNbScore FROM sc),
-         nlab AS (SELECT s.doc_id, ${sqlFround("s.log_odds", 6)} AS sc,
-             coalesce(d.lang = 'en', false) AS y
-           FROM nbsc s JOIN documents d USING (doc_id)),
-         lrtk AS MATERIALIZED (SELECT doc_id,
-             coalesce(lang = 'en', false) AS y,
-             ${operators.Sampling.sqlKeyHash("doc_id::VARCHAR", "nbt")}
-               < $thr AS tr,
-             unnest($toks) AS tok
-           FROM documents),
-         lrfc AS MATERIALIZED (SELECT doc_id, any_value(y) AS y,
-             any_value(tr) AS tr, f, count(*)::BIGINT AS c
-           FROM (SELECT doc_id, y, tr,
-               ${operators.Classify.sqlFeatHash("tok", nbBuckets)} AS f
-             FROM lrtk)
-           GROUP BY doc_id, f),
-         ${operators.Classify.sqlLogRegTickCtes("lr", 2, 1L)},
-         llab AS (SELECT c.doc_id, any_value(c.y) AS y,
-             coalesce(sum(c.c * w.w), 0)::BIGINT AS sc
-           FROM lrfc c LEFT JOIN lrw2 w USING (f)
-           WHERE NOT c.tr GROUP BY c.doc_id),
-         ${aucCtes("l", "llab", "sc")},
-         ${aucCtes("n", "nlab", "sc")}
-         ${aucRow("l", "lr")}
-         UNION ALL
-         ${aucRow("n", "nb")}
-         ORDER BY model"""
-    },
-
-    "tq2_dsir_weights" ->
-      // Both hashed-unigram LMs (target stratum + whole corpus) from
-      // one token pass; per-doc mean log ratio, Laplace-smoothed.
-      s"""$sqlDsirWeights
-         FROM sc ORDER BY doc_id""",
-
-    "tq11_decile_lift" ->
-      // the tq4 distinct-score cumulative trick: tie groups land whole
-      // in the decile where they start; every ratio an integer divide
-      s"""WITH scored AS ($sqlNbScore FROM sc),
-         lab AS (SELECT s.doc_id, s.log_odds AS lo6,
-             coalesce(d.lang = 'en', false) AS y
-           FROM scored s JOIN documents d USING (doc_id)),
-         g AS (SELECT lo6, count(*)::BIGINT AS ng,
-             sum(CASE WHEN y THEN 1 ELSE 0 END)::BIGINT AS pg
-           FROM lab GROUP BY lo6),
-         tot AS (SELECT sum(ng)::BIGINT AS nt, sum(pg)::BIGINT AS pt
-           FROM g),
-         cumg AS (SELECT *, coalesce(sum(ng) OVER (ORDER BY lo6 DESC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             0)::BIGINT AS cumb
-           FROM g),
-         dec AS (SELECT (cumb * 10) // nt AS decile, ng, pg
-           FROM cumg CROSS JOIN tot),
-         agg AS (SELECT decile, sum(ng)::BIGINT AS n_docs,
-             sum(pg)::BIGINT AS n_pos FROM dec GROUP BY decile),
-         cum2 AS (SELECT *, (sum(n_pos) OVER (ORDER BY decile
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT
-             AS cum_pos
-           FROM agg)
-         SELECT decile, n_docs, n_pos,
-           CASE WHEN pt > 0 THEN (cum_pos * 1000000) // pt END
-             AS capture_micro,
-           CASE WHEN pt > 0 THEN (n_pos * nt * 1000000)
-             // (n_docs * pt) END AS lift_micro
-         FROM cum2 CROSS JOIN tot ORDER BY decile""",
-
-    "tq10_uncertainty_sample" ->
-      // the tq1 score chain → integer µ-units of the 6dp-pinned
-      // log-odds; per-lang rank by |distance to the boundary|
-      s"""WITH scored AS ($sqlNbScore FROM sc),
-         lab AS (SELECT s.doc_id, d.lang,
-             floor(s.log_odds * 1e6 + 0.5)::BIGINT AS lo_micro
-           FROM scored s JOIN documents d USING (doc_id)),
-         rk AS (SELECT *, row_number() OVER (PARTITION BY lang
-             ORDER BY abs(lo_micro), doc_id) AS rank FROM lab)
-         SELECT lang, doc_id, lo_micro, rank FROM rk WHERE rank <= 15
-         ORDER BY lang, rank""",
-
-    "w8_session_funnel" ->
-      """WITH e AS (
-           SELECT user_id, event_type, epoch_us(ts::TIMESTAMP) AS tus,
-             epoch_us(date_trunc('day', ts::TIMESTAMP)) AS day_us
-           FROM events),
-         s1 AS (SELECT user_id, min(tus) AS t1, min(day_us) AS day_us
-           FROM e WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (SELECT e.user_id, min(e.tus) AS t2
-           FROM e JOIN s1 ON e.user_id = s1.user_id
-           WHERE e.event_type = 'click' AND e.tus > s1.t1
-           GROUP BY e.user_id),
-         s3 AS (SELECT e.user_id, min(e.tus) AS t3
-           FROM e JOIN s2 ON e.user_id = s2.user_id
-           WHERE e.event_type = 'purchase' AND e.tus > s2.t2
-           GROUP BY e.user_id)
-         SELECT s1.day_us, count(*)::BIGINT AS n_view,
-           sum(CASE WHEN s2.t2 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_click,
-           sum(CASE WHEN s3.t3 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_purchase
-         FROM s1 LEFT JOIN s2 ON s1.user_id = s2.user_id
-         LEFT JOIN s3 ON s1.user_id = s3.user_id
-         GROUP BY s1.day_us ORDER BY s1.day_us""",
-
-    "w10_trailing_range" ->
-      // same VALUE-defined frame: peers (equal tus) share frames on
-      // both engines, and every aggregate is an order-free integer
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts::TIMESTAMP) AS tus,
-             event_id % 97 AS pay
-           FROM events)
-         SELECT user_id, event_id, tus,
-           (count(*) OVER w)::BIGINT AS n_trail,
-           (sum(pay) OVER w)::BIGINT AS sum_trail
-         FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus
-           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-         ORDER BY user_id, tus, event_id""",
-
-    "w11_retention_cohorts" ->
-      // distinct (user, day) spine -> first day -> cohort sizes ->
-      // (cohort, k) activity counts; all integer, µs day axis
-      """WITH act AS (SELECT DISTINCT user_id,
-             epoch_us(date_trunc('day', ts::TIMESTAMP)) AS day_us
-           FROM events),
-         fi AS (SELECT user_id, min(day_us) AS cohort_us
-           FROM act GROUP BY 1),
-         sz AS (SELECT cohort_us, count(*)::BIGINT AS n_cohort
-           FROM fi GROUP BY 1),
-         ak AS (SELECT f.cohort_us,
-             ((a.day_us - f.cohort_us) // 86400000000)::BIGINT AS k,
-             count(*)::BIGINT AS n_active
-           FROM act a JOIN fi f USING (user_id) GROUP BY 1, 2)
-         SELECT a.cohort_us, a.k, a.n_active, s.n_cohort,
-           (a.n_active * 1000000 // s.n_cohort)::BIGINT AS rate_micro
-         FROM ak a JOIN sz s USING (cohort_us)
-         ORDER BY a.cohort_us, a.k""",
-
-    "d24_est_calibration" ->
-      // exact shingle-set Jaccard from the SAME vs chain (hash sets,
-      // 2⁻²⁸ collision bound identical by construction), bucketed on
-      // the integer estimate grid; means are integer divides
-      s"""WITH $sqlMinhashPairCtes,
-         ex AS (SELECT DISTINCT doc_id, h FROM
-           (SELECT doc_id, unnest(vs) AS h FROM vs)),
-         szc AS (SELECT doc_id, count(*)::BIGINT AS nsh FROM ex
-           GROUP BY doc_id),
-         nic AS (SELECT p.id_a, p.id_b, count(*)::BIGINT AS ni
-           FROM mh_pairs p
-           JOIN ex ea ON ea.doc_id = p.id_a
-           JOIN ex eb ON eb.doc_id = p.id_b AND eb.h = ea.h
-           GROUP BY p.id_a, p.id_b),
-         rw AS (SELECT p.id_a, p.id_b, coalesce(n.ni, 0) AS ni,
-             sa.nsh AS n_a, sb.nsh AS n_b,
-             floor(p.est_jaccard * 16.0 + 0.5)::BIGINT AS est16
-           FROM mh_pairs p
-           LEFT JOIN nic n ON n.id_a = p.id_a AND n.id_b = p.id_b
-           JOIN szc sa ON sa.doc_id = p.id_a
-           JOIN szc sb ON sb.doc_id = p.id_b),
-         jm AS (SELECT est16,
-             (ni * 1000000) // (n_a + n_b - ni) AS jac_micro FROM rw)
-         SELECT est16, count(*)::BIGINT AS n_pairs,
-           (sum(jac_micro) // count(*))::BIGINT AS mean_exact_micro,
-           sum(CASE WHEN jac_micro >= 500000 THEN 1 ELSE 0 END)::BIGINT
-             AS n_exact_pass,
-           est16 >= 8 AS est_pass
-         FROM jm GROUP BY est16 ORDER BY est16""",
-
-    "tq8_label_noise" ->
-      // the shared Platt replay, then the confident-learning census in
-      // INTEGER MICRO-UNITS: probs → BIGINT µ-units, thresholds =
-      // rounded means of exact integer sums (one IEEE divide), every
-      // comparison integer-vs-integer — nothing order-dependent left
-      s"""WITH $sqlPlattProbsCtes,
-         scored AS (SELECT y,
-             floor(p * 1e6 + 0.5)::BIGINT AS pi FROM probs),
-         thr AS (SELECT
-             CASE WHEN sum(CASE WHEN y > 0.5 THEN 1 END) > 0 THEN
-               floor(sum(CASE WHEN y > 0.5 THEN pi END)::DOUBLE
-                 / sum(CASE WHEN y > 0.5 THEN 1 END)::DOUBLE + 0.5)::BIGINT
-             END AS t1i,
-             CASE WHEN sum(CASE WHEN y <= 0.5 THEN 1 END) > 0 THEN
-               floor(sum(CASE WHEN y <= 0.5 THEN 1000000 - pi END)::DOUBLE
-                 / sum(CASE WHEN y <= 0.5 THEN 1 END)::DOUBLE + 0.5)::BIGINT
-             END AS t0i
-           FROM scored),
-         pr AS (SELECT y,
-             CASE WHEN pi >= t1i
-                    AND (1000000 - pi < t0i OR pi >= 1000000 - pi) THEN 1
-                  WHEN 1000000 - pi >= t0i THEN 0
-                  ELSE NULL END AS pred
-           FROM scored CROSS JOIN thr)
-         SELECT y > 0.5 AS given_en, count(*) AS n,
-           count(pred)::BIGINT AS n_confident,
-           sum(CASE WHEN pred IS NOT NULL
-               AND pred <> (CASE WHEN y > 0.5 THEN 1 ELSE 0 END)
-             THEN 1 ELSE 0 END)::BIGINT AS n_flagged,
-           CASE WHEN count(pred) > 0 THEN
-             ${sqlFround(
-               """sum(CASE WHEN pred IS NOT NULL
-               AND pred <> (CASE WHEN y > 0.5 THEN 1 ELSE 0 END)
-             THEN 1 ELSE 0 END)::DOUBLE / count(pred)::DOUBLE""", 6)}
-           END AS noise_rate
-         FROM pr GROUP BY 1 ORDER BY given_en""",
-
-    "tq9_ccnet_ppl_buckets" -> {
-      // per-lang seed unigram LM on the detln 2^-20 grid (the ta8
-      // form, restricted to the pinned seed sources), OOV backs off
-      // to the count-1 weight, per-doc NLL as exact BIGINT sums, ONE
-      // integer divide per doc, tertiles by (avg_q, doc_id) rank
-      val seedIn = ccnetSeedSources.map(x => s"'$x'").mkString(", ")
-      val grid = operators.Classify.WeightGrid
-      s"""WITH toks AS (
-           SELECT doc_id, lang, source IN ($seedIn) AS is_seed,
-             unnest(${sqlTokens("text")}) AS tok
-           FROM documents WHERE text IS NOT NULL),
-         perdoc AS (
-           SELECT doc_id, lang, is_seed, tok, count(*)::BIGINT AS c
-           FROM toks GROUP BY 1, 2, 3, 4),
-         seed AS (SELECT lang, tok, sum(c)::BIGINT AS cf
-           FROM perdoc WHERE is_seed GROUP BY 1, 2),
-         tots AS (SELECT lang, ttln FROM (SELECT lang,
-             ${operators.Classify.sqlDetLnCols("tt", "tot")}
-           FROM (SELECT lang, sum(cf)::BIGINT AS tot
-                 FROM seed GROUP BY 1))),
-         wtab AS (SELECT lang, tok, wi FROM (SELECT s.lang, s.tok,
-             ${operators.Classify.sqlDetLnCols("cl", "cf")},
-             floor((clln - ttln) * $grid + 0.5)::BIGINT AS wi
-           FROM seed s JOIN tots USING (lang))),
-         oov AS (SELECT lang,
-             floor((0.0 - ttln) * $grid + 0.5)::BIGINT AS w_oov
-           FROM tots),
-         sc AS (SELECT p.doc_id, p.lang, sum(p.c)::BIGINT AS n_tok,
-             (-sum(p.c * coalesce(w.wi, o.w_oov)))::BIGINT AS nll_q
-           FROM perdoc p
-           LEFT JOIN wtab w ON w.lang = p.lang AND w.tok = p.tok
-           JOIN oov o ON o.lang = p.lang
-           GROUP BY 1, 2),
-         rk AS (SELECT doc_id, lang, n_tok, nll_q // n_tok AS avg_q,
-             row_number() OVER (PARTITION BY lang
-               ORDER BY nll_q // n_tok, doc_id) AS rn,
-             count(*) OVER (PARTITION BY lang) AS nl
-           FROM sc)
-         SELECT doc_id, lang, n_tok, avg_q,
-           CASE ((rn - 1) * 3) // nl WHEN 0 THEN 'head'
-             WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket
-         FROM rk ORDER BY doc_id"""
-    },
-
-    "tq7_platt_calibration" ->
-      // the unrolled Newton chain (sqlPlattProbsCtes) feeding the
-      // reliability rollup
-      s"""WITH $sqlPlattProbsCtes
-         SELECT CAST(floor(sc * 10) AS BIGINT) AS bin,
-           count(*) AS n,
-           ${sqlFround("avg(y)", 6)} AS frac_pos,
-           ${sqlFround("avg(p)", 6)} AS mean_cal_p,
-           max(a) AS a, max(b) AS b
-         FROM probs GROUP BY bin ORDER BY bin""",
-
-    "tq6_score_threshold" ->
-      // descending running census over the distinct rounded-score
-      // table; integer cap rows·30 div 100; most inclusive qualifying
-      // threshold
-      s"""WITH scored AS ($sqlNbScore FROM sc),
-         bys AS (SELECT ${sqlFround("log_odds", 6)} AS s,
-             count(*)::BIGINT AS n
-           FROM scored GROUP BY 1),
-         cum AS (SELECT s, sum(n) OVER (ORDER BY s DESC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT
-             AS kept
-           FROM bys),
-         tot AS (SELECT count(*)::BIGINT AS tot FROM scored)
-         SELECT min(s) AS threshold, max(kept)::BIGINT AS n_kept
-         FROM cum CROSS JOIN tot WHERE kept <= tot * 30 // 100""",
-
-    "g6_steered_corpus" -> {
-      // the DSIR chain (prefixed q6, same constants as tq2) splices
-      // into the g2 prelude; the steering gate — rounded per-doc mean
-      // log ratio above the rounded corpus mean — becomes one more
-      // kept0 membership condition
-      val prelude =
-        s"""${sqlDsirCtes("q6")},
-           q6ev AS (SELECT doc_id, ${sqlFround("w", 6)} AS ev
-             FROM q6sc),
-           q6thr AS (SELECT ${sqlFround("avg(ev)", 6)} AS thr FROM q6ev),
-           q6keep AS (SELECT doc_id FROM q6ev CROSS JOIN q6thr
-             WHERE ev > thr),
-           """
-      s"""${sqlG2PackedCtes(prelude,
-             "AND s.doc_id IN (SELECT doc_id FROM q6keep)")}
-         SELECT lang, start_tok // 2048 AS bin, count(*) AS n_docs,
-           sum(n_tok)::BIGINT AS n_tokens
-         FROM packed GROUP BY lang, bin ORDER BY lang, bin"""
-    },
-
-    "tq5_dsir_resample" ->
-      // The resampling step over the tq2 weights: Efraimidis–Spirakis
-      // keyed top-k, ranked by the r13 PURE-INTEGER key (SelKeyFixed
-      // BIGINT kernels replayed below — no double anywhere between the
-      // md5 draw and the key); doc_id tiebreak. The 6dp float logratio
-      // column stays as the proven-green upstream canary.
-      s"""WITH wgt AS ($sqlDsirWeightsMicro FROM sc),
-         sel AS (SELECT doc_id, n_tok, logratio,
-             ${operators.Sampling.sqlSelKeyColsLogW("doc_id",
-                "2 * logratio_micro", "dsir")}
-           FROM wgt)
-         SELECT doc_id, n_tok, logratio, sel_key FROM sel
-         ORDER BY sel_key, doc_id LIMIT 100""",
-
-    "x5_dsir_token_resample" ->
-      // tq5's weights and pure-integer selection key, the token-budget
-      // stopping rule: per-bucket token census over sel_key >> 31,
-      // cumulative mass of strictly earlier buckets, within-bucket
-      // prefix sum by (sel_key, doc_id), keep start_tok < 25% of
-      // total tokens (start-before-budget). All output cells BIGINT.
-      s"""WITH wgt AS ($sqlDsirWeightsMicro FROM sc),
-         sel AS (SELECT doc_id, n_tok, logratio_micro,
-             ${operators.Sampling.sqlSelKeyColsLogW("doc_id",
-                "2 * logratio_micro", "dsir")}
-           FROM wgt),
-         ${operators.Sampling.sqlTokenBudgetCut("sel", "s.doc_id", 25)}
-         SELECT doc_id, n_tok, logratio_micro, sel_key, start_tok
-         FROM cut ORDER BY sel_key, doc_id"""
-  )
-
-  /** The two-sample KS CTE chain over a `(stratum, v, c)` counts
-    * relation vs `ref` (the Sketches.ksFromDistribution replay, shared
-    * by a20/a21): merged axis, integer cumulative sums, two double
-    * divisions. Ends in `${p}ks(stratum, n, ks_raw)` and
-    * `${p}nr(n_r)`; callers round `ks_raw`.
-    */
-  /** The x8/x9 DoReMi chain as reusable CTEs (cnt model, grid q, a0,
-    * and the unrolled multiplicative ticks ending in `a<iters>`), all
-    * MATERIALIZED — the chained a_t references would otherwise inline
-    * exponentially in DuckDB (measured 6 min -> 0.3 s at sf0.01).
-    */
-  private def sqlDomainReweightCtes: String = {
-    val iterCtes = (1 to x8Iters).map { t =>
-      s"""p$t AS MATERIALIZED (SELECT q.b, sum(a.a * q.q) AS p
-           FROM q JOIN a${t - 1} a USING (d) GROUP BY q.b),
-         tv$t AS MATERIALIZED (SELECT q.d,
-             floor((0.5 * sum(abs(q.q - p.p))) * 1e6 + 0.5) / 1e6 AS tv
-           FROM q JOIN p$t p USING (b) GROUP BY q.d),
-         r$t AS MATERIALIZED (SELECT a.d,
-             a.a * ${operators.Sampling.sqlDetExp(s"$x8Eta * tv.tv")} AS raw,
-             tv.tv AS tv
-           FROM a${t - 1} a JOIN tv$t tv USING (d)),
-         a$t AS MATERIALIZED (SELECT d,
-             floor((raw / (SELECT sum(raw) FROM r$t)) * 1e6 + 0.5) / 1e6
-               AS a, tv
-           FROM r$t)"""
-    }.mkString(",\n")
-    s"""cnt AS MATERIALIZED (
-         SELECT lang AS d, ${operators.Classify.sqlFeatHash("tok", x8Buckets)} AS b,
-           count(*)::BIGINT AS c
-         FROM (SELECT lang, unnest(${sqlTokens("text")}) AS tok
-           FROM documents)
-         GROUP BY 1, 2),
-       nd AS (SELECT d, sum(c)::BIGINT AS n FROM cnt GROUP BY 1),
-       bs AS (SELECT DISTINCT b FROM cnt),
-       q AS MATERIALIZED (SELECT g.d, g.b,
-           CAST(coalesce(cnt.c, 0) AS DOUBLE) / CAST(nd.n AS DOUBLE) AS q
-         FROM (SELECT nd.d, bs.b FROM nd CROSS JOIN bs) g
-         LEFT JOIN cnt ON cnt.d = g.d AND cnt.b = g.b
-         JOIN nd ON nd.d = g.d),
-       a0 AS (SELECT d,
-           floor((1.0 / (SELECT count(*) FROM nd)) * 1e6 + 0.5) / 1e6 AS a
-         FROM nd),
-       $iterCtes"""
-  }
-
-  /** The tq7/tq8 shared Platt-fit replay: the stopword-ratio cal
-    * table, Platt's smoothed targets, the unrolled Newton chain (per
-    * tick five 6dp-rounded sums, sigma via the libm-free detexp twin,
-    * the exact 2x2 solve with the zero-determinant keep — the Spark
-    * side's early-stop fixpoint), ending in `probs(sc, y, p, a, b)`.
-    */
-  private lazy val sqlPlattProbsCtes: String = {
-    def sigma(aRef: String, bRef: String) =
-      s"1.0 / (1.0 + ${operators.Sampling.sqlDetExp(s"-($aRef * sc + $bRef)")})"
-    val iterCtes = (1 to plattIters).map { i =>
-      s"""g$i AS MATERIALIZED (SELECT
-           floor(sum(d * sc) * 1e6 + 0.5) / 1e6 AS g1,
-           floor(sum(d) * 1e6 + 0.5) / 1e6 AS g0,
-           floor(sum(w * sc * sc) * 1e6 + 0.5) / 1e6 AS h11,
-           floor(sum(w * sc) * 1e6 + 0.5) / 1e6 AS h10,
-           floor(sum(w) * 1e6 + 0.5) / 1e6 AS h00
-         FROM (SELECT sc,
-             p - (CASE WHEN y > 0.5 THEN t.tp ELSE t.tn END) AS d,
-             p * (1.0 - p) AS w
-           FROM (SELECT sc, y, ${sigma("it.a", "it.b")} AS p
-             FROM cal CROSS JOIN it${i - 1} it) CROSS JOIN tgt t)),
-       it$i AS MATERIALIZED (SELECT
-           CASE WHEN g.h11 * g.h00 - g.h10 * g.h10 = 0.0 THEN it.a
-             ELSE floor((it.a - (g.g1 * g.h00 - g.g0 * g.h10)
-               / (g.h11 * g.h00 - g.h10 * g.h10)) * 1e6 + 0.5) / 1e6
-           END AS a,
-           CASE WHEN g.h11 * g.h00 - g.h10 * g.h10 = 0.0 THEN it.b
-             ELSE floor((it.b - (g.g0 * g.h11 - g.g1 * g.h10)
-               / (g.h11 * g.h00 - g.h10 * g.h10)) * 1e6 + 0.5) / 1e6
-           END AS b
-         FROM it${i - 1} it CROSS JOIN g$i g)"""
-    }.mkString(",\n")
-    s"""cal AS MATERIALIZED (SELECT
-           CASE WHEN len(toks) > 0 THEN hits * 1.0 / len(toks)
-             ELSE 0.0 END AS sc,
-           CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y
-         FROM (SELECT ${sqlTokens("text")} AS toks,
-             ${sqlHits("text", TA.enStopwords)} AS hits, lang
-           FROM documents)),
-       cns AS (SELECT sum(y) AS np, count(*) - sum(y) AS nn FROM cal),
-       tgt AS (SELECT (np + 1.0) / (np + 2.0) AS tp,
-           1.0 / (nn + 2.0) AS tn FROM cns),
-       it0 AS (SELECT 0.0 AS a, 0.0 AS b),
-       $iterCtes,
-       probs AS (SELECT sc, y, ${sigma("it.a", "it.b")} AS p,
-           it.a AS a, it.b AS b
-         FROM cal CROSS JOIN it$plattIters it)"""
-  }
-
-  private def sqlKsCtes(p: String, countsRel: String, ref: String): String =
-    s"""${p}refc AS (SELECT v, c AS cr FROM $countsRel WHERE stratum = '$ref'),
-       ${p}othc AS (SELECT * FROM $countsRel WHERE stratum <> '$ref'),
-       ${p}strata AS (SELECT DISTINCT stratum FROM ${p}othc),
-       ${p}no AS (SELECT stratum, sum(c)::BIGINT AS n_o
-         FROM ${p}othc GROUP BY 1),
-       ${p}nr AS (SELECT sum(cr)::BIGINT AS n_r FROM ${p}refc),
-       ${p}merged AS (SELECT stratum, v, sum(d_o)::BIGINT AS d_o,
-           sum(d_r)::BIGINT AS d_r
-         FROM (SELECT stratum, v, c AS d_o, 0 AS d_r FROM ${p}othc
-           UNION ALL
-           SELECT s.stratum, r.v, 0, r.cr FROM ${p}refc r, ${p}strata s)
-         GROUP BY 1, 2),
-       ${p}cums AS (SELECT stratum, v,
-           sum(d_o) OVER (PARTITION BY stratum ORDER BY v) AS cum_o,
-           sum(d_r) OVER (PARTITION BY stratum ORDER BY v) AS cum_r
-         FROM ${p}merged),
-       ${p}ks AS (SELECT c.stratum, max(o.n_o) AS n,
-           max(abs(cum_o::DOUBLE / n_o - cum_r::DOUBLE / n_r)) AS ks_raw
-         FROM ${p}cums c JOIN ${p}no o USING (stratum), ${p}nr
-         GROUP BY c.stratum)"""
-
-  /** The g7/g7x corpus-health replay — all four dashboard blocks; the
-    * ta2 quality CTEs feed the drift aggregates, the a15 log-linear
-    * bucketing/merge/walk runs over per-doc token counts partitioned by
-    * (lang, day), the a16 support-pruned counts yield the deterministic
-    * (cnt desc, tok desc) top token, distinct is exact count(DISTINCT).
-    * `extraCols` splices additional final-select columns (g7x adds the
-    * constant within_tol the Spark side derives from the HLL estimate).
-    */
-  private def sqlCorpusHealth(extraCols: String): String =
-    s"""${sqlQualityCtes()},
-         hd AS (
-           SELECT doc.lang, doc.doc_id % 7 AS day,
-             s.n_tokens::BIGINT AS n_tok, $sqlQualityExpr AS q
-           FROM s JOIN documents doc ON s.doc_id = doc.doc_id),
-         base AS (
-           SELECT lang, day, count(*) AS n_docs,
-             ${sqlFround("avg(q)", 6)} AS avg_quality,
-             ${sqlFround("avg(CASE WHEN q < 0.5 THEN 1.0 ELSE 0.0 END)", 6)}
-               AS low_quality_share,
-             sum(n_tok)::BIGINT AS total_tokens
-           FROM hd GROUP BY 1, 2),
-         qb AS (
-           SELECT lang, day,
-             (n_tok >> greatest(length(bin(n_tok)) - 6, 0))
-               << greatest(length(bin(n_tok)) - 6, 0) AS lo,
-             count(*) AS cnt
-           FROM hd GROUP BY 1, 2, 3),
-         qc AS (
-           SELECT lang, day, lo,
-             sum(cnt) OVER (PARTITION BY lang, day ORDER BY lo) AS cum,
-             sum(cnt) OVER (PARTITION BY lang, day) AS total
-           FROM qb),
-         qq AS (
-           SELECT qc.lang, qc.day, p.p, min(qc.lo) AS q_lo
-           FROM qc CROSS JOIN (VALUES (50), (90), (99)) AS p(p)
-           WHERE qc.cum * 100 >= p.p * qc.total
-           GROUP BY 1, 2, 3),
-         qp AS (
-           SELECT lang, day,
-             max(CASE WHEN p = 50 THEN q_lo END) AS p50_tok_lo,
-             max(CASE WHEN p = 90 THEN q_lo END) AS p90_tok_lo,
-             max(CASE WHEN p = 99 THEN q_lo END) AS p99_tok_lo,
-             max(CASE WHEN p = 99 THEN q_lo
-               + (CAST(1 AS BIGINT) << greatest(length(bin(q_lo)) - 6, 0)) END)
-               AS p99_tok_hi
-           FROM qq GROUP BY 1, 2),
-         tok AS (
-           SELECT lang, doc_id % 7 AS day, unnest(${sqlTokens("text")}) AS k
-           FROM documents),
-         counts AS (
-           SELECT lang, day, k, count(*) AS cnt FROM tok GROUP BY 1, 2, 3),
-         mass AS (
-           SELECT lang, day, sum(cnt) AS rows_d FROM counts GROUP BY 1, 2),
-         kept AS (
-           SELECT c.lang, c.day, c.k, c.cnt
-           FROM counts c JOIN mass m USING (lang, day)
-           WHERE c.cnt * 200 >= m.rows_d * 1),
-         mx AS (
-           SELECT lang, day, max(cnt) AS top_tok_cnt FROM kept GROUP BY 1, 2),
-         top AS (
-           SELECT k2.lang, k2.day, m.top_tok_cnt, max(k2.k) AS top_tok
-           FROM kept k2 JOIN mx m
-             ON k2.lang = m.lang AND k2.day = m.day AND k2.cnt = m.top_tok_cnt
-           GROUP BY 1, 2, 3),
-         dist AS (
-           SELECT lang, day, count(DISTINCT k)::BIGINT AS distinct_toks
-           FROM counts GROUP BY 1, 2)
-         SELECT b.lang, b.day, b.n_docs, b.avg_quality, b.low_quality_share,
-           b.total_tokens, dist.distinct_toks,
-           qp.p50_tok_lo, qp.p90_tok_lo, qp.p99_tok_lo, qp.p99_tok_hi,
-           top.top_tok, top.top_tok_cnt$extraCols
-         FROM base b
-         JOIN qp USING (lang, day)
-         JOIN dist USING (lang, day)
-         LEFT JOIN top USING (lang, day)
-         ORDER BY lang, day"""
-
-  /** The DSIR chain with CTE names prefixed `p` (so it can splice into
-    * the g2 prelude without name collisions): both hashed-unigram LMs
-    * from one token pass, ending in `${p}sc(doc_id, n_tok, w)` with the
-    * RAW per-doc mean log ratio. Same constants as the Spark queries.
-    */
-  private def sqlDsirCtes(p: String): String = {
-    val b = nbBuckets
-    val toks = sqlTokens("text")
-    s"""${p}tk AS (SELECT doc_id,
-             coalesce(lang = 'en', false) AS tgt, unnest($toks) AS tok
-           FROM documents),
-         ${p}f AS (SELECT doc_id, tgt,
-             ${operators.Classify.sqlFeatHash("tok", b)} AS f FROM ${p}tk),
-         ${p}cnt AS (SELECT f,
-             sum(CASE WHEN tgt THEN 1 ELSE 0 END)::BIGINT AS nt,
-             count(*)::BIGINT AS nr
-           FROM ${p}f GROUP BY f),
-         ${p}tot AS (SELECT sum(nt)::BIGINT AS tt, sum(nr)::BIGINT AS tr
-           FROM ${p}cnt),
-         ${p}docf AS (SELECT doc_id, f, count(*)::BIGINT AS c
-           FROM ${p}f GROUP BY 1, 2),
-         ${p}lw AS (SELECT ltln, lrln FROM (SELECT
-             ${operators.Classify.sqlDetLnCols("lt", s"tt + $b")},
-             ${operators.Classify.sqlDetLnCols("lr", s"tr + $b")}
-           FROM ${p}tot)),
-         ${p}dw AS (SELECT f, wi FROM (SELECT f,
-             ${operators.Classify.sqlDetLnCols("a", "nt + 1")},
-             ${operators.Classify.sqlDetLnCols("b", "nr + 1")},
-             floor(((aln - ltln) - (bln - lrln)) * ${operators.Classify.WeightGrid} + 0.5)::BIGINT
-               AS wi
-           FROM ${p}cnt CROSS JOIN ${p}lw)),
-         ${p}wd AS (SELECT
-             floor(((0.0 - ltln) - (0.0 - lrln)) * ${operators.Classify.WeightGrid} + 0.5)::BIGINT
-               AS wi0
-           FROM ${p}lw),
-         ${p}sc AS (SELECT doc_id, sum(c)::BIGINT AS n_tok,
-             (sum(c * coalesce(wi, wi0))::DOUBLE / sum(c)::DOUBLE)
-               / ${operators.Classify.WeightGrid} AS w
-           FROM ${p}docf LEFT JOIN ${p}dw USING (f) CROSS JOIN ${p}wd
-           GROUP BY doc_id)"""
-  }
-
-  /** Shared DSIR oracle body (tq2 weights / tq5 resample). Ends
-    * mid-SELECT (`… AS logratio`); callers append FROM/ORDER BY.
-    */
-  private lazy val sqlDsirWeights: String =
-    s"""WITH ${sqlDsirCtes("")}
-         SELECT doc_id, n_tok, ${sqlFround("w", 6)} AS logratio"""
-
-  /** [[sqlDsirWeights]] plus the 6dp logratio as exact BIGINT micro
-    * units — the r13 ranked chain's input (same inner floor as
-    * [[sqlFround]], without the divide-back). Callers append FROM sc.
-    */
-  private lazy val sqlDsirWeightsMicro: String =
-    s"""WITH ${sqlDsirCtes("")}
-         SELECT doc_id, n_tok, ${sqlFround("w", 6)} AS logratio,
-           ${sqlMicroFloor("w")} AS logratio_micro"""
 }

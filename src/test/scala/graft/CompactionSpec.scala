@@ -37,8 +37,8 @@ class CompactionSpec extends SparkSpec {
     val ev = Tables.load(spark, dir, "events").select(
       to_date(col("ts")).as("day"), col("event_type"), col("value"),
       col("user_id"))
-    SparkEntry.g11Land(ev, base)
-    SparkEntry.g11Summary(spark, base, None)
+    queries.CorpusQueries.g11Land(ev, base)
+    queries.CorpusQueries.g11Summary(spark, base, None)
       .write.mode("overwrite").partitionBy("day").parquet(s"$base/summary")
     val d0 = ev.groupBy().agg(min(col("day")).as("day"))
     val d0Name = d0.head().getDate(0).toString
@@ -49,7 +49,7 @@ class CompactionSpec extends SparkSpec {
     ev.join(broadcast(d0), "day").filter(col("user_id") % 2 === 0)
       .write.mode("overwrite").partitionBy("day")
       .option("partitionOverwriteMode", "dynamic").parquet(s"$base/store")
-    SparkEntry.g11Summary(spark, base, Some(d0))
+    queries.CorpusQueries.g11Summary(spark, base, Some(d0))
       .write.mode("overwrite").partitionBy("day")
       .option("partitionOverwriteMode", "dynamic").parquet(s"$base/summary")
     // every OTHER day's files: identical paths, sizes, mtimes

@@ -594,7 +594,7 @@ class MultimodalSpec extends SparkSpec {
         st = st * 6364136223846793005L + 1442695040888963407L
         ((st >>> 33) % 4).toInt
       }
-      val g = gifMulti(n, 1, SparkEntry.m12LzwEncode(fuzz, 2))
+      val g = gifMulti(n, 1, queries.MediaQueries.m12LzwEncode(fuzz, 2))
       val got = stats(g)
       val (fr, fg, fb, frw) = sums(fuzz.toSeq)
       assert((got.getLong(0), got.getLong(2)) == ((n.toLong, n.toLong)),

@@ -448,7 +448,7 @@ class PlanAuditSpec extends SparkSpec {
     // recurring serve/audit job replays must merge WITHOUT reshuffling
     // either stored side — re-shuffling the corpus per recurring job is
     // exactly the cost the build paid the bucketing to eliminate
-    val j = SparkEntry.g9EnrichJoin(spark, "/root/testdata/sf0.001")
+    val j = queries.CorpusQueries.g9EnrichJoin(spark, "/root/testdata/sf0.001")
     val plan = j.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), plan)
     assert(!plan.contains("Exchange hashpartitioning"), plan)
@@ -535,7 +535,7 @@ class PlanAuditSpec extends SparkSpec {
       .select(col("c_custkey"), col("c_acctbal"), col("c_nationkey"))
       .write.mode("overwrite").partitionBy("c_nationkey")
       .parquet(s"$base/customer")
-    val plan = SparkEntry.s14PrunedJoin(spark, dir, base)
+    val plan = queries.SourceQueries.s14PrunedJoin(spark, dir, base)
       .groupBy(col("n_name"))
       .agg(sum(col("c_acctbal")).as("sum_bal"))
       .queryExecution.executedPlan.toString
@@ -556,9 +556,9 @@ class PlanAuditSpec extends SparkSpec {
     val ev = Tables.load(spark, dir, "events").select(
       to_date(col("ts")).as("day"), col("event_type"), col("value"),
       col("user_id"))
-    SparkEntry.g11Land(ev, base)
+    queries.CorpusQueries.g11Land(ev, base)
     val d0 = ev.groupBy().agg(min(col("day")).as("day"))
-    val plan = SparkEntry.g11Summary(spark, base, Some(d0))
+    val plan = queries.CorpusQueries.g11Summary(spark, base, Some(d0))
       .queryExecution.executedPlan.toString
     // the restated-day slice joins the store on its PARTITION column
     // against a broadcast 1-row day frame: the build side must become
