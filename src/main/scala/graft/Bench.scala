@@ -3,58 +3,16 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // optional shuffle-partition override (defaults to cpus): at a fixed
-    // partition count, per-partition sort/fetch cost grows superlinearly
-    // with data — on a real cluster partitions scale with input size, so
-    // scale probes need this knob to separate engine cost from the
-    // local-mode fixed-32 artifact (r18 n2 probe)
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.driver()
     // warm up the JVM/codegen/scan paths so the first measured query
     // doesn't absorb session start-up; run in sorted order for
     // run-to-run comparability.
     Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())
     // optional args = query-name filter for iterating on hotspots; the
     // driver invokes with no args and gets the full suite.
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.toSet).toMap
-    val ordered = selected.toSeq.sortBy(_._1)
-    // System load average (1-min, process count) read before each rep:
-    // three rounds of bench artifacts have been poisoned by external
-    // machine load, so the artifact carries the evidence — a rep taken
-    // at load >> cpus is discountable mechanically instead of by a
-    // human re-running the suite.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def sysLoad: Double =
-      math.floor(osBean.getSystemLoadAverage * 100) / 100
-    // CPU-steal sampling (r17): four same-code full-suite runs spanned
-    // 310-370 s at recorded loadavg meds 3.3-4.9 — run-to-run totals
-    // vary beyond what THIS vm's runnable-thread count explains, which
-    // is the signature of hypervisor co-tenancy. loadavg cannot see
-    // stolen cycles; /proc/stat's steal field can. Sampled before and
-    // after each rep, reported as percent-of-jiffies per rep, with the
-    // suite med/p90 on the totals line — a driver window with steal>0
-    // is externally contended, CASE CLOSED from the artifact alone.
-    def stealRead(): (Long, Long) = try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        // jiffy total = user..steal (first 8 fields) ONLY: guest/
-        // guest_nice are already accounted inside user/nice, so summing
-        // them double-counts guest jiffies and understates steal% on
-        // VM-hosting machines (ADVICE r17)
-        (if (f.length > 7) f(7) else 0L, f.take(8).sum)
-      } finally src.close()
-    } catch { case _: Throwable => (-1L, -1L) }
-    def stealPct(a: (Long, Long), b: (Long, Long)): Double =
-      if (a._1 < 0 || b._1 < 0 || b._2 <= a._2) -1.0
-      else math.floor((b._1 - a._1) * 1000.0 / (b._2 - a._2)) / 10
+    val ordered = SparkEntry.select(args.toSeq).toSeq.sortBy(_._1)
+    import MachineWindow.{stealPct, stealRead, sysLoad}
     // Fixed-work calibration spin (r19, r18 verdict next-round 1c):
     // same-code driver totals have spanned 250-349 s across windows
     // that load and steal telemetry CANNOT distinguish (r18 closed at
@@ -87,11 +45,7 @@ object Bench {
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try {
-        // Full-evaluation sink: a count() lets Catalyst prune every
-        // unreferenced projection expression, timing a skeleton plan.
-        // Materializing the InternalRow iterator forces all columns.
-        fn(spark, sfDir).queryExecution.toRdd
-          .foreachPartition(it => it.foreach(_ => ()))
+        Frames.drain(fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       } catch {
         case e: Throwable =>

@@ -116,3 +116,41 @@ object BenchTelemetry {
   case class Snap(peakMB: Long, evictDisk: Long, drops: Long,
                   runMs: Long, cpuMs: Long, gcMs: Long, shufWriteMs: Long)
 }
+
+/** Machine-window samplers shared by the timing mains (Bench,
+  * ScaleProbe): three rounds of bench artifacts were poisoned by
+  * external machine load, so each rep carries the evidence and a
+  * contaminated rep is discountable mechanically.
+  */
+object MachineWindow {
+  private val osBean =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean
+
+  /** 1-min system load average (runnable-thread count), 2dp. */
+  def sysLoad: Double =
+    math.floor(osBean.getSystemLoadAverage * 100) / 100
+
+  /** (steal, total) jiffies from /proc/stat, (-1, -1) where unreadable.
+    * loadavg cannot see hypervisor co-tenancy (r17: four same-code
+    * suite runs spanned 310-370 s at load meds 3.3-4.9), nor tell a
+    * probe's own decaying wake from a co-tenant (r18 20× runs); the
+    * steal field counts only cycles the hypervisor gave someone else.
+    * The jiffy total is user..steal (first 8 fields) ONLY: guest/
+    * guest_nice are already accounted inside user/nice, so summing them
+    * double-counts guest jiffies and understates steal% on VM-hosting
+    * machines (ADVICE r17).
+    */
+  def stealRead(): (Long, Long) = try {
+    val src = scala.io.Source.fromFile("/proc/stat")
+    try {
+      val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
+      (if (f.length > 7) f(7) else 0L, f.take(8).sum)
+    } finally src.close()
+  } catch { case _: Throwable => (-1L, -1L) }
+
+  /** Steal percent of the jiffies between two [[stealRead]]s, 1dp;
+    * -1 when either read failed or no jiffies passed. */
+  def stealPct(a: (Long, Long), b: (Long, Long)): Double =
+    if (a._1 < 0 || b._1 < 0 || b._2 <= a._2) -1.0
+    else math.floor((b._1 - a._1) * 1000.0 / (b._2 - a._2)) / 10
+}

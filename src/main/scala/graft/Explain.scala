@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection helper: prints the formatted physical plan of the
   * named queries (all when none named) so shuffle/broadcast/pushdown
   * decisions are reviewable per query.
@@ -10,12 +8,10 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.local(8)
-    names.foreach { n =>
+    val spark = GraftSession.driver()
+    SparkEntry.select(args.drop(1).toSeq).toSeq.sortBy(_._1).foreach { case (n, fn) =>
       println(s"\n===== $n =====")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -76,6 +76,15 @@ object Frames {
     System.gc()
   }
 
+  /** Full-evaluation sink for timed runs: a count() lets Catalyst prune
+    * every unreferenced projection expression, timing a skeleton plan;
+    * materializing the InternalRow iterator forces all columns.
+    */
+  def drain(df: DataFrame): Unit =
+    df.queryExecution.toRdd.foreachPartition(
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+        it.foreach(_ => ()))
+
   /** Run two INDEPENDENT driver-side action chains concurrently
     * (optimization guide §2.6): Spark's scheduler happily runs several
     * jobs at once inside one application — actions are only sequential

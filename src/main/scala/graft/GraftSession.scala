@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  /** Apply engine defaults to an arbitrary builder (Verify/Bench build their
-    * own master/memory settings).
+  /** Apply engine defaults to an arbitrary builder (tests and the
+    * benchmark harness build their own master/memory settings).
     */
   def tune(b: SparkSession.Builder): SparkSession.Builder = b
     .withExtensions(new graft.expressions.GraftExtensions)
@@ -37,13 +37,23 @@ object GraftSession {
       sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
     .config("spark.ui.enabled", "false")
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = tune(
-      SparkSession.builder()
-        .master(s"local[$cores]")
-        .appName("graft")
-        .config("spark.sql.shuffle.partitions", cores.toString)
-    ).getOrCreate()
+  /** Driver cores, as the mains report them. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The session every driver main runs on: local[SPARK_GRAFT_CPUS]
+    * (default 4) with SPARK_GRAFT_SHUFFLE shuffle partitions (default:
+    * the core count). The shuffle override exists for scale probes: at
+    * a fixed partition count, per-partition sort/fetch cost grows
+    * superlinearly with data — on a real cluster partitions scale with
+    * input size, so the knob separates engine cost from the local-mode
+    * fixed-partition artifact (r18 n2 probe).
+    */
+  def driver(): SparkSession = {
+    val s = tune(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)))
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

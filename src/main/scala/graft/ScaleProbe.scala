@@ -75,12 +75,7 @@ object ScaleProbe {
     val copies = if (args.length > 1) args(1).toInt else 10
     val outBase = if (args.length > 2) args(2) else "/tmp/graft_scale10"
     val queries = if (args.length > 3) args.drop(3).toSeq else heavies
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.driver()
 
     require(copies >= 1 && copies <= ring.length,
       s"text perturbation is distinct for at most ${ring.length} copies")
@@ -118,8 +113,7 @@ object ScaleProbe {
     def timeOne(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
       try {
-        SparkEntry.queries(name)(spark, dir).queryExecution.toRdd
-          .foreachPartition(it => it.foreach(_ => ()))
+        Frames.drain(SparkEntry.queries(name)(spark, dir))
         (System.nanoTime() - t0) / 1e9
       } catch {
         case e: Throwable =>
@@ -134,25 +128,7 @@ object ScaleProbe {
     // verdict recorded in COVERAGE; with min-of-2 + the per-rep load on
     // the JSON line, a contaminated probe is discountable from the
     // artifact (ADVICE r17)
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def sysLoad: Double =
-      math.floor(osBean.getSystemLoadAverage * 100) / 100
-    // Per-rep CPU-steal percent, same sampler as Bench: the r18 20×
-    // runs showed the pre-rep loadavg is confounded by SELF-load — a
-    // 32-thread 60-90 s scaled rep leaves the NEXT rep's pre-sample
-    // reading its decaying runnable count, so load 12-20 before a rep
-    // does not distinguish co-tenancy from the probe's own wake. Steal
-    // does: it only counts cycles the hypervisor gave someone else.
-    def stealRead(): (Long, Long) = try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        (if (f.length > 7) f(7) else 0L, f.take(8).sum)
-      } finally src.close()
-    } catch { case _: Throwable => (-1L, -1L) }
-    def stealPct(a: (Long, Long), b: (Long, Long)): Double =
-      if (a._1 < 0 || b._1 < 0 || b._2 <= a._2) -1.0
-      else math.floor((b._1 - a._1) * 1000.0 / (b._2 - a._2)) / 10
+    import MachineWindow.{stealPct, stealRead, sysLoad}
     val rows = queries.map { name =>
       def rep(dir: String): (Double, Double, Double) = {
         val l = sysLoad

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,15 +7,8 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     // optional trailing args = query-name filter for local iteration;
     // the driver passes exactly two args and gets the full suite.
-    val selected =
-      if (rest.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(rest.toSet).toMap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(rest)
+    val spark = GraftSession.driver()
     new java.io.File(outDir).mkdirs()
     // A query that throws must leave a visible trace in the artifact,
     // not just a stderr line: round 8 lost five queries from the

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * shuffle-free, fused into the scan projection. At 100 TB these cost one
   * pass over the text bytes per row and nothing else. All of them are
   * deterministic and SQL-expressible, so each has a DuckDB oracle twin
-  * (built from the same constants — see SparkEntry).
+  * (built from the same constants — see graft.queries).
   */
 object TextAnalysis {
 

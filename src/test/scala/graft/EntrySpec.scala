@@ -10,6 +10,14 @@ class EntrySpec extends SparkSpec {
     assert(n > 0 && n <= 10)
   }
 
+  test("select: no names is the full suite; an unknown name throws and is named") {
+    assert(SparkEntry.select(Nil) eq SparkEntry.queries)
+    assert(SparkEntry.select(Seq("q5_topk")).keySet == Set("q5_topk"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q5_topk", "q5_topkk", "nope")))
+    assert(e.getMessage.contains("q5_topkk, nope"), e.getMessage)
+  }
+
   test("bench mins line stays tail-safe at 220 queries (and beyond)") {
     // The driver keeps only the last ~2000 chars of stdout and parses
     // the FINAL line; the mins line sits directly above it, so their

@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic (r19 optimization round): Spark JOBS per query — the
   * driver round-trip count that walls the scheduler-bound lifecycle
@@ -15,12 +14,7 @@ import org.apache.spark.sql.SparkSession
 object JobCountProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.driver()
     Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())
     val jobs = new AtomicLong(0L)
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -28,16 +22,11 @@ object JobCountProbe {
         jobs.incrementAndGet(): Unit
       }
     })
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.toSet).toMap
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.select(args.toSeq).toSeq.sortBy(_._1).foreach { case (name, fn) =>
       org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
       jobs.set(0L)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).queryExecution.toRdd.foreachPartition(
-        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-          it.foreach(_ => ()))
+      Frames.drain(fn(spark, sfDir))
       val dt = (System.nanoTime() - t0) / 1e9
       org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
       println(f"JOBCOUNT $name%-24s jobs=${jobs.get()}%4d wall=$dt%7.3f")

@@ -57,10 +57,7 @@ class JobCountSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     spark.listenerManager.register(w)
     try {
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd
-        .foreachPartition(
-          (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-            it.foreach(_ => ()))
+      Frames.drain(SparkEntry.queries(name)(spark, sfDir))
       org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
       (ctr.get(), writes.toArray(Array.empty[String]).toSeq)
     } finally {

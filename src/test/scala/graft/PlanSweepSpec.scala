@@ -1,7 +1,8 @@
 package graft
 
-/** Whole-suite meta-guards over the driver contract: every query has
-  * its DuckDB twin (the correctness gate can't silently weaken), no
+/** Whole-suite meta-guards over the driver contract: no two queries
+  * share a name (the Query type pairs each builder with its DuckDB
+  * twin, but the derived maps would silently keep one of two), no
   * query's physical plan contains a CartesianProduct — the one join
   * strategy that cannot survive a 100× scale-up under any partitioning
   * (BroadcastNestedLoopJoin over a 1-row stats side is fine and
@@ -15,11 +16,11 @@ package graft
   */
 class PlanSweepSpec extends SparkSpec {
 
-  test("every query has an oracle twin and every oracle has a query") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(missing.isEmpty, s"queries without oracleSql: $missing")
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql without query: $orphans")
+  test("registry names are unique") {
+    val dups = SparkEntry.registry.groupBy(_.name).collect {
+      case (name, qs) if qs.size > 1 => name
+    }
+    assert(dups.isEmpty, s"registered twice (the maps keep one): $dups")
   }
 
   // ONE sweep shared by the cartesian guard and the fingerprint golden:
@@ -190,9 +191,7 @@ class PlanSweepSpec extends SparkSpec {
         }
       val initial = df.queryExecution.executedPlan.toString
       val pre = planCounts(df.queryExecution.executedPlan)
-      try df.queryExecution.toRdd.foreachPartition(
-        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-          it.foreach(_ => ()))
+      try Frames.drain(df)
       catch { case e: Throwable =>
         fail(s"$name threw at execution: ${e.getMessage}")
       }

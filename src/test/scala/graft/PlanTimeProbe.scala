@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic (r18 optimization round): per query, how much wall is
   * driver-side plan construction+optimization vs distributed execution.
   * Prints one line per query: name, build+analyze+optimize seconds
@@ -10,25 +8,14 @@ import org.apache.spark.sql.SparkSession
 object PlanTimeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.driver()
     Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.toSet).toMap
-    val ordered = selected.toSeq.sortBy(_._1)
-    val rows = ordered.map { case (name, fn) =>
+    val rows = SparkEntry.select(args.toSeq).toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val plan = df.queryExecution.executedPlan
       val t1 = System.nanoTime()
-      df.queryExecution.toRdd.foreachPartition(
-        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-          it.foreach(_ => ()))
+      Frames.drain(df)
       val t2 = System.nanoTime()
       Frames.scrubSession(spark)
       val planS = (t1 - t0) / 1e9
