@@ -1,18 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
     val spark = GraftSession.driver()
-    // warm up the JVM/codegen/scan paths so the first measured query
-    // doesn't absorb session start-up; run in sorted order for
-    // run-to-run comparability.
-    Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())
+    Harness.warm(spark, sfDir)
     // optional args = query-name filter for iterating on hotspots; the
-    // driver invokes with no args and gets the full suite.
+    // driver invokes with no args and gets the full suite. Sorted order
+    // for run-to-run comparability.
     val ordered = SparkEntry.select(args.toSeq).toSeq.sortBy(_._1)
-    import MachineWindow.{stealPct, stealRead, sysLoad}
     // Fixed-work calibration spin (r19, r18 verdict next-round 1c):
     // same-code driver totals have spanned 250-349 s across windows
     // that load and steal telemetry CANNOT distinguish (r18 closed at
@@ -34,39 +30,6 @@ object Bench {
     }
     // warm the spin's JIT so rep samples measure the machine, not C2
     var calWarm = 0; while (calWarm < 20) { calSpin(); calWarm += 1 }
-    // Storage/eviction telemetry (r15 verdict #2): per-rep peak storage
-    // memory and eviction counters next to the per-rep load, so the
-    // recurring "untouched heavy query 2-3× slower at the driver"
-    // anomaly (d4 r14, d22 r15) is attributable from the artifact —
-    // evictDisk > 0 means the rep's persists were thrashing under
-    // memory pressure; zero with elevated load means a hot machine.
-    val telem = new BenchTelemetry
-    spark.sparkContext.addSparkListener(telem)
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try {
-        Frames.drain(fn(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-          -1.0
-      }
-    }
-    // Between queries, restore isolation (r13): drop every cached
-    // Dataset and persistent RDD (superseded localCheckpoint frames
-    // included — Dataset.unpersist misses those) and let the context
-    // cleaner reclaim dead shuffle/broadcast state via an explicit GC.
-    // BENCH_r12 measured the alternative: 208×2 queries in one JVM
-    // accumulated enough leaked storage that queries sitting after the
-    // checkpoint-heavy block in suite order read 6–29× slower than the
-    // same code isolated — the artifact was measuring leaked state,
-    // not code. The scrub runs OUTSIDE every timer, so per-query
-    // numbers are unaffected except by the isolation it restores.
-    // blocking scrub (Frames.scrubSession) runs OUTSIDE every timer, so
-    // waiting is free — an async unpersist could still be dropping
-    // blocks when the next query's timer starts
-    def scrub(): Unit = Frames.scrubSession(spark)
     // min of two runs: single-shot timings swing ±2-8× with machine
     // load, making round-over-round comparison meaningless; the min is
     // the stable "code speed" estimate and stays comparable. The two
@@ -76,28 +39,14 @@ object Bench {
     // spike, indistinguishable from a real regression.
     val calSamples = scala.collection.mutable.ArrayBuffer[Double]()
     def pass() = ordered.map { case (name, fn) =>
-      val l = sysLoad
       calSamples += calSpin() // outside the timer, one sample per rep
-      val st0 = stealRead()
-      telem.reset()
-      val t = timeOne(name, fn)
-      // the block-update events post async; drain before the snapshot
-      // so the rep's own tail events can't bleed into the next rep
-      // (drain and snapshot both run OUTSIDE the timer)
-      org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
-      val m = telem.snapshot()
-      val sp = stealPct(st0, stealRead())
-      scrub()
-      (name, t, l, m, sp)
+      name -> Harness.run(spark, sfDir, name, fn)
     }
     val pass1 = pass()
     val pass2 = pass()
-    val results = pass1.zip(pass2).map {
-      case ((name, t1, l1, m1, s1), (_, t2, l2, m2, s2)) =>
-        name -> (Seq(t1, t2), Seq(l1, l2), Seq(m1, m2), Seq(s1, s2))
-    }
-    val mins = results.map { case (k, (ts, _, _, _)) =>
-      k -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
+    val results = pass1.zip(pass2).map { case ((k, r1), (_, r2)) => k -> Seq(r1, r2) }
+    val mins = results.map { case (k, rs) =>
+      k -> (if (rs.exists(_.wall < 0)) -1.0 else rs.map(_.wall).min)
     }.toMap
     // Suite-level load summary for the TOTALS line (r16 verdict #1):
     // the per-rep load series lives on bench_diag, which the driver's
@@ -115,31 +64,27 @@ object Bench {
         v(math.min(v.size - 1, (v.size * p).toInt))
       s"[${pct(0.5)},${pct(0.9)}]"
     }
-    val loadSummary = medP90(results.flatMap(_._2._2))
+    val loadSummary = medP90(results.flatMap(_._2.map(_.load)))
     // per-rep CPU-steal med/p90 (percent; -1 samples = /proc/stat
     // unavailable, excluded): steal > 0 at the driver = hypervisor
     // co-tenancy that loadavg cannot see
-    val stealSummary = medP90(results.flatMap(_._2._4).filter(_ >= 0))
+    val stealSummary = medP90(results.flatMap(_._2.map(_.steal)).filter(_ >= 0))
     val qs = mins.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // {"name":[rep1,rep2],…}: one field of each rep per query
+    def perRep(rows: Seq[(String, Seq[Harness.Run])])(f: Harness.Run => Any): String =
+      rows.map { case (k, rs) => "\"" + k + "\":[" + rs.map(f).mkString(",") + "]" }
+        .mkString("{", ",", "}")
     // Both raw timings per query: a loaded machine shows as BOTH runs
     // slow across the board, distinguishable from a real code regression
     // without a re-run. The min stays the headline comparison number.
-    val runs = results.map { case (k, (ts, _, _, _)) =>
-      s"\"" + k + "\":[" + ts.mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val runs = perRep(results)(_.wall)
     // 1-min system load sampled immediately before each rep: a rep taken
     // at load far above the allotted cpus is externally contaminated and
     // its timing should be discounted by the reader.
-    val loads = results.map { case (k, (_, ls, _, _)) =>
-      s"\"" + k + "\":[" + ls.mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val loads = perRep(results)(_.load)
     // Full per-rep storage telemetry: [peakMB, evictDisk, drops] per rep.
-    val memFull = results.map { case (k, (_, _, ms, _)) =>
-      s"\"" + k + "\":[" +
-        ms.map(m => s"[${m.peakMB},${m.evictDisk},${m.drops}]")
-          .mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val memFull = perRep(results)(r => s"[${r.m.peakMB},${r.m.evictDisk},${r.m.drops}]")
     // Per-rep task-metric decomposition for the slowest queries (r16
     // verdict #2): [runMs, cpuMs, gcMs, shufWriteMs] per rep. With the
     // rep's wall time (on "runs") and the slot count, one read
@@ -149,11 +94,8 @@ object Bench {
     // alone. Top 20 by min keeps the line bounded; the anomaly class
     // is always a heavy query.
     val slowest = mins.toSeq.sortBy(-_._2).take(20).map(_._1).toSet
-    val taskFull = results.filter(r => slowest(r._1)).map { case (k, (_, _, ms, _)) =>
-      s"\"" + k + "\":[" +
-        ms.map(m => s"[${m.runMs},${m.cpuMs},${m.gcMs},${m.shufWriteMs}]")
-          .mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val taskFull = perRep(results.filter(r => slowest(r._1)))(r =>
+      s"[${r.m.runMs},${r.m.cpuMs},${r.m.gcMs},${r.m.shufWriteMs}]")
     val total = mins.values.filter(_ >= 0).sum
     // The driver captures only the LAST ~2000 characters of output, so the
     // headline payload (per-query mins) must fit the tail: with 125+
@@ -168,9 +110,7 @@ object Bench {
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val failMap = mins.toSeq.filter(_._2 < 0).map(_._1).sorted
       .map("\"" + short(_) + "\":-1").mkString("{", ",", "}")
-    val steals = results.map { case (k, (_, _, _, sps)) =>
-      s"\"" + k + "\":[" + sps.mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val steals = perRep(results)(_.steal)
     val sfName = new java.io.File(sfDir).getName
     println(s"""{"metric":"bench_diag","queries_full":$qs,"runs":$runs,"loads":$loads,"mem":$memFull,"steals":$steals,"tasks":$taskFull}""")
     val minsStr = minsLine(mins.toSeq)
@@ -194,18 +134,17 @@ object Bench {
     // second) from scheduler-bound sequential DAGs (runS ≪ wall×slots).
     val slowStr = mins.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(3)
       .map(_._1).flatMap { k =>
-        results.find(_._1 == k).map { case (_, (ts, _, ms, _)) =>
-          val valid = ts.zipWithIndex.filter(_._1 >= 0)
-          val i = if (valid.isEmpty) 0 else valid.minBy(_._1)._2
-          val m = ms(i)
+        results.find(_._1 == k).map { case (_, rs) =>
+          val valid = rs.filter(_.wall >= 0)
+          val m = (if (valid.isEmpty) rs.head else valid.minBy(_.wall)).m
           def s1(ms: Long): Double = math.floor(ms / 100.0) / 10
           s"${short(k)}:${s1(m.runMs)}:${s1(m.cpuMs)}"
         }
       }.mkString(",")
     val memBudget = 2000 - minsStr.length - totalStr.length - 8
     val memStr = memLine(
-      results.map { case (k, (_, ls, ms, _)) =>
-        (k, ms.map(m => (m.peakMB, m.evictDisk, m.drops)), ls)
+      results.map { case (k, rs) =>
+        (k, rs.map(r => (r.m.peakMB, r.m.evictDisk, r.m.drops)), rs.map(_.load))
       }, memBudget, slowStr)
     if (memStr.nonEmpty) println(memStr)
     println(minsStr)

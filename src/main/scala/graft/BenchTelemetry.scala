@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Per-query storage-memory telemetry for the bench (r15 verdict #2):
   * the d4(r14)/d22(r15) anomaly class — an untouched heavy query 2-3×
@@ -45,6 +45,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, Spa
   *  - and the scheduling gap is wall × slots − runMs: tasks that
   *    never got a core at all.
   *
+  * `jobs` counts the rep's Spark jobs (job-start events): the driver
+  * round trips that wall the scheduler-bound lifecycle class.
+  *
   * Counters reset per rep ([[reset]]); the block→memSize map persists
   * across reps so deltas stay exact for blocks that outlive a scrub
   * (warmup broadcasts). The caller must drain the async listener bus
@@ -60,6 +63,11 @@ class BenchTelemetry extends SparkListener {
   private val cpuMsCtr = new AtomicLong(0L)
   private val gcMsCtr = new AtomicLong(0L)
   private val swMsCtr = new AtomicLong(0L)
+  private val jobsCtr = new AtomicLong(0L)
+
+  override def onJobStart(ev: SparkListenerJobStart): Unit = {
+    jobsCtr.incrementAndGet(): Unit
+  }
 
   override def onTaskEnd(ev: SparkListenerTaskEnd): Unit = {
     val m = ev.taskMetrics
@@ -102,25 +110,28 @@ class BenchTelemetry extends SparkListener {
     memOf.clear(); cur.set(0L); peak.set(0L)
     evictDiskCtr.set(0L); dropCtr.set(0L)
     runMsCtr.set(0L); cpuMsCtr.set(0L); gcMsCtr.set(0L); swMsCtr.set(0L)
+    jobsCtr.set(0L)
   }
 
   /** Everything accumulated since the last [[reset]]. Drain the
     * listener bus first (block and task-end events both post async). */
   def snapshot(): BenchTelemetry.Snap =
     BenchTelemetry.Snap(peak.get() >> 20, evictDiskCtr.get(), dropCtr.get(),
-      runMsCtr.get(), cpuMsCtr.get(), gcMsCtr.get(), swMsCtr.get())
+      runMsCtr.get(), cpuMsCtr.get(), gcMsCtr.get(), swMsCtr.get(),
+      jobsCtr.get())
 }
 
 object BenchTelemetry {
-  /** One rep's telemetry: storage triple + task-metric sums (ms). */
+  /** One rep's telemetry: storage triple, task-metric sums (ms), jobs. */
   case class Snap(peakMB: Long, evictDisk: Long, drops: Long,
-                  runMs: Long, cpuMs: Long, gcMs: Long, shufWriteMs: Long)
+                  runMs: Long, cpuMs: Long, gcMs: Long, shufWriteMs: Long,
+                  jobs: Long)
 }
 
-/** Machine-window samplers shared by the timing mains (Bench,
-  * ScaleProbe): three rounds of bench artifacts were poisoned by
-  * external machine load, so each rep carries the evidence and a
-  * contaminated rep is discountable mechanically.
+/** Machine-window samplers behind every timed run ([[Harness.run]]):
+  * three rounds of bench artifacts were poisoned by external machine
+  * load, so each rep carries the evidence and a contaminated rep is
+  * discountable mechanically.
   */
 object MachineWindow {
   private val osBean =

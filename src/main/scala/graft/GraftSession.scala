@@ -26,15 +26,12 @@ object GraftSession {
     // which Spark only reads as long; Tables.load converts back (µs).
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-    // shuffle/spill/broadcast codec, env-parameterized for same-binary
-    // A/Bs (r18 optimization round; guide §2.3 "measure both"). The
-    // paired ABBA A/Bs split by cost class: zstd won the shuffle-IO
-    // class (d15 −0.5 s, d18/n2 −0.3-0.6 s) and LOST the CPU-priced
-    // class (d22/g4/a7 +0.3-0.6 s) — no suite-wide winner, so the
-    // default stays lz4 and the knob carries the per-workload choice;
+    // shuffle/spill/broadcast codec. The r18 paired ABBA A/Bs split by
+    // cost class: zstd won the shuffle-IO class (d15 −0.5 s, d18/n2
+    // −0.3-0.6 s) and LOST the CPU-priced class (d22/g4/a7 +0.3-0.6 s)
+    // — no suite-wide winner, so lz4 (COVERAGE.md, OPTIMIZATION_r18.md);
     // at 100 TB a network-bound shuffle profile justifies zstd.
-    .config("spark.io.compression.codec",
-      sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
+    .config("spark.io.compression.codec", "lz4")
     .config("spark.ui.enabled", "false")
 
   /** Driver cores, as the mains report them. */

@@ -30,14 +30,13 @@ import org.apache.spark.sql.functions._
   * Run: `sbt "runMain graft.ScaleProbe [sfDir] [copies] [outBase]
   * [query...]"` — defaults sf0.1 × 10 over the verdict's top-10
   * heavies. Each query runs TWICE against each dir (interleaved
-  * base/scaled/base/scaled, Bench's scrub between reps, 1-min load
-  * sampled before each), and one JSON line per query reports
-  * {q, base_sec, scaled_sec, ratio, base_reps, scaled_reps, loads,
-  * steals}
-  * with base/scaled the min-of-2 — matching Bench's rationale: a
-  * single-shot ratio inherits the ±2-8× load swing and can flip a
-  * superlinearity verdict. Results land in COVERAGE.md's scale-probe
-  * table; this main is a diagnostic, not a driver surface.
+  * base/scaled/base/scaled, each a [[Harness.run]]), and one JSON line
+  * per query reports {q, base_sec, scaled_sec, ratio, base_reps,
+  * scaled_reps, loads, steals} with base/scaled the min-of-2 —
+  * matching Bench's rationale: a single-shot ratio inherits the ±2-8×
+  * load swing and can flip a superlinearity verdict. Results land in
+  * COVERAGE.md's scale-probe table; this main is a diagnostic, not a
+  * driver surface.
   */
 object ScaleProbe {
 
@@ -75,6 +74,7 @@ object ScaleProbe {
     val copies = if (args.length > 1) args(1).toInt else 10
     val outBase = if (args.length > 2) args(2) else "/tmp/graft_scale10"
     val queries = if (args.length > 3) args.drop(3).toSeq else heavies
+    val byName = SparkEntry.select(queries)
     val spark = GraftSession.driver()
 
     require(copies >= 1 && copies <= ring.length,
@@ -106,41 +106,20 @@ object ScaleProbe {
     marker.createNewFile(): Unit
 
     // warm both dirs' scans so neither side pays first-touch IO
-    Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())
-    Tables.names.foreach(t => Tables.load(spark, dataDir, t).count())
+    Harness.warm(spark, sfDir)
+    Harness.warm(spark, dataDir)
 
-    def scrub(): Unit = Frames.scrubSession(spark)
-    def timeOne(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        Frames.drain(SparkEntry.queries(name)(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"SCALE FAIL $name: ${e.getMessage}")
-          -1.0
-      }
-    }
-    // min-of-2 per dir, reps interleaved base/scaled/base/scaled with a
-    // scrub between each, and the 1-min load sampled before every rep:
-    // single-shot ratios inherit the ±2-8× machine-load swing the bench
+    // min-of-2 per dir, reps interleaved base/scaled/base/scaled, each
+    // a Harness.run (scrubbed, 1-min load and steal sampled): single-
+    // shot ratios inherit the ±2-8× machine-load swing the bench
     // documentation pins, so one noisy rep could flip a 'superlinear'
     // verdict recorded in COVERAGE; with min-of-2 + the per-rep load on
     // the JSON line, a contaminated probe is discountable from the
     // artifact (ADVICE r17)
-    import MachineWindow.{stealPct, stealRead, sysLoad}
     val rows = queries.map { name =>
-      def rep(dir: String): (Double, Double, Double) = {
-        val l = sysLoad
-        val st0 = stealRead()
-        val t = timeOne(name, dir)
-        val st = stealPct(st0, stealRead())
-        scrub()
-        (t, l, st)
-      }
-      val reps = Seq(rep(sfDir), rep(dataDir), rep(sfDir), rep(dataDir))
-      val Seq((b1, l1, st1), (s1, l2, st2), (b2, l3, st3), (s2, l4, st4)) =
-        reps
+      val reps = Seq(sfDir, dataDir, sfDir, dataDir)
+        .map(Harness.run(spark, _, name, byName(name)))
+      val Seq(b1, s1, b2, s2) = reps.map(_.wall)
       def minPos(a: Double, b: Double): Double = {
         val v = Seq(a, b).filter(_ >= 0)
         if (v.isEmpty) -1.0 else v.min
@@ -149,7 +128,7 @@ object ScaleProbe {
       val s = minPos(s1, s2)
       val ratio = if (b > 0 && s > 0) math.floor(s / b * 100) / 100 else -1.0
       def f3(v: Double): Double = math.floor(v * 1000) / 1000
-      println(s"""{"q":"$name","base_sec":${f3(b)},"scaled_sec":${f3(s)},"ratio":$ratio,"base_reps":[${f3(b1)},${f3(b2)}],"scaled_reps":[${f3(s1)},${f3(s2)}],"loads":[$l1,$l2,$l3,$l4],"steals":[$st1,$st2,$st3,$st4]}""")
+      println(s"""{"q":"$name","base_sec":${f3(b)},"scaled_sec":${f3(s)},"ratio":$ratio,"base_reps":[${f3(b1)},${f3(b2)}],"scaled_reps":[${f3(s1)},${f3(s2)}],"loads":[${reps.map(_.load).mkString(",")}],"steals":[${reps.map(_.steal).mkString(",")}]}""")
       (name, b, s, ratio)
     }
     val t = rows.map(r => s"${r._1}:${r._4}").mkString(",")

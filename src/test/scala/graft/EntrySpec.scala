@@ -18,6 +18,19 @@ class EntrySpec extends SparkSpec {
     assert(e.getMessage.contains("q5_topkk, nope"), e.getMessage)
   }
 
+  test("Harness.run: a throw reads -1 and is scrubbed; a real run splits its wall") {
+    val failed = Harness.run(spark, "/root/testdata/sf0.001", "throws", (s, _) => {
+      s.range(10).rdd.persist().count()
+      throw new IllegalStateException("boom")
+    })
+    assert(failed.wall == -1.0)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    val r = Harness.run(spark, "/root/testdata/sf0.001", "s19_incremental_listing",
+      SparkEntry.queries("s19_incremental_listing"))
+    assert(r.wall > 0 && r.plan >= 0 && r.exec >= 0 && r.plan + r.exec <= r.wall + 1e-9, r)
+    assert(r.m.jobs >= 1, r)
+  }
+
   test("bench mins line stays tail-safe at 220 queries (and beyond)") {
     // The driver keeps only the last ~2000 chars of stdout and parses
     // the FINAL line; the mins line sits directly above it, so their

@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -10,7 +8,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * commit/hwm markers became FS-direct (no spark.range(1) write job),
   * the FileManifest and BM25 meta became driver-side text IO, and the
   * s19 tick report returns literal rows — each removed round trip is
-  * one fewer Spark job. Measured at sf0.01/local[8] (JobCountProbe):
+  * one fewer Spark job. Measured at sf0.01/local[8]:
   *
   *   s19_incremental_listing  24 -> 14
   *   v17_bm25_indexed         50 -> 39
@@ -26,6 +24,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * The second group was measured at this spec's own sf0.001/local[4]:
   * tq14 58, tq3 36, g14 47, g2 17, g3 18, g5 18, g6 21 jobs.
   *
+  * Jobs are counted by [[Harness.run]] through the shared
+  * [[BenchTelemetry]] listener, the count `graft.Profile` prints:
+  * re-measure with `graft.Profile <query>` at sf0.001, local[4].
+  *
   * Each query's file-write commands are also recorded: commit markers,
   * water lines and the BM25 meta are FS-API writes, so no Spark
   * write may target a `commits/`, `hwm/` or `meta/` dir. g2, g5 and
@@ -37,12 +39,6 @@ class JobCountSpec extends SparkSpec {
 
   /** (jobs, output paths of the file-write commands) of one query. */
   private def jobsOf(name: String): (Long, Seq[String]) = {
-    val ctr = new AtomicLong(0L)
-    val l = new SparkListener {
-      override def onJobStart(ev: SparkListenerJobStart): Unit = {
-        ctr.incrementAndGet(): Unit
-      }
-    }
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val w = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -54,17 +50,12 @@ class JobCountSpec extends SparkSpec {
       override def onFailure(f: String, qe: QueryExecution,
                              e: Exception): Unit = ()
     }
-    spark.sparkContext.addSparkListener(l)
     spark.listenerManager.register(w)
     try {
-      Frames.drain(SparkEntry.queries(name)(spark, sfDir))
-      org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
-      (ctr.get(), writes.toArray(Array.empty[String]).toSeq)
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.listenerManager.unregister(w)
-      Frames.scrubSession(spark)
-    }
+      val r = Harness.run(spark, sfDir, name, SparkEntry.queries(name))
+      assert(r.wall >= 0, s"$name threw (its message is on stderr)")
+      (r.m.jobs, writes.toArray(Array.empty[String]).toSeq)
+    } finally spark.listenerManager.unregister(w)
   }
 
   /** One job-budget test; `writesFiles` = false skips only the check
@@ -77,7 +68,7 @@ class JobCountSpec extends SparkSpec {
         s"$name ran $n jobs (> $bound) — either a lifecycle round-trip " +
           "class (marker write job / manifest parquet job / tick stage " +
           "write) has returned, or the query legitimately grew: then " +
-          "re-measure with JobCountProbe and raise the budget")
+          "re-measure with graft.Profile and raise the budget")
       if (writesFiles)
         assert(writes.nonEmpty, s"$name: no file-write command was recorded")
       val marker = writes.filter(_.matches(".*/(commits|hwm|meta)(/.*)?"))

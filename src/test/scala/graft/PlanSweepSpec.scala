@@ -23,26 +23,67 @@ class PlanSweepSpec extends SparkSpec {
     assert(dups.isEmpty, s"registered twice (the maps keep one): $dups")
   }
 
-  // ONE sweep shared by the cartesian guard and the fingerprint golden:
-  // building all ~220 plans at sf0.001 is the expensive part (lifecycle
-  // queries run their index builds at construction time).
-  private lazy val planStrings: Seq[(String, String)] = {
+  // ONE sweep shared by the cartesian guard, the fingerprint golden and
+  // the window census: building all ~220 plans at sf0.001 is the
+  // expensive part (lifecycle queries run their index builds at
+  // construction time). Per query: the plan string, and whether a
+  // WindowExec without PARTITION BY runs all its rows on one task.
+  private lazy val sweep: Seq[(String, String, Boolean)] = {
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val plan =
-        try fn(spark, dir).queryExecution.executedPlan.toString
+        try fn(spark, dir).queryExecution.executedPlan
         catch { case e: Throwable =>
           fail(s"$name threw at plan time: ${e.getMessage}")
         }
-      (name, plan)
+      val oneTask = nodes(plan).exists {
+        case w: org.apache.spark.sql.execution.window.WindowExec =>
+          w.partitionSpec.isEmpty
+        case _ => false
+      }
+      (name, plan.toString, oneTask)
     }
   }
 
+  /** Queries whose plan holds an un-partitioned window (`Window.orderBy`
+    * with no `partitionBy`): running sums over per-distinct-score or
+    * per-bucket rows, whose one task grows with the distinct scores.
+    * Pinned so the class can only shrink (ROADMAP open item). */
+  private val oneTaskWindows = Set(
+    "a11_stage_deltas", "tq11_decile_lift", "v4_tf_embedding",
+    // Classify.evalBinary / thresholdForKeepRate
+    "tq4_classifier_eval", "tq6_score_threshold", "tq13_model_compare",
+    // Sampling.withTokenOffsets' census
+    "x3_curriculum", "x5_dsir_token_resample", "x6_curriculum_sketch",
+    "x15_sequence_pack", "x16_pack_fragmentation")
+
+  test("un-partitioned windows appear only at the pinned sites (sf0.001 sweep)") {
+    val found = sweep.collect { case (name, _, true) => name }.toSet
+    val added = (found -- oneTaskWindows).toSeq.sorted
+    assert(added.isEmpty,
+      s"new un-partitioned window (runs on one task) in: ${added.mkString(", ")}")
+  }
+
   test("no query plans a CartesianProduct (sf0.001 sweep)") {
-    val bad = planStrings.collect {
-      case (name, plan) if plan.contains("CartesianProduct") => name
+    val bad = sweep.collect {
+      case (name, plan, _) if plan.contains("CartesianProduct") => name
     }
     assert(bad.isEmpty, s"CartesianProduct in: $bad")
+  }
+
+  /** Every node of a physical plan, subqueries included, with AQE
+    * wrappers (QueryStageExec.plan) and ReusedExchangeExec resolved back
+    * to the original subtree. */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val below = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case o => o.children.flatMap(nodes)
+    }
+    (p +: below) ++ p.subqueries.flatMap(nodes)
   }
 
   /** Reuse-invariant join/exchange counts of an adaptive plan (r18):
@@ -55,27 +96,16 @@ class PlanSweepSpec extends SparkSpec {
     * and is the regression r17 verdict #2 wanted caught, is the
     * MONOTONE property: runtime may only promote (smj/shj → bhj),
     * never demote, and may never introduce a CartesianProduct. The
-    * walk resolves AQE wrappers (QueryStageExec.plan) and
-    * ReusedExchangeExec back to the original subtree so counts are
-    * independent of print layout and reuse boundaries.
+    * [[nodes]] walk makes the counts independent of print layout and
+    * reuse boundaries.
     */
   private def planCounts(root: org.apache.spark.sql.execution.SparkPlan): Map[String, Int] = {
     import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins._
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
     import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val below = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case r: ReusedExchangeExec => walk(r.child)
-        case o => o.children.flatMap(walk)
-      }
-      (p +: below) ++ p.subqueries.flatMap(walk)
-    }
-    val ns = walk(root)
+    val ns = nodes(root)
     def c(f: PartialFunction[SparkPlan, Boolean]): Int =
       ns.count(n => f.applyOrElse(n, (_: SparkPlan) => false))
     Map(
@@ -155,7 +185,7 @@ class PlanSweepSpec extends SparkSpec {
 
   test("plan-shape fingerprints match the committed golden (sf0.001)") {
     checkGolden("plan_fingerprints.txt",
-      planStrings.map { case (name, plan) => (name, fingerprint(plan)) },
+      sweep.map { case (name, plan, _) => (name, fingerprint(plan)) },
       requireAll = true)
   }
 
