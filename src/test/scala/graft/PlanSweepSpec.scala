@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+
 /** Whole-suite meta-guards over the driver contract: no two queries
   * share a name (the Query type pairs each builder with its DuckDB
   * twin, but the derived maps would silently keep one of two), no
@@ -74,7 +76,7 @@ class PlanSweepSpec extends SparkSpec {
   /** Every node of a physical plan, subqueries included, with AQE
     * wrappers (QueryStageExec.plan) and ReusedExchangeExec resolved back
     * to the original subtree. */
-  private def nodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     val below = p match {
@@ -99,7 +101,7 @@ class PlanSweepSpec extends SparkSpec {
     * [[nodes]] walk makes the counts independent of print layout and
     * reuse boundaries.
     */
-  private def planCounts(root: org.apache.spark.sql.execution.SparkPlan): Map[String, Int] = {
+  private def planCounts(root: SparkPlan): Map[String, Int] = {
     import org.apache.spark.sql.execution._
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins._
