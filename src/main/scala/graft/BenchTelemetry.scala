@@ -46,7 +46,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, Spa
   *    never got a core at all.
   *
   * `jobs` counts the rep's Spark jobs (job-start events): the driver
-  * round trips that wall the scheduler-bound lifecycle class.
+  * round trips that wall the scheduler-bound lifecycle class; `tasks`
+  * counts its ended tasks, the width its stages actually ran at.
   *
   * Counters reset per rep ([[reset]]); the block→memSize map persists
   * across reps so deltas stay exact for blocks that outlive a scrub
@@ -64,12 +65,14 @@ class BenchTelemetry extends SparkListener {
   private val gcMsCtr = new AtomicLong(0L)
   private val swMsCtr = new AtomicLong(0L)
   private val jobsCtr = new AtomicLong(0L)
+  private val tasksCtr = new AtomicLong(0L)
 
   override def onJobStart(ev: SparkListenerJobStart): Unit = {
     jobsCtr.incrementAndGet(): Unit
   }
 
   override def onTaskEnd(ev: SparkListenerTaskEnd): Unit = {
+    tasksCtr.incrementAndGet()
     val m = ev.taskMetrics
     if (m != null) {
       runMsCtr.addAndGet(m.executorRunTime)
@@ -110,7 +113,7 @@ class BenchTelemetry extends SparkListener {
     memOf.clear(); cur.set(0L); peak.set(0L)
     evictDiskCtr.set(0L); dropCtr.set(0L)
     runMsCtr.set(0L); cpuMsCtr.set(0L); gcMsCtr.set(0L); swMsCtr.set(0L)
-    jobsCtr.set(0L)
+    jobsCtr.set(0L); tasksCtr.set(0L)
   }
 
   /** Everything accumulated since the last [[reset]]. Drain the
@@ -118,14 +121,15 @@ class BenchTelemetry extends SparkListener {
   def snapshot(): BenchTelemetry.Snap =
     BenchTelemetry.Snap(peak.get() >> 20, evictDiskCtr.get(), dropCtr.get(),
       runMsCtr.get(), cpuMsCtr.get(), gcMsCtr.get(), swMsCtr.get(),
-      jobsCtr.get())
+      jobsCtr.get(), tasksCtr.get())
 }
 
 object BenchTelemetry {
-  /** One rep's telemetry: storage triple, task-metric sums (ms), jobs. */
+  /** One rep's telemetry: storage triple, task-metric sums (ms), jobs,
+    * tasks. */
   case class Snap(peakMB: Long, evictDisk: Long, drops: Long,
                   runMs: Long, cpuMs: Long, gcMs: Long, shufWriteMs: Long,
-                  jobs: Long)
+                  jobs: Long, tasks: Long)
 }
 
 /** Machine-window samplers behind every timed run ([[Harness.run]]):

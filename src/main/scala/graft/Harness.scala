@@ -7,8 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Profile) and JobCountSpec.
   *
   * A run times build → `executedPlan` → [[Frames.drain]], which splits
-  * its wall into driver-side plan construction and execution at no
-  * extra cost (`drain` forces the same lazy `executedPlan`). Around the
+  * its wall into the builder, driver-side planning and execution at no
+  * extra cost (`drain` forces the same lazy `executedPlan`). The build
+  * part is apart because lifecycle builders run Spark jobs eagerly
+  * (index builds, store appends, staging writes). Around the
   * timer, and never inside it:
   *  - the 1-min load and CPU steal of the window are sampled
   *    ([[MachineWindow]]), so a contaminated run is discountable from
@@ -23,12 +25,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Harness {
 
-  /** One run: `wall` seconds (-1 when the query threw), its `plan`
-    * (build through `executedPlan`) and `exec` (drain) parts, the
-    * printed plan's line count, the window's `load` and `steal`, and
-    * the listener's per-run telemetry. */
-  case class Run(wall: Double, plan: Double, exec: Double, nodes: Int,
-                 load: Double, steal: Double, m: BenchTelemetry.Snap)
+  /** One run: `wall` seconds (-1 when the query threw), its `build`
+    * (the builder), `plan` (`executedPlan`) and `exec` (drain) parts,
+    * the printed plan's line count, the window's `load` and `steal`,
+    * and the listener's per-run telemetry. */
+  case class Run(wall: Double, build: Double, plan: Double, exec: Double,
+                 nodes: Int, load: Double, steal: Double, m: BenchTelemetry.Snap)
 
   /** Touch every table once so the first timed run does not absorb
     * session start-up, codegen and first-scan IO. */
@@ -52,24 +54,25 @@ object Harness {
     Bus.drain(spark.sparkContext)
     telem.reset()
     val t0 = System.nanoTime()
-    val (wall, plan, exec, nodes) =
+    val (wall, built, plan, exec, nodes) =
       try {
         val df = build(spark, dir)
-        val p = df.queryExecution.executedPlan
         val t1 = System.nanoTime()
-        Frames.drain(df)
+        val p = df.queryExecution.executedPlan
         val t2 = System.nanoTime()
-        ((t2 - t0) / 1e9, (t1 - t0) / 1e9, (t2 - t1) / 1e9,
+        Frames.drain(df)
+        val t3 = System.nanoTime()
+        ((t3 - t0) / 1e9, (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9,
           p.toString.linesIterator.size)
       } catch {
         case e: Throwable =>
           System.err.println(s"RUN FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-          (-1.0, -1.0, -1.0, 0)
+          (-1.0, -1.0, -1.0, -1.0, 0)
       }
     Bus.drain(spark.sparkContext)
     val m = telem.snapshot()
     val steal = MachineWindow.stealPct(st0, MachineWindow.stealRead())
     Frames.scrubSession(spark)
-    Run(wall, plan, exec, nodes, load, steal, m)
+    Run(wall, built, plan, exec, nodes, load, steal, m)
   }
 }

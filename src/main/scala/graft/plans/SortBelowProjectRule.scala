@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalLimit, LogicalPlan, Offset, Project, Repartition, RepartitionByExpression, RepartitionOperation, Sort, Tail, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalLimit, LogicalPlan, Project, RepartitionOperation, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Optimizer rule: sinks a global ORDER BY below the chain of per-row
@@ -15,29 +15,14 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * RangePartitioner, once to write the shuffle. Below it, both passes
   * read only the cheap input columns. Values and order are unchanged: a
   * deterministic projection of pass-through sort keys commutes with the
-  * sort.
-  *
-  * The sunk sort sits on a range repartition of fixed width,
-  *
-  *   Sort(keys, global, RepartitionByExpression(keys, child, shuffle.partitions))
-  *
-  * which satisfies the Sort's ordered distribution, so the planner adds
-  * no second exchange. That range exchange is REPARTITION_BY_NUM, which
-  * AQE never coalesces: the projection, now after the sort, runs on
-  * `spark.sql.shuffle.partitions` tasks. The range exchange that
-  * EnsureRequirements would add instead is coalescable: AQE folds a
-  * sort shuffle under its 1 MB minimum partition size into ONE
-  * post-sort task, and the projection with it. At scale nothing
-  * changes: AQE only ever coalesces down from that width.
-  * No pin where the child may already be a single partition (see
-  * [[mayBeSinglePartition]]): that satisfies the ordering with no
-  * exchange at all, so a pin would add one.
+  * sort. The sunk sort sits directly on the chain's input; the planner
+  * adds its ordinary range exchange, and the projection runs on as many
+  * post-sort tasks as AQE keeps — the session's partition-size floor
+  * (GraftSession.tune) decides that width, as for every other shuffle.
   *
   * Trade-off: the sort shuffle now carries the projection's INPUT
   * columns instead of its outputs (text instead of scores) — wider
-  * shuffle writes for one evaluation of the projection instead of two —
-  * and a small sort keeps its full width of tasks (and, if written, of
-  * files) instead of one.
+  * shuffle writes for one evaluation of the projection instead of two.
   *
   * Fires only when
   *  - every sort key is an Attribute passed through unchanged by every
@@ -48,11 +33,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    an Alias of an Attribute or Literal) — ColumnPruning leaves
   *    attribute-only Projects under a Sort, and sinking past those would
   *    ping-pong with it;
-  *  - the chain does not sit on a Repartition / RepartitionByExpression:
-  *    there the projection was deliberately spread over N round-robin
-  *    tasks before the sort (Frames.fan);
-  *  - under a limit, the chain is a single Project directly below it,
-  *    and the sort is sunk WITHOUT the repartition (see [[sink]]).
+  *  - the chain does not sit on a repartition: there the projection was
+  *    deliberately spread over N round-robin tasks before the sort
+  *    (Frames.fan);
+  *  - under a limit, the chain is a single Project directly below it
+  *    (see [[sink]]).
   */
 object SortBelowProjectRule extends Rule[LogicalPlan] {
 
@@ -71,19 +56,6 @@ object SortBelowProjectRule extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  /** Whether some node of `p` may plan with a single-partition output:
-    * a global aggregate or an un-partitioned window (both require all
-    * tuples in one partition), a limit, or a repartition to one
-    * partition. Conservative: anywhere in `p`, not only on the path
-    * that decides the child's partitioning. */
-  private def mayBeSinglePartition(p: LogicalPlan): Boolean = p.exists {
-    case a: Aggregate => a.groupingExpressions.isEmpty
-    case w: Window => w.partitionSpec.isEmpty
-    case _: GlobalLimit | _: LocalLimit | _: Tail | _: Offset => true
-    case r: RepartitionOperation => r.numPartitions == 1
-    case _ => false
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = sink(plan, None)
 
   /** Bottom-up rewrite; `limit` counts the Projects between `plan` and
@@ -92,8 +64,7 @@ object SortBelowProjectRule extends Rule[LogicalPlan] {
     * samples nor shuffles, so has no double evaluation to save — only
     * through at most ONE Project. Under a limit the rule therefore sinks
     * only into a single-Project chain, where it still pays: the fused
-    * projection then runs on the k kept rows alone. A repartition there
-    * would put a shuffle under the top-k, so none is added. */
+    * projection then runs on the k kept rows alone. */
   private def sink(plan: LogicalPlan, limit: Option[Int]): LogicalPlan = {
     val childLimit = plan match {
       case _: LocalLimit => Some(0)
@@ -110,14 +81,11 @@ object SortBelowProjectRule extends Rule[LogicalPlan] {
           case _ => false
         })
         val exprs = chain.flatMap(_.projectList)
-        val spread =
-          base.isInstanceOf[Repartition] || base.isInstanceOf[RepartitionByExpression]
-        if (passThrough && !spread && exprs.forall(_.deterministic) &&
-            !exprs.forall(trivial) && limit.forall(_ + chain.size == 1)) {
-          val input = if (limit.isDefined || mayBeSinglePartition(base)) base
-            else RepartitionByExpression(s.order, base, Some(conf.numShufflePartitions))
-          chain.foldRight(s.copy(child = input): LogicalPlan)((p, c) => p.copy(child = c))
-        } else s
+        if (passThrough && !base.isInstanceOf[RepartitionOperation] &&
+            exprs.forall(_.deterministic) && !exprs.forall(trivial) &&
+            limit.forall(_ + chain.size == 1))
+          chain.foldRight(s.copy(child = base): LogicalPlan)((p, c) => p.copy(child = c))
+        else s
       case other => other
     }
   }

@@ -27,7 +27,8 @@ class EntrySpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
     val r = Harness.run(spark, "/root/testdata/sf0.001", "s19_incremental_listing",
       SparkEntry.queries("s19_incremental_listing"))
-    assert(r.wall > 0 && r.plan >= 0 && r.exec >= 0 && r.plan + r.exec <= r.wall + 1e-9, r)
+    assert(r.wall > 0 && r.build >= 0 && r.plan >= 0 && r.exec >= 0 &&
+      r.build + r.plan + r.exec <= r.wall + 1e-9, r)
     assert(r.m.jobs >= 1, r)
   }
 

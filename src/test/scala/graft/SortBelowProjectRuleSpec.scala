@@ -4,21 +4,26 @@ import graft.plans.SortBelowProjectRule
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.NamedExpression
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, RepartitionByExpression, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, RoundRobinPartitioning}
 import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 class SortBelowProjectRuleSpec extends SparkSpec {
 
-  /** A parquet table (doc_id, text) of `files` files, ids out of order. */
-  private def table(files: Int): DataFrame = {
+  /** A parquet table (doc_id, text) of `files` files, ids out of order;
+    * `pad` appends that many 128-hex-char digests to each text, which
+    * lz4 cannot shrink, so a shuffle of the text grows with it. */
+  private def table(files: Int, pad: Int = 0): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft-sortsink").toString + "/t"
+    val digests = (0 until pad).map(i => sha2(concat(col("id").cast("string"), lit(s"/$i")), 512))
     spark.range(0, 240, 1, files)
       .select((col("id") * 97 % 240).as("doc_id"),
-        concat(lit("doc "), col("id"), lit(" has aeiou and bcdfg")).as("text"))
+        concat(lit("doc ") +: col("id") +: lit(" has aeiou and bcdfg") +: digests: _*).as("text"))
       .write.parquet(dir)
     spark.read.parquet(dir)
   }
@@ -88,41 +93,58 @@ class SortBelowProjectRuleSpec extends SparkSpec {
     val summary = qe.tracker.rules(SortBelowProjectRule.ruleName)
     assert(summary.numEffectiveInvocations == 1, summary)
     assert(summary.numInvocations < spark.sessionState.conf.optimizerMaxIterations, summary)
-    // the sunk Sort keeps its pinned-width range repartition
+    // the sunk Sort sits on the un-pinned base, the scan itself
     val sort = plan.collectFirst { case s: Sort => s }.get
-    assert(sort.child match {
-      case r: RepartitionByExpression =>
-        r.partitionExpressions == sort.order &&
-          r.optNumPartitions.contains(spark.sessionState.conf.numShufflePartitions)
-      case _ => false
-    }, plan.treeString)
+    assert(sort.child.isInstanceOf[LogicalRelation], plan.treeString)
   }
 
-  test("the sunk projection runs on shuffle.partitions tasks over a one-file source") {
-    val one = table(1)
-    assert(one.rdd.getNumPartitions == 1)
+  /** Runs the sorted, scored `df`; the task count of the last job's
+    * final stage and the bytes the sort shuffle wrote. */
+  private def sortedRun(df: DataFrame): (Int, Long) = {
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    val written = new java.util.concurrent.atomic.AtomicLong
     val lastJobStages = new java.util.concurrent.atomic.AtomicReference[Seq[Int]](Nil)
     val l = new SparkListener {
       override def onJobStart(ev: SparkListenerJobStart): Unit =
         lastJobStages.set(ev.stageIds)
-      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
-        stages.put(ev.stageInfo.stageId, ev.stageInfo.numTasks): Unit
+      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
+        stages.put(ev.stageInfo.stageId, ev.stageInfo.numTasks)
+        written.addAndGet(ev.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
+      }
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      val out = scored(one).orderBy(col("doc_id")).collect()
+      val out = scored(df).orderBy(col("doc_id")).collect()
       org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
       assert(out.map(_.getLong(0)).toSeq == (0L until 240L))
     } finally spark.sparkContext.removeSparkListener(l)
-    val finalStage = lastJobStages.get.max
-    assert(stages.get(finalStage) == spark.sessionState.conf.numShufflePartitions,
-      s"final stage $finalStage ran ${stages.get(finalStage)} tasks")
+    (stages.get(lastJobStages.get.max), written.get)
+  }
+
+  /** The session's AQE partition-size floor times its cores: a shuffle
+    * above it keeps one task per shuffle partition. */
+  private def floorBytes: Long =
+    spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE) *
+      spark.sparkContext.defaultParallelism
+
+  test("the sunk projection runs on shuffle.partitions tasks over a one-file source") {
+    val one = table(1, pad = 4)
+    assert(one.rdd.getNumPartitions == 1)
+    val (tasks, written) = sortedRun(one)
+    assert(written > floorBytes, s"sort shuffle wrote $written bytes")
+    assert(tasks == spark.sessionState.conf.numShufflePartitions, s"final stage ran $tasks tasks")
+  }
+
+  test("a sort shuffle under the partition-size floor runs its projection on one task") {
+    val (tasks, written) = sortedRun(src)
+    assert(written < spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE),
+      s"sort shuffle wrote $written bytes")
+    assert(tasks == 1, s"final stage ran $tasks tasks")
   }
 
   test("over a single-partition child the sunk Sort adds no exchange") {
     // an un-partitioned window plans one SinglePartition exchange, which
-    // already satisfies the sort: a pinned range exchange would be a second
+    // already satisfies the sort
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
     val df = src.withColumn("rn", row_number().over(w))
       .select(col("rn"), upper(col("text")).as("u")).orderBy(col("rn"))
@@ -177,11 +199,11 @@ class SortBelowProjectRuleSpec extends SparkSpec {
     // the clip decode reads unhex(...) of the doc's variant
     assert(range.child.toString.contains("unhex") && !rr.child.toString.contains("unhex"),
       s"m10: decode must run between the two exchanges\n$m10")
-    // m11 has no fan: the pinned sort spreads its decode, after the range exchange
+    // m11 has no fan: the sunk sort runs its decode after the range exchange
     val m11 = query("m11_png_pixel_decode")
-    val pinned = exchange(m11, range = true).getOrElse(fail(s"m11: no range exchange\n$m11"))
+    val sorted = exchange(m11, range = true).getOrElse(fail(s"m11: no range exchange\n$m11"))
     assert(exchange(m11, range = false).isEmpty, s"m11: round-robin exchange\n$m11")
-    assert(!pinned.child.toString.contains("unhex") && m11.toString.contains("unhex"),
+    assert(!sorted.child.toString.contains("unhex") && m11.toString.contains("unhex"),
       s"m11: decode must run after the range exchange\n$m11")
   }
 }

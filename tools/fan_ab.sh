@@ -4,6 +4,8 @@
 # while tools/load.sh spinners emulate a hot driver window, so both
 # arms see the same contention in expectation. Each Bench invocation
 # reports min-of-2-interleaved-reps per query; we run R rounds per arm.
+# Arms alternate their order: FAN runs first in odd rounds, NOFAN first
+# in even rounds, so neither arm always takes the first (coldest) slot.
 # Usage: [SPARK_GRAFT_CPUS=n] tools/fan_ab.sh [rounds] [spinners] [query...]
 # SPARK_GRAFT_CPUS (default 32) sets Bench's local[n] and shuffle width;
 # spinners=0 runs both arms unloaded.
@@ -25,7 +27,8 @@ cd "$(dirname "$0")/.." || exit 1
 # Bench invocation; pkill after each arm bounds the overhang.
 first=1
 for r in $(seq "$R"); do
-  for arm in FAN NOFAN; do
+  if [ $((r % 2)) = 1 ]; then ARMS="FAN NOFAN"; else ARMS="NOFAN FAN"; fi
+  for arm in $ARMS; do
     if [ "$arm" = NOFAN ]; then export SPARK_GRAFT_NOFAN=1; else unset SPARK_GRAFT_NOFAN; fi
     if [ "$SPIN" -gt 0 ]; then
       tools/load.sh "$SPIN" 3600
