@@ -39,10 +39,13 @@ object Frames {
     * Callers apply it at build-once staging fronts (the sig/feature
     * tables), never on serving paths.
     *
-    * A site whose heavy projection feeds a global sort on pass-through
-    * keys needs no fan: SortBelowProjectRule runs that projection after
-    * a range exchange pinned at `spark.sql.shuffle.partitions`, which
-    * spreads it with one exchange fewer.
+    * The session's AQE partition-size floor (GraftSession.tune) cannot
+    * do this: it sets the width of a shuffle's READ side, and the heavy
+    * map phase here runs in the scan stage, before any shuffle. A site
+    * whose heavy projection feeds a global sort on pass-through keys
+    * needs no fan: SortBelowProjectRule runs that projection after the
+    * sort's range exchange, which the floor keeps wide, with one
+    * exchange fewer.
     */
   def fan(df: DataFrame): DataFrame = if (disabled) df else {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism

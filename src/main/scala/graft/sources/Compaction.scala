@@ -17,10 +17,10 @@ import org.apache.spark.sql.types.StructType
   *    each partition value across up to `spread` writer tasks, so a hot
   *    partition (one language dominating a corpus) still writes in
   *    parallel. The shuffle is `repartition(cols)` (REPARTITION_BY_COL),
-  *    which AQE coalesces: a write whose shuffle is under AQE's minimum
-  *    partition size (1 MB) runs as ONE writer task whatever `spread`
-  *    says. The fan-out applies once the data is large enough to keep
-  *    its partitions;
+  *    which AQE coalesces down to the session's partition-size floor
+  *    (GraftSession.tune): a write whose shuffle is under the floor
+  *    runs as one writer task, a larger one keeps up to
+  *    `spark.sql.shuffle.partitions` writer tasks;
   *  - `maxRecordsPerFile` is the hard per-file cap, enforced by the
   *    writer itself — no file exceeds it regardless of bucket skew.
   * Files per partition value ≈ min(spread, ceil(rows / targetRows)),
@@ -36,8 +36,9 @@ object Compaction {
     * @param fileKey        deterministic fan-out key (e.g. the record id);
     *                       rows with equal keys land in the same file
     * @param targetRows     hard cap on rows per file (maxRecordsPerFile)
-    * @param spread         max writer tasks per partition value (AQE
-    *                       may coalesce a small write to fewer)
+    * @param spread         max writer tasks per partition value (a
+    *                       write under the session's partition-size
+    *                       floor coalesces to fewer)
     */
   def writeSized(df: DataFrame, path: String, partitionCols: Seq[String],
                  fileKey: Column, targetRows: Long, spread: Int = 8,
