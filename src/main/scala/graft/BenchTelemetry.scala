@@ -125,8 +125,7 @@ class BenchTelemetry extends SparkListener {
 }
 
 object BenchTelemetry {
-  /** One rep's telemetry: storage triple, task-metric sums (ms), jobs,
-    * tasks. */
+  /** One rep's telemetry: storage triple, task-metric sums (ms), jobs, tasks. */
   case class Snap(peakMB: Long, evictDisk: Long, drops: Long,
                   runMs: Long, cpuMs: Long, gcMs: Long, shufWriteMs: Long,
                   jobs: Long, tasks: Long)

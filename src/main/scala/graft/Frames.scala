@@ -39,13 +39,11 @@ object Frames {
     * Callers apply it at build-once staging fronts (the sig/feature
     * tables), never on serving paths.
     *
-    * The session's AQE partition-size floor (GraftSession.tune) cannot
-    * do this: it sets the width of a shuffle's READ side, and the heavy
-    * map phase here runs in the scan stage, before any shuffle. A site
-    * whose heavy projection feeds a global sort on pass-through keys
-    * needs no fan: SortBelowProjectRule runs that projection after the
-    * sort's range exchange, which the floor keeps wide, with one
-    * exchange fewer.
+    * A site whose heavy projection feeds a global sort on pass-through
+    * keys needs no fan: SortBelowProjectRule runs it after the sort's
+    * range exchange, which the floor in GraftSession.tune keeps wide.
+    * That floor cannot replace a fan: it sets a shuffle's read width,
+    * and a fan's heavy map phase runs in the scan, before any shuffle.
     */
   def fan(df: DataFrame): DataFrame = if (disabled) df else {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism

@@ -19,12 +19,9 @@ object GraftSession {
     .withExtensions(new graft.expressions.GraftExtensions)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    // the one width policy for small shuffles: AQE coalesces toward
-    // max(floor, shuffle bytes / cores), so at the 1 MB default every
-    // shuffle under 1 MB — a sort feeding regex scoring, g1's dedup
-    // windows, a writer shuffle — ran its row code on ONE task. At 16k
-    // a shuffle of 16k × cores keeps every core busy and a tiny one
-    // still folds to one task.
+    // the one width policy: AQE coalesces toward max(floor, bytes / cores),
+    // so a shuffle of 16k × cores keeps every core on the row code after
+    // it (at the 1 MB default it ran on ONE task) and a tiny one folds.
     .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")

@@ -7,10 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Profile) and JobCountSpec.
   *
   * A run times build → `executedPlan` → [[Frames.drain]], which splits
-  * its wall into the builder, driver-side planning and execution at no
-  * extra cost (`drain` forces the same lazy `executedPlan`). The build
-  * part is apart because lifecycle builders run Spark jobs eagerly
-  * (index builds, store appends, staging writes). Around the
+  * its wall into the builder (eager lifecycle builders run jobs there),
+  * driver-side planning and execution at no extra cost (`drain` forces
+  * the same lazy `executedPlan`). Around the
   * timer, and never inside it:
   *  - the 1-min load and CPU steal of the window are sampled
   *    ([[MachineWindow]]), so a contaminated run is discountable from

@@ -641,7 +641,7 @@ class PlanAuditSpec extends SparkSpec {
     // is one row group, so without it the whole decode runs on one core
     // (identity on any already-parallel source, so at 100 TB the plan
     // has only the sort exchange again). m11/m12 need no fan: their
-    // decode runs after SortBelowProjectRule's pinned range exchange.
+    // decode runs after SortBelowProjectRule's sunk sort's range exchange.
     val dir = "/root/testdata/sf0.001"
     for (q <- Seq("m10_audio_energy", "m11_png_pixel_decode",
         "m12_gif_pixel_decode", "s20_gzip_roundtrip",

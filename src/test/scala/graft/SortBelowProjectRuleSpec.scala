@@ -3,7 +3,7 @@ package graft
 import graft.plans.SortBelowProjectRule
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.NamedExpression
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, RoundRobinPartitioning}
 import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
@@ -20,7 +20,7 @@ class SortBelowProjectRuleSpec extends SparkSpec {
     * lz4 cannot shrink, so a shuffle of the text grows with it. */
   private def table(files: Int, pad: Int = 0): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft-sortsink").toString + "/t"
-    val digests = (0 until pad).map(i => sha2(concat(col("id").cast("string"), lit(s"/$i")), 512))
+    val digests = (0 until pad).map(i => sha2(concat(col("id"), lit(i)), 512))
     spark.range(0, 240, 1, files)
       .select((col("id") * 97 % 240).as("doc_id"),
         concat(lit("doc ") +: col("id") +: lit(" has aeiou and bcdfg") +: digests: _*).as("text"))
@@ -93,22 +93,22 @@ class SortBelowProjectRuleSpec extends SparkSpec {
     val summary = qe.tracker.rules(SortBelowProjectRule.ruleName)
     assert(summary.numEffectiveInvocations == 1, summary)
     assert(summary.numInvocations < spark.sessionState.conf.optimizerMaxIterations, summary)
-    // the sunk Sort sits on the un-pinned base, the scan itself
+    // the sunk Sort sits directly on the scan: no repartition of its own
     val sort = plan.collectFirst { case s: Sort => s }.get
     assert(sort.child.isInstanceOf[LogicalRelation], plan.treeString)
   }
 
-  /** Runs the sorted, scored `df`; the task count of the last job's
-    * final stage and the bytes the sort shuffle wrote. */
+  private def floor: Long =
+    spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+
+  /** Sorts `scored(df)`: the task count of its final stage and the bytes
+    * its sort shuffle wrote. */
   private def sortedRun(df: DataFrame): (Int, Long) = {
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    val tasks = new java.util.concurrent.ConcurrentSkipListMap[Int, Int]
     val written = new java.util.concurrent.atomic.AtomicLong
-    val lastJobStages = new java.util.concurrent.atomic.AtomicReference[Seq[Int]](Nil)
     val l = new SparkListener {
-      override def onJobStart(ev: SparkListenerJobStart): Unit =
-        lastJobStages.set(ev.stageIds)
       override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-        stages.put(ev.stageInfo.stageId, ev.stageInfo.numTasks)
+        tasks.put(ev.stageInfo.stageId, ev.stageInfo.numTasks)
         written.addAndGet(ev.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
       }
     }
@@ -118,27 +118,21 @@ class SortBelowProjectRuleSpec extends SparkSpec {
       org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
       assert(out.map(_.getLong(0)).toSeq == (0L until 240L))
     } finally spark.sparkContext.removeSparkListener(l)
-    (stages.get(lastJobStages.get.max), written.get)
+    (tasks.lastEntry.getValue, written.get)
   }
 
-  /** The session's AQE partition-size floor times its cores: a shuffle
-    * above it keeps one task per shuffle partition. */
-  private def floorBytes: Long =
-    spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE) *
-      spark.sparkContext.defaultParallelism
-
   test("the sunk projection runs on shuffle.partitions tasks over a one-file source") {
+    // rows wide enough that the sort shuffle exceeds the AQE floor × cores
     val one = table(1, pad = 4)
     assert(one.rdd.getNumPartitions == 1)
     val (tasks, written) = sortedRun(one)
-    assert(written > floorBytes, s"sort shuffle wrote $written bytes")
+    assert(written > floor * spark.sparkContext.defaultParallelism, s"shuffle wrote $written bytes")
     assert(tasks == spark.sessionState.conf.numShufflePartitions, s"final stage ran $tasks tasks")
   }
 
   test("a sort shuffle under the partition-size floor runs its projection on one task") {
     val (tasks, written) = sortedRun(src)
-    assert(written < spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE),
-      s"sort shuffle wrote $written bytes")
+    assert(written < floor, s"shuffle wrote $written bytes")
     assert(tasks == 1, s"final stage ran $tasks tasks")
   }
 
