@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Per-query storage-memory telemetry for the bench (r15 verdict #2):
   * the d4(r14)/d22(r15) anomaly class — an untouched heavy query 2-3×
@@ -48,6 +48,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, Spa
   * `jobs` counts the rep's Spark jobs (job-start events): the driver
   * round trips that wall the scheduler-bound lifecycle class; `tasks`
   * counts its ended tasks, the width its stages actually ran at.
+  * `jobMs` is the union of the rep's job spans: job events arrive in
+  * time order, so it grows by each stretch in which some job runs, and
+  * wall − jobMs is the inter-job gap (planning, commits, FS calls).
   *
   * Counters reset per rep ([[reset]]); the block→memSize map persists
   * across reps so deltas stay exact for blocks that outlive a scrub
@@ -66,10 +69,18 @@ class BenchTelemetry extends SparkListener {
   private val swMsCtr = new AtomicLong(0L)
   private val jobsCtr = new AtomicLong(0L)
   private val tasksCtr = new AtomicLong(0L)
+  private val runningJobs = new AtomicLong(0L)
+  private val busySince = new AtomicLong(0L)
+  private val jobMsCtr = new AtomicLong(0L)
 
   override def onJobStart(ev: SparkListenerJobStart): Unit = {
-    jobsCtr.incrementAndGet(): Unit
+    jobsCtr.incrementAndGet()
+    if (runningJobs.getAndIncrement() == 0L) busySince.set(ev.time)
   }
+
+  override def onJobEnd(ev: SparkListenerJobEnd): Unit =
+    if (runningJobs.get() > 0L && runningJobs.decrementAndGet() == 0L)
+      jobMsCtr.addAndGet(ev.time - busySince.get()): Unit
 
   override def onTaskEnd(ev: SparkListenerTaskEnd): Unit = {
     tasksCtr.incrementAndGet()
@@ -113,7 +124,7 @@ class BenchTelemetry extends SparkListener {
     memOf.clear(); cur.set(0L); peak.set(0L)
     evictDiskCtr.set(0L); dropCtr.set(0L)
     runMsCtr.set(0L); cpuMsCtr.set(0L); gcMsCtr.set(0L); swMsCtr.set(0L)
-    jobsCtr.set(0L); tasksCtr.set(0L)
+    jobsCtr.set(0L); tasksCtr.set(0L); runningJobs.set(0L); jobMsCtr.set(0L)
   }
 
   /** Everything accumulated since the last [[reset]]. Drain the
@@ -121,14 +132,14 @@ class BenchTelemetry extends SparkListener {
   def snapshot(): BenchTelemetry.Snap =
     BenchTelemetry.Snap(peak.get() >> 20, evictDiskCtr.get(), dropCtr.get(),
       runMsCtr.get(), cpuMsCtr.get(), gcMsCtr.get(), swMsCtr.get(),
-      jobsCtr.get(), tasksCtr.get())
+      jobsCtr.get(), tasksCtr.get(), jobMsCtr.get())
 }
 
 object BenchTelemetry {
-  /** One rep's telemetry: storage triple, task-metric sums (ms), jobs, tasks. */
+  /** One rep's telemetry: storage triple, task-metric sums (ms), jobs, tasks, job-span union. */
   case class Snap(peakMB: Long, evictDisk: Long, drops: Long,
                   runMs: Long, cpuMs: Long, gcMs: Long, shufWriteMs: Long,
-                  jobs: Long, tasks: Long)
+                  jobs: Long, tasks: Long, jobMs: Long)
 }
 
 /** Machine-window samplers behind every timed run ([[Harness.run]]):

@@ -3,14 +3,14 @@ package graft
 /** Per-query layer profile: one [[Harness.run]] per named query (the
   * full suite, sorted, when none is named), each printed as
   *
-  *   PROFILE <name> wall= build= plan= exec= jobs= tasks= nodes= run= cpu= gc=
+  *   PROFILE <name> wall= build= plan= exec= jobs= gap= tasks= nodes= run= cpu= gc=
   *
   * — wall seconds split into the builder (which runs jobs itself for
   * eager lifecycle queries), driver-side planning (`executedPlan`) and
-  * execution, the Spark jobs and tasks the run started, the printed
-  * plan's line count, and the task run/CPU/GC milliseconds summed over
-  * its tasks — then a TOTAL line. Named
-  * queries run in the order given, repeats included, so
+  * execution, the Spark jobs, the inter-job gap (wall seconds no job
+  * span covers), the tasks, the printed plan's line count, and the task
+  * run/CPU/GC milliseconds summed over its tasks — then a TOTAL line.
+  * Named queries run in the order given, repeats included, so
   * `Profile a b a b …` is a same-JVM alternating A/B.
   *
   * Run: `SPARK_GRAFT_SF_DIR=<sfDir> sbt "runMain graft.Profile
@@ -27,6 +27,7 @@ object Profile {
       val r = Harness.run(spark, sfDir, name, byName(name))
       println(f"PROFILE $name%-24s wall=${r.wall}%7.3f build=${r.build}%7.3f " +
         f"plan=${r.plan}%7.3f exec=${r.exec}%7.3f jobs=${r.m.jobs}%4d " +
+        f"gap=${r.wall - r.m.jobMs / 1e3}%7.3f " +
         f"tasks=${r.m.tasks}%5d nodes=${r.nodes}%4d " +
         f"run=${r.m.runMs}%6d cpu=${r.m.cpuMs}%6d gc=${r.m.gcMs}%5d")
       r

@@ -159,8 +159,6 @@ object Rag {
   // the per-segment roots parse as one partitioned table
   private val postingsSchema = org.apache.spark.sql.types.StructType
     .fromDDL("doc_id LONG, term STRING, tf LONG, dl LONG, tp BIGINT, seg BIGINT")
-  private val dfSchema = org.apache.spark.sql.types.StructType
-    .fromDDL("term STRING, df LONG, tp BIGINT, seg BIGINT")
   private val statsSchema = org.apache.spark.sql.types.StructType
     .fromDDL("src LONG, n_docs LONG, sum_dl LONG, seg BIGINT")
 
@@ -176,25 +174,24 @@ object Rag {
     *     sink (hot term buckets still write in parallel, no small-file
     *     spray; dl is denormalized per posting, the Lucene "norms"
     *     trade: one long per posting buys a join-free probe);
-    *   `df/seg=K/tp=N/`        — (term, df), bucketed the same way so a
-    *     probe prunes BOTH reads to the touched buckets;
     *   `stats/seg=K/`          — one (n_docs, sum_dl) row per segment;
     *   `commits/k=K/`, `hwm/`  — commit markers and the water line of
-    *     [[SegmentFs.Segments]]: a crash between the three data writes
+    *     [[SegmentFs.Segments]]: a crash between the two data writes
     *     leaves an invisible torn segment, never an inconsistent index.
-    * Probe IO is therefore ∝ touched-buckets/buckets of the index and
-    * the corpus text is never re-scanned.
+    * No df is stored: the probe counts the query terms' postings in its
+    * pruned read. Probe IO is therefore ∝ touched-buckets/buckets of the
+    * index and the corpus text is never re-scanned.
     *
-    * Every stored quantity is ADDITIVE (tf and df rows sum across
-    * segments when batches carry disjoint doc ids; n_docs and Σdl sum
+    * Every stored quantity is ADDITIVE (postings union across segments
+    * when batches carry disjoint doc ids; n_docs and Σdl sum
     * unconditionally — the CountLog law), so [[appendBm25Index]] grows
     * the index in O(batch): corpus-sized files never rewrite and the
-    * probe folds segments with a sum. Stats persist as (n_docs, sum_dl),
-    * not avgdl — the average is not additive, the pair is; the probe
-    * derives avgdl = sum_dl/n_docs, which equals the direct path's
-    * `avg(dl)` exactly while Σdl < 2^53 (Spark's Average accumulates
-    * integral input in a double sum — token counts reach 2^53 at ~9e15
-    * tokens, far past any real corpus).
+    * probe folds segments with a count and a sum. Stats persist as
+    * (n_docs, sum_dl), not avgdl — the average is not additive, the
+    * pair is; the probe derives avgdl = sum_dl/n_docs, which equals
+    * the direct path's `avg(dl)` exactly while Σdl < 2^53 (Spark's
+    * Average accumulates integral input in a double sum — token counts
+    * reach 2^53 at ~9e15 tokens, far past any real corpus).
     */
   def saveBm25Index(docs: DataFrame, id: Column, text: Column, path: String,
                     buckets: Int = 64, targetRows: Long = 1L << 20,
@@ -209,17 +206,18 @@ object Rag {
       writeBm25Data(docs, id, text, path, buckets, targetRows, spread, 0L))
   }
 
-  /** O(batch) growth of a saved BM25 index: the batch's postings/df/
+  /** O(batch) growth of a saved BM25 index: the batch's postings and
     * stats rows land as segment `seg=K` (K = `batchId` or the next id);
-    * the probe's segment fold (sum df per term, sum the stats pair)
-    * makes the result identical to a from-scratch rebuild over the
-    * union. Replays follow [[SegmentFs.Segments.append]]: a committed
-    * or folded batch id is a no-op and a torn attempt is rewritten, so
-    * at-least-once pipelines can retry blindly. Batch ids must be
-    * MONOTONE per index (the foreachBatch contract). Batches must carry
-    * doc ids DISJOINT from other BATCHES (a doc resent under a different
-    * batch id double-counts its tf/df/Σdl — spec-pinned); the bucket
-    * count comes from the index's own meta, never the caller.
+    * the probe's segment fold (count postings per term, sum the stats
+    * pair) makes the result identical to a from-scratch rebuild over
+    * the union. Replays follow [[SegmentFs.Segments.append]]: a
+    * committed or folded batch id is a no-op and a torn attempt is
+    * rewritten, so at-least-once pipelines can retry blindly. Batch
+    * ids must be MONOTONE per index (the foreachBatch contract).
+    * Batches must carry doc ids DISJOINT from other BATCHES (a doc
+    * resent under a different batch id double-counts its tf/df/Σdl —
+    * spec-pinned); the bucket count comes from the index's own meta,
+    * never the caller.
     */
   def appendBm25Index(docs: DataFrame, id: Column, text: Column,
                       path: String, targetRows: Long = 1L << 20,
@@ -230,24 +228,23 @@ object Rag {
       writeBm25Data(docs, id, text, path, buckets, targetRows, spread, _))
   }
 
-  /** The BM25 segment index at `path`: segment K spans three dirs. */
+  /** The BM25 segment index at `path`: segment K spans two dirs. */
   private def segments(spark: org.apache.spark.sql.SparkSession,
                        path: String) =
     new SegmentFs.Segments(spark, path,
-      k => Seq("postings", "df", "stats").map(d => s"$path/$d/seg=$k"))
+      k => Seq("postings", "stats").map(d => s"$path/$d/seg=$k"))
 
   /** Fold every committed BM25 segment ≤ `upTo` into ONE merged
     * segment — the IVF/band-index compaction for the lexical index.
     * The additive quantities make the fold subtler than a row move:
     * postings de-duplicate by (doc_id, term) (identical rows — the
     * disjoint-batches contract; duplicates only exist after a crashed
-    * retirement), df RECOMPUTES from the deduped postings (a plain sum
-    * would double-count those), and stats rows dedup by their `src`
-    * provenance tag and carry through unchanged (n_docs/Σdl cover
-    * zero-token docs postings can't see). Merged generations take
+    * retirement), and stats rows dedup by their `src` provenance tag
+    * and carry through unchanged (n_docs/Σdl cover zero-token docs
+    * postings can't see). Merged generations take
     * NEGATIVE ids (−1, −2, …; the base build is 0, appends ≥ 1). In the
     * protocol's window where folded rows are visible twice, rerunning
-    * the compaction heals (each of the three folds is provenance-exact);
+    * the compaction heals (both folds are provenance-exact);
     * fold only batches the appending stream's checkpoint has passed.
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
@@ -255,21 +252,11 @@ object Rag {
                        targetRows: Long = 1L << 20,
                        spread: Int = 8): Option[Long] =
     segments(spark, path).compact(upTo, baseSeg = 0L) { (fold, gen) =>
-      val buckets = readMetaBuckets(spark, path)
       val postings = spark.read.schema(postingsSchema)
         .option("basePath", s"$path/postings")
         .parquet(fold.map(k => s"$path/postings/seg=$k"): _*)
         .drop("seg").dropDuplicates("doc_id", "term")
-      graft.sources.Compaction.writeSized(
-        postings, s"$path/postings/seg=$gen", Seq("tp"), col("doc_id"),
-        targetRows, spread, "errorifexists")
-      val dfreq = postings.groupBy(col("term"))
-        .agg(countDistinct(col("doc_id")).as("df"))
-        .withColumn("tp", termBucket(col("term"), buckets))
-      graft.sources.Compaction.writeSized(
-        dfreq, s"$path/df/seg=$gen", Seq("tp"), col("term"),
-        targetRows, spread, "errorifexists")
-      spark.read.schema(statsSchema)
+      val stats = spark.read.schema(statsSchema)
         .option("basePath", s"$path/stats")
         .parquet(fold.map(k => s"$path/stats/seg=$k"): _*)
         // stats rows persisted before the src column existed read back
@@ -281,8 +268,7 @@ object Rag {
         .withColumn("src", coalesce(col("src"), col("seg")))
         .dropDuplicates("src").select(col("src"), col("n_docs"),
           col("sum_dl"))
-        .coalesce(1).write.mode("errorifexists")
-        .parquet(s"$path/stats/seg=$gen")
+      writeSegment(path, gen, postings, stats, targetRows, spread)
     }
 
   private def readMetaBuckets(spark: org.apache.spark.sql.SparkSession,
@@ -300,33 +286,35 @@ object Rag {
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).cast("long").as("dl"))
       .withColumn("tp", termBucket(col("term"), buckets))
-    graft.sources.Compaction.writeSized(
-      postings, s"$path/postings/seg=$seg", Seq("tp"), col("doc_id"),
-      targetRows, spread, "errorifexists")
-    val dfreq = postings.groupBy(col("term"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-      .withColumn("tp", termBucket(col("term"), buckets))
-    graft.sources.Compaction.writeSized(
-      dfreq, s"$path/df/seg=$seg", Seq("tp"), col("term"),
-      targetRows, spread, "errorifexists")
-    base.agg(count(lit(1)).as("n_docs"),
+    val stats = base.agg(count(lit(1)).as("n_docs"),
         sum(col("dl")).cast("long").as("sum_dl"))
       // src = the ORIGINAL segment id, carried through compactions so
       // a re-run after a crashed retirement can dedup stats rows by
       // provenance instead of double-counting
       .select(lit(seg).as("src"), col("n_docs"), col("sum_dl"))
-      .coalesce(1).write.mode("errorifexists")
-      .parquet(s"$path/stats/seg=$seg")
+    writeSegment(path, seg, postings, stats, targetRows, spread)
   }
+
+  /** Segment `seg`'s postings and stats writes, side by side: overlap
+    * awaits both and rethrows either failure, so the caller's commit
+    * marker lands only after both finished. */
+  private def writeSegment(path: String, seg: Long, postings: DataFrame,
+                           stats: DataFrame, targetRows: Long,
+                           spread: Int): Unit =
+    graft.Frames.overlap(graft.sources.Compaction.writeSized(
+      postings, s"$path/postings/seg=$seg", Seq("tp"), col("doc_id"),
+      targetRows, spread, "errorifexists"))(
+      stats.coalesce(1).write.mode("errorifexists")
+        .parquet(s"$path/stats/seg=$seg")): Unit
 
   /** Probe a saved BM25 index: the query vocabulary's term buckets
     * (count read from the index's own meta) become literal partition
-    * filters on the postings AND df reads (PartitionFilters — IO ∝
-    * touched buckets), the terms themselves a literal pushed filter
-    * inside each bucket; scoring is the exact [[bm25]] expression tree
-    * over the pruned slivers. Only COMMITTED segments are read, so a
-    * concurrent torn append is invisible. Scores equal the direct
-    * path's bit-for-bit.
+    * filters on the postings read (PartitionFilters — IO ∝ touched
+    * buckets), the terms themselves a literal pushed filter inside each
+    * bucket; df is that sliver's posting count per term, and scoring is
+    * the exact [[bm25]] expression tree over it. Only COMMITTED
+    * segments are read, so a concurrent torn append is invisible.
+    * Scores equal the direct path's bit-for-bit.
     */
   def bm25Indexed(spark: org.apache.spark.sql.SparkSession, path: String,
                   queries: Seq[(Int, Seq[String])],
@@ -345,13 +333,10 @@ object Rag {
       .option("basePath", s"$path/postings")
       .parquet(segs.map(k => s"$path/postings/seg=$k"): _*)
       .where(col("tp").isin(tps: _*)).where(col("term").isin(vocab: _*))
-    // Segment folds: df rows and the (n_docs, Σdl) pair sum across
-    // appended segments (additivity is the append contract).
-    val dfreq = spark.read.schema(dfSchema)
-      .option("basePath", s"$path/df")
-      .parquet(segs.map(k => s"$path/df/seg=$k"): _*)
-      .where(col("tp").isin(tps: _*)).where(col("term").isin(vocab: _*))
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
+    // Segment folds: postings are unique by (doc_id, term) per segment
+    // and batches are disjoint, so a term's posting count is its df (the
+    // direct path's countDistinct); the (n_docs, Σdl) pair sums.
+    val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = spark.read.schema(statsSchema)
       .option("basePath", s"$path/stats")
       .parquet(segs.map(k => s"$path/stats/seg=$k"): _*)

@@ -886,15 +886,15 @@ object VectorQueries {
 
     Query("v17_bm25_indexed", (s, dir) => {
       // The persisted-inverted-index lifecycle for lexical retrieval:
-      // build once (postings + df hive-bucketed by term, 1-row stats),
-      // then the probe prunes BOTH reads to the query vocabulary's
-      // buckets — corpus text is never re-scanned at serve time. The
+      // build once (postings hive-bucketed by term, 1-row stats), then
+      // the probe prunes to the query vocabulary's buckets and counts df
+      // there — corpus text is never re-scanned at serve time. The
       // scoring tail is the exact v15 expression tree, so the oracle is
       // v15's SQL chain verbatim (the index round trip is lossless).
       // full lifecycle under the ONE v15 oracle (the d15/v11 pattern):
       // base build over the even half, committed append of the odd
-      // half, compaction folding both (postings deduped, df recomputed,
-      // stats provenance-deduped), then the pruned probe
+      // half, compaction folding both (postings deduped, stats
+      // provenance-deduped), then the pruned probe
       val d = t(s, dir, "documents")
       val idx = scratchDir("graft_v17") + "/bm25"
       if (verifyScale(d, s"$dir#documents")) {

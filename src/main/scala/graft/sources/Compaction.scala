@@ -23,10 +23,11 @@ import org.apache.spark.sql.types.StructType
   *    `spark.sql.shuffle.partitions` writer tasks;
   *  - `maxRecordsPerFile` is the hard per-file cap, enforced by the
   *    writer itself — no file exceeds it regardless of bucket skew.
-  * Files per partition value ≈ min(spread, ceil(rows / targetRows)),
-  * never one-file-per-shuffle-task. One shuffle total, no count
-  * pre-pass, no driver-side planning loop — layout decisions are all
-  * expression-local, so the same call works at any scale.
+  * Files per value: up to min(spread, writer tasks), even for a write
+  * far under targetRows (nothing bounds a small write from below). One
+  * shuffle total, no count pre-pass, no driver-side planning loop —
+  * layout decisions are all expression-local, so the same call works
+  * at any scale.
   */
 object Compaction {
 

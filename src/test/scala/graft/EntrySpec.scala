@@ -30,6 +30,7 @@ class EntrySpec extends SparkSpec {
     assert(r.wall > 0 && r.build >= 0 && r.plan >= 0 && r.exec >= 0 &&
       r.build + r.plan + r.exec <= r.wall + 1e-9, r)
     assert(r.m.jobs >= 1, r)
+    assert(r.m.jobMs >= 0 && r.m.jobMs <= r.wall * 1e3, r)
   }
 
   test("bench mins line stays tail-safe at 220 queries (and beyond)") {

@@ -136,8 +136,9 @@ class RagSpec extends SparkSpec {
       .map(r => (r.getAs[Int]("query_id"), r.getAs[Long]("doc_id")) ->
         r.getAs[Double]("score")).toMap
     assert(indexed == direct) // bit-for-bit, not approx
-    // plan guard: both index reads prune to the query vocabulary's
-    // term buckets (serve-time IO ∝ touched buckets, never the corpus)
+    // plan guard: the postings read (which also yields df) prunes to
+    // the query vocabulary's term buckets (serve-time IO ∝ touched
+    // buckets, never the corpus)
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("tp"), plan)
   }
@@ -187,12 +188,16 @@ class RagSpec extends SparkSpec {
       (4L, "x y z a"), (5L, "c c d d e")).toDF("doc_id", "text")
     val queries = Seq(0 -> Seq("a", "c"), 1 -> Seq("b", "d", "x"))
     val idx = Scratch.dir("bm25_compact") + "/bm25"
+    // df is derived at probe time: no step writes a df dir
+    def noDfDir() = assert(!new java.io.File(s"$idx/df").exists())
     Rag.saveBm25Index(docs.filter($"doc_id" <= 2), $"doc_id", $"text", idx,
       buckets = 8, targetRows = 1000L, spread = 2)
+    noDfDir()
     assert(Rag.appendBm25Index(docs.filter($"doc_id" === 3), $"doc_id",
       $"text", idx, targetRows = 1000L, spread = 2, batchId = Some(1L)) == 1L)
     assert(Rag.appendBm25Index(docs.filter($"doc_id" > 3), $"doc_id",
       $"text", idx, targetRows = 1000L, spread = 2, batchId = Some(2L)) == 2L)
+    noDfDir()
     def scores() = rows(Rag.bm25Indexed(spark, idx, queries))
       .map(r => (r.getAs[Int]("query_id"), r.getAs[Long]("doc_id")) ->
         java.lang.Double.doubleToRawLongBits(r.getAs[Double]("score")))
@@ -204,13 +209,15 @@ class RagSpec extends SparkSpec {
     assert(scores() == before, "compaction must be score-invariant, bitwise")
     def segDirs(d: String) = new java.io.File(s"$idx/$d").listFiles()
       .map(_.getName).toSet
+    noDfDir()
     assert(segDirs("postings") == Set("seg=-1", "seg=2"))
     // a second pass folds the merged gen + batch 2 into gen -2
     assert(Rag.compactBm25Index(spark, idx, upTo = 2L,
       targetRows = 1000L, spread = 2) == Some(-2L))
     assert(scores() == before)
     assert(segDirs("postings") == Set("seg=-2") &&
-      segDirs("df") == Set("seg=-2") && segDirs("stats") == Set("seg=-2"))
+      segDirs("stats") == Set("seg=-2"))
+    noDfDir()
     assert(Rag.compactBm25Index(spark, idx, upTo = 99L).isEmpty)
     // a blind replay of a FOLDED batch id must be a no-op (its commit
     // marker is gone, but the hwm water line remembers it) — without
