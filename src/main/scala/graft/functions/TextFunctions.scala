@@ -120,9 +120,6 @@ object TextFunctions {
     when(head.rlike("^[-+]?(\\d+\\.?\\d*|\\.\\d+)$"), head.cast("double"))
   }
 
-  /** T5/D6 — Python `str.title()`-style casing of each word (initcap). */
-  def titleCase(c: Column): Column = initcap(c)
-
   /** T6 — md5 hex digest of the lower-trimmed string; the reference's
     * title-dedup key. Ref: strict_deduplication.py:39-40.
     */

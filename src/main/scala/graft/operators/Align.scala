@@ -21,12 +21,6 @@ object Align {
     }: _*)
   }
 
-  /** P2 — citation-style threshold filter with null→0 coercion.
-    * Ref: citation_filter.py:23-26.
-    */
-  def thresholdFilter(df: DataFrame, c: Column, min: Int): DataFrame =
-    df.filter(coalesce(c, lit(0)) >= min)
-
   /** P3 — quality gate: keep rows passing ALL conditions; companion
     * drop-reason accounting counts each failed condition independently
     * (a row failing two gates counts in both), plus kept/total.

@@ -904,7 +904,7 @@ object Classify {
   def loadLrWeights(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
     val ks = SegmentFs.listVersions(spark, s"$dir/w/delta", "d")
     require(ks.nonEmpty, s"no committed weight segment under $dir/w")
-    spark.read.parquet(SegmentFs.deltaDir(s"$dir/w", ks.max))
+    SegmentFs.readCommitted(spark, SegmentFs.deltaDir(s"$dir/w", ks.max))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
   }
 

@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Additive count-table log — the third merge-on-read lifecycle next to
   * [[MergeLog]] (last-wins by row version) and the HLL sketch lifecycle
@@ -55,12 +54,12 @@ object CountLog {
     */
   def read(spark: SparkSession, dir: String, keys: Seq[String]): DataFrame = {
     val bv = SegmentFs.latestBase(spark, dir)
-    val base = spark.read.parquet(SegmentFs.baseDir(dir, bv))
+    val base = SegmentFs.readCommitted(spark, SegmentFs.baseDir(dir, bv))
     val deltas = SegmentFs.listVersions(spark, s"$dir/delta", "d")
     val all =
       if (deltas.isEmpty) base
       else base.unionByName(
-        spark.read.parquet(deltas.map(SegmentFs.deltaDir(dir, _)): _*))
+        SegmentFs.readCommitted(spark, deltas.map(SegmentFs.deltaDir(dir, _)): _*))
     fold(all, keys)
   }
 
@@ -73,7 +72,7 @@ object CountLog {
   def readAsOf(spark: SparkSession, dir: String, keys: Seq[String],
                upTo: Long): DataFrame = {
     val bv = SegmentFs.latestBase(spark, dir)
-    val base = spark.read.parquet(SegmentFs.baseDir(dir, bv))
+    val base = SegmentFs.readCommitted(spark, SegmentFs.baseDir(dir, bv))
     val all = SegmentFs.listVersions(spark, s"$dir/delta", "d")
     if (all.nonEmpty && all.min > upTo)
       throw new IllegalStateException(
@@ -83,7 +82,7 @@ object CountLog {
     val rows =
       if (deltas.isEmpty) base
       else base.unionByName(
-        spark.read.parquet(deltas.map(SegmentFs.deltaDir(dir, _)): _*))
+        SegmentFs.readCommitted(spark, deltas.map(SegmentFs.deltaDir(dir, _)): _*))
     fold(rows, keys)
   }
 
@@ -100,16 +99,4 @@ object CountLog {
     */
   def vacuum(spark: SparkSession, dir: String): Int =
     SegmentFs.vacuumBases(spark, dir)
-
-  /** Streaming sink: every micro-batch appends one partial-count
-    * segment keyed by the batch id (idempotent on replay — the
-    * exactly-once contract against the checkpoint). The caller's
-    * stream must already BE batch-local counts (a streaming aggregate
-    * or a foreachBatch-side recount of the raw batch).
-    */
-  def countSink(counts: DataFrame, dir: String): DataStreamWriter[Row] =
-    counts.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        append(batch, dir, Some(batchId)): Unit
-    }
 }

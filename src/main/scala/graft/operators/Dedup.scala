@@ -90,7 +90,7 @@ object Dedup {
     try {
       val stage = graft.Scratch.dir("graft_d4_pairs")
       pairs.write.mode("overwrite").parquet(stage)
-      spark.read.parquet(stage)
+      SegmentFs.readCommitted(spark, stage)
     } finally staged.foreach(_.unpersist(blocking = false))
   }
 
@@ -247,7 +247,7 @@ object Dedup {
       // release them (the d4 discipline: library calls leave no cache)
       val stage = graft.Scratch.dir("graft_d22_pairs")
       pairs.write.mode("overwrite").parquet(stage)
-      spark.read.parquet(stage)
+      SegmentFs.readCommitted(spark, stage)
     } finally staged.foreach(_.unpersist(blocking = false))
   }
 
@@ -273,7 +273,7 @@ object Dedup {
     try {
       val stage = graft.Scratch.dir("graft_d22_probe")
       pairs.write.mode("overwrite").parquet(stage)
-      spark.read.parquet(stage)
+      SegmentFs.readCommitted(spark, stage)
     } finally staged.foreach(_.unpersist(blocking = false))
   }
 
@@ -305,7 +305,7 @@ object Dedup {
           col("_b.containment").as("containment"))
       val stage = graft.Scratch.dir("graft_d22_best")
       best.write.mode("overwrite").parquet(stage)
-      spark.read.parquet(stage)
+      SegmentFs.readCommitted(spark, stage)
     } finally staged.foreach(_.unpersist(blocking = false))
   }
 

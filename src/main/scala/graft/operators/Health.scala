@@ -203,11 +203,11 @@ object Health {
   private def hllRows(spark: org.apache.spark.sql.SparkSession,
                       dir: String): DataFrame = {
     val bv = SegmentFs.latestBase(spark, s"$dir/hll")
-    val base = spark.read.parquet(SegmentFs.baseDir(s"$dir/hll", bv))
+    val base = SegmentFs.readCommitted(spark, SegmentFs.baseDir(s"$dir/hll", bv))
     val segs = SegmentFs.listVersions(spark, s"$dir/hll/delta", "d")
       .map(k => SegmentFs.deltaDir(s"$dir/hll", k))
     if (segs.isEmpty) base
-    else base.unionByName(spark.read.parquet(segs: _*))
+    else base.unionByName(SegmentFs.readCommitted(spark, segs: _*))
   }
 
   /** Fold every family's segments into a new base and retire them —
@@ -228,15 +228,6 @@ object Health {
       hllRows(spark, dir).groupBy(col("stratum"), col("day"))
         .agg(expr("hll_union_agg(sketch, true)").as("sketch"))): Unit
   }
-
-  /** Reclaim every family's pre-compaction bases
-    * ([[SegmentFs.vacuumBases]]); run after [[compactHealthStore]] on
-    * the operator's cadence. Returns total bases removed.
-    */
-  def vacuumHealthStore(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Int =
-    Seq("basestats", "qbuckets", "toks", "hll")
-      .map(f => SegmentFs.vacuumBases(spark, s"$dir/$f")).sum
 
   /** Assemble the dashboard from landed sketch rows ONLY — no corpus
     * access. Same columns as [[corpusHealth]] with the HLL distinct

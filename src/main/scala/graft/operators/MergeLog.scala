@@ -60,11 +60,11 @@ object MergeLog {
            version: String = "version",
            deleted: String = "deleted"): DataFrame = {
     val bv = SegmentFs.latestBase(spark, dir)
-    val base = spark.read.parquet(baseDir(dir, bv))
+    val base = SegmentFs.readCommitted(spark, baseDir(dir, bv))
     val deltas = listVersions(spark, s"$dir/delta", "d")
     if (deltas.isEmpty) base
     else {
-      val delta = spark.read.parquet(deltas.map(deltaDir(dir, _)): _*)
+      val delta = SegmentFs.readCommitted(spark, deltas.map(deltaDir(dir, _)): _*)
       Dedup.mergeUpsert(base, delta, key, version, deleted)
     }
   }
@@ -83,7 +83,7 @@ object MergeLog {
                version: String = "version",
                deleted: String = "deleted"): DataFrame = {
     val bv = SegmentFs.latestBase(spark, dir)
-    val base = spark.read.parquet(baseDir(dir, bv))
+    val base = SegmentFs.readCommitted(spark, baseDir(dir, bv))
     val all = listVersions(spark, s"$dir/delta", "d")
     if (all.nonEmpty && all.min > upTo)
       throw new IllegalStateException(
@@ -92,7 +92,7 @@ object MergeLog {
     val deltas = all.filter(_ <= upTo)
     if (deltas.isEmpty) base
     else {
-      val delta = spark.read.parquet(deltas.map(deltaDir(dir, _)): _*)
+      val delta = SegmentFs.readCommitted(spark, deltas.map(deltaDir(dir, _)): _*)
       Dedup.mergeUpsert(base, delta, key, version, deleted)
     }
   }
@@ -141,7 +141,7 @@ object MergeLog {
            deleted: String = "deleted"): DataFrame = {
     require(from <= to, s"from=$from must be <= to=$to")
     val bv = SegmentFs.latestBase(spark, dir)
-    val base = spark.read.parquet(baseDir(dir, bv))
+    val base = SegmentFs.readCommitted(spark, baseDir(dir, bv))
     val all = listVersions(spark, s"$dir/delta", "d")
     if (from == -1L && bv != 0L)
       throw new IllegalStateException(
@@ -155,7 +155,7 @@ object MergeLog {
     if (!segs.exists(_ > from))
       return base.limit(0).withColumn("change", lit(""))
     val delta = segs.map { k =>
-      spark.read.parquet(deltaDir(dir, k)).withColumn("__seg", lit(k))
+      SegmentFs.readCommitted(spark, deltaDir(dir, k)).withColumn("__seg", lit(k))
     }.reduce(_ unionByName _)
     val touched = delta.filter(col("__seg") > from).select(col(key)).distinct()
     val deltaT = delta.join(broadcast(touched), Seq(key), "left_semi")

@@ -48,25 +48,41 @@ object Packing {
     */
   def packedStartsBucketed(docs: DataFrame, lang: Column, docId: Column,
                            nTok: Column, bucketWidth: Long): DataFrame = {
+    val d = bucketed(docs, lang, docId, nTok, bucketWidth)
+    // pass 2: one total per non-empty (group, bucket); the carry window's
+    // partitions are #buckets-sized — never corpus-sized.
+    val wCarry = Window.partitionBy(col("lang")).orderBy(col("__b"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val carries = bucketTotals(d).withColumn("__carry",
+        coalesce(sum(col("__tot")).over(wCarry), lit(0L)))
+      .select(col("lang"), col("__b"), col("__carry"))
+    withCarries(d, carries)
+  }
+
+  /** (lang, doc_id, n_tok, __b): the docs keyed by their id bucket. */
+  private def bucketed(docs: DataFrame, lang: Column, docId: Column,
+                       nTok: Column, bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
-    val d = docs.select(lang.as("lang"), docId.cast("long").as("doc_id"),
+    docs.select(lang.as("lang"), docId.cast("long").as("doc_id"),
         nTok.cast("long").as("n_tok"))
       .withColumn("__b", expr(s"doc_id div $bucketWidth"))
+  }
+
+  /** (lang, __b, __tot): one token total per non-empty bucket. */
+  private def bucketTotals(d: DataFrame): DataFrame =
+    d.groupBy(col("lang"), col("__b")).agg(sum(col("n_tok")).as("__tot"))
+
+  /** Pass 1 and the stitch: in-bucket running sums over a [[bucketed]]
+    * frame, offset by `carries` (lang, __b, __carry) — the tokens of the
+    * group's earlier buckets — joined on (group, bucket), reusing pass
+    * 1's partitioning for the big side while the carry side broadcasts.
+    */
+  private def withCarries(d: DataFrame, carries: DataFrame): DataFrame = {
     val wIn = Window.partitionBy(col("lang"), col("__b"))
       .orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inBucket = d.withColumn("__in_start",
-      sum(col("n_tok")).over(wIn) - col("n_tok"))
-    // pass 2: one total per non-empty (group, bucket); the carry window's
-    // partitions are #buckets-sized — never corpus-sized.
-    val totals = d.groupBy(col("lang"), col("__b"))
-      .agg(sum(col("n_tok")).as("__tot"))
-    val wCarry = Window.partitionBy(col("lang")).orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carries = totals.withColumn("__carry",
-        coalesce(sum(col("__tot")).over(wCarry), lit(0L)))
-      .select(col("lang"), col("__b"), col("__carry"))
-    inBucket.join(broadcast(carries), Seq("lang", "__b"))
+    d.withColumn("__in_start", sum(col("n_tok")).over(wIn) - col("n_tok"))
+      .join(broadcast(carries), Seq("lang", "__b"))
       .select(col("doc_id"), col("lang"), col("n_tok"),
         (col("__carry") + col("__in_start")).as("start_tok"))
   }
@@ -166,7 +182,8 @@ object Packing {
   // day's batch must APPEND at the stream's high-water token offset
   // and never restate an earlier placement.
   //
-  //   dir/tot/d=K     1-row (tokens): K's token mass, written FIRST —
+  //   dir/tot/d=K     committed text file `tokens`: K's token mass,
+  //                   written FIRST through the FS API (no Spark job) —
   //                   a tot without committed data is a torn attempt,
   //                   invisible to readers and rewritten by the retry
   //   dir/delta/d=K   packed rows (seg, doc_id, n_tok, start_tok);
@@ -182,7 +199,10 @@ object Packing {
   /** Append one batch to the packed store at `dir` (created on first
     * call). Within the batch, docs pack in ascending `id` order (rows
     * with `nTok` < 1 place nothing); across batches, order is append
-    * order. Returns the committed segment id (= `batchId`).
+    * order. The per-bucket token totals come to the driver (one row per
+    * non-empty bucket): their prefix sums are the cross-bucket carries,
+    * and their sum is the batch's token mass, written as `tot/d=K` text.
+    * Returns the committed segment id (= `batchId`).
     */
   def appendPacked(spark: SparkSession, dir: String, batch: DataFrame,
                    id: Column, nTok: Column, batchId: Long,
@@ -193,38 +213,38 @@ object Packing {
       require(committed.forall(_ < batchId),
         s"packed appends are monotone: batch $batchId after $committed")
       val base = packedHighWater(spark, dir, committed)
-      // stage once: the tot agg and the segment write both consume the
-      // packed frame — don't pay the pack window twice
-      val packed = packedStartsBucketed(
-          batch.filter(nTok.cast("long") >= 1L)
-            .withColumn("__all", lit("all")),
-          col("__all"), id, nTok, bucketWidth)
+      val d = bucketed(batch.filter(nTok.cast("long") >= 1L),
+        lit("all"), id, nTok, bucketWidth)
+      val totals = bucketTotals(d).select(col("__b"), col("__tot"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      val carries = spark.createDataFrame(
+          totals.map(_._1).zip(totals.scanLeft(0L)(_ + _._2))
+            .map { case (b, c) => ("all", b, c) }.toSeq)
+        .toDF("lang", "__b", "__carry")
+      // a tot without committed data is a torn attempt: rewrite it
+      val tot = s"$dir/tot/d=$batchId"
+      SegmentFs.reclaim(spark, tot)
+      SegmentFs.writeSmallFile(spark, tot, "tokens", totals.map(_._2).sum.toString): Unit
+      SegmentFs.appendSegment(withCarries(d, carries)
         .select(lit(batchId).as("seg"), col("doc_id"), col("n_tok"),
-          (col("start_tok") + lit(base)).as("start_tok"))
-        .localCheckpoint(eager = true)
-      try {
-        packed.agg(coalesce(sum(col("n_tok")), lit(0L)).as("tokens"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/tot/d=$batchId")
-        SegmentFs.appendSegment(packed, dir, Some(batchId))
-      } finally graft.Frames.free(packed)
+          (col("start_tok") + lit(base)).as("start_tok")), dir, Some(batchId))
     }
   }
 
   /** The stream's high-water token offset: Σ token mass of the
-    * data-committed segments — one bounded 1-row read per segment,
-    * never a store scan.
+    * data-committed segments, read from their committed `tot` text files
+    * through the FS API — no Spark job, never a store scan.
     */
   private def packedHighWater(spark: SparkSession, dir: String,
                               committed: Seq[Long]): Long =
     committed.map(k =>
-      spark.read.parquet(s"$dir/tot/d=$k").head().getLong(0)).sum
+      SegmentFs.readSmallFile(spark, s"$dir/tot/d=$k", "tokens").toLong).sum
 
   /** All committed packed rows — the serve view. */
   def packedStore(spark: SparkSession, dir: String): DataFrame = {
     val committed = SegmentFs.listVersions(spark, s"$dir/delta", "d")
     require(committed.nonEmpty, s"no committed packed segments at $dir")
-    spark.read.parquet(committed.map(SegmentFs.deltaDir(dir, _)): _*)
+    SegmentFs.readCommitted(spark, committed.map(SegmentFs.deltaDir(dir, _)): _*)
   }
 
   /** Streaming wrapper over [[appendPacked]]: each micro-batch appends

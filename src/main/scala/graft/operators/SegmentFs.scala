@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The commit-gated directory protocol — the ONLY code that writes or
@@ -50,6 +53,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - Marker before dirs: deleting the marker turns the segment
   *    invisible atomically; a crash before its dirs go leaves an
   *    invisible orphan, never half a segment.
+  *
+  * '''Reads.''' A committed parquet dir is read through [[readCommitted]]:
+  * the schema comes from one footer on the driver, so the read runs no
+  * schema-inference job (a bare `spark.read.parquet` runs one per call).
   *
   * '''Ids.''' Appends take the caller's batch id or the successor of
   * max(water line, committed ids), floored at the store's first batch
@@ -134,6 +141,47 @@ private[graft] object SegmentFs {
   private def readText(f: FileSystem, p: Path): String = {
     val in = f.open(p)
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** Spark's footer key holding the writer's schema as JSON. */
+  private val RowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema Spark would infer for a parquet read of `dirs`, read on the
+    * driver from the footer of the first data file in path order — the
+    * one file Spark's inference job reads. None when no dir holds a data
+    * file or that footer carries no Spark schema (a foreign writer).
+    */
+  private[graft] def footerSchema(spark: SparkSession,
+                                  dirs: Seq[String]): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    // hidden names (`_SUCCESS`, `.crc`) are not data; a dir's files sort
+    // after its name plus '/', so this order is the full paths' order
+    def first(f: FileSystem, ls: Seq[FileStatus]): Option[Path] =
+      ls.filterNot(s => "_.".contains(s.getPath.getName.head))
+        .sortBy(s => s.getPath.getName + (if (s.isDirectory) "/" else ""))
+        .iterator.map { s =>
+          if (s.isDirectory) first(f, f.listStatus(s.getPath).toSeq)
+          else Some(s.getPath)
+        }.collectFirst { case Some(p) => p }
+    val file = dirs.sortBy(_ + "/").iterator.map { d =>
+      val p = new Path(d)
+      val f = p.getFileSystem(conf)
+      try first(f, f.listStatus(p).toSeq)
+      catch { case _: java.io.FileNotFoundException => None }
+    }.collectFirst { case Some(p) => p }
+    file.flatMap { p =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadata))
+      finally r.close()
+    }.map(DataType.fromJson).collect { case s: StructType => s }
+  }
+
+  /** One DataFrame over the committed parquet `dirs`, with the schema from
+    * [[footerSchema]]; without one, Spark infers it as usual.
+    */
+  def readCommitted(spark: SparkSession, dirs: String*): DataFrame = {
+    val r = spark.read
+    footerSchema(spark, dirs).fold(r)(r.schema).parquet(dirs: _*)
   }
 
   /** An EMPTY committed dir whose only information is its name (commit

@@ -878,7 +878,7 @@ object Similarity {
   /** Centroid set of a saved index, in cid order. */
   def loadIvfCentroids(spark: org.apache.spark.sql.SparkSession,
                        path: String): Seq[(Long, Seq[Double])] =
-    spark.read.parquet(s"$path/centroids").collect()
+    SegmentFs.readCommitted(spark, s"$path/centroids").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
       .sortBy(_._1).toSeq
 
@@ -998,7 +998,7 @@ object Similarity {
     */
   def loadPqBooks(spark: org.apache.spark.sql.SparkSession,
                   path: String): Seq[Seq[(Long, Seq[Double])]] =
-    spark.read.parquet(s"$path/books").collect()
+    SegmentFs.readCommitted(spark, s"$path/books").collect()
       .map(r => (r.getAs[Long]("sub"), r.getAs[Long]("cid"),
         r.getSeq[Double](r.fieldIndex("cv")).toSeq))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -1209,7 +1209,7 @@ object Similarity {
     val s = cands.sparkSession
     def staged(df: DataFrame, i: Int): DataFrame = {
       df.write.mode("overwrite").parquet(s"$stageDir/sel_$i")
-      s.read.parquet(s"$stageDir/sel_$i")
+      SegmentFs.readCommitted(s, s"$stageDir/sel_$i")
     }
     val w1 = Window.partitionBy(col("query_id"))
       .orderBy(col("squ").desc, col("doc_id"))

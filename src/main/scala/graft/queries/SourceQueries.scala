@@ -518,7 +518,7 @@ object SourceQueries {
         def l(i: Int) = (if (v.isNullAt(i)) lit(null) else lit(v.getLong(i)))
           .cast("long")
         sources.FileManifest.record(s, man, nd, id)
-        s.range(1).select(l(0).as("tick"), l(1).as("n_drops"),
+        s.range(0, 1, 1, 1).select(l(0).as("tick"), l(1).as("n_drops"),
           l(2).as("n_rows"), l(3).as("sum_chars"))
       }
       land(b1.filter(col("doc_id") % 2 === 0), "d1_a")

@@ -48,7 +48,7 @@ object FileManifest {
     */
   def readDrops(spark: SparkSession, landing: String,
                 drops: Seq[String]): DataFrame =
-    spark.read.parquet(drops.map(d => s"$landing/$d"): _*)
+    SegmentFs.readCommitted(spark, drops.map(d => s"$landing/$d"): _*)
 
   /** Record `drops` as absorbed, as the committed manifest segment of
     * tick `batchId`. Idempotent: a committed segment for this id makes

@@ -34,7 +34,7 @@ object FooterStats {
     */
   def plan(spark: SparkSession, path: String, aggs: Seq[Column]): DataFrame = {
     require(aggs.nonEmpty, "FooterStats needs at least one aggregate")
-    spark.read.parquet(path).agg(aggs.head, aggs.tail: _*)
+    graft.operators.SegmentFs.readCommitted(spark, path).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Run `body` with the DSv2 parquet reader + aggregate pushdown forced

@@ -32,14 +32,6 @@ object Streams {
   case class Session(user_id: Long, start_us: Long, end_us: Long,
                      n_events: Long, sum_value: Double)
 
-  /** Streaming scan of an events parquet directory (schema pinned — a
-    * streaming source must never infer).
-    */
-  def eventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-      .parquet(dir)
-
   /** Watermarked tumbling-window counts per event type. Append-mode safe:
     * results emit once the watermark passes window end.
     */
@@ -325,7 +317,7 @@ object Streams {
     stream.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        import graft.operators.Similarity
+        import graft.operators.{SegmentFs, Similarity}
         val b = batch.select(col(idName).cast("long").as("doc_id"),
           col(vecName).cast("array<float>").as("dv")).persist()
         try {
@@ -344,12 +336,12 @@ object Streams {
               }.filter(_ < batchId).toSeq
           val livePath =
             if (tickIds.isEmpty) indexPath
-            else spark.read.parquet(s"$ticksDir/b=${tickIds.max}")
+            else SegmentFs.readCommitted(spark, s"$ticksDir/b=${tickIds.max}")
               .head().getAs[String]("serve_path")
           b.write.mode("overwrite").parquet(s"$corpusDir/b=$batchId")
           Similarity.appendIvfPqIndex(spark, livePath, b, col("doc_id"),
             col("dv"), targetRows, spread, batchId = Some(batchId)): Unit
-          val corpus = spark.read.parquet(corpusDir)
+          val corpus = SegmentFs.readCommitted(spark, corpusDir)
           val tick = Similarity.maintainIvfPqIndex(spark, livePath,
             s"$rebuildBase/b=$batchId", corpus, col("doc_id"), col("dv"),
             b.select(col("doc_id").as("qid"), col("dv").as("qv")),

@@ -230,6 +230,40 @@ class PackingSpec extends SparkSpec {
     }
   }
 
+  test("appendPacked: a torn append (tot committed, data not) is invisible and its retry converges") {
+    import graft.operators.SegmentFs
+    val docs = Seq((1L, 4L), (2L, 6L), (3L, 15L), (4L, 3L), (5L, 25L),
+      (6L, 7L)).toDF("doc_id", "n_tok")
+    val batches = Seq(docs.filter($"doc_id" <= 3), docs.filter($"doc_id" === 4 || $"doc_id" === 5),
+      docs.filter($"doc_id" === 6))
+    def append(store: String, k: Int): Unit =
+      Packing.appendPacked(spark, store, batches(k), $"doc_id", $"n_tok",
+        batchId = k.toLong, bucketWidth = 2L): Unit
+    def state(store: String) = (
+      rows(Packing.packedStore(spark, store).orderBy($"doc_id")).map(_.toString),
+      (0 to 2).map(k => SegmentFs.readSmallFile(spark, s"$store/tot/d=$k", "tokens")))
+    val clean = Scratch.dir("pk_clean") + "/packed"
+    (0 to 2).foreach(append(clean, _))
+
+    val torn = Scratch.dir("pk_torn") + "/packed"
+    append(torn, 0)
+    // batch 1 crashed after its tot (of a different mass) committed and
+    // before its data did: a torn data dir without its marker
+    assert(SegmentFs.writeSmallFile(spark, s"$torn/tot/d=1", "tokens", "999"))
+    spark.range(3).write.parquet(SegmentFs.deltaDir(torn, 1L))
+    new java.io.File(SegmentFs.deltaDir(torn, 1L), "_SUCCESS").delete(): Unit
+    // invisible to readers
+    assert(rows(Packing.packedStore(spark, torn)).map(_.getLong(0)).toSet == Set(0L))
+    append(torn, 1) // the retry reclaims the torn tot and data
+    append(torn, 2) // the high water counts no torn mass
+    assert(state(torn) == state(clean))
+    assert(SegmentFs.readSmallFile(spark, s"$torn/tot/d=1", "tokens") == "28")
+    // a poisoned replay of the retried id is still a complete no-op
+    Packing.appendPacked(spark, torn, docs.withColumn("n_tok", lit(999L)),
+      $"doc_id", $"n_tok", batchId = 1L, bucketWidth = 2L)
+    assert(state(torn) == state(clean))
+  }
+
   test("packedStreamSink: micro-batches append at the high water, exactly once") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
