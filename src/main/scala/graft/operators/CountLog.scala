@@ -52,16 +52,8 @@ object CountLog {
   /** Current totals: base ∪ every committed delta → one keyed sum. ONE
     * lazy plan over (#segments × key-space) rows.
     */
-  def read(spark: SparkSession, dir: String, keys: Seq[String]): DataFrame = {
-    val bv = SegmentFs.latestBase(spark, dir)
-    val base = SegmentFs.readCommitted(spark, SegmentFs.baseDir(dir, bv))
-    val deltas = SegmentFs.listVersions(spark, s"$dir/delta", "d")
-    val all =
-      if (deltas.isEmpty) base
-      else base.unionByName(
-        SegmentFs.readCommitted(spark, deltas.map(SegmentFs.deltaDir(dir, _)): _*))
-    fold(all, keys)
-  }
+  def read(spark: SparkSession, dir: String, keys: Seq[String]): DataFrame =
+    readAsOf(spark, dir, keys, Long.MaxValue)
 
   /** Time-travel read: totals AS OF delta segment `upTo` (inclusive) —
     * the model-reproducibility primitive ("score with the model as of

@@ -79,7 +79,6 @@ object Dedup {
     */
   def jaccardPairs(df: DataFrame, id: Column, text: Column,
                    threshold: Double): DataFrame = {
-    val spark = df.sparkSession
     val (pairs, staged) = jaccardPairsPlan(df, id, text, threshold)
     // Materialize the pair set while the dictionary/doc-index blocks are
     // pinned, then RELEASE them — a library call must not leave cache
@@ -87,11 +86,8 @@ object Dedup {
     // rest of a 60-query run). The stage is a scratch parquet: the same
     // build-once artifact you'd keep deliberately at 100 TB, and the
     // returned scan holds no cache at all.
-    try {
-      val stage = graft.Scratch.dir("graft_d4_pairs")
-      pairs.write.mode("overwrite").parquet(stage)
-      SegmentFs.readCommitted(spark, stage)
-    } finally staged.foreach(_.unpersist(blocking = false))
+    try SegmentFs.stage(pairs, graft.Scratch.dir("graft_d4_pairs"))
+    finally staged.foreach(_.unpersist(blocking = false))
   }
 
   /** The lazy pair plan plus its two persisted intermediates (token
@@ -210,7 +206,6 @@ object Dedup {
     */
   def containmentPairs(df: DataFrame, id: Column, text: Column,
                        threshold: Double): DataFrame = {
-    val spark = df.sparkSession
     val (docs, staged) = rarityDictDocs(df, id, text)
     try {
       val tNum = math.round(threshold * 1000000).toInt
@@ -245,9 +240,7 @@ object Dedup {
           col("size_b").cast("long").as("size_b"), col("containment"))
       // materialize while the dictionary/doc blocks are pinned, then
       // release them (the d4 discipline: library calls leave no cache)
-      val stage = graft.Scratch.dir("graft_d22_pairs")
-      pairs.write.mode("overwrite").parquet(stage)
-      SegmentFs.readCommitted(spark, stage)
+      SegmentFs.stage(pairs, graft.Scratch.dir("graft_d22_pairs"))
     } finally staged.foreach(_.unpersist(blocking = false))
   }
 
@@ -268,13 +261,9 @@ object Dedup {
     */
   def containmentProbe(batch: DataFrame, corpus: DataFrame, id: Column,
                        text: Column, threshold: Double): DataFrame = {
-    val spark = batch.sparkSession
     val (pairs, staged) = containmentProbePlan(batch, corpus, id, text, threshold)
-    try {
-      val stage = graft.Scratch.dir("graft_d22_probe")
-      pairs.write.mode("overwrite").parquet(stage)
-      SegmentFs.readCommitted(spark, stage)
-    } finally staged.foreach(_.unpersist(blocking = false))
+    try SegmentFs.stage(pairs, graft.Scratch.dir("graft_d22_probe"))
+    finally staged.foreach(_.unpersist(blocking = false))
   }
 
   /** [[containmentProbe]] reduced to each batch doc's BEST container —
@@ -289,7 +278,6 @@ object Dedup {
     */
   def containmentBest(batch: DataFrame, corpus: DataFrame, id: Column,
                       text: Column, threshold: Double): DataFrame = {
-    val spark = batch.sparkSession
     val (pairs, staged) = containmentProbePlan(batch, corpus, id, text, threshold)
     try {
       // lexicographic struct max = (inter desc, size_b desc, id_b asc);
@@ -303,9 +291,7 @@ object Dedup {
           col("_b.inter").as("inter"), col("_b.size_a").as("size_a"),
           col("_b.size_b").as("size_b"),
           col("_b.containment").as("containment"))
-      val stage = graft.Scratch.dir("graft_d22_best")
-      best.write.mode("overwrite").parquet(stage)
-      SegmentFs.readCommitted(spark, stage)
+      SegmentFs.stage(best, graft.Scratch.dir("graft_d22_best"))
     } finally staged.foreach(_.unpersist(blocking = false))
   }
 

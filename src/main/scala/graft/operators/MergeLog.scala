@@ -58,22 +58,14 @@ object MergeLog {
     */
   def read(spark: SparkSession, dir: String, key: String,
            version: String = "version",
-           deleted: String = "deleted"): DataFrame = {
-    val bv = SegmentFs.latestBase(spark, dir)
-    val base = SegmentFs.readCommitted(spark, baseDir(dir, bv))
-    val deltas = listVersions(spark, s"$dir/delta", "d")
-    if (deltas.isEmpty) base
-    else {
-      val delta = SegmentFs.readCommitted(spark, deltas.map(deltaDir(dir, _)): _*)
-      Dedup.mergeUpsert(base, delta, key, version, deleted)
-    }
-  }
+           deleted: String = "deleted"): DataFrame =
+    readAsOf(spark, dir, key, Long.MaxValue, version, deleted)
 
   /** Time-travel read: the table AS OF delta segment `upTo` (inclusive)
     * — the reproducibility primitive: a training run records the batch
     * id it consumed, and any later job reads the exact same corpus
-    * state back. Implemented as the plain [[read]] restricted to delta
-    * segments ≤ `upTo`; one lazy plan, no snapshot copies. Only valid
+    * state back: [[read]] restricted to delta segments ≤ `upTo`; one
+    * lazy plan, no snapshot copies. Only valid
     * back to the current base — [[compact]] absorbs and retires older
     * segments (throws if `upTo` predates a still-listed segment range
     * that compaction has folded away, i.e. when segments ≤ upTo no

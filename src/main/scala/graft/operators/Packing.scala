@@ -53,10 +53,8 @@ object Packing {
     // partitions are #buckets-sized — never corpus-sized.
     val wCarry = Window.partitionBy(col("lang")).orderBy(col("__b"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val carries = bucketTotals(d).withColumn("__carry",
-        coalesce(sum(col("__tot")).over(wCarry), lit(0L)))
-      .select(col("lang"), col("__b"), col("__carry"))
-    withCarries(d, carries)
+    withCarries(d, bucketTotals(d).select(col("lang"), col("__b"),
+      coalesce(sum(col("__tot")).over(wCarry), lit(0L)).as("__carry")))
   }
 
   /** (lang, doc_id, n_tok, __b): the docs keyed by their id bucket. */
@@ -68,15 +66,11 @@ object Packing {
       .withColumn("__b", expr(s"doc_id div $bucketWidth"))
   }
 
-  /** (lang, __b, __tot): one token total per non-empty bucket. */
   private def bucketTotals(d: DataFrame): DataFrame =
     d.groupBy(col("lang"), col("__b")).agg(sum(col("n_tok")).as("__tot"))
 
-  /** Pass 1 and the stitch: in-bucket running sums over a [[bucketed]]
-    * frame, offset by `carries` (lang, __b, __carry) — the tokens of the
-    * group's earlier buckets — joined on (group, bucket), reusing pass
-    * 1's partitioning for the big side while the carry side broadcasts.
-    */
+  /** Pass 1 and the stitch: in-bucket running sums plus the bucket's
+    * `carries` (lang, __b, __carry), the carry side broadcast. */
   private def withCarries(d: DataFrame, carries: DataFrame): DataFrame = {
     val wIn = Window.partitionBy(col("lang"), col("__b"))
       .orderBy(col("doc_id"))
@@ -217,6 +211,7 @@ object Packing {
         lit("all"), id, nTok, bucketWidth)
       val totals = bucketTotals(d).select(col("__b"), col("__tot"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      // a bucket's carry: the tokens of the buckets before it
       val carries = spark.createDataFrame(
           totals.map(_._1).zip(totals.scanLeft(0L)(_ + _._2))
             .map { case (b, c) => ("all", b, c) }.toSeq)
@@ -224,7 +219,8 @@ object Packing {
       // a tot without committed data is a torn attempt: rewrite it
       val tot = s"$dir/tot/d=$batchId"
       SegmentFs.reclaim(spark, tot)
-      SegmentFs.writeSmallFile(spark, tot, "tokens", totals.map(_._2).sum.toString): Unit
+      SegmentFs.writeSmallFile(spark, tot, "tokens",
+        totals.map(_._2).sum.toString): Unit
       SegmentFs.appendSegment(withCarries(d, carries)
         .select(lit(batchId).as("seg"), col("doc_id"), col("n_tok"),
           (col("start_tok") + lit(base)).as("start_tok")), dir, Some(batchId))

@@ -54,9 +54,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    invisible atomically; a crash before its dirs go leaves an
   *    invisible orphan, never half a segment.
   *
-  * '''Reads.''' A committed parquet dir is read through [[readCommitted]]:
-  * the schema comes from one footer on the driver, so the read runs no
-  * schema-inference job (a bare `spark.read.parquet` runs one per call).
+  * '''Reads.''' [[readCommitted]] takes a committed parquet dir's schema
+  * from one footer on the driver: no schema-inference job, which a bare
+  * `spark.read.parquet` runs per call.
   *
   * '''Ids.''' Appends take the caller's batch id or the successor of
   * max(water line, committed ids), floored at the store's first batch
@@ -143,13 +143,10 @@ private[graft] object SegmentFs {
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
-  /** Spark's footer key holding the writer's schema as JSON. */
-  private val RowMetadata = "org.apache.spark.sql.parquet.row.metadata"
-
-  /** The schema Spark would infer for a parquet read of `dirs`, read on the
-    * driver from the footer of the first data file in path order — the
-    * one file Spark's inference job reads. None when no dir holds a data
-    * file or that footer carries no Spark schema (a foreign writer).
+  /** The schema Spark would infer for a parquet read of `dirs`, from the
+    * footer of the first data file in path order (the one file Spark's
+    * inference job reads), read on the driver. None when no dir holds a
+    * data file or its footer carries no Spark schema (a foreign writer).
     */
   private[graft] def footerSchema(spark: SparkSession,
                                   dirs: Seq[String]): Option[StructType] = {
@@ -159,20 +156,16 @@ private[graft] object SegmentFs {
     def first(f: FileSystem, ls: Seq[FileStatus]): Option[Path] =
       ls.filterNot(s => "_.".contains(s.getPath.getName.head))
         .sortBy(s => s.getPath.getName + (if (s.isDirectory) "/" else ""))
-        .iterator.map { s =>
-          if (s.isDirectory) first(f, f.listStatus(s.getPath).toSeq)
-          else Some(s.getPath)
-        }.collectFirst { case Some(p) => p }
-    val file = dirs.sortBy(_ + "/").iterator.map { d =>
-      val p = new Path(d)
-      val f = p.getFileSystem(conf)
-      try first(f, f.listStatus(p).toSeq)
+        .iterator.flatMap(s => if (!s.isDirectory) Some(s.getPath)
+          else first(f, f.listStatus(s.getPath).toSeq)).nextOption()
+    dirs.sortBy(_ + "/").iterator.map(new Path(_)).flatMap { d =>
+      val f = d.getFileSystem(conf)
+      try first(f, f.listStatus(d).toSeq)
       catch { case _: java.io.FileNotFoundException => None }
-    }.collectFirst { case Some(p) => p }
-    file.flatMap { p =>
+    }.nextOption().flatMap { p =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadata))
-      finally r.close()
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")) finally r.close()
     }.map(DataType.fromJson).collect { case s: StructType => s }
   }
 
@@ -182,6 +175,13 @@ private[graft] object SegmentFs {
   def readCommitted(spark: SparkSession, dirs: String*): DataFrame = {
     val r = spark.read
     footerSchema(spark, dirs).fold(r)(r.schema).parquet(dirs: _*)
+  }
+
+  /** Write `df` over `dir` and read the committed dir back: a stage that
+    * cuts the lineage and holds no cache. */
+  def stage(df: DataFrame, dir: String): DataFrame = {
+    df.write.mode("overwrite").parquet(dir)
+    readCommitted(df.sparkSession, dir)
   }
 
   /** An EMPTY committed dir whose only information is its name (commit

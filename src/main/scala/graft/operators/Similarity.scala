@@ -1206,11 +1206,7 @@ object Similarity {
     */
   def mmrTopK(cands: DataFrame, pairs: DataFrame, kOut: Int,
               wRel: Long, wDiv: Long, stageDir: String): DataFrame = {
-    val s = cands.sparkSession
-    def staged(df: DataFrame, i: Int): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$stageDir/sel_$i")
-      SegmentFs.readCommitted(s, s"$stageDir/sel_$i")
-    }
+    def staged(df: DataFrame, i: Int) = SegmentFs.stage(df, s"$stageDir/sel_$i")
     val w1 = Window.partitionBy(col("query_id"))
       .orderBy(col("squ").desc, col("doc_id"))
     var sel = staged(cands.withColumn("_rn", row_number().over(w1))

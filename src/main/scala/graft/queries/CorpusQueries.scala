@@ -1423,11 +1423,11 @@ object CorpusQueries {
       // the stream's high-water token offset and never restate an
       // earlier placement. History (doc_id % 17 != 0) lands as
       // segment 0; the delta day appends as segment 1 from the stored
-      // per-segment token totals (one bounded 1-row read per segment,
-      // never a store rescan); a crash-replay of the delta batch id
-      // must no-op at the commit gate — if it double-appended, every
-      // delta row would appear twice and the oracle's row count would
-      // break. Output = the read-back store with x15's span columns;
+      // per-segment token totals (one committed text file per segment,
+      // read with no Spark job, never a store rescan); a crash-replay
+      // of the delta batch id must no-op at the commit gate — if it
+      // double-appended, every delta row would appear twice and the
+      // oracle's row count would break. Output = the read-back store with x15's span columns;
       // the oracle replays the two-phase prefix sum relationally, so
       // equality proves land → high-water append → replay gate →
       // read-back end to end.

@@ -506,14 +506,10 @@ object SourceQueries {
                 lit(nd.size.toLong).as("n_drops"), col("n_rows"),
                 col("sum_chars"))
         // materialize BEFORE recording: the returned plan must not
-        // re-list the landing after later ticks move the manifest.
-        // The tick's report is ONE row of four longs — collect it and
-        // return a literal frame (the empty branch's exact shape)
-        // instead of staging it to parquet: the stage write + read-back
-        // were two extra driver job round-trips per tick for a row that
-        // lives on the driver anyway (r19, guide §1.2; the manifest
-        // lifecycle — landing reads, manifest complement, record — is
-        // unchanged).
+        // re-list the landing after later ticks move the manifest. The
+        // report is one row of four longs, so it returns as a literal
+        // frame on ONE partition: the union of the three ticks stays
+        // one partition and the orderBy needs no exchange.
         val v = row.collect()(0)
         def l(i: Int) = (if (v.isNullAt(i)) lit(null) else lit(v.getLong(i)))
           .cast("long")

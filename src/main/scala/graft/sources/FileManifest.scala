@@ -43,8 +43,9 @@ object FileManifest {
                manifest: String): Seq[String] =
     listDrops(spark, landing).filterNot(processed(spark, manifest))
 
-  /** One DataFrame over exactly the given drops (empty schema-less
-    * reads are the caller's concern — pass a non-empty list).
+  /** One DataFrame over exactly the given drops, its schema from one
+    * drop's footer ([[SegmentFs.readCommitted]]: no inference job) — pass
+    * a non-empty list.
     */
   def readDrops(spark: SparkSession, landing: String,
                 drops: Seq[String]): DataFrame =
