@@ -19,12 +19,6 @@ import scala.concurrent.duration._
   */
 object Frames {
 
-  /** Measurement escape (fan A/Bs, COVERAGE.md fan bullet): with
-    * SPARK_GRAFT_NOFAN=1 every fan is the identity, so fan-vs-nofan
-    * runs need no recompile. Never set by any driver surface. */
-  private val disabled: Boolean =
-    sys.env.get("SPARK_GRAFT_NOFAN").contains("1")
-
   /** Spread an UNDER-partitioned source across the session's cores
     * before an expensive map phase (tokenize / minhash / simhash /
     * feature-hash): a small parquet file is one row group and
@@ -45,7 +39,7 @@ object Frames {
     * That floor cannot replace a fan: it sets a shuffle's read width,
     * and a fan's heavy map phase runs in the scan, before any shuffle.
     */
-  def fan(df: DataFrame): DataFrame = if (disabled) df else {
+  def fan(df: DataFrame): DataFrame = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     // partition count via the frame's OWN QueryExecution: `df.rdd`
     // would build a second QueryExecution (a deserialize-to-object
@@ -109,39 +103,29 @@ object Frames {
     */
   def overlap[A, B](a: => A)(b: => B,
                              abandonAfter: FiniteDuration = 5.minutes): (A, B) = {
-    if (overlapDisabled) { val ra = a; (ra, b) }
-    else {
-      import scala.concurrent.{Await, Future}
-      val fa = Future(a)(scala.concurrent.ExecutionContext.global)
-      // If `b` throws, chain `a` must still be awaited before the
-      // failure propagates (r18 verdict): rethrowing immediately would
-      // leave a's jobs running orphaned against scratch dirs — and a's
-      // own failure would never be observed. `b`'s failure stays the
-      // primary one; a's (if any) is attached as suppressed. The wait
-      // is bounded: a wedged `a` must not turn b's failure into a hang.
-      val rb = try b catch {
-        case eb: Throwable =>
-          try Await.result(fa, abandonAfter) catch {
-            case _: java.util.concurrent.TimeoutException =>
-              eb.addSuppressed(new IllegalStateException(
-                s"overlap: chain a abandoned, still running $abandonAfter after b failed"))
-            case ea: Throwable if ea ne eb =>
-              eb.addSuppressed(ea)
-              // the wait itself was interrupted: keep the flag for the caller
-              if (ea.isInstanceOf[InterruptedException]) Thread.currentThread().interrupt()
-          }
-          throw eb
-      }
-      (Await.result(fa, Duration.Inf), rb)
+    import scala.concurrent.{Await, Future}
+    val fa = Future(a)(scala.concurrent.ExecutionContext.global)
+    // If `b` throws, chain `a` must still be awaited before the
+    // failure propagates (r18 verdict): rethrowing immediately would
+    // leave a's jobs running orphaned against scratch dirs — and a's
+    // own failure would never be observed. `b`'s failure stays the
+    // primary one; a's (if any) is attached as suppressed. The wait
+    // is bounded: a wedged `a` must not turn b's failure into a hang.
+    val rb = try b catch {
+      case eb: Throwable =>
+        try Await.result(fa, abandonAfter) catch {
+          case _: java.util.concurrent.TimeoutException =>
+            eb.addSuppressed(new IllegalStateException(
+              s"overlap: chain a abandoned, still running $abandonAfter after b failed"))
+          case ea: Throwable if ea ne eb =>
+            eb.addSuppressed(ea)
+            // the wait itself was interrupted: keep the flag for the caller
+            if (ea.isInstanceOf[InterruptedException]) Thread.currentThread().interrupt()
+        }
+        throw eb
     }
+    (Await.result(fa, Duration.Inf), rb)
   }
-
-  /** Measurement escape (overlap A/Bs, same discipline as
-    * SPARK_GRAFT_NOFAN): with SPARK_GRAFT_NOOVERLAP=1 every overlap
-    * runs its two chains sequentially, so overlap-vs-sequential A/Bs
-    * need no recompile. Never set by any driver surface. */
-  private val overlapDisabled: Boolean =
-    sys.env.get("SPARK_GRAFT_NOOVERLAP").contains("1")
 
   /** Actually free the storage behind a frame: unpersists the
     * [[LogicalRDD]]'s underlying RDD for localCheckpointed frames,

@@ -864,7 +864,7 @@ object Classify {
     val w =
       try trainLogReg(folded, ticks, etaDen, idName)
       finally graft.Frames.free(folded)
-    SegmentFs.appendSegment(w.toDF("f", "w"), s"$dir/w", Some(-1L)): Unit
+    new SegmentFs.Log(spark, s"$dir/w").append(Some(-1L))(_ => w.toDF("f", "w")): Unit
     w
   }
 
@@ -885,16 +885,16 @@ object Classify {
     val feat = docFeaturesLabeled(batch, id, label, text, buckets, idName)
     val empty = batch.isEmpty
     val k = CountLog.append(feat, s"$dir/feat", batchId)
-    val committedW = SegmentFs.listVersions(spark, s"$dir/w/delta", "d")
-    if (!committedW.contains(k) && !empty) {
+    // the weight log skips a replayed id before any training runs
+    if (!empty) new SegmentFs.Log(spark, s"$dir/w").append(Some(k)) { _ =>
       val prev = loadLrWeights(spark, dir)
       val folded = CountLog.read(spark, s"$dir/feat", featKeys(idName))
         .localCheckpoint(eager = true)
       val w =
         try trainLogRegFrom(folded, prev, ticks, etaDen, idName)
         finally graft.Frames.free(folded)
-      SegmentFs.appendSegment(w.toDF("f", "w"), s"$dir/w", Some(k)): Unit
-    }
+      w.toDF("f", "w")
+    }: Unit
     k
   }
 
@@ -902,9 +902,10 @@ object Classify {
     * ≤ buckets rows — the collectWeights contract).
     */
   def loadLrWeights(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
-    val ks = SegmentFs.listVersions(spark, s"$dir/w/delta", "d")
+    val log = new SegmentFs.Log(spark, s"$dir/w")
+    val ks = log.committed
     require(ks.nonEmpty, s"no committed weight segment under $dir/w")
-    SegmentFs.readCommitted(spark, SegmentFs.deltaDir(s"$dir/w", ks.max))
+    log.deltas(Seq(ks.max))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
   }
 

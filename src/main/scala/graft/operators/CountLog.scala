@@ -22,10 +22,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fold stays tiny however long the log grows, and [[compact]] resets
   * the segment count whenever read amplification matters.
   *
-  * File discipline is [[SegmentFs]]'s: `base/v=N` + `delta/d=K` dirs
+  * File discipline is [[SegmentFs.Log]]'s: base and delta dirs
   * discovered by listing, commit-gated, per-batch-id idempotent
-  * appends (safe streaming replay), torn-write reclaim,
-  * crash-safe compaction.
+  * appends (safe streaming replay), torn-write reclaim. The base's
+  * version is the water line: it holds every batch id below it, so a
+  * compaction that dies before retiring its deltas never counts them
+  * twice, and a replay of a folded id is a no-op.
   */
 object CountLog {
 
@@ -34,14 +36,15 @@ object CountLog {
     * and is summed by [[read]].
     */
   def init(counts: DataFrame, dir: String): Unit =
-    counts.write.mode("errorifexists").parquet(SegmentFs.baseDir(dir, 0L))
+    new SegmentFs.Log(counts.sparkSession, dir).init(counts)
 
   /** Append one batch of partial counts as the next delta segment.
-    * O(batch); idempotent on committed batch `id`s (re-delivery after a
-    * sink-side commit is a no-op; a torn dir is rewritten).
+    * O(batch); idempotent on committed or folded batch `id`s
+    * (re-delivery after a sink-side commit is a no-op; a torn dir is
+    * rewritten).
     */
   def append(counts: DataFrame, dir: String, id: Option[Long] = None): Long =
-    SegmentFs.appendSegment(counts, dir, id)
+    new SegmentFs.Log(counts.sparkSession, dir).append(id)(_ => counts)
 
   private def fold(rows: DataFrame, keys: Seq[String]): DataFrame = {
     val sums = rows.columns.filterNot(keys.contains)
@@ -58,37 +61,23 @@ object CountLog {
   /** Time-travel read: totals AS OF delta segment `upTo` (inclusive) —
     * the model-reproducibility primitive ("score with the model as of
     * batch K", [[MergeLog.readAsOf]]'s sibling). Valid back to the
-    * current base; compaction absorbs older segments and the read
-    * throws past the retained horizon.
+    * current base; the read of a batch id compaction folded throws.
     */
   def readAsOf(spark: SparkSession, dir: String, keys: Seq[String],
-               upTo: Long): DataFrame = {
-    val bv = SegmentFs.latestBase(spark, dir)
-    val base = SegmentFs.readCommitted(spark, SegmentFs.baseDir(dir, bv))
-    val all = SegmentFs.listVersions(spark, s"$dir/delta", "d")
-    if (all.nonEmpty && all.min > upTo)
-      throw new IllegalStateException(
-        s"as-of $upTo predates the current base — segments <= $upTo were " +
-          s"compacted away (earliest retained: ${all.min})")
-    val deltas = all.filter(_ <= upTo)
-    val rows =
-      if (deltas.isEmpty) base
-      else base.unionByName(
-        SegmentFs.readCommitted(spark, deltas.map(SegmentFs.deltaDir(dir, _)): _*))
-    fold(rows, keys)
-  }
+               upTo: Long): DataFrame =
+    fold(new SegmentFs.Log(spark, dir).union(upTo), keys)
 
-  /** Fold the delta log into base v=N+1 and retire absorbed segments
-    * (crash-safe, see [[SegmentFs.compactInto]]). Reading a compacted
-    * log is identical to reading the uncompacted one — the sum fold is
-    * associative.
+  /** Fold the delta log into a new base named after the water line and
+    * retire absorbed segments ([[SegmentFs.Log.compact]]). Reading a
+    * compacted log is identical to reading the uncompacted one — the
+    * sum fold is associative.
     */
   def compact(spark: SparkSession, dir: String, keys: Seq[String]): Long =
-    SegmentFs.compactInto(spark, dir, read(spark, dir, keys))
+    new SegmentFs.Log(spark, dir).compact(readAsOf(spark, dir, keys, _))
 
   /** Reclaim bases older than the latest committed one
-    * ([[SegmentFs.vacuumBases]]; reads unaffected).
+    * ([[SegmentFs.Log.vacuum]]; reads unaffected).
     */
   def vacuum(spark: SparkSession, dir: String): Int =
-    SegmentFs.vacuumBases(spark, dir)
+    new SegmentFs.Log(spark, dir).vacuum()
 }

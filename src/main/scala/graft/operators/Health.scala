@@ -157,9 +157,8 @@ object Health {
       "stratum STRING, day LONG, lo LONG, cnt LONG"), s"$dir/qbuckets")
     CountLog.init(empty(
       "stratum STRING, day LONG, key STRING, cnt LONG"), s"$dir/toks")
-    empty("stratum STRING, day LONG, sketch BINARY")
-      .write.mode("errorifexists")
-      .parquet(SegmentFs.baseDir(s"$dir/hll", 0L))
+    new SegmentFs.Log(spark, s"$dir/hll")
+      .init(empty("stratum STRING, day LONG, sketch BINARY"))
   }
 
   /** Fold one ingest batch into the store: each family appends one
@@ -192,30 +191,24 @@ object Health {
         Sketches.freqSketch(toks, col("stratum"), col("day"), col("tok"),
           hhNum, hhDen),
         s"$dir/toks", id)
-      SegmentFs.appendSegment(
+      new SegmentFs.Log(docs.sparkSession, s"$dir/hll").append(id)(_ =>
         Sketches.dailySketches(toks, col("stratum"), col("day"),
-          col("tok")),
-        s"$dir/hll", id): Unit
+          col("tok"))): Unit
     } finally { scored.unpersist(): Unit }
   }
 
-  /** All committed HLL rows: latest base ∪ delta segments. */
+  /** The HLL rows as of batch `upTo`: latest base ∪ live delta segments. */
   private def hllRows(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): DataFrame = {
-    val bv = SegmentFs.latestBase(spark, s"$dir/hll")
-    val base = SegmentFs.readCommitted(spark, SegmentFs.baseDir(s"$dir/hll", bv))
-    val segs = SegmentFs.listVersions(spark, s"$dir/hll/delta", "d")
-      .map(k => SegmentFs.deltaDir(s"$dir/hll", k))
-    if (segs.isEmpty) base
-    else base.unionByName(SegmentFs.readCommitted(spark, segs: _*))
-  }
+                      dir: String, upTo: Long = Long.MaxValue): DataFrame =
+    new SegmentFs.Log(spark, s"$dir/hll").union(upTo)
 
   /** Fold every family's segments into a new base and retire them —
     * read amplification resets to one segment per family while the
     * dashboard read stays invariant (keyed sums and HLL union are
-    * associative; spec-pinned). Crash-safe per family: the new base
-    * lands complete before any delta retires ([[SegmentFs.compactInto]]),
-    * and a crash between families leaves each log readable.
+    * associative; spec-pinned). Each family is one [[SegmentFs.Log]]:
+    * its new base is named after the water line, so a crash before its
+    * deltas retire counts nothing twice and the retry only retires, and
+    * a crash between families leaves each log readable.
     */
   def compactHealthStore(spark: org.apache.spark.sql.SparkSession,
                          dir: String): Unit = {
@@ -224,8 +217,8 @@ object Health {
       Seq("stratum", "day", "lo")): Unit
     CountLog.compact(spark, s"$dir/toks",
       Seq("stratum", "day", "key")): Unit
-    SegmentFs.compactInto(spark, s"$dir/hll",
-      hllRows(spark, dir).groupBy(col("stratum"), col("day"))
+    new SegmentFs.Log(spark, s"$dir/hll").compact(
+      hllRows(spark, dir, _).groupBy(col("stratum"), col("day"))
         .agg(expr("hll_union_agg(sketch, true)").as("sketch"))): Unit
   }
 

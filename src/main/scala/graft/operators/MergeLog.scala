@@ -13,43 +13,38 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * snapshot per batch. The layout here is the merge-on-read shape:
   *
   * {{{
-  *   dir/base/v=N/     data columns                (rewritten only by compact)
-  *   dir/delta/d=K/    data + version + deleted    (append-only, one per batch)
+  *   base    data columns                (rewritten only by compact)
+  *   delta   data + version + deleted    (append-only, one per batch)
   * }}}
   *
   * Writes are O(batch): [[appendDelta]] drops one new parquet dir and
   * never touches base. Reads resolve lazily: [[read]] is
   * `mergeUpsert(base, all deltas)` — one plan, the base side untouched
   * by the delta windows. [[compact]] folds the delta log into a new
-  * base version and retires the absorbed deltas; readers pick the
-  * highest complete base, so a crashed compact leaves the log readable.
-  * Row-level precedence is the row `version` column (CDC contract),
-  * not file arrival order, so replayed batches are harmless.
+  * base version and retires the absorbed deltas. Row-level precedence
+  * is the row `version` column (CDC contract), not file arrival order.
   *
-  * Directory versions are discovered by listing — no driver-side
-  * manifest state to corrupt; `d=K` names come from the writer's
-  * batch id (streaming) or max+1 (batch), both monotone. Commitment
-  * and torn-write reclaim are [[SegmentFs]]'s.
+  * The layout, its commit points, batch ids and water line are
+  * [[SegmentFs.Log]]'s: no driver-side manifest state to corrupt.
   */
 object MergeLog {
-  import SegmentFs.{baseDir, deltaDir, listVersions}
 
   /** Create the log with `snapshot` as base v=0. */
   def init(snapshot: DataFrame, dir: String): Unit =
-    snapshot.write.mode("errorifexists").parquet(baseDir(dir, 0L))
+    new SegmentFs.Log(snapshot.sparkSession, dir).init(snapshot)
 
   /** Append one change batch (data + version + deleted columns) as the
     * next delta segment. O(batch) — base is never read or written. An
     * explicit `id` (streaming batch id) makes the write idempotent:
-    * re-delivery of a COMMITTED batch (see [[SegmentFs]]) is
-    * a no-op instead of a dup, while a torn dir from a crashed attempt
-    * is deleted and rewritten — existence of the directory alone is NOT
-    * commitment, or a replay after a mid-write crash would silently
-    * drop the batch.
+    * re-delivery of a committed or folded batch (see [[SegmentFs.Log]])
+    * is a no-op instead of a dup, while a torn dir from a crashed
+    * attempt is deleted and rewritten — existence of the directory alone
+    * is NOT commitment, or a replay after a mid-write crash would
+    * silently drop the batch.
     */
   def appendDelta(delta: DataFrame, dir: String,
                   id: Option[Long] = None): Long =
-    SegmentFs.appendSegment(delta, dir, id)
+    new SegmentFs.Log(delta.sparkSession, dir).append(id)(_ => delta)
 
   /** Current table state: latest base ⊕ every delta segment, resolved
     * by row version. ONE lazy plan — the delta union windows on the
@@ -65,49 +60,35 @@ object MergeLog {
     * — the reproducibility primitive: a training run records the batch
     * id it consumed, and any later job reads the exact same corpus
     * state back: [[read]] restricted to delta segments ≤ `upTo`; one
-    * lazy plan, no snapshot copies. Only valid
-    * back to the current base — [[compact]] absorbs and retires older
-    * segments (throws if `upTo` predates a still-listed segment range
-    * that compaction has folded away, i.e. when segments ≤ upTo no
-    * longer exist but later ones do).
+    * lazy plan, no snapshot copies. Only valid back to the current
+    * base: throws when [[compact]] has folded `upTo` into it.
     */
   def readAsOf(spark: SparkSession, dir: String, key: String, upTo: Long,
                version: String = "version",
                deleted: String = "deleted"): DataFrame = {
-    val bv = SegmentFs.latestBase(spark, dir)
-    val base = SegmentFs.readCommitted(spark, baseDir(dir, bv))
-    val all = listVersions(spark, s"$dir/delta", "d")
-    if (all.nonEmpty && all.min > upTo)
-      throw new IllegalStateException(
-        s"as-of $upTo predates the current base — segments <= $upTo were " +
-          s"compacted away (earliest retained: ${all.min})")
-    val deltas = all.filter(_ <= upTo)
-    if (deltas.isEmpty) base
-    else {
-      val delta = SegmentFs.readCommitted(spark, deltas.map(deltaDir(dir, _)): _*)
-      Dedup.mergeUpsert(base, delta, key, version, deleted)
-    }
+    val log = new SegmentFs.Log(spark, dir)
+    val (base, ids) = log.asOf(upTo, upTo)
+    if (ids.isEmpty) base
+    else Dedup.mergeUpsert(base, log.deltas(ids), key, version, deleted)
   }
 
-  /** Fold the current delta log into base v=N+1 and retire the absorbed
-    * segments. Write order is crash-safe: the new base lands complete
-    * before any delta is removed, and a reader always takes the highest
-    * COMMITTED base — [[listVersions]] skips a torn `v=N+1` (a torn compact at worst leaves deltas whose
-    * final values the new base already holds, so re-merging them reads
-    * identically; the next compact deletes the torn dir before writing).
-    * Returns the new base version.
+  /** Fold the delta log into a new base and retire the absorbed
+    * segments. The new base is named after the water line (one above
+    * the highest folded id), so a compaction that dies before retiring
+    * leaves deltas every reader already skips, and its retry only
+    * retires them. Returns the new base version.
     */
   def compact(spark: SparkSession, dir: String, key: String,
               version: String = "version",
               deleted: String = "deleted"): Long =
-    SegmentFs.compactInto(spark, dir, read(spark, dir, key, version, deleted))
+    new SegmentFs.Log(spark, dir).compact(readAsOf(spark, dir, key, _, version, deleted))
 
   /** Reclaim bases older than the latest committed one (see
-    * [[SegmentFs.vacuumBases]] — reads and the as-of horizon are
+    * [[SegmentFs.Log.vacuum]] — reads and the as-of horizon are
     * unaffected, they already reach back only to the current base).
     */
   def vacuum(spark: SparkSession, dir: String): Int =
-    SegmentFs.vacuumBases(spark, dir)
+    new SegmentFs.Log(spark, dir).vacuum()
 
   /** Row-level diff between two time-travel states: every key whose
     * resolved value differs between [[readAsOf]] `from` and `to`, with
@@ -132,22 +113,13 @@ object MergeLog {
            from: Long, to: Long, version: String = "version",
            deleted: String = "deleted"): DataFrame = {
     require(from <= to, s"from=$from must be <= to=$to")
-    val bv = SegmentFs.latestBase(spark, dir)
-    val base = SegmentFs.readCommitted(spark, baseDir(dir, bv))
-    val all = listVersions(spark, s"$dir/delta", "d")
-    if (from == -1L && bv != 0L)
-      throw new IllegalStateException(
-        s"diff from init requires an uncompacted log; base is v=$bv")
-    if (from != -1L && all.nonEmpty && all.min > from)
-      throw new IllegalStateException(
-        s"diff from $from predates the current base — segments <= $from " +
-          s"were compacted away (earliest retained: ${all.min})")
+    val log = new SegmentFs.Log(spark, dir)
+    val (base, segs) = log.asOf(from, to)
     val dataCols = base.columns.toIndexedSeq
-    val segs = all.filter(_ <= to)
     if (!segs.exists(_ > from))
       return base.limit(0).withColumn("change", lit(""))
     val delta = segs.map { k =>
-      SegmentFs.readCommitted(spark, deltaDir(dir, k)).withColumn("__seg", lit(k))
+      log.deltas(Seq(k)).withColumn("__seg", lit(k))
     }.reduce(_ unionByName _)
     val touched = delta.filter(col("__seg") > from).select(col(key)).distinct()
     val deltaT = delta.join(broadcast(touched), Seq(key), "left_semi")

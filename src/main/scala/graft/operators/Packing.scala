@@ -181,7 +181,8 @@ object Packing {
   //                   a tot without committed data is a torn attempt,
   //                   invisible to readers and rewritten by the retry
   //   dir/delta/d=K   packed rows (seg, doc_id, n_tok, start_tok);
-  //                   its committed dir (SegmentFs) is the commit gate
+  //                   its committed dir (a delta-only SegmentFs.Log)
+  //                   is the commit gate
   //
   // Replay of a committed batch id is a complete no-op; the append
   // stability law (PackingSpec) pins that one-shot packing of the
@@ -201,9 +202,8 @@ object Packing {
   def appendPacked(spark: SparkSession, dir: String, batch: DataFrame,
                    id: Column, nTok: Column, batchId: Long,
                    bucketWidth: Long = 4096L): Long = {
-    val committed = SegmentFs.listVersions(spark, s"$dir/delta", "d")
-    if (committed.contains(batchId)) batchId // replay — complete no-op
-    else {
+    // a replay of a committed id is a complete no-op: the frame is never built
+    new SegmentFs.Log(spark, dir).append(Some(batchId)) { committed =>
       require(committed.forall(_ < batchId),
         s"packed appends are monotone: batch $batchId after $committed")
       val base = packedHighWater(spark, dir, committed)
@@ -221,9 +221,9 @@ object Packing {
       SegmentFs.reclaim(spark, tot)
       SegmentFs.writeSmallFile(spark, tot, "tokens",
         totals.map(_._2).sum.toString): Unit
-      SegmentFs.appendSegment(withCarries(d, carries)
+      withCarries(d, carries)
         .select(lit(batchId).as("seg"), col("doc_id"), col("n_tok"),
-          (col("start_tok") + lit(base)).as("start_tok")), dir, Some(batchId))
+          (col("start_tok") + lit(base)).as("start_tok"))
     }
   }
 
@@ -238,9 +238,10 @@ object Packing {
 
   /** All committed packed rows — the serve view. */
   def packedStore(spark: SparkSession, dir: String): DataFrame = {
-    val committed = SegmentFs.listVersions(spark, s"$dir/delta", "d")
+    val log = new SegmentFs.Log(spark, dir)
+    val committed = log.committed
     require(committed.nonEmpty, s"no committed packed segments at $dir")
-    SegmentFs.readCommitted(spark, committed.map(SegmentFs.deltaDir(dir, _)): _*)
+    log.deltas(committed)
   }
 
   /** Streaming wrapper over [[appendPacked]]: each micro-batch appends

@@ -19,16 +19,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * compaction never retires it as absorbed, and a replaying writer
   * deletes and rewrites it instead of skipping it as done.
   *
-  * '''Two layouts.''' The merge-on-read logs keep `base/v=N` +
-  * `delta/d=K` parquet dirs, each its own commit point
-  * ([[appendSegment]], [[compactInto]]). The segment indexes
-  * ([[Segments]]) spread one segment over several data dirs, so each
-  * segment K commits through an empty marker `commits/k=K`, and a
+  * '''Two layouts.''' The merge-on-read logs ([[Log]]) keep `base/v=N` +
+  * `delta/d=K` parquet dirs, each its own commit point, and the newest
+  * committed base's N is their water line: `base/v=N` holds every delta
+  * id below N, so committing a base also records the line. The segment
+  * indexes ([[Segments]]) spread one segment over several data dirs, so
+  * each segment K commits through an empty marker `commits/k=K`, and a
   * water line `hwm/k=W` remembers the highest batch id ever committed
   * (compaction never retires it).
   *
-  * '''Append''' ([[Segments.append]]): data, then marker, then water
-  * line.
+  * '''Log append''' ([[Log.append]]): one data dir, committed last. An id
+  * already committed or below the line is a replay and writes nothing;
+  * the retry of a torn append rewrites its dir.
+  *
+  * '''Log compact''' ([[Log.compact]]): the base `v=K+1` (K = the highest
+  * live delta id), then retirement of every delta below K+1.
+  *  - Base before retirement: rows are never absent. In between, readers
+  *    take only the deltas at or above the new line, so a folded delta
+  *    that is still listed is never counted twice.
+  *  - The retry finds nothing at or above the line to fold and only
+  *    retires. A folded id stays below the line, so its replay no-ops
+  *    and auto ids never reuse it.
+  *
+  * '''Segment append''' ([[Segments.append]]): data, then marker, then
+  * water line.
   *  - Data before marker: a crash leaves an invisible torn segment that
   *    the retry of the same id reclaims.
   *  - Marker before water line: an id at or below the line is a
@@ -38,9 +52,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    no-ops) and the next compaction raises the line before it
   *    retires that marker.
   *
-  * '''Compact''' ([[Segments.compact]]): merged data, then its marker,
-  * then the water line, then retirement — each folded segment's marker
-  * before its dirs.
+  * '''Segment compact''' ([[Segments.compact]]): merged data, then its
+  * marker, then the water line, then retirement — each folded segment's
+  * marker before its dirs.
   *  - Merged data before its marker: a torn merge is invisible and the
   *    folded segments stay intact.
   *  - Marker before retirement: rows are never absent. In between they
@@ -58,9 +72,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * from one footer on the driver: no schema-inference job, which a bare
   * `spark.read.parquet` runs per call.
   *
-  * '''Ids.''' Appends take the caller's batch id or the successor of
-  * max(water line, committed ids), floored at the store's first batch
-  * id. Merged generations count down from min(committed, base
+  * '''Ids.''' Segment appends take the caller's batch id or the successor
+  * of max(water line, committed ids), floored at the store's first batch
+  * id; log appends the larger of the line and the successor of the
+  * committed ids. Merged generations count down from min(committed, base
   * segment) − 1, so they never collide with batch ids or the base
   * build.
   */
@@ -97,8 +112,8 @@ private[graft] object SegmentFs {
   }
 
   /** Committed `prefix=N` versions under `dir`, ascending. */
-  def listVersions(spark: SparkSession, dir: String,
-                   prefix: String): Seq[Long] =
+  private def listVersions(spark: SparkSession, dir: String,
+                           prefix: String): Seq[Long] =
     committedDirs(spark, dir, prefix + "=")
       .map(_.drop(prefix.length + 1).toLong).sorted
 
@@ -269,63 +284,104 @@ private[graft] object SegmentFs {
   def baseDir(dir: String, v: Long) = s"$dir/base/v=$v"
   def deltaDir(dir: String, k: Long) = s"$dir/delta/d=$k"
 
-  /** Append `delta` as segment `d=K` (K = `id` or max+1), idempotent on
-    * COMMITTED batch ids, rewriting torn dirs. Returns K.
+  /** A merge-on-read log at `dir` (see the protocol above): parquet dirs
+    * `base/v=N` and `delta/d=K`, each its own commit point. The newest
+    * committed base's N is the log's water line: that base holds every
+    * delta id below N and none above, so an id below the line is folded.
+    * A torn append must be retried before a compaction folds a higher
+    * id, or the line covers it and the retry no-ops as a replay; a
+    * streaming sink retries its last batch before the next one. A log
+    * without a base (delta-only: Packing's segments, Classify's
+    * weights) has no line.
     */
-  def appendSegment(delta: DataFrame, dir: String,
-                    id: Option[Long]): Long = {
-    val spark = delta.sparkSession
-    val committed = listVersions(spark, s"$dir/delta", "d")
-    val k = id.getOrElse(committed.lastOption.map(_ + 1).getOrElse(0L))
-    if (committed.contains(k)) k
-    else {
-      reclaim(spark, deltaDir(dir, k))
-      delta.write.mode("errorifexists").parquet(deltaDir(dir, k))
+  final class Log(spark: SparkSession, dir: String) {
+
+    private def line: Option[Long] = listVersions(spark, s"$dir/base", "v").lastOption
+    private def based: Long = line.getOrElse(
+      throw new IllegalStateException(s"no base under $dir — init() first"))
+    private def allDeltas: Seq[Long] = listVersions(spark, s"$dir/delta", "d")
+    private def live(n: Option[Long], ids: Seq[Long]) = ids.filter(k => n.forall(k >= _))
+
+    /** The live delta ids: committed, at or above the line, ascending. */
+    def committed: Seq[Long] = live(line, allDeltas)
+
+    /** Create the log with `snapshot` as base v=0. */
+    def init(snapshot: DataFrame): Unit =
+      snapshot.write.mode("errorifexists").parquet(baseDir(dir, 0L))
+
+    /** Append delta `id`, or the next id (the larger of the line and the
+      * highest committed id + 1), written as `delta(live ids)`. A
+      * committed id, or one below the line (folded), is a replay: nothing
+      * is built or written. A torn dir is rewritten. Returns the id.
+      */
+    def append(id: Option[Long])(delta: Seq[Long] => DataFrame): Long = {
+      val n = line
+      val done = allDeltas
+      val k = id.getOrElse(math.max(n.getOrElse(0L), done.lastOption.fold(0L)(_ + 1L)))
+      if (!done.contains(k) && !n.exists(k < _)) {
+        val d = delta(live(n, done))
+        reclaim(spark, deltaDir(dir, k))
+        d.write.mode("errorifexists").parquet(deltaDir(dir, k))
+      }
       k
     }
-  }
 
-  /** Latest committed base version, or throw if the log is not
-    * initialized. */
-  def latestBase(spark: SparkSession, dir: String): Long =
-    listVersions(spark, s"$dir/base", "v").lastOption.getOrElse(
-      throw new IllegalStateException(s"no base under $dir — init() first"))
+    /** The newest committed base and the live delta ids ≤ `upTo`: the
+      * rows of the log as of any id from `from` to `upTo`. Throws when
+      * `from` lies below a line above 0 — it was folded away.
+      */
+    def asOf(from: Long, upTo: Long): (DataFrame, Seq[Long]) = {
+      val n = based
+      if (n > 0L && from < n)
+        throw new IllegalStateException(
+          s"as-of $from predates the current base — ids below $n were compacted into it")
+      (readCommitted(spark, baseDir(dir, n)), allDeltas.filter(k => k >= n && k <= upTo))
+    }
 
-  /** Fold `resolved` (the current read) into base v=N+1 and retire the
-    * absorbed delta segments. Crash-safe write order: the new base
-    * lands complete before any delta is removed, and readers take the
-    * highest COMMITTED base, so a torn compact leaves the log readable
-    * and the next compact deletes the torn dir before writing.
-    * Returns the new base version.
-    */
-  def compactInto(spark: SparkSession, dir: String,
-                  resolved: DataFrame): Long = {
-    val bv = latestBase(spark, dir)
-    val absorbed = listVersions(spark, s"$dir/delta", "d")
-    val next = bv + 1
-    val f = fs(spark, dir)
-    reclaim(f, new Path(baseDir(dir, next))) // torn prior compact
-    resolved.write.mode("errorifexists").parquet(baseDir(dir, next))
-    absorbed.foreach(k => f.delete(new Path(deltaDir(dir, k)), true): Unit)
-    next
-  }
+    /** One DataFrame over the committed deltas `ids`. */
+    def deltas(ids: Seq[Long]): DataFrame =
+      readCommitted(spark, ids.map(deltaDir(dir, _)): _*)
 
-  /** Delete every base older than the latest COMMITTED one — the
-    * storage-reclaim step compaction deliberately leaves behind
-    * (the old base must survive until the new one is committed, and a
-    * reader mid-plan may still hold it; vacuum runs later, on the
-    * operator's cadence). Reads are unaffected: [[latestBase]] already
-    * serves only the newest committed base, and as-of reads reach back
-    * only to it. Returns the number of bases removed.
-    */
-  def vacuumBases(spark: SparkSession, dir: String): Int = {
-    val keep = listVersions(spark, s"$dir/base", "v").lastOption
-      .getOrElse(return 0)
-    val f = fs(spark, dir)
-    val all = f.listStatus(new Path(s"$dir/base")).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .filter(_.getPath.getName.drop(2).toLong != keep)
-    all.foreach(s => f.delete(s.getPath, true): Unit)
-    all.size
+    /** The base's rows ∪ the live deltas' rows ≤ `upTo`: an additive
+      * log's unfolded read. */
+    def union(upTo: Long): DataFrame = {
+      val (base, ids) = asOf(upTo, upTo)
+      if (ids.isEmpty) base else base.unionByName(deltas(ids))
+    }
+
+    /** Fold the live deltas into base v = 1 + the highest folded id K,
+      * written as `resolve(K)` (the log's read as of K), then retire
+      * every committed delta below the new line. With nothing to fold
+      * (a retry after the base committed) it only retires. Returns the
+      * line.
+      */
+    def compact(resolve: Long => DataFrame): Long = {
+      val n = based
+      val all = allDeltas
+      val next = all.lastOption.filter(_ >= n).fold(n)(_ + 1L)
+      if (next > n) {
+        reclaim(spark, baseDir(dir, next)) // torn prior compact
+        resolve(next - 1L).write.mode("errorifexists").parquet(baseDir(dir, next))
+      }
+      val f = fs(spark, dir)
+      all.filter(_ < next).foreach(k => f.delete(new Path(deltaDir(dir, k)), true): Unit)
+      next
+    }
+
+    /** Delete every base older than the newest committed one — the
+      * storage reclaim compaction leaves behind (the old base must
+      * survive until the new one commits, and a reader mid-plan may still
+      * hold it). Reads are unaffected: they take only the newest base.
+      * Returns the number of bases removed.
+      */
+    def vacuum(): Int = {
+      val keep = line.getOrElse(return 0)
+      val f = fs(spark, dir)
+      val old = f.listStatus(new Path(s"$dir/base")).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
+        .filter(_.getPath.getName.drop(2).toLong != keep)
+      old.foreach(s => f.delete(s.getPath, true): Unit)
+      old.size
+    }
   }
 }

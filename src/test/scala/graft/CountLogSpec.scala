@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Classify, CountLog}
+import graft.operators.{Classify, CountLog, SegmentFs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -54,6 +54,35 @@ class CountLogSpec extends SparkSpec {
     CountLog.append(Seq((1L, 5L, 5L)).toDF("f", "a", "b"), dir, Some(7L))
     CountLog.append(Seq((1L, 5L, 5L)).toDF("f", "a", "b"), dir, Some(7L))
     assert(asMap(CountLog.read(spark, dir, Seq("f"))) == Map(1L -> (6L, 6L)))
+  }
+
+  test("a compaction that died before retiring its deltas reads the clean totals; the retry converges") {
+    val dir = tmp("countlog")
+    CountLog.init(Seq((1L, 1L, 10L), (2L, 1L, 1L)).toDF("f", "a", "b"), dir)
+    CountLog.append(Seq((1L, 3L, 1L)).toDF("f", "a", "b"), dir, Some(0L))
+    CountLog.append(Seq((1L, 5L, 1L), (2L, 1L, 0L)).toDF("f", "a", "b"), dir, Some(1L))
+    val clean = asMap(CountLog.read(spark, dir, Seq("f")))
+    // the crash state: base v=2 (ids 0 and 1 folded) committed, no delta retired
+    CountLog.read(spark, dir, Seq("f")).write.parquet(SegmentFs.baseDir(dir, 2L))
+    assert(asMap(CountLog.read(spark, dir, Seq("f"))) == clean)
+    assert(CountLog.compact(spark, dir, Seq("f")) == 2L)
+    assert(new java.io.File(s"$dir/delta").list().isEmpty)
+    assert(asMap(CountLog.read(spark, dir, Seq("f"))) == clean)
+  }
+
+  test("a replay of a folded batch id is a no-op; auto ids start above the folded ids") {
+    val dir = tmp("countlog")
+    CountLog.init(Seq((1L, 1L, 1L)).toDF("f", "a", "b"), dir)
+    CountLog.append(Seq((1L, 2L, 0L)).toDF("f", "a", "b"), dir, Some(0L))
+    CountLog.append(Seq((1L, 4L, 0L)).toDF("f", "a", "b"), dir, Some(5L))
+    assert(CountLog.compact(spark, dir, Seq("f")) == 6L)
+    val folded = asMap(CountLog.read(spark, dir, Seq("f")))
+    assert(CountLog.append(Seq((1L, 2L, 0L)).toDF("f", "a", "b"), dir, Some(0L)) == 0L)
+    assert(asMap(CountLog.read(spark, dir, Seq("f"))) == folded)
+    assert(CountLog.append(Seq((1L, 8L, 0L)).toDF("f", "a", "b"), dir) == 6L)
+    assert(asMap(CountLog.readAsOf(spark, dir, Seq("f"), 6L)) == Map(1L -> (15L, 1L)))
+    // folded ids are below the horizon even with a delta retained
+    intercept[IllegalStateException](CountLog.readAsOf(spark, dir, Seq("f"), 0L))
   }
 
   private val corpus = Seq(

@@ -40,6 +40,24 @@ class MergeLogSpec extends SparkSpec {
     intercept[IllegalStateException](asOf(0L))
   }
 
+  test("a folded id stays below the horizon with no delta retained; auto ids start above it") {
+    val dir = Scratch.dir("mergelog_line")
+    MergeLog.init(snap, dir)
+    def asOf(k: Long) = rows(MergeLog.readAsOf(spark, dir, "id", k)
+      .orderBy($"id")).map(r => (r.getLong(0), r.getString(1)))
+    MergeLog.appendDelta(Seq(LogDelta(2, "b1", 1, false)).toDF(), dir, Some(0L))
+    MergeLog.appendDelta(Seq(LogDelta(5, "e", 2, false)).toDF(), dir, Some(1L))
+    assert(MergeLog.compact(spark, dir, "id") == 2L)
+    intercept[IllegalStateException](asOf(0L))
+    intercept[IllegalStateException](MergeLog.diff(spark, dir, "id", 1L, 1L))
+    val folded = state(dir)
+    // a replay of folded batch 1 lands nothing; the next auto id is 2
+    MergeLog.appendDelta(Seq(LogDelta(5, "XX", 9, false)).toDF(), dir, Some(1L))
+    assert(state(dir) == folded)
+    assert(MergeLog.appendDelta(Seq(LogDelta(6, "f", 3, false)).toDF(), dir) == 2L)
+    assert(asOf(2L) == folded :+ (6L, "f"))
+  }
+
   test("read = base ⊕ all delta segments, resolved by row version") {
     val dir = Scratch.dir("mergelog_rw")
     MergeLog.init(snap, dir)

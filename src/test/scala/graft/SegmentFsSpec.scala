@@ -2,13 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
-import graft.operators.{Dedup, Rag, Similarity}
+import graft.operators.{CountLog, Dedup, Rag, Similarity}
 import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{count, lit}
 import scala.jdk.CollectionConverters._
 
 /** The local filesystem under the test-only `crash:` scheme: it counts
@@ -42,8 +43,9 @@ object CrashFs {
 }
 
 /** [[graft.operators.SegmentFs]]'s commit protocol under a crash at every
-  * mutating FS call of each segment index's append and compact, and a
-  * guard that no other main code spells the commit marker.
+  * mutating FS call of each segment index's and of a log's append and
+  * compact, and guards that no other main code spells the commit marker
+  * or the log layout.
   */
 class SegmentFsSpec extends SparkSpec {
   import spark.implicits._
@@ -71,6 +73,7 @@ class SegmentFsSpec extends SparkSpec {
   private lazy val books = Similarity.pqCodebooks(docs, $"id", $"v", 2, 2, 2, 2)
   private val qs = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0.1f, 0f))).toDF("qid", "qv")
   private def lines(df: DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
+  private def counts(d: DataFrame) = d.groupBy(($"id" % 2).as("k")).agg(count(lit(1)).as("n"))
 
   private case class Store(name: String, save: (DataFrame, String) => Unit,
                            append: (DataFrame, String, Long) => Unit,
@@ -92,7 +95,13 @@ class SegmentFsSpec extends SparkSpec {
       (b, p, k) => Similarity.appendIvfPqIndex(spark, p, b, $"id", $"v", 1000L, 1, Some(k)): Unit,
       Similarity.compactIvfPqIndex(spark, _, _, 1000L, 1): Unit,
       p => lines(Similarity.ivfPqTopK(spark, p, docs, $"id", $"v", qs, $"qid", $"qv",
-        k = 20, nprobe = 2, rerank = 20))))
+        k = 20, nprobe = 2, rerank = 20))),
+    // every base/v=N + delta/d=K log shares SegmentFs.Log; the additive
+    // fold is the one a double-counted delta shows in
+    Store("CountLog", (d, p) => CountLog.init(counts(d), p),
+      (b, p, k) => CountLog.append(counts(b), p, Some(k)): Unit,
+      (p, _) => CountLog.compact(spark, p, Seq("k")): Unit,
+      p => lines(CountLog.read(spark, p, Seq("k")))))
 
   /** Crash `op` at mutating call N = 1, 2, … until it completes without
     * reaching N. Each time: restore the pristine store (a file copy),
@@ -146,16 +155,28 @@ class SegmentFsSpec extends SparkSpec {
     }
   }
 
-  test("_SUCCESS appears in src/main only in SegmentFs and the s19 torn-drop fixture") {
+  /** `file:line: text` of each line of a `src/main` Scala file outside
+    * SegmentFs that `hit` flags. */
+  private def outsideSegmentFs(hit: (java.nio.file.Path, String) => Boolean): Seq[String] = {
     val files = Files.walk(Paths.get("src/main")).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.exists(_.endsWith("SegmentFs.scala")), "src/main not found")
-    val hits = files.filterNot(_.endsWith("SegmentFs.scala")).flatMap { p =>
+    files.filterNot(_.endsWith("SegmentFs.scala")).flatMap { p =>
       Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (l, i) if l.contains("_SUCCESS") && !(p.endsWith("SourceQueries.scala") &&
-            l.contains("d2_torn/_SUCCESS")) => s"$p:${i + 1}: ${l.trim}"
+        case (l, i) if hit(p, l) => s"$p:${i + 1}: ${l.trim}"
       }
     }
+  }
+
+  test("_SUCCESS appears in src/main only in SegmentFs and the s19 torn-drop fixture") {
+    val hits = outsideSegmentFs((p, l) => l.contains("_SUCCESS") &&
+      !(p.endsWith("SourceQueries.scala") && l.contains("d2_torn/_SUCCESS")))
     assert(hits.isEmpty, hits.mkString("commit marker outside SegmentFs:\n", "\n", ""))
+  }
+
+  test("the base/delta log layout is spelled in src/main only in SegmentFs") {
+    val layout = Seq("baseDir(", "deltaDir(", "\"/delta\"", "\"$dir/delta", "/base/v=")
+    val hits = outsideSegmentFs((_, l) => layout.exists(l.contains))
+    assert(hits.isEmpty, hits.mkString("log layout outside SegmentFs:\n", "\n", ""))
   }
 }
