@@ -15,8 +15,12 @@ object GraftSession {
   /** Apply engine defaults to an arbitrary builder (tests and the
     * benchmark harness build their own master/memory settings).
     */
-  def tune(b: SparkSession.Builder): SparkSession.Builder = b
-    .withExtensions(new graft.expressions.GraftExtensions)
+  def tune(b: SparkSession.Builder): SparkSession.Builder = {
+    // file: is sources.LocalFs (no chmod process per file or dir); a
+    // default resource, so an explicit fs.file.impl still wins. Never
+    // set spark.hadoop.fs.file.impl here: it would override the caller's.
+    org.apache.hadoop.conf.Configuration.addDefaultResource("graft-hadoop.xml")
+    b.withExtensions(new graft.expressions.GraftExtensions)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     // the one width policy: AQE coalesces toward max(floor, bytes / cores),
@@ -37,6 +41,7 @@ object GraftSession {
     // at 100 TB a network-bound shuffle profile justifies zstd.
     .config("spark.io.compression.codec", "lz4")
     .config("spark.ui.enabled", "false")
+  }
 
   /** Driver cores, as the mains report them. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

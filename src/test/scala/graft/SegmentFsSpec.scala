@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 import graft.operators.{CountLog, Dedup, Rag, Similarity}
 import org.apache.commons.io.FileUtils
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
@@ -12,8 +12,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{count, lit}
 import scala.jdk.CollectionConverters._
 
-/** The local filesystem under the test-only `crash:` scheme: it counts
-  * the mutating calls (create, mkdirs, rename, delete) and throws on the
+/** The engine's local filesystem ([[graft.sources.LocalFs]]) under the
+  * test-only `crash:` scheme: it counts the mutating calls (create,
+  * mkdirs, rename, delete) and throws on the
   * [[CrashFs.failFrom]]th and every later one — a process that died at
   * that step, as the store sees it.
   */
@@ -34,7 +35,7 @@ class CrashFs extends LocalFileSystem(new CrashFs.Raw) {
 object CrashFs {
   val calls = new AtomicLong(0L)
   @volatile var failFrom: Long = Long.MaxValue
-  class Raw extends RawLocalFileSystem {
+  class Raw extends graft.sources.LocalFs.Raw {
     override def getUri: java.net.URI = java.net.URI.create("crash:///")
   }
   def step[T](f: => T): T =
